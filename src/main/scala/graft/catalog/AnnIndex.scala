@@ -55,9 +55,8 @@ private[graft] object AnnIndex {
 
   private def companionRoot(t: TableDef) = s"${t.path}/_idx/ann"
 
-  private def marker(dir: org.apache.hadoop.fs.Path, fileName: String,
-                     column: String) =
-    new org.apache.hadoop.fs.Path(dir, s"_idx/$fileName.$column.annenc")
+  private def marker(file: org.apache.hadoop.fs.Path, column: String) =
+    SkipIndex.sidecar(file, column, VectorSimilarity.suffix)
 
   /** The codes companion, attach-or-create through a PRIVATE catalog
     * instance (names are instance-scoped; write locks are path-scoped
@@ -189,25 +188,15 @@ private[graft] object AnnIndex {
 
   /** Encode every data file lacking an `.annenc` marker into the codes
     * companion. Called from the Catalog's post-write index hook — the
-    * same lifecycle as the four skip-index families.
+    * same missing-sidecar discovery as the [[SkipIndex]] kinds.
     */
   def maintain(spark: SparkSession, t: TableDef, dir: String): Unit = {
     import org.apache.hadoop.fs.Path
     val a = t.annIndex.get
-    val d = new Path(dir)
-    val f = d.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!f.exists(d)) return
-    val it = f.listFiles(d, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      val n = s.getPath.getName
-      if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !s.getPath.toString.contains("/_idx/"))
-        files += s.getPath
-    }
-    val missing = files
-      .filter(p => !f.exists(marker(p.getParent, p.getName, a.column)))
+    val f = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val listing = Listing.of(f, Seq(dir))
+    val missing = listing.files.map(_.getPath)
+      .filter(p => !listing.has(marker(p, a.column)))
       .sortBy(_.toString) // deterministic training-sample order
     if (missing.isEmpty) return
     val idCol = t.sortKeys.head
@@ -233,7 +222,7 @@ private[graft] object AnnIndex {
     // markers AFTER the commit: a crash in between re-encodes the file
     // and ReplacingDedup(id) absorbs the duplicate rows
     missing.foreach { p =>
-      val m = marker(p.getParent, p.getName, a.column)
+      val m = marker(p, a.column)
       val out = f.create(m, true)
       out.close()
     }

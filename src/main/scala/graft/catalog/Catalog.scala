@@ -411,39 +411,14 @@ final class Catalog(spark: SparkSession) {
     // would re-enter the "missing" set on every append, silently turning
     // O(batch) appends into full-table scans (and partition keys already
     // prune at the directory level, the stronger skip)
-    (t.indexCols ++ t.minmaxCols ++ t.tokenIndexCols ++
-        t.setIndexCols.map(_._1) ++ t.fullTextCols.map(_._1)).foreach { c =>
+    SkipIndex.all.flatMap(_.columns(t)).foreach { c =>
       require(t.schema.fieldNames.contains(c),
         s"${t.name}: skip-index column $c is not in the schema")
       require(!t.partitionKeys.contains(c),
         s"${t.name}: skip-index column $c is a partition key " +
           s"(directory pruning already covers it)")
     }
-    // set indexes store EXACT values in JSON sidecars — restrict to types
-    // whose driver-side value renders losslessly and compares by equality
-    t.setIndexCols.foreach { case (c, n) =>
-      import org.apache.spark.sql.types._
-      require(n > 0, s"${t.name}: set skip-index on $c needs a positive " +
-        s"max-distinct bound (got $n)")
-      val dt = t.schema(c).dataType
-      require(dt == StringType ||
-          Seq[DataType](ByteType, ShortType, IntegerType, LongType,
-            BooleanType).contains(dt),
-        s"${t.name}: set skip-index column $c is ${dt.simpleString}; " +
-          "exact value sets support string, integral, and boolean columns")
-    }
-    require(t.setIndexCols.map(_._1).distinct.length == t.setIndexCols.length,
-      s"${t.name}: a column appears twice in setIndexCols")
-    // posting lists tokenize text — string columns, positive token bound
-    t.fullTextCols.foreach { case (c, n) =>
-      require(n > 0, s"${t.name}: full-text index on $c needs a positive " +
-        s"max-distinct-token bound (got $n)")
-      require(t.schema(c).dataType == org.apache.spark.sql.types.StringType,
-        s"${t.name}: full-text index column $c is " +
-          s"${t.schema(c).dataType.simpleString}; posting lists index text")
-    }
-    require(t.fullTextCols.map(_._1).distinct.length == t.fullTextCols.length,
-      s"${t.name}: a column appears twice in fullTextCols")
+    SkipIndex.all.foreach(_.validate(t))
     // vector_similarity: one float/double array column, anchored to an
     // integral first sort key (the id the exact rerank points back at)
     t.annIndex.foreach { a =>
@@ -503,13 +478,6 @@ final class Catalog(spark: SparkSession) {
             s"${t.name}.$nm: sort key $key is not in the schema")
       }
     }
-    // token blooms tokenize text — only string columns have tokens
-    t.tokenIndexCols.foreach { c =>
-      require(t.schema(c).dataType == org.apache.spark.sql.types.StringType,
-        s"${t.name}: token skip-index column $c is " +
-          s"${t.schema(c).dataType.simpleString}; tokenbf-style indexes " +
-          "apply to string columns only")
-    }
     // declared TTL: validated at CREATE, same stance as every other axis
     t.ttl.foreach(validateTtl(t, _))
     // per-column codec axis: each declared kind must exist, apply to a
@@ -540,20 +508,6 @@ final class Catalog(spark: SparkSession) {
         require(ok, s"${t.name}: $kind codec on $c requires an integral/" +
           s"time/string/binary column (got ${t.schema(c).dataType.simpleString})")
       }
-    }
-    // bloom sidecars are Spark sketch BloomFilters, which accept ONLY
-    // string, binary, and integral keys — a double/decimal/date/timestamp
-    // index column would pass here and then throw executor-side on every
-    // append (after the parquet data is durably written for FlatDir),
-    // leaving the table un-appendable; reject it at declaration instead
-    t.indexCols.foreach { c =>
-      import org.apache.spark.sql.types._
-      val dt = t.schema(c).dataType
-      require(dt == StringType || dt == BinaryType ||
-          Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"${t.name}: bloom skip-index column $c is ${dt.simpleString}; the " +
-          "sketch BloomFilter supports only string, binary, and integral " +
-          "columns — declare it under minmaxCols for range skipping instead")
     }
     t.semantics match {
       case agg @ Aggregating(keys, stateCols, kinds) =>
@@ -2699,27 +2653,12 @@ final class Catalog(spark: SparkSession) {
     perCol ++ v2
   }
 
-  /** Recursively list the visible data files under `path` — sidecar dirs
-    * and marker files (any component starting with '_' or '.') excluded,
-    * matching what a Spark scan of the path would read. Used to diff the
-    * file set across an append so projection companions derive from the
-    * WRITTEN block (see [[writeData]]).
+  /** The visible data files under `path`, as path strings — used to diff
+    * the file set across an append so projection companions derive from
+    * the WRITTEN block (see [[writeData]]).
     */
-  private def listDataFiles(path: String): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val f = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!f.exists(root)) return Set.empty
-    val out = scala.collection.mutable.Set[String]()
-    def walk(p: org.apache.hadoop.fs.Path): Unit =
-      f.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) ()
-        else if (st.isDirectory) walk(st.getPath)
-        else out += st.getPath.toString
-      }
-    walk(root)
-    out.toSet
-  }
+  private def listDataFiles(t: TableDef, path: String): Set[String] =
+    Listing.of(fs(t), Seq(path)).files.map(_.getPath.toString).toSet
 
   /** Parquet write honoring the table's partition layout. Returns
     * (row count, written file set).
@@ -2755,7 +2694,7 @@ final class Catalog(spark: SparkSession) {
     val obs = org.apache.spark.sql.Observation()
     val counted = df.observe(obs, count(lit(1)).as("rows"))
     val before: Set[String] =
-      if (mode == "append" && t.projections.nonEmpty) listDataFiles(path)
+      if (mode == "append" && t.projections.nonEmpty) listDataFiles(t, path)
       else Set.empty
     val w = counted.write.mode(mode).option("compression", t.codec)
       .options(codecWriteOptions(t))
@@ -2775,8 +2714,8 @@ final class Catalog(spark: SparkSession) {
       row.getAs[Long]("rows")
     }
     val written: Seq[String] =
-      if (mode != "append") listDataFiles(path).toSeq.sorted
-      else if (t.projections.nonEmpty) (listDataFiles(path) -- before).toSeq.sorted
+      if (mode != "append") listDataFiles(t, path).toSeq.sorted
+      else if (t.projections.nonEmpty) (listDataFiles(t, path) -- before).toSeq.sorted
       else Nil
     // re-project the read-back block to the input's declared schema:
     // partition-dir columns come back LAST and type-INFERRED from the dir
@@ -2791,11 +2730,7 @@ final class Catalog(spark: SparkSession) {
         else Some(asWritten(
           spark.read.option("basePath", path).parquet(written: _*)))
       } else Some(asWritten(spark.read.parquet(path)))
-    if (t.indexCols.nonEmpty) buildSkipIndex(t, path)
-    if (t.minmaxCols.nonEmpty) buildMinmaxIndex(t, path)
-    if (t.tokenIndexCols.nonEmpty) buildTokenIndex(t, path)
-    if (t.setIndexCols.nonEmpty) buildSetIndex(t, path)
-    if (t.fullTextCols.nonEmpty) buildFullTextIndex(t, path)
+    maintainSkipIndexes(t, path)
     if (t.annIndex.nonEmpty) AnnIndex.maintain(spark, t, path)
     block.foreach(b => maintainProjections(t, b, path, mode))
     (rows, written)
@@ -2926,107 +2861,56 @@ final class Catalog(spark: SparkSession) {
 
   // ---- ALTER TABLE … ADD/DROP/MATERIALIZE/CLEAR INDEX ------------------
   //
-  // ClickHouse's skip-index runbook verbs over the SAME per-family
-  // declarations CREATE TABLE takes (indexCols / minmaxCols /
-  // setIndexCols / tokenIndexCols / fullTextCols / annIndex). Index
-  // NAMES are canonical — the renderer's bf_/mm_/set_/tok_/ft_/ann_<col>
-  // spellings (SHOW CREATE TABLE emits exactly these), so
-  // parse∘render∘parse round-trips and DROP/MATERIALIZE resolve without
-  // a separate name registry. CH contract preserved: ADD INDEX alone
-  // indexes only FUTURE inserts (reads fail open on unindexed files);
-  // MATERIALIZE INDEX backfills existing files through the same
-  // incremental marker-missing builds appends use.
+  // ClickHouse's skip-index runbook verbs over the SAME declarations
+  // CREATE TABLE takes, resolved through the one [[IndexKind]] registry.
+  // Index NAMES are canonical — `<prefix>_<column>`, the spelling SHOW
+  // CREATE TABLE emits — so parse∘render∘parse round-trips and
+  // DROP/MATERIALIZE resolve without a separate name registry. ADD INDEX
+  // declares only: existing files stay unindexed (reads fail open) until
+  // MATERIALIZE INDEX or the next append indexes every file still missing
+  // its sidecar.
 
-  private val idxPrefixes = Map(
-    "bf" -> "bloom_filter", "mm" -> "minmax", "set" -> "set",
-    "tok" -> "tokenbf_v1", "ft" -> "full_text", "ann" -> "vector_similarity")
-
-  /** Resolve a canonical index name to (family kind, column); refuses
-    * unknown spellings loudly with the naming contract.
+  /** Resolve a canonical index name to its declared (kind, column);
+    * refuses unknown spellings loudly with the naming contract.
     */
-  private def resolveIndexName(t: TableDef, idxName: String): (String, String) = {
-    val (p, c) = idxName.split("_", 2) match {
-      case Array(pfx, col) if idxPrefixes.contains(pfx) => (pfx, col)
-      case _ => throw new IllegalArgumentException(
+  private def resolveIndexName(t: TableDef, idxName: String): (IndexKind, String) = {
+    val (k, c) = IndexKind.forName(idxName).getOrElse(
+      throw new IllegalArgumentException(
         s"${t.name}: unknown index $idxName — this engine names skip " +
-          "indexes canonically (bf_/mm_/set_/tok_/ft_/ann_ + column, " +
-          "the SHOW CREATE TABLE spellings)")
-    }
-    val declared = p match {
-      case "bf" => t.indexCols.contains(c)
-      case "mm" => t.minmaxCols.contains(c)
-      case "set" => t.setIndexCols.exists(_._1 == c)
-      case "tok" => t.tokenIndexCols.contains(c)
-      case "ft" => t.fullTextCols.exists(_._1 == c)
-      case "ann" => t.annIndex.exists(_.column == c)
-    }
-    require(declared, s"${t.name}: no index $idxName declared")
-    (idxPrefixes(p), c)
+          s"indexes canonically (${IndexKind.all.map(_.prefix + "_").mkString("/")} " +
+          "+ column, the SHOW CREATE TABLE spellings)"))
+    require(k.columns(t).contains(c), s"${t.name}: no index $idxName declared")
+    (k, c)
   }
 
-  /** `ALTER TABLE … ADD INDEX` — declare a skip index on a live table.
-    * Existing files stay unindexed (pruning fails open) until
-    * [[materializeIndex]]; future appends maintain it from this point,
-    * exactly CH's ADD INDEX contract. Validation is createTable's own
-    * (via [[createTableUpdate]]), so a bad column/type refuses loudly
-    * and the prior registration survives.
+  /** `ALTER TABLE … ADD INDEX` — declare an index on a live table.
+    * Validation is createTable's own (via [[createTableUpdate]]), so a bad
+    * column/type refuses loudly and the prior registration survives.
     */
   def addIndex(name: String, kind: String, column: String,
                args: Seq[Int] = Nil): Unit = {
     val t = get(name)
-    def dup(b: Boolean) = require(!b,
+    val k = IndexKind.forType(kind).getOrElse(throw new IllegalArgumentException(
+      s"$name: unsupported skip-index type ${kind.toLowerCase}"))
+    require(!k.columns(t).contains(column),
       s"$name: index TYPE $kind on $column already declared")
-    val nt = kind.toLowerCase match {
-      case "bloom_filter" =>
-        dup(t.indexCols.contains(column))
-        t.copy(indexCols = t.indexCols :+ column)
-      case "minmax" =>
-        dup(t.minmaxCols.contains(column))
-        t.copy(minmaxCols = t.minmaxCols :+ column)
-      case "set" =>
-        dup(t.setIndexCols.exists(_._1 == column))
-        val n = args.headOption.getOrElse(throw new IllegalArgumentException(
-          s"$name: INDEX TYPE set needs a max-distinct bound set(N)"))
-        t.copy(setIndexCols = t.setIndexCols :+ (column -> n))
-      case "tokenbf_v1" | "ngrambf_v1" =>
-        dup(t.tokenIndexCols.contains(column))
-        t.copy(tokenIndexCols = t.tokenIndexCols :+ column)
-      case "full_text" | "inverted" | "gin" =>
-        dup(t.fullTextCols.exists(_._1 == column))
-        t.copy(fullTextCols =
-          t.fullTextCols :+ (column -> args.headOption.getOrElse(65536)))
-      case "vector_similarity" =>
-        require(t.annIndex.isEmpty,
-          s"$name: at most one vector_similarity index per table")
-        t.copy(annIndex = Some(AnnIndexDef(column,
-          nCells = args.lift(0).getOrElse(16),
-          m = args.lift(1).getOrElse(8),
-          k = args.lift(2).getOrElse(16))))
-      case other => throw new IllegalArgumentException(
-        s"$name: unsupported skip-index type $other")
-    }
-    writeLock(name).synchronized { createTableUpdate(nt) }
+    writeLock(name).synchronized { createTableUpdate(k.add(t, column, args)) }
   }
 
   /** `ALTER TABLE … MATERIALIZE INDEX` — backfill the named index over
-    * existing files. The family builds are incremental (only files
-    * missing a sidecar participate), so re-running is cheap and a
-    * crash mid-build just leaves fewer files indexed (fail-open reads,
-    * re-run to finish).
+    * existing files. Only files missing a sidecar participate, so
+    * re-running is cheap and a crash mid-build just leaves fewer files
+    * indexed (fail-open reads, re-run to finish).
     */
   def materializeIndex(name: String, idxName: String): Unit = {
     val t = get(name)
-    val (kind, _) = resolveIndexName(t, idxName)
+    val (k, c) = resolveIndexName(t, idxName)
     writeLock(name).synchronized {
       recoverInterruptedSwap(t)
       dataPaths(t).foreach { p =>
-        kind match {
-          case "bloom_filter" => buildSkipIndex(t, p)
-          case "minmax" => buildMinmaxIndex(t, p)
-          case "set" => buildSetIndex(t, p)
-          case "tokenbf_v1" => buildTokenIndex(t, p)
-          case "full_text" => buildFullTextIndex(t, p)
-          case "vector_similarity" => AnnIndex.maintain(spark, t, p)
+        k match {
+          case s: SkipIndex => maintainSkipIndexes(t, p, Some(s -> c))
+          case VectorSimilarity => AnnIndex.maintain(spark, t, p)
         }
       }
     }
@@ -3046,20 +2930,10 @@ final class Catalog(spark: SparkSession) {
           if (ifExists) return false
           throw e
       }
-    val (kind, c) = resolved
+    val (k, c) = resolved
     writeLock(name).synchronized {
-      val nt = kind match {
-        case "bloom_filter" => t.copy(indexCols = t.indexCols.filterNot(_ == c))
-        case "minmax" => t.copy(minmaxCols = t.minmaxCols.filterNot(_ == c))
-        case "set" => t.copy(setIndexCols = t.setIndexCols.filterNot(_._1 == c))
-        case "tokenbf_v1" =>
-          t.copy(tokenIndexCols = t.tokenIndexCols.filterNot(_ == c))
-        case "full_text" =>
-          t.copy(fullTextCols = t.fullTextCols.filterNot(_._1 == c))
-        case "vector_similarity" => t.copy(annIndex = None)
-      }
-      createTableUpdate(nt)
-      deleteIndexSidecars(t, kind, c)
+      createTableUpdate(k.remove(t, c))
+      deleteIndexSidecars(t, k, c)
     }
     true
   }
@@ -3070,45 +2944,26 @@ final class Catalog(spark: SparkSession) {
     */
   def clearIndex(name: String, idxName: String): Unit = {
     val t = get(name)
-    val (kind, c) = resolveIndexName(t, idxName)
-    writeLock(name).synchronized { deleteIndexSidecars(t, kind, c) }
+    val (k, c) = resolveIndexName(t, idxName)
+    writeLock(name).synchronized { deleteIndexSidecars(t, k, c) }
   }
 
-  /** Remove one (family, column)'s sidecar files under every data root.
+  /** Remove one (kind, column)'s sidecar files under every data root.
     * Sidecars are content-addressed per immutable parquet file, so this
     * is storage hygiene, not a correctness need — consults only happen
-    * for DECLARED families — but a stale sidecar would silently revive
-    * if the same family were re-ADDed after a MODIFY COLUMN changed the
+    * for DECLARED indexes — but a stale sidecar would silently revive
+    * if the same index were re-ADDed after a MODIFY COLUMN changed the
     * column's type.
     */
-  private def deleteIndexSidecars(t: TableDef, kind: String,
+  private def deleteIndexSidecars(t: TableDef, k: IndexKind,
                                   column: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val f = fs(t)
-    val suffix = kind match {
-      case "bloom_filter" => ".bloom"
-      case "minmax" => ".minmax"
-      case "set" => ".set"
-      case "tokenbf_v1" => ".tokenbloom"
-      case "full_text" => ".postings"
-      case "vector_similarity" => ".annenc"
-    }
-    dataPaths(t).foreach { root =>
-      val d = new Path(root)
-      if (f.exists(d)) {
-        val it = f.listFiles(d, true)
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.isFile && s.getPath.toString.contains("/_idx/") &&
-              s.getPath.getName.endsWith(s".$column$suffix"))
-            f.delete(s.getPath, false)
-        }
-      }
-    }
+    listing(t).sidecars.filter(_.getName.endsWith(s".$column${k.suffix}"))
+      .foreach(f.delete(_, false))
     // the IVF-PQ codes companion lives beside the markers (the
     // AnnIndex.companionRoot layout)
-    if (kind == "vector_similarity")
-      f.delete(new Path(s"${t.path}/_idx/ann"), true)
+    if (k == VectorSimilarity)
+      f.delete(new org.apache.hadoop.fs.Path(s"${t.path}/_idx/ann"), true)
   }
 
   /** Re-validate + swap in an updated definition (projection add/drop):
@@ -3146,666 +3001,129 @@ final class Catalog(spark: SparkSession) {
     AnnIndex.search(this, spark, t, queries, k, nProbe)
   }
 
-  // ---- bloom skip-index sidecars ---------------------------------------
-  //
-  // ClickHouse's secondary data-skipping indexes (`INDEX … TYPE
-  // bloom_filter`) for NON-sort-key columns: row-group min/max skipping
-  // (clustered writes) only prunes predicates on the sort key, so a
-  // selective equality filter on any other column still scans every file.
-  // Declared `indexCols` get one bloom sidecar PER DATA FILE PER COLUMN,
-  // written at append/compact time under the data dir's `_idx/`
-  // (underscore-prefixed → invisible to Spark's file listing; the sidecars
-  // travel with their directory through compact swaps, manifest flips, and
-  // segment GC for free). [[readPruned]] consults them to drop whole files
-  // before the scan starts — `might contain` false positives only cost a
-  // wasted file read, absent sidecars fail open, and the filter itself is
-  // still applied on top, so pruning can never change results.
+  // ---- skip-index pruned reads (contract on [[SkipIndex]]) --------------
 
-  private def idxSidecar(dir: org.apache.hadoop.fs.Path, fileName: String,
-                         column: String) =
-    new org.apache.hadoop.fs.Path(dir, s"_idx/$fileName.$column.bloom")
+  /** The data files and `_idx/` sidecars of `t`'s live data roots. */
+  private def listing(t: TableDef): Listing = Listing.of(fs(t), dataPaths(t))
 
-  /** Index every parquet file under `dir` (recursive — partitioned layouts
-    * nest files in key=value subdirs) that lacks a sidecar, in ONE
-    * distributed pass: all unindexed files are scanned as a single
-    * column-pruned read tagged with `input_file_name()`, each file's
-    * blooms are built EXECUTOR-side inside `mapGroups` (a file's index-col
-    * values fit its executor by construction — a file is at most a scan
-    * split), and only the finished sidecar BYTES come back to the driver
-    * (~KB per file per column at 1% fpp). The first formulation looped
-    * files on the DRIVER with a count + stat.bloomFilter job per file —
-    * 2 sequential Spark jobs per file, ~7.7 s for a 32-file table at
-    * sf0.1 and days at a 100 TB table's file count; this pass is one job
-    * regardless of file count. Cost is paid at WRITE time — the read-side
-    * win at 100 TB is skipping the file entirely.
+  /** Index the files under `dir` still missing a sidecar — every declared
+    * skip index, or only the one a MATERIALIZE INDEX names.
     */
-  private def buildSkipIndex(t: TableDef, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
+  private def maintainSkipIndexes(t: TableDef, dir: String,
+                                  only: Option[(SkipIndex, String)] = None): Unit =
+    SkipIndex.maintain(spark, fs(t), t, dir, only)
+
+  /** `name`'s def, after refusing a probe through an undeclared index. */
+  private def indexed(name: String, k: SkipIndex, column: String): TableDef = {
+    val t = get(name)
+    require(k.columns(t).contains(column), s"$name: no ${k.label} declared on $column")
+    t
+  }
+
+  /** The listed files whose `column` sidecar cannot rule out `probe`;
+    * a file without a sidecar is kept. Shared by the pruned reads and
+    * [[explainEstimate]], so the estimate prices exactly the scan the read
+    * would run.
+    */
+  private def survivors(t: TableDef, l: Listing, k: SkipIndex, column: String)(
+      probe: k.Probe): Seq[org.apache.hadoop.fs.FileStatus] = {
     val f = fs(t)
-    val d = new Path(dir)
-    if (!f.exists(d)) return
-    val it = f.listFiles(d, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      val n = s.getPath.getName
-      if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !s.getPath.toString.contains("/_idx/"))
-        files += s.getPath
-    }
-    // only files still missing at least one column's sidecar participate
-    val missing = files.filter { p =>
-      t.indexCols.exists(c => !f.exists(idxSidecar(p.getParent, p.getName, c)))
-    }
-    if (missing.isEmpty) return
-    // declared schema projected to the index columns, never a sampled
-    // file's physical schema: post-ALTER the unindexed set can mix
-    // narrow/wide physical types, and only the declared read schema
-    // promotes both — which also keys the blooms by the DECLARED type,
-    // the same type every probe value arrives in
-    val cols = t.indexCols.filter(t.schema.fieldNames.contains)
-    if (cols.isEmpty) return
-    val base = spark.read.schema(StructType(cols.map(c => t.schema(c))))
-      .parquet(missing.map(_.toString).toSeq: _*)
-      .select(input_file_name().as("__file") +: cols.map(col): _*)
-    // job 1: per-file row counts (bloom sizing) — one tiny aggregate
-    val counts = base.groupBy(col("__file")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bcCounts = spark.sparkContext.broadcast(counts)
-    val nCols = cols.size
-    // job 2: STREAM rows into per-(file, column) partial blooms per scan
-    // partition, merge partials by key. A partition holds at most a few
-    // files' splits, so task memory is a handful of fixed-size blooms —
-    // never the file's values (a 'file' regathered via groupByKey is NOT
-    // one scan split; buffering its boxed values OOMs at exactly the
-    // file sizes the 100 TB pitch assumes). Partials built from the same
-    // (n, fpp) are mergeInPlace-compatible by construction.
-    val sidecars = base.rdd.mapPartitions { it =>
-      val blooms = scala.collection.mutable.HashMap
-        .empty[(String, Int), org.apache.spark.util.sketch.BloomFilter]
-      it.foreach { r =>
-        val file = r.getString(0)
-        var i = 0
-        while (i < nCols) {
-          val v = r.get(i + 1)
-          if (v != null)
-            blooms.getOrElseUpdate((file, i),
-              org.apache.spark.util.sketch.BloomFilter.create(
-                math.max(bcCounts.value.getOrElse(file, 1L), 1L), 0.01)).put(v)
-          i += 1
-        }
+    l.files.filter { s =>
+      val sc = SkipIndex.sidecar(s.getPath, column, k.suffix)
+      !l.has(sc) || {
+        val in = f.open(sc)
+        k.survives(try in.readAllBytes() finally in.close(), probe)
       }
-      blooms.iterator.map { case (k, bf) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (k, bos.toByteArray)
-      }
-    }.reduceByKey { (a, b) =>
-      val x = org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(a))
-      x.mergeInPlace(org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(b)))
-      val bos = new java.io.ByteArrayOutputStream()
-      x.writeTo(bos)
-      bos.toByteArray
-    }.collect()
-    sidecars.foreach { case ((fileUri, i), bytes) =>
-      val p = new Path(new java.net.URI(fileUri))
-      val out = f.create(idxSidecar(p.getParent, p.getName, cols(i)), true)
-      try out.write(bytes) finally out.close()
     }
   }
 
-  // ---- full-text token skip-index sidecars -----------------------------
-  //
-  // ClickHouse's `INDEX … TYPE tokenbf_v1` (the log-search workhorse):
-  // the equality blooms above skip only on the WHOLE column value, so
-  // `hasToken(message, 'req_8f3a')` still scans every file. A token
-  // sidecar blooms every WORD TOKEN of every row — same one-pass build,
-  // same `_idx/` travel-with-the-directory lifecycle, same fail-open
-  // consult — and [[readTokenPruned]] drops files whose bloom lacks the
-  // probe token. Tokenization is fixed and shared with the probe side
-  // ([[Catalog.TokenSeparators]]): maximal runs of [A-Za-z0-9_], the CH
-  // tokenbf definition, so index build and predicate can never disagree
-  // on what a token is.
-
-  private def tokenSidecar(dir: org.apache.hadoop.fs.Path, fileName: String,
-                           column: String) =
-    new org.apache.hadoop.fs.Path(dir, s"_idx/$fileName.$column.tokenbloom")
-
-  /** Token-index every parquet file under `dir` lacking a sidecar, in ONE
-    * distributed pass (the [[buildSkipIndex]] shape): unindexed files
-    * scanned as a single column-pruned read, each row's tokens streamed
-    * into per-(file, column) partial blooms executor-side, partials
-    * merged by key, only finished sidecar bytes to the driver. Sized by
-    * per-file TOKEN counts (an upper bound on distinct tokens — a larger
-    * bloom only lowers the false-positive rate).
+  /** The one pruned read: scan only the files [[survivors]] keeps, through
+    * the full read semantics (renames, added-column defaults, deletion
+    * vectors). Returns (frame, files scanned, files total).
     */
-  private def buildTokenIndex(t: TableDef, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    val d = new Path(dir)
-    if (!f.exists(d)) return
-    val it = f.listFiles(d, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      val n = s.getPath.getName
-      if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !s.getPath.toString.contains("/_idx/"))
-        files += s.getPath
-    }
-    val missing = files.filter { p =>
-      t.tokenIndexCols.exists(c =>
-        !f.exists(tokenSidecar(p.getParent, p.getName, c)))
-    }
-    if (missing.isEmpty) return
-    val cols = t.tokenIndexCols.filter(t.schema.fieldNames.contains)
-    if (cols.isEmpty) return
-    val base = spark.read.schema(StructType(cols.map(c => t.schema(c))))
-      .parquet(missing.map(_.toString).toSeq: _*)
-      .select(input_file_name().as("__file") +:
-        cols.map(c => split(col(c), Catalog.TokenSeparators).as(c)): _*)
-    // job 1: per-file token-count upper bounds (bloom sizing)
-    val counts = base
-      .groupBy(col("__file"))
-      .agg(sum(cols.map(c => coalesce(size(col(c)), lit(0)))
-        .reduce(_ + _)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bcCounts = spark.sparkContext.broadcast(counts)
-    val nCols = cols.size
-    // job 2: stream tokens into per-(file, column) partial blooms
-    val sidecars = base.rdd.mapPartitions { rows =>
-      val blooms = scala.collection.mutable.HashMap
-        .empty[(String, Int), org.apache.spark.util.sketch.BloomFilter]
-      rows.foreach { r =>
-        val file = r.getString(0)
-        var i = 0
-        while (i < nCols) {
-          val toks = if (r.isNullAt(i + 1)) Nil else r.getSeq[String](i + 1)
-          if (toks.nonEmpty) {
-            val bf = blooms.getOrElseUpdate((file, i),
-              org.apache.spark.util.sketch.BloomFilter.create(
-                math.max(bcCounts.value.getOrElse(file, 1L), 1L), 0.01))
-            toks.foreach(tok => if (tok.nonEmpty) bf.putString(tok))
-          }
-          i += 1
-        }
-      }
-      blooms.iterator.map { case (k, bf) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (k, bos.toByteArray)
-      }
-    }.reduceByKey { (a, b) =>
-      val x = org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(a))
-      x.mergeInPlace(org.apache.spark.util.sketch.BloomFilter
-        .readFrom(new java.io.ByteArrayInputStream(b)))
-      val bos = new java.io.ByteArrayOutputStream()
-      x.writeTo(bos)
-      bos.toByteArray
-    }.collect()
-    sidecars.foreach { case ((fileUri, i), bytes) =>
-      val p = new Path(new java.net.URI(fileUri))
-      val out = f.create(tokenSidecar(p.getParent, p.getName, cols(i)), true)
-      try out.write(bytes) finally out.close()
-    }
+  private def prunedRead(t: TableDef, k: SkipIndex, column: String)(
+      probe: k.Probe): (DataFrame, Int, Int) = {
+    val kind = k.label.takeWhile(_ != ' ')
+    // partitioned layouts read partition values from directory names — a
+    // bare-file read would blank them; they already skip at the directory
+    // level, which is the stronger prune
+    require(t.partitionKeys.isEmpty,
+      s"${t.name}: $kind-pruned reads target unpartitioned layouts")
+    // a merge view needs every file of a key group: dropping a file can
+    // resurrect a superseded row or return a partial sum/state, so pruning
+    // composes only with a raw scan — exactly like ClickHouse applies
+    // secondary indexes to raw parts, before FINAL merging
+    require(t.semantics == Append,
+      s"${t.name}: $kind-pruned reads require Append semantics " +
+        s"(merge views need every file of a key group)")
+    recoverInterruptedSwap(t)
+    val all = listing(t)
+    val kept = survivors(t, all, k, column)(probe)
+    val df =
+      if (kept.isEmpty) readVia(t, dataPaths(t)).limit(0)
+      else readVia(t, kept.map(_.getPath.toString))
+    (df, kept.size, all.files.size)
   }
 
-  /** hasToken-probe read through the token skip index: scan only the
-    * files whose token bloom might contain `token` (no sidecar → kept).
-    * Callers still apply the real predicate on top — bloom false
-    * positives pass the file test, never the filter — so pruning can
-    * never change results. Returns (frame, files scanned, files total).
+  /** Equality probe through the bloom index: scan only the files whose
+    * filter might contain `value`. Callers still apply the predicate —
+    * false positives pass the file test, never the filter.
+    */
+  def readPruned(name: String, column: String,
+                 value: Any): (DataFrame, Int, Int) = {
+    val t = indexed(name, Bloom, column)
+    // only integral index columns hold numbers (createTable validates), so
+    // a fractional probe can match no row — refuse it rather than silently
+    // truncate it through longValue
+    value match {
+      case n: Number => require(n.doubleValue() == n.longValue().toDouble,
+        s"bloom probe value $n is fractional; column $column is integral")
+      case _ => ()
+    }
+    prunedRead(t, Bloom, column)(value)
+  }
+
+  /** hasToken probe through the token index: scan only the files whose
+    * token filter might contain `token`. Callers still apply
+    * [[Catalog.hasToken]] on top.
     */
   def readTokenPruned(name: String, column: String,
                       token: String): (DataFrame, Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val t = get(name)
-    require(t.tokenIndexCols.contains(column),
-      s"$name: no token skip-index declared on $column")
+    val t = indexed(name, Token, column)
     // a "token" containing separator characters can never equal any
     // indexed token — the caller's predicate is malformed, say so loudly
     require(token.nonEmpty && !Catalog.TokenSeparatorsRe.matcher(token).find(),
       s"$name: probe '$token' is not a single token " +
         s"(tokens are maximal [A-Za-z0-9_] runs)")
-    require(t.partitionKeys.isEmpty,
-      s"$name: token-pruned reads target unpartitioned layouts")
-    require(t.semantics == Append,
-      s"$name: token-pruned reads require Append semantics " +
-        s"(merge views need every file of a key group)")
-    recoverInterruptedSwap(t)
-    val f = fs(t)
-    val all = scala.collection.mutable.ArrayBuffer.empty[Path]
-    dataPaths(t).map(new Path(_)).filter(f.exists).foreach { root =>
-      val it = f.listFiles(root, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-            !s.getPath.toString.contains("/_idx/"))
-          all += s.getPath
-      }
-    }
-    val kept = all.filter { p =>
-      val sc = tokenSidecar(p.getParent, p.getName, column)
-      if (!f.exists(sc)) true // fail open: unindexed file might match
-      else {
-        val in = f.open(sc)
-        val bf = try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-                 finally in.close()
-        bf.mightContainString(token)
-      }
-    }
-    // readVia: the pruned set still goes through the full read semantics
-    // (renames, added-column defaults, deletion vectors, row policies)
-    val df =
-      if (kept.isEmpty) readVia(t, dataPaths(t)).limit(0)
-      else readVia(t, kept.toSeq.map(_.toString))
-    (df, kept.size, all.size)
+    prunedRead(t, Token, column)(token)
   }
 
-  // ---- set skip-index sidecars -----------------------------------------
-  //
-  // ClickHouse `INDEX … TYPE set(N)`: the EXACT low-cardinality
-  // complement of the bloom index. Per data file per declared column, the
-  // sidecar stores the file's distinct values — IF there are at most N of
-  // them; a file that overflows the bound stores an overflow marker and
-  // is always kept (CH's unbounded-set rule: an enum-ish column prunes
-  // hard, a high-cardinality column degrades to "no pruning", never to
-  // wrong answers). Unlike the bloom, the probe has NO false positives:
-  // a kept file either really contains a probe value or overflowed.
-
-  private def setSidecar(dir: org.apache.hadoop.fs.Path, fileName: String,
-                         column: String) =
-    new org.apache.hadoop.fs.Path(dir, s"_idx/$fileName.$column.set")
-
-  /** Driver/sidecar render of one set value — string/integral/boolean
-    * only (enforced at CREATE), so `toString` is lossless and equality
-    * on the rendered form IS value equality. NULLs are not stored: SQL
-    * equality/IN never selects NULL rows, so a set without NULL prunes
-    * them correctly for the probe shapes this index serves.
-    */
-  private def setKey(v: Any): String = String.valueOf(v)
-
-  /** Set-index every parquet file under `dir` lacking a sidecar. Two
-    * bounded aggregate jobs over the DISTINCT (file, column, value)
-    * projection — never a per-file collect of raw rows:
-    *   1. distinct-count per (file, column) — decides overflow WITHOUT
-    *      materializing any value list;
-    *   2. value collection restricted to the under-bound groups, so no
-    *      executor ever holds more than N values per group (the
-    *      high-cardinality file that would blow the heap is exactly the
-    *      one job 1 already marked overflowed).
-    */
-  private def buildSetIndex(t: TableDef, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    val f = fs(t)
-    val d = new Path(dir)
-    if (!f.exists(d)) return
-    val it = f.listFiles(d, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      val n = s.getPath.getName
-      if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !s.getPath.toString.contains("/_idx/"))
-        files += s.getPath
-    }
-    val missing = files.filter { p =>
-      t.setIndexCols.exists { case (c, _) =>
-        !f.exists(setSidecar(p.getParent, p.getName, c))
-      }
-    }
-    if (missing.isEmpty) return
-    val cols = t.setIndexCols.filter { case (c, _) =>
-      t.schema.fieldNames.contains(c)
-    }
-    if (cols.isEmpty) return
-    val bounds = cols.toMap
-    val base = spark.read
-      .schema(StructType(cols.map { case (c, _) => t.schema(c) }))
-      .parquet(missing.map(_.toString).toSeq: _*)
-    // one narrow frame of rendered (file, column, value) triples
-    val triples = cols.map { case (c, _) =>
-      base.select(input_file_name().as("__file"), lit(c).as("__col"),
-        col(c).cast("string").as("__v"))
-        .filter(col("__v").isNotNull)
-    }.reduce(_.union(_)).distinct()
-    // job 1: distinct counts (no lists anywhere)
-    val counts = triples.groupBy(col("__file"), col("__col"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
-    // job 2: values for the under-bound groups only (the per-column bound
-    // folds into one CASE column so a single filter gates every group)
-    val boundExpr = cols.map { case (c, n) =>
-      when(col("__col") === lit(c), lit(n))
-    }.reduce((a, b) => a.otherwise(b))
-    val smallSets = triples
-      .join(triples.groupBy(col("__file"), col("__col"))
-          .agg(count(lit(1)).as("__n")),
-        Seq("__file", "__col"))
-      .filter(col("__n") <= boundExpr)
-      .groupBy(col("__file"), col("__col"))
-      .agg(sort_array(collect_list(col("__v"))).as("vals"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getSeq[String](2))
-      .toMap
-    def writeSidecar(sc: Path, json: org.json4s.JObject): Unit = {
-      val out = f.create(sc, true)
-      try out.write(JsonMethods.compact(JsonMethods.render(json))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    // data-bearing (file, column) groups: the Path derives FROM the
-    // collected input_file_name URI (the buildTokenIndex rule — never
-    // string-compare two different renderings of one URI)
-    counts.foreach { case (key @ (fileUri, c), distinct) =>
-      val p = new Path(new java.net.URI(fileUri))
-      writeSidecar(setSidecar(p.getParent, p.getName, c),
-        if (distinct > bounds(c)) ("kind" -> "overflow"): org.json4s.JObject
-        else ("kind" -> "set") ~
-          ("vals" -> smallSets.getOrElse(key, Seq.empty[String])))
-    }
-    // columns all-null (or files empty) contribute no counts row — write
-    // the EMPTY set (prunes every probe, correctly: no value can match),
-    // and without a sidecar the file would re-enter the missing list on
-    // every append, re-scanning forever
-    missing.foreach { p =>
-      cols.foreach { case (c, _) =>
-        val sc = setSidecar(p.getParent, p.getName, c)
-        if (!f.exists(sc))
-          writeSidecar(sc,
-            ("kind" -> "set") ~ ("vals" -> Seq.empty[String]))
-      }
-    }
-  }
-
-  /** IN/equality-probe read through the set skip index: scan only the
-    * files whose exact value set intersects `values` (no sidecar or
-    * overflow marker → kept, fail open). Callers still apply the real
-    * predicate on top — not for false positives (the set is exact) but
-    * because a kept file still holds non-matching rows. Returns
-    * (frame, files scanned, files total).
+  /** IN/equality probe through the set index: scan only the files whose
+    * exact value set meets `values` (overflowed files are kept). Callers
+    * still apply the predicate: a kept file holds non-matching rows too.
     */
   def readSetPruned(name: String, column: String,
                     values: Seq[Any]): (DataFrame, Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    import org.json4s.jackson.JsonMethods
-    val t = get(name)
-    require(t.setIndexCols.exists(_._1 == column),
-      s"$name: no set skip-index declared on $column")
+    val t = indexed(name, SetIndex, column)
     require(values.nonEmpty, s"$name: empty IN-list probe")
-    require(t.partitionKeys.isEmpty,
-      s"$name: set-pruned reads target unpartitioned layouts")
-    require(t.semantics == Append,
-      s"$name: set-pruned reads require Append semantics " +
-        s"(merge views need every file of a key group)")
-    recoverInterruptedSwap(t)
-    val probe = values.map(setKey).toSet
-    val f = fs(t)
-    val all = listDataFiles(t).map(_.getPath)
-    val kept = all.filter { p =>
-      val sc = setSidecar(p.getParent, p.getName, column)
-      if (!f.exists(sc)) true // fail open: unindexed file might match
-      else {
-        val in = f.open(sc)
-        val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                   finally in.close()
-        val j = JsonMethods.parse(json)
-        (j \ "kind") match {
-          case org.json4s.JString("set") => (j \ "vals") match {
-            case org.json4s.JArray(xs) =>
-              xs.exists { case org.json4s.JString(s) => probe.contains(s)
-                          case _ => false }
-            case _ => true // malformed → fail open
-          }
-          case _ => true // overflow (or unknown kind) → kept
-        }
-      }
-    }
-    val df =
-      if (kept.isEmpty) readVia(t, dataPaths(t)).limit(0)
-      else readVia(t, kept.map(_.toString))
-    (df, kept.size, all.size)
+    prunedRead(t, SetIndex, column)(values.map(v => String.valueOf(v)).toSet)
   }
 
-  // ---- full-text (inverted) index sidecars ------------------------------
-  //
-  // ClickHouse `INDEX … TYPE full_text` (the inverted/gin index): where
-  // the token BLOOM answers "might this file contain token X" one token
-  // at a time, the posting list stores WHICH ROWS carry each token — so a
-  // multi-token AND (and its phrase special case) can intersect row sets
-  // and drop a file whose probe tokens never co-occur in one row, a prune
-  // no bloom can make. Same `_idx/` lifecycle, same fail-open consult,
-  // same two-phase bounded build as the set(N) index: counts first (no
-  // lists), then list collection restricted to groups the bound admits.
-
-  private def fullTextSidecar(dir: org.apache.hadoop.fs.Path,
-                              fileName: String, column: String) =
-    new org.apache.hadoop.fs.Path(dir, s"_idx/$fileName.$column.postings")
-
-  /** Posting-index every parquet file under `dir` lacking a sidecar.
-    * Bounded like [[buildSetIndex]], in ONE pass (round-14 shape):
-    *   - per-token ordinal lists are truncated at rowCap+1 by a
-    *     WindowGroupLimit BEFORE any collection — a token in more rows
-    *     than [[Catalog.FullTextRowCap]] stores a dense marker instead
-    *     of its list, and no executor group ever holds more than
-    *     rowCap+1 ids;
-    *   - an over-bound file is marked overflowed from the one-row-per-
-    *     (file, column) vocabulary counts, and its token rows are
-    *     dropped before the sidecar fold — the overflow verdict costs a
-    *     broadcast, not a driver collect.
-    * Row ordinals are the parquet reader's `_metadata.row_index` — stable
-    * per file, the granule-position analog.
-    */
-  private def buildFullTextIndex(t: TableDef, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    val f = fs(t)
-    val d = new Path(dir)
-    if (!f.exists(d)) return
-    val it = f.listFiles(d, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      val n = s.getPath.getName
-      if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !s.getPath.toString.contains("/_idx/"))
-        files += s.getPath
-    }
-    val missing = files.filter { p =>
-      t.fullTextCols.exists { case (c, _) =>
-        !f.exists(fullTextSidecar(p.getParent, p.getName, c))
-      }
-    }
-    if (missing.isEmpty) return
-    val cols = t.fullTextCols.filter { case (c, _) =>
-      t.schema.fieldNames.contains(c)
-    }
-    if (cols.isEmpty) return
-    val rowCap = Catalog.FullTextRowCap
-    val base = spark.read
-      .schema(StructType(cols.map { case (c, _) => t.schema(c) }))
-      .parquet(missing.map(_.toString).toSeq: _*)
-    // one narrow frame of distinct (file, column, token, row) quads —
-    // the tokenize+distinct pass is the expensive upstream of the build
-    val quads = cols.map { case (c, _) =>
-      base.select(input_file_name().as("__file"), lit(c).as("__col"),
-        explode(split(coalesce(col(c), lit("")),
-          Catalog.TokenSeparators)).as("__tok"),
-        col("_metadata.row_index").as("__row"))
-        .filter(col("__tok") =!= "")
-    }.reduce(_.union(_)).distinct()
-    // Single-pass assembly (round-14 optimization; guide §2.3-§2.4): the
-    // former build ran TWO actions (a vocab collect, then the sidecar
-    // write) over a persisted quad frame, re-joining it against its own
-    // aggregates three times — ~8 exchanges. This shape derives the same
-    // verdicts in ONE action and 4 exchanges, with the same memory
-    // bounds:
-    //   - per-token row lists are capped BEFORE any collection by a
-    //     row_number() <= rowCap+1 filter — Spark's WindowGroupLimit
-    //     truncates each group map-side under the window exchange, so no
-    //     buffer anywhere holds more than rowCap+1 ordinals (the old
-    //     "count before collect" bound, one shuffle cheaper);
-    //   - a token surviving with __n <= rowCap kept ALL its ordinals
-    //     (nothing was truncated), so its list is exact; __n = rowCap+1
-    //     means "more rows than the cap" — the dense marker, its
-    //     (discarded) list never exceeding cap+1 entries;
-    //   - the overflow verdict joins back as a broadcast of one tiny row
-    //     per (file, column), so an over-bound file's vocabulary is
-    //     dropped BEFORE the per-(file,column) fold — no executor group
-    //     ever assembles an over-bound vocabulary (the old job-1
-    //     guarantee, without the driver round-trip).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__file"), col("__col"), col("__tok"))
-      .orderBy(col("__row"))
-    val perTok = quads
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= lit(rowCap + 1))
-      .groupBy(col("__file"), col("__col"), col("__tok"))
-      .agg(count(lit(1)).as("__n"),
-        sort_array(collect_list(col("__row"))).as("__rows"))
-    val boundExpr = cols.map { case (c, n) =>
-      when(col("__col") === lit(c), lit(n))
-    }.reduce((a, b) => a.otherwise(b))
-    // one row per (file, column): distinct-token count vs the declared
-    // vocabulary bound
-    val vocabDf = perTok.groupBy(col("__file"), col("__col"))
-      .agg(count(lit(1)).as("__vocab"))
-      .withColumn("__overflow", col("__vocab") > boundExpr)
-    val admittedKeys = broadcast(
-      vocabDf.filter(!col("__overflow")).select(col("__file"), col("__col")))
-    // to_json omits null struct fields: a group with no dense (or no
-    // sparse) tokens simply lacks that key, which the probe reads as
-    // empty — same semantics (and the same document shape) as before
-    def nullIfEmpty(c: Column): Column = when(size(c) > 0, c)
-    val folded = perTok.join(admittedKeys, Seq("__file", "__col"))
-      .groupBy(col("__file"), col("__col"))
-      .agg(
-        nullIfEmpty(sort_array(collect_list(
-          when(col("__n") > rowCap, col("__tok"))))).as("dense"),
-        nullIfEmpty(map_from_entries(collect_list(
-          when(col("__n") <= rowCap,
-            struct(col("__tok"), col("__rows")))))).as("toks"))
-      .select(col("__file"), col("__col"),
-        to_json(struct(lit("postings").as("kind"), col("dense"),
-          col("toks"))).as("__json"))
-    // over-bound groups become their overflow markers in the SAME write
-    // (formerly a driver-side stamp loop fed by the collect)
-    val sidecarRows = folded.unionByName(
-      vocabDf.filter(col("__overflow"))
-        .select(col("__file"), col("__col"),
-          to_json(struct(lit("overflow").as("kind"))).as("__json")))
-    sidecarRows.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      // executor-side write: a fresh Configuration resolves the data
-      // files' own scheme (file:// here; hdfs:///s3a:// on a cluster
-      // where executors carry core-site like any output committer)
-      val conf = new org.apache.hadoop.conf.Configuration()
-      rows.foreach { r =>
-        val p = new Path(new java.net.URI(r.getString(0)))
-        val sc = new Path(p.getParent,
-          s"_idx/${p.getName}.${r.getString(1)}.postings")
-        val efs = sc.getFileSystem(conf)
-        val out = efs.create(sc, true)
-        try out.write(r.getString(2)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-    }
-    def writeSidecar(sc: Path, json: org.json4s.JObject): Unit = {
-      val out = f.create(sc, true)
-      try out.write(JsonMethods.compact(JsonMethods.render(json))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    // all-null / empty files contribute no vocab row: write the empty
-    // posting map (prunes every probe, correctly) so the file never
-    // re-enters the missing list
-    missing.foreach { p =>
-      cols.foreach { case (c, _) =>
-        val sc = fullTextSidecar(p.getParent, p.getName, c)
-        if (!f.exists(sc))
-          writeSidecar(sc, ("kind" -> "postings") ~
-            ("dense" -> Seq.empty[String]) ~
-            ("toks" -> org.json4s.JObject(Nil)))
-      }
-    }
-  }
-
-  /** Multi-token AND probe through the inverted index: scan only the
-    * files where EVERY probe token is present AND the tokens' row sets
-    * intersect (a dense-marked token counts as universal; no sidecar or
-    * overflow → kept, fail open). This is the probe shape
-    * [[readTokenPruned]] refuses — the posting lists answer it with NO
-    * false positives below the dense cap. Callers still apply the real
-    * row predicate on top (a kept file still holds non-matching rows).
-    * Returns (frame, files scanned, files total).
+  /** Multi-token AND probe through the full-text index: scan only the
+    * files where every token is present AND the tokens' row sets
+    * intersect — the probe shape [[readTokenPruned]] refuses. Callers
+    * still apply the row predicate.
     */
   def readFullTextAnd(name: String, column: String,
                       tokens: Seq[String]): (DataFrame, Int, Int) = {
-    import org.json4s.jackson.JsonMethods
-    val t = get(name)
-    require(t.fullTextCols.exists(_._1 == column),
-      s"$name: no full-text index declared on $column")
+    val t = indexed(name, FullText, column)
     require(tokens.nonEmpty, s"$name: empty token probe")
     tokens.foreach(tok => require(
       tok.nonEmpty && !Catalog.TokenSeparatorsRe.matcher(tok).find(),
       s"$name: probe '$tok' is not a single token " +
         s"(tokens are maximal [A-Za-z0-9_] runs); phrase probes go " +
         "through readFullTextPhrase"))
-    require(t.partitionKeys.isEmpty,
-      s"$name: full-text-pruned reads target unpartitioned layouts")
-    require(t.semantics == Append,
-      s"$name: full-text-pruned reads require Append semantics " +
-        s"(merge views need every file of a key group)")
-    recoverInterruptedSwap(t)
-    val f = fs(t)
-    val all = listDataFiles(t).map(_.getPath)
-    val kept = all.filter { p =>
-      val sc = fullTextSidecar(p.getParent, p.getName, column)
-      if (!f.exists(sc)) true // fail open: unindexed file might match
-      else {
-        val in = f.open(sc)
-        val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                   finally in.close()
-        val j = JsonMethods.parse(json)
-        (j \ "kind") match {
-          case org.json4s.JString("postings") =>
-            val denseSet: Set[String] = (j \ "dense") match {
-              case org.json4s.JArray(xs) =>
-                xs.collect { case org.json4s.JString(s) => s }.toSet
-              case _ => Set.empty
-            }
-            def rowsOf(tok: String): Option[Set[Long]] =
-              (j \ "toks" \ tok) match {
-                case org.json4s.JArray(xs) => Some(xs.collect {
-                  case org.json4s.JLong(v) => v
-                  case org.json4s.JInt(v) => v.toLong
-                }.toSet)
-                case _ => None
-              }
-            // every token present, and the sparse tokens' row sets
-            // intersect (dense = universal)
-            val sparse = tokens.filterNot(denseSet.contains)
-            val lists = sparse.map(rowsOf)
-            if (lists.exists(_.isEmpty)) false // a probe token is absent
-            else lists.flatten match {
-              case Nil => true // all probe tokens dense
-              case xs => xs.reduce(_ intersect _).nonEmpty
-            }
-          case _ => true // overflow (or unknown kind) → kept
-        }
-      }
-    }
-    val df =
-      if (kept.isEmpty) readVia(t, dataPaths(t)).limit(0)
-      else readVia(t, kept.map(_.toString))
-    (df, kept.size, all.size)
+    prunedRead(t, FullText, column)(tokens)
   }
 
   /** Phrase probe: tokenize `phrase` with the index's own tokenizer and
@@ -3823,289 +3141,14 @@ final class Catalog(spark: SparkSession) {
     readFullTextAnd(name, column, toks.distinct)
   }
 
-  /** Equality-probe read through the skip index: scan only the data files
-    * whose bloom sidecar might contain `value` (no sidecar → kept). The
-    * returned frame carries full read semantics; callers still apply the
-    * predicate (bloom false positives pass the file test, never the
-    * filter). Also returns (files scanned, files total) so callers — and
-    * the spec — can observe the skipping.
+  /** Range probe through the minmax index: scan only the files whose
+    * `[min, max]` meets `[lo, hi]` (null bound = open side; all-null files
+    * dropped — no non-null value satisfies a range).
     */
-  def readPruned(name: String, column: String,
-                 value: Any): (DataFrame, Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val t = get(name)
-    require(t.indexCols.contains(column),
-      s"$name: no bloom skip-index declared on $column")
-    // partitioned layouts read partition values from directory names — a
-    // bare-file read would blank them; they already skip at the directory
-    // level, which is the stronger prune
-    require(t.partitionKeys.isEmpty,
-      s"$name: bloom-pruned reads target unpartitioned layouts")
-    // file pruning composes with a raw scan, NOT with a merge view:
-    // under Replacing/Summing/Aggregating semantics the merge needs every
-    // file of a key group, and dropping a file whose bloom lacks the
-    // probe can resurrect a superseded row (its superseder lives in the
-    // pruned file) or return a partial sum/state — so the skip index is
-    // an Append-tables feature, exactly like ClickHouse applies
-    // secondary indexes to raw parts, before FINAL merging
-    require(t.semantics == Append,
-      s"$name: bloom-pruned reads require Append semantics " +
-        s"(merge views need every file of a key group)")
-    recoverInterruptedSwap(t)
-    val f = fs(t)
-    val all = scala.collection.mutable.ArrayBuffer.empty[Path]
-    dataPaths(t).map(new Path(_)).filter(f.exists).foreach { root =>
-      val it = f.listFiles(root, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-            !s.getPath.toString.contains("/_idx/"))
-          all += s.getPath
-      }
-    }
-    val kept = all.filter { p =>
-      val sc = idxSidecar(p.getParent, p.getName, column)
-      if (!f.exists(sc)) true // fail open: unindexed file might match
-      else {
-        val in = f.open(sc)
-        val bf = try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-                 finally in.close()
-        value match {
-          case s: String => bf.mightContainString(s)
-          case b: Array[Byte] => bf.mightContainBinary(b)
-          // only integral index columns exist (createTable validates), so a
-          // fractional probe that is not exactly integral can match no row —
-          // reject it loudly rather than silently truncating via longValue
-          case n: Number =>
-            val l = n.longValue()
-            require(n.doubleValue() == l.toDouble,
-              s"bloom probe value $n is fractional; column $column is integral")
-            bf.mightContainLong(l)
-          case other => bf.mightContain(other)
-        }
-      }
-    }
-    val df =
-      if (kept.isEmpty) readVia(t, dataPaths(t)).limit(0)
-      else readVia(t, kept.toSeq.map(_.toString))
-    (df, kept.size, all.size)
-  }
-
-  // ---- minmax skip-index sidecars --------------------------------------
-  //
-  // ClickHouse's `INDEX … TYPE minmax` (and the per-part minmax index
-  // MergeTree always keeps on its key): one tiny `[min, max]` record per
-  // data file per declared `minmaxCols` column, consulted by
-  // [[readRangePruned]] to drop whole files before the scan starts. It
-  // complements the bloom sidecars (equality probes) with RANGE
-  // predicates, and complements parquet row-group min/max (applied inside
-  // a file, after its footer is fetched) with file-level skipping that
-  // never opens the file at all — at 100 TB the footer round-trips alone
-  // dominate a highly-selective scan. Same lifecycle as the blooms:
-  // written under `_idx/` at append/compact time (one aggregate job for
-  // ALL unindexed files), they travel with their directory through swaps
-  // and manifest flips, absent sidecars fail open, and the caller's
-  // filter still applies on top, so pruning can never change results.
-
-  private def mmSidecar(dir: org.apache.hadoop.fs.Path, fileName: String,
-                        column: String) =
-    new org.apache.hadoop.fs.Path(dir, s"_idx/$fileName.$column.minmax")
-
-  /** Orderable sidecar form of a driver-side value: numeric (and
-    * date/time, via epoch-day / epoch-micros) as BigDecimal under kind
-    * "num", strings as kind "str". Two values compare only within a kind
-    * — mixed kinds fail open at prune time. Throws for values with no
-    * total order BigDecimal can hold (NaN/Infinity — Spark's max() ranks
-    * NaN greatest, which BigDecimal cannot express) and for unsupported
-    * types; [[buildMinmaxIndex]] catches and SKIPS that sidecar (the
-    * unindexed file fails open), while a probe-side throw is a caller
-    * error and stays loud.
-    */
-  private def mmKey(v: Any): (String, Any) = v match {
-    case s: String => ("str", s)
-    case d: java.math.BigDecimal => ("num", BigDecimal(d))
-    case d: java.sql.Date => ("num", BigDecimal(d.toLocalDate.toEpochDay))
-    case d: java.time.LocalDate => ("num", BigDecimal(d.toEpochDay))
-    case t: java.sql.Timestamp =>
-      val i = t.toInstant
-      ("num", BigDecimal(i.getEpochSecond) * BigDecimal(1000000L) +
-        BigDecimal(i.getNano / 1000L))
-    case i: java.time.Instant =>
-      ("num", BigDecimal(i.getEpochSecond) * BigDecimal(1000000L) +
-        BigDecimal(i.getNano / 1000L))
-    case l: java.time.LocalDateTime => // TIMESTAMP_NTZ driver-side value
-      ("num", BigDecimal(l.toEpochSecond(java.time.ZoneOffset.UTC)) *
-        BigDecimal(1000000L) + BigDecimal(l.getNano / 1000L))
-    case b: java.lang.Boolean => ("num", BigDecimal(if (b) 1 else 0))
-    case n: java.lang.Number => ("num", BigDecimal(n.toString)) // throws on NaN/Inf
-    case other => throw new IllegalArgumentException(
-      s"minmax index: unsupported value type ${other.getClass.getName}")
-  }
-
-  /** Spark's string min/max (and its comparisons) order by UTF-8 BYTES
-    * (UTF8String.binaryCompare) — JVM String `<=` orders by UTF-16 code
-    * unit, which DISAGREES beyond the BMP (a supplementary code point's
-    * surrogates sort below U+E000..U+FFFF in UTF-16 but above in UTF-8).
-    * Pruning with the wrong order would drop files holding matches.
-    */
-  private def utf8Leq(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c < 0
-      i += 1
-    }
-    x.length <= y.length
-  }
-
-  private def mmLeq(a: (String, Any), b: (String, Any)): Boolean = (a, b) match {
-    case (("num", x: BigDecimal), ("num", y: BigDecimal)) => x <= y
-    case (("str", x: String), ("str", y: String)) => utf8Leq(x, y)
-    case _ => true // mixed kinds: no defined order — fail open
-  }
-
-  /** Write minmax sidecars for every parquet file under `dir` still
-    * missing one, in ONE aggregate job regardless of file count: all
-    * unindexed files scan once as a column-pruned read grouped by
-    * `input_file_name()`, and only (file, min, max) triples — one row per
-    * file — come back to the driver.
-    */
-  private def buildMinmaxIndex(t: TableDef, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    val f = fs(t)
-    val d = new Path(dir)
-    if (!f.exists(d)) return
-    val it = f.listFiles(d, true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      val n = s.getPath.getName
-      if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-          !s.getPath.toString.contains("/_idx/"))
-        files += s.getPath
-    }
-    val missing = files.filter { p =>
-      t.minmaxCols.exists(c => !f.exists(mmSidecar(p.getParent, p.getName, c)))
-    }
-    if (missing.isEmpty) return
-    // the DECLARED schema projected to the index columns — never a
-    // sampled file's physical schema: after an ALTER MODIFY COLUMN the
-    // unindexed set can mix narrow and wide physical types, and only the
-    // declared read schema promotes both natively
-    val cols = t.minmaxCols.filter(t.schema.fieldNames.contains)
-    if (cols.isEmpty) return
-    val readSchema = StructType(cols.map(c => t.schema(c)))
-    val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
-    val rows = spark.read.schema(readSchema)
-      .parquet(missing.map(_.toString).toSeq: _*)
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val enc: Any => org.json4s.JValue = {
-      case null => org.json4s.JNull
-      case v => mmKey(v) match {
-        case (_, bd: BigDecimal) => org.json4s.JString(bd.toString)
-        case (_, s: String) => org.json4s.JString(s)
-        case _ => org.json4s.JNull
-      }
-    }
-    rows.foreach { r =>
-      val p = new Path(new java.net.URI(r.getString(0)))
-      cols.zipWithIndex.foreach { case (c, i) =>
-        val mn = r.get(1 + 2 * i)
-        val mx = r.get(2 + 2 * i)
-        // un-encodable bounds (NaN/Infinity extremes, exotic types) get
-        // an explicit "none" sidecar: the file is permanently marked
-        // unprunable (reads keep it), the append that already committed
-        // its data never throws, and — unlike skipping the write — the
-        // file never re-enters the missing set, so appends stay O(batch)
-        val json = try {
-          val kind =
-            if (mn == null && mx == null) "num" // all-null file: kind moot
-            else mmKey(if (mn != null) mn else mx)._1
-          JsonMethods.compact(JsonMethods.render(
-            ("k" -> kind) ~ ("min" -> enc(mn)) ~ ("max" -> enc(mx))))
-        } catch { case scala.util.control.NonFatal(_) => """{"k":"none"}""" }
-        try {
-          val out = f.create(mmSidecar(p.getParent, p.getName, c), true)
-          try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-        } catch { case scala.util.control.NonFatal(_) => () } // fs hiccup: fail open
-      }
-    }
-  }
-
-  /** Range-predicate read through the minmax index: scan only the data
-    * files whose `[min, max]` intersects `[lo, hi]` (null bound = open
-    * side; no sidecar → kept; all-null files dropped — no non-null value
-    * can satisfy a range). The caller still applies the predicate on top,
-    * so pruning can never change results. Append-only and unpartitioned,
-    * exactly like [[readPruned]] and for the same reasons. Returns
-    * (frame, files kept, files total).
-    */
-  /** Does `p` survive a `[loK, hiK]` range probe against its minmax
-    * sidecar for `column`? Shared by [[readRangePruned]] and
-    * [[explainEstimate]] so the estimate prices exactly the scan the
-    * read path would run. Fail-open on a missing sidecar.
-    */
-  private def mmSurvives(t: TableDef, p: org.apache.hadoop.fs.Path,
-                         column: String, loK: Option[(String, Any)],
-                         hiK: Option[(String, Any)]): Boolean = {
-    import org.json4s.jackson.JsonMethods
-    val f = fs(t)
-    val sc = mmSidecar(p.getParent, p.getName, column)
-    if (!f.exists(sc)) true // fail open: unindexed file might match
-    else {
-      val in = f.open(sc)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      val j = JsonMethods.parse(json)
-      def bound(k: String): Option[(String, Any)] = (j \ k) match {
-        case org.json4s.JString(s) => (j \ "k") match {
-          case org.json4s.JString("num") => Some(("num", BigDecimal(s)))
-          case _ => Some(("str", s))
-        }
-        case _ => None
-      }
-      (j \ "k") match {
-        case org.json4s.JString("none") => true // marked unprunable
-        case _ => (bound("min"), bound("max")) match {
-          case (Some(mn), Some(mx)) =>
-            loK.forall(l => mmLeq(l, mx)) && hiK.forall(h => mmLeq(mn, h))
-          case _ => false // all-null file: no value satisfies a range
-        }
-      }
-    }
-  }
-
   def readRangePruned(name: String, column: String, lo: Any,
                       hi: Any): (DataFrame, Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    import org.json4s.jackson.JsonMethods
-    val t = get(name)
-    require(t.minmaxCols.contains(column),
-      s"$name: no minmax skip-index declared on $column")
-    require(t.partitionKeys.isEmpty,
-      s"$name: minmax-pruned reads target unpartitioned layouts")
-    require(t.semantics == Append,
-      s"$name: minmax-pruned reads require Append semantics " +
-        s"(merge views need every file of a key group)")
-    recoverInterruptedSwap(t)
-    val f = fs(t)
-    val all = listDataFiles(t).map(_.getPath)
-    val loK = Option(lo).map(mmKey)
-    val hiK = Option(hi).map(mmKey)
-    val kept = all.filter(p => mmSurvives(t, p, column, loK, hiK))
-    val df =
-      if (kept.isEmpty) readVia(t, dataPaths(t)).limit(0)
-      else readVia(t, kept.map(_.toString))
-    (df, kept.size, all.size)
+    val t = indexed(name, MinMax, column)
+    prunedRead(t, MinMax, column)(MinMax.range(lo, hi))
   }
 
   /** CH `SELECT … SAMPLE frac [OFFSET offset]` over a table declared
@@ -4552,54 +3595,15 @@ final class Catalog(spark: SparkSession) {
   // METADATA for tables (no data scan), one distributed pass for
   // per-part row counts and sort-key bounds.
 
-  private def listDataFiles(t: TableDef): Seq[org.apache.hadoop.fs.FileStatus] = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    dataPaths(t).map(new Path(_)).filter(f.exists).flatMap { root =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-      val it = f.listFiles(root, true)
-      while (it.hasNext) {
-        val s = it.next()
-        val n = s.getPath.getName
-        if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-            !s.getPath.toString.contains("/_idx/"))
-          out += s
-      }
-      out.toSeq
-    }
-  }
-
   /** Cheap driver-side probe: does `name` hold ANY committed data file?
     * A metadata listing, never a Spark job — read-before-write paths use
     * it to skip planning a scan of a table that is registered but still
-    * empty (the fresh-fixture fast path, round-14). The sidecar
-    * exclusion is RELATIVE to the table root: a companion table may
-    * itself live under another table's `_idx/` (the ANN quantizer
-    * store), and the absolute-path filter would blind this probe to its
-    * own files.
+    * empty (the fresh-fixture fast path, round-14).
     */
   private[catalog] def hasDataFiles(name: String): Boolean = {
     val t = get(name)
     recoverInterruptedSwap(t)
-    val f = fs(t)
-    dataPaths(t).map(new org.apache.hadoop.fs.Path(_)).filter(f.exists)
-      .exists { root =>
-        // qualify: listFiles returns scheme-qualified paths (file:/…),
-        // so an unqualified prefix would never strip and the root's own
-        // ancestors (…/_idx/ann/…) would re-enter the exclusion
-        val prefix = f.makeQualified(root).toString
-        val it = f.listFiles(root, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val s = it.next()
-          val n = s.getPath.getName
-          val rel = s.getPath.toString.stripPrefix(prefix)
-          if (s.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-              !rel.contains("/_idx/"))
-            found = true
-        }
-        found
-      }
+    listing(t).files.nonEmpty
   }
 
   /** `system.tables` analog: one row per registered table — layout,
@@ -4627,7 +3631,7 @@ final class Catalog(spark: SparkSession) {
   def systemTables(): DataFrame = {
     import spark.implicits._
     tables.values.toSeq.sortBy(_.name).map { t =>
-      val files = if (exists(t.name)) listDataFiles(t) else Nil
+      val files = if (exists(t.name)) listing(t).files else Nil
       (t.name, t.path, t.layout.toString,
         t.semantics.getClass.getSimpleName.stripSuffix("$"),
         t.sortKeys, t.partitionKeys, t.indexCols,
@@ -4762,7 +3766,7 @@ final class Catalog(spark: SparkSession) {
     import spark.implicits._
     val t = get(name)
     recoverInterruptedSwap(t)
-    val sizes = listDataFiles(t)
+    val sizes = listing(t).files
       .map(s => (s.getPath.getName, s.getLen)).toDF("part", "bytes")
     val sortKey = t.sortKeys.headOption
     val perFile = scanRoots(t, t.schema, dataPaths(t))
@@ -4826,7 +3830,7 @@ final class Catalog(spark: SparkSession) {
     add(t.schema.fieldNames.mkString(","))
     add(renamePending.getOrElse(name, Map.empty).toSeq.sorted.mkString(","))
     add(readDefaults.getOrElse(name, Map.empty).keys.toSeq.sorted.mkString(","))
-    listDataFiles(t).sortBy(_.getPath.toString).foreach { s =>
+    listing(t).files.sortBy(_.getPath.toString).foreach { s =>
       add(s.getPath.toString); add(s.getLen.toString)
       add(s.getModificationTime.toString)
     }
@@ -4841,7 +3845,7 @@ final class Catalog(spark: SparkSession) {
     * ClickHouse's in-RAM part counts; at 100 TB the footer loop runs
     * over the files that SURVIVE pruning, not the table). With a range
     * on a declared minmax column the estimate consults the skip-index
-    * sidecars first — via the same [[mmSurvives]] the read path uses —
+    * sidecars first — via the same [[survivors]] the read path uses —
     * so it prices exactly the scan [[readRangePruned]] would run.
     * One row: (table, files_total, files_selected, rows, bytes).
     */
@@ -4850,15 +3854,12 @@ final class Catalog(spark: SparkSession) {
     import spark.implicits._
     val t = get(name)
     recoverInterruptedSwap(t)
-    val all = listDataFiles(t)
+    val all = listing(t)
     val kept = range match {
-      case None => all
+      case None => all.files
       case Some((column, lo, hi)) =>
-        require(t.minmaxCols.contains(column),
-          s"$name: no minmax skip-index declared on $column")
-        val loK = Option(lo).map(mmKey)
-        val hiK = Option(hi).map(mmKey)
-        all.filter(s => mmSurvives(t, s.getPath, column, loK, hiK))
+        indexed(name, MinMax, column)
+        survivors(t, all, MinMax, column)(MinMax.range(lo, hi))
     }
     val conf = spark.sessionState.newHadoopConf()
     val rows = kept.map { s =>
@@ -4866,7 +3867,7 @@ final class Catalog(spark: SparkSession) {
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(s.getPath, conf))
       try r.getRecordCount finally r.close()
     }.sum
-    Seq((t.name, all.size.toLong, kept.size.toLong, rows,
+    Seq((t.name, all.files.size.toLong, kept.size.toLong, rows,
         kept.map(_.getLen).sum))
       .toDF("table", "files_total", "files_selected", "rows", "bytes")
   }

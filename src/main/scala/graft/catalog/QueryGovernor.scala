@@ -15,11 +15,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * governor wraps the ACTION — the same place [[QueryLog]] measures.
   *
   * The cancellation primitive is JOB TAGS + `cancelJobsWithTag`, chosen
-  * by measurement over the two alternatives (tools/KillProbe):
-  * job-group cancellation with future-job poisoning deadlocks an AQE
-  * query (the stage-event loop waits forever on a job that was refused
-  * at submission), and a one-shot cancel of either kind is a silent
-  * no-op when it lands while the query is still PLANNING — the "killed"
+  * by measurement over the two alternatives (killing a running AQE
+  * query each way and timing its exit): job-group cancellation with
+  * future-job poisoning deadlocks an AQE query (the stage-event loop
+  * waits forever on a job that was refused at submission), and a
+  * one-shot cancel of either kind is a silent no-op when it lands while
+  * the query is still PLANNING — the "killed"
   * query then runs to completion. So [[kill]] re-issues the cancel on a
   * short period until the query actually exits: every job the action
   * (or AQE's stage-submission threads, which inherit the tag) submits

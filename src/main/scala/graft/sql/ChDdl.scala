@@ -826,12 +826,7 @@ object ChDdl {
     val materialized = Seq.newBuilder[(String, String)]
     val defaulted = Seq.newBuilder[(String, String)]
     val nestedGroups = Seq.newBuilder[(String, String)]
-    var indexCols = Seq.empty[String]
-    var minmaxCols = Seq.empty[String]
-    var tokenCols = Seq.empty[String]
-    var setCols = Seq.empty[(String, Int)]
-    var ftCols = Seq.empty[(String, Int)]
-    var annIdx: Option[graft.catalog.AnnIndexDef] = None
+    var indexes = Seq.empty[(graft.catalog.IndexKind, String, Seq[Int])]
     var codecs = Seq.empty[(String, String)]
     var projections = Seq.empty[graft.catalog.ProjectionSpec]
 
@@ -843,40 +838,10 @@ object ChDdl {
       case conRe(cn, ce) => constraints += cn -> ChDialect.rewrite(ce.trim)
       case projRe(pn, sel) => projections :+= parseProjection(pn, sel)
       case idxRe(_, colName, kind, arg) =>
-        val c = colName.replace("`", "")
-        kind.toLowerCase match {
-          case "bloom_filter" => indexCols :+= c
-          case "minmax" => minmaxCols :+= c
-          case "set" =>
-            val n = Option(arg).map(_.trim).filter(_.nonEmpty).map(_.toInt)
-              .getOrElse(throw new IllegalArgumentException(
-                s"$name: INDEX TYPE set needs a max-distinct bound set(N)"))
-            setCols :+= c -> n
-          case "tokenbf_v1" | "ngrambf_v1" => tokenCols :+= c
-          // the inverted index (CH full_text/gin): the numeric arg is
-          // OUR bound (max distinct tokens per file — the posting-list
-          // budget), not CH's ngram size; absent → a generous default
-          case "full_text" | "inverted" | "gin" =>
-            val n = Option(arg).map(_.trim).filter(_.nonEmpty).map(_.toInt)
-              .getOrElse(65536)
-            ftCols :+= c -> n
-          // CH vector_similarity('hnsw', 'cosine', …): this engine's ANN
-          // shape is IVF-PQ, so numeric args map to (nCells, m, k) and
-          // CH's quoted method/metric args are accepted and ignored
-          // (cosine IS the metric; hnsw has no Spark-native analog)
-          case "vector_similarity" =>
-            require(annIdx.isEmpty,
-              s"$name: at most one vector_similarity index per table")
-            val nums = Option(arg).toSeq.flatMap(_.split(","))
-              .map(_.trim.replaceAll("^'|'$", ""))
-              .filter(_.matches("\\d+")).map(_.toInt)
-            annIdx = Some(graft.catalog.AnnIndexDef(c,
-              nCells = nums.lift(0).getOrElse(16),
-              m = nums.lift(1).getOrElse(8),
-              k = nums.lift(2).getOrElse(16)))
-          case other => throw new IllegalArgumentException(
-            s"$name: unsupported skip-index type $other")
-        }
+        val k = graft.catalog.IndexKind.forType(kind).getOrElse(
+          throw new IllegalArgumentException(
+            s"$name: unsupported skip-index type ${kind.toLowerCase}"))
+        indexes :+= ((k, colName.replace("`", ""), indexArgs(arg)))
       case item if "(?is)^[`\\w]+\\s+Nested\\s*\\(".r
           .findFirstIn(item).isDefined =>
         // `n Nested(a T, b U)` — CH's arrays-of-structs idiom. Stored as
@@ -1073,12 +1038,10 @@ object ChDdl {
     // partition keys must not carry per-column codecs (createTable rule)
     codecs = codecs.filterNot { case (c, _) => partitionKeys.contains(c) }
 
-    var t = TableDef(name, path, schema, sortKeys, semantics,
-      partitionKeys = partitionKeys, indexCols = indexCols,
-      minmaxCols = minmaxCols, constraints = constraints.result(),
-      materializedCols = materialized.result(), tokenIndexCols = tokenCols,
-      columnCodecs = codecs, setIndexCols = setCols,
-      fullTextCols = ftCols, annIndex = annIdx, projections = projections)
+    var t = indexes.foldLeft(TableDef(name, path, schema, sortKeys, semantics,
+      partitionKeys = partitionKeys, constraints = constraints.result(),
+      materializedCols = materialized.result(), columnCodecs = codecs,
+      projections = projections)) { case (d, (k, c, args)) => k.add(d, c, args) }
     clauses.get("SAMPLE BY").foreach { sb =>
       t = Catalog.withSampleBy(t, keyList(sb).head)
     }
@@ -1659,6 +1622,15 @@ object ChDdl {
     ("(?is)^ADD\\s+INDEX\\s+(?:IF\\s+NOT\\s+EXISTS\\s+)?(\\w+)\\s+" +
       "([`\\w]+)\\s+TYPE\\s+(\\w+)(?:\\((.*?)\\))?" +
       "(?:\\s+GRANULARITY\\s+\\d+)?\\s*$").r
+  /** An INDEX TYPE's numeric arguments (set(N), full_text(N), the IVF-PQ
+    * triple); vector_similarity's quoted method/metric args are accepted
+    * and ignored.
+    */
+  private def indexArgs(arg: String): Seq[Int] =
+    Option(arg).toSeq.flatMap(_.split(","))
+      .map(_.trim.replaceAll("^'|'$", ""))
+      .filter(_.matches("\\d+")).map(_.toInt)
+
   private val dropIdxRe =
     "(?is)^DROP\\s+INDEX\\s+(IF\\s+EXISTS\\s+)?(\\w+)\\s*$".r
   private val matIdxRe = "(?is)^MATERIALIZE\\s+INDEX\\s+(\\w+)\\s*$".r
@@ -1726,13 +1698,7 @@ object ChDdl {
     case removeTtlRe() => RemoveTtlCmd
     case matTtlRe() => MaterializeTtlCmd
     case addIdxRe(idxName, colName, kind, arg) =>
-      // numeric args only (set(N) / full_text(N) / the IVF-PQ triple);
-      // vector_similarity's quoted method/metric args are accepted and
-      // ignored, the CREATE-time contract
-      val nums = Option(arg).toSeq.flatMap(_.split(","))
-        .map(_.trim.replaceAll("^'|'$", ""))
-        .filter(_.matches("\\d+")).map(_.toInt)
-      AddIndexCmd(idxName, colName.replace("`", ""), kind.toLowerCase, nums)
+      AddIndexCmd(idxName, colName.replace("`", ""), kind.toLowerCase, indexArgs(arg))
     case dropIdxRe(ifEx, idxName) => DropIndexCmd(idxName, ifEx != null)
     case matIdxRe(idxName) => MaterializeIndexCmd(idxName)
     case clearIdxRe(idxName) => ClearIndexCmd(idxName)
@@ -2028,15 +1994,8 @@ object ChDdl {
           // the user's name is advisory: the engine resolves DROP/
           // MATERIALIZE by the canonical spelling SHOW CREATE emits —
           // say so loudly when they differ, then proceed
-          val canonical = kind match {
-            case "bloom_filter" => s"bf_$column"
-            case "minmax" => s"mm_$column"
-            case "set" => s"set_$column"
-            case "tokenbf_v1" | "ngrambf_v1" => s"tok_$column"
-            case "full_text" | "inverted" | "gin" => s"ft_$column"
-            case "vector_similarity" => s"ann_$column"
-            case _ => idxName
-          }
+          val canonical = graft.catalog.IndexKind.forType(kind)
+            .fold(idxName)(_.name(column))
           if (idxName != canonical) System.err.println(
             s"[chddl] ADD INDEX $idxName: this engine names indexes " +
               s"canonically — registered as $canonical (use that name " +

@@ -183,16 +183,7 @@ object ChDdlRender {
       case (n, e) => s"  CONSTRAINT $n CHECK $e"
     }
     val idxLines =
-      t0.indexCols.map(c => s"  INDEX bf_$c $c TYPE bloom_filter GRANULARITY 1") ++
-      t0.minmaxCols.map(c => s"  INDEX mm_$c $c TYPE minmax GRANULARITY 1") ++
-      t0.setIndexCols.map { case (c, n) =>
-        s"  INDEX set_$c $c TYPE set($n) GRANULARITY 1" } ++
-      t0.tokenIndexCols.map(c => s"  INDEX tok_$c $c TYPE tokenbf_v1 GRANULARITY 1") ++
-      t0.fullTextCols.map { case (c, n) =>
-        s"  INDEX ft_$c $c TYPE full_text($n) GRANULARITY 1" } ++
-      t0.annIndex.toSeq.map(a =>
-        s"  INDEX ann_${a.column} ${a.column} TYPE " +
-          s"vector_similarity(${a.nCells}, ${a.m}, ${a.k}) GRANULARITY 1") ++
+      graft.catalog.IndexKind.all.flatMap(_.render(t0)) ++
       t0.projections.map {
         case graft.catalog.AggProjection(n, dims, sums) =>
           val items = dims ++ Seq("count()") ++ sums.map(c => s"sum($c)")

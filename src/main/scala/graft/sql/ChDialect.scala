@@ -4529,7 +4529,8 @@ object ChDialect {
     * key first. The unbounded form computes BOTH bounds in one aggregate
     * subquery over the `__fill_body` CTE, so the body evaluates exactly
     * twice (bounds + join source) instead of three times — Catalyst
-    * INLINES the CTE (observed: tools/FillPlanProbe), so the
+    * INLINES the CTE (observed in the optimized plan of a WITH FILL
+    * query: the body appears once per reference), so the
     * single-aggregate shape, not the CTE, is what bounds the work.
     *
     * INTERPOLATE (analyze hook required): `(c)` carries the last actual
