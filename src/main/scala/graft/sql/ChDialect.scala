@@ -6,6 +6,29 @@ package graft.sql
   * query-side idioms, rewritten token-by-token so `GraftSql.chSql` can
   * run CH-shaped text through the session's parser unchanged otherwise.
   *
+  * Two kinds of rewrite, in this order per statement:
+  *   - STATEMENT SYNTAX stays text rewrites over the masked statement:
+  *     SETTINGS/FORMAT tails, expression-WITH, array literals, ASOF/ANY
+  *     JOIN, COLUMNS/APPLY, `* REPLACE`, OFFSET/FETCH, DISTINCT ON, WITH
+  *     TIES, QUALIFY, LIMIT BY, histogram, WITH FILL, SAMPLE,
+  *     system.numbers/numbers(), PREWHERE, GROUP BY modifiers, ARRAY
+  *     JOIN, then EXPLAIN/PREWHERE/FINAL/GLOBAL and the CH type names of
+  *     `::Type` and `CAST(x AS Type)`; `* EXCEPT col` runs last.
+  *   - FUNCTION CALLS lower through ONE table ([[functions]]): each CH
+  *     function name (case-insensitive) is exactly one entry holding its
+  *     argument shape and its lowering from argument texts to Spark
+  *     text. One scan ([[lowerCalls]]) walks the statement once; at each
+  *     `name(` that is a key it lowers the ARGUMENTS FIRST (so a call
+  *     nested in a call of the same name lowers too), applies the entry,
+  *     and never rescans the entry's output — an entry that means
+  *     another entry's lowering spells it out itself. `fn(params)(args)`
+  *     is recognised for entries that take a parameter list. A call no
+  *     entry shape accepts fails with the one arity error,
+  *     `<fn> expects <shape>, got <n>`. Entries that read a string
+  *     literal (formatDateTime, format, dateDiff, the regex family, …)
+  *     see it through the statement's literal store; a pattern that must
+  *     be TRANSLATED is rewritten in its slot at most once.
+  *
   * Supported rewrites:
   *   - `count()` → `count(*)`; `countIf(p)` → `count_if(p)`;
   *     `sumIf(x, p)` → `sum(CASE WHEN p THEN x ELSE 0 END)`;
@@ -211,8 +234,8 @@ package graft.sql
   *     (hash stance), `currentDatabase()` → 'default', `hostName()` →
   *     'localhost', `randConstant()` → a scalar subquery (constant per
   *     query, exactly CH's contract)
-  *   - everyday tier 7 (round 14, fourth audit — doc on
-  *     [[rewriteTier7]]): sub-second `toStartOfSecond/Milli/Microsecond`,
+  *   - everyday tier 7 (round 14, fourth audit): sub-second
+  *     `toStartOfSecond/Milli/Microsecond`,
   *     `nthValue`, `formatDateTime` %b/%k/%l/%z slots,
   *     `formatDateTimeInJodaSyntax`, `timeSlots`, the
   *     `dateAdd/dateSub/timestampAdd/timestampSub` call shapes,
@@ -266,17 +289,11 @@ object ChDialect {
   def rewrite(query: String,
               analyze: Option[String => Seq[String]]): String = {
     val (masked, lits0) = maskLiterals(query)
-    // MUTABLE literal store: a rewrite that must transform a literal's
-    // CONTENT (formatDateTime's %-pattern → the Spark datetime pattern)
-    // edits its slot here — the only place literal bytes are ever touched,
-    // and only for that documented call shape
-    val literals = lits0.toArray
+    val literals = new Literals(lits0)
     // the analyzer sees RESTORED text: the body fragment handed to it
     // still carries literal-mask sentinels, which no parser accepts
-    val unmasked = analyze.map(f =>
-      (b: String) => f(restoreLiterals(b, literals.toVector)))
-    val rewritten = rewriteSegment(masked, unmasked, literals)
-    restoreLiterals(rewritten, literals.toVector)
+    val unmasked = analyze.map(f => (b: String) => f(literals.restore(b)))
+    literals.restore(rewriteSegment(masked, unmasked, literals))
   }
 
   // literals are MASKED (swapped for <idx> tokens) before any
@@ -288,10 +305,8 @@ object ChDialect {
   // literals across Scala versions — a char literal is unambiguous
   private val Sentinel: Char = 1.toChar
 
-  // compiled-pattern memo: rewriteSegment runs ~200 per-function passes
-  // per STATEMENT, and Pattern.compile per pass dominated fixture-heavy
-  // gates once tier 4 landed (round-12 isolation finding) — compile each
-  // call-shape regex once per process instead
+  // compiled-pattern memo for the statement-syntax regexes built from
+  // interpolated text: compile each once per process, not per statement
   private val reCache =
     new java.util.concurrent.ConcurrentHashMap[String, scala.util.matching.Regex]()
   private def cachedRe(pattern: String): scala.util.matching.Regex = {
@@ -327,11 +342,9 @@ object ChDialect {
     (out.toString, lits.result())
   }
 
-  private def restoreLiterals(s: String, lits: Vector[String]): String =
-    (Sentinel + "(\\d+)" + Sentinel).r.replaceAllIn(s, m =>
-      scala.util.matching.Regex.quoteReplacement(lits(m.group(1).toInt)))
-
-  private val simpleReplacements: Seq[(scala.util.matching.Regex, String)] = Seq(
+  /** Statement syntax that stays text: EXPLAIN variants, the PREWHERE/
+    * FINAL/GLOBAL modifiers and the `::Type` cast names. */
+  private val syntaxReplacements: Seq[(scala.util.matching.Regex, String)] = Seq(
     // CH EXPLAIN variants → Spark's native EXPLAIN statement (plan rows
     // come back as the result set, like CH): PLAN is the default logical/
     // physical dump, PIPELINE (CH's executor-graph view) maps to
@@ -339,69 +352,6 @@ object ChDialect {
     // answer Spark has to "what will actually execute"
     ("(?i)\\bEXPLAIN\\s+PLAN\\b".r, "EXPLAIN"),
     ("(?i)\\bEXPLAIN\\s+PIPELINE\\b".r, "EXPLAIN FORMATTED"),
-    ("(?i)\\bcount\\(\\s*\\)".r, "count(*)"),
-    ("(?i)\\bcountIf\\(".r, "count_if("),
-    ("(?i)\\barrayJoin\\(".r, "explode("),
-    ("(?i)\\banyLast\\(".r, "any_value("),
-    ("(?i)\\bany\\(".r, "any_value("),
-    // everyday scalar/aggregate renames with identical argument shapes
-    ("(?i)\\bdateTrunc\\(".r, "date_trunc("),
-    ("(?i)\\bargMax\\(".r, "max_by("),
-    ("(?i)\\bargMin\\(".r, "min_by("),
-    ("(?i)\\bgroupArray\\(".r, "collect_list("),
-    ("(?i)\\bgroupUniqArray\\(".r, "collect_set("),
-    ("(?i)\\bhas\\(".r, "array_contains("),
-    ("(?i)\\bindexOf\\(".r, "array_position("),
-    ("(?i)\\barrayReverse\\(".r, "reverse("),
-    ("(?i)\\barraySort\\(".r, "array_sort("),
-    ("(?i)\\barrayFlatten\\(".r, "flatten("),
-    ("(?i)\\barrayConcat\\(".r, "concat("),
-    ("(?i)\\barrayDistinct\\(".r, "array_distinct("),
-    // try_: CH's out-of-bounds arrayElement yields the type default —
-    // NULL here (the documented stance); ANSI element_at would throw
-    ("(?i)\\barrayElement\\(".r, "try_element_at("),
-    ("(?i)\\barrayPushBack\\(".r, "array_append("),
-    ("(?i)\\barrayPushFront\\(".r, "array_prepend("),
-    ("(?i)\\barrayZip\\(".r, "arrays_zip("),
-    // everyday string tier: literal replace, regex replace/match, affix
-    // probes, padding, one-sided trims — plain renames (same arg order)
-    ("(?i)\\breplaceAll\\(".r, "replace("),
-    // (replaceRegexpAll / match rewrite in rewriteSegment — their
-    // PATTERN literals are inspected for Java-vs-RE2 divergence first)
-    ("(?i)\\bstartsWith\\(".r, "startswith("),
-    ("(?i)\\bendsWith\\(".r, "endswith("),
-    ("(?i)\\bleftPad\\(".r, "lpad("),
-    ("(?i)\\brightPad\\(".r, "rpad("),
-    ("(?i)\\btrimLeft\\(".r, "ltrim("),
-    ("(?i)\\btrimRight\\(".r, "rtrim("),
-    ("(?i)\\btrimBoth\\(".r, "trim("),
-    ("(?i)\\bsubstringUTF8\\(".r, "substring("),
-    ("(?i)\\blowerUTF8\\(".r, "lower("),
-    ("(?i)\\bupperUTF8\\(".r, "upper("),
-    ("(?i)\\bconcatWithSeparator\\(".r, "concat_ws("),
-    // map accessors over MAP columns
-    ("(?i)\\bmapKeys\\(".r, "map_keys("),
-    ("(?i)\\bmapValues\\(".r, "map_values("),
-    ("(?i)\\bmapContains\\(".r, "map_contains_key("),
-    ("(?i)\\blengthUTF8\\(".r, "char_length("),
-    ("(?i)\\buniq\\(".r, "approx_count_distinct("),
-    ("(?i)\\bcityHash64\\(".r, "xxhash64("),
-    ("(?i)\\bsipHash64\\(".r, "xxhash64("),
-    ("(?i)\\btoUnixTimestamp\\(".r, "unix_timestamp("),
-    ("(?i)\\bfromUnixTimestamp\\(".r, "from_unixtime("),
-    ("(?i)\\btoDate\\(".r, "to_date("),
-    ("(?i)\\btoYear\\(".r, "year("),
-    ("(?i)\\btoMonth\\(".r, "month("),
-    ("(?i)\\btoDayOfMonth\\(".r, "dayofmonth("),
-    ("(?i)\\btoHour\\(".r, "hour("),
-    ("(?i)\\btoMinute\\(".r, "minute("),
-    ("(?i)\\btoSecond\\(".r, "second("),
-    ("(?i)\\btoQuarter\\(".r, "quarter("),
-    ("(?i)\\btoDayOfYear\\(".r, "dayofyear("),
-    ("(?i)\\bnow\\(\\s*\\)".r, "current_timestamp()"),
-    ("(?i)\\btoday\\(\\s*\\)".r, "current_date()"),
-    ("(?i)\\byesterday\\(\\s*\\)".r, "date_sub(current_date(), 1)"),
-    ("(?i)\\bgenerateUUIDv4\\(\\s*\\)".r, "uuid()"),
     ("(?i)\\bPREWHERE\\b".r, "WHERE"),
     ("(?i)\\bFINAL\\b".r, ""),
     // GLOBAL IN — like GLOBAL JOIN, a CH distributed-execution hint
@@ -409,81 +359,6 @@ object ChDialect {
     // that call itself, so the keyword simply drops
     ("(?i)\\bGLOBAL\\s+NOT\\s+IN\\b".r, "NOT IN"),
     ("(?i)\\bGLOBAL\\s+IN\\b".r, "IN"),
-    // ——— everyday tier 4 (round 12, second pass) ———
-    // moment-aggregate renames (same formulas both engines; kurtPop is
-    // the call-shape exception below — CH is non-excess kurtosis)
-    ("(?i)\\bstddevPop\\(".r, "stddev_pop("),
-    ("(?i)\\bstddevSamp\\(".r, "stddev_samp("),
-    ("(?i)\\bvarPop\\(".r, "var_pop("),
-    ("(?i)\\bvarSamp\\(".r, "var_samp("),
-    ("(?i)\\bcovarPop\\(".r, "covar_pop("),
-    ("(?i)\\bcovarSamp\\(".r, "covar_samp("),
-    ("(?i)\\bskewPop\\(".r, "skewness("),
-    ("(?i)\\bgroupBitAnd\\(".r, "bit_and("),
-    ("(?i)\\bgroupBitOr\\(".r, "bit_or("),
-    ("(?i)\\bgroupBitXor\\(".r, "bit_xor("),
-    // the uniq sketch family all map onto Spark's HLL++ (the uniq →
-    // approx_count_distinct stance: same role, different sketch — do
-    // not compare estimates across engines)
-    ("(?i)\\buniqCombined64\\(".r, "approx_count_distinct("),
-    ("(?i)\\buniqCombined\\(".r, "approx_count_distinct("),
-    ("(?i)\\buniqHLL12\\(".r, "approx_count_distinct("),
-    ("(?i)\\buniqTheta\\(".r, "approx_count_distinct("),
-    // exact mode where CH's is an approximate heavy-hitter — the value
-    // CH "usually" returns is the one this always returns
-    ("(?i)\\banyHeavy\\(".r, "mode("),
-    // scalar renames (same argument shapes)
-    ("(?i)\\bmapFromArrays\\(".r, "map_from_arrays("),
-    ("(?i)\\barrayIntersect\\(".r, "array_intersect("),
-    ("(?i)\\bhasAny\\(".r, "arrays_overlap("),
-    ("(?i)\\bbitShiftLeft\\(".r, "shiftleft("),
-    ("(?i)\\bbitShiftRight\\(".r, "shiftright("),
-    ("(?i)\\bbitCount\\(".r, "bit_count("),
-    ("(?i)\\bmakeDate\\(".r, "make_date("),
-    ("(?i)\\bmakeDateTime\\(".r, "make_timestamp("),
-    ("(?i)\\btoLastDayOfMonth\\(".r, "last_day("),
-    ("(?i)\\btoValidUTF8\\(".r, "make_valid_utf8("),
-    // JSON_VALUE's '$.k' path IS get_json_object's path grammar
-    ("(?i)\\bJSON_VALUE\\(".r, "get_json_object("),
-    // 64-bit hash stance (the cityHash64 note): same bucketing role,
-    // hash VALUES differ — do not compare digests across engines
-    ("(?i)\\bfarmHash64\\(".r, "xxhash64("),
-    ("(?i)\\bfarmFingerprint64\\(".r, "xxhash64("),
-    ("(?i)\\bhalfMD5\\(".r, "xxhash64("),
-    ("(?i)\\bcurrentUser\\(".r, "current_user("),
-    // ——— everyday tier 7 renames (round 14) ———
-    // window-function dialect spelling; Spark's nth_value is the same
-    ("(?i)\\bnthValue\\(".r, "nth_value("),
-    // Levenshtein: identical metric both engines (editDistance is CH's
-    // alias; the UTF8 spellings coincide — Spark strings are UTF-8)
-    ("(?i)\\blevenshteinDistance\\(".r, "levenshtein("),
-    ("(?i)\\beditDistanceUTF8\\(".r, "levenshtein("),
-    ("(?i)\\beditDistance\\(".r, "levenshtein("),
-    ("(?i)\\bwidthBucket\\(".r, "width_bucket("),
-    ("(?i)\\bleftUTF8\\(".r, "left("),
-    ("(?i)\\brightUTF8\\(".r, "right("),
-    // RFC variants share the lowering with their plain spellings (both
-    // ride parse_url probes downstream; RFC-3986 edge inputs may parse
-    // host-less here — the scheme-less stance of the URL family)
-    ("(?i)\\bdomainRFC\\(".r, "domain("),
-    ("(?i)\\bdomainWithoutWWWRFC\\(".r, "domainWithoutWWW("),
-    ("(?i)\\btopLevelDomainRFC\\(".r, "topLevelDomain("),
-    // the Form spellings ARE application/x-www-form-urlencoded — exactly
-    // Spark's url_encode/url_decode contract
-    ("(?i)\\bencodeURLFormComponent\\(".r, "url_encode("),
-    ("(?i)\\bdecodeURLFormComponent\\(".r, "url_decode("),
-    ("(?i)\\bUTCTimestamp\\(\\s*\\)".r, "current_timestamp()"),
-    // no block granularity in a declarative plan: per-query now() IS
-    // the per-block now() (documented collapse)
-    ("(?i)\\bnowInBlock\\(\\s*\\)".r, "current_timestamp()"),
-    // flat namespace (SHOW DATABASES lists default+system): the session
-    // database is the constant 'default'; hostName is the single-JVM
-    // analog's stand-in (no cluster hostnames to report)
-    ("(?i)\\bcurrentDatabase\\(\\s*\\)".r, "'default'"),
-    ("(?i)\\bhostName\\(\\s*\\)".r, "'localhost'"),
-    // constant-per-query random: exactly a scalar subquery's contract
-    ("(?i)\\brandConstant\\(\\s*\\)".r, "(SELECT rand())"),
-    ("(?i)\\btuple\\(".r, "struct("),
     // :: type names — Spark parses the cast syntax itself; unsigned
     // widths map UP so every legal CH value fits
     ("::\\s*(?i:UInt8)\\b".r, "::SMALLINT"),
@@ -504,6 +379,61 @@ object ChDialect {
     // constraints) — the in-query cast itself is the string identity
     ("::\\s*(?i:Enum8)\\s*\\([^)]*\\)".r, "::STRING"),
     ("::\\s*(?i:Date)\\b".r, "::DATE"))
+
+  /** `CAST(x AS Float64)` / `CAST(x, 'Float64')` — CH type names inside
+    * the CAST grammar itself (the `::` table's call-shaped sibling, type
+    * syntax like it). Only the type token after the LAST top-level ` AS `
+    * translates; Spark type names pass through untouched, and nested
+    * CASTs translate too. The type's parens may NEST
+    * (Nullable(LowCardinality(Int32))) — two levels suffice for the
+    * wrapper algebra this dialect accepts.
+    */
+  private def translateCasts(text: String, lits: Literals): String =
+    cachedRe("(?i)\\bCAST\\s*\\(").findFirstMatchIn(text) match {
+      case None => text
+      case Some(m) =>
+        val (args0, end) = balancedArgs(text, text.indexOf('(', m.start))
+        val args = args0.map(translateCasts(_, lits))
+        val repl = args match {
+          case List(single) => single match {
+            case castAsRe(head, ty) => s"CAST($head${chCastType(ty)})"
+            case other => s"CAST($other)"
+          }
+          // CH's 2-argument CAST(x, 'Type') form — a non-literal second
+          // piece is a comma inside an angle-bracket type (MAP<K, V>),
+          // which balancedArgs can't see: reassemble untouched
+          case List(x, t) if lits.value(t).isDefined =>
+            s"CAST($x AS ${chTypeOf("CAST", lits.value(t))})"
+          case parts => s"CAST(${parts.mkString(", ")})"
+        }
+        text.substring(0, m.start) + repl +
+          translateCasts(text.substring(end), lits)
+    }
+
+  private val castAsRe = ("(?is)^(.+\\s+AS\\s+)([A-Za-z0-9_]+" +
+    "(?:\\((?:[^()]|\\([^()]*\\))*\\))?)\\s*$").r
+
+  private def chCastType(tok: String): String = {
+    val t = tok.trim
+    val base = t.takeWhile(_ != '(').trim.toLowerCase
+    def inner = {
+      val o = t.indexOf('(')
+      t.substring(o + 1, t.lastIndexOf(')')).trim
+    }
+    base match {
+      case "enum8" | "enum16" => "STRING"
+      case "datetime" | "datetime64" => "TIMESTAMP"
+      // the parameterized wrappers: Nullable collapses — every Spark
+      // type is nullable; LowCardinality is a storage encoding, not a
+      // type; Array recurses; FixedString's width is a storage property
+      // (the padded compare belongs to columns DECLARED FixedString)
+      case "nullable" | "lowcardinality" if t.contains('(') =>
+        chCastType(inner)
+      case "array" if t.contains('(') => s"ARRAY<${chCastType(inner)}>"
+      case "fixedstring" => "STRING"
+      case _ => chTypeMap.getOrElse(base, tok) // Spark names pass through
+    }
+  }
 
   /** The `SAMPLE BY` declarations for the TESTDATA tables — the DDL side
     * of CH sampling, which lives in CREATE TABLE there and in this map
@@ -600,7 +530,7 @@ object ChDialect {
     */
   private def rewriteColumnsSelector(s: String,
       analyze: Option[String => Seq[String]],
-      literals: Array[String]): String = {
+      literals: Literals): String = {
     val m = cachedRe("(?i)\\bCOLUMNS\\s*\\(").findFirstMatchIn(s)
       .getOrElse(return s)
     val probe = analyze.getOrElse(return s) // schema-blind: refusal downstream
@@ -615,8 +545,8 @@ object ChDialect {
     val (args, afterParen) = balancedArgs(s, s.indexOf('(', m.start))
     require(args.size == 1, "COLUMNS('regex'): exactly one pattern")
     // no String.trim: the literal-mask sentinel is \x01, which trim
-    // strips — maskedLiteral wtrims whitespace itself
-    val pat = maskedLiteral(args.head, literals).getOrElse(
+    // strips — Literals.value wtrims whitespace itself
+    val pat = literals.value(args.head).getOrElse(
       throw new IllegalArgumentException(
         "COLUMNS(…): the pattern must be a string literal"))
     // trailing APPLY chain: APPLY fn | APPLY (fn), innermost first
@@ -676,7 +606,7 @@ object ChDialect {
     */
   private def rewriteStarApply(s: String,
       analyze: Option[String => Seq[String]],
-      literals: Array[String]): String = {
+      literals: Literals): String = {
     val m = cachedRe("(?is)(?<![.\\w])\\*\\s*" +
       "(?:EXCEPT\\s*(?:\\(([^)]*)\\)|([A-Za-z_]\\w*))\\s*)?" +
       "(?=APPLY\\b)").findFirstMatchIn(s).getOrElse(return s)
@@ -1386,26 +1316,6 @@ object ChDialect {
       scala.util.matching.Regex.quoteReplacement(rewritten)
     })
 
-  private val truncUnits = Seq(
-    "toStartOfDay" -> "DAY", "toStartOfHour" -> "HOUR",
-    "toStartOfMinute" -> "MINUTE",
-    // sub-second family: sessions run MICROSECOND timestamps, so
-    // toStartOfMicrosecond is the identity-precision floor (Spark's
-    // date_trunc supports all three sub-second units natively)
-    "toStartOfSecond" -> "SECOND",
-    "toStartOfMillisecond" -> "MILLISECOND",
-    "toStartOfMicrosecond" -> "MICROSECOND",
-    "toStartOfWeek" -> "WEEK", "toStartOfMonth" -> "MONTH",
-    "toStartOfQuarter" -> "QUARTER", "toStartOfYear" -> "YEAR")
-
-  // the fixed-width bucket family: no date_trunc unit exists for these, so
-  // they floor on the epoch-seconds grid (same math as toStartOfInterval)
-  private val fixedBuckets = Seq(
-    "toStartOfFiveMinutes" -> 300L, "toStartOfTenMinutes" -> 600L,
-    "toStartOfFifteenMinutes" -> 900L,
-    // timeSlot = CH's fixed half-hour bucket (same grid floor)
-    "timeSlot" -> 1800L)
-
   private val intervalArgRe = "(?is)^INTERVAL\\s+(\\d+)\\s+(\\w+)$".r
 
   private def intervalSeconds(arg: String, where: String): Long = {
@@ -1548,18 +1458,13 @@ object ChDialect {
   }
 
   private def rewriteSegment(seg0: String,
-                             analyze: Option[String => Seq[String]] = None,
-                             literals: Array[String] = Array.empty): String = {
+                             analyze: Option[String => Seq[String]],
+                             literals: Literals): String = {
     var s = seg0
-    // formatDateTime translates its %-mask literal IN ITS SLOT; when
-    // WITH-alias substitution duplicates an expression, both occurrences
-    // share ONE slot index — translate it exactly once (a second pass
-    // would see no '%' left and literal-quote the whole pattern)
-    val translatedSlots = scala.collection.mutable.Set.empty[Int]
     // statement-level LIMIT BY first (it re-nests the whole text), then
     // SAMPLE: its replacement emits a derived table whose text must
-    // not be re-scanned by the token passes below (it contains none of
-    // their tokens by construction, but ordering makes that a non-issue)
+    // not be re-scanned by the function table below (it contains none of
+    // its keys by construction, but ordering makes that moot)
     // FORMAT first: it is statement-trailing text the other statement-
     // level rewrites (LIMIT BY, WITH FILL) must not see as their tail
     s = formatTailRe.replaceAllIn(s, "")
@@ -1572,7 +1477,7 @@ object ChDialect {
     s = rewriteArrayLiterals(s)
     // `GLOBAL <kind> JOIN` — CH's ship-the-build-side distributed hint;
     // single-process execution IS global (the GLOBAL IN stance at
-    // simpleReplacements). Dropped BEFORE the join rewrites so the
+    // syntaxReplacements). Dropped BEFORE the join rewrites so the
     // keyword never parses as a table alias.
     s = ("(?i)\\bGLOBAL\\s+(?=(?:(?:LEFT|RIGHT|INNER|FULL|CROSS|ANY|" +
       "ALL|ASOF|SEMI|ANTI)\\s+)*JOIN\\b)").r.replaceAllIn(s, "")
@@ -1659,37 +1564,6 @@ object ChDialect {
         Option(lim.group(2)).map(_.toLong).getOrElse(0L)
       s = s.substring(0, m.start) + s"numbers($bound)" + s.substring(m.end)
     }
-    // remote()/cluster() table functions (round 13): in a
-    // single-process engine the cluster IS this process, so the
-    // reference lowers to the LOCAL table with a loud note — the ON
-    // CLUSTER stance applied to the read side. The egress family (url/
-    // s3/hdfs/…) refuses toward file(): zero external connectivity.
-    Seq("remoteSecure", "remote", "clusterAllReplicas", "cluster")
-      .foreach { fn =>
-        s = rewriteCall(s, fn, { args =>
-          require(args.length >= 2,
-            s"$fn(addresses|cluster, db[, table]): needs a target table")
-          def nameOf(tok: String): String =
-            maskedLiteral(tok, literals)
-              .getOrElse(tok.trim.replace("`", "")).split('.').last
-          // 2-arg form carries db.table in the second slot
-          val tbl = nameOf(if (args.length >= 3) args(2) else args(1))
-          System.err.println(s"[chsql] $fn(…): single-process engine — " +
-            s"the cluster is this process; reading local table $tbl " +
-            "(the ON CLUSTER stance)")
-          tbl
-        })
-      }
-    Seq("url", "s3", "s3Cluster", "hdfs", "azureBlobStorage", "gcs",
-      "mysql", "postgresql", "mongodb", "redis").foreach { fn =>
-      s = rewriteCall(s, fn, _ => throw new IllegalArgumentException(
-        s"$fn(…): no external connectivity in this environment — stage " +
-          "the data locally and read it with file(path[, format])"))
-    }
-    s = rewriteCall(s, "generateRandom",
-      _ => throw new IllegalArgumentException(
-        "generateRandom(…): nondeterministic generation — synthesize " +
-          "deterministic rows from numbers(N) + hash functions instead"))
     s = numbersRe.replaceAllIn(s, { m =>
       val (a, b) = (m.group(2), Option(m.group(3)))
       val (lo, cnt) = b match {
@@ -1735,537 +1609,12 @@ object ChDialect {
     }
     s = rewriteGroupMods(s)
     s = rewriteArrayJoin(s, 0)
-    simpleReplacements.foreach { case (re, to) =>
+    syntaxReplacements.foreach { case (re, to) =>
       s = re.replaceAllIn(s, _ => scala.util.matching.Regex
         .quoteReplacement(to))
     }
-    truncUnits.foreach { case (fn, unit) =>
-      s = cachedRe(s"(?i)\\b$fn\\(").replaceAllIn(s, _ => s"date_trunc('$unit', ")
-    }
-    // NOTE: the literal-splitting above means the date_trunc unit quote
-    // is inserted INTO a code segment — safe, because segments are
-    // joined verbatim and later passes in this method do not re-split
-    s = rewriteCall(s, "toYYYYMM",
-      args => s"CAST(date_format(${args.mkString(", ")}, 'yyyyMM') AS INT)")
-    s = rewriteCall(s, "sumIf", {
-      case List(x, p) => s"sum(CASE WHEN $p THEN $x ELSE 0 END)"
-      case args => throw new IllegalArgumentException(
-        s"sumIf expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "avgIf", {
-      case List(x, p) => s"avg(CASE WHEN $p THEN $x END)"
-      case args => throw new IllegalArgumentException(
-        s"avgIf expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "uniqExact",
-      args => s"count(DISTINCT ${args.mkString(", ")})")
-    // the rest of the everyday -If combinator family (sumIf/avgIf/
-    // maxIf/minIf/countIf are above/below): nulls from the CASE are
-    // what each Spark aggregate already skips
-    s = rewriteCall(s, "uniqIf", {
-      case List(x, p) => s"approx_count_distinct(CASE WHEN $p THEN $x END)"
-      case args => throw new IllegalArgumentException(
-        s"uniqIf expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "uniqExactIf", {
-      case List(x, p) => s"count(DISTINCT CASE WHEN $p THEN $x END)"
-      case args => throw new IllegalArgumentException(
-        s"uniqExactIf expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "anyIf", {
-      case List(x, p) => s"any_value(CASE WHEN $p THEN $x END, true)"
-      case args => throw new IllegalArgumentException(
-        s"anyIf expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "groupArrayIf", {
-      case List(x, p) => s"collect_list(CASE WHEN $p THEN $x END)"
-      case args => throw new IllegalArgumentException(
-        s"groupArrayIf expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "countDistinct",
-      args => s"count(DISTINCT ${args.mkString(", ")})")
-    // the CH higher-order array family: lambda-FIRST argument order swaps
-    // to Spark's array-first builtins (identical `x -> expr` lambda
-    // syntax both sides, so the lambda text passes through verbatim).
-    // All codegen-adjacent builtins — no UDFs.
-    s = rewriteCall(s, "arrayMap", {
-      case List(f, a) => s"transform($a, $f)"
-      case List(f, a, b) => s"zip_with($a, $b, $f)" // the 2-array lockstep
-      case args => throw new IllegalArgumentException(
-        s"arrayMap expects (lambda, arr[, arr2]), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayFilter", {
-      case List(f, a) => s"filter($a, $f)"
-      case args => throw new IllegalArgumentException(
-        s"arrayFilter expects (lambda, arr), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayExists", {
-      case List(f, a) => s"exists($a, $f)"
-      case args => throw new IllegalArgumentException(
-        s"arrayExists expects (lambda, arr), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayAll", {
-      case List(f, a) => s"forall($a, $f)"
-      case args => throw new IllegalArgumentException(
-        s"arrayAll expects (lambda, arr), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayCount", {
-      case List(f, a) => s"size(filter($a, $f))"
-      // the lambdaless form counts non-zero elements (CH's contract)
-      case List(a) => s"size(filter($a, __x -> __x != 0))"
-      case args => throw new IllegalArgumentException(
-        s"arrayCount expects (lambda, arr) or (arr), got ${args.length}")
-    })
-    // first match / its 1-based position; NO match: Spark NULL / 0 where
-    // CH yields the type default / 0 (the NULL-vs-default stance — wrap
-    // in coalesce where the default matters)
-    s = rewriteCall(s, "arrayFirst", {
-      case List(f, a) => s"try_element_at(filter($a, $f), 1)"
-      case args => throw new IllegalArgumentException(
-        s"arrayFirst expects (lambda, arr), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayFirstIndex", {
-      case List(f, a) => s"array_position(transform($a, $f), true)"
-      case args => throw new IllegalArgumentException(
-        s"arrayFirstIndex expects (lambda, arr), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayUniq", {
-      case List(a) => s"size(array_distinct($a))"
-      case args => throw new IllegalArgumentException(
-        s"arrayUniq expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "arraySlice", {
-      case List(a, off) => s"slice($a, $off, size($a))"
-      case List(a, off, len) => s"slice($a, $off, $len)"
-      case args => throw new IllegalArgumentException(
-        s"arraySlice expects (arr, offset[, length]), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayEnumerate", {
-      case List(a) => s"sequence(1, size($a))"
-      case args => throw new IllegalArgumentException(
-        s"arrayEnumerate expects 1 array, got ${args.length}")
-    })
-    // toStartOfInterval(ts, INTERVAL n unit) → epoch-grid floor (the
-    // arbitrary-width bucket date_trunc can't express); calendar units
-    // refuse loudly in intervalSeconds
-    s = rewriteCall(s, "toStartOfInterval", {
-      case List(x, iv) =>
-        val secs = intervalSeconds(iv, "toStartOfInterval")
-        s"timestamp_seconds((unix_timestamp($x) DIV $secs) * $secs)"
-      case args => throw new IllegalArgumentException(
-        s"toStartOfInterval expects (ts, INTERVAL n unit), got ${args.length}")
-    })
-    fixedBuckets.foreach { case (fn, secs) =>
-      s = rewriteCall(s, fn, {
-        case List(x) =>
-          s"timestamp_seconds((unix_timestamp($x) DIV $secs) * $secs)"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects 1 argument, got ${args.length}")
-      })
-    }
-    // formatDateTime(ts, '%…') → date_format(ts, <translated pattern>):
-    // the %-pattern literal is TRANSLATED IN ITS MASK SLOT (the only
-    // rewrite that edits literal bytes — doc on chDateTimeFormat); a
-    // computed format refuses loudly, CH dashboards always use a literal
-    s = rewriteCall(s, "formatDateTime", {
-      case List(x, f) =>
-        val tok = wtrim(f)
-        val sentRe = (Sentinel + "(\\d+)" + Sentinel).r
-        val idx = sentRe.findFirstMatchIn(tok) match {
-          case Some(sm) if sm.matched == tok => sm.group(1).toInt
-          case _ => throw new IllegalArgumentException(
-            "formatDateTime: the format argument must be a string literal")
-        }
-        if (translatedSlots.add(idx)) {
-          val raw = literals(idx)
-          val content = raw.substring(1, raw.length - 1).replace("''", "'")
-          literals(idx) =
-            "'" + chDateTimeFormat(content).replace("'", "''") + "'"
-        }
-        s"date_format($x, $tok)"
-      case args => throw new IllegalArgumentException(
-        s"formatDateTime expects (ts, 'format'), got ${args.length} " +
-          "argument(s) — the timezone form is not supported (session UTC)")
-    })
-    s = rewriteCall(s, "maxIf", {
-      case List(x, p) => s"max(CASE WHEN $p THEN $x END)"
-      case args => throw new IllegalArgumentException(
-        s"maxIf expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "minIf", {
-      case List(x, p) => s"min(CASE WHEN $p THEN $x END)"
-      case args => throw new IllegalArgumentException(
-        s"minIf expects 2 arguments, got ${args.length}")
-    })
-    // CH position(haystack, needle) swaps arguments vs Spark's locate;
-    // the ANSI form position(needle IN haystack) — which CH also accepts
-    // — arrives as ONE argument and both engines parse it natively, so
-    // it passes through unchanged
-    s = rewriteCall(s, "position", {
-      case List(h, n) => s"locate($n, $h)"
-      case List(h, n, start) => s"locate($n, $h, $start)"
-      case List(single) if "(?i)\\s+IN\\s+".r.findFirstIn(single).isDefined =>
-        s"position($single)"
-      case args => throw new IllegalArgumentException(
-        s"position expects 2-3 arguments, got ${args.length}")
-    })
-    // multiIf(c1, v1, c2, v2, …, else) → the CASE chain it abbreviates
-    s = rewriteCall(s, "multiIf", { args =>
-      require(args.length >= 3 && args.length % 2 == 1,
-        s"multiIf expects an odd argument count >= 3, got ${args.length}")
-      val whens = args.dropRight(1).grouped(2)
-        .map { case List(c, v) => s"WHEN $c THEN $v" }.mkString(" ")
-      s"(CASE $whens ELSE ${args.last} END)"
-    })
-    // function-form casts (the :: mapping's call-shaped siblings; unsigned
-    // widths map UP so every legal CH value fits, same as the :: table)
-    // toString(ts, 'tz') — CH's render-in-timezone form (the 1-arg cast
-    // stays in the family loop below, which then finds nothing left)
-    s = rewriteCall(s, "toString", {
-      case List(x, tz) => s"date_format(convert_timezone('UTC', $tz, " +
-        s"$x), 'yyyy-MM-dd HH:mm:ss')"
-      case List(x) => s"CAST($x AS STRING)"
-      case args => throw new IllegalArgumentException(
-        s"toString expects 1-2 arguments, got ${args.length}")
-    })
-    Seq("toString" -> "STRING", "toInt8" -> "TINYINT",
-      "toInt16" -> "SMALLINT", "toInt32" -> "INT", "toInt64" -> "BIGINT",
-      "toUInt8" -> "SMALLINT", "toUInt16" -> "INT", "toUInt32" -> "BIGINT",
-      "toUInt64" -> "BIGINT", "toFloat32" -> "FLOAT",
-      "toFloat64" -> "DOUBLE", "toDateTime" -> "TIMESTAMP")
-      .foreach { case (fn, ty) =>
-      s = rewriteCall(s, fn, {
-        case List(x) => s"CAST($x AS $ty)"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects 1 argument, got ${args.length}")
-      })
-    }
-    s = rewriteCall(s, "empty", {
-      case List(x) => s"($x = '')"
-      case args => throw new IllegalArgumentException(
-        s"empty expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "notEmpty", {
-      case List(x) => s"($x <> '')"
-      case args => throw new IllegalArgumentException(
-        s"notEmpty expects 1 argument, got ${args.length}")
-    })
-    // hasToken(col, 'tok') → token-membership under the ONE tokenizer
-    // constant the token skip index shares (Catalog.TokenSeparators), so
-    // the SQL predicate and the storage-side bloom can never disagree on
-    // what a token is (the quoted pattern lands in a code segment —
-    // safe, same reasoning as the date_trunc note above)
-    // splitByChar/splitByString(sep, s) → split(s, sep) — argument swap,
-    // separator regex-quoted through \Q…\E so a metachar separator ('.',
-    // '|') splits literally; the quoting concat lands in a code segment
-    // (safe — the date_trunc note above)
-    Seq("splitByChar", "splitByString").foreach { fn =>
-      s = rewriteCall(s, fn, {
-        case List(sep, str) => s"split($str, concat('\\\\Q', $sep, '\\\\E'))"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects 2 arguments, got ${args.length}")
-      })
-    }
-    s = rewriteCall(s, "intDiv", {
-      case List(a, b) => s"($a DIV $b)"
-      case args => throw new IllegalArgumentException(
-        s"intDiv expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "modulo", {
-      case List(a, b) => s"($a % $b)"
-      case args => throw new IllegalArgumentException(
-        s"modulo expects 2 arguments, got ${args.length}")
-    })
-    // ——— everyday tier 3 (round 12) — see the header doc table ———
-    // unit literals name grammar keywords, not values: extract the slot
-    // content (the formatDateTime discipline, read-only here)
-    val sentinelSlot = (Sentinel + "(\\d+)" + Sentinel).r
-    def litArg(tok0: String, where: String): String = {
-      val tok = wtrim(tok0)
-      sentinelSlot.findFirstMatchIn(tok) match {
-        case Some(sm) if sm.matched == tok =>
-          val raw = literals(sm.group(1).toInt)
-          raw.substring(1, raw.length - 1).replace("''", "'")
-        case _ => throw new IllegalArgumentException(
-          s"$where: the unit argument must be a string literal")
-      }
-    }
-    // dateDiff counts UNIT-BOUNDARY CROSSINGS (dateDiff('year', Dec 31,
-    // Jan 1) = 1) — each unit lowers to truncate-then-subtract, which is
-    // CH-exact; Spark's timestampdiff (complete units) would be wrong
-    s = rewriteCall(s, "dateDiff", {
-      case List(u, a, b) => litArg(u, "dateDiff").toLowerCase match {
-        case "second" => s"(unix_timestamp($b) - unix_timestamp($a))"
-        case "minute" =>
-          s"(unix_timestamp($b) DIV 60 - unix_timestamp($a) DIV 60)"
-        case "hour" =>
-          s"(unix_timestamp($b) DIV 3600 - unix_timestamp($a) DIV 3600)"
-        case "day" => s"datediff(to_date($b), to_date($a))"
-        case "week" =>
-          s"(datediff(date_trunc('week', $b), date_trunc('week', $a)) DIV 7)"
-        case "month" =>
-          s"((year($b) * 12 + month($b)) - (year($a) * 12 + month($a)))"
-        case "quarter" =>
-          s"((year($b) * 4 + quarter($b)) - (year($a) * 4 + quarter($a)))"
-        case "year" => s"(year($b) - year($a))"
-        case other => throw new IllegalArgumentException(
-          s"dateDiff: unsupported unit '$other'")
-      }
-      case args => throw new IllegalArgumentException(
-        s"dateDiff expects ('unit', start, end), got ${args.length} " +
-          "argument(s) — the timezone form is not supported (session UTC)")
-    })
-    // age = COMPLETE units between — exactly Spark's timestampdiff
-    val chIntervalUnits = Map(
-      "second" -> "SECOND", "minute" -> "MINUTE", "hour" -> "HOUR",
-      "day" -> "DAY", "week" -> "WEEK", "month" -> "MONTH",
-      "quarter" -> "QUARTER", "year" -> "YEAR")
-    s = rewriteCall(s, "age", {
-      case List(u, a, b) =>
-        val lit = litArg(u, "age").toLowerCase
-        val unit = chIntervalUnits.getOrElse(lit,
-          throw new IllegalArgumentException(s"age: unsupported unit '$lit'"))
-        s"timestampdiff($unit, $a, $b)"
-      case args => throw new IllegalArgumentException(
-        s"age expects ('unit', start, end), got ${args.length} argument(s)")
-    })
-    // addX/subtractX(x, n) → timestampadd(UNIT, ±n, x); a Date input
-    // widens to TIMESTAMP (CH keeps Date — cast back where it matters)
-    Seq("addYears" -> "YEAR", "addQuarters" -> "QUARTER",
-      "addMonths" -> "MONTH", "addWeeks" -> "WEEK", "addDays" -> "DAY",
-      "addHours" -> "HOUR", "addMinutes" -> "MINUTE",
-      "addSeconds" -> "SECOND").foreach { case (fn, unit) =>
-      s = rewriteCall(s, fn, {
-        case List(x, n) => s"timestampadd($unit, $n, $x)"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects (ts, n), got ${args.length} argument(s)")
-      })
-      val sub = "subtract" + fn.stripPrefix("add")
-      s = rewriteCall(s, sub, {
-        case List(x, n) => s"timestampadd($unit, -($n), $x)"
-        case args => throw new IllegalArgumentException(
-          s"$sub expects (ts, n), got ${args.length} argument(s)")
-      })
-    }
-    // ISO / Spark-default spellings only — CH's fuzzy multi-format
-    // guessing is NOT replicated (a non-ISO spelling errors, never
-    // guesses); OrNull keeps CH's null-on-unparseable contract
-    s = rewriteCall(s, "parseDateTimeBestEffortOrNull", {
-      case List(x) => s"try_to_timestamp($x)"
-      case args => throw new IllegalArgumentException(
-        s"parseDateTimeBestEffortOrNull expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "parseDateTimeBestEffort", {
-      case List(x) => s"to_timestamp($x)"
-      case args => throw new IllegalArgumentException(
-        s"parseDateTimeBestEffort expects 1 argument, got ${args.length}")
-    })
-    // ISO weekday (Monday=1 … Sunday=7) from Spark's Sunday=1 dayofweek
-    s = rewriteCall(s, "toDayOfWeek", {
-      case List(x) => s"(((dayofweek($x) + 5) % 7) + 1)"
-      case args => throw new IllegalArgumentException(
-        s"toDayOfWeek expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "median", {
-      case List(x) => s"percentile($x, 0.5)"
-      case args => throw new IllegalArgumentException(
-        s"median expects 1 argument, got ${args.length}")
-    })
-    // toTimeZone(ts, tz): sessions here run UTC, so the instant's
-    // wall-clock in tz IS convert_timezone('UTC', tz, ts). The result is
-    // a TZ-less timestamp (CH instead keeps the instant and re-renders —
-    // downstream date functions see the same wall-clock either way,
-    // which is what the call is for; documented divergence in kind)
-    s = rewriteCall(s, "toTimeZone", {
-      case List(x, tz) => s"convert_timezone('UTC', $tz, $x)"
-      case args => throw new IllegalArgumentException(
-        s"toTimeZone expects (ts, 'tz'), got ${args.length}")
-    })
-    s = rewriteCall(s, "toISOWeek", {
-      case List(x) => s"weekofyear($x)"
-      case args => throw new IllegalArgumentException(
-        s"toISOWeek expects 1 argument, got ${args.length}")
-    })
-    // ISO week-numbering year = the year of that week's Thursday
-    s = rewriteCall(s, "toISOYear", {
-      case List(x) => s"year(date_add(date_trunc('week', $x), 3))"
-      case args => throw new IllegalArgumentException(
-        s"toISOYear expects 1 argument, got ${args.length}")
-    })
-    // ops-readability renders: CH's fixed two-decimal spellings via
-    // format_string (argument inlined once per threshold — pass a
-    // column, not an expensive expression)
-    s = rewriteCall(s, "formatReadableSize", {
-      case List(b) =>
-        val d = s"CAST($b AS DOUBLE)"
-        s"(CASE WHEN abs($d) < 1024 THEN format_string('%.2f B', $d) " +
-          s"WHEN abs($d) < 1048576 THEN format_string('%.2f KiB', $d / 1024) " +
-          s"WHEN abs($d) < 1073741824 THEN format_string('%.2f MiB', $d / 1048576) " +
-          s"WHEN abs($d) < 1099511627776 THEN format_string('%.2f GiB', $d / 1073741824) " +
-          s"WHEN abs($d) < 1125899906842624 THEN format_string('%.2f TiB', $d / 1099511627776) " +
-          s"ELSE format_string('%.2f PiB', $d / 1125899906842624) END)"
-      case args => throw new IllegalArgumentException(
-        s"formatReadableSize expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "formatReadableQuantity", {
-      case List(n) =>
-        val d = s"CAST($n AS DOUBLE)"
-        s"(CASE WHEN abs($d) < 1000 THEN format_string('%.2f', $d) " +
-          s"WHEN abs($d) < 1000000 THEN format_string('%.2f thousand', $d / 1000) " +
-          s"WHEN abs($d) < 1000000000 THEN format_string('%.2f million', $d / 1000000) " +
-          s"WHEN abs($d) < 1000000000000 THEN format_string('%.2f billion', $d / 1000000000) " +
-          s"ELSE format_string('%.2f trillion', $d / 1000000000000) END)"
-      case args => throw new IllegalArgumentException(
-        s"formatReadableQuantity expects 1 argument, got ${args.length}")
-    })
-    // arithmetic array family: DOUBLE accumulation (CH widens the
-    // ELEMENT type; integer sums past 2^53 lose exactness here —
-    // documented trade); lambda forms map through transform first
-    def arrAggSum(a: String) =
-      s"aggregate($a, CAST(0 AS DOUBLE), (__acc, __v) -> __acc + __v)"
-    s = rewriteCall(s, "arraySum", {
-      case List(a) => arrAggSum(a)
-      case List(f, a) => arrAggSum(s"transform($a, $f)")
-      case args => throw new IllegalArgumentException(
-        s"arraySum expects ([lambda,] arr), got ${args.length} argument(s)")
-    })
-    s = rewriteCall(s, "arrayAvg", {
-      case List(a) =>
-        s"(CASE WHEN size($a) = 0 THEN CAST(NULL AS DOUBLE) " +
-          s"ELSE ${arrAggSum(a)} / size($a) END)"
-      case List(f, a) =>
-        s"(CASE WHEN size($a) = 0 THEN CAST(NULL AS DOUBLE) " +
-          s"ELSE ${arrAggSum(s"transform($a, $f)")} / size($a) END)"
-      case args => throw new IllegalArgumentException(
-        s"arrayAvg expects ([lambda,] arr), got ${args.length} argument(s)")
-    })
-    Seq("arrayMin" -> "array_min", "arrayMax" -> "array_max").foreach {
-      case (fn, to) =>
-        s = rewriteCall(s, fn, {
-          case List(a) => s"$to($a)"
-          case List(f, a) => s"$to(transform($a, $f))"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects ([lambda,] arr), got ${args.length} argument(s)")
-        })
-    }
-    // prefix sums via per-index aggregate(slice) — O(n²) in array
-    // length; arrays are row-local so this never rides a shuffle. The
-    // array argument is INLINED per element: pass a column, not an
-    // expensive expression
-    s = rewriteCall(s, "arrayCumSum", {
-      case List(a) =>
-        s"transform($a, (__e, __i) -> aggregate(slice($a, 1, __i + 1), " +
-          "CAST(0 AS DOUBLE), (__acc, __v) -> __acc + __v))"
-      case args => throw new IllegalArgumentException(
-        s"arrayCumSum expects 1 array, got ${args.length} argument(s)")
-    })
-    s = rewriteCall(s, "arrayDifference", {
-      case List(a) =>
-        s"transform($a, (__e, __i) -> CASE WHEN __i = 0 THEN " +
-          s"CAST(0 AS DOUBLE) ELSE CAST(__e AS DOUBLE) - " +
-          s"element_at($a, __i) END)"
-      case args => throw new IllegalArgumentException(
-        s"arrayDifference expects 1 array, got ${args.length} argument(s)")
-    })
-    // CH range is HALF-OPEN and empty-safe at n=0; sequence() is
-    // inclusive and DESCENDS when start > stop — slice to the exact
-    // half-open length so neither divergence leaks (a negative length
-    // errors loudly, matching CH's refusal of negative extents)
-    s = rewriteCall(s, "range", {
-      case List(n) =>
-        s"slice(sequence(0L, CAST($n AS BIGINT)), 1, CAST($n AS INT))"
-      case List(a, b) =>
-        s"slice(sequence(CAST($a AS BIGINT), CAST($b AS BIGINT)), 1, " +
-          s"greatest(CAST(($b) - ($a) AS INT), 0))"
-      case List(a, b, st) =>
-        s"slice(sequence(CAST($a AS BIGINT), CAST($b AS BIGINT), $st), 1, " +
-          s"greatest(CAST(ceil((CAST($b AS DOUBLE) - ($a)) / ($st)) AS INT), 0))"
-      case args => throw new IllegalArgumentException(
-        s"range expects (n) / (lo, hi[, step]), got ${args.length} argument(s)")
-    })
-    // URL family → parse_url probes (full URLs; scheme-less strings
-    // parse host-less here — CH's raw-text rules differ on those)
-    s = rewriteCall(s, "protocol", {
-      case List(u) => s"parse_url($u, 'PROTOCOL')"
-      case args => throw new IllegalArgumentException(
-        s"protocol expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "domainWithoutWWW", {
-      case List(u) =>
-        s"regexp_replace(parse_url($u, 'HOST'), '^www\\\\.', '')"
-      case args => throw new IllegalArgumentException(
-        s"domainWithoutWWW expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "domain", {
-      case List(u) => s"parse_url($u, 'HOST')"
-      case args => throw new IllegalArgumentException(
-        s"domain expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "topLevelDomain", {
-      case List(u) =>
-        s"regexp_extract(parse_url($u, 'HOST'), '\\\\.([^.]+)$$', 1)"
-      case args => throw new IllegalArgumentException(
-        s"topLevelDomain expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "pathFull", {
-      case List(u) => s"parse_url($u, 'FILE')"
-      case args => throw new IllegalArgumentException(
-        s"pathFull expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "path", {
-      case List(u) => s"parse_url($u, 'PATH')"
-      case args => throw new IllegalArgumentException(
-        s"path expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "queryString", {
-      case List(u) => s"parse_url($u, 'QUERY')"
-      case args => throw new IllegalArgumentException(
-        s"queryString expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "extractURLParameter", {
-      case List(u, k) => s"parse_url($u, 'QUERY', $k)"
-      case args => throw new IllegalArgumentException(
-        s"extractURLParameter expects (url, key), got ${args.length}")
-    })
-    // removes '?' through the query string, keeping any #fragment (CH)
-    s = rewriteCall(s, "cutQueryString", {
-      case List(u) => s"regexp_replace($u, '\\\\?[^#]*', '')"
-      case args => throw new IllegalArgumentException(
-        s"cutQueryString expects 1 argument, got ${args.length}")
-    })
-    // IPv4 render/parse: pure octet bit arithmetic — the argument is
-    // INLINED once per octet (pass a column, not an expensive expression)
-    s = rewriteCall(s, "IPv4NumToString", {
-      case List(n) =>
-        s"concat_ws('.', CAST(($n) DIV 16777216 % 256 AS STRING), " +
-          s"CAST(($n) DIV 65536 % 256 AS STRING), " +
-          s"CAST(($n) DIV 256 % 256 AS STRING), " +
-          s"CAST(($n) % 256 AS STRING))"
-      case args => throw new IllegalArgumentException(
-        s"IPv4NumToString expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "IPv4StringToNum", {
-      case List(x) =>
-        s"(CAST(element_at(split($x, '\\\\.'), 1) AS BIGINT) * 16777216 + " +
-          s"CAST(element_at(split($x, '\\\\.'), 2) AS BIGINT) * 65536 + " +
-          s"CAST(element_at(split($x, '\\\\.'), 3) AS BIGINT) * 256 + " +
-          s"CAST(element_at(split($x, '\\\\.'), 4) AS BIGINT))"
-      case args => throw new IllegalArgumentException(
-        s"IPv4StringToNum expects 1 argument, got ${args.length}")
-    })
-    // haversine METERS on the 6371008.8 m mean-radius sphere; CH's
-    // geoDistance applies an ellipsoid correction — metre-scale
-    // divergence on long paths (documented, same lowering)
-    Seq("greatCircleDistance", "geoDistance").foreach { fn =>
-      s = rewriteCall(s, fn, {
-        case List(lon1, lat1, lon2, lat2) =>
-          s"(asin(sqrt(pow(sin(radians(($lat2) - ($lat1)) / 2), 2) + " +
-            s"cos(radians($lat1)) * cos(radians($lat2)) * " +
-            s"pow(sin(radians(($lon2) - ($lon1)) / 2), 2))) * 2 * 6371008.8)"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects (lon1, lat1, lon2, lat2), got ${args.length}")
-      })
-    }
+    s = translateCasts(s, literals)
+    s = lowerCalls(s, literals)
     // CH allows `SELECT * EXCEPT col` (paren-less single column); Spark's
     // * EXCEPT requires the parenthesized list — normalize. Set-operation
     // EXCEPT can't directly follow `*` in either grammar, but the
@@ -2273,1980 +1622,7 @@ object ChDialect {
     s = ("(?i)\\*\\s+EXCEPT\\s+" +
       "(?!\\(|SELECT\\b|ALL\\b|DISTINCT\\b)([A-Za-z_][A-Za-z0-9_]*)").r
       .replaceAllIn(s, m => s"* EXCEPT (${m.group(1)})")
-    s = rewriteCall(s, "hasToken", {
-      case List(c, tok) =>
-        s"array_contains(split($c, '${graft.catalog.Catalog.TokenSeparators}'), $tok)"
-      case args => throw new IllegalArgumentException(
-        s"hasToken expects 2 arguments, got ${args.length}")
-    })
-    // JSONExtract* over the JSON/Variant column type → typed variant_get
-    // paths. CH's key arguments become the '$.a.b' path through a
-    // concat of literals (key literals are MASKED here — sentinel
-    // tokens — so the path is assembled relationally; concat-of-
-    // literals stays foldable, which variant_get's path requires, and a
-    // genuinely computed key still fails loudly there). The quoted '$.'
-    // and '.' separators land in a code segment — safe, the date_trunc
-    // note above.
-    Seq("JSONExtractString" -> "string", "JSONExtractInt" -> "bigint",
-      "JSONExtractUInt" -> "bigint", "JSONExtractFloat" -> "double",
-      "JSONExtractBool" -> "boolean").foreach { case (fn, ty) =>
-      s = rewriteCall(s, fn, {
-        case json :: keys if keys.nonEmpty =>
-          // strip(), not trim(): the masked-literal sentinel is a control
-          // char and trim() would eat it, orphaning the key literals
-          val path = keys.map(_.strip()).mkString(", '.', ")
-          s"variant_get($json, concat('$$.', $path), '$ty')"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects (json, key…), got ${args.length} argument(s)")
-      })
-    }
-    // regex family: CH evaluates RE2, Spark evaluates Java regex — these
-    // rewrites are valid on the RE2∩Java overlap. A literal pattern
-    // using a construct the engines DISAGREE on (Java-only
-    // backreferences / lookaround / atomic groups: valid here, an RE2
-    // error in CH) refuses loudly instead of silently diverging — the
-    // formatDateTime %M precedent. Computed patterns pass unchecked
-    // (nothing to inspect), same stance as the cityHash64→xxhash64 note.
-    def guardRegex(fn: String, tok: String): Unit =
-      maskedLiteral(tok, literals).foreach { pat =>
-        Seq("\\\\[1-9]" -> "a backreference",
-            "\\(\\?=" -> "lookahead", "\\(\\?!" -> "negative lookahead",
-            "\\(\\?<=" -> "lookbehind", "\\(\\?<!" -> "negative lookbehind",
-            "\\(\\?>" -> "an atomic group")
-          .collectFirst { case (re, what)
-              if re.r.findFirstIn(pat).isDefined => what }
-          .foreach(what => throw new IllegalArgumentException(
-            s"$fn pattern '$pat' uses $what — Java-only regex that " +
-              "ClickHouse's RE2 rejects, so the engines would disagree; " +
-              "rewrite the pattern in the shared RE2/Java subset"))
-      }
-    s = rewriteCall(s, "match", {
-      case List(h, p) =>
-        guardRegex("match", p)
-        s"regexp_like($h, $p)"
-      case args => throw new IllegalArgumentException(
-        s"match expects (haystack, pattern), got ${args.length}")
-    })
-    // CH replacement backrefs spell \1 (source text `\\1` or `\1`);
-    // Java's spell $1 — translate IN THE SLOT (the formatDateTime
-    // discipline, shared once-only set), re-escaping literal `$` so it
-    // survives both Spark's string unescape and Java's replacement
-    // parser. Computed replacements pass through untranslated.
-    def translateReplacement(tok: String): Unit = {
-      val t = wtrim(tok)
-      (Sentinel + "(\\d+)" + Sentinel).r.findFirstMatchIn(t) match {
-        case Some(sm) if sm.matched == t =>
-          val idx = sm.group(1).toInt
-          if (translatedSlots.add(idx)) {
-            val raw = literals(idx)
-            val content = raw.substring(1, raw.length - 1)
-            val sb = new StringBuilder
-            var i = 0
-            while (i < content.length) {
-              val c = content.charAt(i)
-              if (c == '\\' && i + 2 < content.length &&
-                  content.charAt(i + 1) == '\\' &&
-                  content.charAt(i + 2).isDigit) {
-                sb.append('$').append(content.charAt(i + 2)); i += 3
-              } else if (c == '\\' && i + 1 < content.length &&
-                  content.charAt(i + 1).isDigit) {
-                sb.append('$').append(content.charAt(i + 1)); i += 2
-              } else if (c == '$') { sb.append("\\\\$"); i += 1 }
-              else { sb.append(c); i += 1 }
-            }
-            literals(idx) = "'" + sb.toString + "'"
-          }
-        case _ => ()
-      }
-    }
-    s = rewriteCall(s, "replaceRegexpAll", {
-      case List(h, p, r) =>
-        guardRegex("replaceRegexpAll", p)
-        translateReplacement(r)
-        s"regexp_replace($h, $p, $r)"
-      case args => throw new IllegalArgumentException(
-        s"replaceRegexpAll expects (haystack, pattern, replacement), " +
-          s"got ${args.length}")
-    })
-    // ——— everyday tier 4 call shapes (round 12, second pass) ———
-    // extract/extractAll: CH takes the FIRST CAPTURE GROUP when the
-    // pattern declares one, the whole match otherwise — the group
-    // choice needs the literal pattern bytes (computed patterns refuse;
-    // the regex-dialect guard applies, same stance as match)
-    // does the literal pattern declare a CAPTURE group? A character-wise
-    // scan, not a regex sniff (round-13 ADVICE fix): backslash-escaped
-    // parens and parens inside character classes are NOT groups — the
-    // old '\\((?!\\?)' sniff counted them and made regexp_extract throw
-    // at runtime on group index 1 of a 0-group pattern
-    def hasCaptureGroup(pat: String): Boolean = {
-      var i = 0
-      var inClass = false
-      while (i < pat.length) {
-        pat.charAt(i) match {
-          case '\\' => i += 1 // skip the escaped char
-          case '[' if !inClass => inClass = true
-          case ']' if inClass => inClass = false
-          case '(' if !inClass =>
-            if (i + 1 >= pat.length || pat.charAt(i + 1) != '?') return true
-          case _ =>
-        }
-        i += 1
-      }
-      false
-    }
-    // the masked literal is SQL-SOURCE text; the regex engine sees the
-    // parser-unescaped VALUE ('a\\(b' source → a\(b value), so the scan
-    // must unescape first — Spark's rule: known controls map, any other
-    // backslash-pair drops the backslash
-    def sqlUnescape(raw: String): String = {
-      val b = new StringBuilder
-      var i = 0
-      while (i < raw.length) {
-        val c = raw.charAt(i)
-        if (c == '\\' && i + 1 < raw.length) {
-          b += (raw.charAt(i + 1) match {
-            case 'n' => '\n'; case 't' => '\t'; case 'r' => '\r'
-            case 'b' => '\b'
-            case other => other
-          })
-          i += 2
-        } else { b += c; i += 1 }
-      }
-      b.toString
-    }
-    def regexGroupIdx(fn: String, tok: String): Int =
-      maskedLiteral(tok, literals) match {
-        case Some(pat) =>
-          guardRegex(fn, tok)
-          if (hasCaptureGroup(sqlUnescape(pat))) 1 else 0
-        case None => throw new IllegalArgumentException(
-          s"$fn: the pattern must be a string literal (the whole-match-" +
-            "vs-first-group choice inspects it)")
-      }
-    s = rewriteCall(s, "extractAll", {
-      case List(h, p) =>
-        s"regexp_extract_all($h, $p, ${regexGroupIdx("extractAll", p)})"
-      case args => throw new IllegalArgumentException(
-        s"extractAll expects (haystack, 'pattern'), got ${args.length}")
-    })
-    s = rewriteCall(s, "extract", {
-      // the ANSI datetime-field form (extract(YEAR FROM ts)) — native
-      // to both engines, passes through
-      case List(single)
-          if "(?i)\\s+FROM\\s+".r.findFirstIn(single).isDefined =>
-        s"extract($single)"
-      case List(h, p) =>
-        s"regexp_extract($h, $p, ${regexGroupIdx("extract", p)})"
-      case args => throw new IllegalArgumentException(
-        s"extract expects (haystack, 'pattern') or (field FROM ts), " +
-          s"got ${args.length}")
-    })
-    s = rewriteCall(s, "multiSearchAny", {
-      case List(h, arr) => s"exists($arr, __n -> locate(__n, $h) > 0)"
-      case args => throw new IllegalArgumentException(
-        s"multiSearchAny expects (haystack, [needles…]), got ${args.length}")
-    })
-    // occurrence count via remove-and-measure (h inlined twice, n three
-    // times — pass columns, not expensive expressions)
-    s = rewriteCall(s, "countSubstrings", {
-      case List(h, n) =>
-        s"((length($h) - length(replace($h, $n))) DIV length($n))"
-      case args => throw new IllegalArgumentException(
-        s"countSubstrings expects (haystack, needle), got ${args.length}")
-    })
-    s = rewriteCall(s, "base64Encode", {
-      case List(x) => s"base64(CAST($x AS BINARY))"
-      case args => throw new IllegalArgumentException(
-        s"base64Encode expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "base64Decode", {
-      case List(x) => s"CAST(unbase64($x) AS STRING)"
-      case args => throw new IllegalArgumentException(
-        s"base64Decode expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "splitByWhitespace", {
-      case List(x) => s"filter(split($x, '\\\\s+'), __t -> __t <> '')"
-      case args => throw new IllegalArgumentException(
-        s"splitByWhitespace expects 1 argument, got ${args.length}")
-    })
-    // format('{} and {}', …) → format_string: the {}-mask literal
-    // translates IN ITS SLOT ({} → %s, {N} → %(N+1)$s, % → %% — the
-    // formatDateTime discipline, once per slot)
-    s = rewriteCall(s, "format", {
-      case f :: rest if rest.nonEmpty =>
-        val tok = wtrim(f)
-        val sentRe = (Sentinel + "(\\d+)" + Sentinel).r
-        val idx = sentRe.findFirstMatchIn(tok) match {
-          case Some(sm) if sm.matched == tok => sm.group(1).toInt
-          case _ => throw new IllegalArgumentException(
-            "format: the pattern argument must be a string literal")
-        }
-        if (translatedSlots.add(idx)) {
-          val raw = literals(idx)
-          val content = raw.substring(1, raw.length - 1).replace("''", "'")
-          val sb = new StringBuilder
-          var i = 0
-          while (i < content.length) {
-            val c = content.charAt(i)
-            if (c == '{') {
-              val close = content.indexOf('}', i)
-              require(close > i, s"format: unbalanced '{' in '$content'")
-              val inner = content.substring(i + 1, close)
-              if (inner.isEmpty) sb.append("%s")
-              else {
-                require(inner.forall(_.isDigit),
-                  s"format: unsupported placeholder '{$inner}'")
-                sb.append('%').append(inner.toInt + 1).append("$s")
-              }
-              i = close + 1
-            } else if (c == '%') { sb.append("%%"); i += 1 }
-            else { sb.append(c); i += 1 }
-          }
-          literals(idx) = "'" + sb.toString.replace("'", "''") + "'"
-        }
-        s"format_string($tok, ${rest.mkString(", ")})"
-      case args => throw new IllegalArgumentException(
-        s"format expects ('pattern', arg…), got ${args.length} argument(s)")
-    })
-    Seq("positionCaseInsensitiveUTF8", "positionCaseInsensitive")
-      .foreach { fn =>
-        s = rewriteCall(s, fn, {
-          case List(h, n) => s"locate(lower($n), lower($h))"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects (haystack, needle), got ${args.length}")
-        })
-      }
-    s = rewriteCall(s, "positionUTF8", {
-      case List(h, n) => s"locate($n, $h)"
-      case args => throw new IllegalArgumentException(
-        s"positionUTF8 expects (haystack, needle), got ${args.length}")
-    })
-    // STRING-JSON door (the Variant door is JSONExtract* above):
-    // simpleJSON*/visitParam* are CH's fast non-strict scanners — here
-    // they parse strictly via get_json_object (a document the scanner
-    // would mis-slice parses correctly instead; divergence is one-way).
-    // CH returns the TYPE DEFAULT on a miss — hence the coalesce.
-    Seq(("simpleJSONExtractString", "string", "''"),
-      ("visitParamExtractString", "string", "''"),
-      ("simpleJSONExtractInt", "bigint", "0"),
-      ("visitParamExtractInt", "bigint", "0"),
-      ("simpleJSONExtractUInt", "bigint", "0"),
-      ("visitParamExtractUInt", "bigint", "0"),
-      ("simpleJSONExtractFloat", "double", "0.0"),
-      ("visitParamExtractFloat", "double", "0.0"),
-      ("simpleJSONExtractBool", "boolean", "false"),
-      ("visitParamExtractBool", "boolean", "false")).foreach {
-      case (fn, ty, dflt) =>
-        s = rewriteCall(s, fn, {
-          case List(j, k) =>
-            s"coalesce(CAST(get_json_object($j, concat('$$.', " +
-              s"${k.strip()})) AS $ty), $dflt)"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects (json, key), got ${args.length}")
-        })
-    }
-    s = rewriteCall(s, "JSONHas", {
-      case json :: keys if keys.nonEmpty =>
-        val path = keys.map(_.strip()).mkString(", '.', ")
-        s"(get_json_object($json, concat('$$.', $path)) IS NOT NULL)"
-      case args => throw new IllegalArgumentException(
-        s"JSONHas expects (json, key…), got ${args.length} argument(s)")
-    })
-    s = rewriteCall(s, "JSONLength", {
-      case json :: keys =>
-        val e =
-          if (keys.isEmpty) json
-          else s"get_json_object($json, concat('$$.', " +
-            s"${keys.map(_.strip()).mkString(", '.', ")}))"
-        s"coalesce(json_array_length($e), size(json_object_keys($e)), 0)"
-      case args => throw new IllegalArgumentException(
-        s"JSONLength expects (json[, key…]), got ${args.length} argument(s)")
-    })
-    // ---- aggregate-combinator tier (round 13) ---------------------------
-    // State/Merge as TEXT — the ClickHouse MV idiom (partial states in a
-    // SELECT, merges over stored states), mapped to this engine's own
-    // partial forms: uniq's state is the HLL sketch binary (the
-    // agg_hll_merge machinery); sum/min/max states ARE their values
-    // (merging = re-aggregating); count's merge is a SUM of partials;
-    // avg's state is the (sum, count) pair.
-    s = rewriteCall(s, "uniqState",
-      args => s"hll_sketch_agg(${args.mkString(", ")})")
-    s = rewriteCall(s, "uniqMerge", {
-      case List(st) => s"hll_sketch_estimate(hll_union_agg($st))"
-      case args => throw new IllegalArgumentException(
-        s"uniqMerge expects 1 state column, got ${args.length}")
-    })
-    Seq("sumState" -> "sum", "sumMerge" -> "sum",
-      "minState" -> "min", "minMerge" -> "min",
-      "maxState" -> "max", "maxMerge" -> "max",
-      "countState" -> "count", "countMerge" -> "sum").foreach {
-      case (fn, base) =>
-        s = rewriteCall(s, fn, args => s"$base(${args.mkString(", ")})")
-    }
-    s = rewriteCall(s, "avgState", {
-      case List(x) => s"named_struct('s', sum($x), 'c', count($x))"
-      case args => throw new IllegalArgumentException(
-        s"avgState expects 1 argument, got ${args.length}")
-    })
-    // -StateIf: the combinators compose — state over the CASE filter
-    Seq("sumStateIf" -> "sum", "minStateIf" -> "min",
-      "maxStateIf" -> "max", "countStateIf" -> "count").foreach {
-      case (fn, base) =>
-        s = rewriteCall(s, fn, {
-          case List(x, cond) => s"$base(CASE WHEN $cond THEN $x END)"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects (x, cond), got ${args.length}")
-        })
-    }
-    s = rewriteCall(s, "uniqStateIf", {
-      case List(x, cond) => s"hll_sketch_agg(CASE WHEN $cond THEN $x END)"
-      case args => throw new IllegalArgumentException(
-        s"uniqStateIf expects (x, cond), got ${args.length}")
-    })
-    s = rewriteCall(s, "avgStateIf", {
-      case List(x, cond) =>
-        s"named_struct('s', sum(CASE WHEN $cond THEN $x END), " +
-          s"'c', count(CASE WHEN $cond THEN $x END))"
-      case args => throw new IllegalArgumentException(
-        s"avgStateIf expects (x, cond), got ${args.length}")
-    })
-    // MySQL-spelling alias CH accepts: same sorted-join lowering as
-    // groupConcat (the determinism stance)
-    s = rewriteCall(s, "GROUP_CONCAT", {
-      case List(x) =>
-        s"array_join(sort_array(collect_list(CAST($x AS STRING))), '')"
-      case args => throw new IllegalArgumentException(
-        s"GROUP_CONCAT expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "avgMerge", {
-      case List(st) => s"(sum(($st).s) / sum(($st).c))"
-      case args => throw new IllegalArgumentException(
-        s"avgMerge expects 1 state column, got ${args.length}")
-    })
-    // the remaining everyday -If spellings (the CASE-filter family)
-    s = rewriteCall(s, "countDistinctIf", {
-      case args if args.length >= 2 =>
-        val cond = args.last
-        s"count(DISTINCT ${args.init.map(a =>
-          s"CASE WHEN $cond THEN $a END").mkString(", ")})"
-      case args => throw new IllegalArgumentException(
-        s"countDistinctIf expects (x…, cond), got ${args.length}")
-    })
-    Seq("argMinIf" -> "min_by", "argMaxIf" -> "max_by").foreach {
-      case (fn, base) =>
-        s = rewriteCall(s, fn, {
-          case List(x, y, cond) =>
-            // null ordering values are skipped by min_by/max_by, so the
-            // CASE filter composes exactly like the scalar -If family
-            s"$base(CASE WHEN $cond THEN $x END, " +
-              s"CASE WHEN $cond THEN $y END)"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects (x, ord, cond), got ${args.length}")
-        })
-    }
-    s = rewriteCall(s, "medianIf", {
-      case List(x, cond) => s"percentile(CASE WHEN $cond THEN $x END, 0.5)"
-      case args => throw new IllegalArgumentException(
-        s"medianIf expects (x, cond), got ${args.length}")
-    })
-    s = rewriteParamAgg(s, "quantileIf") { (ps, args) =>
-      require(ps.length == 1 && args.length == 2,
-        "quantileIf(q)(x, cond)")
-      s"percentile(CASE WHEN ${args(1)} THEN ${args.head} END, ${ps.head})"
-    }
-    // -Distinct / -OrNull: DISTINCT is native inside Spark aggregates;
-    // Spark's sum/min/max/avg/any_value already return NULL on the
-    // empty set, which IS the -OrNull contract
-    s = rewriteCall(s, "sumDistinct",
-      args => s"sum(DISTINCT ${args.mkString(", ")})")
-    s = rewriteCall(s, "avgDistinct",
-      args => s"avg(DISTINCT ${args.mkString(", ")})")
-    Seq("sumOrNull" -> "sum", "minOrNull" -> "min", "maxOrNull" -> "max",
-      "avgOrNull" -> "avg", "anyOrNull" -> "any_value",
-      "anyLastOrNull" -> "any_value").foreach { case (fn, base) =>
-      s = rewriteCall(s, fn, args => s"$base(${args.mkString(", ")})")
-    }
-    s = rewriteCall(s, "medianOrNull",
-      args => s"percentile(${args.mkString(", ")}, 0.5)")
-    // -Array: the aggregate over every ELEMENT of the rows' arrays
-    s = rewriteCall(s, "sumArray", {
-      case List(a) => s"sum(${arrAggSum(a)})"
-      case args => throw new IllegalArgumentException(
-        s"sumArray expects 1 array column, got ${args.length}")
-    })
-    s = rewriteCall(s, "minArray", {
-      case List(a) => s"min(array_min($a))"
-      case args => throw new IllegalArgumentException(
-        s"minArray expects 1 array column, got ${args.length}")
-    })
-    s = rewriteCall(s, "maxArray", {
-      case List(a) => s"max(array_max($a))"
-      case args => throw new IllegalArgumentException(
-        s"maxArray expects 1 array column, got ${args.length}")
-    })
-    s = rewriteCall(s, "countArray", {
-      case List(a) => s"sum(size($a))"
-      case args => throw new IllegalArgumentException(
-        s"countArray expects 1 array column, got ${args.length}")
-    })
-    s = rewriteCall(s, "avgArray", {
-      case List(a) => s"(sum(${arrAggSum(a)}) / sum(size($a)))"
-      case args => throw new IllegalArgumentException(
-        s"avgArray expects 1 array column, got ${args.length}")
-    })
-
-    // ---- everyday tier 5 (round-13 audit sweep) -------------------------
-    // JSONExtractRaw/Keys/ArrayRaw: raw-TEXT extraction is string-shaped,
-    // so these ride the string door — the CAST(x AS STRING) front makes
-    // them accept BOTH String and JSON/Variant inputs (a variant renders
-    // its canonical JSON text; a string is a no-op cast). The typed
-    // JSONExtract* family stays on the Variant door above.
-    s = rewriteCall(s, "JSONExtractRaw", {
-      case json :: keys if keys.nonEmpty =>
-        val path = keys.map(_.strip()).mkString(", '.', ")
-        s"get_json_object(CAST($json AS STRING), concat('$$.', $path))"
-      case args => throw new IllegalArgumentException(
-        s"JSONExtractRaw expects (json, key…), got ${args.length}")
-    })
-    s = rewriteCall(s, "JSONExtractKeys", {
-      case json :: keys =>
-        val e =
-          if (keys.isEmpty) s"CAST($json AS STRING)"
-          else s"get_json_object(CAST($json AS STRING), concat('$$.', " +
-            s"${keys.map(_.strip()).mkString(", '.', ")}))"
-        s"json_object_keys($e)"
-      case Nil => throw new IllegalArgumentException(
-        "JSONExtractKeys expects (json[, key…])")
-    })
-    s = rewriteCall(s, "JSONExtractArrayRaw", {
-      case json :: keys =>
-        val e =
-          if (keys.isEmpty) s"CAST($json AS STRING)"
-          else s"get_json_object(CAST($json AS STRING), concat('$$.', " +
-            s"${keys.map(_.strip()).mkString(", '.', ")}))"
-        // sequence(0, -1) DESCENDS in Spark — the empty/missing case
-        // must short-circuit to array() before the index walk.
-        // DIVERGENCE: scalar STRING elements render unquoted (s, not
-        // "s") — get_json_object's scalar contract; objects/arrays/
-        // numbers come back as raw text like CH's
-        s"(CASE WHEN coalesce(json_array_length($e), 0) > 0 THEN " +
-          s"transform(sequence(0, json_array_length($e) - 1), " +
-          s"__i -> get_json_object($e, concat('$$[', CAST(__i AS STRING), " +
-          s"']'))) ELSE array() END)"
-      case Nil => throw new IllegalArgumentException(
-        "JSONExtractArrayRaw expects (json[, key…])")
-    })
-    // addDate/subDate: the interval spellings of the add/subtract family
-    s = rewriteCall(s, "addDate", {
-      case List(d0, iv) => s"($d0 + $iv)"
-      case args => throw new IllegalArgumentException(
-        s"addDate expects (date, INTERVAL…), got ${args.length}")
-    })
-    s = rewriteCall(s, "subDate", {
-      case List(d0, iv) => s"($d0 - $iv)"
-      case args => throw new IllegalArgumentException(
-        s"subDate expects (date, INTERVAL…), got ${args.length}")
-    })
-    s = rewriteCall(s, "toMillisecond",
-      args => s"CAST(date_format(${args.mkString(", ")}, 'SSS') AS INT)")
-    // order-dependent scan functions: the deltaSum stance — refuse
-    // loudly, name the window form with its explicit ordering
-    Seq(
-      "runningDifference" -> ("use value - lag(value) OVER (ORDER BY …) " +
-        "— the window form makes the ordering explicit"),
-      "runningAccumulate" -> ("use sum(…) OVER (ORDER BY … ROWS " +
-        "UNBOUNDED PRECEDING) — the window form makes the ordering " +
-        "explicit"),
-      "neighbor" -> "use lag/lead(value, n) OVER (ORDER BY …)")
-      .foreach { case (fn, alt) =>
-        s = rewriteCall(s, fn, _ => throw new IllegalArgumentException(
-          s"$fn: block-order dependent in ClickHouse with no " +
-            s"deterministic SQL twin — $alt"))
-      }
-    // map HOFs: CH is lambda-first, Spark map-first; mapUpdate's
-    // right-bias spells out as drop-overridden-then-concat
-    s = rewriteCall(s, "mapFilter", {
-      case List(lam, m) => s"map_filter($m, $lam)"
-      case args => throw new IllegalArgumentException(
-        s"mapFilter expects ((k, v) -> pred, map), got ${args.length}")
-    })
-    s = rewriteCall(s, "mapUpdate", {
-      case List(m1, m2) =>
-        s"map_concat(map_filter($m1, (__k, __v) -> " +
-          s"NOT array_contains(map_keys($m2), __k)), $m2)"
-      case args => throw new IllegalArgumentException(
-        s"mapUpdate expects (map, map), got ${args.length}")
-    })
-    s = rewriteCall(s, "mapApply", _ => throw new IllegalArgumentException(
-      "mapApply: the tuple-returning lambda has no textual split here — " +
-        "use transform_keys / transform_values (Spark's native map HOFs)"))
-    // array math tier: folds over the Spark HOFs (interpreted — fine for
-    // per-row small arrays; hot vector paths use the posexplode
-    // operators in graft.operators.Similarity)
-    s = rewriteCall(s, "arrayProduct", {
-      case List(a) => s"aggregate($a, CAST(1.0 AS DOUBLE), " +
-        s"(__s, __e) -> __s * CAST(__e AS DOUBLE))"
-      case args => throw new IllegalArgumentException(
-        s"arrayProduct expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayFold", {
-      case List(lam, arr, init) => s"aggregate($arr, $init, $lam)"
-      case args => throw new IllegalArgumentException(
-        s"arrayFold expects ((acc, x) -> …, array, init), got ${args.length}")
-    })
-    s = rewriteCall(s, "dotProduct", {
-      case List(a, b) =>
-        s"aggregate(zip_with($a, $b, (__x, __y) -> " +
-          s"CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE)), " +
-          s"CAST(0.0 AS DOUBLE), (__s, __e) -> __s + __e)"
-      case args => throw new IllegalArgumentException(
-        s"dotProduct expects 2 arrays, got ${args.length}")
-    })
-    s = rewriteCall(s, "L1Norm", {
-      case List(a) => s"aggregate($a, CAST(0.0 AS DOUBLE), " +
-        s"(__s, __e) -> __s + abs(CAST(__e AS DOUBLE)))"
-      case args => throw new IllegalArgumentException(
-        s"L1Norm expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "L2Norm", {
-      case List(a) => s"sqrt(aggregate($a, CAST(0.0 AS DOUBLE), " +
-        s"(__s, __e) -> __s + CAST(__e AS DOUBLE) * CAST(__e AS DOUBLE)))"
-      case args => throw new IllegalArgumentException(
-        s"L2Norm expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "cosineDistance", {
-      case List(a, b) =>
-        def dot(x: String, y: String) =
-          s"aggregate(zip_with($x, $y, (__x, __y) -> " +
-            s"CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE)), " +
-            s"CAST(0.0 AS DOUBLE), (__s, __e) -> __s + __e)"
-        s"(1.0 - ${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))"
-      case args => throw new IllegalArgumentException(
-        s"cosineDistance expects 2 arrays, got ${args.length}")
-    })
-    // multi-needle search
-    s = rewriteCall(s, "multiMatchAny", {
-      case List(h, pats) => s"exists($pats, __p -> $h RLIKE __p)"
-      case args => throw new IllegalArgumentException(
-        s"multiMatchAny expects (haystack, [patterns]), got ${args.length}")
-    })
-    s = rewriteCall(s, "multiSearchFirstIndex", {
-      case List(h, needles) =>
-        // CH returns the index of the needle whose occurrence is
-        // LEFTMOST in the haystack (not the first needle that matches
-        // anywhere); ties on position resolve to the lower index —
-        // array_position finds the first element equal to the min
-        def positions = s"transform($needles, __n -> locate(__n, $h))"
-        s"CAST(coalesce(array_position($positions, " +
-          s"array_min(filter($positions, __p -> __p > 0))), 0) AS INT)"
-      case args => throw new IllegalArgumentException(
-        s"multiSearchFirstIndex expects (haystack, [needles]), got ${args.length}")
-    })
-    s = rewriteCall(s, "countMatches", {
-      case List(h, p) =>
-        guardRegex("countMatches", p)
-        s"size(regexp_extract_all($h, $p, 0))"
-      case args => throw new IllegalArgumentException(
-        s"countMatches expects (haystack, 'pattern'), got ${args.length}")
-    })
-    // renames
-    s = rewriteCall(s, "substringIndex",
-      args => s"substring_index(${args.mkString(", ")})")
-    s = rewriteCall(s, "initcapUTF8",
-      args => s"initcap(${args.mkString(", ")})")
-    s = rewriteCall(s, "lagInFrame",
-      args => s"lag(${args.mkString(", ")})")
-    s = rewriteCall(s, "leadInFrame",
-      args => s"lead(${args.mkString(", ")})")
-    s = rewriteCall(s, "exp2",
-      args => s"power(CAST(2.0 AS DOUBLE), ${args.mkString(", ")})")
-    // uniqUpTo(N)(x): exact distinct count saturating at N+1 — CH's own
-    // return contract (the memory bound is CH-internal; count(DISTINCT)
-    // is this engine's exact path)
-    s = rewriteParamAgg(s, "uniqUpTo") { (ps, args) =>
-      require(ps.length == 1 && ps.head.trim.matches("\\d+"),
-        "uniqUpTo(N)(x): N must be an integer literal")
-      require(args.nonEmpty, "uniqUpTo(N)(x…): needs an expression")
-      s"least(count(DISTINCT ${args.mkString(", ")}), ${ps.head.trim} + 1)"
-    }
-    // ---- everyday tier 6b (round-13 third audit) ------------------------
-    // arrayStringConcat: the 1-arg form joins with the empty separator
-    s = rewriteCall(s, "arrayStringConcat", {
-      case List(a) => s"array_join($a, '')"
-      case List(a, sep) => s"array_join($a, $sep)"
-      case args => throw new IllegalArgumentException(
-        s"arrayStringConcat expects (arr[, sep]), got ${args.length}")
-    })
-    // indexHint evaluates its predicate here (CH skips granules and
-    // returns a SUPERSET; an exact filter is the deterministic choice —
-    // documented divergence: never MORE rows than CH, never fewer than
-    // the predicate names)
-    s = rewriteCall(s, "indexHint",
-      args => s"(${args.mkString(", ")})")
-    // Monday of ISO week 1 = the week containing Jan 4 of the ISO year
-    s = rewriteCall(s, "toStartOfISOYear", {
-      case List(x) =>
-        s"CAST(date_trunc('week', make_date(year(date_add(" +
-          s"date_trunc('week', $x), 3)), 1, 4)) AS DATE)"
-      case args => throw new IllegalArgumentException(
-        s"toStartOfISOYear expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "startsWithUTF8",
-      args => s"startswith(${args.mkString(", ")})")
-    s = rewriteCall(s, "endsWithUTF8",
-      args => s"endswith(${args.mkString(", ")})")
-    // the unit form of date_sub (the 2-arg day form is native Spark and
-    // passes through; a Date input widens to TIMESTAMP — the X129 stance)
-    s = rewriteCall(s, "date_sub", {
-      case List(u, n, d0)
-          if "(?i)^(YEAR|QUARTER|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND)$".r
-            .findFirstIn(u.trim).isDefined =>
-        s"timestampadd(${u.trim}, -($n), $d0)"
-      case args => s"date_sub(${args.mkString(", ")})"
-    })
-    // NULL-vs-default stance: CH's single element is the TYPE DEFAULT;
-    // a lineage-typed NULL is this engine's documented analog
-    s = rewriteCall(s, "emptyArrayToSingle", {
-      case List(a) =>
-        s"(CASE WHEN size($a) = 0 THEN array(try_element_at($a, 1)) " +
-          s"ELSE $a END)"
-      case args => throw new IllegalArgumentException(
-        s"emptyArrayToSingle expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "positiveModulo",
-      args => s"pmod(${args.mkString(", ")})")
-    s = rewriteCall(s, "intExp2", {
-      case List(n) => s"shiftleft(CAST(1 AS BIGINT), $n)"
-      case args => throw new IllegalArgumentException(
-        s"intExp2 expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "intExp10", {
-      case List(n) => s"CAST(round(power(10.0, $n)) AS BIGINT)"
-      case args => throw new IllegalArgumentException(
-        s"intExp10 expects 1 argument, got ${args.length}")
-    })
-
-    // ---- everyday tier 6 (round-13 second audit) ------------------------
-    // session introspection scalars: UTC sessions, no login identity
-    s = cachedRe("(?i)\\btimeZone\\(\\s*\\)").replaceAllIn(s, _ => "'UTC'")
-    // bare rand()/rand64(): CH's contracts are uniform UInt32 / UInt64
-    // INTEGERS — Spark's rand() is the [0,1) double (that is CH's
-    // randCanonical, mapped below). Passing rand() through unchanged
-    // would silently swap a 0..2^32 integer for a 0..1 double, so the
-    // integer contracts lower explicitly. rand64 carries the 53 bits of
-    // one double draw spread over the signed-64 range (CH's value is
-    // fully random in 64 bits — documented entropy divergence; the
-    // BUCKETING role, `ORDER BY rand()` sampling, is unaffected).
-    // MUST run before the randCanonical lowering below emits `rand()`.
-    s = cachedRe("(?i)\\brand\\(\\s*\\)").replaceAllIn(s,
-      _ => "CAST(floor(rand() * 4294967296.0D) AS BIGINT)")
-    s = cachedRe("(?i)\\brand64\\(\\s*\\)").replaceAllIn(s,
-      _ => "CAST(floor((rand() - 0.5D) * 1.8446744073709552E19) AS BIGINT)")
-    s = rewriteCall(s, "randUniform", {
-      case List(lo, hi) => s"(($lo) + rand() * (($hi) - ($lo)))"
-      case args => throw new IllegalArgumentException(
-        s"randUniform expects (min, max), got ${args.length}")
-    })
-    s = cachedRe("(?i)\\brandCanonical\\(\\s*\\)")
-      .replaceAllIn(s, _ => "rand()")
-    // toTypeName renders SPARK type names (int/bigint/string…), not CH
-    // names — documented divergence (the value is runtime-computed, so
-    // no textual reverse map can apply)
-    s = rewriteCall(s, "toTypeName",
-      args => s"typeof(${args.mkString(", ")})")
-    s = rewriteCall(s, "isZeroOrNull", {
-      case List(x) => s"(($x) = 0 OR ($x) IS NULL)"
-      case args => throw new IllegalArgumentException(
-        s"isZeroOrNull expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "concatAssumeInjective",
-      args => s"concat(${args.mkString(", ")})")
-    // now('tz'): the same instant rendered in tz (UTC sessions — the
-    // toTimeZone wall-clock stance)
-    s = rewriteCall(s, "now", {
-      case Nil | List("") => "current_timestamp()"
-      case List(tz) =>
-        s"convert_timezone('UTC', $tz, current_timestamp())"
-      case args => throw new IllegalArgumentException(
-        s"now expects 0-1 arguments, got ${args.length}")
-    })
-    // bitmaskToList(n): the ascending powers of two in n, CH's
-    // comma-joined string
-    s = rewriteCall(s, "bitmaskToList", {
-      case List(n) =>
-        s"array_join(filter(transform(sequence(0, 62), __i -> " +
-          s"CASE WHEN (($n) & shiftleft(CAST(1 AS BIGINT), __i)) != 0 " +
-          s"THEN CAST(shiftleft(CAST(1 AS BIGINT), __i) AS STRING) END), " +
-          s"__x -> __x IS NOT NULL), ',')"
-      case args => throw new IllegalArgumentException(
-        s"bitmaskToList expects 1 argument, got ${args.length}")
-    })
-    // toWeek/toYearWeek: ISO mode (3) only — the default mode 0
-    // (Sunday-first, week 0..53) has no Spark twin and silently
-    // diverging week numbers are worse than a refusal
-    s = rewriteCall(s, "toWeek", {
-      case List(d0, mode) if mode.trim == "3" => s"weekofyear($d0)"
-      case _ => throw new IllegalArgumentException(
-        "toWeek: only the ISO mode lowers (toWeek(d, 3) or " +
-          "toISOWeek(d)) — mode 0's Sunday-first week 0..53 numbering " +
-          "has no Spark twin")
-    })
-    s = rewriteCall(s, "toYearWeek", {
-      case List(d0, mode) if mode.trim == "3" =>
-        s"(year(date_add(date_trunc('week', $d0), 3)) * 100 + " +
-          s"weekofyear($d0))"
-      case _ => throw new IllegalArgumentException(
-        "toYearWeek: only the ISO mode lowers (toYearWeek(d, 3)) — " +
-          "mode 0 has no Spark twin")
-    })
-    // arrayEnumerateUniq: 1-based occurrence ordinal of each element
-    // among its equals so far (O(n²) per row — per-row small arrays)
-    s = rewriteCall(s, "arrayEnumerateUniq", {
-      case List(a) =>
-        s"transform(sequence(1, size($a)), __i -> " +
-          s"size(filter(slice($a, 1, __i), " +
-          s"__x -> __x = element_at($a, __i))))"
-      case args => throw new IllegalArgumentException(
-        s"arrayEnumerateUniq expects 1 array, got ${args.length}")
-    })
-    // groupArraySorted(N)(x): the N smallest values in order —
-    // deterministic by construction (sorted), unlike groupArray
-    s = rewriteParamAgg(s, "groupArraySorted") { (ps, args) =>
-      require(ps.length == 1 && ps.head.trim.matches("\\d+"),
-        "groupArraySorted(N)(x): N must be an integer literal")
-      require(args.length == 1, "groupArraySorted(N)(x): one expression")
-      s"slice(sort_array(collect_list(${args.head})), 1, ${ps.head.trim})"
-    }
-    // no-op wrappers: type-level nullability doesn't exist in Spark SQL
-    // text (assumeNotNull on an actual NULL is undefined in CH too);
-    // identity/materialize are optimizer hints with nothing to hint
-    Seq("assumeNotNull", "toNullable", "identity", "materialize")
-      .foreach { fn =>
-        s = rewriteCall(s, fn, {
-          case List(x) => s"($x)"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects 1 argument, got ${args.length}")
-        })
-      }
-    s = rewriteCall(s, "ignore", _ => "0")
-    // aggregate shapes
-    s = rewriteCall(s, "avgWeighted", {
-      case List(x, w) => s"(sum(($x) * ($w)) / sum($w))"
-      case args => throw new IllegalArgumentException(
-        s"avgWeighted expects (x, weight), got ${args.length}")
-    })
-    s = rewriteCall(s, "sumCount", {
-      case List(x) => s"named_struct('sum', sum($x), 'count', count($x))"
-      case args => throw new IllegalArgumentException(
-        s"sumCount expects 1 argument, got ${args.length}")
-    })
-    // sumMap/minMap/maxMap → the MapCombine aggregates (key-wise merge,
-    // sorted keys — CH's contract). Input normalizes to MAP<STRING,
-    // DOUBLE>; the result is a MAP where CH's two-array form returns a
-    // tuple of arrays — probe with map_keys/map_values for those
-    Seq("sumMap" -> "ch_summap", "minMap" -> "ch_minmap",
-      "maxMap" -> "ch_maxmap").foreach { case (fn, to) =>
-      s = rewriteCall(s, fn, {
-        case List(m) => s"$to(CAST($m AS MAP<STRING, DOUBLE>))"
-        case List(k, v) =>
-          s"$to(CAST(map_from_arrays($k, $v) AS MAP<STRING, DOUBLE>))"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects (map) or (keys, values), got ${args.length}")
-      })
-    }
-    // CH kurtPop is NON-EXCESS kurtosis (m4/m2²); Spark's kurtosis is
-    // excess — shift back. kurtSamp/skewSamp have no Spark twin (the
-    // bias-corrected forms need n-aware algebra) and refuse loudly.
-    s = rewriteCall(s, "kurtPop", {
-      case List(x) => s"(kurtosis($x) + 3.0D)"
-      case args => throw new IllegalArgumentException(
-        s"kurtPop expects 1 argument, got ${args.length}")
-    })
-    Seq("kurtSamp", "skewSamp").foreach { fn =>
-      s = rewriteCall(s, fn, { _ =>
-        throw new IllegalArgumentException(
-          s"$fn: Spark has only the population moments — use " +
-            (if (fn == "kurtSamp") "kurtPop" else "skewPop") +
-            " or compute the bias correction explicitly")
-      })
-    }
-    s = rewriteCall(s, "deltaSum", { _ =>
-      throw new IllegalArgumentException(
-        "deltaSum: block-order dependent in ClickHouse with no " +
-          "deterministic SQL twin — use the agg_delta_sum operator shape " +
-          "(explicit ordering) from graft.operators instead")
-    })
-    // date tier
-    s = rewriteCall(s, "toMonday", {
-      case List(x) => s"CAST(date_trunc('WEEK', $x) AS DATE)"
-      case args => throw new IllegalArgumentException(
-        s"toMonday expects 1 argument, got ${args.length}")
-    })
-    Seq("toRelativeDayNum" -> 86400L, "toRelativeHourNum" -> 3600L,
-      "toRelativeMinuteNum" -> 60L, "toRelativeSecondNum" -> 1L)
-      .foreach { case (fn, secs) =>
-        s = rewriteCall(s, fn, {
-          case List(x) =>
-            if (secs == 1L) s"unix_timestamp($x)"
-            else s"(unix_timestamp($x) DIV $secs)"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects 1 argument, got ${args.length}")
-        })
-      }
-    s = rewriteCall(s, "toYYYYMMDD", {
-      case List(x) => s"CAST(date_format($x, 'yyyyMMdd') AS INT)"
-      case args => throw new IllegalArgumentException(
-        s"toYYYYMMDD expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "toYYYYMMDDhhmmss", {
-      case List(x) => s"CAST(date_format($x, 'yyyyMMddHHmmss') AS BIGINT)"
-      case args => throw new IllegalArgumentException(
-        s"toYYYYMMDDhhmmss expects 1 argument, got ${args.length}")
-    })
-    // sub-second family: sessions run MICROSECOND timestamps (Spark's
-    // native precision) — now64's precision argument is accepted and
-    // ignored (micros is what you get), nanos multiply out
-    s = rewriteCall(s, "now64", {
-      case Nil | List(_) => "current_timestamp()"
-      case args => throw new IllegalArgumentException(
-        s"now64 expects 0-1 arguments, got ${args.length} " +
-          "(the timezone form is not supported — session UTC)")
-    })
-    s = rewriteCall(s, "toDateTime64", {
-      case List(x) => s"CAST($x AS TIMESTAMP)"
-      case List(x, _) => s"CAST($x AS TIMESTAMP)"
-      case args => throw new IllegalArgumentException(
-        s"toDateTime64 expects (x[, precision]), got ${args.length} " +
-          "(the timezone form is not supported — session UTC)")
-    })
-    s = rewriteCall(s, "toUnixTimestamp64Milli", {
-      case List(x) => s"(unix_micros(CAST($x AS TIMESTAMP)) DIV 1000)"
-      case args => throw new IllegalArgumentException(
-        s"toUnixTimestamp64Milli expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "toUnixTimestamp64Micro", {
-      case List(x) => s"unix_micros(CAST($x AS TIMESTAMP))"
-      case args => throw new IllegalArgumentException(
-        s"toUnixTimestamp64Micro expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "toUnixTimestamp64Nano", {
-      case List(x) => s"(unix_micros(CAST($x AS TIMESTAMP)) * 1000)"
-      case args => throw new IllegalArgumentException(
-        s"toUnixTimestamp64Nano expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "fromUnixTimestamp64Milli", {
-      case List(x) => s"timestamp_millis($x)"
-      case args => throw new IllegalArgumentException(
-        s"fromUnixTimestamp64Milli expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "fromUnixTimestamp64Micro", {
-      case List(x) => s"timestamp_micros($x)"
-      case args => throw new IllegalArgumentException(
-        s"fromUnixTimestamp64Micro expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "dateName", {
-      case List(u, x) => litArg(u, "dateName").toLowerCase match {
-        case "year" => s"CAST(year($x) AS STRING)"
-        case "quarter" => s"CAST(quarter($x) AS STRING)"
-        case "month" => s"date_format($x, 'MMMM')"
-        case "week" => s"CAST(weekofyear($x) AS STRING)"
-        case "dayofyear" => s"CAST(dayofyear($x) AS STRING)"
-        case "day" => s"CAST(dayofmonth($x) AS STRING)"
-        case "weekday" => s"date_format($x, 'EEEE')"
-        case "hour" => s"CAST(hour($x) AS STRING)"
-        case "minute" => s"CAST(minute($x) AS STRING)"
-        case "second" => s"CAST(second($x) AS STRING)"
-        case other => throw new IllegalArgumentException(
-          s"dateName: unsupported part '$other'")
-      }
-      case args => throw new IllegalArgumentException(
-        s"dateName expects ('part', ts), got ${args.length}")
-    })
-    // CH toTime: the time-of-day re-based onto 1970-01-02
-    s = rewriteCall(s, "toTime", {
-      case List(x) => s"timestamp_seconds(86400 + (unix_timestamp($x) % 86400))"
-      case args => throw new IllegalArgumentException(
-        s"toTime expects 1 argument, got ${args.length}")
-    })
-    // type-conversion tier: Decimal widths by CH name, OrZero/OrNull
-    // try_cast forms (OrZero's zero is CH's type default)
-    Seq("toDecimal32" -> 9, "toDecimal64" -> 18, "toDecimal128" -> 38)
-      .foreach { case (fn, p) =>
-        s = rewriteCall(s, fn, {
-          case List(x, sc) =>
-            val scale = wtrim(sc)
-            require(scale.matches("\\d+"),
-              s"$fn(x, scale): the scale must be an integer literal")
-            s"CAST($x AS DECIMAL($p, $scale))"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects (x, scale), got ${args.length}")
-        })
-      }
-    // UUIDs live as their canonical STRING spelling here (no UUID type)
-    s = rewriteCall(s, "toUUID", {
-      case List(x) => s"CAST($x AS STRING)"
-      case args => throw new IllegalArgumentException(
-        s"toUUID expects 1 argument, got ${args.length}")
-    })
-    Seq(("toInt8", "TINYINT", "CAST(0 AS TINYINT)"),
-      ("toInt16", "SMALLINT", "CAST(0 AS SMALLINT)"),
-      ("toInt32", "INT", "0"), ("toInt64", "BIGINT", "0L"),
-      ("toUInt8", "SMALLINT", "CAST(0 AS SMALLINT)"),
-      ("toUInt16", "INT", "0"), ("toUInt32", "BIGINT", "0L"),
-      ("toUInt64", "BIGINT", "0L"),
-      ("toFloat32", "FLOAT", "CAST(0 AS FLOAT)"),
-      ("toFloat64", "DOUBLE", "0.0D"),
-      ("toDate", "DATE", "DATE'1970-01-01'"),
-      ("toDateTime", "TIMESTAMP", "TIMESTAMP'1970-01-01 00:00:00'"))
-      .foreach { case (base, ty, zero) =>
-        s = rewriteCall(s, base + "OrNull", {
-          case List(x) => s"try_cast($x AS $ty)"
-          case args => throw new IllegalArgumentException(
-            s"${base}OrNull expects 1 argument, got ${args.length}")
-        })
-        s = rewriteCall(s, base + "OrZero", {
-          case List(x) => s"coalesce(try_cast($x AS $ty), $zero)"
-          case args => throw new IllegalArgumentException(
-            s"${base}OrZero expects 1 argument, got ${args.length}")
-        })
-      }
-    val chTypeMap = Map(
-      "uint8" -> "SMALLINT", "uint16" -> "INT", "uint32" -> "BIGINT",
-      "uint64" -> "BIGINT", "int8" -> "TINYINT", "int16" -> "SMALLINT",
-      "int32" -> "INT", "int64" -> "BIGINT", "float32" -> "FLOAT",
-      "float64" -> "DOUBLE", "string" -> "STRING", "date" -> "DATE",
-      "datetime" -> "TIMESTAMP")
-    def chTypeOf(fn: String, tok: String): String = {
-      val t = maskedLiteral(tok, literals).getOrElse(
-        throw new IllegalArgumentException(
-          s"$fn: the type must be a string literal"))
-      chTypeMap.getOrElse(t.toLowerCase, throw new IllegalArgumentException(
-        s"$fn: unsupported type '$t' (supported: " +
-          chTypeMap.keys.toSeq.sorted.mkString(", ") + ")"))
-    }
-    s = rewriteCall(s, "accurateCastOrNull", {
-      case List(x, t) => s"try_cast($x AS ${chTypeOf("accurateCastOrNull", t)})"
-      case args => throw new IllegalArgumentException(
-        s"accurateCastOrNull expects (x, 'Type'), got ${args.length}")
-    })
-    s = rewriteCall(s, "accurateCast", {
-      case List(x, t) => s"CAST($x AS ${chTypeOf("accurateCast", t)})"
-      case args => throw new IllegalArgumentException(
-        s"accurateCast expects (x, 'Type'), got ${args.length}")
-    })
-    // `CAST(x AS Float64)` / `CAST(x, 'Float64')` — CH type names inside
-    // the CAST grammar itself (the `::` table's call-shaped sibling).
-    // Only the type token after the LAST top-level ` AS ` translates;
-    // Spark type names pass through untouched. Iterated to a fixpoint so
-    // nested CASTs translate too (a pure rename converges immediately).
-    // the type's parens may NEST (Nullable(LowCardinality(Int32))) —
-    // two levels suffice for the wrapper algebra this dialect accepts
-    val castAsRe = ("(?is)^(.+\\s+AS\\s+)([A-Za-z0-9_]+" +
-      "(?:\\((?:[^()]|\\([^()]*\\))*\\))?)\\s*$").r
-    def chCastType(tok: String): String = {
-      val t = tok.trim
-      val base = t.takeWhile(_ != '(').trim.toLowerCase
-      def inner = {
-        val o = t.indexOf('(')
-        t.substring(o + 1, t.lastIndexOf(')')).trim
-      }
-      base match {
-        case "enum8" | "enum16" => "STRING"
-        case "datetime" | "datetime64" => "TIMESTAMP"
-        // the parameterized wrappers (round 13): Nullable collapses —
-        // every Spark type is nullable; LowCardinality is a storage
-        // encoding, not a type; Array recurses; FixedString's width is
-        // a storage property (the padded compare belongs to columns
-        // DECLARED FixedString, not casts)
-        case "nullable" | "lowcardinality" if t.contains('(') =>
-          chCastType(inner)
-        case "array" if t.contains('(') => s"ARRAY<${chCastType(inner)}>"
-        case "fixedstring" => "STRING"
-        case _ => chTypeMap.getOrElse(base, tok) // Spark names pass through
-      }
-    }
-    def translateCasts(text: String): String = {
-      val re = "(?i)\\bCAST\\s*\\(".r
-      re.findFirstMatchIn(text) match {
-        case None => text
-        case Some(m) =>
-          val (args0, end) = balancedArgs(text,
-            text.indexOf('(', m.start))
-          val args = args0.map(translateCasts) // nested CASTs translate too
-          val repl = args match {
-            case List(single) => single match {
-              case castAsRe(head, ty) => s"CAST($head${chCastType(ty)})"
-              case other => s"CAST($other)"
-            }
-            // CH's 2-argument CAST(x, 'Type') form — a non-literal second
-            // piece is a comma inside an angle-bracket type (MAP<K, V>),
-            // which balancedArgs can't see: reassemble untouched
-            case List(x, t) if maskedLiteral(t, literals).isDefined =>
-              s"CAST($x AS ${chTypeOf("CAST", t)})"
-            case parts => s"CAST(${parts.mkString(", ")})"
-          }
-          text.substring(0, m.start) + repl + translateCasts(text.substring(end))
-      }
-    }
-    s = translateCasts(s)
-    // array tier (the argument is INLINED where noted — pass a column,
-    // not an expensive expression)
-    s = rewriteCall(s, "hasAll", {
-      case List(a, b) => s"forall($b, __x -> array_contains($a, __x))"
-      case args => throw new IllegalArgumentException(
-        s"hasAll expects (set, subset), got ${args.length}")
-    })
-    // 2-arg pads with NULL (the NULL-vs-default stance: CH pads the
-    // type default); the padded NULL is typed via an always-out-of-
-    // bounds try_element_at
-    s = rewriteCall(s, "arrayResize", {
-      case List(a, n) =>
-        s"(CASE WHEN size($a) >= ($n) THEN slice($a, 1, $n) " +
-          s"ELSE concat($a, transform(sequence(1, ($n) - size($a)), " +
-          s"__i -> try_element_at($a, size($a) + 1))) END)"
-      case List(a, n, fill) =>
-        s"(CASE WHEN size($a) >= ($n) THEN slice($a, 1, $n) " +
-          s"ELSE concat($a, array_repeat($fill, CAST(($n) - size($a) AS INT))) END)"
-      case args => throw new IllegalArgumentException(
-        s"arrayResize expects (arr, n[, fill]), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayReverseSort", {
-      case List(a) => s"reverse(array_sort($a))"
-      case args => throw new IllegalArgumentException(
-        s"arrayReverseSort: only the plain 1-array form lowers here " +
-          s"(got ${args.length} args) — the sort-by-key lambda form has " +
-          "no textual twin; sort by the key column instead")
-    })
-    // consecutive-duplicate removal: keep index 0 and every element
-    // differing from its predecessor (null-safe <=>)
-    s = rewriteCall(s, "arrayCompact", {
-      case List(a) =>
-        s"filter($a, (__x, __i) -> __i = 0 OR " +
-          s"NOT (__x <=> element_at($a, __i)))"
-      case args => throw new IllegalArgumentException(
-        s"arrayCompact expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayPopBack", {
-      case List(a) => s"slice($a, 1, greatest(size($a) - 1, 0))"
-      case args => throw new IllegalArgumentException(
-        s"arrayPopBack expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayPopFront", {
-      case List(a) => s"(CASE WHEN size($a) <= 1 THEN slice($a, 1, 0) " +
-        s"ELSE slice($a, 2, size($a) - 1) END)"
-      case args => throw new IllegalArgumentException(
-        s"arrayPopFront expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayReduce", {
-      case List(aggTok, a) =>
-        maskedLiteral(aggTok, literals).map(_.toLowerCase) match {
-          case Some("sum") => arrAggSum(a)
-          case Some("min") => s"array_min($a)"
-          case Some("max") => s"array_max($a)"
-          case Some("avg") =>
-            s"(CASE WHEN size($a) = 0 THEN CAST(NULL AS DOUBLE) " +
-              s"ELSE ${arrAggSum(a)} / size($a) END)"
-          case Some("count") => s"size($a)"
-          case Some("uniq") | Some("uniqexact") =>
-            s"size(array_distinct($a))"
-          case Some("any") => s"try_element_at($a, 1)"
-          case Some(other) => throw new IllegalArgumentException(
-            s"arrayReduce: unsupported aggregate '$other' (supported: " +
-              "sum, min, max, avg, count, uniq, uniqExact, any)")
-          case None => throw new IllegalArgumentException(
-            "arrayReduce: the aggregate name must be a string literal")
-        }
-      case args => throw new IllegalArgumentException(
-        s"arrayReduce expects ('agg', arr), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayRotateLeft", {
-      case List(a, n) =>
-        s"(CASE WHEN size($a) = 0 THEN $a ELSE " +
-          s"concat(slice($a, CAST(pmod($n, size($a)) AS INT) + 1, size($a)), " +
-          s"slice($a, 1, CAST(pmod($n, size($a)) AS INT))) END)"
-      case args => throw new IllegalArgumentException(
-        s"arrayRotateLeft expects (arr, n), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayRotateRight", {
-      case List(a, n) =>
-        s"(CASE WHEN size($a) = 0 THEN $a ELSE " +
-          s"concat(slice($a, CAST(pmod(-($n), size($a)) AS INT) + 1, size($a)), " +
-          s"slice($a, 1, CAST(pmod(-($n), size($a)) AS INT))) END)"
-      case args => throw new IllegalArgumentException(
-        s"arrayRotateRight expects (arr, n), got ${args.length}")
-    })
-    // last match / its 1-based position (NULL / 0 when none — the
-    // NULL-vs-default stance, same as arrayFirst)
-    s = rewriteCall(s, "arrayLastIndex", {
-      case List(f, a) =>
-        s"(CASE WHEN array_position(reverse(transform($a, $f)), true) = 0 " +
-          s"THEN 0 ELSE size($a) + 1 - " +
-          s"array_position(reverse(transform($a, $f)), true) END)"
-      case args => throw new IllegalArgumentException(
-        s"arrayLastIndex expects (lambda, arr), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayLast", {
-      case List(f, a) => s"try_element_at(filter($a, $f), -1)"
-      case args => throw new IllegalArgumentException(
-        s"arrayLast expects (lambda, arr), got ${args.length}")
-    })
-    Seq("emptyArrayString" -> "STRING", "emptyArrayInt8" -> "TINYINT",
-      "emptyArrayInt16" -> "SMALLINT", "emptyArrayInt32" -> "INT",
-      "emptyArrayInt64" -> "BIGINT", "emptyArrayUInt8" -> "SMALLINT",
-      "emptyArrayUInt16" -> "INT", "emptyArrayUInt32" -> "BIGINT",
-      "emptyArrayUInt64" -> "BIGINT", "emptyArrayFloat32" -> "FLOAT",
-      "emptyArrayFloat64" -> "DOUBLE", "emptyArrayDate" -> "DATE",
-      "emptyArrayDateTime" -> "TIMESTAMP").foreach { case (fn, ty) =>
-      s = cachedRe(s"(?i)\\b$fn\\(\\s*\\)").replaceAllIn(s,
-        _ => s"CAST(array() AS ARRAY<$ty>)")
-    }
-    s = rewriteCall(s, "arrayWithConstant", {
-      case List(n, x) => s"array_repeat($x, CAST($n AS INT))"
-      case args => throw new IllegalArgumentException(
-        s"arrayWithConstant expects (n, value), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayShingles", {
-      case List(a, l) =>
-        s"(CASE WHEN size($a) < ($l) THEN slice(transform($a, __x -> $a), 1, 0) " +
-          s"ELSE transform(sequence(1, size($a) - ($l) + 1), " +
-          s"__i -> slice($a, __i, $l)) END)"
-      case args => throw new IllegalArgumentException(
-        s"arrayShingles expects (arr, length), got ${args.length}")
-    })
-    // tuple/map tier: tuple() → struct() (fields col1…colN — CH's
-    // positional contract); tupleElement resolves positions to those
-    // names, string names to the field
-    s = rewriteCall(s, "tupleElement", {
-      case List(t, i) =>
-        val tok = wtrim(i)
-        if (tok.matches("\\d+")) s"($t).col$tok"
-        else maskedLiteral(tok, literals) match {
-          case Some(nm) => s"($t).$nm"
-          case None => throw new IllegalArgumentException(
-            "tupleElement: the index must be an integer or string literal")
-        }
-      case args => throw new IllegalArgumentException(
-        s"tupleElement expects (tuple, index), got ${args.length}")
-    })
-    // key-union merge — exactly map_zip_with's contract
-    s = rewriteCall(s, "mapAdd", {
-      case List(m1, m2) =>
-        s"map_zip_with($m1, $m2, (__k, __a, __b) -> " +
-          "coalesce(__a, 0) + coalesce(__b, 0))"
-      case args => throw new IllegalArgumentException(
-        s"mapAdd expects exactly 2 maps here, got ${args.length}")
-    })
-    s = rewriteCall(s, "mapSubtract", {
-      case List(m1, m2) =>
-        s"map_zip_with($m1, $m2, (__k, __a, __b) -> " +
-          "coalesce(__a, 0) - coalesce(__b, 0))"
-      case args => throw new IllegalArgumentException(
-        s"mapSubtract expects exactly 2 maps here, got ${args.length}")
-    })
-    // bit-operator call forms
-    s = rewriteCall(s, "bitAnd", {
-      case List(a, b) => s"(($a) & ($b))"
-      case args => throw new IllegalArgumentException(
-        s"bitAnd expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "bitOr", {
-      case List(a, b) => s"(($a) | ($b))"
-      case args => throw new IllegalArgumentException(
-        s"bitOr expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "bitXor", {
-      case List(a, b) => s"(($a) ^ ($b))"
-      case args => throw new IllegalArgumentException(
-        s"bitXor expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "bitNot", {
-      case List(x) => s"(~($x))"
-      case args => throw new IllegalArgumentException(
-        s"bitNot expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "bitTest", {
-      case List(x, n) => s"(shiftright($x, CAST($n AS INT)) & 1)"
-      case args => throw new IllegalArgumentException(
-        s"bitTest expects (x, bit), got ${args.length}")
-    })
-    // math tier
-    s = rewriteCall(s, "roundBankers", {
-      case List(x) => s"rint($x)"
-      case List(x, n) => s"(rint(($x) * power(10, $n)) / power(10, $n))"
-      case args => throw new IllegalArgumentException(
-        s"roundBankers expects (x[, places]), got ${args.length}")
-    })
-    s = rewriteCall(s, "intDivOrZero", {
-      case List(a, b) => s"(CASE WHEN ($b) = 0 THEN 0 ELSE ($a) DIV ($b) END)"
-      case args => throw new IllegalArgumentException(
-        s"intDivOrZero expects 2 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "moduloOrZero", {
-      case List(a, b) => s"(CASE WHEN ($b) = 0 THEN 0 ELSE ($a) % ($b) END)"
-      case args => throw new IllegalArgumentException(
-        s"moduloOrZero expects 2 arguments, got ${args.length}")
-    })
-    Seq("plus" -> "+", "minus" -> "-", "multiply" -> "*", "divide" -> "/")
-      .foreach { case (fn, op) =>
-        s = rewriteCall(s, fn, {
-          case List(a, b) => s"(($a) $op ($b))"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects 2 arguments, got ${args.length}")
-        })
-      }
-    s = rewriteCall(s, "negate", {
-      case List(x) => s"(-($x))"
-      case args => throw new IllegalArgumentException(
-        s"negate expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "roundToExp2", {
-      case List(x) =>
-        s"(CASE WHEN ($x) < 1 THEN 0 " +
-          s"ELSE CAST(pow(2, floor(log2($x))) AS BIGINT) END)"
-      case args => throw new IllegalArgumentException(
-        s"roundToExp2 expects 1 argument, got ${args.length}")
-    })
-    // CH's fixed rounding ladders (ops histogram buckets)
-    s = rewriteCall(s, "roundDuration", {
-      case List(x) =>
-        val steps = Seq(36000L, 18000L, 7200L, 3600L, 1800L, 1200L, 600L,
-          300L, 240L, 180L, 120L, 60L, 30L, 10L, 1L)
-        s"(CASE ${steps.map(t => s"WHEN ($x) >= $t THEN $t").mkString(" ")} ELSE 0 END)"
-      case args => throw new IllegalArgumentException(
-        s"roundDuration expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "roundAge", {
-      case List(x) =>
-        s"(CASE WHEN ($x) >= 55 THEN 55 WHEN ($x) >= 45 THEN 45 " +
-          s"WHEN ($x) >= 35 THEN 35 WHEN ($x) >= 25 THEN 25 " +
-          s"WHEN ($x) >= 18 THEN 18 WHEN ($x) >= 1 THEN 17 ELSE 0 END)"
-      case args => throw new IllegalArgumentException(
-        s"roundAge expects 1 argument, got ${args.length}")
-    })
-    // encoding tier: CH bin() pads to whole bytes (Spark's trims);
-    // char() is variadic in CH
-    s = rewriteCall(s, "bin", {
-      case List(x) =>
-        s"lpad(bin($x), CAST(ceil(length(bin($x)) / 8.0) * 8 AS INT), '0')"
-      case args => throw new IllegalArgumentException(
-        s"bin expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "char", {
-      case List(x) => s"char($x)"
-      case args if args.length >= 2 =>
-        s"concat(${args.map(a => s"char($a)").mkString(", ")})"
-      case args => throw new IllegalArgumentException(
-        s"char expects 1+ arguments, got ${args.length}")
-    })
-    // CH 3/4-arg transform (value mapping with [default]); the 2-arg
-    // call IS Spark's lambda transform and passes through
-    s = rewriteCall(s, "transform", {
-      case List(a, f) => s"transform($a, $f)"
-      case List(x, from, to) =>
-        s"coalesce(try_element_at(map_from_arrays($from, $to), $x), $x)"
-      case List(x, from, to, d) =>
-        s"coalesce(try_element_at(map_from_arrays($from, $to), $x), $d)"
-      case args => throw new IllegalArgumentException(
-        s"transform expects 2-4 arguments, got ${args.length}")
-    })
-    s = rewriteCall(s, "isFinite", {
-      case List(x) =>
-        s"(NOT isnan(CAST($x AS DOUBLE)) AND " +
-          s"abs(CAST($x AS DOUBLE)) <> CAST('Infinity' AS DOUBLE))"
-      case args => throw new IllegalArgumentException(
-        s"isFinite expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "isInfinite", {
-      case List(x) => s"(abs(CAST($x AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"
-      case args => throw new IllegalArgumentException(
-        s"isInfinite expects 1 argument, got ${args.length}")
-    })
-    // SHA2 family: Spark spells the digest as lowercase HEX where CH
-    // returns raw FixedString bytes — compare via hex(…) on the CH side
-    // (documented divergence in spelling, same digest)
-    Seq("SHA224" -> 224, "SHA256" -> 256, "SHA384" -> 384, "SHA512" -> 512)
-      .foreach { case (fn, bits) =>
-        s = rewriteCall(s, fn, {
-          case List(x) => s"sha2($x, $bits)"
-          case args => throw new IllegalArgumentException(
-            s"$fn expects 1 argument, got ${args.length}")
-        })
-      }
-    s = rewriteCombinator(s, "quantileExact")
-    s = rewriteCombinator(s, "quantile")
-    // parameterized-aggregate batch (the CH analytics idioms) — after
-    // the scalar passes so their ts/condition arguments are already
-    // rewritten, before the dict pass (conditions may probe dictGet)
-    Seq("quantilesExact", "quantiles").foreach { fn =>
-      s = rewriteParamAgg(s, fn) { (ps, args) =>
-        require(args.length == 1,
-          s"$fn(q1, q2, …)(x) expects exactly one aggregated expression")
-        require(ps.nonEmpty, s"$fn needs at least one quantile level")
-        s"percentile(${args.head}, array(${ps.mkString(", ")}))"
-      }
-    }
-    // the approximate-quantile sketch spellings all lower onto Spark's
-    // approx_percentile (different sketch, same role — the uniq stance:
-    // do not compare estimates across engines); quantileDeterministic's
-    // determinator argument has nothing to determine here and drops
-    Seq("quantileTDigestWeighted", "quantileTDigest", "quantileTiming",
-      "quantileBFloat16", "quantileDeterministic").foreach { fn =>
-      s = rewriteParamAgg(s, fn) { (ps, args) =>
-        require(ps.length == 1, s"$fn(q)(x…): one quantile parameter")
-        require(args.nonEmpty, s"$fn(q)(x…): an aggregated expression")
-        s"approx_percentile(${args.head}, ${ps.head})"
-      }
-    }
-    // groupConcat: both CH call shapes (plain / parameterized separator).
-    // Elements SORT before joining (round-13 ADVICE fix): bare
-    // collect_list order is partition-dependent, so the same query could
-    // render a different string run to run — inconsistent with this
-    // repo's determinism stance. ClickHouse concatenates in block order,
-    // itself nondeterministic across merges — the sorted rendering is
-    // the documented divergence (the uniq stance: deterministic beats
-    // bug-compatible)
-    s = rewriteMaybeParam(s, "groupConcat")(
-      plain = {
-        case List(x) =>
-          s"array_join(sort_array(collect_list(CAST($x AS STRING))), '')"
-        case args => throw new IllegalArgumentException(
-          s"groupConcat expects (x) or (sep)(x), got ${args.length}")
-      },
-      param = { (ps, args) =>
-        require(ps.length == 1 && args.length == 1,
-          "groupConcat('sep')(x): one separator, one expression")
-        s"array_join(sort_array(collect_list(CAST(${args.head} AS " +
-          s"STRING))), ${ps.head})"
-      })
-    // order-dependent / weighted aggregates with no deterministic twin
-    s = rewriteParamAgg(s, "topKWeighted") { (_, _) =>
-      throw new IllegalArgumentException(
-        "topKWeighted: no weighted SpaceSaving here — for exact weighted " +
-          "top-N use GROUP BY + sum(weight) + ORDER BY + LIMIT, or " +
-          "topK(N)(x) for the unweighted sketch")
-    }
-    s = rewriteMaybeParam(s, "groupArrayMovingSum")(
-      plain = { _ =>
-        throw new IllegalArgumentException(
-          "groupArrayMovingSum: block-order dependent in ClickHouse with " +
-            "no deterministic SQL twin — use sum() OVER (ORDER BY …) " +
-            "window frames (explicit ordering) instead")
-      },
-      param = { (_, _) =>
-        throw new IllegalArgumentException(
-          "groupArrayMovingSum: block-order dependent in ClickHouse with " +
-            "no deterministic SQL twin — use sum() OVER (ORDER BY … ROWS " +
-            "n PRECEDING) window frames (explicit ordering) instead")
-      })
-    // CH topK(N)(x): the SpaceSaving sketch (graft.functions.TopKSketch)
-    // registered as the ch_topk SQL aggregate; CH returns the value
-    // ARRAY, so the "v:c" pairs are projected back to values. Counts are
-    // SpaceSaving overestimates beyond capacity 4N — CH documents the
-    // same bound for its own topK
-    s = rewriteParamAgg(s, "topK") { (ps, args) =>
-      require(ps.length == 1 && ps.head.trim.matches("\\d+"),
-        "topK(N)(x): N must be an integer literal")
-      require(args.length == 1, "topK(N)(x) expects one expression")
-      s"transform(split(ch_topk(CAST(${args.head} AS STRING), " +
-        s"${ps.head.trim}), ','), __s -> split_part(__s, ':', 1))"
-    }
-    // windowFunnel(w)(ts, c1, …, cK): CH buffers the group's events and
-    // scans for the longest chain — this lowering does the same with a
-    // sorted per-group fold (collect_list + aggregate), anchored at the
-    // EARLIEST c1 event with the window measured from it (the engine's
-    // agg_funnel min-chain; CH's DP re-anchors on later c1 events, so a
-    // chain completable only from a later anchor can score higher there
-    // — documented divergence, the min-chain is the DuckDB-provable one)
-    s = rewriteParamAgg(s, "windowFunnel") { (ps, args) =>
-      require(ps.length == 1,
-        "windowFunnel(window_seconds)(ts, cond…): one window parameter")
-      require(args.length >= 2,
-        "windowFunnel(w)(ts, cond1, …) needs a timestamp and 1+ conditions")
-      funnelFold(args.head, args.tail, Some(ps.head))
-    }
-    // sequenceMatch('(?1).*(?2)…')(ts, c1, …, cK): the ordered-existence
-    // pattern class only (each step once, in order, any gaps — the
-    // windowless funnel); time-bound forms like (?t<=3600) refuse loudly
-    s = rewriteParamAgg(s, "sequenceMatch") { (ps, args) =>
-      require(ps.length == 1,
-        "sequenceMatch('pattern')(ts, cond…): one pattern parameter")
-      require(args.length >= 2,
-        "sequenceMatch(p)(ts, cond1, …) needs a timestamp and 1+ conditions")
-      val k = args.length - 1
-      val pat = maskedLiteral(ps.head, literals).getOrElse(
-        throw new IllegalArgumentException(
-          "sequenceMatch: the pattern must be a string literal"))
-      val expected = (1 to k).map(i => s"(?$i)").mkString(".*")
-      require(pat == expected,
-        s"sequenceMatch('$pat'): only the ordered-existence form " +
-          s"'$expected' lowers here (strict-order / time-bound patterns " +
-          "have no exact Spark twin — use graft.operators shapes)")
-      s"IF(${funnelFold(args.head, args.tail, None)} = $k, 1, 0)"
-    }
-    // retention(c1, c2, …): r1 = any c1, r_i = any c1 AND any c_i — the
-    // per-group flag products (the agg_retention shape)
-    s = rewriteCall(s, "retention", { args =>
-      require(args.length >= 2,
-        s"retention(cond1, cond2, …) needs 2+ conditions, got ${args.length}")
-      def mx(c: String) = s"max(CASE WHEN ($c) THEN 1 ELSE 0 END)"
-      val head = mx(args.head)
-      s"array(${(head +: args.tail.map(c => s"$head * ${mx(c)}")).mkString(", ")})"
-    })
-    s = rewriteTier7(s, literals)
-    // LAST: the emitted probes contain SELECT/FROM/WHERE text no earlier
-    // statement-level pass may see, and their key/default args were
-    // already CH-rewritten above (nested dict calls recurse internally)
-    s = rewriteDictCalls(s, literals)
     s
-  }
-
-  /** Everyday tier 7 (round 14): the fourth audit sweep. Same method as
-    * tiers 3–6 — ~110 candidate spellings probed through [[rewrite]],
-    * every PASSTHRU triaged into a lowering (when a sound Spark twin
-    * exists) or a loud refusal naming the alternative. Notable stances:
-    * the Joda formatter ≈ Spark's own pattern dialect, distances are
-    * per-row HOF folds (hot vector paths stay on the posexplode
-    * operators — the X144 note), and `bar()` renders to the nearest
-    * eighth-block like CH's own CLI bars.
-    */
-  private def rewriteTier7(s0: String, literals: Array[String]): String = {
-    var s = s0
-    // ---- date/time -----------------------------------------------------
-    // Joda-syntax formatter: Joda patterns are the ancestor of Spark's
-    // own datetime pattern dialect — yyyy/MM/dd/HH/mm/ss/EEE/MMM all
-    // coincide, so the literal passes straight through (divergent
-    // exotic slots fail loudly in Spark's formatter, not silently)
-    s = rewriteCall(s, "formatDateTimeInJodaSyntax", {
-      case List(x, f) => s"date_format($x, $f)"
-      case args => throw new IllegalArgumentException(
-        s"formatDateTimeInJodaSyntax expects (ts, 'format'), got " +
-          s"${args.length} (the timezone form is not supported — session UTC)")
-    })
-    // timeSlots(start, duration[, size]): the size-second grid stamps
-    // covering [start, start+duration] — CH's session-window helper.
-    // start is inlined twice: pass a column, not an expensive expression
-    // (the arrayCumSum stance)
-    s = rewriteCall(s, "timeSlots", { args =>
-      require(args.length == 2 || args.length == 3,
-        s"timeSlots expects (start, duration[, size]), got ${args.length}")
-      val st = args(0); val dur = args(1)
-      val sz = if (args.length == 3) s"(${args(2)})" else "1800"
-      s"transform(sequence((unix_timestamp($st) DIV $sz) * $sz, " +
-        s"((unix_timestamp($st) + ($dur)) DIV $sz) * $sz, $sz), " +
-        "__t -> timestamp_seconds(__t))"
-    })
-    // dateAdd/dateSub/timestampAdd/timestampSub: both CH call shapes —
-    // (unit, n, ts) with the unit bare or quoted, and (ts, INTERVAL n u)
-    def unitOf(tok: String, where: String): String = {
-      val t = wtrim(tok)
-      val raw = maskedLiteral(t, literals).getOrElse(t)
-      val u = raw.trim.toUpperCase.stripSuffix("S")
-      require(Set("SECOND", "MINUTE", "HOUR", "DAY", "WEEK", "MONTH",
-        "QUARTER", "YEAR")(u), s"$where: unsupported unit '${raw.trim}'")
-      u
-    }
-    val unitish = "(?i)^(second|minute|hour|day|week|month|quarter|year)s?$"
-    Seq(("dateAdd", false), ("timestampAdd", false),
-      ("dateSub", true), ("timestampSub", true)).foreach { case (fn, neg) =>
-      s = rewriteCall(s, fn, {
-        case List(u, n, d0) if maskedLiteral(wtrim(u), literals)
-          .getOrElse(wtrim(u)).trim.matches(unitish) =>
-          val nn = if (neg) s"-($n)" else n
-          s"timestampadd(${unitOf(u, fn)}, $nn, $d0)"
-        case List(d0, iv) if wtrim(iv).toUpperCase.startsWith("INTERVAL") =>
-          s"($d0 ${if (neg) "-" else "+"} $iv)"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects (unit, n, ts) or (ts, INTERVAL n unit), " +
-            s"got ${args.length} argument(s)")
-      })
-    }
-    // toIntervalX(n) → Spark's interval constructors (day-time vs
-    // year-month split follows Spark's own two interval kinds)
-    Seq("toIntervalSecond" -> "0, 0, 0, %s", "toIntervalMinute" -> "0, 0, %s, 0",
-      "toIntervalHour" -> "0, %s, 0, 0", "toIntervalDay" -> "%s, 0, 0, 0",
-      "toIntervalWeek" -> "(%s) * 7, 0, 0, 0").foreach { case (fn, slot) =>
-      s = rewriteCall(s, fn, {
-        case List(n) => s"make_dt_interval(${slot.format(n)})"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects 1 argument, got ${args.length}")
-      })
-    }
-    Seq("toIntervalMonth" -> "0, %s", "toIntervalQuarter" -> "0, (%s) * 3",
-      "toIntervalYear" -> "%s").foreach { case (fn, slot) =>
-      s = rewriteCall(s, fn, {
-        case List(n) => s"make_interval(${slot.format(n)})"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects 1 argument, got ${args.length}")
-      })
-    }
-    s = rewriteCall(s, "monthName", {
-      case List(x) => s"date_format($x, 'MMMM')"
-      case args => throw new IllegalArgumentException(
-        s"monthName expects 1 argument, got ${args.length}")
-    })
-    // timeDiff(older, newer) = whole seconds between them
-    s = rewriteCall(s, "timeDiff", {
-      case List(a, b) => s"(unix_timestamp($b) - unix_timestamp($a))"
-      case args => throw new IllegalArgumentException(
-        s"timeDiff expects 2 arguments, got ${args.length}")
-    })
-    // the calendar half of the toRelative*Num family (fixed-width units
-    // live in tier 4): month/quarter/year count calendar boundaries,
-    // week counts Monday-aligned weeks from the epoch's first Monday
-    s = rewriteCall(s, "toRelativeMonthNum", {
-      case List(x) => s"(year($x) * 12 + month($x))"
-      case args => throw new IllegalArgumentException(
-        s"toRelativeMonthNum expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "toRelativeQuarterNum", {
-      case List(x) => s"(year($x) * 4 + quarter($x))"
-      case args => throw new IllegalArgumentException(
-        s"toRelativeQuarterNum expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "toRelativeYearNum", {
-      case List(x) => s"year($x)"
-      case args => throw new IllegalArgumentException(
-        s"toRelativeYearNum expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "toRelativeWeekNum", {
-      case List(x) =>
-        s"((datediff(CAST($x AS DATE), DATE'1970-01-05') + 7) DIV 7)"
-      case args => throw new IllegalArgumentException(
-        s"toRelativeWeekNum expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "fromUnixTimestamp64Nano", {
-      case List(x) => s"timestamp_micros(CAST(($x) DIV 1000 AS BIGINT))"
-      case args => throw new IllegalArgumentException(
-        s"fromUnixTimestamp64Nano expects 1 argument, got ${args.length}")
-    })
-    // Twitter-epoch snowflake ids (CH's own constant 1288834974657)
-    Seq("snowflakeToDateTime", "snowflakeIDToDateTime").foreach { fn =>
-      s = rewriteCall(s, fn, {
-        case List(id) =>
-          s"timestamp_millis((CAST($id AS BIGINT) >> 22) + 1288834974657)"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects 1 argument, got ${args.length}")
-      })
-    }
-    s = rewriteCall(s, "toModifiedJulianDay", {
-      case List(x) => s"datediff(CAST($x AS DATE), DATE'1858-11-17')"
-      case args => throw new IllegalArgumentException(
-        s"toModifiedJulianDay expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "fromModifiedJulianDay", {
-      case List(n) => s"date_add(DATE'1858-11-17', CAST($n AS INT))"
-      case args => throw new IllegalArgumentException(
-        s"fromModifiedJulianDay expects 1 argument, got ${args.length}")
-    })
-    // ---- conversions ----------------------------------------------------
-    s = rewriteCall(s, "toDate32", {
-      case List(x) => s"to_date($x)"
-      case args => throw new IllegalArgumentException(
-        s"toDate32 expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "toDateTime32", {
-      case List(x) => s"CAST($x AS TIMESTAMP)"
-      case args => throw new IllegalArgumentException(
-        s"toDateTime32 expects 1 argument, got ${args.length} " +
-          "(the timezone form is not supported — session UTC)")
-    })
-    s = rewriteCall(s, "toBool", {
-      case List(x) => s"CAST($x AS BOOLEAN)"
-      case args => throw new IllegalArgumentException(
-        s"toBool expects 1 argument, got ${args.length}")
-    })
-    // 128-bit integers land on DECIMAL(38,0): 38 decimal digits covers
-    // ±1.7e38 of the ±1.7e38 UInt128/Int128 range EXCEPT the top sliver
-    // (documented cap — values past 10^38 overflow loudly, not wrap)
-    Seq("toUInt128", "toInt128").foreach { fn =>
-      s = rewriteCall(s, fn, {
-        case List(x) => s"CAST($x AS DECIMAL(38, 0))"
-        case args => throw new IllegalArgumentException(
-          s"$fn expects 1 argument, got ${args.length}")
-      })
-    }
-    // ---- math -----------------------------------------------------------
-    s = rewriteCall(s, "exp10", {
-      case List(x) => s"power(10.0D, $x)"
-      case args => throw new IllegalArgumentException(
-        s"exp10 expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "max2",
-      args => { require(args.length == 2, "max2 expects 2 arguments")
-        s"greatest(${args.mkString(", ")})" })
-    s = rewriteCall(s, "min2",
-      args => { require(args.length == 2, "min2 expects 2 arguments")
-        s"least(${args.mkString(", ")})" })
-    s = rewriteCall(s, "clamp", {
-      case List(x, lo, hi) => s"least(greatest($x, $lo), $hi)"
-      case args => throw new IllegalArgumentException(
-        s"clamp expects (x, min, max), got ${args.length}")
-    })
-    // ---- strings ----------------------------------------------------
-    s = rewriteCall(s, "appendTrailingCharIfAbsent", {
-      case List(x, c) =>
-        s"(CASE WHEN ($x) = '' OR endswith($x, $c) THEN $x " +
-          s"ELSE concat($x, $c) END)"
-      case args => throw new IllegalArgumentException(
-        s"appendTrailingCharIfAbsent expects (s, char), got ${args.length}")
-    })
-    // tokens(): CH splits on non-alphanumeric ASCII; this splits on
-    // non-alphanumeric, period — non-ASCII letters also separate here
-    // (documented divergence on non-ASCII corpora; the text operators
-    // in graft.operators.TextAnalysis are the serious tokenizers)
-    s = rewriteCall(s, "tokens", {
-      case List(x) =>
-        s"filter(split($x, '[^a-zA-Z0-9]+'), __t -> __t != '')"
-      case args => throw new IllegalArgumentException(
-        s"tokens expects 1 argument, got ${args.length}")
-    })
-    // character n-grams (CH counts bytes; Spark strings index by
-    // codepoint — identical on ASCII, documented divergence past it)
-    s = rewriteCall(s, "ngrams", {
-      case List(x, n) =>
-        s"(CASE WHEN length($x) < ($n) THEN array() " +
-          s"ELSE transform(sequence(1, length($x) - ($n) + 1), " +
-          s"__i -> substring($x, __i, $n)) END)"
-      case args => throw new IllegalArgumentException(
-        s"ngrams expects (s, n), got ${args.length}")
-    })
-    // splitByRegexp keeps the separator a REGEX (splitByChar \Q-quotes)
-    s = rewriteCall(s, "splitByRegexp", {
-      case List(re, x) => s"split($x, $re)"
-      case args => throw new IllegalArgumentException(
-        s"splitByRegexp expects (pattern, s), got ${args.length}")
-    })
-    // ---- arrays -----------------------------------------------------
-    s = rewriteCall(s, "countEqual", {
-      case List(a, v) => s"size(filter($a, __x -> __x <=> ($v)))"
-      case args => throw new IllegalArgumentException(
-        s"countEqual expects (arr, value), got ${args.length}")
-    })
-    s = rewriteCall(s, "hasSubstr", {
-      case List(a, b) =>
-        s"(CASE WHEN size($b) = 0 THEN true " +
-          s"WHEN size($b) > size($a) THEN false " +
-          s"ELSE exists(sequence(1, size($a) - size($b) + 1), " +
-          s"__i -> slice($a, __i, size($b)) = $b) END)"
-      case args => throw new IllegalArgumentException(
-        s"hasSubstr expects (haystack, needle) arrays, got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayJaccardIndex", {
-      case List(a, b) =>
-        s"(CAST(size(array_intersect($a, $b)) AS DOUBLE) / " +
-          s"CAST(size(array_union($a, $b)) AS DOUBLE))"
-      case args => throw new IllegalArgumentException(
-        s"arrayJaccardIndex expects 2 arrays, got ${args.length}")
-    })
-    // CH only promises the first n positions sorted and leaves the rest
-    // unspecified — the fully-sorted array is a legal (and the only
-    // deterministic) refinement
-    s = rewriteCall(s, "arrayPartialSort", {
-      case List(_, a) => s"array_sort($a)"
-      case args => throw new IllegalArgumentException(
-        s"arrayPartialSort expects (limit, arr), got ${args.length}")
-    })
-    s = rewriteCall(s, "arrayPartialReverseSort", {
-      case List(_, a) => s"reverse(array_sort($a))"
-      case args => throw new IllegalArgumentException(
-        s"arrayPartialReverseSort expects (limit, arr), got ${args.length}")
-    })
-    // ---- vector norms/distances (per-row HOF folds — the X144 note:
-    // hot vector paths use the posexplode operators in Similarity) ----
-    def fold2(a: String, b: String, term: String) =
-      s"aggregate(zip_with($a, $b, (__x, __y) -> $term), " +
-        s"CAST(0.0 AS DOUBLE), (__s, __e) -> __s + __e)"
-    val diffSq = "(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE)) * " +
-      "(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE))"
-    s = rewriteCall(s, "L1Distance", {
-      case List(a, b) =>
-        fold2(a, b, "abs(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE))")
-      case args => throw new IllegalArgumentException(
-        s"L1Distance expects 2 arrays, got ${args.length}")
-    })
-    s = rewriteCall(s, "L2SquaredDistance", {
-      case List(a, b) => fold2(a, b, diffSq)
-      case args => throw new IllegalArgumentException(
-        s"L2SquaredDistance expects 2 arrays, got ${args.length}")
-    })
-    s = rewriteCall(s, "L2Distance", {
-      case List(a, b) => s"sqrt(${fold2(a, b, diffSq)})"
-      case args => throw new IllegalArgumentException(
-        s"L2Distance expects 2 arrays, got ${args.length}")
-    })
-    s = rewriteCall(s, "LinfDistance", {
-      case List(a, b) => s"array_max(zip_with($a, $b, (__x, __y) -> " +
-        s"abs(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE))))"
-      case args => throw new IllegalArgumentException(
-        s"LinfDistance expects 2 arrays, got ${args.length}")
-    })
-    s = rewriteCall(s, "LinfNorm", {
-      case List(a) =>
-        s"array_max(transform($a, __x -> abs(CAST(__x AS DOUBLE))))"
-      case args => throw new IllegalArgumentException(
-        s"LinfNorm expects 1 array, got ${args.length}")
-    })
-    s = rewriteCall(s, "L2SquaredNorm", {
-      case List(a) => s"aggregate($a, CAST(0.0 AS DOUBLE), " +
-        s"(__s, __e) -> __s + CAST(__e AS DOUBLE) * CAST(__e AS DOUBLE))"
-      case args => throw new IllegalArgumentException(
-        s"L2SquaredNorm expects 1 array, got ${args.length}")
-    })
-    // ---- multi-needle search (completes the X144 family) -------------
-    s = rewriteCall(s, "multiSearchAllPositions", {
-      case List(h, ns) => s"transform($ns, __n -> locate(__n, $h))"
-      case args => throw new IllegalArgumentException(
-        s"multiSearchAllPositions expects (haystack, [needles]), " +
-          s"got ${args.length}")
-    })
-    // leftmost occurrence position of ANY needle, 0 when none — the
-    // multiSearchFirstIndex contract transposed to positions
-    s = rewriteCall(s, "multiSearchFirstPosition", {
-      case List(h, ns) =>
-        s"coalesce(array_min(filter(transform($ns, __n -> " +
-          s"locate(__n, $h)), __p -> __p > 0)), 0)"
-      case args => throw new IllegalArgumentException(
-        s"multiSearchFirstPosition expects (haystack, [needles]), " +
-          s"got ${args.length}")
-    })
-    // ---- maps (lambda-first → map-first, the mapFilter stance) -------
-    s = rewriteCall(s, "mapExists", {
-      case List(lam, m) => s"(cardinality(map_filter($m, $lam)) > 0)"
-      case args => throw new IllegalArgumentException(
-        s"mapExists expects ((k, v) -> pred, map), got ${args.length}")
-    })
-    s = rewriteCall(s, "mapAll", {
-      case List(lam, m) =>
-        s"(cardinality(map_filter($m, $lam)) = cardinality($m))"
-      case args => throw new IllegalArgumentException(
-        s"mapAll expects ((k, v) -> pred, map), got ${args.length}")
-    })
-    s = rewriteCall(s, "mapSort", {
-      case List(m) => s"map_from_entries(array_sort(map_entries($m)))"
-      case args => throw new IllegalArgumentException(
-        s"mapSort expects 1 map (the lambda form has no textual twin " +
-          s"— sort map_entries(…) directly), got ${args.length}")
-    })
-    s = rewriteCall(s, "mapReverseSort", {
-      case List(m) =>
-        s"map_from_entries(reverse(array_sort(map_entries($m))))"
-      case args => throw new IllegalArgumentException(
-        s"mapReverseSort expects 1 map, got ${args.length}")
-    })
-    // ---- URL family completion ---------------------------------------
-    s = rewriteCall(s, "fragment", {
-      case List(u) => s"coalesce(parse_url($u, 'REF'), '')"
-      case args => throw new IllegalArgumentException(
-        s"fragment expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "cutFragment", {
-      case List(u) => s"split_part($u, '#', 1)"
-      case args => throw new IllegalArgumentException(
-        s"cutFragment expects 1 argument, got ${args.length}")
-    })
-    // query-onwards text: '?' to end (fragment included — CH's shape);
-    // a fragment-only URL returns '' here where CH keeps '#f' (edge
-    // divergence, documented)
-    s = rewriteCall(s, "queryStringAndFragment", {
-      case List(u) => s"regexp_extract($u, '\\\\?(.*)', 1)"
-      case args => throw new IllegalArgumentException(
-        s"queryStringAndFragment expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "netloc", {
-      case List(u) => s"coalesce(parse_url($u, 'AUTHORITY'), '')"
-      case args => throw new IllegalArgumentException(
-        s"netloc expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "port", {
-      case List(u) =>
-        s"CAST(coalesce(nullif(regexp_extract(parse_url($u, " +
-          s"'AUTHORITY'), ':(\\\\d+)$$', 1), ''), '0') AS INT)"
-      case args => throw new IllegalArgumentException(
-        s"port expects 1 argument here (the default_port form: wrap " +
-          s"in CASE WHEN port(u) = 0), got ${args.length}")
-    })
-    // percent-encoding (the non-Form spellings): CH encodes space as
-    // %20 and decodes '+' literally — adjust around Spark's
-    // form-encoding url_encode/url_decode
-    s = rewriteCall(s, "encodeURLComponent", {
-      case List(u) => s"replace(url_encode($u), '+', '%20')"
-      case args => throw new IllegalArgumentException(
-        s"encodeURLComponent expects 1 argument, got ${args.length}")
-    })
-    s = rewriteCall(s, "decodeURLComponent", {
-      case List(u) => s"url_decode(replace($u, '+', '%2B'))"
-      case args => throw new IllegalArgumentException(
-        s"decodeURLComponent expects 1 argument, got ${args.length}")
-    })
-    // ---- aggregates ---------------------------------------------------
-    // exact weighted quantile: Spark's percentile takes an integral
-    // frequency column — exactly quantileExactWeighted's weight
-    s = rewriteParamAgg(s, "quantileExactWeighted") { (ps, args) =>
-      require(ps.length == 1, "quantileExactWeighted(q)(x, w): one level")
-      require(args.length == 2,
-        "quantileExactWeighted(q)(x, w) expects (value, weight)")
-      s"percentile(${args.head}, ${ps.head}, " +
-        s"CAST(${args(1)} AS BIGINT))"
-    }
-    // uniqCombined(precision)(x) et al arrive here with the name already
-    // renamed by simpleReplacements — drop the precision parameter list
-    // (Spark's HLL++ has its own accuracy knob; the uniq stance)
-    s = rewriteMaybeParam(s, "approx_count_distinct")(
-      plain => s"approx_count_distinct(${plain.mkString(", ")})",
-      (_, args) => s"approx_count_distinct(${args.mkString(", ")})")
-    // ---- console formatters -------------------------------------------
-    // formatReadableTimeDelta: days…seconds, zero components skipped,
-    // singular/plural like CH. CH's default largest unit is YEARS
-    // (365.25-day years) — this renders days as the cap (documented
-    // divergence; day counts stay exact where fractional years round).
-    // The input is inlined per component: pass a column.
-    s = rewriteCall(s, "formatReadableTimeDelta", {
-      case List(x) =>
-        def comp(n: String, u: String) =
-          s"CASE WHEN $n > 0 THEN concat($n, ' $u', " +
-            s"CASE WHEN $n = 1 THEN '' ELSE 's' END) END"
-        val t = s"CAST($x AS BIGINT)"
-        s"coalesce(nullif(concat_ws(', ', " +
-          comp(s"($t DIV 86400)", "day") + ", " +
-          comp(s"(($t % 86400) DIV 3600)", "hour") + ", " +
-          comp(s"(($t % 3600) DIV 60)", "minute") + ", " +
-          comp(s"($t % 60)", "second") + "), ''), '0 seconds')"
-      case args => throw new IllegalArgumentException(
-        s"formatReadableTimeDelta expects 1 argument (the maximum_unit " +
-          s"form is not supported), got ${args.length}")
-    })
-    // bar(x, min, max[, width]): CH's CLI bar — full blocks plus a
-    // nearest-eighth partial block, clamped to [0, width]. The scaled
-    // value is inlined per piece: pass a column.
-    s = rewriteCall(s, "bar", { args =>
-      require(args.length == 3 || args.length == 4,
-        s"bar expects (x, min, max[, width]), got ${args.length}")
-      val List(x, mn, mx) = args.take(3)
-      val w = if (args.length == 4) args(3) else "80"
-      val units = s"greatest(CAST(0.0 AS DOUBLE), least(CAST($w AS " +
-        s"DOUBLE), (CAST($x AS DOUBLE) - CAST($mn AS DOUBLE)) * " +
-        s"CAST($w AS DOUBLE) / (CAST($mx AS DOUBLE) - CAST($mn AS DOUBLE))))"
-      val e8 = s"CAST(round($units * 8.0D) AS BIGINT)"
-      s"concat(repeat('█', CAST($e8 DIV 8 AS INT)), " +
-        s"CASE WHEN ($e8 % 8) = 0 THEN '' " +
-        s"ELSE substring('▏▎▍▌▋▊▉', CAST($e8 % 8 AS INT), 1) END)"
-    })
-    // ---- network --------------------------------------------------------
-    // isIPAddressInRange with a LITERAL IPv4 CIDR: the prefix mask folds
-    // to a constant and the address side reuses the IPv4StringToNum
-    // octet arithmetic (IPv6 has no 128-bit integer here — refuses)
-    s = rewriteCall(s, "isIPAddressInRange", {
-      case List(ip, cidr) =>
-        val lit = maskedLiteral(wtrim(cidr), literals).getOrElse(
-          throw new IllegalArgumentException(
-            "isIPAddressInRange: the CIDR must be a string literal"))
-        val m = "^(\\d+)\\.(\\d+)\\.(\\d+)\\.(\\d+)/(\\d+)$".r
-          .findFirstMatchIn(lit.trim).getOrElse(
-            throw new IllegalArgumentException(
-              s"isIPAddressInRange: '$lit' is not an IPv4 CIDR " +
-                "(IPv6 ranges are not supported here)"))
-        val Seq(o1, o2, o3, o4, bits) = (1 to 5).map(i => m.group(i).toLong)
-        require(bits <= 32 && Seq(o1, o2, o3, o4).forall(_ <= 255),
-          s"isIPAddressInRange: malformed CIDR '$lit'")
-        val net = (o1 << 24) | (o2 << 16) | (o3 << 8) | o4
-        val shift = 32 - bits.toInt
-        val masked = if (shift >= 32) 0L else (net >> shift) << shift
-        val ipNum = s"(CAST(element_at(split($ip, '\\\\.'), 1) AS BIGINT) " +
-          s"* 16777216 + CAST(element_at(split($ip, '\\\\.'), 2) AS " +
-          s"BIGINT) * 65536 + CAST(element_at(split($ip, '\\\\.'), 3) " +
-          s"AS BIGINT) * 256 + CAST(element_at(split($ip, '\\\\.'), 4) " +
-          s"AS BIGINT))"
-        if (shift >= 32) "true"
-        else s"((($ipNum >> $shift) << $shift) = ${masked}L)"
-      case args => throw new IllegalArgumentException(
-        s"isIPAddressInRange expects (addr, 'cidr'), got ${args.length}")
-    })
-    // ---- JSON -----------------------------------------------------------
-    s = rewriteCall(s, "JSON_EXISTS", {
-      case List(j, p) => s"(get_json_object($j, $p) IS NOT NULL)"
-      case args => throw new IllegalArgumentException(
-        s"JSON_EXISTS expects (json, path), got ${args.length}")
-    })
-    // ---- pointed refusals (the deltaSum stance: name the alternative) --
-    Seq(
-      "entropy" -> ("Shannon entropy needs a two-level aggregation — " +
-        "GROUP BY the value first, then -sum(p * log2(p)) over the " +
-        "per-value counts"),
-      "JSON_QUERY" -> ("CH wraps matches in a JSON array — use " +
-        "JSONExtractRaw (raw extraction) or JSON_VALUE (scalar) " +
-        "whose contracts are exact here"),
-      "gcd" -> "no Spark twin (iterative) — precompute or use pmod chains",
-      "lcm" -> "no Spark twin (iterative) — precompute or use pmod chains",
-      "arrayShuffle" -> ("nondeterministic by contract — use " +
-        "array_sort for a canonical order or shuffle outside the query"),
-      "arrayRandomSample" -> ("nondeterministic by contract — slice " +
-        "after array_sort, or sample rows with TABLESAMPLE"),
-      "sparkbar" -> ("per-group inline histogram — use bar(x, min, " +
-        "max, width) per bucket row instead"),
-      "groupArrayLast" -> ("block-order dependent — groupArraySorted(N)" +
-        "(x) is the deterministic top-N, or collect_list over an " +
-        "explicit window ORDER BY"),
-      "stem" -> ("dictionary-backed NLP is out of scope — the text " +
-        "operators in graft.operators.TextAnalysis cover tokenization " +
-        "and quality scoring"),
-      "lemmatize" -> "dictionary-backed NLP is out of scope (see stem)",
-      "synonyms" -> "dictionary-backed NLP is out of scope (see stem)",
-      "detectLanguage" -> ("use the engine's n-gram language-id " +
-        "operator (text_langid in graft.operators.TextAnalysis)"),
-      "detectCharset" -> "charset sniffing is out of scope (UTF-8 corpus)",
-      "sleep" -> ("no effect in a declarative plan — removed in CH too " +
-        "under optimization; drop it"),
-      "sleepEachRow" -> "no effect in a declarative plan — drop it",
-      "blockNumber" -> ("blocks do not exist here — row_number() OVER " +
-        "(ORDER BY …) for a stable numbering"),
-      "blockSize" -> "blocks do not exist here — count() per group",
-      "rowNumberInAllBlocks" -> ("row_number() OVER (ORDER BY …) — an " +
-        "explicit order is the only deterministic numbering"),
-      "queryID" -> ("query ids live in system.query_log here (X140) — " +
-        "FROM system.query_log"),
-      "initialQueryID" -> "see queryID — FROM system.query_log",
-      "uptime" -> "no server process to introspect — not supported",
-      "serverUUID" -> "no server process to introspect — not supported",
-      "firstSignificantSubdomain" -> ("needs the public-suffix list — " +
-        "domainWithoutWWW covers the common case"),
-      "cutToFirstSignificantSubdomain" -> ("needs the public-suffix " +
-        "list — domainWithoutWWW covers the common case"),
-      "geohashEncode" -> ("geo indexing is out of scope — " +
-        "greatCircleDistance covers metric queries"),
-      "geohashDecode" -> "geo indexing is out of scope (see geohashEncode)",
-      "pointInPolygon" -> ("polygon geometry is out of scope — bounding-" +
-        "box predicates compose from plain comparisons"),
-      "normalizeQuery" -> ("CH's literal folding is engine-specific — " +
-        "regexp_replace the literal classes explicitly"),
-      "mapPopulateSeries" -> ("build the dense axis with sequence() and " +
-        "map_from_arrays, then map_zip_with the sparse map onto it"),
-      "toInt256" -> "no 256-bit arithmetic — DECIMAL(38, 0) is the widest",
-      "toUInt256" -> "no 256-bit arithmetic — DECIMAL(38, 0) is the widest",
-      "arrayFill" -> ("order-dependent fill — express as an explicit " +
-        "aggregate() fold over the array"),
-      "arrayReverseFill" -> "see arrayFill",
-      "arraySplit" -> ("use aggregate() to fold split points, or explode " +
-        "and re-group"))
-      .foreach { case (fn, alt) =>
-        s = rewriteCall(s, fn, _ => throw new IllegalArgumentException(
-          s"$fn: $alt"))
-      }
-    s
-  }
-
-  /** A masked string literal's VALUE, when `tok` is exactly one
-    * [[Sentinel]] slot (the formatDateTime discipline — shared by the
-    * dict-name and sequenceMatch-pattern probes).
-    */
-  private def maskedLiteral(tok: String,
-                            literals: Array[String]): Option[String] = {
-    val t = wtrim(tok)
-    (Sentinel + "(\\d+)" + Sentinel).r.findFirstMatchIn(t) match {
-      case Some(sm) if sm.matched == t =>
-        val raw = literals(sm.group(1).toInt)
-        Some(raw.substring(1, raw.length - 1).replace("''", "'"))
-      case _ => None
-    }
   }
 
   /** The shared windowFunnel/sequenceMatch per-group fold: events sorted
@@ -4278,8 +1654,8 @@ object ChDialect {
       s" AND e.t <= element_at(acc, 1) + (($w) * 1000000L)").getOrElse("")
     // the buffered list appears twice textually; identical aggregate
     // expressions dedupe in PhysicalAggregation, so collect_list runs
-    // once. The guard message stays free of ( ) , ' so no later dialect
-    // pass can mistake it for a call shape.
+    // once. The guard message stays free of ( ) , ' so an enclosing
+    // call's argument split can never mistake it for call syntax.
     val lst = s"array_sort(collect_list(struct(unix_micros($tsExpr) AS t, " +
       s"array($flags) AS f)))"
     val guarded = s"CASE WHEN assert_true(size($lst) <= $funnelGroupCap, " +
@@ -4296,49 +1672,6 @@ object ChDialect {
       s"WHEN element_at(acc, i) IS NOT NULL AND element_at(e.f, i + 1) " +
       s"AND e.t > element_at(acc, i)$winTest THEN e.t END)), " +
       s"__v -> __v IS NOT NULL))"
-  }
-
-  /** `fn(params)(args)` — the CH parameterized-aggregate call shape,
-    * handed to `f(params, args)` (the generalized [[rewriteCombinator]]).
-    */
-  private def rewriteParamAgg(s: String, fn: String)(
-      f: (List[String], List[String]) => String): String = {
-    val re = cachedRe(s"(?i)\\b$fn\\(")
-    re.findFirstMatchIn(s) match {
-      case None => s
-      case Some(m) =>
-        val (params, afterParams) = balancedArgs(s, m.end - 1)
-        val rest = s.substring(afterParams)
-        require(rest.startsWith("("),
-          s"$fn(…)(…): expected the argument list right after the " +
-            "parameter list")
-        val (args, end) = balancedArgs(rest, 0)
-        s.substring(0, m.start) + f(params.map(wtrim), args.map(wtrim)) +
-          rewriteParamAgg(s.substring(afterParams + end), fn)(f)
-    }
-  }
-
-  /** An aggregate callable BOTH ways — plain `fn(x)` and parameterized
-    * `fn(p)(x)` (groupConcat's shape): dispatch on whether a second
-    * argument list follows the first.
-    */
-  private def rewriteMaybeParam(s: String, fn: String)(
-      plain: List[String] => String,
-      param: (List[String], List[String]) => String): String = {
-    val re = cachedRe(s"(?i)\\b$fn\\(")
-    re.findFirstMatchIn(s) match {
-      case None => s
-      case Some(m) =>
-        val (first, after) = balancedArgs(s, m.end - 1)
-        val rest = s.substring(after)
-        if (rest.startsWith("(")) {
-          val (args, end) = balancedArgs(rest, 0)
-          s.substring(0, m.start) + param(first.map(wtrim), args.map(wtrim)) +
-            rewriteMaybeParam(s.substring(after + end), fn)(plain, param)
-        } else
-          s.substring(0, m.start) + plain(first.map(wtrim)) +
-            rewriteMaybeParam(rest, fn)(plain, param)
-    }
   }
 
   /** `SELECT histogram(N)(x) [AS alias] FROM tail` → the deterministic
@@ -4395,102 +1728,6 @@ object ChDialect {
       s"GROUP BY __bin, __lo, __w)"
   }
 
-  /** `dictGet('d','attr',k)` / `dictGetOrDefault('d','attr',k,def)` /
-    * `dictHas('d',k)` → a correlated scalar-subquery probe of the
-    * [[DictRegistry]] view bound by `CREATE DICTIONARY`:
-    *
-    *   coalesce((SELECT any_value(attr) FROM __dict_d WHERE k = …), def)
-    *
-    * Catalyst's RewriteCorrelatedScalarSubquery turns each probe into a
-    * left outer join against the (tiny, aggregated-by-key) dictionary —
-    * broadcast at execution, the same resident-probe plan the
-    * [[graft.operators.Dictionaries]] engine builds by hand, and exactly
-    * CH's miss semantics (type/declared default, never null — dictHas is
-    * a count() > 0 probe). Dictionary and attribute names must be string
-    * LITERALS (the formatDateTime discipline); COMPLEX_KEY_HASHED keys
-    * arrive as `tuple(k1, k2, …)` or a bare single expression.
-    */
-  private def rewriteDictCalls(seg: String,
-                               literals: Array[String]): String = {
-    if ("(?i)\\bdict(Get|GetOrDefault|Has)\\(".r
-        .findFirstIn(seg).isEmpty) return seg
-    val sentRe = (Sentinel + "(\\d+)" + Sentinel).r
-    def litVal(tok: String, fn: String): String = {
-      val t = wtrim(tok)
-      sentRe.findFirstMatchIn(t) match {
-        case Some(sm) if sm.matched == t =>
-          val raw = literals(sm.group(1).toInt)
-          raw.substring(1, raw.length - 1).replace("''", "'")
-        case _ => throw new IllegalArgumentException(
-          s"$fn: dictionary and attribute names must be string literals")
-      }
-    }
-    def dict(dn: String, fn: String): DictRegistry.DictDef =
-      DictRegistry.get(dn).getOrElse(throw new IllegalArgumentException(
-        s"$fn: no dictionary '$dn' registered — CREATE DICTIONARY first " +
-          s"(registered: ${DictRegistry.list.map(_.name).mkString(", ")})"))
-    def keyConds(d: DictRegistry.DictDef, keyArg: String, fn: String,
-                 rec: String => String): String = {
-      val t = wtrim(keyArg)
-      // composite keys arrive as struct(…) — the tier-4 tuple() rename
-      // runs before this pass
-      val parts =
-        if ((t.toLowerCase.startsWith("tuple(") ||
-             t.toLowerCase.startsWith("struct(")) && t.endsWith(")"))
-          balancedArgs(t, t.indexOf('('))._1
-        else List(t)
-      require(parts.length == d.keys.length,
-        s"$fn('${d.name}', …): ${parts.length} key expression(s) for a " +
-          s"${d.keys.length}-column PRIMARY KEY (${d.keys.mkString(", ")})")
-      d.keys.zip(parts).map { case (k, e) =>
-        s"$k = (${rec(e)})" }.mkString(" AND ")
-    }
-    lazy val rec: String => String = x0 => {
-      var x = x0
-      x = rewriteCall(x, "dictGetOrDefault", {
-        case List(dn0, an0, k, dflt) =>
-          val dn = litVal(dn0, "dictGetOrDefault")
-          val an = litVal(an0, "dictGetOrDefault")
-          val d = dict(dn, "dictGetOrDefault")
-          require(d.defaultOf(an).isDefined,
-            s"dictGetOrDefault('$dn', '$an', …): not a declared attribute " +
-              s"(declared: ${d.attrs.map(_._1).mkString(", ")})")
-          s"coalesce((SELECT any_value($an) FROM ${d.view} WHERE " +
-            s"${keyConds(d, k, "dictGetOrDefault", rec)}), ${rec(dflt)})"
-        case args => throw new IllegalArgumentException(
-          s"dictGetOrDefault expects ('dict', 'attr', key, default), " +
-            s"got ${args.length} argument(s)")
-      })
-      x = rewriteCall(x, "dictGet", {
-        case List(dn0, an0, k) =>
-          val dn = litVal(dn0, "dictGet")
-          val an = litVal(an0, "dictGet")
-          val d = dict(dn, "dictGet")
-          val dflt = d.defaultOf(an).getOrElse(
-            throw new IllegalArgumentException(
-              s"dictGet('$dn', '$an', …): not a declared attribute " +
-                s"(declared: ${d.attrs.map(_._1).mkString(", ")})"))
-          s"coalesce((SELECT any_value($an) FROM ${d.view} WHERE " +
-            s"${keyConds(d, k, "dictGet", rec)}), $dflt)"
-        case args => throw new IllegalArgumentException(
-          s"dictGet expects ('dict', 'attr', key), got ${args.length} " +
-            "argument(s) — dictGetHierarchy has no SQL lowering here " +
-            "(use graft.operators.Dictionaries.hierarchy)")
-      })
-      x = rewriteCall(x, "dictHas", {
-        case List(dn0, k) =>
-          val dn = litVal(dn0, "dictHas")
-          val d = dict(dn, "dictHas")
-          s"((SELECT count(1) FROM ${d.view} WHERE " +
-            s"${keyConds(d, k, "dictHas", rec)}) > 0)"
-        case args => throw new IllegalArgumentException(
-          s"dictHas expects ('dict', key), got ${args.length} argument(s)")
-      })
-      x
-    }
-    rec(seg)
-  }
-
   // numbers(N) / numbers(offset, N) after FROM/JOIN only — a scalar call
   // named numbers() elsewhere stays untouched
   private val numbersRe =
@@ -4520,7 +1757,7 @@ object ChDialect {
 
   /** Doc in the class header. The generated text contains no CH-isms of
     * its own; `body` and the bound/step expressions stay in the segment
-    * and keep flowing through the later rewrite passes.
+    * and flow through the function table afterwards.
     *
     * With an `analyze` hook (the GraftSql.chSql path) the outer select
     * list is generated explicitly in the body's own column order —
@@ -4763,38 +2000,1858 @@ object ChDialect {
           rewriteArrayJoin(tail.substring(end), n + 1)
     }
 
-  /** Rewrite every `fn(args…)` call in `s` (case-insensitive, balanced
-    * parens, top-level comma split) via `f`. Args are NOT re-entered —
-    * the surrounding simple passes already ran on the whole segment.
+  // ---- the function table ---------------------------------------------
+
+  /** The statement's masked string literals, addressed by the sentinel
+    * token that stands in for each one. Entries read a slot's value; the
+    * pattern-translating entries (formatDateTime, format,
+    * replaceRegexpAll) rewrite a slot at most once — WITH-alias
+    * substitution can duplicate an expression so that two calls share
+    * one slot, and a second translation would re-translate its own
+    * output (formatDateTime would literal-quote the whole pattern).
     */
-  private def rewriteCall(s: String, fn: String,
-                          f: List[String] => String): String = {
-    val re = cachedRe(s"(?i)\\b$fn\\(")
-    re.findFirstMatchIn(s) match {
-      case None => s
-      case Some(m) =>
-        val (args, end) = balancedArgs(s, m.end - 1)
-        s.substring(0, m.start) + f(args) + rewriteCall(s.substring(end), fn, f)
+  private final class Literals(initial: Vector[String]) {
+    private val slots = initial.toArray
+    private val translated = scala.collection.mutable.Set.empty[Int]
+    private def slot(tok: String): Option[Int] = {
+      val t = wtrim(tok)
+      slotRe.findFirstMatchIn(t).collect {
+        case m if m.matched == t => m.group(1).toInt }
     }
+    /** The VALUE of `tok` when it is exactly one masked literal. */
+    def value(tok: String): Option[String] = slot(tok).map { i =>
+      val raw = slots(i)
+      raw.substring(1, raw.length - 1).replace("''", "'")
+    }
+    /** Rewrite the value of the literal `tok` through `f` (once per
+      * slot); false when `tok` is not a literal. */
+    def translate(tok: String)(f: String => String): Boolean =
+      slot(tok) match {
+        case Some(i) =>
+          if (translated.add(i)) {
+            val raw = slots(i)
+            val v = raw.substring(1, raw.length - 1).replace("''", "'")
+            slots(i) = "'" + f(v).replace("'", "''") + "'"
+          }
+          true
+        case None => false
+      }
+    def restore(s: String): String = slotRe.replaceAllIn(s, m =>
+      scala.util.matching.Regex.quoteReplacement(slots(m.group(1).toInt)))
   }
 
-  /** `fn(a)(x)` → `percentile(x, a)` — the CH parameterized-aggregate
-    * (combinator) call shape.
+  private val slotRe = (Sentinel + "(\\d+)" + Sentinel).r
+
+  /** One call site as a table entry sees it: `args` are the LOWERED
+    * argument texts (top-level comma split, whitespace-trimmed), `inner`
+    * the lowered text between the parens as written, and `params` the
+    * first list of the `fn(params)(args)` shape when the entry takes it.
+    * `keep` is the call as written with its arguments lowered — what a
+    * pass-through arity emits; `lits` is the statement's literal store.
     */
-  private def rewriteCombinator(s: String, fn: String): String = {
-    val re = cachedRe(s"(?i)\\b$fn\\(")
-    re.findFirstMatchIn(s) match {
-      case None => s
-      case Some(m) =>
-        val (params, afterParams) = balancedArgs(s, m.end - 1)
-        val rest = s.substring(afterParams)
-        require(rest.startsWith("("),
-          s"$fn(q)(x): expected the argument list right after the parameter list")
-        val (args, end) = balancedArgs(rest, 0)
-        s.substring(0, m.start) +
-          s"percentile(${args.mkString(", ")}, ${params.mkString(", ")})" +
-          rewriteCombinator(s.substring(afterParams + end), fn)
+  private final class Call(val name: String, written: String, first: String,
+                           second: Option[String], val lits: Literals) {
+    val inner: String = second.getOrElse(first)
+    val args: List[String] = splitArgs(inner)
+    val params: Option[List[String]] = second.map(_ => splitArgs(first))
+    def keep: String = s"$written($first)" + second.fold("")(a => s"($a)")
+  }
+
+  /** `case Args(a, b) =>` — the plain call shape with exactly these args. */
+  private object Args {
+    def unapplySeq(c: Call): Option[List[String]] =
+      if (c.params.isEmpty) Some(c.args) else None
+  }
+
+  /** `case Params(ps, args) =>` — the `fn(params)(args)` shape. */
+  private object Params {
+    def unapply(c: Call): Option[(List[String], List[String])] =
+      c.params.map(_ -> c.args)
+  }
+
+  /** A table entry: `shape` names the accepted argument forms for the
+    * one arity error (`<name> expects <shape>, got <n>`), raised for any
+    * call `lower` is not defined at; `params` says whether a `(…)`
+    * directly after the argument list is the entry's second list.
+    */
+  private final case class Fn(name: String, shape: String, params: Boolean,
+                              lower: PartialFunction[Call, String])
+
+  private def fn(name: String, shape: String)(
+      lower: PartialFunction[Call, String]): Fn = Fn(name, shape, false, lower)
+  private def paramFn(name: String, shape: String)(
+      lower: PartialFunction[Call, String]): Fn = Fn(name, shape, true, lower)
+  /** `name(…)` → `to(…)`, the argument text verbatim. */
+  private def rename(name: String, to: String): Fn =
+    fn(name, "")({ case c => s"$to(${c.inner})" })
+  /** `name(a, b)` → `to(a, b)`, the trimmed arguments re-joined. */
+  private def renameTrimmed(name: String, to: String): Fn =
+    fn(name, "")({ case c => s"$to(${c.args.mkString(", ")})" })
+  /** `name()` → `to`; a call with arguments passes through. */
+  private def nullary(name: String, to: String): Fn =
+    fn(name, "")({ case Args() => to; case c => c.keep })
+  private def refuse(name: String, msg: String): Fn =
+    fn(name, "")({ case _ => throw new IllegalArgumentException(msg) })
+
+  private def asciiLower(s: String): String =
+    s.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
+
+  /** Split the text between a call's parens at top-level commas. */
+  private def splitArgs(inner: String): List[String] =
+    balancedArgs("(" + inner + ")", 0)._1
+
+  /** The one lowering pass: every `name(` whose name is a table key
+    * (case-insensitive, at an identifier boundary) is replaced by its
+    * entry's lowering. Arguments lower first, so a call nested in a call
+    * of the same name lowers too; an entry's output is never rescanned.
+    */
+  private def lowerCalls(s: String, lits: Literals): String = {
+    val out = new StringBuilder
+    var i = 0
+    while (i < s.length) {
+      if (isIdentChar(s.charAt(i))) {
+        val start = i
+        var j = i
+        while (j < s.length && isIdentChar(s.charAt(j))) j += 1
+        val entry =
+          if (j < s.length && s.charAt(j) == '(')
+            functions.get(asciiLower(s.substring(i, j)))
+          else None
+        entry match {
+          case None =>
+            out ++= s.substring(i, j)
+            i = j
+          case Some(f) =>
+            val close1 = closingParen(s, j)
+            val first = lowerCalls(s.substring(j + 1, close1), lits)
+            i = close1 + 1
+            val second =
+              if (f.params && i < s.length && s.charAt(i) == '(') {
+                val close2 = closingParen(s, i)
+                val a = lowerCalls(s.substring(i + 1, close2), lits)
+                i = close2 + 1
+                Some(a)
+              } else None
+            val call = new Call(f.name, s.substring(start, j), first,
+              second, lits)
+            out ++= f.lower.applyOrElse(call, (c: Call) =>
+              throw new IllegalArgumentException(
+                s"${f.name} expects ${f.shape}, got ${c.args.length}"))
+        }
+      } else {
+        out += s.charAt(i)
+        i += 1
+      }
     }
+    out.toString
+  }
+
+  /** Index of the `)` matching the `(` at `open`. */
+  private def closingParen(s: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '(' => depth += 1
+        case ')' =>
+          depth -= 1
+          if (depth == 0) return i
+        case _ => ()
+      }
+      i += 1
+    }
+    throw new IllegalArgumentException(
+      s"unbalanced parentheses after position $open in: $s")
+  }
+
+  /** Every ClickHouse function this dialect lowers, one entry per name
+    * (case-insensitive; building the table fails on a duplicate). A few
+    * keys are Spark spellings the table also normalizes (`date_sub`'s
+    * unit form, `transform`'s value-mapping form, the
+    * `approx_count_distinct(p)(x)` shape the uniq family shares).
+    */
+  private lazy val functions: Map[String, Fn] = {
+    val all = Seq(
+      // ---- renames with identical argument shapes ---------------------
+      rename("countIf", "count_if"),
+      rename("arrayJoin", "explode"),
+      rename("anyLast", "any_value"),
+      rename("any", "any_value"),
+      rename("dateTrunc", "date_trunc"),
+      rename("argMax", "max_by"),
+      rename("argMin", "min_by"),
+      rename("groupArray", "collect_list"),
+      rename("groupUniqArray", "collect_set"),
+      rename("has", "array_contains"),
+      rename("indexOf", "array_position"),
+      rename("arrayReverse", "reverse"),
+      rename("arraySort", "array_sort"),
+      rename("arrayFlatten", "flatten"),
+      rename("arrayConcat", "concat"),
+      rename("arrayDistinct", "array_distinct"),
+      // try_: CH's out-of-bounds arrayElement yields the type default —
+      // NULL here (the documented stance); ANSI element_at would throw
+      rename("arrayElement", "try_element_at"),
+      rename("arrayPushBack", "array_append"),
+      rename("arrayPushFront", "array_prepend"),
+      rename("arrayZip", "arrays_zip"),
+      // everyday string tier: literal replace, affix probes, padding,
+      // one-sided trims
+      rename("replaceAll", "replace"),
+      rename("startsWith", "startswith"),
+      rename("endsWith", "endswith"),
+      rename("leftPad", "lpad"),
+      rename("rightPad", "rpad"),
+      rename("trimLeft", "ltrim"),
+      rename("trimRight", "rtrim"),
+      rename("trimBoth", "trim"),
+      rename("substringUTF8", "substring"),
+      rename("lowerUTF8", "lower"),
+      rename("upperUTF8", "upper"),
+      rename("concatWithSeparator", "concat_ws"),
+      // map accessors over MAP columns
+      rename("mapKeys", "map_keys"),
+      rename("mapValues", "map_values"),
+      rename("mapContains", "map_contains_key"),
+      rename("lengthUTF8", "char_length"),
+      // 64-bit hash stance: same bucketing role, hash VALUES differ — do
+      // not compare digests across engines
+      rename("cityHash64", "xxhash64"),
+      rename("sipHash64", "xxhash64"),
+      rename("farmHash64", "xxhash64"),
+      rename("farmFingerprint64", "xxhash64"),
+      rename("halfMD5", "xxhash64"),
+      rename("toUnixTimestamp", "unix_timestamp"),
+      rename("fromUnixTimestamp", "from_unixtime"),
+      rename("toDate", "to_date"),
+      rename("toYear", "year"),
+      rename("toMonth", "month"),
+      rename("toDayOfMonth", "dayofmonth"),
+      rename("toHour", "hour"),
+      rename("toMinute", "minute"),
+      rename("toSecond", "second"),
+      rename("toQuarter", "quarter"),
+      rename("toDayOfYear", "dayofyear"),
+      // moment aggregates (same formulas both engines; kurtPop below —
+      // CH is non-excess kurtosis)
+      rename("stddevPop", "stddev_pop"),
+      rename("stddevSamp", "stddev_samp"),
+      rename("varPop", "var_pop"),
+      rename("varSamp", "var_samp"),
+      rename("covarPop", "covar_pop"),
+      rename("covarSamp", "covar_samp"),
+      rename("skewPop", "skewness"),
+      rename("groupBitAnd", "bit_and"),
+      rename("groupBitOr", "bit_or"),
+      rename("groupBitXor", "bit_xor"),
+      // exact mode where CH's is an approximate heavy-hitter — the value
+      // CH "usually" returns is the one this always returns
+      rename("anyHeavy", "mode"),
+      rename("mapFromArrays", "map_from_arrays"),
+      rename("arrayIntersect", "array_intersect"),
+      rename("hasAny", "arrays_overlap"),
+      rename("bitShiftLeft", "shiftleft"),
+      rename("bitShiftRight", "shiftright"),
+      rename("bitCount", "bit_count"),
+      rename("makeDate", "make_date"),
+      rename("makeDateTime", "make_timestamp"),
+      rename("toLastDayOfMonth", "last_day"),
+      rename("toValidUTF8", "make_valid_utf8"),
+      // JSON_VALUE's '$.k' path IS get_json_object's path grammar
+      rename("JSON_VALUE", "get_json_object"),
+      rename("currentUser", "current_user"),
+      // window-function dialect spelling; Spark's nth_value is the same
+      rename("nthValue", "nth_value"),
+      // Levenshtein: identical metric both engines (editDistance is CH's
+      // alias; the UTF8 spellings coincide — Spark strings are UTF-8)
+      rename("levenshteinDistance", "levenshtein"),
+      rename("editDistanceUTF8", "levenshtein"),
+      rename("editDistance", "levenshtein"),
+      rename("widthBucket", "width_bucket"),
+      rename("leftUTF8", "left"),
+      rename("rightUTF8", "right"),
+      // the Form spellings ARE application/x-www-form-urlencoded —
+      // exactly Spark's url_encode/url_decode contract
+      rename("encodeURLFormComponent", "url_encode"),
+      rename("decodeURLFormComponent", "url_decode"),
+      // tuple() → struct() (fields col1…colN — CH's positional contract;
+      // tupleElement below resolves positions to those names)
+      rename("tuple", "struct"),
+      renameTrimmed("substringIndex", "substring_index"),
+      renameTrimmed("initcapUTF8", "initcap"),
+      renameTrimmed("lagInFrame", "lag"),
+      renameTrimmed("leadInFrame", "lead"),
+      renameTrimmed("startsWithUTF8", "startswith"),
+      renameTrimmed("endsWithUTF8", "endswith"),
+      renameTrimmed("positiveModulo", "pmod"),
+      // toTypeName renders SPARK type names (int/bigint/string…), not CH
+      // names — documented divergence (the value is runtime-computed, so
+      // no textual reverse map can apply)
+      renameTrimmed("toTypeName", "typeof"),
+      renameTrimmed("concatAssumeInjective", "concat"),
+      // ---- zero-argument constants ----------------------------------
+      nullary("count", "count(*)"),
+      nullary("today", "current_date()"),
+      nullary("yesterday", "date_sub(current_date(), 1)"),
+      nullary("generateUUIDv4", "uuid()"),
+      nullary("UTCTimestamp", "current_timestamp()"),
+      // no block granularity in a declarative plan: per-query now() IS
+      // the per-block now() (documented collapse)
+      nullary("nowInBlock", "current_timestamp()"),
+      // flat namespace (SHOW DATABASES lists default+system): the session
+      // database is the constant 'default'; hostName is the single-JVM
+      // analog's stand-in (no cluster hostnames to report)
+      nullary("currentDatabase", "'default'"),
+      nullary("hostName", "'localhost'"),
+      // constant-per-query random: exactly a scalar subquery's contract
+      // (over the UInt32 rand() below)
+      nullary("randConstant",
+        "(SELECT CAST(floor(rand() * 4294967296.0D) AS BIGINT))"),
+      // session introspection: UTC sessions
+      nullary("timeZone", "'UTC'"),
+      // bare rand()/rand64(): CH's contracts are uniform UInt32 / UInt64
+      // INTEGERS — Spark's rand() is the [0,1) double (that is CH's
+      // randCanonical). Passing rand() through unchanged would silently
+      // swap a 0..2^32 integer for a 0..1 double, so the integer
+      // contracts lower explicitly. rand64 carries the 53 bits of one
+      // double draw spread over the signed-64 range (CH's value is fully
+      // random in 64 bits — documented entropy divergence; the BUCKETING
+      // role, `ORDER BY rand()` sampling, is unaffected).
+      nullary("rand", "CAST(floor(rand() * 4294967296.0D) AS BIGINT)"),
+      nullary("rand64",
+        "CAST(floor((rand() - 0.5D) * 1.8446744073709552E19) AS BIGINT)"),
+      nullary("randCanonical", "rand()"),
+      // now('tz'): the same instant rendered in tz (UTC sessions — the
+      // toTimeZone wall-clock stance)
+      fn("now", "0-1 arguments") {
+        case Args() => "current_timestamp()"
+        case Args(tz) => s"convert_timezone('UTC', $tz, current_timestamp())"
+      },
+      // sub-second family: sessions run MICROSECOND timestamps (Spark's
+      // native precision) — now64's precision argument is accepted and
+      // ignored (micros is what you get)
+      fn("now64", "0-1 arguments (the timezone form is not supported — " +
+          "session UTC)") {
+        case Args() | Args(_) => "current_timestamp()"
+      },
+      // ---- the uniq family: Spark's HLL++ -----------------------------
+      // uniq and its sketch spellings (uniqCombined[64]/uniqHLL12/
+      // uniqTheta) all map onto approx_count_distinct — same role,
+      // different sketch: do not compare estimates across engines. The
+      // parameterized form drops its precision list (Spark's HLL++ has
+      // its own accuracy knob).
+      uniq("approx_count_distinct"), uniq("uniq"), uniq("uniqCombined64"),
+      uniq("uniqCombined"), uniq("uniqHLL12"), uniq("uniqTheta"),
+      fn("uniqExact", "")({ case c => s"count(DISTINCT ${c.args.mkString(", ")})" }),
+      fn("countDistinct", "")({
+        case c => s"count(DISTINCT ${c.args.mkString(", ")})" }),
+      // ---- the -If combinator family (CASE filters: the NULLs from the
+      // CASE are what each Spark aggregate already skips) --------------
+      fn("sumIf", "2 arguments") {
+        case Args(x, p) => s"sum(CASE WHEN $p THEN $x ELSE 0 END)" },
+      fn("avgIf", "2 arguments") {
+        case Args(x, p) => s"avg(CASE WHEN $p THEN $x END)" },
+      fn("maxIf", "2 arguments") {
+        case Args(x, p) => s"max(CASE WHEN $p THEN $x END)" },
+      fn("minIf", "2 arguments") {
+        case Args(x, p) => s"min(CASE WHEN $p THEN $x END)" },
+      paramFn("uniqIf", "2 arguments") {
+        case Args(x, p) => s"approx_count_distinct(CASE WHEN $p THEN $x END)"
+        case Params(List(_, _), args) =>
+          s"approx_count_distinct(${args.mkString(", ")})"
+      },
+      fn("uniqExactIf", "2 arguments") {
+        case Args(x, p) => s"count(DISTINCT CASE WHEN $p THEN $x END)" },
+      fn("anyIf", "2 arguments") {
+        case Args(x, p) => s"any_value(CASE WHEN $p THEN $x END, true)" },
+      fn("groupArrayIf", "2 arguments") {
+        case Args(x, p) => s"collect_list(CASE WHEN $p THEN $x END)" },
+      fn("countDistinctIf", "(x…, cond)") {
+        case Args(args @ _*) if args.length >= 2 =>
+          val cond = args.last
+          s"count(DISTINCT ${args.init.map(a =>
+            s"CASE WHEN $cond THEN $a END").mkString(", ")})"
+      },
+      // null ordering values are skipped by min_by/max_by, so the CASE
+      // filter composes exactly like the scalar -If family
+      fn("argMinIf", "(x, ord, cond)") { case Args(x, y, cond) =>
+        s"min_by(CASE WHEN $cond THEN $x END, CASE WHEN $cond THEN $y END)" },
+      fn("argMaxIf", "(x, ord, cond)") { case Args(x, y, cond) =>
+        s"max_by(CASE WHEN $cond THEN $x END, CASE WHEN $cond THEN $y END)" },
+      fn("medianIf", "(x, cond)") {
+        case Args(x, cond) => s"percentile(CASE WHEN $cond THEN $x END, 0.5)" },
+      paramFn("quantileIf", "(q)(x, cond)") { case Params(List(q), List(x, c)) =>
+        s"percentile(CASE WHEN $c THEN $x END, $q)" },
+      // ---- the higher-order array family: lambda-FIRST argument order
+      // swaps to Spark's array-first builtins (identical `x -> expr`
+      // lambda syntax both sides, so the lambda text passes through) ----
+      fn("arrayMap", "(lambda, arr[, arr2])") {
+        case Args(f, a) => s"transform($a, $f)"
+        case Args(f, a, b) => s"zip_with($a, $b, $f)" // the 2-array lockstep
+      },
+      fn("arrayFilter", "(lambda, arr)") { case Args(f, a) => s"filter($a, $f)" },
+      fn("arrayExists", "(lambda, arr)") { case Args(f, a) => s"exists($a, $f)" },
+      fn("arrayAll", "(lambda, arr)") { case Args(f, a) => s"forall($a, $f)" },
+      fn("arrayCount", "(lambda, arr) or (arr)") {
+        case Args(f, a) => s"size(filter($a, $f))"
+        // the lambdaless form counts non-zero elements (CH's contract)
+        case Args(a) => s"size(filter($a, __x -> __x != 0))"
+      },
+      // first match / its 1-based position; NO match: Spark NULL / 0
+      // where CH yields the type default / 0 (the NULL-vs-default stance —
+      // wrap in coalesce where the default matters)
+      fn("arrayFirst", "(lambda, arr)") {
+        case Args(f, a) => s"try_element_at(filter($a, $f), 1)" },
+      fn("arrayFirstIndex", "(lambda, arr)") {
+        case Args(f, a) => s"array_position(transform($a, $f), true)" },
+      // last match / its 1-based position (NULL / 0 when none — the
+      // NULL-vs-default stance, same as arrayFirst)
+      fn("arrayLastIndex", "(lambda, arr)") { case Args(f, a) =>
+        s"(CASE WHEN array_position(reverse(transform($a, $f)), true) = 0 " +
+          s"THEN 0 ELSE size($a) + 1 - " +
+          s"array_position(reverse(transform($a, $f)), true) END)" },
+      fn("arrayLast", "(lambda, arr)") {
+        case Args(f, a) => s"try_element_at(filter($a, $f), -1)" },
+      fn("arrayUniq", "1 array") { case Args(a) => s"size(array_distinct($a))" },
+      fn("arraySlice", "(arr, offset[, length])") {
+        case Args(a, off) => s"slice($a, $off, size($a))"
+        case Args(a, off, len) => s"slice($a, $off, $len)"
+      },
+      fn("arrayEnumerate", "1 array") { case Args(a) => s"sequence(1, size($a))" },
+      // ---- date/time ----------------------------------------------------
+      fn("toYYYYMM", "")({ case c =>
+        s"CAST(date_format(${c.args.mkString(", ")}, 'yyyyMM') AS INT)" }),
+      // toStartOfInterval(ts, INTERVAL n unit) → epoch-grid floor (the
+      // arbitrary-width bucket date_trunc can't express); calendar units
+      // refuse loudly in intervalSeconds
+      fn("toStartOfInterval", "(ts, INTERVAL n unit)") { case Args(x, iv) =>
+        val secs = intervalSeconds(iv, "toStartOfInterval")
+        s"timestamp_seconds((unix_timestamp($x) DIV $secs) * $secs)" },
+      // formatDateTime(ts, '%…') → date_format(ts, <translated pattern>):
+      // the %-pattern literal is TRANSLATED IN ITS MASK SLOT (doc on
+      // chDateTimeFormat); a computed format refuses loudly, CH dashboards
+      // always use a literal
+      fn("formatDateTime", "(ts, 'format') — the timezone form is not " +
+          "supported (session UTC)") { case c @ Args(x, f) =>
+        require(c.lits.translate(f)(chDateTimeFormat),
+          "formatDateTime: the format argument must be a string literal")
+        s"date_format($x, $f)" },
+      // Joda-syntax formatter: Joda patterns are the ancestor of Spark's
+      // own datetime pattern dialect — yyyy/MM/dd/HH/mm/ss/EEE/MMM all
+      // coincide, so the literal passes straight through (divergent
+      // exotic slots fail loudly in Spark's formatter, not silently)
+      fn("formatDateTimeInJodaSyntax", "(ts, 'format') (the timezone form " +
+          "is not supported — session UTC)") {
+        case Args(x, f) => s"date_format($x, $f)" },
+      // dateDiff counts UNIT-BOUNDARY CROSSINGS (dateDiff('year', Dec 31,
+      // Jan 1) = 1) — each unit lowers to truncate-then-subtract, which
+      // is CH-exact; Spark's timestampdiff (complete units) would be wrong
+      fn("dateDiff", "('unit', start, end) — the timezone form is not " +
+          "supported (session UTC)") { case c @ Args(u, a, b) =>
+        unitLiteral(c, u).toLowerCase match {
+          case "second" => s"(unix_timestamp($b) - unix_timestamp($a))"
+          case "minute" =>
+            s"(unix_timestamp($b) DIV 60 - unix_timestamp($a) DIV 60)"
+          case "hour" =>
+            s"(unix_timestamp($b) DIV 3600 - unix_timestamp($a) DIV 3600)"
+          case "day" => s"datediff(to_date($b), to_date($a))"
+          case "week" =>
+            s"(datediff(date_trunc('week', $b), date_trunc('week', $a)) DIV 7)"
+          case "month" =>
+            s"((year($b) * 12 + month($b)) - (year($a) * 12 + month($a)))"
+          case "quarter" =>
+            s"((year($b) * 4 + quarter($b)) - (year($a) * 4 + quarter($a)))"
+          case "year" => s"(year($b) - year($a))"
+          case other => throw new IllegalArgumentException(
+            s"dateDiff: unsupported unit '$other'")
+        }
+      },
+      // age = COMPLETE units between — exactly Spark's timestampdiff
+      fn("age", "('unit', start, end)") { case c @ Args(u, a, b) =>
+        val lit = unitLiteral(c, u).toLowerCase
+        val unit = chIntervalUnits.getOrElse(lit,
+          throw new IllegalArgumentException(s"age: unsupported unit '$lit'"))
+        s"timestampdiff($unit, $a, $b)" },
+      // ISO / Spark-default spellings only — CH's fuzzy multi-format
+      // guessing is NOT replicated (a non-ISO spelling errors, never
+      // guesses); OrNull keeps CH's null-on-unparseable contract
+      fn("parseDateTimeBestEffortOrNull", "1 argument") {
+        case Args(x) => s"try_to_timestamp($x)" },
+      fn("parseDateTimeBestEffort", "1 argument") {
+        case Args(x) => s"to_timestamp($x)" },
+      // ISO weekday (Monday=1 … Sunday=7) from Spark's Sunday=1 dayofweek
+      fn("toDayOfWeek", "1 argument") {
+        case Args(x) => s"(((dayofweek($x) + 5) % 7) + 1)" },
+      // toTimeZone(ts, tz): sessions here run UTC, so the instant's
+      // wall-clock in tz IS convert_timezone('UTC', tz, ts). The result is
+      // a TZ-less timestamp (CH instead keeps the instant and re-renders —
+      // downstream date functions see the same wall-clock either way,
+      // which is what the call is for; documented divergence in kind)
+      fn("toTimeZone", "(ts, 'tz')") {
+        case Args(x, tz) => s"convert_timezone('UTC', $tz, $x)" },
+      fn("toISOWeek", "1 argument") { case Args(x) => s"weekofyear($x)" },
+      // ISO week-numbering year = the year of that week's Thursday
+      fn("toISOYear", "1 argument") {
+        case Args(x) => s"year(date_add(date_trunc('week', $x), 3))" },
+      // Monday of ISO week 1 = the week containing Jan 4 of the ISO year
+      fn("toStartOfISOYear", "1 argument") { case Args(x) =>
+        s"CAST(date_trunc('week', make_date(year(date_add(" +
+          s"date_trunc('week', $x), 3)), 1, 4)) AS DATE)" },
+      // toWeek/toYearWeek: ISO mode (3) only — the default mode 0
+      // (Sunday-first, week 0..53) has no Spark twin and silently
+      // diverging week numbers are worse than a refusal
+      fn("toWeek", "") {
+        case Args(d0, mode) if mode.trim == "3" => s"weekofyear($d0)"
+        case _ => throw new IllegalArgumentException(
+          "toWeek: only the ISO mode lowers (toWeek(d, 3) or " +
+            "toISOWeek(d)) — mode 0's Sunday-first week 0..53 numbering " +
+            "has no Spark twin")
+      },
+      fn("toYearWeek", "") {
+        case Args(d0, mode) if mode.trim == "3" =>
+          s"(year(date_add(date_trunc('week', $d0), 3)) * 100 + " +
+            s"weekofyear($d0))"
+        case _ => throw new IllegalArgumentException(
+          "toYearWeek: only the ISO mode lowers (toYearWeek(d, 3)) — " +
+            "mode 0 has no Spark twin")
+      },
+      fn("toMonday", "1 argument") {
+        case Args(x) => s"CAST(date_trunc('WEEK', $x) AS DATE)" },
+      fn("toYYYYMMDD", "1 argument") {
+        case Args(x) => s"CAST(date_format($x, 'yyyyMMdd') AS INT)" },
+      fn("toYYYYMMDDhhmmss", "1 argument") {
+        case Args(x) => s"CAST(date_format($x, 'yyyyMMddHHmmss') AS BIGINT)" },
+      fn("toDateTime64", "(x[, precision]) (the timezone form is not " +
+          "supported — session UTC)") {
+        case Args(x) => s"CAST($x AS TIMESTAMP)"
+        case Args(x, _) => s"CAST($x AS TIMESTAMP)"
+      },
+      fn("toUnixTimestamp64Milli", "1 argument") {
+        case Args(x) => s"(unix_micros(CAST($x AS TIMESTAMP)) DIV 1000)" },
+      fn("toUnixTimestamp64Micro", "1 argument") {
+        case Args(x) => s"unix_micros(CAST($x AS TIMESTAMP))" },
+      fn("toUnixTimestamp64Nano", "1 argument") {
+        case Args(x) => s"(unix_micros(CAST($x AS TIMESTAMP)) * 1000)" },
+      fn("fromUnixTimestamp64Milli", "1 argument") {
+        case Args(x) => s"timestamp_millis($x)" },
+      fn("fromUnixTimestamp64Micro", "1 argument") {
+        case Args(x) => s"timestamp_micros($x)" },
+      fn("fromUnixTimestamp64Nano", "1 argument") {
+        case Args(x) => s"timestamp_micros(CAST(($x) DIV 1000 AS BIGINT))" },
+      fn("dateName", "('part', ts)") { case c @ Args(u, x) =>
+        unitLiteral(c, u).toLowerCase match {
+          case "year" => s"CAST(year($x) AS STRING)"
+          case "quarter" => s"CAST(quarter($x) AS STRING)"
+          case "month" => s"date_format($x, 'MMMM')"
+          case "week" => s"CAST(weekofyear($x) AS STRING)"
+          case "dayofyear" => s"CAST(dayofyear($x) AS STRING)"
+          case "day" => s"CAST(dayofmonth($x) AS STRING)"
+          case "weekday" => s"date_format($x, 'EEEE')"
+          case "hour" => s"CAST(hour($x) AS STRING)"
+          case "minute" => s"CAST(minute($x) AS STRING)"
+          case "second" => s"CAST(second($x) AS STRING)"
+          case other => throw new IllegalArgumentException(
+            s"dateName: unsupported part '$other'")
+        }
+      },
+      // CH toTime: the time-of-day re-based onto 1970-01-02
+      fn("toTime", "1 argument") { case Args(x) =>
+        s"timestamp_seconds(86400 + (unix_timestamp($x) % 86400))" },
+      fn("toMillisecond", "")({ case c =>
+        s"CAST(date_format(${c.args.mkString(", ")}, 'SSS') AS INT)" }),
+      // addDate/subDate: the interval spellings of the add/subtract family
+      fn("addDate", "(date, INTERVAL…)") { case Args(d0, iv) => s"($d0 + $iv)" },
+      fn("subDate", "(date, INTERVAL…)") { case Args(d0, iv) => s"($d0 - $iv)" },
+      // the unit form of date_sub (the 2-arg day form is native Spark and
+      // passes through; a Date input widens to TIMESTAMP — the X129 stance)
+      fn("date_sub", "") {
+        case Args(u, n, d0)
+            if "(?i)^(YEAR|QUARTER|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND)$".r
+              .findFirstIn(u.trim).isDefined =>
+          s"timestampadd(${u.trim}, -($n), $d0)"
+        case c => s"date_sub(${c.args.mkString(", ")})"
+      },
+      // timeSlots(start, duration[, size]): the size-second grid stamps
+      // covering [start, start+duration] — CH's session-window helper.
+      // start is inlined twice: pass a column, not an expensive expression
+      // (the arrayCumSum stance)
+      fn("timeSlots", "(start, duration[, size])") {
+        case Args(args @ _*) if args.length == 2 || args.length == 3 =>
+          val st = args(0); val dur = args(1)
+          val sz = if (args.length == 3) s"(${args(2)})" else "1800"
+          s"transform(sequence((unix_timestamp($st) DIV $sz) * $sz, " +
+            s"((unix_timestamp($st) + ($dur)) DIV $sz) * $sz, $sz), " +
+            "__t -> timestamp_seconds(__t))"
+      },
+      fn("monthName", "1 argument") {
+        case Args(x) => s"date_format($x, 'MMMM')" },
+      // timeDiff(older, newer) = whole seconds between them
+      fn("timeDiff", "2 arguments") {
+        case Args(a, b) => s"(unix_timestamp($b) - unix_timestamp($a))" },
+      // the calendar half of the toRelative*Num family: month/quarter/year
+      // count calendar boundaries, week counts Monday-aligned weeks from
+      // the epoch's first Monday
+      fn("toRelativeMonthNum", "1 argument") {
+        case Args(x) => s"(year($x) * 12 + month($x))" },
+      fn("toRelativeQuarterNum", "1 argument") {
+        case Args(x) => s"(year($x) * 4 + quarter($x))" },
+      fn("toRelativeYearNum", "1 argument") { case Args(x) => s"year($x)" },
+      fn("toRelativeWeekNum", "1 argument") { case Args(x) =>
+        s"((datediff(CAST($x AS DATE), DATE'1970-01-05') + 7) DIV 7)" },
+      fn("toModifiedJulianDay", "1 argument") {
+        case Args(x) => s"datediff(CAST($x AS DATE), DATE'1858-11-17')" },
+      fn("fromModifiedJulianDay", "1 argument") {
+        case Args(n) => s"date_add(DATE'1858-11-17', CAST($n AS INT))" },
+      fn("toDate32", "1 argument") { case Args(x) => s"to_date($x)" },
+      fn("toDateTime32", "1 argument (the timezone form is not supported " +
+          "— session UTC)") { case Args(x) => s"CAST($x AS TIMESTAMP)" },
+      fn("toBool", "1 argument") { case Args(x) => s"CAST($x AS BOOLEAN)" },
+      // UUIDs live as their canonical STRING spelling here (no UUID type)
+      fn("toUUID", "1 argument") { case Args(x) => s"CAST($x AS STRING)" },
+      // toString(ts, 'tz') — CH's render-in-timezone form; the 1-arg form
+      // is the cast family's STRING member
+      fn("toString", "1-2 arguments") {
+        case Args(x) => s"CAST($x AS STRING)"
+        case Args(x, tz) => s"date_format(convert_timezone('UTC', $tz, " +
+          s"$x), 'yyyy-MM-dd HH:mm:ss')"
+      },
+      fn("accurateCastOrNull", "(x, 'Type')") { case c @ Args(x, t) =>
+        s"try_cast($x AS ${chTypeOf(c, t)})" },
+      fn("accurateCast", "(x, 'Type')") { case c @ Args(x, t) =>
+        s"CAST($x AS ${chTypeOf(c, t)})" },
+      // ---- strings ------------------------------------------------------
+      // CH position(haystack, needle) swaps arguments vs Spark's locate;
+      // the ANSI form position(needle IN haystack) — which CH also
+      // accepts — arrives as ONE argument and both engines parse it
+      // natively, so it passes through
+      fn("position", "2-3 arguments") {
+        case Args(h, n) => s"locate($n, $h)"
+        case Args(h, n, start) => s"locate($n, $h, $start)"
+        case Args(single) if "(?i)\\s+IN\\s+".r.findFirstIn(single).isDefined =>
+          s"position($single)"
+      },
+      fn("positionUTF8", "(haystack, needle)") {
+        case Args(h, n) => s"locate($n, $h)" },
+      fn("positionCaseInsensitive", "(haystack, needle)") {
+        case Args(h, n) => s"locate(lower($n), lower($h))" },
+      fn("positionCaseInsensitiveUTF8", "(haystack, needle)") {
+        case Args(h, n) => s"locate(lower($n), lower($h))" },
+      // multiIf(c1, v1, c2, v2, …, else) → the CASE chain it abbreviates
+      fn("multiIf", "an odd argument count >= 3") {
+        case Args(args @ _*) if args.length >= 3 && args.length % 2 == 1 =>
+          val whens = args.init.grouped(2)
+            .map { case Seq(c, v) => s"WHEN $c THEN $v" }.mkString(" ")
+          s"(CASE $whens ELSE ${args.last} END)"
+      },
+      fn("empty", "1 argument") { case Args(x) => s"($x = '')" },
+      fn("notEmpty", "1 argument") { case Args(x) => s"($x <> '')" },
+      // hasToken(col, 'tok') → token-membership under the ONE tokenizer
+      // constant the token skip index shares (Catalog.TokenSeparators),
+      // so the SQL predicate and the storage-side bloom can never
+      // disagree on what a token is
+      fn("hasToken", "2 arguments") { case Args(c, tok) =>
+        s"array_contains(split($c, '${graft.catalog.Catalog.TokenSeparators}'), $tok)" },
+      // splitByRegexp keeps the separator a REGEX (splitByChar \Q-quotes)
+      fn("splitByRegexp", "(pattern, s)") { case Args(re, x) => s"split($x, $re)" },
+      fn("countSubstrings", "(haystack, needle)") { case Args(h, n) =>
+        // occurrence count via remove-and-measure (h inlined twice, n
+        // three times — pass columns, not expensive expressions)
+        s"((length($h) - length(replace($h, $n))) DIV length($n))" },
+      fn("base64Encode", "1 argument") {
+        case Args(x) => s"base64(CAST($x AS BINARY))" },
+      fn("base64Decode", "1 argument") {
+        case Args(x) => s"CAST(unbase64($x) AS STRING)" },
+      fn("splitByWhitespace", "1 argument") {
+        case Args(x) => s"filter(split($x, '\\\\s+'), __t -> __t <> '')" },
+      // tokens(): CH splits on non-alphanumeric ASCII; this splits on
+      // non-alphanumeric, period — non-ASCII letters also separate here
+      // (documented divergence on non-ASCII corpora; the text operators
+      // in graft.operators.TextAnalysis are the serious tokenizers)
+      fn("tokens", "1 argument") { case Args(x) =>
+        s"filter(split($x, '[^a-zA-Z0-9]+'), __t -> __t != '')" },
+      // character n-grams (CH counts bytes; Spark strings index by
+      // codepoint — identical on ASCII, documented divergence past it)
+      fn("ngrams", "(s, n)") { case Args(x, n) =>
+        s"(CASE WHEN length($x) < ($n) THEN array() " +
+          s"ELSE transform(sequence(1, length($x) - ($n) + 1), " +
+          s"__i -> substring($x, __i, $n)) END)" },
+      fn("appendTrailingCharIfAbsent", "(s, char)") { case Args(x, c) =>
+        s"(CASE WHEN ($x) = '' OR endswith($x, $c) THEN $x " +
+          s"ELSE concat($x, $c) END)" },
+      // format('{} and {}', …) → format_string: the {}-mask literal
+      // translates IN ITS SLOT ({} → %s, {N} → %(N+1)$s, % → %%)
+      fn("format", "('pattern', arg…)") {
+        case c @ Args(f, rest @ _*) if rest.nonEmpty =>
+          require(c.lits.translate(f)(chFormatPattern),
+            "format: the pattern argument must be a string literal")
+          s"format_string($f, ${rest.mkString(", ")})"
+      },
+      // multi-needle search
+      fn("multiSearchAny", "(haystack, [needles…])") {
+        case Args(h, arr) => s"exists($arr, __n -> locate(__n, $h) > 0)" },
+      fn("multiMatchAny", "(haystack, [patterns])") {
+        case Args(h, pats) => s"exists($pats, __p -> $h RLIKE __p)" },
+      fn("multiSearchFirstIndex", "(haystack, [needles])") {
+        case Args(h, needles) =>
+          // CH returns the index of the needle whose occurrence is
+          // LEFTMOST in the haystack (not the first needle that matches
+          // anywhere); ties on position resolve to the lower index —
+          // array_position finds the first element equal to the min
+          def positions = s"transform($needles, __n -> locate(__n, $h))"
+          s"CAST(coalesce(array_position($positions, " +
+            s"array_min(filter($positions, __p -> __p > 0))), 0) AS INT)"
+      },
+      fn("multiSearchAllPositions", "(haystack, [needles])") {
+        case Args(h, ns) => s"transform($ns, __n -> locate(__n, $h))" },
+      // leftmost occurrence position of ANY needle, 0 when none — the
+      // multiSearchFirstIndex contract transposed to positions
+      fn("multiSearchFirstPosition", "(haystack, [needles])") {
+        case Args(h, ns) => s"coalesce(array_min(filter(transform($ns, " +
+          s"__n -> locate(__n, $h)), __p -> __p > 0)), 0)" },
+      // ---- the regex family: CH evaluates RE2, Spark Java regex — valid
+      // on the RE2∩Java overlap; a literal pattern using a construct the
+      // engines disagree on refuses (guardRegex) ---------------------
+      fn("match", "(haystack, pattern)") { case c @ Args(h, p) =>
+        guardRegex(c, p)
+        s"regexp_like($h, $p)" },
+      // CH replacement backrefs spell \1 (source text `\\1` or `\1`);
+      // Java's spell $1 — translated IN THE SLOT, re-escaping literal `$`
+      // so it survives both Spark's string unescape and Java's
+      // replacement parser. Computed replacements pass untranslated.
+      fn("replaceRegexpAll", "(haystack, pattern, replacement)") {
+        case c @ Args(h, p, r) =>
+          guardRegex(c, p)
+          c.lits.translate(r)(javaReplacement)
+          s"regexp_replace($h, $p, $r)"
+      },
+      // extract/extractAll: CH takes the FIRST CAPTURE GROUP when the
+      // pattern declares one, the whole match otherwise — the group
+      // choice needs the literal pattern bytes (computed patterns refuse)
+      fn("extractAll", "(haystack, 'pattern')") { case c @ Args(h, p) =>
+        s"regexp_extract_all($h, $p, ${regexGroupIdx(c, p)})" },
+      fn("extract", "(haystack, 'pattern') or (field FROM ts)") {
+        // the ANSI datetime-field form (extract(YEAR FROM ts)) — native
+        // to both engines, passes through
+        case Args(single) if "(?i)\\s+FROM\\s+".r.findFirstIn(single).isDefined =>
+          s"extract($single)"
+        case c @ Args(h, p) =>
+          s"regexp_extract($h, $p, ${regexGroupIdx(c, p)})"
+      },
+      fn("countMatches", "(haystack, 'pattern')") { case c @ Args(h, p) =>
+        guardRegex(c, p)
+        s"size(regexp_extract_all($h, $p, 0))" },
+      // ---- URL family → parse_url probes (full URLs; scheme-less strings
+      // parse host-less here — CH's raw-text rules differ on those). The
+      // RFC variants share the lowering with their plain spellings
+      // (RFC-3986 edge inputs may parse host-less — the same stance) ---
+      fn("protocol", "1 argument") {
+        case Args(u) => s"parse_url($u, 'PROTOCOL')" },
+      fn("domain", "1 argument") { case Args(u) => s"parse_url($u, 'HOST')" },
+      fn("domainRFC", "1 argument") { case Args(u) => s"parse_url($u, 'HOST')" },
+      fn("domainWithoutWWW", "1 argument") { case Args(u) =>
+        s"regexp_replace(parse_url($u, 'HOST'), '^www\\\\.', '')" },
+      fn("domainWithoutWWWRFC", "1 argument") { case Args(u) =>
+        s"regexp_replace(parse_url($u, 'HOST'), '^www\\\\.', '')" },
+      fn("topLevelDomain", "1 argument") { case Args(u) =>
+        s"regexp_extract(parse_url($u, 'HOST'), '\\\\.([^.]+)$$', 1)" },
+      fn("topLevelDomainRFC", "1 argument") { case Args(u) =>
+        s"regexp_extract(parse_url($u, 'HOST'), '\\\\.([^.]+)$$', 1)" },
+      fn("pathFull", "1 argument") { case Args(u) => s"parse_url($u, 'FILE')" },
+      fn("path", "1 argument") { case Args(u) => s"parse_url($u, 'PATH')" },
+      fn("queryString", "1 argument") {
+        case Args(u) => s"parse_url($u, 'QUERY')" },
+      fn("extractURLParameter", "(url, key)") {
+        case Args(u, k) => s"parse_url($u, 'QUERY', $k)" },
+      // removes '?' through the query string, keeping any #fragment (CH)
+      fn("cutQueryString", "1 argument") {
+        case Args(u) => s"regexp_replace($u, '\\\\?[^#]*', '')" },
+      fn("fragment", "1 argument") {
+        case Args(u) => s"coalesce(parse_url($u, 'REF'), '')" },
+      fn("cutFragment", "1 argument") {
+        case Args(u) => s"split_part($u, '#', 1)" },
+      // query-onwards text: '?' to end (fragment included — CH's shape);
+      // a fragment-only URL returns '' here where CH keeps '#f' (edge
+      // divergence, documented)
+      fn("queryStringAndFragment", "1 argument") {
+        case Args(u) => s"regexp_extract($u, '\\\\?(.*)', 1)" },
+      fn("netloc", "1 argument") {
+        case Args(u) => s"coalesce(parse_url($u, 'AUTHORITY'), '')" },
+      fn("port", "1 argument here (the default_port form: wrap in CASE " +
+          "WHEN port(u) = 0)") { case Args(u) =>
+        s"CAST(coalesce(nullif(regexp_extract(parse_url($u, " +
+          s"'AUTHORITY'), ':(\\\\d+)$$', 1), ''), '0') AS INT)" },
+      // percent-encoding (the non-Form spellings): CH encodes space as
+      // %20 and decodes '+' literally — adjust around Spark's
+      // form-encoding url_encode/url_decode
+      fn("encodeURLComponent", "1 argument") {
+        case Args(u) => s"replace(url_encode($u), '+', '%20')" },
+      fn("decodeURLComponent", "1 argument") {
+        case Args(u) => s"url_decode(replace($u, '+', '%2B'))" },
+      // IPv4 render/parse: pure octet bit arithmetic — the argument is
+      // INLINED once per octet (pass a column, not an expensive expression)
+      fn("IPv4NumToString", "1 argument") { case Args(n) =>
+        s"concat_ws('.', CAST(($n) DIV 16777216 % 256 AS STRING), " +
+          s"CAST(($n) DIV 65536 % 256 AS STRING), " +
+          s"CAST(($n) DIV 256 % 256 AS STRING), " +
+          s"CAST(($n) % 256 AS STRING))" },
+      fn("IPv4StringToNum", "1 argument") { case Args(x) => ipv4Num(x) },
+      // isIPAddressInRange with a LITERAL IPv4 CIDR: the prefix mask folds
+      // to a constant and the address side reuses the IPv4StringToNum
+      // octet arithmetic (IPv6 has no 128-bit integer here — refuses)
+      fn("isIPAddressInRange", "(addr, 'cidr')") { case c @ Args(ip, cidr) =>
+        val lit = c.lits.value(cidr).getOrElse(throw new IllegalArgumentException(
+          "isIPAddressInRange: the CIDR must be a string literal"))
+        val m = "^(\\d+)\\.(\\d+)\\.(\\d+)\\.(\\d+)/(\\d+)$".r
+          .findFirstMatchIn(lit.trim).getOrElse(
+            throw new IllegalArgumentException(
+              s"isIPAddressInRange: '$lit' is not an IPv4 CIDR " +
+                "(IPv6 ranges are not supported here)"))
+        val Seq(o1, o2, o3, o4, bits) = (1 to 5).map(i => m.group(i).toLong)
+        require(bits <= 32 && Seq(o1, o2, o3, o4).forall(_ <= 255),
+          s"isIPAddressInRange: malformed CIDR '$lit'")
+        val net = (o1 << 24) | (o2 << 16) | (o3 << 8) | o4
+        val shift = 32 - bits.toInt
+        val masked = if (shift >= 32) 0L else (net >> shift) << shift
+        if (shift >= 32) "true"
+        else s"(((${ipv4Num(ip)} >> $shift) << $shift) = ${masked}L)"
+      },
+      // haversine METERS on the 6371008.8 m mean-radius sphere; CH's
+      // geoDistance applies an ellipsoid correction — metre-scale
+      // divergence on long paths (documented, same lowering)
+      fn("greatCircleDistance", "(lon1, lat1, lon2, lat2)")(haversine),
+      fn("geoDistance", "(lon1, lat1, lon2, lat2)")(haversine),
+      // ---- JSON -----------------------------------------------------------
+      // STRING-JSON door: simpleJSON*/visitParam* are CH's fast non-strict
+      // scanners — here they parse strictly via get_json_object (a
+      // document the scanner would mis-slice parses correctly instead;
+      // divergence is one-way). CH returns the TYPE DEFAULT on a miss —
+      // hence the coalesce.
+      fn("JSONHas", "(json, key…)") { case Args(json, keys @ _*) if keys.nonEmpty =>
+        s"(get_json_object($json, concat('$$.', ${jsonPath(keys)})) IS NOT NULL)" },
+      fn("JSONLength", "(json[, key…])") { case Args(json, keys @ _*) =>
+        val e =
+          if (keys.isEmpty) json
+          else s"get_json_object($json, concat('$$.', ${jsonPath(keys)}))"
+        s"coalesce(json_array_length($e), size(json_object_keys($e)), 0)" },
+      // JSONExtractRaw/Keys/ArrayRaw: raw-TEXT extraction is string-
+      // shaped, so these ride the string door — the CAST(x AS STRING)
+      // front makes them accept BOTH String and JSON/Variant inputs (a
+      // variant renders its canonical JSON text; a string is a no-op
+      // cast). The typed JSONExtract* family stays on the Variant door.
+      fn("JSONExtractRaw", "(json, key…)") {
+        case Args(json, keys @ _*) if keys.nonEmpty =>
+          s"get_json_object(CAST($json AS STRING), concat('$$.', ${jsonPath(keys)}))" },
+      fn("JSONExtractKeys", "(json[, key…])") {
+        case Args(json, keys @ _*) => s"json_object_keys(${jsonText(json, keys)})" },
+      fn("JSONExtractArrayRaw", "(json[, key…])") { case Args(json, keys @ _*) =>
+        val e = jsonText(json, keys)
+        // sequence(0, -1) DESCENDS in Spark — the empty/missing case
+        // must short-circuit to array() before the index walk.
+        // DIVERGENCE: scalar STRING elements render unquoted (s, not
+        // "s") — get_json_object's scalar contract; objects/arrays/
+        // numbers come back as raw text like CH's
+        s"(CASE WHEN coalesce(json_array_length($e), 0) > 0 THEN " +
+          s"transform(sequence(0, json_array_length($e) - 1), " +
+          s"__i -> get_json_object($e, concat('$$[', CAST(__i AS STRING), " +
+          s"']'))) ELSE array() END)" },
+      fn("JSON_EXISTS", "(json, path)") {
+        case Args(j, p) => s"(get_json_object($j, $p) IS NOT NULL)" },
+      // ---- aggregate-combinator tier: State/Merge as TEXT — the
+      // ClickHouse MV idiom, mapped to this engine's own partial forms:
+      // uniq's state is the HLL sketch binary (the agg_hll_merge
+      // machinery); sum/min/max states ARE their values (merging =
+      // re-aggregating); count's merge is a SUM of partials; avg's state
+      // is the (sum, count) pair -----------------------------------------
+      renameTrimmed("uniqState", "hll_sketch_agg"),
+      fn("uniqMerge", "1 state column") {
+        case Args(st) => s"hll_sketch_estimate(hll_union_agg($st))" },
+      fn("avgState", "1 argument") {
+        case Args(x) => s"named_struct('s', sum($x), 'c', count($x))" },
+      fn("avgMerge", "1 state column") {
+        case Args(st) => s"(sum(($st).s) / sum(($st).c))" },
+      // -StateIf: the combinators compose — state over the CASE filter
+      fn("uniqStateIf", "(x, cond)") { case Args(x, cond) =>
+        s"hll_sketch_agg(CASE WHEN $cond THEN $x END)" },
+      fn("avgStateIf", "(x, cond)") { case Args(x, cond) =>
+        s"named_struct('s', sum(CASE WHEN $cond THEN $x END), " +
+          s"'c', count(CASE WHEN $cond THEN $x END))" },
+      // -Distinct / -OrNull: DISTINCT is native inside Spark aggregates;
+      // Spark's sum/min/max/avg/any_value already return NULL on the
+      // empty set, which IS the -OrNull contract
+      fn("sumDistinct", "")({ case c => s"sum(DISTINCT ${c.args.mkString(", ")})" }),
+      fn("avgDistinct", "")({ case c => s"avg(DISTINCT ${c.args.mkString(", ")})" }),
+      fn("medianOrNull", "")({
+        case c => s"percentile(${c.args.mkString(", ")}, 0.5)" }),
+      // median is exact — the quantile-combinator stance
+      fn("median", "1 argument") { case Args(x) => s"percentile($x, 0.5)" },
+      // -Array: the aggregate over every ELEMENT of the rows' arrays
+      fn("sumArray", "1 array column") { case Args(a) => s"sum(${arrAggSum(a)})" },
+      fn("minArray", "1 array column") { case Args(a) => s"min(array_min($a))" },
+      fn("maxArray", "1 array column") { case Args(a) => s"max(array_max($a))" },
+      fn("countArray", "1 array column") { case Args(a) => s"sum(size($a))" },
+      fn("avgArray", "1 array column") {
+        case Args(a) => s"(sum(${arrAggSum(a)}) / sum(size($a)))" },
+      // MySQL-spelling alias CH accepts: same sorted-join lowering as
+      // groupConcat (the determinism stance)
+      fn("GROUP_CONCAT", "1 argument") { case Args(x) =>
+        s"array_join(sort_array(collect_list(CAST($x AS STRING))), '')" },
+      // groupConcat: both CH call shapes (plain / parameterized
+      // separator). Elements SORT before joining: bare collect_list order
+      // is partition-dependent, so the same query could render a
+      // different string run to run. ClickHouse concatenates in block
+      // order, itself nondeterministic across merges — the sorted
+      // rendering is the documented divergence (the uniq stance:
+      // deterministic beats bug-compatible)
+      paramFn("groupConcat", "(x) or ('sep')(x)") {
+        case Args(x) =>
+          s"array_join(sort_array(collect_list(CAST($x AS STRING))), '')"
+        case Params(List(sep), List(x)) =>
+          s"array_join(sort_array(collect_list(CAST($x AS STRING))), $sep)"
+      },
+      // uniqUpTo(N)(x): exact distinct count saturating at N+1 — CH's own
+      // return contract (the memory bound is CH-internal; count(DISTINCT)
+      // is this engine's exact path)
+      paramFn("uniqUpTo", "(N)(x…)") { case Params(List(n), args) if args.nonEmpty =>
+        s"least(count(DISTINCT ${args.mkString(", ")}), ${intParam("uniqUpTo", n)} + 1)" },
+      // groupArraySorted(N)(x): the N smallest values in order —
+      // deterministic by construction (sorted), unlike groupArray
+      paramFn("groupArraySorted", "(N)(x)") { case Params(List(n), List(x)) =>
+        s"slice(sort_array(collect_list($x)), 1, ${intParam("groupArraySorted", n)})" },
+      fn("avgWeighted", "(x, weight)") {
+        case Args(x, w) => s"(sum(($x) * ($w)) / sum($w))" },
+      fn("sumCount", "1 argument") {
+        case Args(x) => s"named_struct('sum', sum($x), 'count', count($x))" },
+      // CH kurtPop is NON-EXCESS kurtosis (m4/m2²); Spark's kurtosis is
+      // excess — shift back. kurtSamp/skewSamp have no Spark twin (the
+      // bias-corrected forms need n-aware algebra) and refuse loudly.
+      fn("kurtPop", "1 argument") { case Args(x) => s"(kurtosis($x) + 3.0D)" },
+      // quantile(q)(x) / quantileExact(q)(x) → percentile(x, q) (exact)
+      paramFn("quantile", "(q)(x)") {
+        case Params(ps, args) => s"percentile(${args.mkString(", ")}, ${ps.mkString(", ")})" },
+      paramFn("quantileExact", "(q)(x)") {
+        case Params(ps, args) => s"percentile(${args.mkString(", ")}, ${ps.mkString(", ")})" },
+      // exact weighted quantile: Spark's percentile takes an integral
+      // frequency column — exactly quantileExactWeighted's weight
+      paramFn("quantileExactWeighted", "(q)(value, weight)") {
+        case Params(List(q), List(x, w)) => s"percentile($x, $q, CAST($w AS BIGINT))" },
+      // CH topK(N)(x): the SpaceSaving sketch (graft.functions.TopKSketch)
+      // registered as the ch_topk SQL aggregate; CH returns the value
+      // ARRAY, so the "v:c" pairs are projected back to values. Counts
+      // are SpaceSaving overestimates beyond capacity 4N — CH documents
+      // the same bound for its own topK
+      paramFn("topK", "(N)(x)") { case Params(List(n), List(x)) =>
+        s"transform(split(ch_topk(CAST($x AS STRING), " +
+          s"${intParam("topK", n)}), ','), __s -> split_part(__s, ':', 1))" },
+      // windowFunnel(w)(ts, c1, …, cK): CH buffers the group's events and
+      // scans for the longest chain — this lowering does the same with a
+      // sorted per-group fold (collect_list + aggregate), anchored at the
+      // EARLIEST c1 event with the window measured from it (the engine's
+      // agg_funnel min-chain; CH's DP re-anchors on later c1 events, so a
+      // chain completable only from a later anchor can score higher there
+      // — documented divergence, the min-chain is the DuckDB-provable one)
+      paramFn("windowFunnel", "(window_seconds)(ts, cond…)") {
+        case Params(List(w), ts :: conds) if conds.nonEmpty =>
+          funnelFold(ts, conds, Some(w)) },
+      // sequenceMatch('(?1).*(?2)…')(ts, c1, …, cK): the ordered-existence
+      // pattern class only (each step once, in order, any gaps — the
+      // windowless funnel); time-bound forms like (?t<=3600) refuse loudly
+      paramFn("sequenceMatch", "('pattern')(ts, cond…)") {
+        case c @ Params(List(p), ts :: conds) if conds.nonEmpty =>
+          val k = conds.length
+          val pat = c.lits.value(p).getOrElse(throw new IllegalArgumentException(
+            "sequenceMatch: the pattern must be a string literal"))
+          val expected = (1 to k).map(i => s"(?$i)").mkString(".*")
+          require(pat == expected,
+            s"sequenceMatch('$pat'): only the ordered-existence form " +
+              s"'$expected' lowers here (strict-order / time-bound patterns " +
+              "have no exact Spark twin — use graft.operators shapes)")
+          s"IF(${funnelFold(ts, conds, None)} = $k, 1, 0)"
+      },
+      // retention(c1, c2, …): r1 = any c1, r_i = any c1 AND any c_i — the
+      // per-group flag products (the agg_retention shape)
+      fn("retention", "2+ conditions") { case Args(args @ _*) if args.length >= 2 =>
+        def mx(c: String) = s"max(CASE WHEN ($c) THEN 1 ELSE 0 END)"
+        val head = mx(args.head)
+        s"array(${(head +: args.tail.map(c => s"$head * ${mx(c)}")).mkString(", ")})" },
+      // ---- arithmetic array family: DOUBLE accumulation (CH widens the
+      // ELEMENT type; integer sums past 2^53 lose exactness here —
+      // documented trade); lambda forms map through transform first ----
+      fn("arraySum", "([lambda,] arr)") {
+        case Args(a) => arrAggSum(a)
+        case Args(f, a) => arrAggSum(s"transform($a, $f)")
+      },
+      fn("arrayAvg", "([lambda,] arr)") {
+        case Args(a) => arrAvg(a, a)
+        case Args(f, a) => arrAvg(a, s"transform($a, $f)")
+      },
+      fn("arrayMin", "([lambda,] arr)") {
+        case Args(a) => s"array_min($a)"
+        case Args(f, a) => s"array_min(transform($a, $f))"
+      },
+      fn("arrayMax", "([lambda,] arr)") {
+        case Args(a) => s"array_max($a)"
+        case Args(f, a) => s"array_max(transform($a, $f))"
+      },
+      // prefix sums via per-index aggregate(slice) — O(n²) in array
+      // length; arrays are row-local so this never rides a shuffle. The
+      // array argument is INLINED per element: pass a column, not an
+      // expensive expression
+      fn("arrayCumSum", "1 array") { case Args(a) =>
+        s"transform($a, (__e, __i) -> aggregate(slice($a, 1, __i + 1), " +
+          "CAST(0 AS DOUBLE), (__acc, __v) -> __acc + __v))" },
+      fn("arrayDifference", "1 array") { case Args(a) =>
+        s"transform($a, (__e, __i) -> CASE WHEN __i = 0 THEN " +
+          s"CAST(0 AS DOUBLE) ELSE CAST(__e AS DOUBLE) - " +
+          s"element_at($a, __i) END)" },
+      // CH range is HALF-OPEN and empty-safe at n=0; sequence() is
+      // inclusive and DESCENDS when start > stop — slice to the exact
+      // half-open length so neither divergence leaks (a negative length
+      // errors loudly, matching CH's refusal of negative extents)
+      fn("range", "(n) / (lo, hi[, step])") {
+        case Args(n) =>
+          s"slice(sequence(0L, CAST($n AS BIGINT)), 1, CAST($n AS INT))"
+        case Args(a, b) =>
+          s"slice(sequence(CAST($a AS BIGINT), CAST($b AS BIGINT)), 1, " +
+            s"greatest(CAST(($b) - ($a) AS INT), 0))"
+        case Args(a, b, st) =>
+          s"slice(sequence(CAST($a AS BIGINT), CAST($b AS BIGINT), $st), 1, " +
+            s"greatest(CAST(ceil((CAST($b AS DOUBLE) - ($a)) / ($st)) AS INT), 0))"
+      },
+      // array math tier: folds over the Spark HOFs (interpreted — fine
+      // for per-row small arrays; hot vector paths use the posexplode
+      // operators in graft.operators.Similarity)
+      fn("arrayProduct", "1 array") { case Args(a) =>
+        s"aggregate($a, CAST(1.0 AS DOUBLE), (__s, __e) -> __s * CAST(__e AS DOUBLE))" },
+      fn("arrayFold", "((acc, x) -> …, array, init)") {
+        case Args(lam, arr, init) => s"aggregate($arr, $init, $lam)" },
+      fn("dotProduct", "2 arrays") { case Args(a, b) => dot(a, b) },
+      fn("cosineDistance", "2 arrays") { case Args(a, b) =>
+        s"(1.0 - ${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})))" },
+      fn("L1Norm", "1 array") { case Args(a) => s"aggregate($a, CAST(0.0 AS DOUBLE), " +
+        s"(__s, __e) -> __s + abs(CAST(__e AS DOUBLE)))" },
+      fn("L2Norm", "1 array") { case Args(a) => s"sqrt(${l2Sq(a)})" },
+      fn("L2SquaredNorm", "1 array") { case Args(a) => l2Sq(a) },
+      fn("LinfNorm", "1 array") { case Args(a) =>
+        s"array_max(transform($a, __x -> abs(CAST(__x AS DOUBLE))))" },
+      // vector distances: per-row HOF folds (the X144 note — hot vector
+      // paths use the posexplode operators in Similarity)
+      fn("L1Distance", "2 arrays") { case Args(a, b) =>
+        fold2(a, b, "abs(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE))") },
+      fn("L2SquaredDistance", "2 arrays") { case Args(a, b) => fold2(a, b, diffSq) },
+      fn("L2Distance", "2 arrays") { case Args(a, b) => s"sqrt(${fold2(a, b, diffSq)})" },
+      fn("LinfDistance", "2 arrays") { case Args(a, b) =>
+        s"array_max(zip_with($a, $b, (__x, __y) -> " +
+          s"abs(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE))))" },
+      // ---- array tier (the argument is INLINED where noted — pass a
+      // column, not an expensive expression) ---------------------------
+      fn("hasAll", "(set, subset)") {
+        case Args(a, b) => s"forall($b, __x -> array_contains($a, __x))" },
+      fn("hasSubstr", "(haystack, needle) arrays") { case Args(a, b) =>
+        s"(CASE WHEN size($b) = 0 THEN true " +
+          s"WHEN size($b) > size($a) THEN false " +
+          s"ELSE exists(sequence(1, size($a) - size($b) + 1), " +
+          s"__i -> slice($a, __i, size($b)) = $b) END)" },
+      fn("countEqual", "(arr, value)") {
+        case Args(a, v) => s"size(filter($a, __x -> __x <=> ($v)))" },
+      fn("arrayJaccardIndex", "2 arrays") { case Args(a, b) =>
+        s"(CAST(size(array_intersect($a, $b)) AS DOUBLE) / " +
+          s"CAST(size(array_union($a, $b)) AS DOUBLE))" },
+      // 2-arg pads with NULL (the NULL-vs-default stance: CH pads the
+      // type default); the padded NULL is typed via an always-out-of-
+      // bounds try_element_at
+      fn("arrayResize", "(arr, n[, fill])") {
+        case Args(a, n) =>
+          s"(CASE WHEN size($a) >= ($n) THEN slice($a, 1, $n) " +
+            s"ELSE concat($a, transform(sequence(1, ($n) - size($a)), " +
+            s"__i -> try_element_at($a, size($a) + 1))) END)"
+        case Args(a, n, fill) =>
+          s"(CASE WHEN size($a) >= ($n) THEN slice($a, 1, $n) " +
+            s"ELSE concat($a, array_repeat($fill, CAST(($n) - size($a) AS INT))) END)"
+      },
+      fn("arrayReverseSort", "(arr) — the sort-by-key lambda form has no " +
+          "textual twin; sort by the key column instead") {
+        case Args(a) => s"reverse(array_sort($a))" },
+      // CH only promises the first n positions sorted and leaves the rest
+      // unspecified — the fully-sorted array is a legal (and the only
+      // deterministic) refinement
+      fn("arrayPartialSort", "(limit, arr)") {
+        case Args(_, a) => s"array_sort($a)" },
+      fn("arrayPartialReverseSort", "(limit, arr)") {
+        case Args(_, a) => s"reverse(array_sort($a))" },
+      // consecutive-duplicate removal: keep index 0 and every element
+      // differing from its predecessor (null-safe <=>)
+      fn("arrayCompact", "1 array") { case Args(a) =>
+        s"filter($a, (__x, __i) -> __i = 0 OR NOT (__x <=> element_at($a, __i)))" },
+      fn("arrayPopBack", "1 array") {
+        case Args(a) => s"slice($a, 1, greatest(size($a) - 1, 0))" },
+      fn("arrayPopFront", "1 array") { case Args(a) =>
+        s"(CASE WHEN size($a) <= 1 THEN slice($a, 1, 0) " +
+          s"ELSE slice($a, 2, size($a) - 1) END)" },
+      fn("arrayReduce", "('agg', arr)") { case c @ Args(aggTok, a) =>
+        c.lits.value(aggTok).map(_.toLowerCase) match {
+          case Some("sum") => arrAggSum(a)
+          case Some("min") => s"array_min($a)"
+          case Some("max") => s"array_max($a)"
+          case Some("avg") => arrAvg(a, a)
+          case Some("count") => s"size($a)"
+          case Some("uniq") | Some("uniqexact") => s"size(array_distinct($a))"
+          case Some("any") => s"try_element_at($a, 1)"
+          case Some(other) => throw new IllegalArgumentException(
+            s"arrayReduce: unsupported aggregate '$other' (supported: " +
+              "sum, min, max, avg, count, uniq, uniqExact, any)")
+          case None => throw new IllegalArgumentException(
+            "arrayReduce: the aggregate name must be a string literal")
+        }
+      },
+      fn("arrayRotateLeft", "(arr, n)") { case Args(a, n) => rotate(a, n) },
+      fn("arrayRotateRight", "(arr, n)") { case Args(a, n) => rotate(a, s"-($n)") },
+      fn("arrayWithConstant", "(n, value)") {
+        case Args(n, x) => s"array_repeat($x, CAST($n AS INT))" },
+      fn("arrayShingles", "(arr, length)") { case Args(a, l) =>
+        s"(CASE WHEN size($a) < ($l) THEN slice(transform($a, __x -> $a), 1, 0) " +
+          s"ELSE transform(sequence(1, size($a) - ($l) + 1), " +
+          s"__i -> slice($a, __i, $l)) END)" },
+      // arrayStringConcat: the 1-arg form joins with the empty separator
+      fn("arrayStringConcat", "(arr[, sep])") {
+        case Args(a) => s"array_join($a, '')"
+        case Args(a, sep) => s"array_join($a, $sep)"
+      },
+      // NULL-vs-default stance: CH's single element is the TYPE DEFAULT;
+      // a lineage-typed NULL is this engine's documented analog
+      fn("emptyArrayToSingle", "1 array") { case Args(a) =>
+        s"(CASE WHEN size($a) = 0 THEN array(try_element_at($a, 1)) ELSE $a END)" },
+      // arrayEnumerateUniq: 1-based occurrence ordinal of each element
+      // among its equals so far (O(n²) per row — per-row small arrays)
+      fn("arrayEnumerateUniq", "1 array") { case Args(a) =>
+        s"transform(sequence(1, size($a)), __i -> " +
+          s"size(filter(slice($a, 1, __i), __x -> __x = element_at($a, __i))))" },
+      // CH 3/4-arg transform (value mapping with [default]); the 2-arg
+      // call IS Spark's lambda transform and passes through
+      fn("transform", "2-4 arguments") {
+        case Args(a, f) => s"transform($a, $f)"
+        case Args(x, from, to) =>
+          s"coalesce(try_element_at(map_from_arrays($from, $to), $x), $x)"
+        case Args(x, from, to, d) =>
+          s"coalesce(try_element_at(map_from_arrays($from, $to), $x), $d)"
+      },
+      // ---- tuple/map tier: tupleElement resolves positions to the
+      // struct's colN names, string names to the field ------------------
+      fn("tupleElement", "(tuple, index)") { case c @ Args(t, i) =>
+        if (i.matches("\\d+")) s"($t).col$i"
+        else c.lits.value(i) match {
+          case Some(nm) => s"($t).$nm"
+          case None => throw new IllegalArgumentException(
+            "tupleElement: the index must be an integer or string literal")
+        }
+      },
+      // key-union merge — exactly map_zip_with's contract
+      fn("mapAdd", "exactly 2 maps here") { case Args(m1, m2) =>
+        s"map_zip_with($m1, $m2, (__k, __a, __b) -> coalesce(__a, 0) + coalesce(__b, 0))" },
+      fn("mapSubtract", "exactly 2 maps here") { case Args(m1, m2) =>
+        s"map_zip_with($m1, $m2, (__k, __a, __b) -> coalesce(__a, 0) - coalesce(__b, 0))" },
+      // map HOFs: CH is lambda-first, Spark map-first; mapUpdate's
+      // right-bias spells out as drop-overridden-then-concat
+      fn("mapFilter", "((k, v) -> pred, map)") {
+        case Args(lam, m) => s"map_filter($m, $lam)" },
+      fn("mapUpdate", "(map, map)") { case Args(m1, m2) =>
+        s"map_concat(map_filter($m1, (__k, __v) -> " +
+          s"NOT array_contains(map_keys($m2), __k)), $m2)" },
+      fn("mapExists", "((k, v) -> pred, map)") {
+        case Args(lam, m) => s"(cardinality(map_filter($m, $lam)) > 0)" },
+      fn("mapAll", "((k, v) -> pred, map)") { case Args(lam, m) =>
+        s"(cardinality(map_filter($m, $lam)) = cardinality($m))" },
+      fn("mapSort", "1 map (the lambda form has no textual twin — sort " +
+          "map_entries(…) directly)") {
+        case Args(m) => s"map_from_entries(array_sort(map_entries($m)))" },
+      fn("mapReverseSort", "1 map") {
+        case Args(m) => s"map_from_entries(reverse(array_sort(map_entries($m))))" },
+      refuse("mapApply", "mapApply: the tuple-returning lambda has no " +
+        "textual split here — use transform_keys / transform_values " +
+        "(Spark's native map HOFs)"),
+      // ---- bit-operator call forms --------------------------------------
+      fn("bitAnd", "2 arguments") { case Args(a, b) => s"(($a) & ($b))" },
+      fn("bitOr", "2 arguments") { case Args(a, b) => s"(($a) | ($b))" },
+      fn("bitXor", "2 arguments") { case Args(a, b) => s"(($a) ^ ($b))" },
+      fn("bitNot", "1 argument") { case Args(x) => s"(~($x))" },
+      fn("bitTest", "(x, bit)") {
+        case Args(x, n) => s"(shiftright($x, CAST($n AS INT)) & 1)" },
+      // bitmaskToList(n): the ascending powers of two in n, CH's
+      // comma-joined string
+      fn("bitmaskToList", "1 argument") { case Args(n) =>
+        s"array_join(filter(transform(sequence(0, 62), __i -> " +
+          s"CASE WHEN (($n) & shiftleft(CAST(1 AS BIGINT), __i)) != 0 " +
+          s"THEN CAST(shiftleft(CAST(1 AS BIGINT), __i) AS STRING) END), " +
+          s"__x -> __x IS NOT NULL), ',')" },
+      // ---- math tier ----------------------------------------------------
+      fn("intDiv", "2 arguments") { case Args(a, b) => s"($a DIV $b)" },
+      fn("modulo", "2 arguments") { case Args(a, b) => s"($a % $b)" },
+      fn("intDivOrZero", "2 arguments") {
+        case Args(a, b) => s"(CASE WHEN ($b) = 0 THEN 0 ELSE ($a) DIV ($b) END)" },
+      fn("moduloOrZero", "2 arguments") {
+        case Args(a, b) => s"(CASE WHEN ($b) = 0 THEN 0 ELSE ($a) % ($b) END)" },
+      fn("negate", "1 argument") { case Args(x) => s"(-($x))" },
+      fn("roundBankers", "(x[, places])") {
+        case Args(x) => s"rint($x)"
+        case Args(x, n) => s"(rint(($x) * power(10, $n)) / power(10, $n))"
+      },
+      fn("roundToExp2", "1 argument") { case Args(x) =>
+        s"(CASE WHEN ($x) < 1 THEN 0 " +
+          s"ELSE CAST(pow(2, floor(log2($x))) AS BIGINT) END)" },
+      // CH's fixed rounding ladders (ops histogram buckets)
+      fn("roundDuration", "1 argument") { case Args(x) =>
+        val steps = Seq(36000L, 18000L, 7200L, 3600L, 1800L, 1200L, 600L,
+          300L, 240L, 180L, 120L, 60L, 30L, 10L, 1L)
+        s"(CASE ${steps.map(t => s"WHEN ($x) >= $t THEN $t").mkString(" ")} ELSE 0 END)" },
+      fn("roundAge", "1 argument") { case Args(x) =>
+        s"(CASE WHEN ($x) >= 55 THEN 55 WHEN ($x) >= 45 THEN 45 " +
+          s"WHEN ($x) >= 35 THEN 35 WHEN ($x) >= 25 THEN 25 " +
+          s"WHEN ($x) >= 18 THEN 18 WHEN ($x) >= 1 THEN 17 ELSE 0 END)" },
+      fn("exp2", "")({
+        case c => s"power(CAST(2.0 AS DOUBLE), ${c.args.mkString(", ")})" }),
+      fn("exp10", "1 argument") { case Args(x) => s"power(10.0D, $x)" },
+      fn("intExp2", "1 argument") {
+        case Args(n) => s"shiftleft(CAST(1 AS BIGINT), $n)" },
+      fn("intExp10", "1 argument") {
+        case Args(n) => s"CAST(round(power(10.0, $n)) AS BIGINT)" },
+      fn("max2", "2 arguments") { case Args(a, b) => s"greatest($a, $b)" },
+      fn("min2", "2 arguments") { case Args(a, b) => s"least($a, $b)" },
+      fn("clamp", "(x, min, max)") {
+        case Args(x, lo, hi) => s"least(greatest($x, $lo), $hi)" },
+      fn("isFinite", "1 argument") { case Args(x) =>
+        s"(NOT isnan(CAST($x AS DOUBLE)) AND " +
+          s"abs(CAST($x AS DOUBLE)) <> CAST('Infinity' AS DOUBLE))" },
+      fn("isInfinite", "1 argument") {
+        case Args(x) => s"(abs(CAST($x AS DOUBLE)) = CAST('Infinity' AS DOUBLE))" },
+      fn("isZeroOrNull", "1 argument") {
+        case Args(x) => s"(($x) = 0 OR ($x) IS NULL)" },
+      fn("randUniform", "(min, max)") {
+        case Args(lo, hi) => s"(($lo) + rand() * (($hi) - ($lo)))" },
+      // encoding tier: CH bin() pads to whole bytes (Spark's trims);
+      // char() is variadic in CH
+      fn("bin", "1 argument") { case Args(x) =>
+        s"lpad(bin($x), CAST(ceil(length(bin($x)) / 8.0) * 8 AS INT), '0')" },
+      fn("char", "1+ arguments") {
+        case Args(x) => s"char($x)"
+        case Args(args @ _*) if args.length >= 2 =>
+          s"concat(${args.map(a => s"char($a)").mkString(", ")})"
+      },
+      // indexHint evaluates its predicate here (CH skips granules and
+      // returns a SUPERSET; an exact filter is the deterministic choice —
+      // documented divergence: never MORE rows than CH, never fewer than
+      // the predicate names)
+      fn("indexHint", "")({ case c => s"(${c.args.mkString(", ")})" }),
+      // no-op wrappers: type-level nullability doesn't exist in Spark SQL
+      // text (assumeNotNull on an actual NULL is undefined in CH too);
+      // identity/materialize are optimizer hints with nothing to hint
+      fn("ignore", "")({ case _ => "0" }),
+      // ops-readability renders: CH's fixed two-decimal spellings via
+      // format_string (argument inlined once per threshold — pass a
+      // column, not an expensive expression)
+      fn("formatReadableSize", "1 argument") { case Args(b) =>
+        val d = s"CAST($b AS DOUBLE)"
+        s"(CASE WHEN abs($d) < 1024 THEN format_string('%.2f B', $d) " +
+          s"WHEN abs($d) < 1048576 THEN format_string('%.2f KiB', $d / 1024) " +
+          s"WHEN abs($d) < 1073741824 THEN format_string('%.2f MiB', $d / 1048576) " +
+          s"WHEN abs($d) < 1099511627776 THEN format_string('%.2f GiB', $d / 1073741824) " +
+          s"WHEN abs($d) < 1125899906842624 THEN format_string('%.2f TiB', $d / 1099511627776) " +
+          s"ELSE format_string('%.2f PiB', $d / 1125899906842624) END)" },
+      fn("formatReadableQuantity", "1 argument") { case Args(n) =>
+        val d = s"CAST($n AS DOUBLE)"
+        s"(CASE WHEN abs($d) < 1000 THEN format_string('%.2f', $d) " +
+          s"WHEN abs($d) < 1000000 THEN format_string('%.2f thousand', $d / 1000) " +
+          s"WHEN abs($d) < 1000000000 THEN format_string('%.2f million', $d / 1000000) " +
+          s"WHEN abs($d) < 1000000000000 THEN format_string('%.2f billion', $d / 1000000000) " +
+          s"ELSE format_string('%.2f trillion', $d / 1000000000000) END)" },
+      // formatReadableTimeDelta: days…seconds, zero components skipped,
+      // singular/plural like CH. CH's default largest unit is YEARS
+      // (365.25-day years) — this renders days as the cap (documented
+      // divergence; day counts stay exact where fractional years round).
+      // The input is inlined per component: pass a column.
+      fn("formatReadableTimeDelta", "1 argument (the maximum_unit form is " +
+          "not supported)") { case Args(x) =>
+        def comp(n: String, u: String) =
+          s"CASE WHEN $n > 0 THEN concat($n, ' $u', " +
+            s"CASE WHEN $n = 1 THEN '' ELSE 's' END) END"
+        val t = s"CAST($x AS BIGINT)"
+        s"coalesce(nullif(concat_ws(', ', " +
+          comp(s"($t DIV 86400)", "day") + ", " +
+          comp(s"(($t % 86400) DIV 3600)", "hour") + ", " +
+          comp(s"(($t % 3600) DIV 60)", "minute") + ", " +
+          comp(s"($t % 60)", "second") + "), ''), '0 seconds')" },
+      // bar(x, min, max[, width]): CH's CLI bar — full blocks plus a
+      // nearest-eighth partial block, clamped to [0, width]. The scaled
+      // value is inlined per piece: pass a column.
+      fn("bar", "(x, min, max[, width])") {
+        case Args(args @ _*) if args.length == 3 || args.length == 4 =>
+          val Seq(x, mn, mx) = args.take(3)
+          val w = if (args.length == 4) args(3) else "80"
+          val units = s"greatest(CAST(0.0 AS DOUBLE), least(CAST($w AS " +
+            s"DOUBLE), (CAST($x AS DOUBLE) - CAST($mn AS DOUBLE)) * " +
+            s"CAST($w AS DOUBLE) / (CAST($mx AS DOUBLE) - CAST($mn AS DOUBLE))))"
+          val e8 = s"CAST(round($units * 8.0D) AS BIGINT)"
+          s"concat(repeat('█', CAST($e8 DIV 8 AS INT)), " +
+            s"CASE WHEN ($e8 % 8) = 0 THEN '' " +
+            s"ELSE substring('▏▎▍▌▋▊▉', CAST($e8 % 8 AS INT), 1) END)"
+      },
+      // ---- dictionaries: `dictGet('d','attr',k)` /
+      // `dictGetOrDefault('d','attr',k,def)` / `dictHas('d',k)` → a
+      // correlated scalar-subquery probe of the DictRegistry view bound
+      // by CREATE DICTIONARY:
+      //   coalesce((SELECT any_value(attr) FROM __dict_d WHERE k = …), def)
+      // Catalyst's RewriteCorrelatedScalarSubquery turns each probe into
+      // a left outer join against the (tiny, aggregated-by-key)
+      // dictionary — broadcast at execution, the same resident-probe
+      // plan graft.operators.Dictionaries builds by hand, and exactly
+      // CH's miss semantics (type/declared default, never null — dictHas
+      // is a count() > 0 probe) ------------------------------------------
+      fn("dictGetOrDefault", "('dict', 'attr', key, default)") {
+        case c @ Args(dn0, an0, k, dflt) =>
+          val (dn, an) = (dictName(c, dn0), dictName(c, an0))
+          val d = dict(c, dn)
+          require(d.defaultOf(an).isDefined,
+            s"dictGetOrDefault('$dn', '$an', …): not a declared " +
+              s"attribute (declared: ${d.attrs.map(_._1).mkString(", ")})")
+          s"coalesce((SELECT any_value($an) FROM ${d.view} WHERE " +
+            s"${dictKeyConds(c, d, k)}), $dflt)"
+      },
+      fn("dictGet", "('dict', 'attr', key) — dictGetHierarchy has no SQL " +
+          "lowering here (use graft.operators.Dictionaries.hierarchy)") {
+        case c @ Args(dn0, an0, k) =>
+          val (dn, an) = (dictName(c, dn0), dictName(c, an0))
+          val d = dict(c, dn)
+          val dflt = d.defaultOf(an).getOrElse(throw new IllegalArgumentException(
+            s"dictGet('$dn', '$an', …): not a declared attribute " +
+              s"(declared: ${d.attrs.map(_._1).mkString(", ")})"))
+          s"coalesce((SELECT any_value($an) FROM ${d.view} WHERE " +
+            s"${dictKeyConds(c, d, k)}), $dflt)"
+      },
+      fn("dictHas", "('dict', key)") { case c @ Args(dn0, k) =>
+        val d = dict(c, dictName(c, dn0))
+        s"((SELECT count(1) FROM ${d.view} WHERE ${dictKeyConds(c, d, k)}) > 0)" },
+      // ---- table functions: in a single-process engine the cluster IS
+      // this process, so remote()/cluster() read the LOCAL table with a
+      // loud note — the ON CLUSTER stance applied to the read side ------
+      fn("remote", "(addresses|cluster, db[, table])")(clusterTable),
+      fn("remoteSecure", "(addresses|cluster, db[, table])")(clusterTable),
+      fn("cluster", "(addresses|cluster, db[, table])")(clusterTable),
+      fn("clusterAllReplicas", "(addresses|cluster, db[, table])")(clusterTable),
+      refuse("generateRandom", "generateRandom(…): nondeterministic " +
+        "generation — synthesize deterministic rows from numbers(N) + " +
+        "hash functions instead"),
+      // order-dependent / weighted aggregates with no deterministic twin
+      refuse("deltaSum", "deltaSum: block-order dependent in ClickHouse " +
+        "with no deterministic SQL twin — use the agg_delta_sum operator " +
+        "shape (explicit ordering) from graft.operators instead"),
+      paramFn("topKWeighted", "")({ case _ => throw new IllegalArgumentException(
+        "topKWeighted: no weighted SpaceSaving here — for exact weighted " +
+          "top-N use GROUP BY + sum(weight) + ORDER BY + LIMIT, or " +
+          "topK(N)(x) for the unweighted sketch") }),
+      paramFn("groupArrayMovingSum", "")({ case _ =>
+        throw new IllegalArgumentException(
+          "groupArrayMovingSum: block-order dependent in ClickHouse with " +
+            "no deterministic SQL twin — use sum() OVER (ORDER BY … [ROWS " +
+            "n PRECEDING]) window frames (explicit ordering) instead") })
+    ) ++ families
+    val dups = all.groupBy(f => asciiLower(f.name)).collect {
+      case (k, fs) if fs.size > 1 => k }
+    require(dups.isEmpty,
+      s"ChDialect function table: duplicate keys ${dups.mkString(", ")}")
+    all.map(f => asciiLower(f.name) -> f).toMap
+  }
+
+  /** The table's name families: one entry per name, one lowering each. */
+  private def families: Seq[Fn] = Seq(
+    // date_trunc units; sessions run MICROSECOND timestamps, so
+    // toStartOfMicrosecond is the identity-precision floor (Spark's
+    // date_trunc supports all three sub-second units natively)
+    Seq("toStartOfDay" -> "DAY", "toStartOfHour" -> "HOUR",
+      "toStartOfMinute" -> "MINUTE", "toStartOfSecond" -> "SECOND",
+      "toStartOfMillisecond" -> "MILLISECOND",
+      "toStartOfMicrosecond" -> "MICROSECOND", "toStartOfWeek" -> "WEEK",
+      "toStartOfMonth" -> "MONTH", "toStartOfQuarter" -> "QUARTER",
+      "toStartOfYear" -> "YEAR").map { case (name, unit) =>
+      fn(name, "")({ case c => s"date_trunc('$unit', ${c.inner})" })
+    },
+    // the fixed-width bucket family: no date_trunc unit exists for these,
+    // so they floor on the epoch-seconds grid (same math as
+    // toStartOfInterval); timeSlot = CH's fixed half-hour bucket
+    Seq("toStartOfFiveMinutes" -> 300L, "toStartOfTenMinutes" -> 600L,
+      "toStartOfFifteenMinutes" -> 900L, "timeSlot" -> 1800L).map {
+      case (name, secs) => fn(name, "1 argument") { case Args(x) =>
+        s"timestamp_seconds((unix_timestamp($x) DIV $secs) * $secs)" }
+    },
+    // function-form casts (the :: mapping's call-shaped siblings;
+    // unsigned widths map UP so every legal CH value fits), with the
+    // OrNull/OrZero try-cast forms (OrZero's zero is CH's type default)
+    Seq(("toInt8", "TINYINT", "CAST(0 AS TINYINT)"),
+      ("toInt16", "SMALLINT", "CAST(0 AS SMALLINT)"),
+      ("toInt32", "INT", "0"), ("toInt64", "BIGINT", "0L"),
+      ("toUInt8", "SMALLINT", "CAST(0 AS SMALLINT)"),
+      ("toUInt16", "INT", "0"), ("toUInt32", "BIGINT", "0L"),
+      ("toUInt64", "BIGINT", "0L"),
+      ("toFloat32", "FLOAT", "CAST(0 AS FLOAT)"),
+      ("toFloat64", "DOUBLE", "0.0D"),
+      ("toDate", "DATE", "DATE'1970-01-01'"),
+      ("toDateTime", "TIMESTAMP", "TIMESTAMP'1970-01-01 00:00:00'")).flatMap {
+      case (base, ty, zero) =>
+        // toDate is the to_date rename above
+        (if (base == "toDate") Nil
+         else Seq(fn(base, "1 argument") { case Args(x) => s"CAST($x AS $ty)" })) ++
+          Seq(fn(base + "OrNull", "1 argument") {
+            case Args(x) => s"try_cast($x AS $ty)" },
+            fn(base + "OrZero", "1 argument") {
+              case Args(x) => s"coalesce(try_cast($x AS $ty), $zero)" })
+    },
+    // Decimal widths by CH name
+    Seq("toDecimal32" -> 9, "toDecimal64" -> 18, "toDecimal128" -> 38).map {
+      case (name, p) => fn(name, "(x, scale)") { case Args(x, scale) =>
+        require(scale.matches("\\d+"),
+          s"$name(x, scale): the scale must be an integer literal")
+        s"CAST($x AS DECIMAL($p, $scale))" }
+    },
+    // 128-bit integers land on DECIMAL(38,0): 38 decimal digits covers
+    // ±1.7e38 of the ±1.7e38 UInt128/Int128 range EXCEPT the top sliver
+    // (documented cap — values past 10^38 overflow loudly, not wrap)
+    Seq("toUInt128", "toInt128").map(name => fn(name, "1 argument") {
+      case Args(x) => s"CAST($x AS DECIMAL(38, 0))" }),
+    // addX/subtractX(x, n) → timestampadd(UNIT, ±n, x); a Date input
+    // widens to TIMESTAMP (CH keeps Date — cast back where it matters)
+    Seq("Years" -> "YEAR", "Quarters" -> "QUARTER", "Months" -> "MONTH",
+      "Weeks" -> "WEEK", "Days" -> "DAY", "Hours" -> "HOUR",
+      "Minutes" -> "MINUTE", "Seconds" -> "SECOND").flatMap { case (u, unit) =>
+      Seq(fn("add" + u, "(ts, n)") {
+        case Args(x, n) => s"timestampadd($unit, $n, $x)" },
+        fn("subtract" + u, "(ts, n)") {
+          case Args(x, n) => s"timestampadd($unit, -($n), $x)" })
+    },
+    // dateAdd/dateSub/timestampAdd/timestampSub: both CH call shapes —
+    // (unit, n, ts) with the unit bare or quoted, and (ts, INTERVAL n u)
+    Seq(("dateAdd", false), ("timestampAdd", false), ("dateSub", true),
+      ("timestampSub", true)).map { case (name, neg) =>
+      fn(name, "(unit, n, ts) or (ts, INTERVAL n unit)") {
+        case c @ Args(u, n, d0) if c.lits.value(u).getOrElse(u).trim.matches(
+            "(?i)^(second|minute|hour|day|week|month|quarter|year)s?$") =>
+          val nn = if (neg) s"-($n)" else n
+          val unit = c.lits.value(u).getOrElse(u).trim.toUpperCase.stripSuffix("S")
+          s"timestampadd($unit, $nn, $d0)"
+        case Args(d0, iv) if iv.toUpperCase.startsWith("INTERVAL") =>
+          s"($d0 ${if (neg) "-" else "+"} $iv)"
+      }
+    },
+    // the fixed-width toRelative*Num family (the calendar half is above)
+    Seq("toRelativeDayNum" -> 86400L, "toRelativeHourNum" -> 3600L,
+      "toRelativeMinuteNum" -> 60L, "toRelativeSecondNum" -> 1L).map {
+      case (name, secs) => fn(name, "1 argument") { case Args(x) =>
+        if (secs == 1L) s"unix_timestamp($x)"
+        else s"(unix_timestamp($x) DIV $secs)" }
+    },
+    // toIntervalX(n) → Spark's interval constructors (day-time vs
+    // year-month split follows Spark's own two interval kinds)
+    Seq("Second" -> "make_dt_interval(0, 0, 0, %s)",
+      "Minute" -> "make_dt_interval(0, 0, %s, 0)",
+      "Hour" -> "make_dt_interval(0, %s, 0, 0)",
+      "Day" -> "make_dt_interval(%s, 0, 0, 0)",
+      "Week" -> "make_dt_interval((%s) * 7, 0, 0, 0)",
+      "Month" -> "make_interval(0, %s)",
+      "Quarter" -> "make_interval(0, (%s) * 3)",
+      "Year" -> "make_interval(%s)").map { case (u, tmpl) =>
+      fn("toInterval" + u, "1 argument") { case Args(n) => tmpl.format(n) }
+    },
+    // Twitter-epoch snowflake ids (CH's own constant 1288834974657)
+    Seq("snowflakeToDateTime", "snowflakeIDToDateTime").map(name =>
+      fn(name, "1 argument") { case Args(id) =>
+        s"timestamp_millis((CAST($id AS BIGINT) >> 22) + 1288834974657)" }),
+    // typed empties
+    Seq("String" -> "STRING", "Int8" -> "TINYINT", "Int16" -> "SMALLINT",
+      "Int32" -> "INT", "Int64" -> "BIGINT", "UInt8" -> "SMALLINT",
+      "UInt16" -> "INT", "UInt32" -> "BIGINT", "UInt64" -> "BIGINT",
+      "Float32" -> "FLOAT", "Float64" -> "DOUBLE", "Date" -> "DATE",
+      "DateTime" -> "TIMESTAMP").map { case (t, ty) =>
+      nullary("emptyArray" + t, s"CAST(array() AS ARRAY<$ty>)")
+    },
+    // splitByChar/splitByString(sep, s) → split(s, sep) — argument swap,
+    // separator regex-quoted through \Q…\E so a metachar separator ('.',
+    // '|') splits literally
+    Seq("splitByChar", "splitByString").map(name => fn(name, "2 arguments") {
+      case Args(sep, str) => s"split($str, concat('\\\\Q', $sep, '\\\\E'))" }),
+    // JSONExtract* over the JSON/Variant column type → typed variant_get
+    // paths. CH's key arguments become the '$.a.b' path through a concat
+    // of literals (masked here, so the path is assembled relationally;
+    // concat-of-literals stays foldable, which variant_get's path
+    // requires, and a computed key still fails loudly there)
+    Seq("String" -> "string", "Int" -> "bigint", "UInt" -> "bigint",
+      "Float" -> "double", "Bool" -> "boolean").map { case (t, ty) =>
+      fn("JSONExtract" + t, "(json, key…)") {
+        case Args(json, keys @ _*) if keys.nonEmpty =>
+          s"variant_get($json, concat('$$.', ${jsonPath(keys)}), '$ty')" }
+    },
+    // the STRING-JSON door (doc at JSONHas above)
+    Seq(("String", "STRING", "''"), ("Int", "bigint", "0"),
+      ("UInt", "bigint", "0"), ("Float", "double", "0.0"),
+      ("Bool", "boolean", "false")).flatMap { case (t, ty, dflt) =>
+      Seq("simpleJSONExtract", "visitParamExtract").map(p =>
+        fn(p + t, "(json, key)") { case Args(j, k) =>
+          s"coalesce(CAST(get_json_object($j, concat('$$.', " +
+            s"${k.strip()})) AS $ty), $dflt)" })
+    },
+    // State/Merge partials whose state IS the value (doc at uniqState)
+    Seq("sumState" -> "sum", "sumMerge" -> "sum", "minState" -> "min",
+      "minMerge" -> "min", "maxState" -> "max", "maxMerge" -> "max",
+      "countState" -> "count", "countMerge" -> "sum",
+      "sumOrNull" -> "sum", "minOrNull" -> "min", "maxOrNull" -> "max",
+      "avgOrNull" -> "avg", "anyOrNull" -> "any_value",
+      "anyLastOrNull" -> "any_value").map { case (name, base) =>
+      renameTrimmed(name, base)
+    },
+    Seq("sumStateIf" -> "sum", "minStateIf" -> "min", "maxStateIf" -> "max",
+      "countStateIf" -> "count").map { case (name, base) =>
+      fn(name, "(x, cond)") {
+        case Args(x, cond) => s"$base(CASE WHEN $cond THEN $x END)" }
+    },
+    // the approximate-quantile sketch spellings all lower onto Spark's
+    // approx_percentile (different sketch, same role — the uniq stance:
+    // do not compare estimates across engines); quantileDeterministic's
+    // determinator argument has nothing to determine here and drops
+    Seq("quantileTDigestWeighted", "quantileTDigest", "quantileTiming",
+      "quantileBFloat16", "quantileDeterministic").map(name =>
+      paramFn(name, "(q)(x…)") { case Params(List(q), x :: _) =>
+        s"approx_percentile($x, $q)" }),
+    Seq("quantilesExact", "quantiles").map(name =>
+      paramFn(name, "(q1, q2, …)(x)") { case Params(ps, List(x)) if ps.nonEmpty =>
+        s"percentile($x, array(${ps.mkString(", ")}))" }),
+    // sumMap/minMap/maxMap → the MapCombine aggregates (key-wise merge,
+    // sorted keys — CH's contract). Input normalizes to MAP<STRING,
+    // DOUBLE>; the result is a MAP where CH's two-array form returns a
+    // tuple of arrays — probe with map_keys/map_values for those
+    Seq("sumMap" -> "ch_summap", "minMap" -> "ch_minmap",
+      "maxMap" -> "ch_maxmap").map { case (name, to) =>
+      fn(name, "(map) or (keys, values)") {
+        case Args(m) => s"$to(CAST($m AS MAP<STRING, DOUBLE>))"
+        case Args(k, v) =>
+          s"$to(CAST(map_from_arrays($k, $v) AS MAP<STRING, DOUBLE>))"
+      }
+    },
+    Seq("plus" -> "+", "minus" -> "-", "multiply" -> "*", "divide" -> "/").map {
+      case (name, op) =>
+        fn(name, "2 arguments") { case Args(a, b) => s"(($a) $op ($b))" }
+    },
+    Seq("assumeNotNull", "toNullable", "identity", "materialize").map(name =>
+      fn(name, "1 argument") { case Args(x) => s"($x)" }),
+    // SHA2 family: Spark spells the digest as lowercase HEX where CH
+    // returns raw FixedString bytes — compare via hex(…) on the CH side
+    // (documented divergence in spelling, same digest)
+    Seq("SHA224" -> 224, "SHA256" -> 256, "SHA384" -> 384, "SHA512" -> 512)
+      .map { case (name, bits) =>
+        fn(name, "1 argument") { case Args(x) => s"sha2($x, $bits)" } },
+    // external table functions: zero external connectivity
+    Seq("url", "s3", "s3Cluster", "hdfs", "azureBlobStorage", "gcs", "mysql",
+      "postgresql", "mongodb", "redis").map(name => refuse(name,
+      s"$name(…): no external connectivity in this environment — stage " +
+        "the data locally and read it with file(path[, format])")),
+    Seq("kurtSamp" -> "kurtPop", "skewSamp" -> "skewPop").map {
+      case (name, alt) => refuse(name, s"$name: Spark has only the " +
+        s"population moments — use $alt or compute the bias correction " +
+        "explicitly")
+    },
+    // order-dependent scan functions: the deltaSum stance — refuse
+    // loudly, name the window form with its explicit ordering
+    Seq("runningDifference" -> ("use value - lag(value) OVER (ORDER BY …) " +
+        "— the window form makes the ordering explicit"),
+      "runningAccumulate" -> ("use sum(…) OVER (ORDER BY … ROWS " +
+        "UNBOUNDED PRECEDING) — the window form makes the ordering " +
+        "explicit"),
+      "neighbor" -> "use lag/lead(value, n) OVER (ORDER BY …)").map {
+      case (name, alt) => refuse(name, s"$name: block-order dependent in " +
+        s"ClickHouse with no deterministic SQL twin — $alt")
+    },
+    // pointed refusals (the deltaSum stance: name the alternative)
+    Seq(
+      "entropy" -> ("Shannon entropy needs a two-level aggregation — " +
+        "GROUP BY the value first, then -sum(p * log2(p)) over the " +
+        "per-value counts"),
+      "JSON_QUERY" -> ("CH wraps matches in a JSON array — use " +
+        "JSONExtractRaw (raw extraction) or JSON_VALUE (scalar) " +
+        "whose contracts are exact here"),
+      "gcd" -> "no Spark twin (iterative) — precompute or use pmod chains",
+      "lcm" -> "no Spark twin (iterative) — precompute or use pmod chains",
+      "arrayShuffle" -> ("nondeterministic by contract — use " +
+        "array_sort for a canonical order or shuffle outside the query"),
+      "arrayRandomSample" -> ("nondeterministic by contract — slice " +
+        "after array_sort, or sample rows with TABLESAMPLE"),
+      "sparkbar" -> ("per-group inline histogram — use bar(x, min, " +
+        "max, width) per bucket row instead"),
+      "groupArrayLast" -> ("block-order dependent — groupArraySorted(N)" +
+        "(x) is the deterministic top-N, or collect_list over an " +
+        "explicit window ORDER BY"),
+      "stem" -> ("dictionary-backed NLP is out of scope — the text " +
+        "operators in graft.operators.TextAnalysis cover tokenization " +
+        "and quality scoring"),
+      "lemmatize" -> "dictionary-backed NLP is out of scope (see stem)",
+      "synonyms" -> "dictionary-backed NLP is out of scope (see stem)",
+      "detectLanguage" -> ("use the engine's n-gram language-id " +
+        "operator (text_langid in graft.operators.TextAnalysis)"),
+      "detectCharset" -> "charset sniffing is out of scope (UTF-8 corpus)",
+      "sleep" -> ("no effect in a declarative plan — removed in CH too " +
+        "under optimization; drop it"),
+      "sleepEachRow" -> "no effect in a declarative plan — drop it",
+      "blockNumber" -> ("blocks do not exist here — row_number() OVER " +
+        "(ORDER BY …) for a stable numbering"),
+      "blockSize" -> "blocks do not exist here — count() per group",
+      "rowNumberInAllBlocks" -> ("row_number() OVER (ORDER BY …) — an " +
+        "explicit order is the only deterministic numbering"),
+      "queryID" -> ("query ids live in system.query_log here (X140) — " +
+        "FROM system.query_log"),
+      "initialQueryID" -> "see queryID — FROM system.query_log",
+      "uptime" -> "no server process to introspect — not supported",
+      "serverUUID" -> "no server process to introspect — not supported",
+      "firstSignificantSubdomain" -> ("needs the public-suffix list — " +
+        "domainWithoutWWW covers the common case"),
+      "cutToFirstSignificantSubdomain" -> ("needs the public-suffix " +
+        "list — domainWithoutWWW covers the common case"),
+      "geohashEncode" -> ("geo indexing is out of scope — " +
+        "greatCircleDistance covers metric queries"),
+      "geohashDecode" -> "geo indexing is out of scope (see geohashEncode)",
+      "pointInPolygon" -> ("polygon geometry is out of scope — bounding-" +
+        "box predicates compose from plain comparisons"),
+      "normalizeQuery" -> ("CH's literal folding is engine-specific — " +
+        "regexp_replace the literal classes explicitly"),
+      "mapPopulateSeries" -> ("build the dense axis with sequence() and " +
+        "map_from_arrays, then map_zip_with the sparse map onto it"),
+      "toInt256" -> "no 256-bit arithmetic — DECIMAL(38, 0) is the widest",
+      "toUInt256" -> "no 256-bit arithmetic — DECIMAL(38, 0) is the widest",
+      "arrayFill" -> ("order-dependent fill — express as an explicit " +
+        "aggregate() fold over the array"),
+      "arrayReverseFill" -> "see arrayFill",
+      "arraySplit" -> ("use aggregate() to fold split points, or explode " +
+        "and re-group")).map { case (name, alt) => refuse(name, s"$name: $alt") }
+  ).flatten
+
+  // ---- helpers the entries share --------------------------------------
+
+  /** The uniq spellings: `name(x…)` and `name(p…)(x…)` both count with
+    * approx_count_distinct, the parameter list dropped. */
+  private def uniq(name: String): Fn = paramFn(name, "")({
+    case c => s"approx_count_distinct(${c.args.mkString(", ")})" })
+
+  private val haversine: PartialFunction[Call, String] = {
+    case Args(lon1, lat1, lon2, lat2) =>
+      s"(asin(sqrt(pow(sin(radians(($lat2) - ($lat1)) / 2), 2) + " +
+        s"cos(radians($lat1)) * cos(radians($lat2)) * " +
+        s"pow(sin(radians(($lon2) - ($lon1)) / 2), 2))) * 2 * 6371008.8)"
+  }
+
+  /** remote()/cluster(): the local table named by the last argument (the
+    * 2-argument form carries db.table in its second slot). */
+  private val clusterTable: PartialFunction[Call, String] = {
+    case c @ Args(args @ _*) if args.length >= 2 =>
+      val tok = if (args.length >= 3) args(2) else args(1)
+      val tbl = c.lits.value(tok).getOrElse(tok.trim.replace("`", ""))
+        .split('.').last
+      System.err.println(s"[chsql] ${c.name}(…): single-process engine — " +
+        s"the cluster is this process; reading local table $tbl " +
+        "(the ON CLUSTER stance)")
+      tbl
+  }
+
+  /** A unit/part argument's literal value (dateDiff, age, dateName). */
+  private def unitLiteral(c: Call, tok: String): String =
+    c.lits.value(tok).getOrElse(throw new IllegalArgumentException(
+      s"${c.name}: the unit argument must be a string literal"))
+
+  private val chIntervalUnits = Map(
+    "second" -> "SECOND", "minute" -> "MINUTE", "hour" -> "HOUR",
+    "day" -> "DAY", "week" -> "WEEK", "month" -> "MONTH",
+    "quarter" -> "QUARTER", "year" -> "YEAR")
+
+  private val chTypeMap = Map(
+    "uint8" -> "SMALLINT", "uint16" -> "INT", "uint32" -> "BIGINT",
+    "uint64" -> "BIGINT", "int8" -> "TINYINT", "int16" -> "SMALLINT",
+    "int32" -> "INT", "int64" -> "BIGINT", "float32" -> "FLOAT",
+    "float64" -> "DOUBLE", "string" -> "STRING", "date" -> "DATE",
+    "datetime" -> "TIMESTAMP")
+
+  /** The Spark type for a CH type-name literal (`accurateCast(x, 'T')`,
+    * `CAST(x, 'T')`). */
+  private def chTypeOf(fn: String, t: Option[String]): String = {
+    val name = t.getOrElse(throw new IllegalArgumentException(
+      s"$fn: the type must be a string literal"))
+    chTypeMap.getOrElse(name.toLowerCase, throw new IllegalArgumentException(
+      s"$fn: unsupported type '$name' (supported: " +
+        chTypeMap.keys.toSeq.sorted.mkString(", ") + ")"))
+  }
+  private def chTypeOf(c: Call, tok: String): String =
+    chTypeOf(c.name, c.lits.value(tok))
+
+  /** format's `{}`-mask → format_string's (`{}` → %s, `{N}` → %(N+1)$s,
+    * `%` → %%). */
+  private def chFormatPattern(content: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < content.length) {
+      val c = content.charAt(i)
+      if (c == '{') {
+        val close = content.indexOf('}', i)
+        require(close > i, s"format: unbalanced '{' in '$content'")
+        val inner = content.substring(i + 1, close)
+        if (inner.isEmpty) sb.append("%s")
+        else {
+          require(inner.forall(_.isDigit),
+            s"format: unsupported placeholder '{$inner}'")
+          sb.append('%').append(inner.toInt + 1).append("$s")
+        }
+        i = close + 1
+      } else if (c == '%') { sb.append("%%"); i += 1 }
+      else { sb.append(c); i += 1 }
+    }
+    sb.toString
+  }
+
+  /** CH replacement backrefs (`\\1` or `\1` in the source text) → Java's
+    * `$1`; a literal `$` is re-escaped so it survives both Spark's string
+    * unescape and Java's replacement parser. */
+  private def javaReplacement(content: String): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < content.length) {
+      val c = content.charAt(i)
+      if (c == '\\' && i + 2 < content.length &&
+          content.charAt(i + 1) == '\\' && content.charAt(i + 2).isDigit) {
+        sb.append('$').append(content.charAt(i + 2)); i += 3
+      } else if (c == '\\' && i + 1 < content.length &&
+          content.charAt(i + 1).isDigit) {
+        sb.append('$').append(content.charAt(i + 1)); i += 2
+      } else if (c == '$') { sb.append("\\\\$"); i += 1 }
+      else { sb.append(c); i += 1 }
+    }
+    sb.toString
+  }
+
+  /** A literal regex pattern using a construct the engines DISAGREE on
+    * (Java-only backreferences / lookaround / atomic groups: valid here,
+    * an RE2 error in CH) refuses loudly instead of silently diverging —
+    * the formatDateTime %M precedent. Computed patterns pass unchecked
+    * (nothing to inspect), same stance as the cityHash64→xxhash64 note. */
+  private def guardRegex(c: Call, tok: String): Unit =
+    c.lits.value(tok).foreach { pat =>
+      Seq("\\\\[1-9]" -> "a backreference",
+          "\\(\\?=" -> "lookahead", "\\(\\?!" -> "negative lookahead",
+          "\\(\\?<=" -> "lookbehind", "\\(\\?<!" -> "negative lookbehind",
+          "\\(\\?>" -> "an atomic group")
+        .collectFirst { case (re, what)
+            if re.r.findFirstIn(pat).isDefined => what }
+        .foreach(what => throw new IllegalArgumentException(
+          s"${c.name} pattern '$pat' uses $what — Java-only regex that " +
+            "ClickHouse's RE2 rejects, so the engines would disagree; " +
+            "rewrite the pattern in the shared RE2/Java subset"))
+    }
+
+  /** extract's group index: 1 when the literal pattern declares a
+    * capture group, 0 (the whole match) otherwise. */
+  private def regexGroupIdx(c: Call, tok: String): Int =
+    c.lits.value(tok) match {
+      case Some(pat) =>
+        guardRegex(c, tok)
+        if (hasCaptureGroup(sqlUnescape(pat))) 1 else 0
+      case None => throw new IllegalArgumentException(
+        s"${c.name}: the pattern must be a string literal (the whole-match-" +
+          "vs-first-group choice inspects it)")
+    }
+
+  /** Does the pattern declare a CAPTURE group? A character-wise scan:
+    * backslash-escaped parens and parens inside character classes are
+    * not groups. */
+  private def hasCaptureGroup(pat: String): Boolean = {
+    var i = 0
+    var inClass = false
+    while (i < pat.length) {
+      pat.charAt(i) match {
+        case '\\' => i += 1 // skip the escaped char
+        case '[' if !inClass => inClass = true
+        case ']' if inClass => inClass = false
+        case '(' if !inClass =>
+          if (i + 1 >= pat.length || pat.charAt(i + 1) != '?') return true
+        case _ =>
+      }
+      i += 1
+    }
+    false
+  }
+
+  /** The masked literal is SQL-SOURCE text; the regex engine sees the
+    * parser-unescaped VALUE ('a\\(b' source → a\(b value) — Spark's rule:
+    * known controls map, any other backslash-pair drops the backslash. */
+  private def sqlUnescape(raw: String): String = {
+    val b = new StringBuilder
+    var i = 0
+    while (i < raw.length) {
+      val c = raw.charAt(i)
+      if (c == '\\' && i + 1 < raw.length) {
+        b += (raw.charAt(i + 1) match {
+          case 'n' => '\n'; case 't' => '\t'; case 'r' => '\r'
+          case 'b' => '\b'
+          case other => other
+        })
+        i += 2
+      } else { b += c; i += 1 }
+    }
+    b.toString
+  }
+
+  private def arrAggSum(a: String) =
+    s"aggregate($a, CAST(0 AS DOUBLE), (__acc, __v) -> __acc + __v)"
+  private def arrAvg(a: String, summed: String) =
+    s"(CASE WHEN size($a) = 0 THEN CAST(NULL AS DOUBLE) " +
+      s"ELSE ${arrAggSum(summed)} / size($a) END)"
+  private def rotate(a: String, n: String) =
+    s"(CASE WHEN size($a) = 0 THEN $a ELSE " +
+      s"concat(slice($a, CAST(pmod($n, size($a)) AS INT) + 1, size($a)), " +
+      s"slice($a, 1, CAST(pmod($n, size($a)) AS INT))) END)"
+  private def fold2(a: String, b: String, term: String) =
+    s"aggregate(zip_with($a, $b, (__x, __y) -> $term), " +
+      s"CAST(0.0 AS DOUBLE), (__s, __e) -> __s + __e)"
+  private def dot(a: String, b: String) =
+    fold2(a, b, "CAST(__x AS DOUBLE) * CAST(__y AS DOUBLE)")
+  private val diffSq = "(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE)) * " +
+    "(CAST(__x AS DOUBLE) - CAST(__y AS DOUBLE))"
+  private def l2Sq(a: String) = s"aggregate($a, CAST(0.0 AS DOUBLE), " +
+    s"(__s, __e) -> __s + CAST(__e AS DOUBLE) * CAST(__e AS DOUBLE))"
+  private def ipv4Num(x: String) =
+    (1 to 4).zip(Seq(" * 16777216", " * 65536", " * 256", ""))
+      .map { case (i, m) => s"CAST(element_at(split($x, '\\\\.'), $i) AS BIGINT)$m" }
+      .mkString("(", " + ", ")")
+  /** JSON key arguments as a `concat` path tail: strip(), not trim() —
+    * the masked-literal sentinel is a control char trim() would eat. */
+  private def jsonPath(keys: Seq[String]) = keys.map(_.strip()).mkString(", '.', ")
+  private def jsonText(json: String, keys: Seq[String]) =
+    if (keys.isEmpty) s"CAST($json AS STRING)"
+    else s"get_json_object(CAST($json AS STRING), concat('$$.', ${jsonPath(keys)}))"
+  private def intParam(fn: String, n: String): String = {
+    require(n.trim.matches("\\d+"), s"$fn(N)(x): N must be an integer literal")
+    n.trim
+  }
+
+  /** Dictionary and attribute names must be string LITERALS. */
+  private def dictName(c: Call, tok: String): String =
+    c.lits.value(tok).getOrElse(throw new IllegalArgumentException(
+      s"${c.name}: dictionary and attribute names must be string literals"))
+
+  private def dict(c: Call, dn: String): DictRegistry.DictDef =
+    DictRegistry.get(dn).getOrElse(throw new IllegalArgumentException(
+      s"${c.name}: no dictionary '$dn' registered — CREATE DICTIONARY first " +
+        s"(registered: ${DictRegistry.list.map(_.name).mkString(", ")})"))
+
+  /** The key predicate of a dictionary probe: composite keys arrive as
+    * struct(…) (the tuple entry's lowering) or a bare single expression. */
+  private def dictKeyConds(c: Call, d: DictRegistry.DictDef, key: String): String = {
+    val parts =
+      if ((key.toLowerCase.startsWith("tuple(") ||
+           key.toLowerCase.startsWith("struct(")) && key.endsWith(")"))
+        balancedArgs(key, key.indexOf('('))._1
+      else List(key)
+    require(parts.length == d.keys.length,
+      s"${c.name}('${d.name}', …): ${parts.length} key expression(s) for a " +
+        s"${d.keys.length}-column PRIMARY KEY (${d.keys.mkString(", ")})")
+    d.keys.zip(parts).map { case (k, e) => s"$k = ($e)" }.mkString(" AND ")
   }
 
   /** Whitespace-only trim: `String.trim` strips every char ≤ 0x20,

@@ -219,6 +219,21 @@ class ChSqlSpec extends SparkSpecBase {
         "FROM region ORDER BY r_name")
   }
 
+  test("a call nested inside a call of the same name lowers too") {
+    val r = GraftSql.chSql(spark, sf0001,
+      """SELECT multiIf(x = 1, 'one', x = 2,
+        |    multiIf(y = 1, 'two-a', 'two-b'), 'other') AS m,
+        |  intDiv(intDiv(100, 7), 2) AS d,
+        |  arrayMap(x -> arrayMap(y -> y * 2, x), arr) AS a,
+        |  addDays(addDays(b, 1), 2) = timestampadd(DAY, 3, b) AS plus3
+        |FROM (SELECT 2 AS x, 1 AS y, array(array(1, 2)) AS arr,
+        |  DATE'2024-01-01' AS b)""".stripMargin).head()
+    r.getString(0) shouldBe "two-a"
+    r.getLong(1) shouldBe 7L
+    r.getSeq[Seq[Int]](2) shouldBe Seq(Seq(2, 4))
+    r.getBoolean(3) shouldBe true
+  }
+
   test("ARRAY JOIN clause rewrites to LATERAL VIEW and agrees") {
     // the clause form (exact text: positional LATERAL VIEW swap)
     ChDialect.rewrite(
