@@ -3,7 +3,8 @@ package graft.catalog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
+import scala.collection.immutable.ListMap
 
 /** Table registry — our analog of the reference's DDL catalog
   * (/root/reference/create_db.py:30-128 + /root/reference/types.json).
@@ -243,7 +244,32 @@ final case class TableDef(
     // table definition (persisted in `_TABLE`); the sweep itself runs on
     // demand — [[Catalog.materializeTtl]], CH's `ALTER TABLE …
     // MATERIALIZE TTL` — never as a hidden read-path rewrite.
-    ttl: Option[TtlSpec] = None)
+    ttl: Option[TtlSpec] = None,
+    // Pending ALTER state of the STORED files. Column ALTERs are
+    // metadata-only, so files written before one keep their old shape
+    // until the next compact/mutation rewrites every file in the declared
+    // shape and clears all three (persisted in `_TABLE`):
+    //   - ADD COLUMN: columns older files lack — reads fill their nulls
+    //     with the column's DEFAULT until the rewrite materializes it
+    //     (afterwards a stored NULL reads back as NULL);
+    backfillCols: Set[String] = Set.empty,
+    //   - RENAME COLUMN: declared name -> the PHYSICAL name in files
+    //     written before the rename (a chain collapses to the first);
+    renames: Map[String, String] = Map.empty,
+    //   - DROP COLUMN: physical names old files may still carry — no new
+    //     column may take one, or the old stored values would bleed in.
+    droppedCols: Set[String] = Set.empty) {
+
+  /** Each declared column DEFAULT as SQL cast to the column's current
+    * type. The field's `chDefault` metadata is the one place a default is
+    * stored; the insert fill, the read backfill, `system.columns` and the
+    * `_TABLE` sidecar all derive from it here.
+    */
+  def defaults: ListMap[String, String] = ListMap(schema.fields.toSeq.collect {
+    case f if f.metadata.contains("chDefault") =>
+      f.name -> s"CAST((${f.metadata.getString("chDefault")}) AS ${f.dataType.sql})"
+  }: _*)
+}
 
 /** A declared TTL: rows whose `col` (Date/DateTime/epoch-seconds) is
   * older than `maxAgeSec` at sweep time are DELETED, or — when
@@ -664,55 +690,11 @@ final class Catalog(spark: SparkSession) {
             s"${dt.simpleString}, not boolean")
       }
     }
-    // CREATE-time `DEFAULT expr` columns (ChDdl carries the rewritten
-    // expression in field metadata, key "chDefault"): validated like
-    // MATERIALIZED — the expression must resolve over the non-defaulted,
-    // non-materialized columns (a default referencing another DEFAULT
-    // column would make the insert fill order-dependent; one referencing
-    // a MATERIALIZED column would fail at insert, where defaults fill
-    // BEFORE materialization) and cast to the declared type. Installed
-    // into the SAME insert-default machinery ALTER ADD COLUMN DEFAULT
-    // uses, so `_TABLE` persistence, attach(), and the text-insert fill
-    // apply unchanged. No READ default: a CREATE-time default has no
-    // pre-existing files to back-fill.
-    val createDefaults: Seq[(String, String)] = t.schema.fields.toSeq
-      .filter(_.metadata.contains("chDefault"))
-      .map(f => f.name -> f.metadata.getString("chDefault"))
-    if (createDefaults.nonEmpty) {
-      val excluded = createDefaults.map(_._1).toSet ++
-        t.materializedCols.map(_._1)
-      val baseSchema = StructType(t.schema.fields.filterNot(f =>
-        excluded.contains(f.name)))
-      val base = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], baseSchema)
-      createDefaults.foreach { case (c, e) =>
-        val dt = try base.select(expr(e)).schema.head.dataType
-          catch { case scala.util.control.NonFatal(ex) =>
-            throw new IllegalArgumentException(
-              s"${t.name}: DEFAULT $c expression '$e' does not resolve " +
-                "over the plain columns (defaults referencing other " +
-                "DEFAULT or MATERIALIZED columns are refused — the fill " +
-                s"would be evaluation-order-dependent): ${ex.getMessage}") }
-        require(org.apache.spark.sql.catalyst.expressions.Cast
-            .canCast(dt, t.schema(c).dataType),
-          s"${t.name}: DEFAULT $c expression '$e' has type " +
-            s"${dt.simpleString}, not castable to declared " +
-            s"${t.schema(c).dataType.simpleString}")
-      }
-    }
-    val prior = tables.putIfAbsent(t.name, t)
-    // install the defaults only for the WINNING registration (a lost
-    // putIfAbsent must not overwrite the live table's default state) and
-    // BEFORE persistTableDef, which snapshots defaultSql into the sidecar
-    if (prior.isEmpty && createDefaults.nonEmpty) {
-      val casts = createDefaults.map { case (c, e) =>
-        c -> s"CAST(($e) AS ${t.schema(c).dataType.sql})" }
-      defaultSql.put(t.name,
-        defaultSql.getOrElse(t.name, Map.empty) ++ casts)
-      insertDefaults.put(t.name,
-        insertDefaults.getOrElse(t.name, Map.empty) ++
-          casts.map { case (c, s) => c -> expr(s) })
-    }
+    // `DEFAULT expr` columns (the expression rides in field metadata, key
+    // "chDefault"): validated like MATERIALIZED (see [[checkDefault]])
+    t.schema.fields.filter(_.metadata.contains("chDefault")).foreach(f =>
+      checkDefault(t, f.name, f.metadata.getString("chDefault"), t.name))
+    tables.putIfAbsent(t.name, t)
     // persist the WINNING definition: when putIfAbsent lost to an existing
     // registration, writing the argument def would leave a _TABLE sidecar
     // describing semantics that were never in effect — attach() after a
@@ -720,6 +702,32 @@ final class Catalog(spark: SparkSession) {
     persistTableDef(tables(t.name))
     registerProjections(tables(t.name))
     tables(t.name)
+  }
+
+  /** A column DEFAULT must resolve over the PLAIN columns — neither
+    * defaulted nor MATERIALIZED, nor the column itself: a default
+    * referencing another DEFAULT column would make the insert fill
+    * order-dependent, and one referencing a MATERIALIZED column would
+    * fail at insert, where defaults fill BEFORE materialization — and
+    * cast to the declared type. Plan analysis over an empty frame, no job.
+    */
+  private def checkDefault(t: TableDef, c: String, e: String,
+                           who: String): Unit = {
+    val excluded = t.defaults.keySet ++ t.materializedCols.map(_._1) + c
+    val base = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(t.schema.fields.filterNot(f => excluded(f.name))))
+    val dt = try base.select(expr(e)).schema.head.dataType
+      catch { case scala.util.control.NonFatal(ex) =>
+        throw new IllegalArgumentException(
+          s"$who: DEFAULT $c expression '$e' does not resolve over the " +
+            "plain columns (defaults referencing other DEFAULT or " +
+            "MATERIALIZED columns are refused — the fill would be " +
+            s"evaluation-order-dependent): ${ex.getMessage}") }
+    require(org.apache.spark.sql.catalyst.expressions.Cast
+        .canCast(dt, t.schema(c).dataType),
+      s"$who: DEFAULT $c expression '$e' has type ${dt.simpleString}, " +
+        s"not castable to declared ${t.schema(c).dataType.simpleString}")
   }
 
   /** Install the winning def's projections into the optimizer rewrite
@@ -791,21 +799,16 @@ final class Catalog(spark: SparkSession) {
       ("minmax_cols" -> t.minmaxCols) ~
       ("token_index_cols" -> t.tokenIndexCols) ~
       ("codec" -> t.codec) ~
-      // pending (un-materialized) column renames must survive a restart:
-      // without them attach() would read pre-rename files' old column
-      // names as all-null under the renamed schema
-      ("renames" -> renamePending.getOrElse(t.name, Map.empty[String, String])) ~
-      // ...and pending drops: the physical names may still exist in old
-      // files, so re-adding one before a compact must stay refused after
-      // a restart (the old stored values would bleed into the new column)
-      ("dropped_cols" -> droppedPending.getOrElse(t.name, Set.empty[String]).toSeq.sorted) ~
-      // ALTER-added defaults as re-parseable SQL: without these an
-      // attach()ed table reads old parts' added columns as bare null
-      // (insert defaults are permanent; read defaults only until a
-      // compact materializes them — hence the separate retired-state list)
-      ("defaults" -> defaultSql.getOrElse(t.name, Map.empty[String, String])) ~
-      ("read_default_cols" ->
-        readDefaults.getOrElse(t.name, Map.empty[String, Column]).keys.toSeq.sorted) ~
+      // the pending storage state must survive a restart: without it an
+      // attach()ed table reads pre-rename files' columns as all-null,
+      // re-admits a dropped name whose old values still sit in files, and
+      // stops backfilling ADD COLUMN defaults into old parts
+      ("renames" -> t.renames) ~
+      ("dropped_cols" -> t.droppedCols.toSeq.sorted) ~
+      // derived from the fields' `chDefault` (kept so every reader of
+      // older sidecars finds the key it knows)
+      ("defaults" -> t.defaults) ~
+      ("read_default_cols" -> t.backfillCols.toSeq.sorted) ~
       // declaration-ordered [name, expr] pairs (a JSON object would lose
       // order; constraints report in declared order, like system.tables)
       ("constraints" -> t.constraints.map { case (n, e) => Seq(n, e) }) ~
@@ -927,48 +930,24 @@ final class Catalog(spark: SparkSession) {
     // authoritative (persistTableDef is best-effort, so the sidecar can
     // lag it) — re-attaching must not overwrite it with stale contents
     if (already.isDefined) return already.get
-    // capture the pre-attach state so a failed registration restores it
-    // exactly instead of merely clearing (the name is unregistered here,
-    // so these are normally absent — but restore-what-was beats guess)
-    def snap[V](m: scala.collection.concurrent.TrieMap[String, V]) = {
-      val prior = m.get(name)
-      () => prior match { case Some(v) => m.put(name, v); case None => m.remove(name) }
-    }
-    val restorePrior: Seq[() => Any] = Seq(snap(renamePending),
-      snap(droppedPending), snap(readDefaults), snap(insertDefaults),
-      snap(defaultSql))
-    // restore ALTER state BEFORE registration: a reader racing the attach
-    // must never see the renamed/widened schema without its storage
-    // mapping or default fill
     def strMap(node: org.json4s.JValue): Map[String, String] = node match {
       case org.json4s.JObject(fields) => fields.collect {
         case (k, org.json4s.JString(v)) => k -> v
       }.toMap
       case _ => Map.empty
     }
-    val ren = strMap(j \ "renames")
-    if (ren.nonEmpty) renamePending.put(name, ren)
-    val dropped = list(j \ "dropped_cols")
-    if (dropped.nonEmpty) droppedPending.put(name, dropped.toSet)
+    // sidecars of older builds stored an ADD COLUMN default only under
+    // `defaults`: it becomes that field's declaration
     val defs = strMap(j \ "defaults")
-    if (defs.nonEmpty) {
-      defaultSql.put(name, defs)
-      insertDefaults.put(name, defs.map { case (c, s) => c -> expr(s) })
-      val readCols = list(j \ "read_default_cols").toSet
-      val rd = defs.filter { case (c, _) => readCols.contains(c) }
-      if (rd.nonEmpty)
-        readDefaults.put(name, rd.map { case (c, s) => c -> expr(s) })
-    }
+    val declared = StructType(schema.fields.map(f =>
+      if (f.metadata.contains("chDefault")) f
+      else defs.get(f.name).fold(f)(e => withDefault(f, Some(e)))))
     // codec defaulted when absent: sidecars written before the axis
     // existed keep attaching (and parquet self-describes per file anyway)
     val codec = (j \ "codec") match {
       case org.json4s.JString(c) => c
       case _ => "snappy"
     }
-    // registration can still fail (corrupt codec, malformed semantics
-    // lists) — the pending ALTER state restored above must not outlive a
-    // failed attach, or a LATER table created under the same name would
-    // inherit another table's defaults and stored-name refusals
     def pairList(node: org.json4s.JValue): Seq[(String, String)] =
       node match {
         case org.json4s.JArray(xs) => xs.collect {
@@ -977,7 +956,7 @@ final class Catalog(spark: SparkSession) {
         }
         case _ => Nil
       }
-    try createTable(TableDef(name, path, schema, list(j \ "sort_keys"), sem,
+    createTable(TableDef(name, path, declared, list(j \ "sort_keys"), sem,
       layout, list(j \ "partition_keys"), list(j \ "index_cols"),
       list(j \ "minmax_cols"), codec, pairList(j \ "constraints"),
       pairList(j \ "materialized_cols"),
@@ -1023,28 +1002,15 @@ final class Catalog(spark: SparkSession) {
           Some(TtlSpec(ttlCol, age, list(o \ "group_keys"),
             pairList(o \ "set"), calMonths))
         case _ => None // absent in pre-TTL sidecars
-      }))
-    catch {
-      case e: Throwable =>
-        if (!tables.contains(name)) restorePrior.foreach(_.apply())
-        throw e
-    }
+      },
+      list(j \ "read_default_cols").toSet.filter(defs.contains),
+      strMap(j \ "renames"), list(j \ "dropped_cols").toSet))
   }
 
   /** Forget a table's registration, keeping its storage — DETACH TABLE.
     * [[attach]] (or a fresh createTable with the same def) re-registers.
-    * Per-table ALTER state is dropped with the registration — it is all
-    * persisted in the `_TABLE` sidecar, and leaving it would poison a
-    * DIFFERENT table later attached under the same name.
     */
-  def detach(name: String): Unit = {
-    tables.remove(name)
-    renamePending.remove(name)
-    droppedPending.remove(name)
-    readDefaults.remove(name)
-    insertDefaults.remove(name)
-    defaultSql.remove(name)
-  }
+  def detach(name: String): Unit = tables.remove(name)
 
   /** `DROP TABLE [IF EXISTS]` — deregister AND delete storage (the
     * difference from [[detach]], exactly CH's DETACH-vs-DROP split).
@@ -1081,7 +1047,7 @@ final class Catalog(spark: SparkSession) {
   /** `RENAME TABLE from TO to` — re-registration under the new name;
     * storage stays at its path (the `_TABLE` sidecar records the new
     * name, so a later ATTACH of that path resolves to it — CH renames the
-    * metadata object the same way). Pending ALTER state follows the name.
+    * metadata object the same way).
     * Refused while the table participates in an attached MV cascade or a
     * refreshable view (those registries key on the OLD name — a silent
     * rename would silently stop maintaining them).
@@ -1094,8 +1060,6 @@ final class Catalog(spark: SparkSession) {
       requireNameFree(from, "renameTable")
       def move[V](m: scala.collection.concurrent.TrieMap[String, V]): Unit =
         m.remove(from).foreach(v => m.put(to, v))
-      move(renamePending); move(droppedPending)
-      move(readDefaults); move(insertDefaults); move(defaultSql)
       // access control FOLLOWS the table: a rename that silently dropped
       // row policies / column grants would un-filter readAs under the
       // new name — the one registry class that must never detach quietly
@@ -1120,8 +1084,8 @@ final class Catalog(spark: SparkSession) {
   /** `EXCHANGE TABLES a AND b` — atomically swap two registrations (CH's
     * zero-downtime swap idiom: stage a rebuilt table beside the live one,
     * exchange, drop the old). Locks taken in name order so concurrent
-    * exchanges can never deadlock; pending ALTER state swaps with the
-    * names; both sidecars re-persist so ATTACH resolves the new names.
+    * exchanges can never deadlock; both sidecars re-persist so ATTACH
+    * resolves the new names.
     */
   def exchangeTables(a: String, b: String): Unit = {
     require(a != b, s"exchangeTables: $a AND $b are the same table")
@@ -1135,8 +1099,6 @@ final class Catalog(spark: SparkSession) {
         val va = m.remove(a); val vb = m.remove(b)
         va.foreach(m.put(b, _)); vb.foreach(m.put(a, _))
       }
-      swap(renamePending); swap(droppedPending)
-      swap(readDefaults); swap(insertDefaults); swap(defaultSql)
       // access control follows the names (the renameTable doc)
       swap(rowPolicies); swap(columnGrants); swap(columnMasks)
       tables.put(a, tb.copy(name = a))
@@ -1145,45 +1107,6 @@ final class Catalog(spark: SparkSession) {
       persistTableDef(tables(b))
     }}
   }
-
-  // ALTER ADD COLUMN defaults, two lifetimes (values pre-cast to the
-  // declared type):
-  //   - readDefaults: coalesce applied at READ time for parts written
-  //     before the column existed. Retired per table once a
-  //     compact/mutation materializes the default into every stored row —
-  //     afterwards an explicitly stored NULL reads back as NULL, never as
-  //     the default.
-  //   - insertDefaults: permanent table metadata (ClickHouse DEFAULT):
-  //     a batch that OMITS the column fills at insert time, forever.
-  private val readDefaults =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, Column]]
-  private val insertDefaults =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, Column]]
-  // the same defaults as storable SQL (`CAST(<literal> AS <type>)`) — the
-  // Column maps are runtime objects; the `_TABLE` sidecar needs a form
-  // attach() can re-parse after a restart (Spark 4's Column no longer
-  // exposes its expression, so the SQL is captured at addColumn time)
-  private val defaultSql =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
-
-  // ALTER DROP COLUMN, pending materialization: the PHYSICAL column names
-  // that may still exist inside old data files for each dropped column
-  // (the declared name, plus its pre-rename stored name if a rename was
-  // pending). Readers ignore them for free (absent from the read schema),
-  // but re-introducing one before a compact rewrites storage must be
-  // refused — the old files' stored values would bleed into the new
-  // column. Persisted in the `_TABLE` sidecar; retired on compact.
-  private val droppedPending =
-    scala.collection.concurrent.TrieMap.empty[String, Set[String]]
-
-  // ALTER RENAME COLUMN, pending materialization: newName -> oldName per
-  // table. Files written before the rename carry the old name; the read
-  // path surfaces them under the new name until a compact/mutation
-  // rewrites storage (then the mapping retires, like readDefaults).
-  // Persisted in the _TABLE sidecar so attach() after a restart keeps
-  // reading pre-rename files correctly.
-  private val renamePending =
-    scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
 
   /** `ALTER TABLE name ADD COLUMN field DEFAULT default` — widens the
     * declared schema in place. Old parquet files simply lack the column;
@@ -1196,7 +1119,10 @@ final class Catalog(spark: SparkSession) {
     * compact materializes old parts, NULLs in a carried column fill too
     * (see [[fillOmittedDefaults]] — the read-time coalesce cannot tell
     * old parts from new, so pre-materialization the column cannot hold
-    * NULL; afterwards it is a plain nullable column).
+    * NULL; afterwards it is a plain nullable column). The value becomes
+    * the column's declared DEFAULT (a null one reads `DEFAULT NULL`), so
+    * a later MODIFY … DEFAULT also changes what old parts read, as in
+    * ClickHouse.
     *
     * The default is validated against the declared type up front — a
     * default the type can't hold would otherwise silently retype the
@@ -1211,7 +1137,7 @@ final class Catalog(spark: SparkSession) {
       // a name that is still a PHYSICAL stored name — the pre-rename name
       // of a renamed column, or a dropped column not yet compacted away —
       // would read old files' stored values into the new column
-      require(!stored(name).contains(field.name),
+      require(!stored(t).contains(field.name),
         s"addColumn($name): ${field.name} is still a stored column name " +
           s"in un-rewritten files (compact first)")
       // the create-time engine invariants must hold across ALTER too: a
@@ -1224,7 +1150,6 @@ final class Catalog(spark: SparkSession) {
             .isOrderable(field.dataType),
           s"addColumn($name): ${field.dataType.simpleString} has no " +
             "ordering — Join value columns must stay orderable")
-      val cast = lit(default).cast(field.dataType)
       // driver-side eval of the raw Cast(Literal) pair: an uncastable
       // default fails NOW, not as a silent null (or worse, a coerced
       // column type) at read
@@ -1244,18 +1169,16 @@ final class Catalog(spark: SparkSession) {
           s"addColumn($name): default $default would be stored as $evaluated " +
             s"(lossy cast to ${field.dataType})")
       }
-      // defaults BEFORE the schema swap: read() takes no lock, so a
-      // reader racing this block must either see the old schema (column
-      // invisible) or the new schema WITH its default — never the widened
-      // schema with bare nulls. applyDefaults skips columns a frame
-      // doesn't carry, so the defaults-first window is harmless.
-      readDefaults.put(name,
-        readDefaults.getOrElse(name, Map.empty) + (field.name -> cast))
-      insertDefaults.put(name,
-        insertDefaults.getOrElse(name, Map.empty) + (field.name -> cast))
-      defaultSql.put(name, defaultSql.getOrElse(name, Map.empty) +
-        (field.name -> s"CAST(${inLit.sql} AS ${field.dataType.sql})"))
-      tables.put(name, t.copy(schema = StructType(t.schema.fields :+ field)))
+      // the literal as DDL spells it (`7`, not Spark's `7L`): SHOW CREATE
+      // renders it and a re-parse keeps it
+      val text = default match {
+        case n: java.lang.Number if !n.doubleValue.isNaN &&
+          !n.doubleValue.isInfinite => n.toString
+        case _ => inLit.sql
+      }
+      tables.put(name, t.copy(
+        schema = StructType(t.schema.fields :+ withDefault(field, Some(text))),
+        backfillCols = t.backfillCols + field.name))
       // the persisted definition must track the ALTER, or attach() after
       // a restart reconstructs the pre-ALTER schema and hides the column
       persistTableDef(tables(name))
@@ -1265,8 +1188,7 @@ final class Catalog(spark: SparkSession) {
     * declare, replace, or retire a column's INSERT default in place.
     * Metadata-only: stored rows are untouched; the new declaration
     * applies to future inserts (including the text doors' per-row absent
-    * fields). The field's `chDefault` metadata tracks the live
-    * declaration so SHOW CREATE renders it and attach() re-installs it.
+    * fields) and to old parts an ADD COLUMN left backfilled.
     * REMOVE DEFAULT also retires the column's pending READ default, so
     * old parts' missing values read back as NULL from that point — the
     * declaration is gone, nothing should keep filling.
@@ -1280,53 +1202,22 @@ final class Catalog(spark: SparkSession) {
       require(!t.materializedCols.exists(_._1 == column),
         s"modifyColumnDefault($name): $column is MATERIALIZED — it has " +
           "no insert default to modify")
-      defaultExprSql match {
-        case Some(e) =>
-          // validate like CREATE: resolve over the PLAIN columns only
-          // (not self, not other defaulted, not materialized) and cast
-          val excluded = t.schema.fields
-            .filter(f => f.name == column ||
-              f.metadata.contains("chDefault")).map(_.name).toSet ++
-            t.materializedCols.map(_._1) ++
-            insertDefaults.getOrElse(name, Map.empty).keySet
-          val base = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(t.schema.fields.filterNot(f => excluded(f.name))))
-          val dt = try base.select(expr(e)).schema.head.dataType
-            catch { case scala.util.control.NonFatal(ex) =>
-              throw new IllegalArgumentException(
-                s"modifyColumnDefault($name): DEFAULT '$e' does not " +
-                  s"resolve over the plain columns: ${ex.getMessage}") }
-          require(org.apache.spark.sql.catalyst.expressions.Cast
-              .canCast(dt, t.schema(column).dataType),
-            s"modifyColumnDefault($name): DEFAULT '$e' has type " +
-              s"${dt.simpleString}, not castable to declared " +
-              s"${t.schema(column).dataType.simpleString}")
-          val cast = s"CAST(($e) AS ${t.schema(column).dataType.sql})"
-          defaultSql.put(name,
-            defaultSql.getOrElse(name, Map.empty) + (column -> cast))
-          insertDefaults.put(name,
-            insertDefaults.getOrElse(name, Map.empty) + (column -> expr(cast)))
-        case None =>
-          defaultSql.put(name,
-            defaultSql.getOrElse(name, Map.empty) - column)
-          insertDefaults.put(name,
-            insertDefaults.getOrElse(name, Map.empty) - column)
-          readDefaults.put(name,
-            readDefaults.getOrElse(name, Map.empty) - column)
-      }
-      val fields = t.schema.fields.map { f =>
-        if (f.name != column) f
-        else defaultExprSql match {
-          case Some(e) => f.copy(metadata = new org.apache.spark.sql.types
-            .MetadataBuilder().withMetadata(f.metadata)
-            .putString("chDefault", e).build())
-          case None => f.copy(metadata = metadataWithout(f.metadata, "chDefault"))
-        }
-      }
-      tables.put(name, t.copy(schema = StructType(fields)))
+      defaultExprSql.foreach(e =>
+        checkDefault(t, column, e, s"modifyColumnDefault($name)"))
+      tables.put(name, t.copy(
+        schema = StructType(t.schema.fields.map(f =>
+          if (f.name == column) withDefault(f, defaultExprSql) else f)),
+        backfillCols =
+          if (defaultExprSql.isEmpty) t.backfillCols - column
+          else t.backfillCols))
       persistTableDef(tables(name))
     }
+
+  // a field with its DEFAULT declaration set or removed
+  private def withDefault(f: StructField, e: Option[String]): StructField =
+    f.copy(metadata = e.fold(metadataWithout(f.metadata, "chDefault"))(s =>
+      new MetadataBuilder().withMetadata(f.metadata)
+        .putString("chDefault", s).build()))
 
   // MetadataBuilder cannot remove a key — round-trip through its JSON
   private def metadataWithout(m: org.apache.spark.sql.types.Metadata,
@@ -1337,15 +1228,6 @@ final class Catalog(spark: SparkSession) {
       JsonMethods.compact(JsonMethods.render(j)))
   }
 
-  /** `ALTER TABLE name RENAME COLUMN from TO to` — metadata-only, like
-    * ClickHouse: the declared schema renames in place, old parquet files
-    * keep the old physical name, and the read path maps them under the new
-    * name (see [[renamePending]]) until the next compact/mutation rewrites
-    * storage with the new name and retires the mapping. Key columns (sort/
-    * partition/semantics/index keys) are refused, matching ClickHouse's
-    * "cannot rename key column" — every downstream merge view and layout
-    * decision is keyed by name.
-    */
   /** Key/engine columns — every column a merge view, layout, or skip
     * index is keyed by. Renaming or dropping one is refused, matching
     * ClickHouse's "cannot rename/drop key column".
@@ -1369,10 +1251,18 @@ final class Catalog(spark: SparkSession) {
     * until a compact rewrites storage — the read path could not tell the
     * new column's data from the old files' stored values.
     */
-  private def stored(name: String): Set[String] =
-    renamePending.getOrElse(name, Map.empty).values.toSet ++
-      droppedPending.getOrElse(name, Set.empty)
+  private def stored(t: TableDef): Set[String] =
+    t.renames.values.toSet ++ t.droppedCols
 
+  /** `ALTER TABLE name RENAME COLUMN from TO to` — metadata-only, like
+    * ClickHouse: the declared schema renames in place, old parquet files
+    * keep the old physical name, and the read path maps them under the new
+    * name (see [[TableDef.renames]]) until the next compact/mutation rewrites
+    * storage with the new name and retires the mapping. Key columns (sort/
+    * partition/semantics/index keys) are refused, matching ClickHouse's
+    * "cannot rename key column" — every downstream merge view and layout
+    * decision is keyed by name.
+    */
   def renameColumn(name: String, from: String, to: String): Unit =
     writeLock(name).synchronized {
       val t = get(name)
@@ -1380,27 +1270,22 @@ final class Catalog(spark: SparkSession) {
         s"renameColumn($name): no such column $from")
       require(!t.schema.fieldNames.contains(to),
         s"renameColumn($name): column $to already exists")
-      require(!stored(name).contains(to),
+      require(!stored(t).contains(to),
         s"renameColumn($name): $to is still a stored column name in " +
           s"un-rewritten files (compact first)")
       require(!keyCols(t).contains(from),
         s"renameColumn($name): $from is a key/engine column")
       // a column can be renamed AGAIN before materialization: collapse the
       // chain so the mapping always points at the PHYSICAL stored name
-      val prior = renamePending.getOrElse(name, Map.empty)
-      val physical = prior.getOrElse(from, from)
-      renamePending.put(name, (prior - from) + (to -> physical))
-      // ALTER-added-column state follows the rename (its default keeps
-      // filling under the new name)
-      readDefaults.get(name).filter(_.contains(from)).foreach(m =>
-        readDefaults.put(name, (m - from) + (to -> m(from))))
-      insertDefaults.get(name).filter(_.contains(from)).foreach(m =>
-        insertDefaults.put(name, (m - from) + (to -> m(from))))
-      defaultSql.get(name).filter(_.contains(from)).foreach(m =>
-        defaultSql.put(name, (m - from) + (to -> m(from))))
+      val physical = t.renames.getOrElse(from, from)
       tables.put(name, t.copy(
         schema = StructType(t.schema.fields.map(f =>
           if (f.name == from) f.copy(name = to) else f)),
+        renames = t.renames - from + (to -> physical),
+        // a pending backfill keeps filling under the new name
+        backfillCols =
+          if (t.backfillCols(from)) t.backfillCols - from + to
+          else t.backfillCols,
         // the declared codec follows the column (CH: codecs are part of
         // the column declaration, renaming keeps them)
         columnCodecs = t.columnCodecs.map {
@@ -1439,18 +1324,12 @@ final class Catalog(spark: SparkSession) {
       // storage may carry the declared name (post-rename appends, or no
       // rename) AND the pre-rename physical name — record both, so
       // neither can be re-introduced before a compact clears the files
-      val physical = renamePending.getOrElse(name, Map.empty)
-        .getOrElse(column, column)
-      droppedPending.put(name,
-        droppedPending.getOrElse(name, Set.empty) + column + physical)
-      renamePending.get(name).foreach(m =>
-        renamePending.put(name, m - column))
-      readDefaults.get(name).foreach(m => readDefaults.put(name, m - column))
-      insertDefaults.get(name).foreach(m => insertDefaults.put(name, m - column))
-      defaultSql.get(name).foreach(m => defaultSql.put(name, m - column))
       tables.put(name, t.copy(
         schema = StructType(t.schema.fields.filterNot(_.name == column)),
-        columnCodecs = t.columnCodecs.filterNot(_._1 == column)))
+        columnCodecs = t.columnCodecs.filterNot(_._1 == column),
+        droppedCols = t.droppedCols + column + t.renames.getOrElse(column, column),
+        renames = t.renames - column,
+        backfillCols = t.backfillCols - column))
       persistTableDef(tables(name))
     }
 
@@ -1524,15 +1403,6 @@ final class Catalog(spark: SparkSession) {
         require(ok, s"modifyColumnType($name): $column declares codec $k, " +
           s"which does not apply to ${newType.simpleString}")
       }
-      // ALTER-added defaults re-cast to the wide type, so read coalesce
-      // and insert fill produce the declared type (not a coerced hybrid)
-      readDefaults.get(name).filter(_.contains(column)).foreach(m =>
-        readDefaults.put(name, m + (column -> m(column).cast(newType))))
-      insertDefaults.get(name).filter(_.contains(column)).foreach(m =>
-        insertDefaults.put(name, m + (column -> m(column).cast(newType))))
-      defaultSql.get(name).filter(_.contains(column)).foreach(m =>
-        defaultSql.put(name,
-          m + (column -> s"CAST((${m(column)}) AS ${newType.sql})")))
       tables.put(name, t.copy(schema = StructType(t.schema.fields.map(f =>
         if (f.name == column) f.copy(dataType = newType) else f))))
       persistTableDef(tables(name))
@@ -1554,48 +1424,31 @@ final class Catalog(spark: SparkSession) {
       else s"OPTIMIZE TABLE FINAL DEDUPLICATE BY ${by.mkString(", ")}")
   }
 
-  /** Fill ALTER-added columns' nulls with their declared defaults (old
-    * parts only — see [[readDefaults]] retirement).
+  /** Fill backfilled columns' nulls with their declared defaults (old
+    * parts only — see [[TableDef.backfillCols]] retirement).
     */
-  private def applyDefaults(name: String, df: DataFrame): DataFrame =
-    readDefaults.getOrElse(name, Map.empty).foldLeft(df) {
-      case (d, (c, v)) if d.columns.contains(c) =>
-        d.withColumn(c, coalesce(col(c), v))
-      case (d, _) => d // pre-swap reader: column not in its schema yet
+  private def applyDefaults(t: TableDef, df: DataFrame): DataFrame =
+    t.defaults.filter { case (c, _) => t.backfillCols(c) }.foldLeft(df) {
+      case (d, (c, e)) => d.withColumn(c, coalesce(col(c), expr(e)))
     }
 
   /** Insert-time default materialization: an OMITTED column is added, and
     * nulls in a CARRIED column also fill. The null-fill is load-bearing
     * for consistency, not convenience: the read path coalesces the whole
-    * table while readDefaults is live (it cannot tell pre-ALTER parts
+    * table while a column is backfilled (it cannot tell pre-ALTER parts
     * from new ones), so if an explicit NULL were stored verbatim it would
     * READ as the default and then be permanently materialized into the
     * default by the next compact — a silent rewrite of inserted data.
     * Filling at insert makes storage and reads agree at every point:
     * until the default is materialized the column simply cannot hold
-    * NULL; after materialization (readDefaults retired) it behaves like
+    * NULL; after materialization (backfill retired) it behaves like
     * any nullable column, explicit NULLs included.
     */
-  /** Columns with a registered ALTER-declared insert DEFAULT — the text
-    * insert door (ChDdl InsertValues) leaves these out of its type-default
-    * fill so [[fillOmittedDefaults]] applies the declared value instead.
-    */
-  def insertDefaultColumns(name: String): Set[String] =
-    insertDefaults.getOrElse(name, Map.empty).keySet
-
-  /** The declared insert DEFAULT of one column, Column form — the text
-    * insert doors coalesce per-row ABSENT fields with it (CH's
-    * JSONEachRow semantics: a missing field takes the declared default,
-    * else the type default).
-    */
-  def insertDefault(name: String, column: String): Option[Column] =
-    insertDefaults.getOrElse(name, Map.empty).get(column)
-
-  private def fillOmittedDefaults(name: String, batch: DataFrame): DataFrame =
-    insertDefaults.getOrElse(name, Map.empty).foldLeft(batch) {
-      case (d, (c, v)) if !d.columns.contains(c) => d.withColumn(c, v)
-      case (d, (c, v)) if readDefaults.get(name).exists(_.contains(c)) =>
-        d.withColumn(c, coalesce(col(c), v))
+  private def fillOmittedDefaults(t: TableDef, batch: DataFrame): DataFrame =
+    t.defaults.foldLeft(batch) {
+      case (d, (c, e)) if !d.columns.contains(c) => d.withColumn(c, expr(e))
+      case (d, (c, e)) if t.backfillCols(c) =>
+        d.withColumn(c, coalesce(col(c), expr(e)))
       case (d, _) => d
     }
 
@@ -1737,18 +1590,6 @@ final class Catalog(spark: SparkSession) {
       else cur +: segs
   }
 
-  /** S4: columnar append, clustered by the declared sort key on the way in
-    * (O3) — `repartitionByRange` gives cross-file range layout, then
-    * `sortWithinPartitions` gives Parquet row groups whose min/max stats
-    * replicate the sparse-primary-index skipping of `ORDER BY` tables
-    * (types.json:7). ReplacingDedup batches are pre-collapsed so a single
-    * batch can never introduce duplicates on its own.
-    *
-    * Returns the number of rows appended. The batch is cached around the
-    * count+write pair so the source is scanned once — callers (ingest row
-    * accounting, importer.py:111's "Inserted N rows") get the batch size in
-    * O(batch), never via a full-table scan.
-    */
   // ---- materialized views as insert triggers ---------------------------
   //
   // ClickHouse's CREATE MATERIALIZED VIEW … TO target is an INSERT
@@ -2256,6 +2097,18 @@ final class Catalog(spark: SparkSession) {
     }
   }
 
+  /** S4: columnar append, clustered by the declared sort key on the way in
+    * (O3) — `repartitionByRange` gives cross-file range layout, then
+    * `sortWithinPartitions` gives Parquet row groups whose min/max stats
+    * replicate the sparse-primary-index skipping of `ORDER BY` tables
+    * (types.json:7). ReplacingDedup batches are pre-collapsed so a single
+    * batch can never introduce duplicates on its own.
+    *
+    * Returns the number of rows appended. The batch is cached around the
+    * count+write pair so the source is scanned once — callers (ingest row
+    * accounting, importer.py:111's "Inserted N rows") get the batch size in
+    * O(batch), never via a full-table scan.
+    */
   def append(name: String, batch: DataFrame): Long =
     append(name, batch, blockBytes = -1L)
 
@@ -2275,7 +2128,7 @@ final class Catalog(spark: SparkSession) {
     */
   def append(name: String, batch: DataFrame, blockBytes: Long): Long = {
     val t = get(name)
-    val filled = materializeAndCheck(t, fillOmittedDefaults(name, batch))
+    val filled = materializeAndCheck(t, fillOmittedDefaults(t, batch))
     // ENGINE = Null: type-check + count, discard, fan out to MVs. The
     // batch is cached around the count so attached transforms don't
     // recompute an arbitrary upstream lineage once per view.
@@ -2328,12 +2181,6 @@ final class Catalog(spark: SparkSession) {
     finally batch.unpersist()
   }
 
-  /** Multi-writer Versioned append (doc at [[segMarkerDir]]): stage to a
-    * process-unique segment dir, then commit with one atomic marker
-    * create. The stage write is a fresh-directory overwrite, so two
-    * processes can never interleave inside one Spark `_temporary` staging
-    * tree the way concurrent same-directory appends would.
-    */
   /** The per-engine INSERT-BLOCK pre-merge (ClickHouse merges each insert
     * block before it reaches storage) — shared by [[append]] and
     * [[appendIdempotent]] so a block lands identically through either
@@ -2427,7 +2274,7 @@ final class Catalog(spark: SparkSession) {
         // a crashed prior attempt's partial stage is invisible (no
         // marker) — clear and restage
         if (f.exists(segPath)) f.delete(segPath, true)
-        val filled = materializeAndCheck(t, fillOmittedDefaults(name, batch))
+        val filled = materializeAndCheck(t, fillOmittedDefaults(t, batch))
         val sorted = clusteredFor(t, preMergedBlock(t, filled))
         val cnt = writeData(t, sorted, segPath.toString)._1
         f.mkdirs(segMarkerDir(t))
@@ -2465,6 +2312,12 @@ final class Catalog(spark: SparkSession) {
     committed.map { case (cnt, filled) => fanOutMvs(name, filled); cnt }
   }
 
+  /** Multi-writer Versioned append (doc at [[segMarkerDir]]): stage to a
+    * process-unique segment dir, then commit with one atomic marker
+    * create. The stage write is a fresh-directory overwrite, so two
+    * processes can never interleave inside one Spark `_temporary` staging
+    * tree the way concurrent same-directory appends would.
+    */
   private def commitSegment(t: TableDef, batch: DataFrame): Long = {
     import org.apache.hadoop.fs.Path
     val f = fs(t)
@@ -2481,24 +2334,6 @@ final class Catalog(spark: SparkSession) {
     rows
   }
 
-  /** Finish a compact swap a crash interrupted (doc on [[compact]]): table
-    * path absent with `.compact.tmp`/`.compact.old` present means the only
-    * surviving copies are the swap artifacts — every entry point that
-    * touches storage (append / read / readRaw / compact) runs this first,
-    * so no caller can ever observe, recreate, or delete a mid-swap table.
-    * One `exists` probe when the table is healthy.
-    */
-  /** The on-write clustering for a table — MergeTree's two storage axes:
-    *
-    *   - `partitionKeys` (PARTITION BY, create_db.py's MergeTree family):
-    *     hash-repartition on the partition columns so each task holds few
-    *     partition values (few files per directory), then sort rows by
-    *     (partition, sortKeys) — ClickHouse likewise orders WITHIN each
-    *     partition, and readers get directory-level partition pruning on
-    *     top of row-group min/max skipping;
-    *   - `sortKeys` alone (ORDER BY): global range layout via
-    *     `repartitionByRange` + per-file sort, the O3 clustering.
-    */
   /** True when `df` is built ENTIRELY from driver-local rows (VALUES
     * inserts, centroid saves, metadata frames) and is small — known at
     * PLAN time from the LocalRelation leaves, no job. Such a block gains
@@ -2532,6 +2367,17 @@ final class Catalog(spark: SparkSession) {
     localOnly && rows <= 1024
   }
 
+  /** The on-write clustering for a table — MergeTree's two storage axes:
+    *
+    *   - `partitionKeys` (PARTITION BY, create_db.py's MergeTree family):
+    *     hash-repartition on the partition columns so each task holds few
+    *     partition values (few files per directory), then sort rows by
+    *     (partition, sortKeys) — ClickHouse likewise orders WITHIN each
+    *     partition, and readers get directory-level partition pruning on
+    *     top of row-group min/max skipping;
+    *   - `sortKeys` alone (ORDER BY): global range layout via
+    *     `repartitionByRange` + per-file sort, the O3 clustering.
+    */
   private def clusteredFor(t: TableDef, df: DataFrame,
                            forCompact: Boolean = false,
                            blockBytes: Long = -1L): DataFrame = {
@@ -3188,6 +3034,13 @@ final class Catalog(spark: SparkSession) {
   private def emptyFrame(t: TableDef): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), t.schema)
 
+  /** Finish a compact swap a crash interrupted (doc on [[compact]]): table
+    * path absent with `.compact.tmp`/`.compact.old` present means the only
+    * surviving copies are the swap artifacts — every entry point that
+    * touches storage (append / read / readRaw / compact) runs this first,
+    * so no caller can ever observe, recreate, or delete a mid-swap table.
+    * One `exists` probe when the table is healthy.
+    */
   private def recoverInterruptedSwap(t: TableDef): Unit = {
     import org.apache.hadoop.fs.Path
     if (t.layout != FlatDir) return // Versioned has no unreadable window
@@ -3217,23 +3070,6 @@ final class Catalog(spark: SparkSession) {
     readVia(t, dataPaths(t))
   }
 
-  /** Merged-view read over an EXPLICIT path snapshot — compaction folds
-    * exactly the segments it listed, never whatever a re-listing at job
-    * time would see (a segment committed mid-compact must stay a segment,
-    * or it would land in the new version AND stay visible = duplicated).
-    */
-  /** Storage scan surfacing the DECLARED schema over mixed physical
-    * layouts: files written before a pending RENAME carry the old column
-    * name, files written after carry the new one. The read schema is
-    * widened with each pending physical name (absent fields read as null
-    * in parquet), the two columns coalesce into the declared one, and the
-    * final select restores the declared shape. No pending renames → the
-    * plain declared-schema scan, zero overhead. The coalesce is sound
-    * because no file can carry BOTH names: the new name did not exist as
-    * a column before the rename ([[renameColumn]] refuses an existing
-    * `to`), and [[stored]] keeps the old name un-reintroducible until a
-    * compact retires the mapping.
-    */
   /** Scan `paths` under `schema`. A PARTITIONED table's live paths
     * (version dir + append segments) are distinct partition-discovery
     * roots — one multi-path read makes Spark infer partition columns
@@ -3264,6 +3100,18 @@ final class Catalog(spark: SparkSession) {
       .reduce(_.union(_))
   }
 
+  /** Storage scan surfacing the DECLARED schema over mixed physical
+    * layouts: files written before a pending RENAME carry the old column
+    * name, files written after carry the new one. The read schema is
+    * widened with each pending physical name (absent fields read as null
+    * in parquet), the two columns coalesce into the declared one, and the
+    * final select restores the declared shape. No pending renames → the
+    * plain declared-schema scan, zero overhead. The coalesce is sound
+    * because no file can carry BOTH names: the new name did not exist as
+    * a column before the rename ([[renameColumn]] refuses an existing
+    * `to`), and [[stored]] keeps the old name un-reintroducible until a
+    * compact retires the mapping.
+    */
   private def readStorage(t: TableDef, paths: Seq[String]): DataFrame =
     readStorageDv(t, paths, currentDvDirs(t))
 
@@ -3287,7 +3135,7 @@ final class Catalog(spark: SparkSession) {
           .withColumn("__dv_file", lit(null).cast("string"))
           .withColumn("__dv_pos", lit(null).cast("long"))
     }
-    val renames = renamePending.getOrElse(t.name, Map.empty)
+    val renames = t.renames
       .filter { case (to, _) => t.schema.fieldNames.contains(to) }
     val withId = dvs.nonEmpty || keepId
     // the mask is tiny next to the data (pairs, not rows): no broadcast
@@ -3316,12 +3164,17 @@ final class Catalog(spark: SparkSession) {
     }
   }
 
+  /** Merged-view read over an EXPLICIT path snapshot — compaction folds
+    * exactly the segments it listed, never whatever a re-listing at job
+    * time would see (a segment committed mid-compact must stay a segment,
+    * or it would land in the new version AND stay visible = duplicated).
+    */
   private def readVia(t: TableDef, paths: Seq[String]): DataFrame =
     readViaDv(t, paths, currentDvDirs(t))
 
   private def readViaDv(t: TableDef, paths: Seq[String],
                         dvs: Seq[String]): DataFrame = {
-    val raw = applyDefaults(t.name, readStorageDv(t, paths, dvs))
+    val raw = applyDefaults(t, readStorageDv(t, paths, dvs))
     t.semantics match {
       case Append => raw
       // nothing is ever stored, but limit(0) also guards against stray
@@ -3345,12 +3198,6 @@ final class Catalog(spark: SparkSession) {
     }
   }
 
-  /** The [[JoinAny]] fold: one surviving row per key — the
-    * lexicographically least non-key tuple (min over a struct, so the
-    * fold is associative and deterministic). A hash aggregate with
-    * map-side partials; after [[compact]] materializes it the table is
-    * physically one row per key and the fold prunes to nothing.
-    */
   /** Per-kind state merge expressions for an [[Aggregating]] fold — the
     * ONE definition both the append-time pre-merge and the read/compact
     * view use, so an insert block and a cross-append read can never merge
@@ -3377,6 +3224,12 @@ final class Catalog(spark: SparkSession) {
       }).as(c)
     }
 
+  /** The [[JoinAny]] fold: one surviving row per key — the
+    * lexicographically least non-key tuple (min over a struct, so the
+    * fold is associative and deterministic). A hash aggregate with
+    * map-side partials; after [[compact]] materializes it the table is
+    * physically one row per key and the fold prunes to nothing.
+    */
   private def joinAnyFold(t: TableDef, df: DataFrame,
                           keys: Seq[String]): DataFrame = {
     val vals = t.schema.fieldNames.filterNot(keys.contains).toSeq
@@ -3547,7 +3400,7 @@ final class Catalog(spark: SparkSession) {
           f.listStatus(dvRoot(t)).toSeq
             .filter(s => s.isDirectory && s.getPath.getName.startsWith(".stage-"))
             .foreach(s => f.delete(s.getPath, true))
-        val masked = applyDefaults(t.name,
+        val masked = applyDefaults(t,
           readStorageDv(t, dataPaths(t), currentDvDirs(t), keepId = true))
         val matched = masked.filter(coalesce(predicate, lit(false)))
           .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
@@ -3606,10 +3459,6 @@ final class Catalog(spark: SparkSession) {
     listing(t).files.nonEmpty
   }
 
-  /** `system.tables` analog: one row per registered table — layout,
-    * engine semantics, declared keys, and storage totals (part count +
-    * bytes from the listing; pure metadata, no data scan).
-    */
   /** ClickHouse `merge('db', 'regex')` table-function analog: the union
     * of every registered table whose name fully matches the regex, each
     * through its own engine-merged read view, plus the virtual `_table`
@@ -3628,6 +3477,10 @@ final class Catalog(spark: SparkSession) {
       .reduce(_.unionByName(_))
   }
 
+  /** `system.tables` analog: one row per registered table — layout,
+    * engine semantics, declared keys, and storage totals (part count +
+    * bytes from the listing; pure metadata, no data scan).
+    */
   def systemTables(): DataFrame = {
     import spark.implicits._
     tables.values.toSeq.sortBy(_.name).map { t =>
@@ -3742,13 +3595,12 @@ final class Catalog(spark: SparkSession) {
   def systemColumns(): DataFrame = {
     import spark.implicits._
     tables.values.toSeq.sortBy(_.name).flatMap { t =>
-      val defaults = insertDefaults.getOrElse(t.name, Map.empty)
       val codecOf = t.columnCodecs.toMap
       t.schema.fields.zipWithIndex.map { case (f, i) =>
         (t.name, f.name, i, f.dataType.simpleString, f.nullable,
           t.sortKeys.contains(f.name), t.partitionKeys.contains(f.name),
           t.indexCols.contains(f.name), t.minmaxCols.contains(f.name),
-          defaults.contains(f.name), codecOf.getOrElse(f.name, ""))
+          f.metadata.contains("chDefault"), codecOf.getOrElse(f.name, ""))
       }
     }.toDF("table", "column", "position", "type", "nullable",
       "is_sort_key", "is_partition_key", "in_bloom_index",
@@ -3817,9 +3669,10 @@ final class Catalog(spark: SparkSession) {
     * mutation rewrite, lightweight delete, TTL sweep, refresh swap) moves
     * at least one of those, so equal tokens ⇒ equal read results. One
     * directory listing, no data read — the [[graft.sql.QueryCache]]
-    * validity probe, priced to run on every cache hit. (In-process
-    * metadata-only changes — a pending RENAME's read view — also bump it:
-    * the declared schema participates in the digest.)
+    * validity probe, priced to run on every cache hit. Metadata-only
+    * ALTERs (a RENAME's read view, a widened type, a changed DEFAULT an
+    * old part backfills) move it too: the whole `_TABLE` definition
+    * participates in the digest.
     */
   def tableVersion(name: String): String = {
     val t = get(name)
@@ -3827,9 +3680,7 @@ final class Catalog(spark: SparkSession) {
     val md = java.security.MessageDigest.getInstance("MD5")
     def add(s: String): Unit =
       md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    add(t.schema.fieldNames.mkString(","))
-    add(renamePending.getOrElse(name, Map.empty).toSeq.sorted.mkString(","))
-    add(readDefaults.getOrElse(name, Map.empty).keys.toSeq.sorted.mkString(","))
+    add(tableDefJson(t))
     listing(t).files.sortBy(_.getPath.toString).foreach { s =>
       add(s.getPath.toString); add(s.getLen.toString)
       add(s.getModificationTime.toString)
@@ -4032,24 +3883,20 @@ final class Catalog(spark: SparkSession) {
       // Versioned swaps version SUBDIRS, so its root-level _TABLE survives
       if (t.layout == Versioned) withCompactLock(t)(compactVersioned(t, checked))
       else withCompactLock(t)(compactFlat(t, checked))
-      // if data was rewritten, it read through applyDefaults — every
-      // stored row now carries its ALTER-added defaults, so retire the
-      // READ-side coalesce: from here on an explicitly stored NULL reads
-      // back as NULL. Insert-time fill stays (permanent table metadata).
-      // An empty table materialized nothing — keep its read defaults.
-      // Pending renames/drops retire the same way: the rewrite read
-      // through readStorage, so every stored file now carries the
-      // declared names and nothing else. Re-persist so the sidecar
-      // written during the swap (which still listed them) is corrected —
-      // a stale mapping would spuriously refuse re-adding those names
-      // after an attach.
-      if (exists(name)) {
-        val hadPending = readDefaults.contains(name) ||
-          renamePending.contains(name) || droppedPending.contains(name)
-        readDefaults.remove(name)
-        renamePending.remove(name)
-        droppedPending.remove(name)
-        if (hadPending) persistTableDef(tables(name))
+      // if data was rewritten, it read through the declared view — every
+      // stored file now carries the declared names, types and defaults
+      // and nothing else, so the pending storage state retires: from here
+      // on an explicitly stored NULL reads back as NULL, and dropped or
+      // pre-rename names are free again. The DEFAULT declarations stay.
+      // An empty table materialized nothing — keep its pending state.
+      // Re-persist so the sidecar written during the swap (which still
+      // listed it) is corrected.
+      val now = get(name)
+      if ((now.backfillCols ++ now.renames.keys ++ now.droppedCols).nonEmpty &&
+          exists(name)) {
+        tables.put(name, now.copy(backfillCols = Set.empty,
+          renames = Map.empty, droppedCols = Set.empty))
+        persistTableDef(tables(name))
       }
       recordMutation(t, command)
     }

@@ -76,13 +76,9 @@ object ChDdl {
     */
   final case class CreateMaterializedViewInner(name: String,
       clauses: String, source: String, selectSql: String) extends Statement
-  /** `INSERT INTO target select` — the reference's MV backfill
-    * (README.md:263-266): run once over the source table's CURRENT
-    * contents, append to the target.
-    */
   /** `INSERT INTO t [(cols…)] VALUES (…), (…)` — the literal-tuple insert
     * (ClickHouse's most everyday statement). Omitted columns take the
-    * table's insert defaults through the normal append fill; tuples are
+    * declared DEFAULT, else the CH type default; tuples are
     * typed against the declared schema (cast at insert, reject on
     * non-castable). MATERIALIZED columns must not be supplied, the same
     * rule as every other insert door.
@@ -115,6 +111,10 @@ object ChDdl {
   final case class InsertInfile(target: String, columns: Seq[String],
                                 path: String, compression: Option[String],
                                 format: Option[String]) extends Statement
+  /** `INSERT INTO target select` — the reference's MV backfill
+    * (README.md:263-266): run once over the source table's CURRENT
+    * contents, append to the target.
+    */
   final case class InsertSelect(target: String, source: String,
                                 selectSql: String) extends Statement
   /** `CREATE TABLE t ENGINE … ORDER BY … AS SELECT …` — CTAS, the
@@ -1510,9 +1510,6 @@ object ChDdl {
     out.result()
   }
 
-  /** First position of keyword `kw` at top level (outside quotes/backticks/
-    * parens) with word boundaries, or -1.
-    */
   /** `PROJECTION p (SELECT …)` body → a [[graft.catalog.ProjectionSpec]].
     * Two CH forms: `SELECT dims…, count()[, sum(m)…] GROUP BY dims…`
     * (aggregate) and `SELECT * ORDER BY key` (alternate sort). Select
@@ -1556,6 +1553,9 @@ object ChDdl {
         "ORDER BY (sorted projection)")
   }
 
+  /** First position of keyword `kw` at top level (outside quotes/backticks/
+    * parens) with word boundaries, or -1.
+    */
   private def topLevelKeyword(s: String, kw: String): Int = {
     val upper = s.toUpperCase
     var depth = 0; var inQ = false; var inB = false; var i = 0
@@ -1716,10 +1716,6 @@ object ChDdl {
         "ADD/DROP/MATERIALIZE/CLEAR INDEX")
   }
 
-  /** Execute ONE parsed statement against the catalog. `warehouse` roots
-    * a CREATE TABLE's storage at `<warehouse>/<table>`. Returns the
-    * statement, so callers can inspect warnings.
-    */
   /** Resolve, read, and (if needed) gunzip an INFILE payload into the
     * equivalent [[InsertFormat]] — doc on [[InsertInfile]].
     */
@@ -1776,10 +1772,58 @@ object ChDdl {
       cat.distributed.append(target, frame)
     else cat.append(target, frame)
 
+  /** The two text INSERT doors (VALUES, inline FORMAT) over the target's
+    * def: the supplied columns (`cols`, else every insertable one) are
+    * checked — none MATERIALIZED, none unknown — then `typed` parses the
+    * payload into exactly those columns, and every OMITTED column is
+    * added with [[absentValue]] (CH semantics).
+    */
+  private def textInsert(cat: Catalog, target: String, cols: Seq[String])(
+      typed: (TableDef, Seq[String]) => org.apache.spark.sql.DataFrame): Long = {
+    val t = defOf(cat, target)
+    val matSet = t.materializedCols.map(_._1).toSet
+    val insertable = t.schema.fields.filterNot(f => matSet(f.name))
+    val names = if (cols.nonEmpty) cols else insertable.map(_.name).toSeq
+    names.foreach { n =>
+      require(!matSet(n),
+        s"INSERT INTO $target: $n is MATERIALIZED — computed at " +
+          "insert, never supplied")
+      require(t.schema.fieldNames.contains(n),
+        s"INSERT INTO $target: unknown column $n")
+    }
+    val supplied = typed(t, names)
+    val declared = t.defaults.keySet
+    // plain columns first: a declared DEFAULT may reference them
+    val omitted = insertable.filterNot(f => names.contains(f.name))
+      .sortBy(f => declared(f.name))
+    // the container divergence is SILENT semantic drift without this:
+    // CH fills an omitted Array with [] — this engine has no natural
+    // scalar default for containers and stores NULL (doc on
+    // chTypeDefault), so say so loudly at the door
+    omitted.filter(f => !declared(f.name) &&
+        (f.dataType.isInstanceOf[ArrayType] || f.dataType.isInstanceOf[MapType]))
+      .foreach(f => System.err.println(
+        s"[chddl] INSERT INTO $target: omitted container column " +
+          s"${f.name} fills with NULL (ClickHouse fills []) — supply " +
+          "the column or declare a DEFAULT to avoid the divergence"))
+    appendRouted(cat, target, omitted.foldLeft(supplied)((d, f) =>
+      d.withColumn(f.name, absentValue(t, f))))
+  }
+
+  // what an absent value takes: the declared DEFAULT, else the TYPE
+  // default (0 / '' / false / epoch; containers NULL)
+  private def absentValue(t: TableDef, f: StructField): org.apache.spark.sql.Column =
+    t.defaults.get(f.name).fold(chTypeDefault(f.dataType))(
+      org.apache.spark.sql.functions.expr)
+
   private def defOf(cat: Catalog, target: String): TableDef =
     scala.util.Try(cat.get(target)).getOrElse(
       cat.get(cat.distributed.get(target).members.head))
 
+  /** Execute ONE parsed statement against the catalog. `warehouse` roots
+    * a CREATE TABLE's storage at `<warehouse>/<table>`. Returns the
+    * statement, so callers can inspect warnings.
+    */
   def execute(cat: Catalog, s: org.apache.spark.sql.SparkSession,
               ddl0: String, warehouse: String = ""): Statement = {
     import org.apache.spark.sql.functions.expr
@@ -1847,119 +1891,72 @@ object ChDdl {
         cat.createTable(synthesized)
         cat.append(cta.name, frame)
       case InsertValues(target, cols, valuesSql) =>
-        val t = defOf(cat, target)
-        val matSet = t.materializedCols.map(_._1).toSet
-        val insertable = t.schema.fields.filterNot(f => matSet(f.name))
-        val names = if (cols.nonEmpty) cols else insertable.map(_.name).toSeq
-        names.foreach { n =>
-          require(!matSet(n),
-            s"INSERT INTO $target: $n is MATERIALIZED — computed at " +
-              "insert, never supplied")
-          require(t.schema.fieldNames.contains(n),
-            s"INSERT INTO $target: unknown column $n")
+        textInsert(cat, target, cols) { (t, names) =>
+          // Spark's own VALUES parser types the tuples; literals ride the
+          // dialect rewrite so CH-isms (now(), toDate('…')) work inside
+          val rewritten = GraftSql.expandFunctions(ChDialect.rewrite(valuesSql))
+          val df0 = s.sql(
+            s"SELECT * FROM VALUES $rewritten AS __v(${names.mkString(", ")})")
+          df0.select(names.map(n => org.apache.spark.sql.functions.col(n)
+            .cast(t.schema(n).dataType).as(n)): _*)
         }
-        // Spark's own VALUES parser types the tuples; literals ride the
-        // dialect rewrite so CH-isms (now(), toDate('…')) work inside
-        val rewritten = GraftSql.expandFunctions(ChDialect.rewrite(valuesSql))
-        val df0 = s.sql(
-          s"SELECT * FROM VALUES $rewritten AS __v(${names.mkString(", ")})")
-        val byName = t.schema.fields.map(f => f.name -> f.dataType).toMap
-        val typed = df0.select(names.map(n =>
-          org.apache.spark.sql.functions.col(n).cast(byName(n)).as(n)): _*)
-        // CH semantics for omitted columns: the declared DEFAULT if one
-        // exists (left absent here — the append fill applies it), else
-        // the TYPE default (0 / '' / false / epoch; containers NULL)
-        val altered = cat.insertDefaultColumns(target)
-        val omitted = insertable.filterNot(f =>
-          names.contains(f.name) || altered(f.name))
-        // the container divergence is SILENT semantic drift without this:
-        // CH fills an omitted Array with [] — this engine has no natural
-        // scalar default for containers and stores NULL (doc on
-        // chTypeDefault), so say so loudly at the door
-        omitted.filter(f => f.dataType.isInstanceOf[
-            org.apache.spark.sql.types.ArrayType] ||
-            f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
-          .foreach(f => System.err.println(
-            s"[chddl] INSERT INTO $target: omitted container column " +
-              s"${f.name} fills with NULL (ClickHouse fills []) — supply " +
-              "the column or declare a DEFAULT to avoid the divergence"))
-        val filled = omitted.foldLeft(typed)((d, f) =>
-          d.withColumn(f.name, chTypeDefault(f.dataType)))
-        appendRouted(cat, target, filled)
       case InsertFormat(target, cols, format, payload) =>
-        val t = defOf(cat, target)
-        val matSet = t.materializedCols.map(_._1).toSet
-        val insertable = t.schema.fields.filterNot(f => matSet(f.name))
-        val names = if (cols.nonEmpty) cols else insertable.map(_.name).toSeq
-        names.foreach { n =>
-          require(!matSet(n),
-            s"INSERT INTO $target: $n is MATERIALIZED — computed at " +
-              "insert, never supplied")
-          require(t.schema.fieldNames.contains(n),
-            s"INSERT INTO $target: unknown column $n")
+        textInsert(cat, target, cols) { (t, names) =>
+          val lines = payload.linesIterator.filter(_.trim.nonEmpty).toSeq
+          require(lines.nonEmpty,
+            s"INSERT INTO $target FORMAT $format: empty payload")
+          // *WithNames formats bind by HEADER NAME, not position (CH
+          // semantics): validate the header against the expected columns
+          // and re-order the parse schema to the header's order — Spark's
+          // csv reader with an explicit schema skips the header without
+          // matching it (enforceSchema), which would silently mis-assign
+          // values under a reordered header
+          def headerNames(sep: String): Seq[String] = {
+            val toks = lines.head.split(sep, -1)
+              .map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
+            val expected = names.toSet
+            val unknown = toks.filterNot(expected)
+            val missing = names.filterNot(toks.toSet)
+            require(unknown.isEmpty && missing.isEmpty,
+              s"INSERT INTO $target FORMAT $format: header (${toks.mkString(",")}) " +
+                s"does not match expected columns (${names.mkString(",")})" +
+                (if (unknown.nonEmpty) s"; unknown: ${unknown.mkString(",")}" else "") +
+                (if (missing.nonEmpty) s"; missing: ${missing.mkString(",")}" else ""))
+            toks
+          }
+          // a malformed payload line must FAIL the insert, never turn into
+          // an all-null row that the default fill fabricates values for
+          // (CH rejects malformed rows) — hence FAILFAST, not PERMISSIVE
+          def subSchema(ns: Seq[String]) = StructType(ns.map(n =>
+            t.schema(t.schema.fieldIndex(n)).copy(nullable = true)))
+          import s.implicits._
+          val ds = s.createDataset(lines)
+          def csv(sep: String, header: Boolean) = {
+            val ns = if (header) headerNames(sep) else names
+            s.read.schema(subSchema(ns)).option("sep", sep)
+              .option("header", header.toString)
+              .option("mode", "FAILFAST").csv(ds)
+          }
+          val parsed = format.toLowerCase match {
+            case "jsoneachrow" | "ndjson" | "jsonlines" =>
+              s.read.schema(subSchema(names))
+                .option("mode", "FAILFAST").json(ds)
+            case "csv" => csv(",", header = false)
+            case "csvwithnames" => csv(",", header = true)
+            case "tsv" | "tabseparated" => csv("\t", header = false)
+            case "tsvwithnames" | "tabseparatedwithnames" => csv("\t", header = true)
+            case other => throw new IllegalArgumentException(
+              s"INSERT INTO $target FORMAT $other: supported inline formats " +
+                "are JSONEachRow, CSV[WithNames], TSV/TabSeparated[WithNames]")
+          }
+          // per-row ABSENT fields (null after the schema'd parse): the
+          // declared DEFAULT when one exists, else the CH type default —
+          // exactly the JSONEachRow fill semantics
+          names.foldLeft(parsed)((d, n) =>
+            d.withColumn(n, org.apache.spark.sql.functions.coalesce(
+              org.apache.spark.sql.functions.col(n).cast(t.schema(n).dataType),
+              absentValue(t, t.schema(n)))))
         }
-        val lines = payload.linesIterator.filter(_.trim.nonEmpty).toSeq
-        require(lines.nonEmpty,
-          s"INSERT INTO $target FORMAT $format: empty payload")
-        // *WithNames formats bind by HEADER NAME, not position (CH
-        // semantics): validate the header against the expected columns
-        // and re-order the parse schema to the header's order — Spark's
-        // csv reader with an explicit schema skips the header without
-        // matching it (enforceSchema), which would silently mis-assign
-        // values under a reordered header
-        def headerNames(sep: String): Seq[String] = {
-          val toks = lines.head.split(sep, -1)
-            .map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-          val expected = names.toSet
-          val unknown = toks.filterNot(expected)
-          val missing = names.filterNot(toks.toSet)
-          require(unknown.isEmpty && missing.isEmpty,
-            s"INSERT INTO $target FORMAT $format: header (${toks.mkString(",")}) " +
-              s"does not match expected columns (${names.mkString(",")})" +
-              (if (unknown.nonEmpty) s"; unknown: ${unknown.mkString(",")}" else "") +
-              (if (missing.nonEmpty) s"; missing: ${missing.mkString(",")}" else ""))
-          toks
-        }
-        // a malformed payload line must FAIL the insert, never turn into
-        // an all-null row that the default fill fabricates values for
-        // (CH rejects malformed rows) — hence FAILFAST, not PERMISSIVE
-        def subSchema(ns: Seq[String]) = StructType(ns.map(n =>
-          t.schema(t.schema.fieldIndex(n)).copy(nullable = true)))
-        import s.implicits._
-        val ds = s.createDataset(lines)
-        def csv(sep: String, header: Boolean) = {
-          val ns = if (header) headerNames(sep) else names
-          s.read.schema(subSchema(ns)).option("sep", sep)
-            .option("header", header.toString)
-            .option("mode", "FAILFAST").csv(ds)
-        }
-        val parsed = format.toLowerCase match {
-          case "jsoneachrow" | "ndjson" | "jsonlines" =>
-            s.read.schema(subSchema(names))
-              .option("mode", "FAILFAST").json(ds)
-          case "csv" => csv(",", header = false)
-          case "csvwithnames" => csv(",", header = true)
-          case "tsv" | "tabseparated" => csv("\t", header = false)
-          case "tsvwithnames" | "tabseparatedwithnames" => csv("\t", header = true)
-          case other => throw new IllegalArgumentException(
-            s"INSERT INTO $target FORMAT $other: supported inline formats " +
-              "are JSONEachRow, CSV[WithNames], TSV/TabSeparated[WithNames]")
-        }
-        // per-row ABSENT fields (null after the schema'd parse): the
-        // declared DEFAULT when one exists, else the CH type default —
-        // exactly the JSONEachRow fill semantics
-        val byName = t.schema.fields.map(f => f.name -> f.dataType).toMap
-        val typed = names.foldLeft(parsed)((d, n) =>
-          d.withColumn(n, org.apache.spark.sql.functions.coalesce(
-            org.apache.spark.sql.functions.col(n).cast(byName(n)),
-            cat.insertDefault(target, n)
-              .getOrElse(chTypeDefault(byName(n))))))
-        val altered = cat.insertDefaultColumns(target)
-        val filled = insertable.filterNot(f =>
-            names.contains(f.name) || altered(f.name))
-          .foldLeft(typed)((d, f) =>
-            d.withColumn(f.name, chTypeDefault(f.dataType)))
-        appendRouted(cat, target, filled)
       case AlterTable(table, cmds) => cmds.foreach {
         case AddColumnCmd(field, defaultSql) =>
           // the DEFAULT is a constant expression: evaluate it ONCE on the

@@ -138,7 +138,7 @@ object ChDdlRender {
     def lineOf(f: StructField): String = {
       val mat = materialized.get(f.name).map(e => s" MATERIALIZED $e")
         .getOrElse("")
-      // CREATE-time DEFAULT rides in field metadata (ChDdl.parse); the
+      // a DEFAULT rides in field metadata (ChDdl.parse, ADD COLUMN); the
       // emitted expression is the REWRITTEN (Spark-safe) text, on which
       // a re-parse's ChDialect pass is a no-op — the round-trip contract
       val dflt = if (f.metadata.contains("chDefault"))

@@ -1261,6 +1261,56 @@ class CatalogSpec extends SparkSpecBase {
     cat.read("rn2").head().getAs[Long]("s2") shouldBe 1L
   }
 
+  test("a _TABLE sidecar of the previous format attaches unchanged: default, pending RENAME and DROP") {
+    // written by the previous build (the default stored only under
+    // `defaults`) after: CREATE TABLE lg (k String, v Int64, x Int64)
+    // ORDER BY k; INSERT (a,1,10),(b,2,20); ADD COLUMN score Int64
+    // DEFAULT 7; RENAME COLUMN v TO val; DROP COLUMN x; INSERT (c,3,99),(d,4)
+    val sidecar =
+      "{\"name\":\"lg\",\"schema\":{\"type\":\"struct\",\"fields\":[{\"name\":\"k\"," +
+      "\"type\":\"string\",\"nullable\":true,\"metadata\":{}},{\"name\":\"val\"," +
+      "\"type\":\"long\",\"nullable\":true,\"metadata\":{}},{\"name\":\"score\"," +
+      "\"type\":\"long\",\"nullable\":true,\"metadata\":{}}]},\"sort_keys\":[\"k\"]," +
+      "\"layout\":\"FlatDir\",\"partition_keys\":[],\"index_cols\":[],\"minmax_cols\":[]," +
+      "\"token_index_cols\":[],\"codec\":\"snappy\",\"renames\":{\"val\":\"v\"}," +
+      "\"dropped_cols\":[\"x\"],\"defaults\":{\"score\":\"CAST(7 AS BIGINT)\"}," +
+      "\"read_default_cols\":[\"score\"],\"constraints\":[],\"materialized_cols\":[]," +
+      "\"column_codecs\":[],\"set_index_cols\":[],\"fulltext_cols\":[],\"projections\":[]," +
+      "\"semantics\":{\"kind\":\"append\"}}"
+    val path = tmpDir("cat") + "/lg"
+    // data files under both the old and the new column names
+    Seq(("a", 1L, 10L), ("b", 2L, 20L)).toDF("k", "v", "x")
+      .coalesce(1).write.parquet(path)
+    Seq(("c", 3L, 99L), ("d", 4L, 7L)).toDF("k", "val", "score")
+      .coalesce(1).write.mode("append").parquet(path)
+    java.nio.file.Files.write(java.nio.file.Paths.get(path, "_TABLE"),
+      sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val cat = new Catalog(spark)
+    cat.attach(path)
+    def rows = cat.read("lg").orderBy("k").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    val parentRows = Seq(("a", 1L, 7L), ("b", 2L, 7L), ("c", 3L, 99L), ("d", 4L, 7L))
+    rows shouldBe parentRows
+    graft.sql.ChDdlRender.describe(cat.get("lg")).find(_._1 == "score").get shouldBe
+      (("score", "Int64", "DEFAULT", "CAST(7 AS BIGINT)"))
+    // the dropped and the pre-rename names still sit in old files
+    an[IllegalArgumentException] should be thrownBy
+      cat.addColumn("lg", StructField("x", LongType), 0L)
+    an[IllegalArgumentException] should be thrownBy
+      cat.addColumn("lg", StructField("v", LongType), 0L)
+    cat.compact("lg")
+    rows shouldBe parentRows
+    spark.read.parquet(path).columns.toSet shouldBe Set("k", "val", "score")
+    // compact retired the pending state, in memory and in the sidecar
+    cat.detach("lg")
+    val t = cat.attach(path)
+    (t.backfillCols, t.renames, t.droppedCols) shouldBe
+      ((Set.empty, Map.empty, Set.empty))
+    t.defaults shouldBe Map("score" -> "CAST((CAST(7 AS BIGINT)) AS BIGINT)")
+    cat.addColumn("lg", StructField("x", LongType), 0L)
+    cat.read("lg").filter(col("k") === "a").head().getAs[Long]("x") shouldBe 0L
+  }
+
   test("ALTER DROP COLUMN: metadata-only narrow; name re-usable only after compact") {
     val cat = new Catalog(spark)
     cat.createTable(TableDef("dc", tmpDir("cat") + "/dc", replacingSchema,

@@ -608,6 +608,42 @@ class ChDdlSpec extends SparkSpecBase {
     }
   }
 
+  test("ALTER ADD COLUMN's DEFAULT is the column's declaration: shown, round-tripped, followed by old parts") {
+    val cat = new Catalog(spark)
+    val dir = tmpDir("chadddefault")
+    ChDdl.createTable(cat,
+      "CREATE TABLE p (`k` String, `v` Int32) ENGINE = MergeTree ORDER BY k",
+      s"$dir/p")
+    ChDdl.execute(cat, spark, "INSERT INTO p VALUES ('a', 1)", dir)
+    ChDdl.execute(cat, spark, "ALTER TABLE p ADD COLUMN score Int64 DEFAULT 7", dir)
+    ChDdl.execute(cat, spark, "ALTER TABLE p ADD COLUMN lvl Int32 DEFAULT 3", dir)
+    ChDdl.execute(cat, spark, "ALTER TABLE p ADD COLUMN note String", dir)
+    // DESCRIBE and SHOW CREATE show the ADD's default; none is DEFAULT NULL
+    val described = ChDdlRender.describe(cat.get("p")).map(d => d._1 -> d).toMap
+    described("score") shouldBe (("score", "Int64", "DEFAULT", "7"))
+    described("note") shouldBe (("note", "String", "DEFAULT", "NULL"))
+    val shown = ChDdl.query(cat, spark, "SHOW CREATE TABLE p").head().getString(0)
+    shown should include("`score` Int64 DEFAULT 7")
+    // a table re-created from SHOW CREATE keeps filling 7
+    val cat2 = new Catalog(spark)
+    ChDdl.createTable(cat2, shown, s"$dir/p2")
+    ChDdl.execute(cat2, spark, "INSERT INTO p (k, v) VALUES ('z', 0)", dir)
+    cat2.read("p").head().getAs[Long]("score") shouldBe 7L
+    // rows written before the ADD read the CURRENT default (ClickHouse:
+    // changing a default changes old data not stored on disk); rows an
+    // insert filled keep the value stored then
+    ChDdl.execute(cat, spark, "INSERT INTO p (k, v) VALUES ('b', 2)", dir)
+    ChDdl.execute(cat, spark, "ALTER TABLE p MODIFY COLUMN score DEFAULT 9", dir)
+    ChDdl.execute(cat, spark, "INSERT INTO p (k, v) VALUES ('c', 3)", dir)
+    cat.read("p").orderBy("k").collect()
+      .map(r => r.getString(0) -> r.getAs[Long]("score")).toSeq shouldBe
+      Seq("a" -> 9L, "b" -> 7L, "c" -> 9L)
+    // a widening MODIFY casts the default once, to the new type
+    ChDdl.execute(cat, spark, "ALTER TABLE p MODIFY COLUMN lvl Int64", dir)
+    cat.get("p").defaults("lvl") shouldBe "CAST((3) AS BIGINT)"
+    cat.read("p").filter(col("k") === "a").head().getAs[Long]("lvl") shouldBe 3L
+  }
+
   test("CTAS: schema derives from the SELECT, engine keys validate, refusals") {
     import spark.implicits._
     val cat = new Catalog(spark)

@@ -142,6 +142,32 @@ class QueryCacheSpec extends SparkSpecBase {
     cat.tableVersion("reg_v") should not be v2
   }
 
+  test("tableVersion moves on metadata-only ALTERs that change reads, not on re-attach") {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    import spark.implicits._
+    val cat = new Catalog(spark)
+    val path = tmpDir("graft-qc-alter") + "/alt_v"
+    cat.createTable(TableDef("alt_v", path, StructType(Seq(
+      StructField("k", LongType), StructField("v", IntegerType))),
+      sortKeys = Seq("k"), semantics = Append))
+    cat.append("alt_v", Seq((1L, 1)).toDF("k", "v"))
+    cat.addColumn("alt_v", StructField("s", LongType), 7L)
+    // a widened type changes the read schema
+    val v1 = cat.tableVersion("alt_v")
+    cat.modifyColumnType("alt_v", "v", LongType)
+    val v2 = cat.tableVersion("alt_v")
+    v2 should not be v1
+    // a new DEFAULT changes what the still-backfilled old part reads
+    cat.modifyColumnDefault("alt_v", "s", Some("9"))
+    cat.read("alt_v").head().getAs[Long]("s") shouldBe 9L
+    val v3 = cat.tableVersion("alt_v")
+    v3 should not be v2
+    // the same definition re-attached from its sidecar keeps the token
+    cat.detach("alt_v")
+    cat.attach(path)
+    cat.tableVersion("alt_v") shouldBe v3
+  }
+
   test("cache + catalog end to end: hit until the table changes") {
     val src = Tables.supplier(spark, sf0001)
     val cat = new Catalog(spark)
