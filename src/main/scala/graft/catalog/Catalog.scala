@@ -2115,16 +2115,18 @@ final class Catalog(spark: SparkSession) {
   /** Append with a caller-MEASURED block size (bytes). A caller that has
     * already materialized the batch (the Distributed facade's routed
     * insert caches + counts the whole batch before slicing) knows the
-    * block's true footprint for free, so the clustering exchange can be
-    * sized to the BLOCK instead of the session-parallelism floor
-    * (guide §2.2 — derive partitioning from input size, never a constant
-    * tuned for one deployment). A shard-sized slice of a small insert
-    * collapses to a single narrow coalesce+sort (no exchange, no
-    * RangePartitioner sample job); a 100 TB slice resolves to the same
-    * partBytes-bounded fan-out blockParts would pick. Callers that have
-    * NOT measured their block pass -1 and keep the floor (the multi-file
-    * range layout the skip-index granularity fixtures build on is only
-    * ever relaxed on measured evidence).
+    * block's true footprint for free; so does a caller whose batch is one
+    * input file (a git import's TSV): the file's length is a measurement,
+    * the same source bytes blockParts would sum from the scan's leaf
+    * stats. Either way the clustering exchange can be sized to the BLOCK
+    * instead of the session-parallelism floor (partitioning derived from
+    * input size, never a constant tuned for one deployment). A small
+    * block collapses to a single narrow coalesce+sort (no exchange, no
+    * RangePartitioner sample job); a 100 TB block resolves to the same
+    * partBytes-bounded fan-out blockParts would pick, minus its floor.
+    * Callers that have NOT measured their block pass -1 and keep the
+    * floor (the multi-file range layout the skip-index granularity
+    * fixtures build on is only ever relaxed on measured evidence).
     */
   def append(name: String, batch: DataFrame, blockBytes: Long): Long = {
     val t = get(name)

@@ -208,19 +208,15 @@ final class DistributedCatalog(spark: SparkSession, cat: Catalog) {
     * engine pre-fold, clustering sort, skip-index build).
     *
     * The N member appends are INDEPENDENT jobs on disjoint tables, so they
-    * are submitted CONCURRENTLY (guide §2.6 — overlap independent jobs):
-    * serialized, each append's fixed per-exchange/driver-action overhead
-    * added up N-fold and dominated shard-sized blocks (round-14 scaling
-    * probe: cat_ddl_distributed ran FASTER on 8 cores than 32 — pure
-    * orchestration cost); concurrent, one append's scheduling tail
-    * back-fills with the next one's tasks. Each member takes its own
-    * write lock; no two slices touch the same table, and on a real fleet
-    * the slices land on different shards' storage anyway.
+    * run through [[ConcurrentWrites]]: serialized, each append's fixed
+    * per-exchange/driver-action overhead added up N-fold and dominated
+    * shard-sized blocks (round-14 scaling probe: cat_ddl_distributed ran
+    * FASTER on 8 cores than 32 — pure orchestration cost). Each member
+    * takes its own write lock; no two slices touch the same table, and on
+    * a real fleet the slices land on different shards' storage anyway. A
+    * member's failure is rethrown naming the facade and the member.
     */
   def append(name: String, batch: DataFrame): Long = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val d = get(name)
     val n = d.members.size
     val routed = batch.withColumn("__shard",
@@ -241,13 +237,16 @@ final class DistributedCatalog(spark: SparkSession, cat: Catalog) {
         if (s.isValidLong) s.toLong else -1L
       }
       val sliceBytes = if (batchBytes < 0) -1L else batchBytes / n + 1
-      val slices = d.members.zipWithIndex.map { case (m, i) =>
-        Future {
-          cat.append(m, routed.filter(col("__shard") === i).drop("__shard"),
+      ConcurrentWrites(d.members.zipWithIndex.map { case (m, i) =>
+        m -> { () =>
+          try cat.append(m, routed.filter(col("__shard") === i).drop("__shard"),
             blockBytes = sliceBytes)
+          catch { case scala.util.control.NonFatal(e) =>
+            throw new IllegalStateException(
+              s"$name: append to member $m failed: ${e.getMessage}", e)
+          }
         }
-      }
-      slices.map(Await.result(_, Duration.Inf)).sum
+      }).sum
     } finally routed.unpersist()
   }
 

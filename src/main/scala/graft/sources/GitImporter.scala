@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import graft.catalog.{Catalog, TableDef}
+import graft.catalog.{Catalog, ConcurrentWrites, TableDef}
 import graft.queue.JobQueue
 import graft.schema.GitSchemas
 
@@ -12,8 +12,9 @@ import graft.schema.GitSchemas
   * The upstream steps — `git clone`/`git pull` and `clickhouse git-import`
   * (/root/reference/repo/importer.py:18-40,86-90) — are out-of-engine
   * subprocesses in the reference too; our engine consumes their TSV output
-  * contract (FIXTURES.md §A). Everything from the TSV onward is one Spark
-  * job per table ([[TsvIngest.ingest]]).
+  * contract (FIXTURES.md §A). Everything from the TSV onward is one short
+  * chain per table ([[TsvIngest.ingest]]: watermark read, dedup exchange,
+  * write), and the three tables' chains run concurrently.
   */
 final class GitImporter(spark: SparkSession, warehouseRoot: String) {
 
@@ -36,19 +37,29 @@ final class GitImporter(spark: SparkSession, warehouseRoot: String) {
   /** §3.1 step 6: per-data-type incremental load. `tsvDir` holds
     * commits.tsv / file_changes.tsv / line_changes.tsv as emitted by
     * git-import (importer.py:129-133). Returns rows ingested per table.
+    *
+    * The three loads are independent (importer.py:86-110 runs them as
+    * separate per-type loads), so they run at the same time through
+    * [[ConcurrentWrites]]: each keeps its own high-water mark and write
+    * lock; the call ends only after all three have, and rethrows the
+    * first failure in table order (commits, file_changes, line_changes)
+    * unchanged, later ones attached as suppressed.
     */
   def importRepo(repoName: String, tsvDir: String,
                  keepFiles: Boolean = true): Map[String, Long] = {
-    def load(t: TableDef, cols: Seq[graft.schema.ChType.Col], tsv: String): Long = {
-      val path = s"$tsvDir/$tsv"
-      if (new java.io.File(path).exists())
-        TsvIngest.ingest(spark, catalog, t, path, cols, repoName, deleteTsvAfter = !keepFiles)
-      else 0L
-    }
-    Map(
-      "commits" -> load(commits, GitSchemas.commits, "commits.tsv"),
-      "file_changes" -> load(fileChanges, GitSchemas.fileChanges, "file_changes.tsv"),
-      "line_changes" -> load(lineChanges, GitSchemas.lineChanges, "line_changes.tsv"))
+    val loads = Seq(
+      (commits, GitSchemas.commits, "commits.tsv"),
+      (fileChanges, GitSchemas.fileChanges, "file_changes.tsv"),
+      (lineChanges, GitSchemas.lineChanges, "line_changes.tsv"))
+    val rows = ConcurrentWrites(loads.map { case (t, cols, tsv) =>
+      t.name -> { () =>
+        val path = s"$tsvDir/$tsv"
+        if (new java.io.File(path).exists())
+          TsvIngest.ingest(spark, catalog, t, path, cols, repoName, deleteTsvAfter = !keepFiles)
+        else 0L
+      }
+    })
+    loads.map(_._1.name).zip(rows).toMap
   }
 
   /** §3.2: one worker poll — claim → import → release (always, even on

@@ -2,12 +2,14 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import graft.catalog.{Catalog, ReplacingDedup, TableDef}
 import graft.schema.ChType
 import graft.schema.ChType.{ChDateTime, ChEnum8, ChLowCardinality, Col}
 
-/** The reference's ingest pipeline (SURVEY.md §3.1 steps 6a-6d) as ONE
-  * Catalyst-planned job.
+/** The reference's ingest pipeline (SURVEY.md §3.1 steps 6a-6d) as one
+  * short chain of Spark jobs: the watermark read, then one Catalyst plan
+  * whose dedup exchange feeds the clustered write.
   *
   * In the reference this is three processes and two pipes: clickhouse-local
   * applies `SELECT c1::String AS hash, … WHERE time > '{hwm}'` over the TSV
@@ -25,11 +27,15 @@ import graft.schema.ChType.{ChDateTime, ChEnum8, ChLowCardinality, Col}
   */
 object TsvIngest {
 
-  /** S1: schema-on-read headerless TSV — positional `_c0…_cN` columns,
-    * exactly the `file('x.tsv')` → `c1…cN` contract (types.json:6).
+  /** S1: headerless TSV under a declared positional all-string schema
+    * `_c0…_c{nCols-1}` — the `file('x.tsv')` → `c1…cN` contract
+    * (types.json:6). The first line is not special: no schema-inference
+    * job reads it, an empty file is zero rows, and a short row reads its
+    * missing trailing fields as null.
     */
   def readTsv(spark: SparkSession, path: String, nCols: Int): DataFrame =
     spark.read
+      .schema(StructType((0 until nCols).map(i => StructField(s"_c$i", StringType))))
       .option("sep", "\t")
       .option("header", "false")
       .option("quote", "")   // git-import TSV is raw: tabs/newlines escaped, no quoting
@@ -123,8 +129,8 @@ object TsvIngest {
       repoName: String,
       deleteTsvAfter: Boolean = false): Long = {
     val hwm = highWaterMark(cat, table.name, repoName)
-    val projected = readTsv(spark, tsvPath, schemaCols.size)
-      .select(typedProjection(schemaCols): _*)
+    val tsv = readTsv(spark, tsvPath, schemaCols.size)
+    val projected = tsv.select(typedProjection(schemaCols): _*)
       .withColumn("repo_name", lit(repoName))                          // P2
       .withColumn("updated_at", date_trunc("second", current_timestamp())) // F2
     // T1: strict '>' — same-second re-reads drop here; equal-key residue
@@ -133,8 +139,14 @@ object TsvIngest {
     // row accounting comes from the appended batch itself (Catalog.append
     // counts the cached post-dedup batch) — O(batch), not the O(table)
     // before/after full scans this used to do, which at 40k-repo scale made
-    // every import scan the entire fact table twice
-    val ingested = cat.append(table.name, incremental)
+    // every import scan the entire fact table twice.
+    // The TSV's length (the scan's file listing holds it, so no extra
+    // filesystem call) is the block's measured size: a TSV under
+    // graft.append.partBytes is written as one sorted file (no range
+    // sample job, no range shuffle), a larger one fans out to
+    // partBytes-sized ranges.
+    val tsvBytes = tsv.queryExecution.analyzed.stats.sizeInBytes.toLong
+    val ingested = cat.append(table.name, incremental, blockBytes = tsvBytes)
     if (deleteTsvAfter) { // S7
       val f = new java.io.File(tsvPath)
       if (f.isFile) f.delete() else ()
@@ -147,8 +159,8 @@ object TsvIngest {
     */
   def gitTable(name: String, root: String, cols: Seq[Col], sortKey: Seq[String]): TableDef = {
     val full = ChType.structType(cols)
-      .add("repo_name", org.apache.spark.sql.types.StringType)
-      .add("updated_at", org.apache.spark.sql.types.TimestampType)
+      .add("repo_name", StringType)
+      .add("updated_at", TimestampType)
     TableDef(name, s"$root/$name", full, sortKey, ReplacingDedup(sortKey, "updated_at"))
   }
 }

@@ -29,6 +29,46 @@ class DistributedSpec extends SparkSpecBase {
     (0 until 3).map(i => cat.read(s"d1_shard$i").count()).sum shouldBe 100L
   }
 
+  test("Distributed: concurrent member appends carry the caller's job tag on every job") {
+    val cat = new Catalog(spark)
+    val dc = new DistributedCatalog(spark, cat)
+    dc.create("dt", tmpDir("dist") + "/dt", schema, Seq("k"), Append, "k", 3)
+    val sc = spark.sparkContext
+    // twice, with different tags: a reused pool thread holding the first
+    // call's copy of the local properties cannot pass the second
+    Seq("graft-dist-a", "graft-dist-b").foreach { tag =>
+      sc.addJobTag(tag)
+      val tags =
+        try org.apache.spark.JobTagsOf(sc) {
+          dc.append("dt", (1L to 30L).map(k => (k, s"$tag$k")).toDF("k", "v")) shouldBe 30L
+        } finally sc.removeJobTag(tag)
+      withClue(s"$tag: ") {
+        tags.size should be > 1
+        all(tags) should contain(tag)
+      }
+    }
+    dc.read("dt").count() shouldBe 60L
+  }
+
+  test("Distributed: a member append's failure names the facade and the member") {
+    import graft.sql.ChDdl
+    val cat = new Catalog(spark)
+    val root = tmpDir("dist-fail")
+    ChDdl.runScript(cat, spark,
+      (0 until 2).map(i =>
+        s"CREATE TABLE chk_local_shard$i (`k` Int64, `v` String, " +
+          "CONSTRAINT v_ok CHECK v != 'bad') ENGINE = MergeTree ORDER BY k")
+        .mkString(";\n"), root)
+    ChDdl.execute(cat, spark, "CREATE TABLE chk_all (`k` Int64, `v` String) ENGINE = " +
+      "Distributed('main', 'default', 'chk_local', k)", root)
+    val shard = cat.distributed.shardOf("chk_all", 7L)
+    val e = intercept[Exception] {
+      cat.distributed.append("chk_all", Seq((7L, "bad")).toDF("k", "v"))
+    }
+    e.getMessage should include(s"chk_all: append to member chk_local_shard$shard failed")
+    e.getMessage should include("v_ok")
+  }
+
   test("Distributed: a shard-pinned probe plans only one member's files") {
     val cat = new Catalog(spark)
     val dc = new DistributedCatalog(spark, cat)

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.sources.{GitImporter, TsvIngest}
 import graft.schema.GitSchemas
@@ -14,11 +17,38 @@ class IngestSpec extends SparkSpecBase {
   private def commitRow(hash: String, time: String, author: String = "alice"): String =
     (Seq(hash, author, time, s"msg $hash") ++ Seq.fill(9)("1")).mkString("\t")
 
+  private def fileChangeRow(change: String, path: String, hash: String, time: String): String =
+    (Seq(change, path, "", "scala") ++ Seq.fill(5)("3") ++
+      Seq(hash, "bob", time, "m") ++ Seq.fill(9)("4")).mkString("\t")
+
+  private def lineChangeRow(n: Int, hash: String, time: String): String =
+    (Seq("1", "10", n.toString, "1", "5", "6", "2", "1", "ctx", s"line $n", "2", "Code",
+      "prevh", "carol", "2024-02-01 01:01:01", "Modify", "src/a.scala", "", "scala") ++
+      Seq.fill(5)("7") ++ Seq(hash, "bob", time, "m") ++ Seq.fill(9)("8")).mkString("\t")
+
   private def writeTsv(dir: String, name: String, rows: Seq[String]): String = {
     val p = Paths.get(dir, name)
     Files.writeString(p, rows.mkString("", "\n", "\n"))
     p.toString
   }
+
+  /** A table's data files: the `.parquet` files outside hidden (`_`/`.`) entries. */
+  private def dataFiles(imp: GitImporter, table: String): Seq[String] = {
+    val root = Paths.get(imp.catalog.get(table).path)
+    if (!Files.exists(root)) Nil
+    else {
+      val s = Files.walk(root)
+      try s.iterator().asScala.map(root.relativize(_)).filter { rel =>
+        rel.toString.endsWith(".parquet") &&
+          rel.iterator().asScala.forall(c => !c.toString.startsWith("_") && !c.toString.startsWith("."))
+      }.map(root.resolve(_).toString).toList
+      finally s.close()
+    }
+  }
+
+  /** A table's rows as sorted text, without the ingest-time `updated_at`. */
+  private def contents(imp: GitImporter, table: String): Seq[String] =
+    imp.catalog.read(table).drop("updated_at").collect().map(_.mkString("|")).toSeq.sorted
 
   test("typed projection yields declared names and types") {
     val dir = tmpDir("ingest")
@@ -143,5 +173,109 @@ class IngestSpec extends SparkSpecBase {
     row.getAs[Byte]("sign") shouldBe 1
     row.getAs[String]("line_type") shouldBe "Code"
     row.getAs[Long]("line_number_new") shouldBe 11L
+  }
+
+  test("an empty TSV is zero rows for its table, not a failed import") {
+    val dir = tmpDir("ingest")
+    writeTsv(dir, "commits.tsv", Seq(commitRow("aaa", "2024-01-01 10:00:00")))
+    Files.writeString(Paths.get(dir, "file_changes.tsv"), "")
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    val n = imp.importRepo("acme/repo", dir)
+    n("file_changes") shouldBe 0
+    n("commits") shouldBe 1
+    imp.catalog.read("commits").select("hash").collect().map(_.getString(0)) shouldBe Array("aaa")
+    imp.catalog.read("file_changes").count() shouldBe 0
+  }
+
+  test("a failed table load fails the import only after its sibling loads end; " +
+       "re-importing the fixed TSVs converges to a one-shot import") {
+    val dir = tmpDir("ingest")
+    val commitRows = (1 to 3).map(i => commitRow(s"h$i", s"2024-02-0$i 02:02:02"))
+    val goodChanges = (1 to 3).map(i => fileChangeRow("Modify", "src/a.scala", s"h$i", s"2024-02-0$i 02:02:02"))
+    val lineRows = (1 to 40).map(i => lineChangeRow(i, "h1", "2024-02-01 02:02:02"))
+    writeTsv(dir, "commits.tsv", commitRows)
+    writeTsv(dir, "file_changes.tsv",
+      goodChanges :+ fileChangeRow("Banana", "src/b.scala", "h3", "2024-02-03 02:02:02"))
+    writeTsv(dir, "line_changes.tsv", lineRows)
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    val e = intercept[Exception] { imp.importRepo("acme/repo", dir) }
+    e.getMessage should include("invalid Enum8 value")
+    // the failure arrives only once line_changes (listed after the failing
+    // table) has ended: it already holds every row
+    imp.catalog.read("line_changes").count() shouldBe lineRows.size
+    imp.catalog.read("file_changes").count() shouldBe 0
+
+    writeTsv(dir, "file_changes.tsv", goodChanges)
+    imp.importRepo("acme/repo", dir)
+    val oneShot = new GitImporter(spark, tmpDir("wh-one"))
+    oneShot.importRepo("acme/repo", dir)
+    Seq("commits", "file_changes", "line_changes").foreach { t =>
+      withClue(s"$t: ") { contents(imp, t) shouldBe contents(oneShot, t) }
+    }
+    contents(imp, "file_changes") should have size goodChanges.size
+  }
+
+  test("a small import writes one sorted data file per table") {
+    val dir = tmpDir("ingest")
+    writeTsv(dir, "commits.tsv", (1 to 50).map(i => commitRow(f"c$i%03d", f"2024-01-01 10:$i%02d:00")))
+    writeTsv(dir, "file_changes.tsv",
+      (1 to 50).map(i => fileChangeRow("Add", s"f$i.scala", f"c$i%03d", f"2024-01-01 10:$i%02d:00")))
+    writeTsv(dir, "line_changes.tsv", (1 to 50).map(i => lineChangeRow(i, "c001", "2024-01-01 10:01:00")))
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    val tables = Seq("commits", "file_changes", "line_changes")
+    imp.importRepo("acme/repo", dir) shouldBe tables.map(_ -> 50L).toMap
+    tables.foreach(t => withClue(s"$t: ") { dataFiles(imp, t) should have size 1 })
+    // a refresh adds exactly one more file per table
+    writeTsv(dir, "commits.tsv", Seq(commitRow("d001", "2024-01-02 10:00:00")))
+    writeTsv(dir, "file_changes.tsv", Seq(fileChangeRow("Add", "g.scala", "d001", "2024-01-02 10:00:00")))
+    writeTsv(dir, "line_changes.tsv", Seq(lineChangeRow(1, "d001", "2024-01-02 10:00:00")))
+    imp.importRepo("acme/repo", dir) shouldBe tables.map(_ -> 1L).toMap
+    tables.foreach(t => withClue(s"$t: ") { dataFiles(imp, t) should have size 2 })
+  }
+
+  test("a TSV several times graft.append.partBytes still writes several range-sorted files") {
+    val dir = tmpDir("ingest")
+    val rows = (1 to 200).map(i => commitRow(f"c$i%04d", f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"))
+    val tsvBytes = Files.size(Paths.get(writeTsv(dir, "commits.tsv", rows)))
+    val partBytes = tsvBytes / 6
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    spark.conf.set("graft.append.partBytes", partBytes.toString)
+    try imp.importRepo("acme/repo", dir)("commits") shouldBe 200L
+    finally spark.conf.unset("graft.append.partBytes")
+    val files = dataFiles(imp, "commits")
+    files.size should be >= 3
+    // each file is sorted on the sort key and the files' key ranges are disjoint
+    val keysPerFile = files.map { f =>
+      spark.read.parquet(f).select("time", "hash").collect()
+        .map(r => (r.getTimestamp(0).getTime, r.getString(1))).toSeq
+    }.filter(_.nonEmpty).sortBy(_.head)
+    keysPerFile.foreach(ks => ks shouldBe ks.sorted)
+    keysPerFile.sliding(2).foreach {
+      case Seq(a, b) => Ordering[(Long, String)].lt(a.last, b.head) shouldBe true
+      case _ => ()
+    }
+    keysPerFile.map(_.size).sum shouldBe 200
+  }
+
+  test("importRepo's concurrent loads carry the caller's job tag on every job") {
+    val sc = spark.sparkContext
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    // twice, with different tags: a reused thread holding the first call's
+    // copy of the local properties cannot pass the second
+    Seq("graft-import-a", "graft-import-b").zipWithIndex.foreach { case (tag, i) =>
+      val dir = tmpDir("ingest")
+      val time = s"2024-03-0${i + 1} 10:00:00"
+      writeTsv(dir, "commits.tsv", Seq(commitRow(s"t$i", time)))
+      writeTsv(dir, "file_changes.tsv", Seq(fileChangeRow("Add", "a.scala", s"t$i", time)))
+      writeTsv(dir, "line_changes.tsv", Seq(lineChangeRow(1, s"t$i", time)))
+      sc.addJobTag(tag)
+      val tags =
+        try org.apache.spark.JobTagsOf(sc) { imp.importRepo("acme/repo", dir) }
+        finally sc.removeJobTag(tag)
+      withClue(s"$tag: ") {
+        tags should not be empty
+        all(tags) should contain(tag)
+      }
+    }
   }
 }
