@@ -1752,7 +1752,7 @@ final class Catalog(spark: SparkSession) {
       val due = st.lastRefreshMs < 0 || nowMs - st.lastRefreshMs >= d.intervalMs
       if (!due) None
       else try { refreshView(n, nowMs); Some(n) }
-      catch { case _: Throwable => None } // recorded in lastError
+      catch { case scala.util.control.NonFatal(_) => None } // recorded in lastError
     }
 
   /** `system.view_refreshes` analog: one row per refreshable view with
@@ -2557,7 +2557,9 @@ final class Catalog(spark: SparkSession) {
           scala.concurrent.duration.Duration(30, "s"))
         catch { case _: java.util.concurrent.TimeoutException =>
           throw new IllegalStateException(
-            s"writeData(${t.name}): observed write metrics never arrived")
+            s"writeData(${t.name}): the files under $path are written (a " +
+              "direct append is already committed), but the row count did " +
+              "not arrive within 30 s — check the table before re-appending")
         }
       row.getAs[Long]("rows")
     }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.expressions.Aggregator
 
 /** ClickHouse's map-combining aggregates — `sumMap` / `minMap` /
   * `maxMap` — behind the ChDialect tier-4 rewrites (`ch_summap(m)` &c.,
-  * registered in GraftSql.registerFunctions): all input maps merge
+  * registered by GraftSql.ensureSession): all input maps merge
   * key-wise (sum / min / max of each key's values across rows) and the
   * result keys come back SORTED, ClickHouse's own output contract.
   *

@@ -60,7 +60,7 @@ object CatalogOps extends QueryModule {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator.asScala.toSeq.reverse
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(_) => () }
 
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {

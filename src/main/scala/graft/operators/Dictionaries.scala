@@ -194,7 +194,7 @@ object Dictionaries extends QueryModule {
     // stage chained lookups. Twinned against dict_get's oracle.
     "sql_dict_get" -> ((s, d) => {
       val cat = new graft.catalog.Catalog(s)
-      graft.sql.GraftSql.registerViews(s, d)
+      graft.sql.GraftSql.bindTables(s, d, Seq("nation", "region"))
       graft.sql.ChDdl.runScript(cat, s,
         """CREATE DICTIONARY nat_d (
           |  `n_nationkey` UInt64,

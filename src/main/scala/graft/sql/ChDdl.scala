@@ -1115,6 +1115,7 @@ object ChDdl {
   def query(cat: Catalog, s: org.apache.spark.sql.SparkSession,
             text0: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
+    GraftSql.ensureSession(s)
     val text = substituteParams(cat, text0)
     showCreateRe.findFirstMatchIn(text).foreach { m =>
       val n = bare(m.group(1))
@@ -1337,7 +1338,7 @@ object ChDdl {
     // — the query-parameter door's read path, and the general "SELECT
     // over what I just CREATEd" statement shape
     if ("(?is)^\\s*(?:SELECT|WITH)\\b".r.findFirstIn(text).isDefined) {
-      bindCatalogRefs(cat, s, text, Set.empty)
+      GraftSql.bindNamed(text, cat.tableNames)(cat.read)
       return s.sql(GraftSql.expandFunctions(ChDialect.rewrite(text)))
     }
     throw new IllegalArgumentException(
@@ -1362,35 +1363,23 @@ object ChDdl {
         s"expected CREATE TABLE, got ${other.getClass.getSimpleName}")
     }
 
-  /** Bind every catalog table `select` references (FROM/JOIN positions)
-    * as a session temp view under its own name, except `skip` — so a
-    * SELECT that JOINs catalog tables resolves beyond its first source
-    * (the CreateView/CTAS/InsertSelect statement class).
-    */
-  private def bindCatalogRefs(cat: Catalog,
-                              s: org.apache.spark.sql.SparkSession,
-                              select: String, skip: Set[String]): Unit =
-    "(?is)\\b(?:FROM|JOIN)\\s+([`\\w.]+)".r.findAllMatchIn(select)
-      .map(fm => bare(fm.group(1))).toSet[String].diff(skip).foreach { t =>
-        scala.util.Try(cat.get(t)).toOption
-          .foreach(_ => cat.read(t).createOrReplaceTempView(t))
-      }
-
   /** Run `selectSql` (CH dialect) with `frame` standing in for `source`:
     * the frame registers under a per-statement view name, the FROM/JOIN
     * references rewrite to it ALIASED BACK to the source name (so
     * `source.col` qualifications keep resolving), and OTHER catalog
     * tables the select joins bind under their own names
-    * ([[bindCatalogRefs]]).
+    * ([[GraftSql.bindNamed]]).
     */
   private def selectOver(s: org.apache.spark.sql.SparkSession, source: String,
                          selectSql: String,
                          frame: org.apache.spark.sql.DataFrame,
                          viewTag: String,
                          cat: Option[Catalog] = None): org.apache.spark.sql.DataFrame = {
+    GraftSql.ensureSession(s)
     val view = s"__chddl_${viewTag}_$source"
     frame.createOrReplaceTempView(view)
-    cat.foreach(bindCatalogRefs(_, s, selectSql, Set(source)))
+    cat.foreach(c =>
+      GraftSql.bindNamed(selectSql, c.tableNames, Set(source))(c.read))
     // tokens that can follow a table reference WITHOUT being its alias —
     // if the next word is none of these, the user wrote `FROM src s` and
     // their alias must stand alone (a second alias would not parse)
@@ -1827,6 +1816,7 @@ object ChDdl {
   def execute(cat: Catalog, s: org.apache.spark.sql.SparkSession,
               ddl0: String, warehouse: String = ""): Statement = {
     import org.apache.spark.sql.functions.expr
+    GraftSql.ensureSession(s)
     // strip HERE too: createMaterializedView / insertSelect below
     // re-parse the raw text, not the parsed statement
     val ddl = stripOnCluster(substituteParams(cat, ddl0))
@@ -2042,7 +2032,7 @@ object ChDdl {
         // bind every catalog source the select references as a temp view
         // first, so a view over Catalog tables resolves (snapshot
         // semantics — doc on the Statement)
-        bindCatalogRefs(cat, s, select, Set.empty)
+        GraftSql.bindNamed(select, cat.tableNames)(cat.read)
         val or = if (orReplace) "OR REPLACE " else ""
         s.sql(s"CREATE ${or}TEMPORARY VIEW $name AS " +
           GraftSql.expandFunctions(ChDialect.rewrite(select)))

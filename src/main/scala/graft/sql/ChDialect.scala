@@ -437,7 +437,7 @@ object ChDialect {
 
   /** The `SAMPLE BY` declarations for the TESTDATA tables — the DDL side
     * of CH sampling, which lives in CREATE TABLE there and in this map
-    * here (the temp views [[GraftSql.registerViews]] registers carry no
+    * here (the testdata temp views the SQL text doors bind carry no
     * DDL). Primary keys throughout: key-consistent with the tables'
     * natural join columns, so `orders SAMPLE 0.1` joined to
     * `lineitem SAMPLE 0.1` keeps every pair of the sampled keys.

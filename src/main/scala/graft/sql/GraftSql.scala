@@ -1,45 +1,87 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, IntegerLiteral}
 import graft.Tables
 import graft.functions.{CosineSimilarity, GramDigests, PolyHash}
 
 /** SQL-text entry point: the reference's entire query surface is SQL
   * strings over named tables (create_db.py:67-128, README.md:232-266) —
-  * this registers the same tables as temp views so every query the engine
-  * answers through the DataFrame API is equally answerable as `SELECT …`
-  * text through the session's own parser, optimizer (including the
-  * installed [[graft.plans.RollupRewrite]] batch), and executor.
+  * every query the engine answers through the DataFrame API is equally
+  * answerable as `SELECT …` text through the session's own parser,
+  * optimizer (including the installed [[graft.plans.RollupRewrite]]
+  * batch), and executor.
   *
-  * Views are metadata only — each still reads through [[graft.Tables]]'s
-  * scan options (e.g. the events NANOS handling), so SQL and DataFrame
-  * plans bottom out in the identical parquet scans with the identical
-  * pushdowns. SqlParitySpec holds the two surfaces equal query by query.
+  * Each statement binds only the relations it names ([[bindNamed]], the
+  * one binder of the text doors, shared with [[ChDdl]]'s catalog tables):
+  * the testdata tables it mentions register as temp views named as in
+  * TESTDATA.md. Views are metadata only — each still reads through
+  * [[graft.Tables]]'s scan options (e.g. the events NANOS handling), so
+  * SQL and DataFrame plans bottom out in the identical parquet scans with
+  * the identical pushdowns. SqlParitySpec holds the two surfaces equal
+  * query by query. The engine kernels register once per session
+  * ([[ensureSession]]).
   */
 object GraftSql {
 
-  /** Register every testdata table as a temp view named as in TESTDATA.md. */
-  def registerViews(s: SparkSession, sfDir: String): Unit =
-    Tables.names.foreach { n =>
-      val df = if (n == "events") Tables.events(s, sfDir) else Tables(s, sfDir, n)
-      df.createOrReplaceTempView(n)
-    }
+  // one token per match, left to right: a '…' literal or a comment
+  // (no group), or a backticked, double-quoted (both are ClickHouse
+  // identifier quoting) or bare word
+  private val tokenRe =
+    """(?s)'(?:[^'\\]++|\\.)*+'|--[^\n]*|/\*.*?\*/|`([^`]*)`|"([^"]*)"|(\w+)""".r
 
-  /** Expose the engine's codegen'd Catalyst kernels as SQL functions, so
-    * the operators built on them (fingerprinting, similarity scoring,
-    * substring-span digests) are reachable from SQL text too — the same
-    * expression objects the DataFrame surface plans, not UDF wrappers.
+  /** The one view binder of the SQL text doors: binds each relation among
+    * `known` that `text` names, except `skip`, as a temp view under its
+    * own name (`read` builds it), and returns the names `text` mentions.
+    * A name is an identifier token matched case-insensitively, outside
+    * string literals and comments, in any clause — so comma joins,
+    * scalar and IN subqueries and CTE bodies all count. Binding a view
+    * the statement never reads costs a listing; missing one fails it.
     */
-  def registerFunctions(s: SparkSession): Unit = {
+  private[graft] def bindNamed(text: String, known: Iterable[String],
+                               skip: Set[String] = Set.empty)(
+      read: String => DataFrame): Set[String] = {
+    val byLower = known.groupBy(_.toLowerCase)
+    val named = tokenRe.findAllMatchIn(text).flatMap(_.subgroups.find(_ != null))
+      .flatMap(w => byLower.getOrElse(w.toLowerCase, Nil)).toSet
+    (named -- skip).foreach(n => read(n).createOrReplaceTempView(n))
+    named
+  }
+
+  /** Bind the testdata tables `names` lists as temp views named as in
+    * TESTDATA.md.
+    */
+  def bindTables(s: SparkSession, sfDir: String,
+                 names: Iterable[String]): Unit =
+    names.foreach(n => testdata(s, sfDir)(n).createOrReplaceTempView(n))
+
+  private def testdata(s: SparkSession, sfDir: String)(n: String): DataFrame =
+    if (n == "events") Tables.events(s, sfDir) else Tables(s, sfDir, n)
+
+  /** The one per-session setup of the text doors, idempotent: registers
+    * each engine kernel the session's function registry lacks, so a
+    * second call changes nothing. [[chSql]], [[sql]], [[createFunction]]
+    * and every [[ChDdl]] door that parses lowered text call it before
+    * parsing.
+    *
+    * The kernels are the engine's codegen'd Catalyst expressions as SQL
+    * functions, so the operators built on them (fingerprinting,
+    * similarity scoring, substring-span digests) are reachable from SQL
+    * text too — the same expression objects the DataFrame surface plans,
+    * not UDF wrappers.
+    */
+  def ensureSession(s: SparkSession): Unit = {
+    val registry = s.sessionState.functionRegistry
     def reg(name: String, arity: Int)(b: Seq[Expression] => Expression): Unit =
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name,
-        { args =>
-          require(args.length == arity, s"$name expects $arity arguments")
-          b(args)
-        },
-        "internal")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(
+          name,
+          { args =>
+            require(args.length == arity, s"$name expects $arity arguments")
+            b(args)
+          },
+          "internal")
     reg("polyhash", 1)(a => PolyHash(a.head))
     reg("cosine_similarity", 2)(a => CosineSimilarity(a(0), a(1)))
     reg("gram_digests", 2) {
@@ -65,13 +107,14 @@ object GraftSql {
     }
   }
 
-  /** One-call text query: register views + kernels, expand user-defined
-    * SQL-function macros, parse, run.
+  /** One-call text query: set the session up, expand user-defined
+    * SQL-function macros, bind the testdata tables the text names, parse.
     */
   def sql(s: SparkSession, sfDir: String, query: String): DataFrame = {
-    registerViews(s, sfDir)
-    registerFunctions(s)
-    s.sql(expandFunctions(query))
+    ensureSession(s)
+    val text = expandFunctions(query)
+    bindNamed(text, Tables.names)(testdata(s, sfDir))
+    s.sql(text)
   }
 
   // ---- file() table function (the reference's own ingest FROM) ---------
@@ -171,6 +214,7 @@ object GraftSql {
       if (params.isEmpty) s"SELECT $body"
       else s"SELECT $body FROM (SELECT ${
         params.map(p => s"CAST(NULL AS STRING) AS $p").mkString(", ")})"
+    ensureSession(s)
     val old = sqlFunctions.put(name, SqlFnDef(params, body))
     try s.sql(expandFunctions(probe)).queryExecution.analyzed
     catch {
@@ -216,23 +260,26 @@ object GraftSql {
       "SQL function expansion did not terminate — definition cycle?")
   }
 
+  /** Index just past the '…', "…" or `…` span opening at `i` (\-escapes
+    * skipped): the span is copied verbatim, never rewritten.
+    */
+  private def quotedEnd(q: String, i: Int): Int = {
+    var j = i + 1
+    while (j < q.length && q.charAt(j) != q.charAt(i))
+      j += (if (q.charAt(j) == '\\') 2 else 1)
+    math.min(j + 1, q.length)
+  }
+
   private def expandOnce(q: String): String = {
     val sb = new StringBuilder
     val n = q.length
     var i = 0
-    def copyQuoted(): Unit = { // copy '…' / "…" / `…` spans verbatim
-      val quote = q.charAt(i)
-      sb.append(quote); i += 1
-      while (i < n && q.charAt(i) != quote) {
-        if (q.charAt(i) == '\\' && i + 1 < n) { sb.append(q.charAt(i)); i += 1 }
-        sb.append(q.charAt(i)); i += 1
-      }
-      if (i < n) { sb.append(quote); i += 1 }
-    }
     while (i < n) {
       val c = q.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') copyQuoted()
-      else if (Character.isJavaIdentifierStart(c)) {
+      if (c == '\'' || c == '"' || c == '`') {
+        val end = quotedEnd(q, i)
+        sb.append(q.substring(i, end)); i = end
+      } else if (Character.isJavaIdentifierStart(c)) {
         val start = i
         while (i < n && Character.isJavaIdentifierPart(q.charAt(i))) i += 1
         val word = q.substring(start, i)
@@ -267,13 +314,8 @@ object GraftSql {
     while (i < n && depth > 0) {
       val c = q.charAt(i)
       if (c == '\'' || c == '"' || c == '`') {
-        val quote = c
-        cur.append(c); i += 1
-        while (i < n && q.charAt(i) != quote) {
-          if (q.charAt(i) == '\\' && i + 1 < n) { cur.append(q.charAt(i)); i += 1 }
-          cur.append(q.charAt(i)); i += 1
-        }
-        if (i < n) { cur.append(quote); i += 1 }
+        val end = quotedEnd(q, i)
+        cur.append(q.substring(i, end)); i = end
       } else {
         if (c == '(') depth += 1
         else if (c == ')') depth -= 1
@@ -303,13 +345,8 @@ object GraftSql {
     while (i < n) {
       val c = b.charAt(i)
       if (c == '\'' || c == '"' || c == '`') {
-        val quote = c
-        sb.append(c); i += 1
-        while (i < n && b.charAt(i) != quote) {
-          if (b.charAt(i) == '\\' && i + 1 < n) { sb.append(b.charAt(i)); i += 1 }
-          sb.append(b.charAt(i)); i += 1
-        }
-        if (i < n) { sb.append(quote); i += 1 }
+        val end = quotedEnd(b, i)
+        sb.append(b.substring(i, end)); i = end
       } else if (Character.isJavaIdentifierStart(c)) {
         val start = i
         while (i < n && Character.isJavaIdentifierPart(b.charAt(i))) i += 1
@@ -411,12 +448,6 @@ object GraftSql {
       s"$view: parameter $p has unsupported placeholder type $chType")
   }
 
-  /** ClickHouse-dialect entry point: the [[ChDialect]] shim rewrites the
-    * CH-isms the reference's own SQL surface uses (`count()`, `countIf`,
-    * `::UInt32` casts, `FINAL`, `PREWHERE`, `quantile(q)(x)`, …) into
-    * Spark SQL, then runs through [[sql]] — so a user can paste the
-    * reference's queries as written.
-    */
   private val outfileRe =
     "(?is)^(.*\\S)\\s+INTO\\s+OUTFILE\\s+'([^']+)'(?:\\s+FORMAT\\s+(\\w+))?\\s*$".r
 
@@ -484,41 +515,44 @@ object GraftSql {
     Seq((path, format, rows)).toDF("path", "format", "rows")
   }
 
+  /** ClickHouse-dialect entry point: the [[ChDialect]] shim rewrites the
+    * CH-isms the reference's own SQL surface uses (`count()`, `countIf`,
+    * `::UInt32` casts, `FINAL`, `PREWHERE`, `quantile(q)(x)`, …) into
+    * Spark SQL for the session's parser — so a user can paste the
+    * reference's queries as written.
+    */
   def chSql(s: SparkSession, sfDir: String, query: String): DataFrame = {
     // CH `EXPLAIN SYNTAX <stmt>`: the rewritten statement as a result
     // frame (CH returns its optimizer's re-spelled query; here the
     // analog is the dialect's lowering — exactly what this engine will
     // hand Spark's parser). One row per line, CH's column name.
-    "(?is)^\\s*EXPLAIN\\s+SYNTAX\\b(.*)$".r.findFirstMatchIn(query)
-      .foreach { m =>
-        registerViews(s, sfDir)
-        registerFunctions(s)
-        val bound = bindFileRefs(s, m.group(1).trim)
-        lazy val probe: String => Seq[String] = b =>
-          s.sql(expandFunctions(ChDialect.rewrite(b, Some(probe))))
-            .columns.toSeq
-        val rewritten = expandFunctions(ChDialect.rewrite(bound, Some(probe)))
-        import s.implicits._
-        return rewritten.linesIterator.map(_.stripTrailing()).toSeq
-          .toDF("explain")
-      }
-    outfileRe.findFirstMatchIn(query).foreach { m =>
+    val syntax = "(?is)^\\s*EXPLAIN\\s+SYNTAX\\b(.*)$".r
+      .findFirstMatchIn(query).map(_.group(1).trim)
+    if (syntax.isEmpty) outfileRe.findFirstMatchIn(query).foreach { m =>
       return exportOutfile(s, sfDir, m.group(1), m.group(2),
         Option(m.group(3)))
     }
-    // the analyzer hook gives schema-needing rewrites (WITH FILL column
-    // order, INTERPOLATE) the body's output columns — an analysis-only
-    // probe (DataFrame creation never executes). Views/functions register
-    // ONCE up front, so the probe is a bare parse+analyze (recursing
-    // through chSql would re-register every view per probe — measured
-    // ×1.66 on the fill gate); the probe recurses through ITSELF so a
-    // nested CH body resolves identically
-    registerViews(s, sfDir)
-    registerFunctions(s)
-    val bound = bindFileRefs(s, query)
+    // the session is set up and the tables the statement names are
+    // bound BEFORE the rewrite: its analyzer hook gives schema-needing
+    // rewrites (WITH FILL column order, INTERPOLATE) the body's output
+    // columns — an analysis-only probe (DataFrame creation never
+    // executes) of a slice of this text, a bare parse+analyze that
+    // recurses through ITSELF so a nested CH body resolves identically.
+    // Tables only the lowered text names (`remote('h', 'db', 'orders')`
+    // names its table in a literal) bind after the rewrite.
+    ensureSession(s)
+    val bound = bindFileRefs(s, syntax.getOrElse(query))
+    val named = bindNamed(bound, Tables.names)(testdata(s, sfDir))
     lazy val probe: String => Seq[String] = b =>
       s.sql(expandFunctions(ChDialect.rewrite(b, Some(probe)))).columns.toSeq
-    s.sql(expandFunctions(ChDialect.rewrite(bound, Some(probe))))
+    val lowered = expandFunctions(ChDialect.rewrite(bound, Some(probe)))
+    import s.implicits._
+    if (syntax.isDefined)
+      lowered.linesIterator.map(_.stripTrailing()).toSeq.toDF("explain")
+    else {
+      bindNamed(lowered, Tables.names, named)(testdata(s, sfDir))
+      s.sql(lowered)
+    }
   }
 
   /** `EXPLAIN [PIPELINE]` analog: the formatted physical plan for a SQL

@@ -1553,4 +1553,22 @@ class ChDdlSpec extends SparkSpecBase {
         "SELECT 1 AS x FROM prm WHERE k IN {ids:Array(UInt64)}")
     }.getMessage should include("inline")
   }
+
+  test("lowered ClickHouse aggregates run in a session no chSql has touched") {
+    // a new session gets a fresh function registry: the text doors must
+    // register the engine kernels themselves, not rely on an earlier chSql
+    val fresh = spark.newSession()
+    val cat = new Catalog(fresh)
+    ChDdl.runScript(cat, fresh,
+      """CREATE TABLE tk (`k` UInt64, `s` String) ENGINE = MergeTree
+        |  ORDER BY k;
+        |INSERT INTO tk (k, s) VALUES (1, 'a'), (2, 'b'), (3, 'a')""".stripMargin,
+      tmpDir("chddl-fresh"))
+    ChDdl.query(cat, fresh, "SELECT topK(1)(s) AS t FROM tk")
+      .head().getSeq[String](0) shouldBe Seq("a")
+    ChDdl.query(cat, fresh, "SELECT sumMap(map(s, k)) AS m FROM tk")
+      .head().getMap[String, Any](0).toMap
+      .map { case (s, k) => s -> k.toString.toDouble } shouldBe
+      Map("a" -> 4.0, "b" -> 2.0)
+  }
 }

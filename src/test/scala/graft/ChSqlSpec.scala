@@ -2263,4 +2263,90 @@ class ChSqlSpec extends SparkSpecBase {
         }.getMessage should include(needle)
       }
   }
+
+  // ---- the view binder: a statement binds the tables it names ----------
+
+  private def dropTestdataViews(): Unit =
+    Tables.names.foreach(spark.catalog.dropTempView)
+
+  test("a one-table statement lists only the table it reads") {
+    // warm the memoized schemas so both counts see plain scan listings
+    Tables.names.foreach(n => GraftSql.bindTables(spark, sf0001, Seq(n)))
+    val bare = CountingFs.during(spark) {
+      Tables(spark, sf0001, "orders"); CountingFs.lists.get
+    }
+    val one = CountingFs.during(spark) {
+      SparkEntry.queries("sql_qualify")(spark, sf0001); CountingFs.lists.get
+    }
+    bare should be > 0L
+    one should be <= bare + 2
+  }
+
+  test("every clause that names a table binds it") {
+    Seq(
+      "comma join" ->
+        "SELECT count() FROM nation, region WHERE n_regionkey = r_regionkey",
+      "scalar subquery" ->
+        "SELECT (SELECT count() FROM region) AS r, count() AS n FROM nation",
+      "IN subquery" -> ("SELECT count() FROM nation WHERE n_regionkey IN " +
+        "(SELECT r_regionkey FROM region WHERE r_name = 'ASIA')"),
+      "CTE body" ->
+        "WITH r AS (SELECT r_regionkey FROM region) SELECT count() FROM r",
+      "upper-case name" -> "SELECT count() FROM NATION",
+      // named only in a literal until the rewrite lowers it
+      "remote() table" -> "SELECT count() FROM remote('h1,h2', 'default.nation')",
+      "backticked name" -> ("SELECT count() FROM `nation` JOIN `region` " +
+        "ON n_regionkey = r_regionkey"))
+      .foreach { case (shape, q) =>
+        withClue(s"$shape: ") {
+          dropTestdataViews()
+          GraftSql.chSql(spark, sf0001, q).collect() should not be empty
+        }
+      }
+  }
+
+  test("a table named only inside a string literal or comment is not bound") {
+    dropTestdataViews()
+    GraftSql.chSql(spark, sf0001,
+      """SELECT 'lineitem' AS t -- part
+        |FROM nation /* supplier */ LIMIT 1""".stripMargin)
+      .head().getString(0) shouldBe "lineitem"
+    spark.catalog.tableExists("nation") shouldBe true
+    Seq("lineitem", "part", "supplier")
+      .foreach(spark.catalog.tableExists(_) shouldBe false)
+  }
+
+  test("ensureSession twice leaves the function registry unchanged") {
+    GraftSql.ensureSession(spark)
+    val reg = spark.sessionState.functionRegistry
+    def builders = reg.listFunction().map(f => f -> reg.lookupFunctionBuilder(f))
+      .toMap
+    val before = builders
+    GraftSql.ensureSession(spark)
+    val after = builders
+    after.keySet shouldBe before.keySet
+    // the same builder objects: nothing was re-registered
+    after.foreach { case (f, b) => b.get shouldBe theSameInstanceAs(before(f).get) }
+  }
+
+  test("every SQL-text query builds with no testdata view left from before") {
+    // the oracle runs queries in one session, where a view an earlier
+    // query bound could hide one the binder missed: here each query
+    // must bind everything it reads itself
+    val textQueries = Seq(
+      "cat_insert_format", "fn_array_lambda", "fn_json_variant",
+      "sql_agg_dialect", "sql_agg_state", "sql_any_join", "sql_array_join",
+      "sql_asof", "sql_columns_apply", "sql_dialect2", "sql_dialect3",
+      "sql_dialect4", "sql_dialect5", "sql_dict_get", "sql_file_scan",
+      "sql_limit_by", "sql_numbers", "sql_param_aggs", "sql_param_view",
+      "sql_qualify", "sql_query_cache", "sql_recursive_cte", "sql_sample",
+      "sql_select_modifiers", "sql_star_ties", "sql_totals", "sql_udf_call",
+      "sql_with_fill", "sql_with_fill_interp")
+    textQueries.foreach { name =>
+      withClue(s"$name: ") {
+        dropTestdataViews()
+        SparkEntry.queries(name)(spark, sf0001).queryExecution.assertAnalyzed()
+      }
+    }
+  }
 }

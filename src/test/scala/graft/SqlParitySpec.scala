@@ -11,7 +11,7 @@ import graft.sql.GraftSql
   * subset) or as a Spark-dialect TWIN (mechanical rewrites of DuckDB-isms:
   * `quantile_cont`→`percentile`, `unnest([…])`→`explode(array(…))`,
   * `strftime`→`date_format`, list comprehension slices→`transform(
-  * sequence(…))`, engine kernels via [[GraftSql.registerFunctions]]), and
+  * sequence(…))`, engine kernels via [[GraftSql.ensureSession]]), and
   * the result must equal the DataFrame surface row for row. The handful
   * with no single-statement SQL form are enumerated with reasons — the
   * three sets must partition the full oracle map, so a new query cannot
@@ -1297,7 +1297,7 @@ class SqlParitySpec extends SparkSpecBase {
   }
 
   test("verbatim oracle SQL through OUR session equals the DataFrame surface") {
-    GraftSql.registerViews(spark, sf0001)
+    GraftSql.bindTables(spark, sf0001, Tables.names)
     verbatim.toSeq.sorted.foreach { name =>
       withClue(s"$name: ") {
         canon(spark.sql(SparkEntry.oracleSql(name))) shouldBe
@@ -1307,8 +1307,8 @@ class SqlParitySpec extends SparkSpecBase {
   }
 
   test("Spark-dialect twins through OUR session equal the DataFrame surface") {
-    GraftSql.registerViews(spark, sf0001)
-    GraftSql.registerFunctions(spark)
+    GraftSql.bindTables(spark, sf0001, Tables.names)
+    GraftSql.ensureSession(spark)
     twins.toSeq.sortBy(_._1).foreach { case (name, sqlText) =>
       withClue(s"$name: ") {
         canon(spark.sql(sqlText)) shouldBe
