@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -18,7 +19,7 @@ object Bench {
         val df = if (t == "events") Tables.events(spark, sfDir)
                  else Tables(spark, sfDir, t)
         df.count()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     // SPARK_GRAFT_ONLY=q1,q2 → time just those queries (the isolation
     // re-measurement BASELINE.md's anomaly log prescribes before reading
@@ -58,7 +59,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => failed += name; false }
+          catch { case NonFatal(_) => failed += name; false }
         val t = (System.nanoTime() - t0) / 1e9
         // storage hygiene between queries: drop whatever blocks the query
         // left pinned (localCheckpoints from fixpoint loops, caches) so a

@@ -2104,10 +2104,10 @@ final class Catalog(spark: SparkSession) {
     * (types.json:7). ReplacingDedup batches are pre-collapsed so a single
     * batch can never introduce duplicates on its own.
     *
-    * Returns the number of rows appended. The batch is cached around the
-    * count+write pair so the source is scanned once — callers (ingest row
-    * accounting, importer.py:111's "Inserted N rows") get the batch size in
-    * O(batch), never via a full-table scan.
+    * Returns the number of rows appended, observed on the write plan
+    * itself (see [[writeData]]): the block executes once and callers
+    * (ingest row accounting, importer.py:111's "Inserted N rows") get the
+    * batch size in O(batch), never via a full-table scan.
     */
   def append(name: String, batch: DataFrame): Long =
     append(name, batch, blockBytes = -1L)
@@ -2124,13 +2124,20 @@ final class Catalog(spark: SparkSession) {
     * block collapses to a single narrow coalesce+sort (no exchange, no
     * RangePartitioner sample job); a 100 TB block resolves to the same
     * partBytes-bounded fan-out blockParts would pick, minus its floor.
+    * A measured block that fits one part ([[fitsOnePart]]) is coalesced
+    * to one partition BEFORE the engine's pre-merge, so the latest-wins
+    * window, the Summing/Aggregating group-by and the Collapsing/Join
+    * folds see a single partition and plan no exchange: scan → typed
+    * projection → pre-merge → sort → write run as one stage, and the
+    * attached views read that same single-partition block.
     * Callers that have NOT measured their block pass -1 and keep the
     * floor (the multi-file range layout the skip-index granularity
     * fixtures build on is only ever relaxed on measured evidence).
     */
   def append(name: String, batch: DataFrame, blockBytes: Long): Long = {
     val t = get(name)
-    val filled = materializeAndCheck(t, fillOmittedDefaults(t, batch))
+    val checked = materializeAndCheck(t, fillOmittedDefaults(t, batch))
+    val filled = if (fitsOnePart(blockBytes)) checked.coalesce(1) else checked
     // ENGINE = Null: type-check + count, discard, fan out to MVs. The
     // batch is cached around the count so attached transforms don't
     // recompute an arbitrary upstream lineage once per view.
@@ -2139,7 +2146,7 @@ final class Catalog(spark: SparkSession) {
       aligned.cache()
       try {
         val n = aligned.count()
-        fanOutMvs(name, aligned)
+        fanOutMvs(name, aligned, blockBytes)
         return n
       } finally aligned.unpersist()
     }
@@ -2166,21 +2173,38 @@ final class Catalog(spark: SparkSession) {
     // MV fan-out AFTER the base commit and OUTSIDE its lock (a target's
     // append takes its own lock; holding the source's across both invites
     // lock-order deadlock). MVs see the block AS INSERTED (pre-merge).
-    fanOutMvs(name, filled)
+    fanOutMvs(name, filled, blockBytes)
     n
   }
 
   /** Run `name`'s attached materialized views over one inserted block —
     * sequential, base-committed-first (failure contract on the registry
-    * doc). The batch is cached around the fan-out so N views don't
-    * recompute the upstream lineage N times.
+    * doc). One view reads the block once, so nothing is cached; two or
+    * more share one cache of the block instead of each recomputing the
+    * upstream lineage. A view whose plan reads nothing but the block's
+    * own leaves hands the block's measured size to its target's append;
+    * one that also reads another table (a join) passes -1, because the
+    * block does not measure that output.
     */
-  private def fanOutMvs(name: String, batch: DataFrame): Unit = {
+  private def fanOutMvs(name: String, batch: DataFrame, blockBytes: Long): Unit = {
     val mvs = attachedMvs.getOrElse(name, Vector.empty)
     if (mvs.isEmpty) return
-    batch.cache()
-    try mvs.foreach(m => append(m.target, m.transform(batch)))
-    finally batch.unpersist()
+    val shared = mvs.size > 1
+    if (shared) batch.cache()
+    try mvs.foreach { m =>
+      val out = m.transform(batch)
+      append(m.target, out,
+        blockBytes = if (blockBytes >= 0 && readsOnly(out, batch)) blockBytes else -1L)
+    } finally if (shared) batch.unpersist()
+  }
+
+  /** True when every leaf of `derived`'s plan is a leaf of `block`'s —
+    * `derived` reads nothing but the block (leaves compared canonically,
+    * so re-instanced attribute ids still match).
+    */
+  private def readsOnly(derived: DataFrame, block: DataFrame): Boolean = {
+    val own = block.queryExecution.analyzed.collectLeaves().map(_.canonicalized).toSet
+    derived.queryExecution.analyzed.collectLeaves().forall(l => own(l.canonicalized))
   }
 
   /** The per-engine INSERT-BLOCK pre-merge (ClickHouse merges each insert
@@ -2311,7 +2335,7 @@ final class Catalog(spark: SparkSession) {
     }
     // MV fan-out exactly once — only the committing call triggers, after
     // the base commit and outside its lock (same discipline as append)
-    committed.map { case (cnt, filled) => fanOutMvs(name, filled); cnt }
+    committed.map { case (cnt, filled) => fanOutMvs(name, filled, blockBytes = -1L); cnt }
   }
 
   /** Multi-writer Versioned append (doc at [[segMarkerDir]]): stage to a
@@ -2410,14 +2434,7 @@ final class Catalog(spark: SparkSession) {
     // and produces the identical single sorted file a 1-partition range
     // shuffle would.
     val measured: Option[Int] =
-      if (forCompact || blockBytes < 0) None
-      else {
-        val partBytes = spark.conf.get("graft.append.partBytes",
-          (16L * 1024 * 1024).toString).toLong
-        val maxParts = spark.conf.get("graft.append.maxParts", "10000").toInt
-        Some(math.min(maxParts.toLong,
-          blockBytes / math.max(partBytes, 1L) + 1).toInt)
-      }
+      if (forCompact || blockBytes < 0) None else Some(appendParts(blockBytes))
     val n = spark.sessionState.conf.numShufflePartitions
     if (t.partitionKeys.nonEmpty) {
       val rep = if (forCompact) df.repartition(t.partitionKeys.map(col): _*)
@@ -2454,15 +2471,34 @@ final class Catalog(spark: SparkSession) {
     * caps the fan-out (object stores dislike million-file batches; a
     * capped write still sorts correctly, each task just spills honestly).
     */
-  private def blockParts(df: DataFrame, floor: Int): Int = {
+  private def blockParts(df: DataFrame, floor: Int): Int =
+    math.max(floor, appendParts(sourceBytes(df)))
+
+  /** The source bytes under `df`: the sum of its plan's leaf sizes (file
+    * sources report their listed files' lengths), never a root estimate
+    * of a join or aggregate above them.
+    */
+  def sourceBytes(df: DataFrame): Long =
+    df.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.stats.sizeInBytes)
+      .filter(_.isValidLong).map(_.toLong).sum
+
+  /** True when `bytes` of measured source resolve to one append part
+    * (under `graft.append.partBytes`); false for an unmeasured -1. The
+    * one rule behind every "this block is one file / one partition"
+    * decision: [[append]]'s pre-merge coalesce, [[clusteredFor]]'s
+    * exchange-free sort and the git high-water-mark scan.
+    */
+  def fitsOnePart(bytes: Long): Boolean = bytes >= 0 && appendParts(bytes) == 1
+
+  /** Parts for `bytes` of append source: one per `graft.append.partBytes`,
+    * capped by `graft.append.maxParts`. The only reader of either key.
+    */
+  private def appendParts(bytes: Long): Int = {
     val partBytes = spark.conf.get("graft.append.partBytes",
       (16L * 1024 * 1024).toString).toLong
     val maxParts = spark.conf.get("graft.append.maxParts", "10000").toInt
-    val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes)
-      .filter(_.isValidLong).map(_.toLong).sum
-    val scaled = leafBytes / math.max(partBytes, 1L) + 1
-    math.max(floor, math.min(maxParts.toLong, scaled).toInt)
+    math.min(maxParts.toLong, bytes / math.max(partBytes, 1L) + 1).toInt
   }
 
   /** Per-column codec kinds → parquet writer options for one write.

@@ -27,7 +27,10 @@ object GhEventsIngest {
 
   /** JSONL → validated, typed, clustered append. Returns rows ingested.
     * FAILFAST: a malformed line rejects the batch, as a ClickHouse INSERT
-    * would, rather than silently nulling columns.
+    * would, rather than silently nulling columns. The JSON file's length
+    * (held by the scan's own listing) is the block's measured size, so a
+    * batch under `graft.append.partBytes` is written — and fanned out to
+    * the attached views — as one single-partition stage.
     */
   def ingest(spark: SparkSession, cat: Catalog, jsonPath: String): Long = {
     val raw = spark.read
@@ -43,6 +46,7 @@ object GhEventsIngest {
       GhEventsSchema.columns.map(c =>
         TsvIngest.normalizeNamed(
           coalesce(col(c.name), TsvIngest.chDefault(c)), c)): _*)
-    cat.append(TableName, validated)
+    val jsonBytes = raw.queryExecution.analyzed.stats.sizeInBytes.toLong
+    cat.append(TableName, validated, blockBytes = jsonBytes)
   }
 }

@@ -13,8 +13,8 @@ import graft.schema.GitSchemas
   * (/root/reference/repo/importer.py:18-40,86-90) — are out-of-engine
   * subprocesses in the reference too; our engine consumes their TSV output
   * contract (FIXTURES.md §A). Everything from the TSV onward is one short
-  * chain per table ([[TsvIngest.ingest]]: watermark read, dedup exchange,
-  * write), and the three tables' chains run concurrently.
+  * chain per table ([[TsvIngest.ingest]]: watermark read, then dedup and
+  * write in one plan), and the three tables' chains run concurrently.
   */
 final class GitImporter(spark: SparkSession, warehouseRoot: String) {
 

@@ -9,7 +9,9 @@ import graft.schema.ChType.{ChDateTime, ChEnum8, ChLowCardinality, Col}
 
 /** The reference's ingest pipeline (SURVEY.md §3.1 steps 6a-6d) as one
   * short chain of Spark jobs: the watermark read, then one Catalyst plan
-  * whose dedup exchange feeds the clustered write.
+  * whose dedup feeds the clustered write. A TSV under
+  * `graft.append.partBytes` runs that plan as one single-partition stage
+  * (dedup and sort without an exchange); a larger one range-partitions.
   *
   * In the reference this is three processes and two pipes: clickhouse-local
   * applies `SELECT c1::String AS hash, … WHERE time > '{hwm}'` over the TSV
@@ -106,15 +108,18 @@ object TsvIngest {
 
   /** A3+P5: per-(table, repo) ingest high-water mark — `SELECT max(time)
     * FROM t WHERE repo_name = r` (importer.py:95). None when the table is
-    * empty or the repo unseen (first import ingests everything).
+    * empty or the repo unseen (first import ingests everything). A table
+    * whose listed data files fit one append part ([[Catalog.fitsOnePart]]
+    * over the scan leaves' sizes) aggregates in one partition: one job,
+    * where the partial and final aggregate stages cost two.
     */
   def highWaterMark(cat: Catalog, table: String, repoName: String): Option[java.sql.Timestamp] =
     if (!cat.exists(table)) None
-    else Option(
-      cat.readRaw(table)
-        .filter(col("repo_name") === repoName)
-        .agg(max(col("time")))
-        .head().getTimestamp(0))
+    else {
+      val rows = cat.readRaw(table).filter(col("repo_name") === repoName)
+      val scan = if (cat.fitsOnePart(cat.sourceBytes(rows))) rows.coalesce(1) else rows
+      Option(scan.agg(max(col("time"))).head().getTimestamp(0))
+    }
 
   /** The full §3.1 incremental load for one (tsv, table, repo):
     * read → project → inject → watermark-filter → append (dedup + clustered
@@ -137,14 +142,14 @@ object TsvIngest {
     // within the batch collapses in Catalog.append (ReplacingDedup), T2.
     val incremental = hwm.fold(projected)(m => projected.filter(col("time") > lit(m)))
     // row accounting comes from the appended batch itself (Catalog.append
-    // counts the cached post-dedup batch) — O(batch), not the O(table)
+    // observes the post-dedup count on its write) — O(batch), not the O(table)
     // before/after full scans this used to do, which at 40k-repo scale made
     // every import scan the entire fact table twice.
     // The TSV's length (the scan's file listing holds it, so no extra
     // filesystem call) is the block's measured size: a TSV under
-    // graft.append.partBytes is written as one sorted file (no range
-    // sample job, no range shuffle), a larger one fans out to
-    // partBytes-sized ranges.
+    // graft.append.partBytes is written as one sorted file in one stage
+    // (no dedup shuffle, no range sample job, no range shuffle), a larger
+    // one fans out to partBytes-sized ranges.
     val tsvBytes = tsv.queryExecution.analyzed.stats.sizeInBytes.toLong
     val ingested = cat.append(table.name, incremental, blockBytes = tsvBytes)
     if (deleteTsvAfter) { // S7

@@ -4,6 +4,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
@@ -30,7 +31,7 @@ object ExplainDump {
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
           println(s"[explain] wrote $name")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[explain] $name failed: ${e.getMessage}")
         }
         spark.catalog.clearCache()

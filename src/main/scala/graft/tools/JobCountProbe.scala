@@ -6,6 +6,7 @@
 package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
@@ -30,7 +31,7 @@ object JobCountProbe {
       try {
         (if (t == "events") graft.Tables.events(spark, d)
          else graft.Tables(spark, d, t)).count()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     val selected = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -50,7 +51,7 @@ object JobCountProbe {
       val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)
       val wall0 = System.nanoTime()
       val ok = try { fn(spark, d).count(); true }
-               catch { case e: Throwable =>
+               catch { case NonFatal(e) =>
                  System.err.println(s"[jobcount] $name FAILED: ${e.getMessage}"); false }
       val wall = (System.nanoTime() - wall0) / 1e9
       settle()

@@ -2,6 +2,7 @@
 // call-site trace for ONE query: where do all those jobs come from?
 package graft.tools
 
+import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
@@ -20,7 +21,7 @@ object JobTraceProbe {
       try {
         (if (t == "events") graft.Tables.events(spark, d)
          else graft.Tables(spark, d, t)).count()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     @volatile var trace = false
     spark.sparkContext.addSparkListener(new SparkListener {

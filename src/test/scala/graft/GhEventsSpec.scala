@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.schema.{ChType, GhEventsSchema}
 import graft.sources.{GhEventsIngest, GitImporter}
+import graft.sql.ChDdl
 import graft.streaming.StarsMv
 
 /** End-to-end github_events (create_db.py:67-128): JSONL fixture → declared
@@ -160,6 +161,115 @@ class GhEventsSpec extends SparkSpecBase {
     imp.catalog.read("github_events").count() shouldBe n
     StarsMv.githubStars(imp.catalog.read("github_events")).collect()
       .map(r => (r.getString(0), r.getLong(1))).sorted shouldBe stars.sorted
+  }
+
+  private val starsDdl =
+    """CREATE TABLE github_stars (
+      |    `repo_name` LowCardinality(String),
+      |    `stars`     UInt64
+      |) ENGINE = SummingMergeTree
+      |ORDER BY repo_name""".stripMargin
+
+  private val starsMvDdl =
+    """CREATE MATERIALIZED VIEW github_stars_mv TO github_stars AS
+      |SELECT repo_name, count() AS stars
+      |FROM github_events
+      |WHERE event_type = 'WatchEvent'
+      |GROUP BY repo_name""".stripMargin
+
+  /** `n` events over 17 repositories, every third a WatchEvent, from `start` seconds. */
+  private def batch(n: Int, start: Int): Seq[(String, String)] =
+    (start until start + n).map { i =>
+      val tpe = if (i % 3 == 0) "WatchEvent" else "PushEvent"
+      tpe -> s"acme/r${i % 17}"
+    }
+
+  private def batchJson(evs: Seq[(String, String)], start: Int): Seq[String] =
+    evs.zipWithIndex.map { case ((tpe, repo), j) =>
+      val s = start + j
+      eventJson(tpe, repo, f"2024-03-01 ${s / 3600}%02d:${s / 60 % 60}%02d:${s % 60}%02d",
+        action = if (tpe == "WatchEvent") "started" else "none")
+    }
+
+  private def starsOf(evs: Seq[(String, String)]): Map[String, Long] =
+    evs.filter(_._1 == "WatchEvent").groupBy(_._2).map { case (r, es) => r -> es.size.toLong }
+
+  private def table(cat: graft.catalog.Catalog, name: String): Map[String, Long] =
+    cat.read(name).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("a measured events insert writes its block in one job and its view in one more") {
+    val sc = spark.sparkContext
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    val cat = imp.catalog
+    ChDdl.createTable(cat, starsDdl, tmpDir("stars") + "/github_stars")
+    val first = batch(300, 0)
+    val alone = org.apache.spark.JobTagsOf(sc) {
+      GhEventsIngest.ingest(spark, cat, writeFixture(batchJson(first, 0))) shouldBe 300
+    }
+    ChDdl.createMaterializedView(cat, spark, starsMvDdl)
+    val second = batch(300, 300)
+    val withView = org.apache.spark.JobTagsOf(sc) {
+      GhEventsIngest.ingest(spark, cat, writeFixture(batchJson(second, 300))) shouldBe 300
+    }
+    alone should have size 1
+    withView should have size 2
+    cat.read("github_events").count() shouldBe 600
+    // the view saw only the insert after its creation (no POPULATE)
+    table(cat, "github_stars") shouldBe starsOf(second)
+  }
+
+  test("two attached views over a measured insert both see the whole block") {
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    val cat = imp.catalog
+    val root = tmpDir("views")
+    ChDdl.createTable(cat, starsDdl, s"$root/github_stars")
+    ChDdl.createTable(cat, starsDdl.replace("github_stars", "github_pushes")
+      .replace("stars", "pushes"), s"$root/github_pushes")
+    ChDdl.createMaterializedView(cat, spark, starsMvDdl)
+    ChDdl.createMaterializedView(cat, spark, starsMvDdl
+      .replace("github_stars", "github_pushes").replace("stars", "pushes")
+      .replace("WatchEvent", "PushEvent"))
+    val evs = batch(400, 0) ++ batch(200, 400)
+    GhEventsIngest.ingest(spark, cat, writeFixture(batchJson(evs.take(400), 0))) shouldBe 400
+    GhEventsIngest.ingest(spark, cat, writeFixture(batchJson(evs.drop(400), 400))) shouldBe 200
+    table(cat, "github_stars") shouldBe starsOf(evs)
+    table(cat, "github_pushes") shouldBe
+      starsOf(evs.collect { case ("PushEvent", r) => ("WatchEvent", r) })
+    // each target took the block's measured size: one sorted file per insert
+    cat.readRaw("github_stars").inputFiles should have size 2
+    cat.readRaw("github_pushes").inputFiles should have size 2
+  }
+
+  test("a view that joins another table is not sized by the inserted block") {
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    val cat = imp.catalog
+    val root = tmpDir("views")
+    ChDdl.createTable(cat,
+      """CREATE TABLE owners (`repo_name` String, `owner` String)
+        |ENGINE = MergeTree ORDER BY repo_name""".stripMargin, s"$root/owners")
+    import spark.implicits._
+    cat.append("owners", (0 until 17).map(i => (s"acme/r$i", s"o${i % 5}")).toDF("repo_name", "owner"))
+    ChDdl.createTable(cat, starsDdl, s"$root/github_stars")
+    ChDdl.createTable(cat, starsDdl.replace("github_stars", "owner_stars")
+      .replace("repo_name", "owner"), s"$root/owner_stars")
+    ChDdl.createMaterializedView(cat, spark, starsMvDdl)
+    ChDdl.createMaterializedView(cat, spark,
+      """CREATE MATERIALIZED VIEW owner_stars_mv TO owner_stars AS
+        |SELECT o.owner AS owner, count() AS stars
+        |FROM github_events JOIN owners o ON github_events.repo_name = o.repo_name
+        |WHERE event_type = 'WatchEvent'
+        |GROUP BY o.owner""".stripMargin)
+    val evs = batch(300, 0)
+    GhEventsIngest.ingest(spark, cat, writeFixture(batchJson(evs, 0))) shouldBe 300
+    val byOwner = starsOf(evs).toSeq
+      .groupBy { case (r, _) => s"o${r.stripPrefix("acme/r").toInt % 5}" }
+      .map { case (o, rs) => o -> rs.map(_._2).sum }
+    table(cat, "owner_stars") shouldBe byOwner
+    table(cat, "github_stars") shouldBe starsOf(evs)
+    // the block-only view's target is one sorted file; the join's output
+    // keeps the unmeasured range layout
+    cat.readRaw("github_stars").inputFiles should have size 1
+    cat.readRaw("owner_stars").inputFiles.length should be > 1
   }
 
   test("compact() preserves github_events under Append semantics") {

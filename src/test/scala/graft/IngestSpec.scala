@@ -233,10 +233,44 @@ class IngestSpec extends SparkSpecBase {
     tables.foreach(t => withClue(s"$t: ") { dataFiles(imp, t) should have size 2 })
   }
 
+  test("a small import runs one job per table for its mark and one for its write; so does its refresh") {
+    val sc = spark.sparkContext
+    val dir = tmpDir("ingest")
+    def load(hash: String => String, times: Seq[String]): Unit = {
+      val hs = times.indices.map(i => hash(f"$i%03d"))
+      writeTsv(dir, "commits.tsv", hs.zip(times).map { case (h, t) => commitRow(h, t) })
+      writeTsv(dir, "file_changes.tsv",
+        hs.zip(times).map { case (h, t) => fileChangeRow("Add", s"$h.scala", h, t) })
+      writeTsv(dir, "line_changes.tsv",
+        hs.zip(times).zipWithIndex.map { case ((h, t), i) => lineChangeRow(i, h, t) })
+    }
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    // another repository first: every table holds data files when the
+    // measured import reads its high-water marks
+    load(h => s"o$h", Seq("2024-01-01 09:00:00"))
+    imp.importRepo("acme/other", dir)
+    load(h => s"c$h", (1 to 40).map(i => f"2024-01-01 10:$i%02d:00"))
+    val importJobs = org.apache.spark.JobTagsOf(sc) { imp.importRepo("acme/repo", dir) }
+    // the refresh re-sends half the old rows (dropped by the mark) and adds new ones
+    load(h => s"d$h", (21 to 40).map(i => f"2024-01-01 10:$i%02d:00") ++
+      (1 to 20).map(i => f"2024-01-02 10:$i%02d:00"))
+    val refreshJobs = org.apache.spark.JobTagsOf(sc) { imp.importRepo("acme/repo", dir) }
+    importJobs should have size 6
+    refreshJobs should have size 6
+    Seq("commits", "file_changes", "line_changes").foreach { t =>
+      withClue(s"$t: ") {
+        imp.catalog.read(t).filter(col("repo_name") === "acme/repo").count() shouldBe 60
+      }
+    }
+  }
+
   test("a TSV several times graft.append.partBytes still writes several range-sorted files") {
     val dir = tmpDir("ingest")
     val rows = (1 to 200).map(i => commitRow(f"c$i%04d", f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"))
-    val tsvBytes = Files.size(Paths.get(writeTsv(dir, "commits.tsv", rows)))
+    // every fifth key sent again at the end of the file: the exchange path
+    // collapses duplicates that land in different scan ranges
+    val resent = rows.zipWithIndex.collect { case (r, i) if i % 5 == 0 => r }
+    val tsvBytes = Files.size(Paths.get(writeTsv(dir, "commits.tsv", rows ++ resent)))
     val partBytes = tsvBytes / 6
     val imp = new GitImporter(spark, tmpDir("wh"))
     spark.conf.set("graft.append.partBytes", partBytes.toString)
@@ -255,6 +289,45 @@ class IngestSpec extends SparkSpecBase {
       case _ => ()
     }
     keysPerFile.map(_.size).sum shouldBe 200
+    keysPerFile.flatten.distinct should have size 200
+  }
+
+  test("a one-part TSV whose duplicate keys sit far apart dedups like the exchange path") {
+    val dir = tmpDir("ingest")
+    val rows = (1 to 300).map(i => commitRow(f"c$i%04d", f"2024-01-01 ${i / 60}%02d:${i % 60}%02d:00"))
+    // the first and last rows of the file repeat keys from the other end
+    writeTsv(dir, "commits.tsv", rows.takeRight(3) ++ rows ++ rows.take(3))
+    val onePart = new GitImporter(spark, tmpDir("wh"))
+    onePart.importRepo("acme/repo", dir)("commits") shouldBe 300L
+    val ranged = new GitImporter(spark, tmpDir("wh"))
+    spark.conf.set("graft.append.partBytes", "4096")
+    try ranged.importRepo("acme/repo", dir)("commits") shouldBe 300L
+    finally spark.conf.unset("graft.append.partBytes")
+    dataFiles(onePart, "commits") should have size 1
+    dataFiles(ranged, "commits").size should be > 1
+    contents(onePart, "commits") shouldBe contents(ranged, "commits")
+    contents(onePart, "commits").distinct should have size 300
+  }
+
+  test("the high-water mark over files larger than graft.append.partBytes equals the one-partition mark") {
+    val imp = new GitImporter(spark, tmpDir("wh"))
+    Seq("acme/one" -> 1, "acme/two" -> 2, "acme/one" -> 3).foreach { case (repo, day) =>
+      val dir = tmpDir("ingest")
+      writeTsv(dir, "commits.tsv", (1 to 50).map(i =>
+        commitRow(f"$day-$i%03d", f"2024-01-0$day 10:$i%02d:00")))
+      imp.importRepo(repo, dir)
+    }
+    val onePart = Seq("acme/one", "acme/two", "acme/none")
+      .map(r => TsvIngest.highWaterMark(imp.catalog, "commits", r))
+    val tableBytes = dataFiles(imp, "commits").map(f => Files.size(Paths.get(f))).sum
+    spark.conf.set("graft.append.partBytes", (tableBytes / 4).toString)
+    val ranged =
+      try Seq("acme/one", "acme/two", "acme/none")
+        .map(r => TsvIngest.highWaterMark(imp.catalog, "commits", r))
+      finally spark.conf.unset("graft.append.partBytes")
+    ranged shouldBe onePart
+    onePart.map(_.map(_.toString)) shouldBe
+      Seq(Some("2024-01-03 10:50:00.0"), Some("2024-01-02 10:50:00.0"), None)
   }
 
   test("importRepo's concurrent loads carry the caller's job tag on every job") {
