@@ -186,15 +186,14 @@ private[graft] object AnnIndex {
 
   // ---- maintenance (the insert trigger) ---------------------------------
 
-  /** Encode every data file lacking an `.annenc` marker into the codes
-    * companion. Called from the Catalog's post-write index hook — the
-    * same missing-sidecar discovery as the [[SkipIndex]] kinds.
+  /** Encode every listed data file lacking an `.annenc` marker into the
+    * codes companion. Called from the Catalog's write path — the same
+    * missing-sidecar discovery as the [[SkipIndex]] kinds.
     */
-  def maintain(spark: SparkSession, t: TableDef, dir: String): Unit = {
+  def maintain(spark: SparkSession, t: TableDef, listing: Listing): Unit = {
     import org.apache.hadoop.fs.Path
     val a = t.annIndex.get
-    val f = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val listing = Listing.of(f, Seq(dir))
+    val f = new Path(t.path).getFileSystem(spark.sessionState.newHadoopConf())
     val missing = listing.files.map(_.getPath)
       .filter(p => !listing.has(marker(p, a.column)))
       .sortBy(_.toString) // deterministic training-sample order

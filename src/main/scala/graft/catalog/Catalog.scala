@@ -151,35 +151,12 @@ case object NullEngine extends EngineSemantics
   */
 final case class JoinAny(keys: Seq[String]) extends EngineSemantics
 
-/** Physical layout of a table directory — how compact() commits its swap.
-  *
-  *   - [[FlatDir]]: one flat Parquet dir; compact rewrites to a sibling and
-  *     swaps via two atomic DIRECTORY renames. Right for HDFS/POSIX where
-  *     directory rename is an atomic metadata op; has a two-rename crash
-  *     window that [[Catalog]] recovers on every entry point.
-  *   - [[Versioned]]: versioned subdirs (`v0`, `v1`, …) under the table path
-  *     plus a `_CURRENT` manifest file naming the live one. Compact writes
-  *     the merged output to the NEXT version and commits by flipping the
-  *     one-line manifest — a single small-object write, the only commit
-  *     primitive object stores (no atomic dir rename) offer. There is no
-  *     window where the table is unreadable: a crash before the flip leaves
-  *     readers on the old version and the orphan next-version dir is
-  *     garbage-collected by the next compact; a crash during the flip
-  *     (manifest momentarily absent) falls back to the highest complete
-  *     version — which is correct because the manifest is only ever removed
-  *     after its successor's data is fully written.
-  */
-sealed trait TableLayout
-case object FlatDir extends TableLayout
-case object Versioned extends TableLayout
-
 final case class TableDef(
     name: String,
     path: String,
     schema: StructType,
     sortKeys: Seq[String],
     semantics: EngineSemantics,
-    layout: TableLayout = FlatDir,
     partitionKeys: Seq[String] = Nil,
     indexCols: Seq[String] = Nil,
     minmaxCols: Seq[String] = Nil,
@@ -234,10 +211,10 @@ final case class TableDef(
     // to base scans), and queries are AUTO-rewritten onto it by the
     // registered optimizer rules ([[graft.plans.RollupRewrite]] /
     // [[graft.plans.SortedProjectionRewrite]]); queries never opt in.
-    // Plain Append + FlatDir + unpartitioned tables only (merging
-    // engines fold at read time, so an aggregate over their scan is
-    // never a plain rollup of stored rows; the rules also require a
-    // single-root scan). See [[Catalog.materializeProjection]] for the
+    // Plain Append + unpartitioned tables only (merging engines fold at
+    // read time, so an aggregate over their scan is never a plain rollup
+    // of stored rows; the rules answer only a scan of the whole live
+    // table). See [[Catalog.materializeProjection]] for the
     // crash-recovery contract.
     projections: Seq[ProjectionSpec] = Nil,
     // CH `TTL col + INTERVAL n unit [GROUP BY … SET …]` declared in the
@@ -364,62 +341,17 @@ final class Catalog(spark: SparkSession) {
     * is a multi-step read-modify-write (read a watermark, append, reclaim)
     * that must serialize as a unit against other writers in this process.
     * Reentrant with the lock `append`/`mutate` take internally. Cross-JVM
-    * writers are NOT excluded by this — they serialize through the
-    * storage-level artifacts (compact lock, manifest CAS) only.
+    * writers are NOT excluded by this — they serialize through the table
+    * log's publish step only ([[TableLog.commit]]).
     */
   def withWriteLock[T](name: String)(body: => T): T =
     writeLock(name).synchronized(body)
 
-  // Identifies this process in cross-process artifacts (manifest tmp names,
-  // compaction lock contents) so two JVMs sharing a warehouse can never
-  // stage into the same file — the cross-process analog of writeLock.
-  private val processTag: String =
-    s"${ProcessHandle.current().pid}-${java.util.UUID.randomUUID().toString.take(8)}"
-
-  // A compaction lock this much older than now is a crashed holder's
-  // leftover: stealable. Compacts are minutes, not half-hours.
+  // A commit directory nothing has been written into for this long is a
+  // crashed writer's leftover: the next rewrite's sweep collects it (a
+  // live writer's newest file is its heartbeat). Commits are minutes, not
+  // half-hours.
   private val staleLockMs: Long = 30L * 60 * 1000
-
-  /** Cross-process compaction mutex: an O_EXCL-created lock file beside the
-    * table (create-fails-if-exists is atomic on POSIX/NFS/HDFS — the same
-    * primitive as WorkQueue's claim CAS). Within a process the per-table
-    * writeLock already serializes; this extends the exclusion to a fleet of
-    * containers sharing one warehouse (deploy/README.md). A lock whose
-    * mtime is older than [[staleLockMs]] is a crashed holder's leftover and
-    * is stolen; a live conflict fails loudly rather than interleaving two
-    * compacts' GC/flip sequences.
-    */
-  private def withCompactLock[T](t: TableDef)(body: => T): T = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    val lock = new Path(t.path + ".compact.lock")
-    def tryAcquire(): Boolean =
-      try {
-        val out = f.create(lock, false) // no-overwrite create = atomic test-and-set
-        try out.write(processTag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    val acquired = tryAcquire() || {
-      val stale =
-        try System.currentTimeMillis() - f.getFileStatus(lock).getModificationTime > staleLockMs
-        catch { case _: java.io.FileNotFoundException => true } // holder just released
-      // ATOMIC steal: rename the stale lock onto a process-unique tombstone
-      // — exactly one competitor's rename succeeds, so two stealers can
-      // never both "delete and re-create" and end up compacting
-      // concurrently. (A compact genuinely running past staleLockMs would
-      // be stolen from — compacts are minutes; raise staleLockMs before
-      // deploying hour-long ones.)
-      val tombstone = new Path(t.path + s".compact.lock.stale.$processTag")
-      val stole = stale &&
-        (try f.rename(lock, tombstone) catch { case _: java.io.IOException => false })
-      if (stole) f.delete(tombstone, false)
-      stole && tryAcquire()
-    }
-    if (!acquired) throw new IllegalStateException(
-      s"${t.name}: compaction lock $lock held by another live process")
-    try body finally f.delete(lock, false)
-  }
 
   /** Parquet codecs Spark writes without extra jars — the CREATE TABLE
     * `CODEC(...)` axis (ClickHouse defaults LZ4 and offers ZSTD for cold
@@ -473,7 +405,7 @@ final class Catalog(spark: SparkSession) {
         s"${t.name}: ANN indexes require Append semantics (a merge view " +
           "would re-key rows under the index)")
     }
-    // projections: plain-Append FlatDir unpartitioned tables only (the
+    // projections: plain-Append unpartitioned tables only (the
     // TableDef doc), one per rewrite rule (each rule's registry is keyed
     // by the base path), every referenced column a schema column
     if (t.projections.nonEmpty) {
@@ -481,9 +413,8 @@ final class Catalog(spark: SparkSession) {
         s"${t.name}: projections need plain MergeTree semantics — a " +
           "merging engine's stored rows are partial states, and a rollup " +
           "of partials is not a rollup of the merged view")
-      require(t.layout == FlatDir && t.partitionKeys.isEmpty,
-        s"${t.name}: projections are maintained per data directory — " +
-          "FlatDir unpartitioned tables only")
+      require(t.partitionKeys.isEmpty,
+        s"${t.name}: projections are maintained for unpartitioned tables only")
       require(t.projections.map(_.name).distinct.length == t.projections.length,
         s"${t.name}: duplicate projection name")
       require(t.projections.count(_.isInstanceOf[SortProjection]) <= 1,
@@ -649,7 +580,7 @@ final class Catalog(spark: SparkSession) {
     // constraints + materialized columns must RESOLVE at declaration —
     // an unparseable/non-boolean constraint or a materialized expression
     // referencing a missing column would otherwise fail executor-side on
-    // the first insert (for FlatDir, after staging work is already done).
+    // the first insert, after staging work is already done.
     // Resolution is checked against an empty frame of the schema: plan
     // analysis only, no job runs.
     if (t.constraints.nonEmpty || t.materializedCols.nonEmpty) {
@@ -694,7 +625,9 @@ final class Catalog(spark: SparkSession) {
     // "chDefault"): validated like MATERIALIZED (see [[checkDefault]])
     t.schema.fields.filter(_.metadata.contains("chDefault")).foreach(f =>
       checkDefault(t, f.name, f.metadata.getString("chDefault"), t.name))
-    tables.putIfAbsent(t.name, t)
+    // a directory an older build wrote is adopted, and a crashed commit's
+    // partition moves settled, before anything is written into it
+    if (tables.putIfAbsent(t.name, t).isEmpty) log(t).recover(t.name)
     // persist the WINNING definition: when putIfAbsent lost to an existing
     // registration, writing the argument def would leave a _TABLE sidecar
     // describing semantics that were never in effect — attach() after a
@@ -741,16 +674,16 @@ final class Catalog(spark: SparkSession) {
       p match {
         case AggProjection(_, dims, sums) =>
           graft.plans.RollupRewrite.register(spark,
-            graft.plans.ProjectionDef(dataPath(t), pp, dims, "__cnt",
+            graft.plans.ProjectionDef(t.path, pp, dims, "__cnt",
               sums.map(c => c -> s"__sum_$c").toMap))
         case SortProjection(_, key) =>
           graft.plans.SortedProjectionRewrite.register(spark,
-            graft.plans.SortedProjectionDef(dataPath(t), pp, key))
+            graft.plans.SortedProjectionDef(t.path, pp, key))
       }
     }
 
   private def projPath(t: TableDef, proj: String): String =
-    new org.apache.hadoop.fs.Path(dataPath(t), s"_proj_$proj").toString
+    new org.apache.hadoop.fs.Path(t.path, s"_proj_$proj").toString
 
   // ---- persisted table metadata (ATTACH TABLE analog) -------------------
   //
@@ -793,7 +726,6 @@ final class Catalog(spark: SparkSession) {
       ("name" -> t.name) ~
       ("schema" -> JsonMethods.parse(t.schema.json)) ~
       ("sort_keys" -> t.sortKeys) ~
-      ("layout" -> t.layout.toString) ~
       ("partition_keys" -> t.partitionKeys) ~
       ("index_cols" -> t.indexCols) ~
       ("minmax_cols" -> t.minmaxCols) ~
@@ -837,22 +769,15 @@ final class Catalog(spark: SparkSession) {
     JsonMethods.compact(JsonMethods.render(obj))
   }
 
-  /** Write the sidecar into `dir` (normally the table root; compactFlat
-    * passes its swap staging dir so the sidecar travels atomically with
-    * the directory rename). Best-effort ONLY at registration time —
-    * inside a swap the caller lets failures abort the swap instead.
+  /** Write the sidecar into the table root — best-effort: the live
+    * in-memory definition is authoritative within the process.
     */
-  private def writeTableDef(t: TableDef, dir: String): Unit = {
-    val f = fs(t)
-    f.mkdirs(new org.apache.hadoop.fs.Path(dir))
-    val out = f.create(new org.apache.hadoop.fs.Path(dir, "_TABLE"), true)
-    try out.write(tableDefJson(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   private def persistTableDef(t: TableDef): Unit =
-    try writeTableDef(t, t.path)
-    catch { case scala.util.control.NonFatal(_) => () } // metadata best-effort
+    try {
+      val out = fs(t).create(tableDefPath(t), true)
+      try out.write(tableDefJson(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Re-register a table from its persisted `_TABLE` definition — the
     * ATTACH TABLE analog. Returns the reconstructed def, registered in
@@ -915,10 +840,6 @@ final class Catalog(spark: SparkSession) {
       case other => throw new IllegalArgumentException(
         s"attach: unknown semantics under $path ($other)")
     }
-    val layout = str("layout") match {
-      case "Versioned" => Versioned
-      case _ => FlatDir
-    }
     val name = str("name")
     val already = tables.get(name)
     already.foreach { existing =>
@@ -957,7 +878,7 @@ final class Catalog(spark: SparkSession) {
         case _ => Nil
       }
     createTable(TableDef(name, path, declared, list(j \ "sort_keys"), sem,
-      layout, list(j \ "partition_keys"), list(j \ "index_cols"),
+      list(j \ "partition_keys"), list(j \ "index_cols"),
       list(j \ "minmax_cols"), codec, pairList(j \ "constraints"),
       pairList(j \ "materialized_cols"),
       // absent in pre-token-index / pre-column-codec sidecars → none
@@ -1031,9 +952,9 @@ final class Catalog(spark: SparkSession) {
         writeLock(name).synchronized {
           t.projections.foreach {
             case _: AggProjection =>
-              graft.plans.RollupRewrite.unregister(dataPath(t))
+              graft.plans.RollupRewrite.unregister(t.path)
             case _: SortProjection =>
-              graft.plans.SortedProjectionRewrite.unregister(dataPath(t))
+              graft.plans.SortedProjectionRewrite.unregister(t.path)
           }
           detach(name)
           rowPolicies.remove(name)
@@ -1455,140 +1376,16 @@ final class Catalog(spark: SparkSession) {
   def get(name: String): TableDef =
     tables.getOrElse(name, throw new NoSuchElementException(s"table $name"))
 
-  // through the path's own Hadoop FileSystem, like compact(): a
-  // java.io.File probe would answer false for every non-local warehouse
-  def exists(name: String): Boolean = tables.contains(name) && {
-    val t = get(name)
-    val f = fs(t)
-    dataPaths(t).exists(p => f.exists(new org.apache.hadoop.fs.Path(p)))
-  }
+  /** Whether `name` has committed anything: its log has a head. */
+  def exists(name: String): Boolean =
+    tables.contains(name) && log(get(name)).head().n >= 0
 
   private def fs(t: TableDef): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(t.path)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def manifestPath(t: TableDef) =
-    new org.apache.hadoop.fs.Path(t.path, "_CURRENT")
-
-  /** Live version dir name for a [[Versioned]] table. Resolution order:
-    * the `_CURRENT` manifest; else the highest-numbered complete version
-    * (the manifest is only ever absent mid-flip, i.e. AFTER its successor's
-    * data is fully written); else `v0` for a not-yet-written table.
-    */
-  private def currentVersion(t: TableDef): String = {
-    val f = fs(t)
-    val m = manifestPath(t)
-    if (f.exists(m)) {
-      val in = f.open(m)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    } else listVersions(t).sortBy(versionNum).lastOption.getOrElse("v0")
-  }
-
-  private def versionNum(v: String): Long = v.drop(1).toLong
-
-  private def listVersions(t: TableDef): Seq[String] = {
-    val f = fs(t)
-    val base = new org.apache.hadoop.fs.Path(t.path)
-    if (!f.exists(base)) Seq.empty
-    else f.listStatus(base).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.matches("v\\d+"))
-  }
-
-  /** Physical Parquet directory all reads/appends target. */
-  private def dataPath(t: TableDef): String = t.layout match {
-    case FlatDir => t.path
-    case Versioned =>
-      new org.apache.hadoop.fs.Path(t.path, currentVersion(t)).toString
-  }
-
-  // ---- multi-writer append segments (Versioned layout) -----------------
-  //
-  // Concurrent APPENDS from different processes to one Versioned table
-  // never share an output directory: each append stages its batch into a
-  // process-unique `seg-<tag>` dir beside the version dirs, then commits
-  // it with ONE atomic operation — an O_EXCL create of a marker file under
-  // `_segs/` (the same create-fails-if-exists primitive as the compaction
-  // lock and the queue claim CAS; on an object store, a conditional PUT).
-  // Add-only markers mean two writers cannot lose each other's update and
-  // nothing ever aborts; a crash before the marker leaves an invisible
-  // stage dir that compaction age-GCs. Readers see version dir + committed
-  // segments; compact folds the segments it SNAPSHOTTED into the next
-  // version and unmarks exactly those, so a segment committed mid-compact
-  // stays visible throughout. This promotes the deploy/README.md
-  // "manifest-flip race" contract from docs to a real commit protocol.
-
-  private def segMarkerDir(t: TableDef) =
-    new org.apache.hadoop.fs.Path(t.path, "_segs")
-
-  /** Committed segment dirs, by marker listing. `.folded` tombstones (a
-    * previous compact's grace-window bookkeeping) are not live segments.
-    */
-  private def committedSegments(t: TableDef): Seq[String] = {
-    val f = fs(t)
-    val md = segMarkerDir(t)
-    if (!f.exists(md)) Seq.empty
-    else f.listStatus(md).toSeq.filter(_.isFile).map(_.getPath.getName)
-      .filter(!_.endsWith(".folded"))
-      .filter(s => f.exists(new org.apache.hadoop.fs.Path(t.path, s)))
-      .sorted
-  }
-
-  /** Segment names a version dir absorbed when compaction wrote it — its
-    * `_FOLDED` sidecar, written BEFORE the manifest flips to the version.
-    * Readers subtract this set from the committed-segment list, which
-    * makes the fold exclusion ATOMIC with version resolution: whichever
-    * version a reader lands on (manifest or highest-complete fallback),
-    * the segments that version already contains are never ALSO scanned.
-    * Without it, the window between manifest flip and segment unmark —
-    * and permanently, a crash inside that window — double-counted folded
-    * rows on Append tables (no merge view to collapse them) and re-folded
-    * them into the next compact's output.
-    */
-  private def foldedOf(t: TableDef, version: String): Set[String] = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    val p = new Path(new Path(t.path, version), "_FOLDED")
-    if (!f.exists(p)) Set.empty
-    else {
-      val in = f.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().map(_.trim).filter(_.nonEmpty).toSet
-      finally in.close()
-    }
-  }
-
-  /** Every directory a read must scan: live version dir + committed
-    * segments it has not absorbed (Versioned), or the flat dir.
-    *
-    * Resolution order is deliberate — segments FIRST, manifest second.
-    * Compaction commits in the opposite order (flip manifest, then unmark
-    * the folded segments), so a reader that straddles the flip resolves
-    * either the old consistent view or the new version plus a just-folded
-    * segment — which [[foldedOf]] then excludes, for EVERY semantics
-    * including Append. The reverse order would instead transiently DROP
-    * the folded rows (old version, markers already gone), which nothing
-    * can repair.
-    */
-  private def dataPaths(t: TableDef): Seq[String] = t.layout match {
-    case FlatDir => Seq(t.path)
-    case Versioned =>
-      // segment listing must happen BEFORE the manifest read (see the doc
-      // comment above): a reader that straddles a concurrent compact then
-      // resolves either old-consistent or new-version-plus-excluded-segment
-      val segNames = committedSegments(t)
-      val curV = currentVersion(t)
-      val segs = segNames
-        .filterNot(foldedOf(t, curV))
-        .map(s => new org.apache.hadoop.fs.Path(t.path, s).toString)
-      val cur = new org.apache.hadoop.fs.Path(t.path, curV).toString
-      // a fresh table whose only data is appended segments has no version
-      // dir yet — passing the nonexistent dir to the scan would fail it
-      if (segs.nonEmpty && !fs(t).exists(new org.apache.hadoop.fs.Path(cur))) segs
-      else cur +: segs
-  }
+  /** The table's commit log — the one record of its live files. */
+  private def log(t: TableDef): TableLog = new TableLog(fs(t), t.path, t.partitionKeys)
 
   // ---- materialized views as insert triggers ---------------------------
   //
@@ -1661,9 +1458,8 @@ final class Catalog(spark: SparkSession) {
   // ClickHouse `CREATE MATERIALIZED VIEW … REFRESH EVERY n SECONDS`:
   // scheduled FULL recompute with an atomic swap — the reporting-rollup
   // workhorse for queries incremental maintenance can't express (joins,
-  // window funnels). The commit rides the SAME crash-safe machinery as
-  // mutations (FlatDir two-rename / Versioned manifest flip via
-  // [[mutate]]), so a crashed refresh leaves the PRIOR contents fully
+  // window funnels). The commit rides the SAME crash-safe rewrite commit
+  // as mutations ([[mutate]]), so a crashed refresh leaves the PRIOR contents fully
   // readable and never a half-written target; readers between refreshes
   // serve the last committed version atomically (CH's
   // APPEND-less refresh semantics). Time is an EXPLICIT argument
@@ -1688,8 +1484,7 @@ final class Catalog(spark: SparkSession) {
     * CHECK-constraint discipline: schema drift fails at CREATE, loudly,
     * not at the 3 a.m. refresh). Nothing materializes until the first
     * [[refreshView]] / [[refreshDueViews]]. The target belongs to the
-    * view: concurrent appends to it would be swapped away by the next
-    * refresh, exactly like writing into a CH refreshable MV's target.
+    * view: appends to it are replaced by the next refresh, exactly like writing into a CH refreshable MV's target.
     */
   def createRefreshableView(viewName: String, target: String,
                             intervalMs: Long,
@@ -1729,7 +1524,7 @@ final class Catalog(spark: SparkSession) {
       val result = d.query(spark)
       // a target that has never materialized data takes the append path
       // (mutate on a data-less table validates but writes nothing);
-      // every later refresh is a full copy-on-write swap
+      // every later refresh is a full copy-on-write rewrite
       if (read(d.target).isEmpty) append(d.target, result)
       else mutate(d.target, _ => result, s"REFRESH VIEW $viewName")
       st.lastRefreshMs = nowMs
@@ -2063,8 +1858,8 @@ final class Catalog(spark: SparkSession) {
     * block — both INLINE in the block's plan, zero extra passes:
     * constraints guard the first column with a conditional `raise_error`
     * (the Collapsing sign pattern), so a violation fails the write JOB,
-    * and Spark's commit protocol (FlatDir) / the segment marker
-    * (Versioned) makes the failed insert atomically invisible. SQL CHECK
+    * and the commit never publishes, so the failed insert is invisible
+    * (its staged files are collected). SQL CHECK
     * semantics: a NULL-valued constraint passes.
     */
   private def materializeAndCheck(t: TableDef, batch0: DataFrame): DataFrame = {
@@ -2153,22 +1948,12 @@ final class Catalog(spark: SparkSession) {
     val sorted = clusteredFor(t, preMergedBlock(t, filled),
       blockBytes = blockBytes)
     val n = writeLock(name).synchronized {
-      // an append into a mid-swap table would recreate it with just this
-      // batch, and the next compact's "stale leftovers" delete would then
-      // discard the original data for good — finish the swap first
-      recoverInterruptedSwap(t)
-      // Versioned: pin the manifest at first write so "manifest absent"
-      // always implies "a fully-written successor exists" (the fallback's
-      // soundness condition — see compactVersioned)
-      if (t.layout == Versioned && !fs(t).exists(manifestPath(t)))
-        writeManifest(t, currentVersion(t))
       // one execution of the clustered block (the write itself); the
-      // returned count is OBSERVED on the write plan (see writeData) —
-      // the old cache+count pre-pass paid a second materialization per
-      // append, and the round-14 footer read-back paid one driver
-      // round-trip per written file
-      if (t.layout == Versioned) commitSegment(t, sorted)
-      else writeData(t, sorted, dataPath(t), mode = "append")._1
+      // returned count is OBSERVED on the write plan (see writeData)
+      val (rows, _, block) = commitWrite(t, log(t).head(), sorted)((h, files) =>
+        Some(h.copy(files = h.files ++ files))).get
+      block.foreach(maintainProjections(t, _, rewrite = false))
+      rows
     }
     // MV fan-out AFTER the base commit and OUTSIDE its lock (a target's
     // append takes its own lock; holding the source's across both invites
@@ -2244,93 +2029,43 @@ final class Catalog(spark: SparkSession) {
     }
 
   /** ClickHouse `insert_deduplication_token`: an append that commits AT
-    * MOST ONCE per `token`. Rides the Versioned segment-marker commit —
-    * the segment dir name is derived from the token, so the marker's
-    * O_EXCL create IS the dedup test-and-set: a replayed block (client
-    * retry, crashed ingestion loop, [[graft.streaming.DirTail]]'s
-    * roll-forward) sees the marker and is DROPPED, not double-inserted.
-    * Returns Some(rowCount) when this call committed the block, None when
-    * the token had already landed (the block is untouched and the caller
-    * may treat the insert as done — CH returns OK for deduped inserts).
+    * MOST ONCE per `token`. The table log's head records the tokens it
+    * committed, and the commit publishes only while the head does not hold
+    * the token, so a replayed block (client retry, crashed ingestion loop,
+    * [[graft.streaming.DirTail]]'s roll-forward) is DROPPED, not
+    * double-inserted — also when another process commits the same token
+    * first. Returns Some(rowCount) when this call committed the block,
+    * None when the token had already landed (the block is untouched and
+    * the caller may treat the insert as done — CH returns OK for deduped
+    * inserts).
     *
-    * Dedup window caveat, exactly ClickHouse's: a compact FOLDS the
-    * segment into the next version and retires its marker, after which
-    * the token can land again — like `insert_deduplication_window`
-    * bounding CH's block-hash log. Callers needing unbounded replay
-    * protection must track delivery themselves (DirTail's offsets commit
-    * does) and use this as the crash-window guard, not the ledger.
-    *
-    * Single writer per TOKEN assumed (concurrent same-token writers may
-    * both stage into the deterministic dir; the marker CAS still admits
-    * only one, but the loser can corrupt the winner's staged files on an
-    * overlapped write — DirTail's one-consumer-per-source discipline).
+    * Dedup window caveat, exactly ClickHouse's: a rewrite (compact,
+    * mutation) folds the token's files and keeps refusing the token until
+    * the next rewrite, after which it can land again — like
+    * `insert_deduplication_window` bounding CH's block-hash log. Callers
+    * needing unbounded replay protection must track delivery themselves
+    * (DirTail's offsets commit does) and use this as the crash-window
+    * guard, not the ledger.
     */
   def appendIdempotent(name: String, batch: DataFrame,
                        token: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
     val t = get(name)
-    require(t.layout == Versioned,
-      s"$name: appendIdempotent rides the segment-marker commit " +
-        "(Versioned layout only)")
     require(t.semantics != NullEngine,
       s"$name: ENGINE=Null discards data — a dedup token has nothing " +
         "to deduplicate against")
-    val san = token.replaceAll("[^A-Za-z0-9._-]", "_")
-    require(san.nonEmpty && san.length <= 180,
-      s"$name: dedup token must be 1-180 chars after sanitization")
-    // the sanitized stem is for operator legibility only; the sha1 prefix
-    // of the RAW token makes the segment name collision-free — without it
-    // distinct tokens like "a b" and "a_b" collapse to one segment and the
-    // second block is silently swallowed as a replay
-    val rawHash = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(5).map("%02x".format(_)).mkString
-    val seg = s"seg-tok-$san-$rawHash"
+    require(token.nonEmpty, s"$name: empty dedup token")
     val committed = writeLock(name).synchronized {
-      recoverInterruptedSwap(t)
-      val f = fs(t)
-      val marker = new Path(segMarkerDir(t), seg)
-      // marker OR folded tombstone present → the block already landed
-      // (and possibly was already compacted into a version)
-      if (f.exists(marker) || f.exists(new Path(segMarkerDir(t), seg + ".folded")))
-        None
+      val h0 = log(t).head()
+      if (h0.holds(token)) None
       else {
-        if (!f.exists(manifestPath(t))) writeManifest(t, currentVersion(t))
-        val segPath = new Path(t.path, seg)
-        // a crashed prior attempt's partial stage is invisible (no
-        // marker) — clear and restage
-        if (f.exists(segPath)) f.delete(segPath, true)
         val filled = materializeAndCheck(t, fillOmittedDefaults(t, batch))
-        val sorted = clusteredFor(t, preMergedBlock(t, filled))
-        val cnt = writeData(t, sorted, segPath.toString)._1
-        f.mkdirs(segMarkerDir(t))
-        val won =
-          try {
-            val out = f.create(marker, false) // atomic commit + dedup CAS
-            try out.write(processTag.getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-            true
-          } catch {
-            // ONLY an already-exists outcome is "lost the race": a
-            // transient IOException must propagate so the caller
-            // retries — swallowing it as a loss deletes the staged
-            // segment and returns None, and a caller like DirTail then
-            // advances committed offsets past bytes never ingested
-            case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-            case _: java.nio.file.FileAlreadyExistsException => false
-            case e: java.io.IOException =>
-              if (f.exists(marker)) false else throw e
+        commitWrite(t, h0, clusteredFor(t, preMergedBlock(t, filled)))((h, files) =>
+          if (h.holds(token)) None
+          else Some(h.copy(files = h.files ++ files, tokens = h.tokens + token)))
+          .map { case (cnt, _, block) =>
+            block.foreach(maintainProjections(t, _, rewrite = false))
+            (cnt, filled)
           }
-        if (won) {
-          f.delete(new Path(segMarkerDir(t), seg + ".orphan"), false)
-          Some((cnt, filled))
-        } else {
-          // a cross-process racer committed the token first: this copy
-          // of the block is surplus
-          f.delete(segPath, true)
-          None
-        }
       }
     }
     // MV fan-out exactly once — only the committing call triggers, after
@@ -2338,26 +2073,25 @@ final class Catalog(spark: SparkSession) {
     committed.map { case (cnt, filled) => fanOutMvs(name, filled, blockBytes = -1L); cnt }
   }
 
-  /** Multi-writer Versioned append (doc at [[segMarkerDir]]): stage to a
-    * process-unique segment dir, then commit with one atomic marker
-    * create. The stage write is a fresh-directory overwrite, so two
-    * processes can never interleave inside one Spark `_temporary` staging
-    * tree the way concurrent same-directory appends would.
+  /** Write `df` into a fresh directory of `t`, then publish the entry
+    * `next` derives from the head and the written files (the one commit
+    * path: append, token append, rewrite). `h` is the head the caller
+    * read before the write (the first attempt derives from it). When
+    * nothing is published the directory goes again. Returns the rows
+    * written, the published entry and the written block for projection
+    * upkeep after the commit.
     */
-  private def commitSegment(t: TableDef, batch: DataFrame): Long = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    val seg = s"seg-$processTag-${java.util.UUID.randomUUID().toString.take(8)}"
-    val (rows, _) = writeData(t, batch, new Path(t.path, seg).toString)
-    f.mkdirs(segMarkerDir(t))
-    val out = f.create(new Path(segMarkerDir(t), seg), false) // atomic commit
-    try out.write(processTag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // void a GC nomination a concurrent compact may have written while
-    // this (long) data write looked abandoned — the marker above already
-    // makes the segment live, so the tombstone must not outlive it
-    f.delete(new Path(segMarkerDir(t), seg + ".orphan"), false)
-    rows
+  private def commitWrite(t: TableDef, h: LogEntry, df: DataFrame)(
+      next: (LogEntry, Seq[LogFile]) => Option[LogEntry])
+      : Option[(Long, LogEntry, Option[DataFrame])] = {
+    val l = log(t)
+    val dir = l.stage("c")
+    val (rows, files, block) = writeData(t, df, dir)
+    val published =
+      try l.commit(t.name, Some(h))(next(_, files))
+      catch { case scala.util.control.NonFatal(e) => l.f.delete(dir, true); throw e }
+    if (published.isEmpty) l.f.delete(dir, true)
+    published.map((rows, _, block))
   }
 
   /** True when `df` is built ENTIRELY from driver-local rows (VALUES
@@ -2537,53 +2271,33 @@ final class Catalog(spark: SparkSession) {
     perCol ++ v2
   }
 
-  /** The visible data files under `path`, as path strings — used to diff
-    * the file set across an append so projection companions derive from
-    * the WRITTEN block (see [[writeData]]).
-    */
-  private def listDataFiles(t: TableDef, path: String): Set[String] =
-    Listing.of(fs(t), Seq(path)).files.map(_.getPath.toString).toSet
-
-  /** Parquet write honoring the table's partition layout. Returns
-    * (row count, written file set).
+  /** Parquet write of one commit's files into the fresh directory `dir`,
+    * honoring the table's partition layout, plus every declared index's
+    * sidecars for those files — written before the commit publishes, so
+    * no published file lacks one. Returns (row count, written files, the
+    * written block when the table declares projections).
     *
     * The row count is OBSERVED on the write plan itself
     * (`Dataset.observe` + [[org.apache.spark.sql.Observation]] — write
     * stats, not a second pass): the block executes exactly once and the
-    * count is exactly the rows the writer committed. This replaces the
-    * round-14 footer read-back (one driver round-trip per written file —
-    * O(batch files) remote opens on a wide partitioned append) AND the
-    * full-table before/after listing diff that every non-versioned append
-    * paid even with no projections attached (round-14 judge + advice:
-    * O(total table files) driver metadata work per append, and a
-    * concurrent cross-process writer's files could be silently attributed
-    * to this append's count).
+    * count is exactly the rows the writer committed.
     *
     * Projection companions are derived from the files this call WROTE,
     * never by re-executing the caller's `df` plan: a second execution
-    * after the base commit re-lists the data dir (a self-referencing
+    * after the commit would see the table's new head (a self-referencing
     * `INSERT INTO t SELECT … FROM t` would see its own output) and any
     * non-deterministic input (sampling, rand ids) evaluates differently —
     * the companion partials would diverge from the stored base and
-    * auto-rewritten aggregates would be silently wrong. The other
-    * maintainers (skip/ANN indexes) already rebuild from the written
-    * path; this makes projections match. On overwrite the written path IS
-    * the block (fresh dir — the listing is O(batch)); on append the block
-    * is the before/after file-set diff, read with `basePath` so
-    * partition-dir columns are recovered — paid ONLY by tables that
-    * declare projections, the one consumer that needs the file names.
+    * auto-rewritten aggregates would be silently wrong.
     */
-  private def writeData(t: TableDef, df: DataFrame, path: String,
-                        mode: String = "overwrite"): (Long, Seq[String]) = {
+  private def writeData(t: TableDef, df: DataFrame, dir: org.apache.hadoop.fs.Path)
+      : (Long, Seq[LogFile], Option[DataFrame]) = {
     val obs = org.apache.spark.sql.Observation()
     val counted = df.observe(obs, count(lit(1)).as("rows"))
-    val before: Set[String] =
-      if (mode == "append" && t.projections.nonEmpty) listDataFiles(t, path)
-      else Set.empty
-    val w = counted.write.mode(mode).option("compression", t.codec)
+    val w = counted.write.mode("overwrite").option("compression", t.codec)
       .options(codecWriteOptions(t))
     (if (t.partitionKeys.nonEmpty) w.partitionBy(t.partitionKeys: _*) else w)
-      .parquet(path)
+      .parquet(dir.toString)
     // the metrics ride the SQLExecutionEnd event: posted before the write
     // call returns, drained by the listener bus within ms — bounded wait,
     // then fail LOUDLY (never a silent wrong count)
@@ -2593,120 +2307,90 @@ final class Catalog(spark: SparkSession) {
           scala.concurrent.duration.Duration(30, "s"))
         catch { case _: java.util.concurrent.TimeoutException =>
           throw new IllegalStateException(
-            s"writeData(${t.name}): the files under $path are written (a " +
-              "direct append is already committed), but the row count did " +
-              "not arrive within 30 s — check the table before re-appending")
+            s"writeData(${t.name}): the files under $dir are written but not " +
+              "committed, and the row count did not arrive within 30 s")
         }
       row.getAs[Long]("rows")
     }
-    val written: Seq[String] =
-      if (mode != "append") listDataFiles(t, path).toSeq.sorted
-      else if (t.projections.nonEmpty) (listDataFiles(t, path) -- before).toSeq.sorted
-      else Nil
+    val (written, files) = log(t).written(dir)
     // re-project the read-back block to the input's declared schema:
     // partition-dir columns come back LAST and type-INFERRED from the dir
     // strings (a string key "01" would read as int 1) — the cast pins both
     // order and types to what the caller handed in
-    def asWritten(raw: DataFrame): DataFrame =
-      raw.select(df.schema.map(f => col(f.name).cast(f.dataType)): _*)
-    val block: Option[DataFrame] =
+    val block =
       if (t.projections.isEmpty) None
-      else if (mode == "append") {
-        if (written.isEmpty) None
-        else Some(asWritten(
-          spark.read.option("basePath", path).parquet(written: _*)))
-      } else Some(asWritten(spark.read.parquet(path)))
-    maintainSkipIndexes(t, path)
-    if (t.annIndex.nonEmpty) AnnIndex.maintain(spark, t, path)
-    block.foreach(b => maintainProjections(t, b, path, mode))
-    (rows, written)
+      else Some(spark.read.parquet(dir.toString)
+        .select(df.schema.map(f => col(f.name).cast(f.dataType)): _*))
+    SkipIndex.maintain(spark, fs(t), t, written)
+    if (t.annIndex.nonEmpty) AnnIndex.maintain(spark, t, written)
+    (rows, files, block)
   }
 
-  /** Maintain the declared projections for one [[writeData]] call: on an
-    * APPEND `df` is the insert block and each companion gains one partial
-    * block; on an OVERWRITE (compactFlat staging, mutations, TRUNCATE)
-    * `df` is the full rewritten table and the companions are rebuilt
-    * beside it — inside the staging dir, so they travel atomically with
-    * the swap. Crash contract: the companion write follows the base
-    * write, so a crash between the two leaves the companion one block
-    * BEHIND; [[materializeProjection]] (CH's `ALTER TABLE … MATERIALIZE
+  /** Maintain the declared projections after a commit: on an append
+    * `block` is the insert block and each companion gains one partial
+    * block; on a rewrite it is the whole rewritten table and each
+    * companion is rebuilt. Crash contract: the companion follows the
+    * commit, so a crash between the two leaves the companion BEHIND;
+    * [[materializeProjection]] (CH's `ALTER TABLE … MATERIALIZE
     * PROJECTION`) rebuilds it — run it after recovering an interrupted
     * ingest, the same way CH re-materializes after `ALTER` drift.
     */
   private def maintainProjections(t: TableDef, block: DataFrame,
-                                  path: String, mode: String): Unit =
+                                  rewrite: Boolean): Unit = {
     t.projections.foreach { p =>
-      val dir = new org.apache.hadoop.fs.Path(path, s"_proj_${p.name}").toString
-      val out = p match {
-        case AggProjection(_, dims, sums) =>
-          val aggs = count(lit(1)).as("__cnt") +:
-            sums.map(c => sum(col(c)).as(s"__sum_$c"))
-          block.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
-        case SortProjection(_, key) =>
-          // range-cluster WITHIN the block: per-file min/max on the sort
-          // key narrows to ~1/N of each block's files; sizing by the
-          // session's shuffle parallelism keeps files near block/N
-          block.repartitionByRange(col(key)).sortWithinPartitions(col(key))
-      }
-      out.write.mode(mode).option("compression", t.codec).parquet(dir)
-      graft.plans.SortedProjectionRewrite.invalidate(dataPath(t))
+      if (rewrite) rebuildProjection(t, p, block)
+      else projectionRows(p, block).write.mode("append")
+        .option("compression", t.codec).parquet(projPath(t, p.name))
     }
+    graft.plans.SortedProjectionRewrite.invalidate(t.path)
+  }
+
+  /** A projection's companion rows over `base`. */
+  private def projectionRows(p: ProjectionSpec, base: DataFrame): DataFrame = p match {
+    case AggProjection(_, dims, sums) =>
+      val aggs = count(lit(1)).as("__cnt") +: sums.map(c => sum(col(c)).as(s"__sum_$c"))
+      base.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    case SortProjection(_, key) =>
+      // range-cluster: per-file min/max on the sort key narrows to ~1/N
+      // of the files; sizing by the session's shuffle parallelism keeps
+      // files near block/N
+      base.repartitionByRange(col(key)).sortWithinPartitions(col(key))
+  }
+
+  /** Rebuild one companion from `base`, staged beside the live companion
+    * and moved into place, so readers racing it see old complete data or
+    * new complete data, never a half-written dir.
+    */
+  private def rebuildProjection(t: TableDef, p: ProjectionSpec, base: DataFrame): Unit = {
+    import org.apache.hadoop.fs.Path
+    val f = fs(t)
+    val live = new Path(projPath(t, p.name))
+    val stage = new Path(live.toString + ".rebuild")
+    f.delete(stage, true)
+    projectionRows(p, base).write.mode("overwrite").option("compression", t.codec)
+      .parquet(stage.toString)
+    f.delete(live, true)
+    require(f.rename(stage, live),
+      s"${t.name}: could not move rebuilt projection into place ($stage)")
+  }
 
   /** Rebuild one declared projection's companion from the CURRENT base
     * data — `ALTER TABLE … MATERIALIZE PROJECTION`: the recovery verb for
-    * the append crash window (doc on [[maintainProjections]]) and the
-    * backfill step of [[addProjection]]. The rebuild is staged beside the
-    * live companion and moved into place, so readers racing it see old
-    * complete data or new complete data, never a half-written dir.
+    * the commit crash window (doc on [[maintainProjections]]) and the
+    * backfill step of [[addProjection]]. The base scan is not the live
+    * head's own index, so no projection rule can answer it from the
+    * (possibly stale) companion being rebuilt.
     */
   def materializeProjection(name: String, proj: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val t = get(name)
     val p = t.projections.find(_.name == proj).getOrElse(
       throw new IllegalArgumentException(
         s"$name: no projection named $proj declared"))
     writeLock(name).synchronized {
-      recoverInterruptedSwap(t)
-      val live = new Path(projPath(t, proj))
-      val stage = new Path(dataPath(t), s"_proj_$proj.rebuild")
-      val f = fs(t)
-      f.delete(stage, true)
-      // An AGG rebuild's own query (count/sum over the base grouped by the
-      // projection dims) is RollupRewrite-eligible for the very projection
-      // being rebuilt: with the registration live, a STALE-but-present
-      // companion (the append crash window this verb exists to repair)
-      // would silently ANSWER the rebuild and re-persist its own stale
-      // partials. Deregister this companion for the duration so the
-      // rebuild always scans the base, then restore the registration
-      // after the swap (try/finally — a failed rebuild must not leave the
-      // still-live old companion unregistered).
-      p match {
-        case _: AggProjection =>
-          graft.plans.RollupRewrite.unregister(dataPath(t),
-            Some(projPath(t, proj)))
-        case _ => ()
-      }
-      try {
-        // readVia applies pending renames/defaults — the companion must
-        // hold DECLARED-schema rows, like the base rewrite paths do
-        val base = readVia(t, dataPaths(t))
-        val out = p match {
-          case AggProjection(_, dims, sums) =>
-            val aggs = count(lit(1)).as("__cnt") +:
-              sums.map(c => sum(col(c)).as(s"__sum_$c"))
-            base.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
-          case SortProjection(_, key) =>
-            base.repartitionByRange(col(key)).sortWithinPartitions(col(key))
-        }
-        out.write.mode("overwrite").option("compression", t.codec)
-          .parquet(stage.toString)
-        f.delete(live, true)
-        require(f.rename(stage, live),
-          s"$name: could not move rebuilt projection into place ($stage)")
-      } finally {
-        registerProjections(t)
-      }
-      graft.plans.SortedProjectionRewrite.invalidate(dataPath(t))
+      // readVia applies pending renames/defaults — the companion must
+      // hold DECLARED-schema rows, like the base rewrite paths do
+      rebuildProjection(t, p, readVia(t, log(t).head()))
+      graft.plans.SortedProjectionRewrite.invalidate(t.path)
     }
   }
 
@@ -2735,10 +2419,9 @@ final class Catalog(spark: SparkSession) {
     writeLock(name).synchronized {
       p match {
         case _: AggProjection =>
-          graft.plans.RollupRewrite.unregister(dataPath(t),
-            Some(projPath(t, proj)))
+          graft.plans.RollupRewrite.unregister(t.path, Some(projPath(t, proj)))
         case _: SortProjection =>
-          graft.plans.SortedProjectionRewrite.unregister(dataPath(t))
+          graft.plans.SortedProjectionRewrite.unregister(t.path)
       }
       createTableUpdate(t.copy(projections = t.projections.filterNot(_.name == proj)))
       fs(t).delete(new org.apache.hadoop.fs.Path(projPath(t, proj)), true)
@@ -2792,12 +2475,9 @@ final class Catalog(spark: SparkSession) {
     val t = get(name)
     val (k, c) = resolveIndexName(t, idxName)
     writeLock(name).synchronized {
-      recoverInterruptedSwap(t)
-      dataPaths(t).foreach { p =>
-        k match {
-          case s: SkipIndex => maintainSkipIndexes(t, p, Some(s -> c))
-          case VectorSimilarity => AnnIndex.maintain(spark, t, p)
-        }
+      k match {
+        case s: SkipIndex => SkipIndex.maintain(spark, fs(t), t, listing(t), Some(s -> c))
+        case VectorSimilarity => AnnIndex.maintain(spark, t, listing(t))
       }
     }
   }
@@ -2834,7 +2514,7 @@ final class Catalog(spark: SparkSession) {
     writeLock(name).synchronized { deleteIndexSidecars(t, k, c) }
   }
 
-  /** Remove one (kind, column)'s sidecar files under every data root.
+  /** Remove one (kind, column)'s sidecar files beside the live files.
     * Sidecars are content-addressed per immutable parquet file, so this
     * is storage hygiene, not a correctness need — consults only happen
     * for DECLARED indexes — but a stale sidecar would silently revive
@@ -2883,21 +2563,23 @@ final class Catalog(spark: SparkSession) {
     val t = get(name)
     require(t.annIndex.nonEmpty,
       s"$name: no vector_similarity index declared")
-    recoverInterruptedSwap(t)
     AnnIndex.search(this, spark, t, queries, k, nProbe)
   }
 
   // ---- skip-index pruned reads (contract on [[SkipIndex]]) --------------
 
-  /** The data files and `_idx/` sidecars of `t`'s live data roots. */
-  private def listing(t: TableDef): Listing = Listing.of(fs(t), dataPaths(t))
-
-  /** Index the files under `dir` still missing a sidecar — every declared
-    * skip index, or only the one a MATERIALIZE INDEX names.
+  /** The head's data files and the `_idx/` sidecars beside them: one
+    * listing per directory holding live files (index upkeep only — the
+    * pruned reads open sidecars without listing).
     */
-  private def maintainSkipIndexes(t: TableDef, dir: String,
-                                  only: Option[(SkipIndex, String)] = None): Unit =
-    SkipIndex.maintain(spark, fs(t), t, dir, only)
+  private def listing(t: TableDef): Listing = {
+    val l = log(t)
+    val files = l.head().files.map(l.status)
+    Listing(files, files.map(_.getPath.getParent).distinct.flatMap { d =>
+      try l.f.listStatus(new org.apache.hadoop.fs.Path(d, "_idx")).toSeq.filter(_.isFile).map(_.getPath)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    })
+  }
 
   /** `name`'s def, after refusing a probe through an undeclared index. */
   private def indexed(name: String, k: SkipIndex, column: String): TableDef = {
@@ -2906,22 +2588,20 @@ final class Catalog(spark: SparkSession) {
     t
   }
 
-  /** The listed files whose `column` sidecar cannot rule out `probe`;
-    * a file without a sidecar is kept. Shared by the pruned reads and
+  /** The logged files whose `column` sidecar cannot rule out `probe`; a
+    * file without a sidecar is kept. Each sidecar is opened once and
+    * none is listed or probed for first. Shared by the pruned reads and
     * [[explainEstimate]], so the estimate prices exactly the scan the read
     * would run.
     */
-  private def survivors(t: TableDef, l: Listing, k: SkipIndex, column: String)(
-      probe: k.Probe): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val f = fs(t)
-    l.files.filter { s =>
-      val sc = SkipIndex.sidecar(s.getPath, column, k.suffix)
-      !l.has(sc) || {
-        val in = f.open(sc)
+  private def survivors(l: TableLog, files: Seq[LogFile], k: SkipIndex, column: String)(
+      probe: k.Probe): Seq[LogFile] =
+    files.filter { x =>
+      try {
+        val in = l.f.open(SkipIndex.sidecar(l.resolve(x.path), column, k.suffix))
         k.survives(try in.readAllBytes() finally in.close(), probe)
-      }
+      } catch { case _: java.io.FileNotFoundException => true }
     }
-  }
 
   /** The one pruned read: scan only the files [[survivors]] keeps, through
     * the full read semantics (renames, added-column defaults, deletion
@@ -2930,9 +2610,8 @@ final class Catalog(spark: SparkSession) {
   private def prunedRead(t: TableDef, k: SkipIndex, column: String)(
       probe: k.Probe): (DataFrame, Int, Int) = {
     val kind = k.label.takeWhile(_ != ' ')
-    // partitioned layouts read partition values from directory names — a
-    // bare-file read would blank them; they already skip at the directory
-    // level, which is the stronger prune
+    // partitioned layouts already skip at the directory level, the
+    // stronger prune
     require(t.partitionKeys.isEmpty,
       s"${t.name}: $kind-pruned reads target unpartitioned layouts")
     // a merge view needs every file of a key group: dropping a file can
@@ -2942,13 +2621,10 @@ final class Catalog(spark: SparkSession) {
     require(t.semantics == Append,
       s"${t.name}: $kind-pruned reads require Append semantics " +
         s"(merge views need every file of a key group)")
-    recoverInterruptedSwap(t)
-    val all = listing(t)
-    val kept = survivors(t, all, k, column)(probe)
-    val df =
-      if (kept.isEmpty) readVia(t, dataPaths(t)).limit(0)
-      else readVia(t, kept.map(_.getPath.toString))
-    (df, kept.size, all.files.size)
+    val l = log(t)
+    val h = l.head()
+    val kept = survivors(l, h.files, k, column)(probe)
+    (readVia(t, h.copy(files = kept)), kept.size, h.files.size)
   }
 
   /** Equality probe through the bloom index: scan only the files whose
@@ -3067,154 +2743,79 @@ final class Catalog(spark: SparkSession) {
     } else (read(name).filter(rowFilter), -1, -1)
   }
 
-  /** Zero-row frame with the table's declared schema — lets mutation
-    * transforms validate (column existence, shape preservation) before a
-    * table holds any data.
-    */
-  private def emptyFrame(t: TableDef): DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), t.schema)
-
-  /** Finish a compact swap a crash interrupted (doc on [[compact]]): table
-    * path absent with `.compact.tmp`/`.compact.old` present means the only
-    * surviving copies are the swap artifacts — every entry point that
-    * touches storage (append / read / readRaw / compact) runs this first,
-    * so no caller can ever observe, recreate, or delete a mid-swap table.
-    * One `exists` probe when the table is healthy.
-    */
-  private def recoverInterruptedSwap(t: TableDef): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (t.layout != FlatDir) return // Versioned has no unreadable window
-    val path = new Path(t.path)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    // Cheap lock-free probe first (every read runs this); the recovery
-    // itself must serialize against a LIVE compact's two-rename window and
-    // against other recovering readers — a lock-free rename here would make
-    // the in-flight compact's own checked rename fail — so it re-checks
-    // under the table's write lock before touching anything.
-    if (!fs.exists(path)) writeLock(t.name).synchronized {
-      if (!fs.exists(path)) {
-        val tmp = new Path(t.path + ".compact.tmp")
-        val old = new Path(t.path + ".compact.old")
-        if (fs.exists(tmp) && fs.exists(old)) // finish the interrupted swap
-          require(fs.rename(tmp, path), s"${t.name}: recovery rename $tmp -> $path failed")
-        else if (fs.exists(old))              // restore the original
-          require(fs.rename(old, path), s"${t.name}: recovery rename $old -> $path failed")
-      }
-    }
-  }
-
   /** Read with full engine semantics applied (merged view). */
   def read(name: String): DataFrame = {
     val t = get(name)
-    recoverInterruptedSwap(t)
-    readVia(t, dataPaths(t))
+    readVia(t, log(t).head(), live = true)
   }
 
-  /** Scan `paths` under `schema`. A PARTITIONED table's live paths
-    * (version dir + append segments) are distinct partition-discovery
-    * roots — one multi-path read makes Spark infer partition columns
-    * across conflicting base directories and refuse the scan
-    * (CONFLICTING_DIRECTORY_STRUCTURES), so each root is read on its own
-    * and unioned. Filters, column pruning, and directory-level partition
-    * pruning all push into every branch of the union, so the plan cost is
-    * identical to the single-root read.
+  /** Scan `files` under `schema` through one file index built from the
+    * log ([[TableLog.frame]]) — no listing. `withId` adds the row
+    * identity for the deletion-vector anti-join: the scanned file's path
+    * and the row's ordinal inside it, from the file source's hidden
+    * `_metadata` struct (constant-per-file, no read amplification).
     */
-  private def scanRoots(t: TableDef, schema: StructType,
-                        paths: Seq[String],
-                        withId: Boolean = false): DataFrame = {
-    // row identity for the deletion-vector anti-join: the scanned file's
-    // path + the row's ordinal inside it, from the file source's hidden
-    // _metadata struct (constant-per-file, no read amplification)
-    def id(df: DataFrame): DataFrame =
-      if (!withId) df
-      else df.withColumn("__dv_file", col("_metadata.file_path"))
-        .withColumn("__dv_pos", col("_metadata.row_index"))
-    if (t.partitionKeys.isEmpty || paths.size <= 1)
-      id(spark.read.schema(schema).parquet(paths: _*))
-    else paths.map(p => id(spark.read.schema(schema).parquet(p))
-        // per-root partition discovery appends partition cols last —
-        // restore declared order so the branches union positionally
-        .select((schema.fieldNames.toSeq ++
-          (if (withId) Seq("__dv_file", "__dv_pos") else Nil))
-          .map(n => col(s"`$n`")): _*))
-      .reduce(_.union(_))
+  private def scan(t: TableDef, l: TableLog, files: Seq[LogFile], schema: StructType,
+                   live: Boolean, withId: Boolean): DataFrame = {
+    val df = TableLog.frame(spark, l, files,
+      StructType(schema.filterNot(f => t.partitionKeys.contains(f.name))),
+      StructType(t.partitionKeys.map(schema(_))), live)
+    if (!withId) df
+    else df.withColumn("__dv_file", col("_metadata.file_path"))
+      .withColumn("__dv_pos", col("_metadata.row_index"))
   }
 
-  /** Storage scan surfacing the DECLARED schema over mixed physical
-    * layouts: files written before a pending RENAME carry the old column
-    * name, files written after carry the new one. The read schema is
-    * widened with each pending physical name (absent fields read as null
-    * in parquet), the two columns coalesce into the declared one, and the
-    * final select restores the declared shape. No pending renames → the
-    * plain declared-schema scan, zero overhead. The coalesce is sound
+  /** Storage scan of one log state surfacing the DECLARED schema over
+    * mixed physical layouts, with the state's deletion vectors applied:
+    * files written before a pending RENAME carry the old column name,
+    * files written after carry the new one. The read schema is widened
+    * with each pending physical name (absent fields read as null in
+    * parquet), the two columns coalesce into the declared one, and the
+    * final select restores the declared shape. The coalesce is sound
     * because no file can carry BOTH names: the new name did not exist as
     * a column before the rename ([[renameColumn]] refuses an existing
     * `to`), and [[stored]] keeps the old name un-reintroducible until a
-    * compact retires the mapping.
+    * compact retires the mapping. `keepId` keeps the
+    * `__dv_file`/`__dv_pos` row identity ([[deleteLightweight]] records
+    * matched rows by it); `live` marks a scan of the whole live head.
     */
-  private def readStorage(t: TableDef, paths: Seq[String]): DataFrame =
-    readStorageDv(t, paths, currentDvDirs(t))
-
-  /** [[readStorage]] with an EXPLICIT deletion-vector set (the live read
-    * passes the current one; [[readSnapshot]] replays its frozen one) and
-    * optionally keeping the `__dv_file`/`__dv_pos` row-identity columns
-    * ([[deleteLightweight]] records matched rows by them).
-    */
-  private def readStorageDv(t: TableDef, paths: Seq[String],
-                            dvs: Seq[String],
-                            keepId: Boolean = false): DataFrame = {
-    // a never-appended table's data roots may not exist yet (Versioned:
-    // no v0 until the first write) — an empty table reads as empty, it
-    // doesn't throw PATH_NOT_FOUND
-    val f0 = fs(t)
-    val live = paths.filter(p => f0.exists(new org.apache.hadoop.fs.Path(p)))
-    if (live.isEmpty) {
-      val base = emptyFrame(t)
-      return if (!keepId) base
-        else base
-          .withColumn("__dv_file", lit(null).cast("string"))
-          .withColumn("__dv_pos", lit(null).cast("long"))
-    }
+  private def readStorage(t: TableDef, e: LogEntry, keepId: Boolean = false,
+                          live: Boolean = false): DataFrame = {
+    val l = log(t)
     val renames = t.renames
       .filter { case (to, _) => t.schema.fieldNames.contains(to) }
-    val withId = dvs.nonEmpty || keepId
+    val withId = e.dvs.nonEmpty || keepId
     // the mask is tiny next to the data (pairs, not rows): no broadcast
     // hint — AQE broadcasts the anti-join side when its runtime size
     // allows and degrades to shuffle when a mass-delete outgrows it
     def mask(df: DataFrame): DataFrame =
-      if (dvs.isEmpty) df
+      if (e.dvs.isEmpty) df
       else {
-        val dv = spark.read.schema(dvPairSchema).parquet(dvs: _*)
+        val dv = TableLog.frame(spark, l, e.dvs, dvPairSchema, new StructType, live = false)
         df.join(dv, df("__dv_file") === dv("file") &&
           df("__dv_pos") === dv("pos"), "left_anti")
       }
     val outCols = t.schema.fieldNames.toSeq ++
       (if (keepId) Seq("__dv_file", "__dv_pos") else Nil)
     if (renames.isEmpty)
-      mask(scanRoots(t, t.schema, live, withId))
+      mask(scan(t, l, e.files, t.schema, live, withId))
         .select(outCols.map(n => col(s"`$n`")): _*)
     else {
       val widened = StructType(t.schema.fields ++ renames.map {
         case (to, phys) => StructField(phys, t.schema(to).dataType)
       })
-      val raw = mask(scanRoots(t, widened, live, withId))
+      val raw = mask(scan(t, l, e.files, widened, live, withId))
       renames.foldLeft(raw) { case (d, (to, phys)) =>
         d.withColumn(to, coalesce(col(to), col(phys)))
       }.select(outCols.map(n => col(s"`$n`")): _*)
     }
   }
 
-  /** Merged-view read over an EXPLICIT path snapshot — compaction folds
-    * exactly the segments it listed, never whatever a re-listing at job
-    * time would see (a segment committed mid-compact must stay a segment,
-    * or it would land in the new version AND stay visible = duplicated).
+  /** Merged-view read of one log state — compaction folds exactly the
+    * state it read, never whatever the head is when its job runs.
     */
-  private def readVia(t: TableDef, paths: Seq[String]): DataFrame =
-    readViaDv(t, paths, currentDvDirs(t))
-
-  private def readViaDv(t: TableDef, paths: Seq[String],
-                        dvs: Seq[String]): DataFrame = {
-    val raw = applyDefaults(t, readStorageDv(t, paths, dvs))
+  private def readVia(t: TableDef, e: LogEntry, live: Boolean = false): DataFrame = {
+    val raw = applyDefaults(t, readStorage(t, e, live = live))
     t.semantics match {
       case Append => raw
       // nothing is ever stored, but limit(0) also guards against stray
@@ -3358,8 +2959,7 @@ final class Catalog(spark: SparkSession) {
     */
   def readRaw(name: String): DataFrame = {
     val t = get(name)
-    recoverInterruptedSwap(t)
-    readStorage(t, dataPaths(t)) // raw in MERGE terms; renames still map
+    readStorage(t, log(t).head(), live = true) // raw in MERGE terms; renames still map
   }
 
   // ---- lightweight DELETE (deletion-vector analog) ---------------------
@@ -3368,43 +2968,29 @@ final class Catalog(spark: SparkSession) {
   // in a hidden `_row_exists` mask inside the part and filters them at
   // every read; the expensive rewrite happens later, when merges
   // materialize the mask. Same contract here, shaped for immutable
-  // parquet: a part file cannot grow a column, so the mask lives BESIDE
-  // the table ( `<path>.dv/dv-*` ) as (file, pos) pairs — the
-  // deletion-vector layout. DELETE writes O(matched rows) of pairs and
-  // never touches a data file; every read anti-joins the mask on
-  // (_metadata.file_path, _metadata.row_index); compaction materializes
-  // it for free (its rewrite reads THROUGH the mask, so the new files
-  // simply don't contain the rows) and then collects the applied dv
-  // dirs. A FREEZE taken between a delete and its materialization lists
-  // the dv dirs it froze, [[readSnapshot]] replays exactly those, and
-  // compaction retains pinned dv dirs until their snapshots drop — a
-  // retained dv masks nothing in the live table (its pairs address
-  // pre-rewrite file paths, and paths are unique per write). At 100 TB
-  // the mask is KBs-to-MBs against TB scans; a maskless table pays one
-  // directory listing and nothing in-plan.
+  // parquet: a part file cannot grow a column, so the mask lives beside
+  // the data as (file, pos) pairs in a commit directory of their own and
+  // the table log lists it — the deletion-vector layout. DELETE writes
+  // O(matched rows) of pairs and never touches a data file; every read
+  // anti-joins the mask on (_metadata.file_path, _metadata.row_index);
+  // a rewrite materializes it for free (it reads THROUGH the mask, so the
+  // new files simply don't contain the rows) and its entry lists no mask.
+  // A FREEZE names a log position, whose entry keeps its mask. At 100 TB
+  // the mask is KBs-to-MBs against TB scans; a maskless table pays
+  // nothing in-plan.
 
   private val dvPairSchema = StructType(Seq(
     StructField("file", org.apache.spark.sql.types.StringType, nullable = false),
     StructField("pos", org.apache.spark.sql.types.LongType, nullable = false)))
 
-  private def dvRoot(t: TableDef) =
-    new org.apache.hadoop.fs.Path(t.path + ".dv")
-
-  /** Committed deletion-vector dirs (one per DELETE), oldest first. */
-  private def currentDvDirs(t: TableDef): Seq[String] = {
-    val f = fs(t)
-    val root = dvRoot(t)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("dv-"))
-      .map(_.getPath.toString).sorted
-  }
-
-  /** Deletion-vector dirs not yet materialized — 0 means every past
-    * lightweight DELETE has been folded into storage by a compact.
+  /** Deletion-vector dirs not yet materialized (one per lightweight
+    * DELETE) — 0 means every past one has been folded into storage by a
+    * rewrite.
     */
-  def pendingDeleteFiles(name: String): Int =
-    currentDvDirs(get(name)).size
+  def pendingDeleteFiles(name: String): Int = {
+    val l = log(get(name))
+    l.head().dvs.map(x => l.resolve(x.path).getParent).distinct.size
+  }
 
   /** `DELETE FROM name WHERE predicate` — ClickHouse lightweight delete.
     * Marks matching rows deleted WITHOUT rewriting any data file (the
@@ -3418,9 +3004,8 @@ final class Catalog(spark: SparkSession) {
     * would CHANGE fold results (e.g. resurrect the row it superseded)
     * rather than delete a logical row.
     *
-    * Takes the compact lock: a concurrent compact swaps storage to new
-    * file paths, and pairs recorded against the old paths would be
-    * silently lost in the swap.
+    * Fails loudly when a concurrent commit rewrote the files it read:
+    * pairs recorded against the old paths would mask nothing.
     */
   def deleteLightweight(name: String,
                         predicate: org.apache.spark.sql.Column): Long =
@@ -3430,53 +3015,35 @@ final class Catalog(spark: SparkSession) {
         s"$name: lightweight DELETE requires Append semantics (merge " +
           "views fold key groups across files; use ALTER DELETE's " +
           "rewrite on merge-view engines)")
-      recoverInterruptedSwap(t)
-      withCompactLock(t) {
-        import org.apache.hadoop.fs.Path
-        val f = fs(t)
-        // any .stage-* here is a crashed predecessor: committed writers
-        // renamed theirs away, and no live writer exists under this lock
-        if (f.exists(dvRoot(t)))
-          f.listStatus(dvRoot(t)).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith(".stage-"))
-            .foreach(s => f.delete(s.getPath, true))
-        val masked = applyDefaults(t,
-          readStorageDv(t, dataPaths(t), currentDvDirs(t), keepId = true))
-        val matched = masked.filter(coalesce(predicate, lit(false)))
-          .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-        val n = matched.count()
-        if (n > 0L) {
-          f.mkdirs(dvRoot(t))
-          val tag = s"dv-$processTag-${java.util.UUID.randomUUID().toString.take(8)}"
-          val stage = new Path(dvRoot(t), s".stage-$tag")
-          matched.write.mode("overwrite").parquet(stage.toString)
-          if (!f.rename(stage, new Path(dvRoot(t), tag))) {
-            f.delete(stage, true)
-            throw new java.io.IOException(
-              s"$name: deletion-vector commit rename failed")
-          }
+      val l = log(t)
+      val h = l.head()
+      val matched = applyDefaults(t, readStorage(t, h, keepId = true))
+        .filter(coalesce(predicate, lit(false)))
+        .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
+      val n = matched.count()
+      if (n > 0L) {
+        val dir = l.stage("d")
+        matched.write.mode("overwrite").parquet(dir.toString)
+        val dvs = l.written(dir)._2
+        try l.commit(name, Some(h)) { cur =>
+          requireUnchanged(name, h, cur)
+          Some(cur.copy(dvs = cur.dvs ++ dvs))
         }
-        recordMutation(t, s"DELETE WHERE $predicate (lightweight, $n rows)")
-        n
+        catch { case scala.util.control.NonFatal(e) => l.f.delete(dir, true); throw e }
       }
+      recordMutation(t, s"DELETE WHERE $predicate (lightweight, $n rows)")
+      n
     }
 
-  /** Collect deletion-vector dirs a just-finished rewrite materialized.
-    * Caller holds the write + compact locks and has already swapped in
-    * the rewritten storage. Snapshot-pinned dv dirs survive until their
-    * snapshots drop — their pairs address pre-rewrite paths, so they
-    * mask nothing in the live table and exist purely for frozen views.
+  /** Refuse to publish over a head `cur` that no longer holds every file
+    * `read` listed, or that gained deletion vectors since: a concurrent
+    * rewrite or delete changed what this commit read.
     */
-  private def clearAppliedDvs(t: TableDef): Unit = {
-    val f = fs(t)
-    val root = dvRoot(t)
-    if (!f.exists(root)) return
-    val pinned = listSnapshotRefs(t).flatMap(_.dvs).toSet
-    f.listStatus(root).toSeq.filter(_.isDirectory).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith(".stage-") || (n.startsWith("dv-") && !pinned(n)))
-        f.delete(s.getPath, true)
-    }
+  private def requireUnchanged(name: String, read: LogEntry, cur: LogEntry): Unit = {
+    val live = cur.files.map(_.path).toSet
+    if (!read.files.forall(x => live(x.path)) || !cur.dvs.forall(read.dvs.contains))
+      throw new IllegalStateException(s"$name: a concurrent commit (log entry " +
+        s"${cur.n}) changed the files this one read — retry")
   }
 
   // ---- introspection (system.tables / system.parts analog) --------------
@@ -3493,11 +3060,8 @@ final class Catalog(spark: SparkSession) {
     * it to skip planning a scan of a table that is registered but still
     * empty (the fresh-fixture fast path, round-14).
     */
-  private[catalog] def hasDataFiles(name: String): Boolean = {
-    val t = get(name)
-    recoverInterruptedSwap(t)
-    listing(t).files.nonEmpty
-  }
+  private[catalog] def hasDataFiles(name: String): Boolean =
+    log(get(name)).head().files.nonEmpty
 
   /** ClickHouse `merge('db', 'regex')` table-function analog: the union
     * of every registered table whose name fully matches the regex, each
@@ -3517,19 +3081,20 @@ final class Catalog(spark: SparkSession) {
       .reduce(_.unionByName(_))
   }
 
-  /** `system.tables` analog: one row per registered table — layout,
-    * engine semantics, declared keys, and storage totals (part count +
-    * bytes from the listing; pure metadata, no data scan).
+  /** `system.tables` analog: one row per registered table — its log head
+    * position, engine semantics, declared keys, and storage totals (part
+    * count + bytes from the head entry; pure metadata, no data scan).
     */
   def systemTables(): DataFrame = {
     import spark.implicits._
     tables.values.toSeq.sortBy(_.name).map { t =>
-      val files = if (exists(t.name)) listing(t).files else Nil
-      (t.name, t.path, t.layout.toString,
+      val h = log(t).head()
+      val files = h.files
+      (t.name, t.path, h.n,
         t.semantics.getClass.getSimpleName.stripSuffix("$"),
         t.sortKeys, t.partitionKeys, t.indexCols,
-        files.size.toLong, files.map(_.getLen).sum, t.codec)
-    }.toDF("table", "path", "layout", "engine", "sort_keys",
+        files.size.toLong, files.map(_.len).sum, t.codec)
+    }.toDF("table", "path", "log_head", "engine", "sort_keys",
       "partition_keys", "index_cols", "n_parts", "bytes", "codec")
   }
 
@@ -3651,17 +3216,18 @@ final class Catalog(spark: SparkSession) {
     * leading-sort-key min/max from ONE distributed pass over the table
     * (input_file_name groupBy; the bounds this reports are exactly what
     * clustered writes give the scan's row-group skipping), bytes joined
-    * from the driver listing by file name (Spark part names embed the
-    * write's UUID, so they are unique across segments).
+    * from the log head by file name (Spark part names embed the write's
+    * UUID, so they are unique across commits).
     */
   def systemParts(name: String): DataFrame = {
     import spark.implicits._
     val t = get(name)
-    recoverInterruptedSwap(t)
-    val sizes = listing(t).files
-      .map(s => (s.getPath.getName, s.getLen)).toDF("part", "bytes")
+    val l = log(t)
+    val h = l.head()
+    val sizes = h.files
+      .map(x => (l.resolve(x.path).getName, x.len)).toDF("part", "bytes")
     val sortKey = t.sortKeys.headOption
-    val perFile = scanRoots(t, t.schema, dataPaths(t))
+    val perFile = scan(t, l, h.files, t.schema, live = false, withId = false)
       .withColumn("part", element_at(split(input_file_name(), "/"), -1))
     val stats = sortKey match {
       case Some(k) => perFile.groupBy(col("part")).agg(
@@ -3703,35 +3269,26 @@ final class Catalog(spark: SparkSession) {
       .orderBy(col("partition"), col("bucket"))
   }
 
-  /** Cheap content-version token for a table: a digest over the data-file
-    * listing (path, length, mtime) plus the live deletion-vector
-    * directories — every result-changing storage event (append, compact,
-    * mutation rewrite, lightweight delete, TTL sweep, refresh swap) moves
-    * at least one of those, so equal tokens ⇒ equal read results. One
-    * directory listing, no data read — the [[graft.sql.QueryCache]]
-    * validity probe, priced to run on every cache hit. Metadata-only
-    * ALTERs (a RENAME's read view, a widened type, a changed DEFAULT an
-    * old part backfills) move it too: the whole `_TABLE` definition
-    * participates in the digest.
+  /** Cheap content-version token for a table: a digest over the `_TABLE`
+    * definition plus the log head's name and mtime — every result-changing
+    * storage event (append, compact, mutation rewrite, lightweight delete,
+    * TTL sweep, refresh, partition verb) publishes a new head, so equal
+    * tokens ⇒ equal read results. One `_log/` listing whatever the table
+    * holds, no data read — the [[graft.sql.QueryCache]] validity probe,
+    * priced to run on every cache hit. Metadata-only ALTERs (a RENAME's
+    * read view, a widened type, a changed DEFAULT an old part backfills)
+    * move it too through the definition.
     */
   def tableVersion(name: String): String = {
     val t = get(name)
-    recoverInterruptedSwap(t)
     val md = java.security.MessageDigest.getInstance("MD5")
-    def add(s: String): Unit =
-      md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    add(tableDefJson(t))
-    listing(t).files.sortBy(_.getPath.toString).foreach { s =>
-      add(s.getPath.toString); add(s.getLen.toString)
-      add(s.getModificationTime.toString)
-    }
-    currentDvDirs(t).sorted.foreach(add)
-    md.digest().map("%02x".format(_)).mkString
+    md.update(tableDefJson(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    md.digest().map("%02x".format(_)).mkString + log(t).headStamp()
   }
 
   /** ClickHouse `EXPLAIN ESTIMATE` analog: how much would a scan read —
     * files (≈ parts), rows, bytes — from METADATA only, no data scan.
-    * Files and bytes come from the directory listing; rows from parquet
+    * Files and bytes come from the log head; rows from parquet
     * FOOTERS (a few-KB metadata read per file — the analog of
     * ClickHouse's in-RAM part counts; at 100 TB the footer loop runs
     * over the files that SURVIVE pruning, not the table). With a range
@@ -3744,42 +3301,33 @@ final class Catalog(spark: SparkSession) {
                       range: Option[(String, Any, Any)] = None): DataFrame = {
     import spark.implicits._
     val t = get(name)
-    recoverInterruptedSwap(t)
-    val all = listing(t)
+    val l = log(t)
+    val all = l.head().files
     val kept = range match {
-      case None => all.files
+      case None => all
       case Some((column, lo, hi)) =>
         indexed(name, MinMax, column)
-        survivors(t, all, MinMax, column)(MinMax.range(lo, hi))
+        survivors(l, all, MinMax, column)(MinMax.range(lo, hi))
     }
     val conf = spark.sessionState.newHadoopConf()
-    val rows = kept.map { s =>
+    val rows = kept.map { x =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(s.getPath, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(l.resolve(x.path), conf))
       try r.getRecordCount finally r.close()
     }.sum
-    Seq((t.name, all.files.size.toLong, kept.size.toLong, rows,
-        kept.map(_.getLen).sum))
+    Seq((t.name, all.size.toLong, kept.size.toLong, rows, kept.map(_.len).sum))
       .toDF("table", "files_total", "files_selected", "rows", "bytes")
   }
 
   /** The deferred "background merge": rewrite storage to its merged form.
-    * ClickHouse does this continuously and asynchronously; on Parquet it is
-    * a write to a sibling temp directory followed by a directory swap — the
-    * source is never read and clobbered in the same job, so executor loss or
-    * a crash mid-write leaves the original table intact (the failure mode of
-    * the old cache-and-overwrite pattern: any evicted block forced a
-    * recomputation that read the path being overwritten).
-    *
-    * Crash recovery, checked BEFORE any cleanup: a crash between the two
-    * swap renames leaves the table path absent with `<path>.compact.old` =
-    * original and `<path>.compact.tmp` = fully-written merged output — the
-    * next compact (or any caller) must finish the interrupted swap, never
-    * delete the only surviving copies. All directory ops go through the
-    * Hadoop FileSystem of the table's path, so the swap works wherever the
-    * warehouse lives (local, HDFS — where rename is an atomic metadata op;
-    * object stores without atomic rename need a manifest-based commit
-    * instead, out of scope here).
+    * ClickHouse does this continuously and asynchronously; here it is the
+    * one rewrite commit ([[mutate]]): the merged view of the head is
+    * written into a fresh directory and one log entry replaces the files
+    * it read — the source files are never overwritten, so executor loss
+    * or a crash mid-write leaves the table exactly as it was. The entry is
+    * published with [[TableLog.publish]], which needs no directory rename
+    * and no overwrite, so the same commit works on a local disk, HDFS and
+    * any store with an exclusive create.
     */
   def compact(name: String): Unit =
     mutate(name, identity, "OPTIMIZE TABLE FINAL")
@@ -3797,9 +3345,8 @@ final class Catalog(spark: SparkSession) {
   // runbooks poll it (`is_done`) before depending on the rewrite. Here a
   // mutation IS done when mutate() returns (the rewrite is synchronous),
   // so the log is pure history: one JSONL line per completed mutation in
-  // a SIBLING file (`<path>.mutations` — outside the table dir, because
-  // FlatDir compaction swaps the whole directory and would orphan any
-  // history stored inside it). Written under the table's write lock;
+  // a SIBLING directory (`<path>.mutations`). Written under the table's
+  // write lock;
   // best-effort (losing ops history on a crash mid-write never corrupts
   // data).
 
@@ -3834,8 +3381,8 @@ final class Catalog(spark: SparkSession) {
           f.delete(aside, false)
         }
       }
-      // one uniquely-named file per mutation (the _segs markers pattern):
-      // a whole-history read-modify-write would lose lines when two
+      // one uniquely-named file per mutation: a whole-history
+      // read-modify-write would lose lines when two
       // PROCESSES mutate the same table — the JVM write lock only covers
       // in-process writers. Zero-padded ts prefix makes the lexical file
       // order the history order; the per-process monotonic seq keeps
@@ -3896,11 +3443,16 @@ final class Catalog(spark: SparkSession) {
 
   /** ClickHouse lightweight-mutation analog (`ALTER TABLE … DELETE/UPDATE
     * … WHERE`, SURVEY.md §2.9): a copy-on-write rewrite of the merged view
-    * committed through the SAME crash-safe machinery as [[compact]] — the
-    * FlatDir two-rename swap or the Versioned manifest flip — so a crashed
-    * mutation is recovered or invisible, never a half-mutated table.
-    * Mutations see merge semantics first (ReplacingDedup/Summing views),
-    * matching ClickHouse where mutations rewrite fully-merged parts.
+    * — the one rewrite commit, shared by [[compact]], TTL, TRUNCATE and
+    * view refresh. The rewritten files go into a fresh directory and one
+    * log entry replaces every file the rewrite read (files a concurrent
+    * append added stay), so a crashed mutation is invisible, never a
+    * half-mutated table; a concurrent commit that removed or masked a
+    * file it read fails it loudly. Mutations see merge semantics first
+    * (ReplacingDedup/Summing views), matching ClickHouse where mutations
+    * rewrite fully-merged parts. After the commit the GC collects what
+    * no longer reaches the head, and sweeps crashed commits' directories
+    * ([[TableLog.sweep]]).
     *
     * `transform` must preserve the table's column names and types (it may
     * drop/alter rows, not shape) — enforced loudly, since an accidental
@@ -3910,33 +3462,38 @@ final class Catalog(spark: SparkSession) {
              command: String = "mutation"): Unit =
     writeLock(name).synchronized {
       val t = get(name)
-      val checked: DataFrame => DataFrame = { df =>
-        val out = transform(df)
-        val shape = (d: DataFrame) => d.schema.map(f => (f.name, f.dataType))
-        require(shape(out) == shape(df),
-          s"mutate($name): transform changed the table shape " +
-            s"(${shape(df)} -> ${shape(out)})")
-        out
-      }
-      // compactFlat writes the _TABLE sidecar into its staging dir, so
-      // the definition travels atomically with the FlatDir swap;
-      // Versioned swaps version SUBDIRS, so its root-level _TABLE survives
-      if (t.layout == Versioned) withCompactLock(t)(compactVersioned(t, checked))
-      else withCompactLock(t)(compactFlat(t, checked))
-      // if data was rewritten, it read through the declared view — every
-      // stored file now carries the declared names, types and defaults
-      // and nothing else, so the pending storage state retires: from here
-      // on an explicitly stored NULL reads back as NULL, and dropped or
-      // pre-rename names are free again. The DEFAULT declarations stay.
-      // An empty table materialized nothing — keep its pending state.
-      // Re-persist so the sidecar written during the swap (which still
-      // listed it) is corrected.
-      val now = get(name)
-      if ((now.backfillCols ++ now.renames.keys ++ now.droppedCols).nonEmpty &&
-          exists(name)) {
-        tables.put(name, now.copy(backfillCols = Set.empty,
-          renames = Map.empty, droppedCols = Set.empty))
-        persistTableDef(tables(name))
+      val l = log(t)
+      val h = l.head()
+      val input = readVia(t, h)
+      val merged = transform(input)
+      val shape = (d: DataFrame) => d.schema.map(f => (f.name, f.dataType))
+      require(shape(merged) == shape(input),
+        s"mutate($name): transform changed the table shape " +
+          s"(${shape(input)} -> ${shape(merged)})")
+      // nothing committed (no files, no masks): a DATA no-op — but the
+      // transform above still ran against an empty frame of the declared
+      // schema, so update()'s unknown-column require and the shape check
+      // fail as loudly on a fresh table as on a populated one
+      if (h.files.nonEmpty || h.dvs.nonEmpty) {
+        val (_, e, block) = commitWrite(t, h, clusteredFor(t, merged, forCompact = true)) {
+          (cur, files) =>
+            requireUnchanged(name, h, cur)
+            Some(LogEntry(-1L, files ++ cur.files.filterNot(h.files.toSet), Nil,
+              cur.tokens -- h.tokens, h.tokens))
+        }.get
+        block.foreach(maintainProjections(t, _, rewrite = true))
+        l.sweep(e, staleLockMs)
+        // the rewrite read through the declared view — every stored file
+        // now carries the declared names, types and defaults and nothing
+        // else, so the pending storage state retires: from here on an
+        // explicitly stored NULL reads back as NULL, and dropped or
+        // pre-rename names are free again. The DEFAULT declarations stay.
+        val now = get(name)
+        if ((now.backfillCols ++ now.renames.keys ++ now.droppedCols).nonEmpty) {
+          tables.put(name, now.copy(backfillCols = Set.empty,
+            renames = Map.empty, droppedCols = Set.empty))
+          persistTableDef(tables(name))
+        }
       }
       recordMutation(t, command)
     }
@@ -4156,29 +3713,35 @@ final class Catalog(spark: SparkSession) {
   // retention runbook depends on them): `ALTER TABLE … DROP PARTITION`
   // deletes a partition's parts outright, DETACH moves them to
   // `detached/` for manual handling, ATTACH re-adopts detached parts.
-  // Here a "partition" is the Hive-layout `key=value` directory the
-  // table's `partitionBy` write produced, so all three are DIRECTORY
-  // renames/deletes — O(partition-dir count), never a row rewrite; at a
-  // 100 TB table dropping a day of data touches a handful of directory
-  // entries while `delete(…)` would rewrite the table. Mutation-logged
-  // like every ALTER.
+  // Here a "partition" is the Hive-layout `key=value` directory a
+  // commit's `partitionBy` write produced, so all three are one log entry
+  // plus directory renames — O(partition-dir count), never a row
+  // rewrite; at a 100 TB table dropping a day of data touches a handful
+  // of directory entries while `delete(…)` would rewrite the table.
+  // Mutation-logged like every ALTER. A dropped partition's files go at
+  // the commit after the drop (one commit of read grace); a file a FREEZE
+  // still reaches is copied out, never moved, so a frozen view never
+  // changes.
   //
   // Merge semantics note (same contract as ClickHouse): parts in
   // different partitions never merge, so under Replacing/Summing
   // semantics a key whose rows SPAN partitions loses only the dropped
   // partition's contribution — dropping a partition can un-shadow an
   // older version of a key that also lives elsewhere, exactly as it does
-  // in ClickHouse. Partition ops are not atomic across the table's live
-  // data paths (version dir + segments): a crash mid-op leaves some
-  // directories moved and some not — rerunning the op completes it
-  // (all three verbs are idempotent for a given value).
+  // in ClickHouse. DETACH, ATTACH and MOVE publish an entry that records
+  // where the partition's directories go (DETACH and MOVE also take the
+  // partition out), then move them, then publish the moves done, listing
+  // the files an ATTACH brought in (a MOVE has the destination's log list
+  // them first). A crash anywhere in between is finished by the next
+  // commit of the table, or where a process registers it
+  // ([[TableLog.recover]]), so the partition always ends in the table or
+  // in its destination.
 
-  /** Detached partitions live in a SIBLING dir (like `.mutations`):
-    * FlatDir compaction swaps the whole table directory and would drop
-    * anything stored inside it. One uniquely-named bucket per source
-    * directory so detaching a value present in the version dir AND in
-    * N append segments never collides; the bucket's `key=value` child
-    * names the partition, so ATTACH finds its buckets by inspection.
+  /** Detached partitions live in a SIBLING dir (like `.mutations`), one
+    * uniquely-named bucket per source directory so detaching a value
+    * present in N commit directories never collides; the bucket's
+    * `key=value` child names the partition, so ATTACH finds its buckets
+    * by inspection.
     */
   private def detachedRoot(t: TableDef) =
     new org.apache.hadoop.fs.Path(t.path + ".detached")
@@ -4198,361 +3761,164 @@ final class Catalog(spark: SparkSession) {
     escapePathName(t.partitionKeys.head) + "=" + escapePathName(value.toString)
   }
 
-  // ---- FREEZE / snapshots (Versioned layout) ---------------------------
+  /** Publish `t`'s head without the files of first-key partition `value`.
+    * With `move`, the entry also records where each of the partition's
+    * directories (`<commit>/key=value`, numbered) goes, and a second
+    * commit settles the moves ([[TableLog.settle]]). Returns the number of
+    * directories.
+    */
+  private def unlinkPartition(t: TableDef, l: TableLog, value: Any)(
+      move: Option[(org.apache.hadoop.fs.Path, Int) => LogMove]): Int = {
+    val leaf = partitionLeaf(t, value)
+    var dirs = 0
+    l.commit(t.name) { h =>
+      // masks address file paths and would not travel with moved files
+      require(h.dvs.isEmpty, s"${t.name}: a concurrent lightweight DELETE " +
+        "landed mid-operation — retry")
+      val (out, in) = h.files.partition(_.part.headOption.flatten.contains(value.toString))
+      val srcs = out.map { x =>
+        val file = l.resolve(x.path)
+        Iterator.iterate(file.getParent)(_.getParent).takeWhile(_ != null)
+          .find(_.getName == leaf).getOrElse(file.getParent)
+      }.distinct
+      dirs = srcs.size
+      if (srcs.isEmpty) None
+      else Some(h.copy(files = in,
+        moves = move.fold(Seq.empty[LogMove])(m => srcs.zipWithIndex.map(m.tupled))))
+    }
+    if (dirs > 0 && move.nonEmpty) l.commit(t.name)(Some(_))
+    dirs
+  }
+
+  // ---- FREEZE / snapshots ----------------------------------------------
   //
   // ClickHouse `ALTER TABLE … FREEZE` snapshots a table by hardlinking its
   // parts into `shadow/` — constant-time, no data copy, and later merges/
-  // drops don't disturb the frozen view. The portable analog on the
-  // Versioned layout: a snapshot is a JSON manifest (sibling
-  // `<path>.snapshots/<tag>.json`) recording the live read set — current
-  // version dir + unfolded committed segments — taken under the compact
-  // lock so it is a CONSISTENT view. Instead of hardlinks (no such
-  // primitive on HDFS/object stores), compaction's GC pins every
-  // directory a snapshot references: compacts keep rewriting forward and
-  // collecting unpinned garbage, while pinned versions/segments stay
-  // readable until their snapshot is dropped (then the next compact
-  // collects them). Dropping a snapshot of a 100 TB table is one file
-  // delete; taking one is one file write.
-  //
-  // Partition DDL is copy-on-write against snapshots: DROP/DETACH
-  // PARTITION mutate directories IN PLACE, so when any live directory is
-  // pinned they first roll a compact (new version, pinned dirs retired
-  // from the live set) and then operate on the fresh copy — a frozen
-  // view never changes underneath its snapshot. Mutations/compacts are
-  // snapshot-safe by construction (they always write a NEW version).
+  // drops don't disturb the frozen view. Here a snapshot is a tag naming a
+  // log position: the entry there lists the frozen files and masks, and
+  // the GC never collects what a tagged entry reaches. Taking a snapshot
+  // of a 100 TB table is one small file; dropping it is one delete.
 
-  private def snapshotsDir(t: TableDef) =
-    new org.apache.hadoop.fs.Path(t.path + ".snapshots")
-
-  private def snapshotJson(t: TableDef, tag: String) =
-    new org.apache.hadoop.fs.Path(snapshotsDir(t), s"$tag.json")
-
-  private case class SnapshotRef(tag: String, version: Option[String],
-                                 segments: Seq[String], dvs: Seq[String],
-                                 tsMs: Long)
-
-  private def readSnapshotRef(t: TableDef, p: org.apache.hadoop.fs.Path): SnapshotRef = {
-    import org.json4s.jackson.JsonMethods
-    val f = fs(t)
-    val in = f.open(p)
-    val j = try JsonMethods.parse(
-      scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
-    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
-    SnapshotRef(
-      (j \ "tag").extract[String],
-      (j \ "version").extractOpt[String],
-      (j \ "segments").extract[Seq[String]],
-      // absent in pre-deletion-vector manifests: those froze no masks
-      (j \ "dv").extractOpt[Seq[String]].getOrElse(Nil),
-      (j \ "ts_ms").extract[Long])
-  }
-
-  private def listSnapshotRefs(t: TableDef): Seq[SnapshotRef] = {
-    val f = fs(t)
-    val d = snapshotsDir(t)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".json"))
-      .map(s => readSnapshotRef(t, s.getPath)).sortBy(_.tag)
-  }
-
-  /** Every version/segment directory NAME some snapshot still references
-    * — the set compaction GC must not collect.
-    */
-  private def snapshotPins(t: TableDef): Set[String] =
-    listSnapshotRefs(t).flatMap(r => r.version.toSeq ++ r.segments).toSet
-
-  /** `ALTER TABLE name FREEZE WITH NAME tag`: record the live read set as
-    * snapshot `tag`. O(1) — one JSON write, no data copied. Refuses a
-    * duplicate tag (O_EXCL create, the marker primitive). Versioned
-    * layout only: FlatDir compaction swaps the whole table directory, so
-    * nothing survives to pin.
+  /** `ALTER TABLE name FREEZE WITH NAME tag`: tag the head's log position
+    * as snapshot `tag`. O(1) — one small file, no data copied, published
+    * with the log's own exclusive step, so a duplicate tag is refused.
     */
   def freeze(name: String, tag: String): Unit =
     writeLock(name).synchronized {
       val t = get(name)
-      require(t.layout == Versioned,
-        s"$name: FREEZE requires the Versioned layout (FlatDir swaps " +
-          "the whole directory out from under any snapshot)")
       require(tag.matches("[A-Za-z0-9_.-]+"),
         s"$name: snapshot tag must be [A-Za-z0-9_.-]+ (got '$tag')")
-      recoverInterruptedSwap(t)
-      withCompactLock(t) {
-        import org.apache.hadoop.fs.Path
-        val f = fs(t)
-        val segNames = committedSegments(t)
-        val curV = currentVersion(t)
-        val segs = segNames.filterNot(foldedOf(t, curV))
-        val ver = if (f.exists(new Path(t.path, curV))) Some(curV) else None
-        // pending deletion vectors are part of the frozen read set:
-        // readSnapshot replays exactly these, and compaction's dv GC
-        // retains them while this snapshot pins them
-        val dvNames = currentDvDirs(t).map(p => new Path(p).getName)
-        import org.json4s.JsonDSL._
-        import org.json4s.jackson.JsonMethods
-        val json = JsonMethods.compact(JsonMethods.render(
-          ("tag" -> tag) ~ ("version" -> ver) ~ ("segments" -> segs.sorted) ~
-            ("dv" -> dvNames.sorted) ~
-            ("ts_ms" -> System.currentTimeMillis())))
-        f.mkdirs(snapshotsDir(t))
-        val dst = snapshotJson(t, tag)
-        // stage-then-rename (the writeManifest pattern): a crash mid-write
-        // must never leave a truncated <tag>.json — snapshotPins parses
-        // every entry, so one corrupt file would wedge compaction and all
-        // partition DDL for the table until hand-deleted. The stage name
-        // doesn't end in .json, so listSnapshotRefs never reads it.
-        require(!f.exists(dst), s"$name: snapshot '$tag' already exists")
-        val tmp = new Path(snapshotsDir(t), s"$tag.tmp.$processTag")
-        val out = f.create(tmp, true)
-        try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        if (!f.rename(tmp, dst)) {
-          f.delete(tmp, false)
-          throw new java.io.IOException(
-            s"$name: snapshot '$tag' lost a race to a concurrent freeze")
-        }
-      }
+      val l = log(t)
+      require(l.addTag(LogTag(tag, l.head().n, System.currentTimeMillis())),
+        s"$name: snapshot '$tag' already exists")
     }
 
-  /** Read the table AS OF snapshot `tag` — the frozen version + segments
+  /** Read the table AS OF snapshot `tag` — the frozen files and masks
     * through the table's full read semantics (merge view, defaults,
-    * renames). The referenced directories exist as long as the snapshot
-    * does (GC pins them).
+    * renames).
     */
   def readSnapshot(name: String, tag: String): DataFrame = {
     val t = get(name)
-    val f = fs(t)
-    val p = snapshotJson(t, tag)
-    if (!f.exists(p))
-      throw new NoSuchElementException(s"$name: no snapshot '$tag'")
-    val r = readSnapshotRef(t, p)
-    val paths = (r.version.toSeq ++ r.segments)
-      .map(n => new org.apache.hadoop.fs.Path(t.path, n).toString)
-    // the mask AS OF the freeze — not the live one: deletes issued after
-    // the freeze must not edit the frozen view, and the frozen dv dirs
-    // are GC-pinned while this manifest exists
-    val dvPaths = r.dvs
-      .map(n => new org.apache.hadoop.fs.Path(dvRoot(t), n).toString)
-    if (paths.isEmpty) readVia(t, Seq(dataPath(t))).limit(0)
-    else readViaDv(t, paths, dvPaths)
+    val l = log(t)
+    val g = l.tag(tag).getOrElse(throw new NoSuchElementException(s"$name: no snapshot '$tag'"))
+    readVia(t, l.entry(g.position))
   }
 
-  /** Drop snapshot `tag` — one file delete; the next compact collects the
-    * directories it pinned (unless another snapshot still pins them).
+  /** Drop snapshot `tag` — one file delete; the next rewrite collects the
+    * files it pinned (unless another snapshot still reaches them).
     * Returns false when no such snapshot existed.
     */
   def dropSnapshot(name: String, tag: String): Boolean =
-    writeLock(name).synchronized {
-      fs(get(name)).delete(snapshotJson(get(name), tag), false)
-    }
+    writeLock(name).synchronized(log(get(name)).dropTag(tag))
 
-  /** `system.snapshots`-style listing: (tag, version, n_segments, ts_ms). */
+  /** `system.snapshots`-style listing: (tag, position, files, ts_ms). */
   def systemSnapshots(name: String): DataFrame = {
     import spark.implicits._
-    listSnapshotRefs(get(name))
-      .map(r => (r.tag, r.version.getOrElse(""), r.segments.size.toLong, r.tsMs))
-      .toDF("tag", "version", "n_segments", "ts_ms")
+    val l = log(get(name))
+    l.tags().map(g => (g.tag, g.position, l.entry(g.position).files.size.toLong, g.tsMs))
+      .toDF("tag", "position", "files", "ts_ms")
   }
 
-  /** COW guard for in-place partition DDL: run `body` holding the
-    * table's compact lock with a GUARANTEE that no live data directory
-    * is snapshot-pinned. The pin check runs INSIDE the lock — freeze()
-    * also takes it, so a cross-process freeze cannot slip between the
-    * check and the mutation (checking before acquiring would let a
-    * snapshot taken in that window get its frozen view edited in
-    * place). When pins are found, the lock is released, a compact rolls
-    * the live set onto fresh directories, and the acquire + check
-    * retries. Caller holds the write lock but NOT the compact lock.
-    */
-  private def withCowCompactLock[T](name: String)(body: => T): T = {
-    var attempt = 0
-    while (attempt < 6) {
-      val t = get(name)
-      val res = withCompactLock(t) {
-        if (t.layout != Versioned) Some(body)
-        else {
-          val live = dataPaths(t)
-            .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
-          if (snapshotPins(t).intersect(live).isEmpty) Some(body) else None
-        }
-      }
-      res match {
-        case Some(v) => return v
-        case None => attempt += 1; compact(name)
-      }
-    }
-    throw new IllegalStateException(
-      s"$name: live directories remain snapshot-pinned after $attempt COW compacts")
-  }
-
-  /** `ALTER TABLE name DROP PARTITION value` — removes the partition's
-    * directories from every live data path. Returns the number of
-    * directories removed (0 = no such partition anywhere: a no-op, like
-    * dropping an empty partition). Takes the write lock THEN the compact
-    * lock (mutate's order): a concurrent compact folds a snapshot of the
-    * old paths into the next version, which would resurrect the partition
-    * it raced with.
+  /** `ALTER TABLE name DROP PARTITION value` — publishes the head without
+    * the partition's files. Returns the number of directories dropped
+    * (0 = no such partition: a no-op, like dropping an empty partition).
     */
   def dropPartition(name: String, value: Any): Int =
     writeLock(name).synchronized {
       val t = get(name)
-      val leaf = partitionLeaf(t, value)
-      recoverInterruptedSwap(t)
-      withCowCompactLock(name) { // pin check runs inside the lock
-        val f = fs(t)
-        val targets = dataPaths(t)
-          .map(new org.apache.hadoop.fs.Path(_, leaf)).filter(f.exists)
-        targets.foreach(p => f.delete(p, true))
-        recordMutation(t, s"ALTER DROP PARTITION $leaf")
-        targets.size
-      }
+      val dirs = unlinkPartition(t, log(t), value)(None)
+      recordMutation(t, s"ALTER DROP PARTITION ${partitionLeaf(t, value)}")
+      dirs
     }
 
-  /** `ALTER TABLE name DETACH PARTITION value` — moves the partition's
-    * directories (data files plus their `_idx` sidecars, which live
-    * inside) into `<path>.detached/<bucket>/key=value` with one atomic
-    * rename per source directory. Returns directories detached.
+  /** `ALTER TABLE name DETACH PARTITION value` — publishes the head without
+    * the partition's files, then moves each of its directories (data
+    * files plus their `_idx` sidecars, which live inside) into
+    * `<path>.detached/<bucket>/key=value` (the moves doc above the
+    * partition verbs). Returns directories detached.
     */
   def detachPartition(name: String, value: Any): Int =
     writeLock(name).synchronized {
       val t = get(name)
       val leaf = partitionLeaf(t, value)
-      recoverInterruptedSwap(t)
+      val l = log(t)
       // deletion-vector pairs address file PATHS; a detached dir comes
       // back under a different path, so pending masks would silently
-      // un-delete on re-attach — materialize them first (the COW-compact
-      // pattern; rare maintenance verb, correctness over constant time)
-      if (currentDvDirs(t).nonEmpty) compact(name)
-      withCowCompactLock(name) { // pin check runs inside the lock
-        import org.apache.hadoop.fs.Path
-        val f = fs(t)
-        require(currentDvDirs(get(name)).isEmpty,
-          s"$name: a concurrent lightweight DELETE landed mid-detach — retry")
-        val srcs = dataPaths(t).map(new Path(_, leaf)).filter(f.exists)
-        srcs.foreach { src =>
-          val bucket = new Path(detachedRoot(t),
-            s"d-$processTag-${java.util.UUID.randomUUID().toString.take(8)}")
-          f.mkdirs(bucket)
-          if (!f.rename(src, new Path(bucket, leaf)))
-            throw new java.io.IOException(
-              s"$name: detach failed to move $src into $bucket")
-        }
-        recordMutation(t, s"ALTER DETACH PARTITION $leaf")
-        srcs.size
-      }
+      // un-delete on re-attach — materialize them first
+      if (l.head().dvs.nonEmpty) compact(name)
+      val bucket = s"d-${TableLog.processTag}-${java.util.UUID.randomUUID().toString.take(8)}"
+      val dirs = unlinkPartition(t, l, value)(Some((d, i) => LogMove(d.toString,
+        l.f.makeQualified(new org.apache.hadoop.fs.Path(detachedRoot(t), s"$bucket-$i/$leaf")).toString,
+        None)))
+      recordMutation(t, s"ALTER DETACH PARTITION $leaf")
+      dirs
     }
 
   /** `ALTER TABLE name ATTACH PARTITION value` — re-adopts every detached
-    * bucket holding this value. Versioned tables commit each bucket
-    * through the SAME atomic segment-marker protocol as multi-writer
-    * appends (stage dir → O_EXCL marker), so a reader never sees a
-    * half-attached partition and a crash before the marker leaves the
-    * stage invisible (age-GC'd like any abandoned append stage). FlatDir
-    * tables rename the partition dir back, merging file-by-file if the
-    * partition was re-created by later appends. Returns buckets attached.
+    * bucket holding this value (the moves doc above the partition verbs).
+    * Returns buckets attached.
     */
   def attachPartition(name: String, value: Any): Int =
     writeLock(name).synchronized {
+      import org.apache.hadoop.fs.Path
       val t = get(name)
       val leaf = partitionLeaf(t, value)
-      recoverInterruptedSwap(t)
-      withCompactLock(t) {
-        import org.apache.hadoop.fs.Path
-        val f = fs(t)
-        val root = detachedRoot(t)
-        val buckets =
-          if (!f.exists(root)) Seq.empty[Path]
-          else f.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath)
+      val l = log(t)
+      val f = l.f
+      // the buckets are listed after the head's pending moves settled (a
+      // crashed DETACH's bucket appears there), and move into one `m-`
+      // directory of the table whose files the settling commit lists
+      val dir = l.stage("m")
+      var buckets = Seq.empty[Path]
+      l.commit(t.name) { h =>
+        buckets =
+          try f.listStatus(detachedRoot(t)).toSeq.filter(_.isDirectory).map(_.getPath)
             .filter(b => f.exists(new Path(b, leaf)))
-        buckets.foreach { b =>
-          adoptPartitionDir(t, leaf, new Path(b, leaf))
-          f.delete(b, true) // now-empty bucket
-        }
-        recordMutation(t, s"ALTER ATTACH PARTITION $leaf")
-        buckets.size
+          catch { case _: java.io.FileNotFoundException => Nil }
+        if (buckets.isEmpty) None
+        else Some(h.copy(moves = buckets.zipWithIndex.map { case (b, i) =>
+          LogMove(new Path(b, leaf).toString, new Path(new Path(dir, s"p$i"), leaf).toString,
+            Some(l.root.toString))
+        }))
       }
+      if (buckets.nonEmpty) l.commit(t.name)(Some(_))
+      buckets.foreach(f.delete(_, true)) // now-empty buckets
+      recordMutation(t, s"ALTER ATTACH PARTITION $leaf")
+      buckets.size
     }
-
-  /** Adopt one `key=value` directory (data files + `_idx` sidecars) into
-    * `t` — the shared commit path of ATTACH and MOVE PARTITION. Caller
-    * holds t's write + compact locks. Versioned: stage as a fresh segment
-    * dir, then the O_EXCL marker create commits it atomically (the
-    * multi-writer append protocol — readers never see a half-adopted
-    * partition). FlatDir: rename the dir in, merging file-by-file if
-    * later appends re-created the partition.
-    */
-  private def adoptPartitionDir(t: TableDef, leaf: String,
-                                src: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    t.layout match {
-      case Versioned =>
-        // fallback-soundness pin, same as append(): manifest present
-        // from the first write on
-        if (!f.exists(manifestPath(t)))
-          writeManifest(t, currentVersion(t))
-        val seg = s"seg-$processTag-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        val segDir = new Path(t.path, seg)
-        f.mkdirs(segDir)
-        if (!f.rename(src, new Path(segDir, leaf)))
-          throw new java.io.IOException(
-            s"${t.name}: failed to stage $src as segment $seg")
-        f.mkdirs(segMarkerDir(t))
-        val out = f.create(new Path(segMarkerDir(t), seg), false)
-        try out.write(
-          processTag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        // same GC-nomination void as append(): the marker made the
-        // segment live, so no orphan tombstone may outlive it
-        f.delete(new Path(segMarkerDir(t), seg + ".orphan"), false)
-      case FlatDir =>
-        val dst = new Path(t.path, leaf)
-        if (!f.exists(dst)) {
-          f.mkdirs(new Path(t.path))
-          if (!f.rename(src, dst))
-            throw new java.io.IOException(
-              s"${t.name}: failed to move $src into the table")
-        } else {
-          // the partition already exists here: merge children by name
-          // (Spark part files carry a per-job UUID, so collisions don't
-          // arise from distinct writes; a stale same-name leftover gets
-          // a uniquifying prefix). `_idx` exists on BOTH sides whenever
-          // both had sidecars — its CONTENTS merge (sidecar names embed
-          // their data file's unique name); renaming the dir itself
-          // would surface a non-underscore copy to the scan.
-          def merge(srcDir: Path, dstDir: Path): Unit =
-            f.listStatus(srcDir).foreach { st =>
-              val tgt0 = new Path(dstDir, st.getPath.getName)
-              if (st.isDirectory && f.exists(tgt0)) merge(st.getPath, tgt0)
-              else {
-                val tgt =
-                  if (!f.exists(tgt0)) tgt0
-                  else new Path(dstDir,
-                    s"att-${java.util.UUID.randomUUID().toString.take(8)}-" +
-                      st.getPath.getName)
-                if (!f.rename(st.getPath, tgt))
-                  throw new java.io.IOException(
-                    s"${t.name}: failed to merge ${st.getPath}")
-              }
-            }
-          merge(src, dst)
-          f.delete(src, true)
-        }
-    }
-  }
 
   /** `ALTER TABLE src MOVE PARTITION value TO TABLE dst` — transfers the
-    * partition's directories from one table to another by rename:
+    * partition's directories from one table to another by rename (the
+    * moves doc above the partition verbs):
     * O(partition dirs), no data copy, the ClickHouse cross-table
     * partition move. Requires identical column shape and partition keys
     * (same contract as ClickHouse: structurally equal tables). Both
-    * tables' write + compact locks are taken in path order (one global
-    * order → no deadlock against a concurrent reverse move); COW against
-    * source snapshots like every in-place partition verb. Returns the
-    * number of directories moved.
+    * tables' write locks are taken in path order (one global order → no
+    * deadlock against a concurrent reverse move). A file a source FREEZE
+    * reaches is copied, not moved. Returns the number of directories
+    * moved.
     */
   def movePartition(srcName: String, dstName: String, value: Any): Int = {
-    import org.apache.hadoop.fs.Path
     val (first, second) =
       if (get(srcName).path <= get(dstName).path) (srcName, dstName)
       else (dstName, srcName)
@@ -4569,237 +3935,21 @@ final class Catalog(spark: SparkSession) {
           s"MOVE PARTITION $srcName -> $dstName: partition keys differ " +
             s"(${s.partitionKeys} vs ${d.partitionKeys})")
         val leaf = partitionLeaf(s, value)
-        recoverInterruptedSwap(s)
-        recoverInterruptedSwap(d)
+        val l = log(s)
         // masks are path-addressed and do not travel with moved dirs —
         // materialize the source's pending deletes first (see detach)
-        if (currentDvDirs(s).nonEmpty) compact(srcName)
-        withCowCompactLock(srcName) { // source pin check inside its lock
-          withCompactLock(d) {
-            val f = fs(s)
-            require(currentDvDirs(get(srcName)).isEmpty,
-              s"$srcName: a concurrent lightweight DELETE landed mid-move — retry")
-            val srcs = dataPaths(s).map(new Path(_, leaf)).filter(f.exists)
-            srcs.foreach(adoptPartitionDir(d, leaf, _))
-            recordMutation(s, s"ALTER MOVE PARTITION $leaf TO TABLE $dstName")
-            recordMutation(d, s"ALTER ATTACH PARTITION $leaf (moved from $srcName)")
-            srcs.size
-          }
-        }
+        if (l.head().dvs.nonEmpty) compact(srcName)
+        // the directories go under one `m-` directory of the destination,
+        // which its own sweep leaves alone while the move is in flight
+        val into = log(d)
+        val dir = into.stage("m")
+        val n = unlinkPartition(s, l, value)(Some((src, i) => LogMove(src.toString,
+          new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(dir, s"p$i"), leaf).toString,
+          Some(into.root.toString))))
+        recordMutation(s, s"ALTER MOVE PARTITION $leaf TO TABLE $dstName")
+        recordMutation(d, s"ALTER ATTACH PARTITION $leaf (moved from $srcName)")
+        n
       }
-    }
-  }
-
-  private def compactFlat(t: TableDef,
-                          transform: DataFrame => DataFrame = identity): Unit = {
-    import org.apache.hadoop.fs.Path
-    val name = t.name
-    val path = new Path(t.path)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new Path(t.path + ".compact.tmp")
-    val old = new Path(t.path + ".compact.old")
-    recoverInterruptedSwap(t)
-    // nothing written yet (no data AND no swap artifacts to recover):
-    // compacting or mutating an empty table is a DATA no-op — but the
-    // transform still runs once against an empty frame of the declared
-    // schema, so update()'s unknown-column require and mutate()'s shape
-    // check fail as loudly on a fresh table as on a populated one
-    if (!fs.exists(path)) { transform(emptyFrame(t)); return }
-    // only stale leftovers remain now that the table path exists
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    val merged = transform(read(name))
-    writeData(t, clusteredFor(t, merged, forCompact = true), tmp.toString)
-    // the _TABLE definition sidecar rides the swap ATOMICALLY: written
-    // into the staging dir before the rename, so no crash point leaves a
-    // healthy data dir without its persisted definition. NOT best-effort
-    // here — a failure aborts the swap with the table intact.
-    writeTableDef(tables.getOrElse(name, t), tmp.toString)
-    // Hadoop rename reports failure by returning false, not throwing —
-    // check each step so a failed swap is loud, never a silent no-op
-    require(fs.rename(path, old), s"compact($name): rename $path -> $old failed")
-    require(fs.rename(tmp, path), s"compact($name): rename $tmp -> $path failed")
-    fs.delete(old, true)
-    // the rewrite read through the deletion-vector mask, so the swapped-in
-    // files already exclude the masked rows — the applied dvs are done
-    clearAppliedDvs(t)
-  }
-
-  /** Manifest-commit compact for [[Versioned]] tables (the object-store
-    * path): GC orphan versions from any crashed predecessor, write the
-    * merged output to the NEXT version dir, then commit by flipping the
-    * one-line `_CURRENT` manifest. The flip is tmp-file + delete + rename —
-    * single small FILE operations (on a store without rename, a
-    * conditional/overwrite PUT of `_CURRENT` is the drop-in analog); the
-    * brief manifest-absent window is covered by [[currentVersion]]'s
-    * highest-complete-version fallback. Readers never see a missing or
-    * half-written table at any point.
-    */
-  private def compactVersioned(t: TableDef,
-                               transform: DataFrame => DataFrame = identity): Unit = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    val cur = currentVersion(t)
-    // Pin the manifest BEFORE any new version dir exists: the
-    // highest-complete-version fallback is only sound while "manifest
-    // absent" implies "successor fully written" — without this, a crash
-    // midway through the very first compact's v1 write (no manifest ever
-    // created) would make readers fall back onto the half-written v1.
-    if (!f.exists(manifestPath(t))) writeManifest(t, cur)
-    // orphans = every version dir except the live one: a fully written
-    // successor whose flip crashed (made live by the fallback, so not
-    // matched here), a half-written compact output, or the version the
-    // PREVIOUS compact displaced — retained until now as a read grace
-    // window (Spark reads are lazy: a scan that resolved its path just
-    // before that flip may still be running; deleting eagerly would fail
-    // it mid-job with FileNotFoundException). Snapshot-pinned versions
-    // are NOT garbage: they stay until their snapshot drops (FREEZE).
-    val pinned = snapshotPins(t)
-    listVersions(t).filter(_ != cur).filterNot(pinned)
-      .foreach(v => f.delete(new Path(t.path, v), true))
-    // crashed writers' abandoned manifest staging files. Age-gated: a
-    // peer process's append() may be pinning the manifest RIGHT NOW
-    // (writeManifest stages for milliseconds, guarded only by its own
-    // JVM's writeLock, not this compact lock) — only tmp files old enough
-    // to be certainly dead are collected
-    f.listStatus(new Path(t.path)).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_CURRENT.tmp") &&
-        System.currentTimeMillis() - s.getModificationTime > staleLockMs)
-      .foreach(s => f.delete(s.getPath, false))
-    // segments the PREVIOUS compact folded (`.folded` tombstones): their
-    // dirs were retained one cycle as the reader grace window — collect
-    // them now, the same retention versions get. A snapshot-pinned
-    // segment keeps BOTH its dir and its tombstone (so a later compact
-    // retries once the pin is gone).
-    val segMd = segMarkerDir(t)
-    if (f.exists(segMd)) f.listStatus(segMd).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".folded"))
-      .filterNot(s => pinned(s.getPath.getName.stripSuffix(".folded")))
-      .foreach { s =>
-        f.delete(new Path(t.path, s.getPath.getName.stripSuffix(".folded")), true)
-        f.delete(s.getPath, false)
-      }
-    // finish a crashed unmark: segments the CURRENT version already
-    // absorbed (its _FOLDED list) but whose markers survived a crash
-    // between the manifest flip and the unmark loop — readers already
-    // exclude them via foldedOf, but the markers must go before this
-    // compact snapshots, or the rows would fold twice
-    foldedOf(t, cur).foreach { s =>
-      val m = new Path(segMd, s)
-      if (f.exists(m)) {
-        f.delete(m, false)
-        f.create(new Path(segMd, s + ".folded"), true).close()
-      }
-    }
-    // crashed appends: a stage dir with NO commit marker (and no
-    // tombstone) is invisible to readers. TWO-phase, not a one-shot age
-    // gate: a peer's data write can legitimately run longer than any
-    // fixed age (the staging dir's mtime is set at creation, not
-    // refreshed), so this compact only NOMINATES an old unmarked dir
-    // (`.orphan` tombstone); a LATER compact deletes it only if it is
-    // still unmarked, the nomination itself has aged past staleLockMs,
-    // and nothing inside the dir has been written for staleLockMs (the
-    // newest-file mtime is the writer's heartbeat). A writer that
-    // eventually commits voids its nomination in commitSegment.
-    val committed = committedSegments(t).toSet
-    f.listStatus(new Path(t.path)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("seg-") &&
-        !committed(s.getPath.getName) &&
-        !f.exists(new Path(segMd, s.getPath.getName + ".folded")) &&
-        System.currentTimeMillis() - s.getModificationTime > staleLockMs)
-      .foreach { s =>
-        val seg = s.getPath.getName
-        val orphan = new Path(segMd, seg + ".orphan")
-        if (!f.exists(orphan)) {
-          f.mkdirs(segMd)
-          f.create(orphan, true).close()
-        } else if (System.currentTimeMillis() -
-                     f.getFileStatus(orphan).getModificationTime > staleLockMs) {
-          val newest = {
-            val it = f.listFiles(s.getPath, true)
-            var m = s.getModificationTime
-            while (it.hasNext) m = math.max(m, it.next().getModificationTime)
-            m
-          }
-          if (System.currentTimeMillis() - newest > staleLockMs) {
-            f.delete(s.getPath, true)
-            f.delete(orphan, false)
-          }
-        }
-      }
-    // nothing written yet (no version data AND no committed segments):
-    // data no-op, but validate the transform (see the compactFlat twin of
-    // this guard)
-    val curExists = f.exists(new Path(t.path, cur))
-    if (!curExists && committed.isEmpty) {
-      transform(emptyFrame(t)); return
-    }
-    // fold the SNAPSHOTTED segments only: a segment committed by a
-    // concurrent append after the snapshot keeps its marker — still
-    // visible to every reader now, folded by the next compact; folding a
-    // re-listed superset instead would both fold it AND leave it marked
-    // (duplicated rows)
-    val snapPaths = (if (curExists) Seq(new Path(t.path, cur).toString) else Nil) ++
-      committed.toSeq.sorted.map(s => new Path(t.path, s).toString)
-    val merged = transform(readVia(t, snapPaths))
-    val next = s"v${versionNum(cur) + 1}"
-    writeData(t, clusteredFor(t, merged, forCompact = true), new Path(t.path, next).toString)
-    // record what this version absorbed BEFORE it can become current:
-    // readers subtract the _FOLDED set from the committed-segment list
-    // (see foldedOf), so the flip below hides the folded segments in the
-    // SAME atomic step that exposes their rows in the new version — no
-    // double-count window, for Append semantics too, and a crash before
-    // the unmark loop below is fully recoverable
-    if (committed.nonEmpty) {
-      val out = f.create(new Path(new Path(t.path, next), "_FOLDED"), true)
-      try out.write(committed.toSeq.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    writeManifest(t, next)
-    // unmark the folded segments (hidden from new readers) and tombstone
-    // them for the next compact's GC; their dirs — like the displaced
-    // version dir — are NOT deleted here, staying readable until then so
-    // in-flight readers that resolved their paths pre-flip finish cleanly
-    committed.foreach { s =>
-      // marker first, tombstone second: a crash in between leaves an
-      // unmarked dir for the age-gated GC — tombstone-first would let the
-      // next compact delete a dir whose live marker still names it
-      f.delete(new Path(segMarkerDir(t), s), false)
-      f.create(new Path(segMarkerDir(t), s + ".folded"), true).close()
-    }
-    // every dv existing at this compact's start addressed segments/versions
-    // the fold just absorbed (deleteLightweight serializes on the compact
-    // lock, so none arrived mid-fold) — materialized, collect them
-    clearAppliedDvs(t)
-  }
-
-  /** Atomically (re)point `_CURRENT` at a version: tmp file + delete +
-    * rename — single small FILE operations (on a store without rename, a
-    * conditional/overwrite PUT of `_CURRENT` is the drop-in analog). The
-    * brief manifest-absent window between delete and rename is covered by
-    * [[currentVersion]]'s highest-complete-version fallback.
-    *
-    * Cross-process safety: the staging name is process-unique, so two
-    * JVMs pinning the same fresh table can't clobber each other's tmp. If
-    * the final rename loses a race (HDFS rename onto an existing
-    * destination returns false), the flip re-reads the manifest: the same
-    * version there means the peer committed the identical pin — success;
-    * a different version is a genuine conflicting commit and fails loudly.
-    */
-  private def writeManifest(t: TableDef, version: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    val m = manifestPath(t)
-    val tmp = new Path(t.path, s"_CURRENT.tmp.$processTag")
-    val out = f.create(tmp, true)
-    try out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    f.delete(m, false)
-    if (!f.rename(tmp, m)) {
-      f.delete(tmp, false)
-      require(f.exists(m) && currentVersion(t) == version,
-        s"${t.name}: manifest flip to $version lost a race to a conflicting commit")
     }
   }
 

@@ -68,15 +68,13 @@ final class DistributedCatalog(spark: SparkSession, cat: Catalog) {
     */
   def create(name: String, path: String, schema: StructType,
              sortKeys: Seq[String], semantics: EngineSemantics,
-             shardKey: String, nShards: Int,
-             layout: TableLayout = FlatDir): DistributedDef = {
+             shardKey: String, nShards: Int): DistributedDef = {
     require(nShards >= 1, s"$name: need at least one shard (got $nShards)")
     require(schema.fieldNames.contains(shardKey),
       s"$name: sharding key $shardKey is not in the schema")
     val members = (0 until nShards).map(i => s"${name}_shard$i")
     members.zipWithIndex.foreach { case (m, i) =>
-      cat.createTable(TableDef(m, s"$path/shard$i", schema, sortKeys,
-        semantics, layout))
+      cat.createTable(TableDef(m, s"$path/shard$i", schema, sortKeys, semantics))
     }
     val d = DistributedDef(name, path, shardKey, members,
       memberBase = name)

@@ -70,9 +70,8 @@ object IndexKind {
   * The shared contract:
   *   - '''Sidecars.''' Each kind keeps one sidecar per data file per
   *     declared column at `<dir>/_idx/<file>.<column><suffix>`, beside the
-  *     file it describes. The `_` prefix hides it from Spark's scans, and it
-  *     travels with its directory through compact swaps, manifest flips,
-  *     segment GC and partition moves.
+  *     file it describes. The `_` prefix hides it from listings, and it
+  *     travels with its directory through partition moves and GC.
   *   - '''Fail open.''' A pruned read drops a file only when its sidecar
   *     says no row can match ([[survives]] is false). A file without a
   *     sidecar, an overflow marker, or an unprunable value is kept, and the
@@ -82,13 +81,12 @@ object IndexKind {
   *     Summing, Aggregating, Collapsing) needs every file of a key group,
   *     and a partitioned table already prunes by directory and reads its
   *     partition values from directory names, so pruned reads refuse both.
-  *   - '''Discovery is the missing sidecar.''' Every append and every
-  *     `MATERIALIZE INDEX` indexes exactly the files one [[Listing]] shows
-  *     without their sidecar. That same rule is crash recovery (a crash
-  *     between the data commit and the sidecar write leaves files that the
-  *     next append indexes) and the backfill after `ADD INDEX`. Every
-  *     indexed file gets a sidecar, also when it holds no value to index,
-  *     so no file is scanned twice.
+  *   - '''Discovery is the missing sidecar.''' Every commit indexes the
+  *     files it wrote before it publishes them, and `MATERIALIZE INDEX`
+  *     indexes exactly the live files one [[Listing]] shows without their
+  *     sidecar — the backfill after `ADD INDEX`. Every indexed file gets a
+  *     sidecar, also when it holds no value to index, so no file is
+  *     scanned twice.
   */
 sealed trait SkipIndex extends IndexKind {
   /** The index as refusals name it: "no <label> declared on <column>";
@@ -135,7 +133,7 @@ object SkipIndex {
     spark.read.schema(StructType(cols.distinct.map(c => t.schema(c))))
       .parquet(files.map(_.toString): _*)
 
-  /** Write every sidecar still missing under `dir` (optionally only the
+  /** Write every sidecar `listing` shows missing (optionally only the
     * one `(kind, column)` a MATERIALIZE INDEX names), in a fixed number of
     * jobs whatever the file count:
     *   - one per-file aggregate over the files missing a bloom, token or
@@ -148,14 +146,13 @@ object SkipIndex {
     * written here.
     */
   private[catalog] def maintain(spark: SparkSession, f: FileSystem, t: TableDef,
-                                dir: String,
+                                listing: Listing,
                                 only: Option[(SkipIndex, String)] = None): Unit = {
     val slots = for {
       k <- all
       c <- k.columns(t) if t.schema.fieldNames.contains(c) && only.forall(_ == (k -> c))
     } yield (k, c)
     if (slots.isEmpty) return
-    val listing = Listing.of(f, Seq(dir))
     def missing(kinds: Set[SkipIndex]): Seq[Path] =
       listing.files.map(_.getPath).filter(p => slots.exists { case (k, c) =>
         kinds(k) && !listing.has(sidecar(p, c, k.suffix))
@@ -292,7 +289,7 @@ object Listing {
       else if (n.endsWith(".parquet")) files += s
     }
     roots.foreach { r =>
-      // a never-written root (fresh Versioned table, first segment) is empty
+      // a never-written root is empty
       visit(try f.listStatus(new Path(r)) catch { case _: FileNotFoundException => Array.empty })
     }
     Listing(files.result(), sidecars.result())

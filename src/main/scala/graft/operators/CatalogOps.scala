@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.catalog.{Append, BufferedTable, Catalog, Collapsing, FlatDir, JoinAny, NullEngine, ReplacingDedup, Summing, TableDef, TableLayout, Versioned}
+import graft.catalog.{Append, BufferedTable, Catalog, Collapsing, JoinAny, NullEngine, ReplacingDedup, Summing, TableDef}
 import graft.plans.{ProjectionDef, RollupRewrite, SortedProjectionDef, SortedProjectionRewrite}
 
 /** The Catalog's clustered write path exercised FROM the query suite —
@@ -82,9 +82,6 @@ object CatalogOps extends QueryModule {
     while (tmp != null) { deleteTree(tmp); tmp = copyDirs.poll() }
   }
 
-  /** Catalog copy of `src` under a fresh temp dir with the given layout —
-    * shared scaffolding for the storage-layout gate queries.
-    */
   /** Register a temp warehouse dir for the shutdown-hook GC — shared with
     * other modules that stage catalog copies (e.g. ChAggs' sketch MV).
     */
@@ -131,14 +128,13 @@ object CatalogOps extends QueryModule {
                              partitionKeys: Seq[String] = Nil,
                              indexCols: Seq[String] = Nil,
                              minmaxCols: Seq[String] = Nil,
-                             layout: TableLayout = FlatDir,
                              tokenIndexCols: Seq[String] = Nil): (Catalog, String) = {
     val cat = new Catalog(s)
     val tmp = scratchDir(s"graft-cat-$table")
     val path = tmp.resolve(table).toString
     cat.createTable(TableDef(table, path, src.schema,
       sortKeys = sortKeys, semantics = Append, partitionKeys = partitionKeys,
-      indexCols = indexCols, minmaxCols = minmaxCols, layout = layout,
+      indexCols = indexCols, minmaxCols = minmaxCols,
       tokenIndexCols = tokenIndexCols))
     cat.append(table, src)
     (cat, path)
@@ -367,14 +363,14 @@ object CatalogOps extends QueryModule {
           round(sum(col("value")), 2).as("sum_value"))
     }),
 
-    // FREEZE through the correctness gate: snapshot a Versioned copy of
+    // FREEZE through the correctness gate: snapshot a catalog copy of
     // orders, then DELETE a third of the live table, then aggregate the
     // SNAPSHOT — the oracle aggregates the original table, so equality
     // proves the frozen view is untouched by mutations that happened
     // after it (the O(1)-pin time-travel contract, not a data copy).
     "cat_snapshot_read" -> ((s, d) => {
       val (cat, _) = catalogCopyCat(s, "orders_frz", Tables.orders(s, d),
-        sortKeys = Seq("o_orderkey"), layout = Versioned)
+        sortKeys = Seq("o_orderkey"))
       cat.freeze("orders_frz", "pre")
       cat.delete("orders_frz", col("o_totalprice") > 150000)
       cat.readSnapshot("orders_frz", "pre")
@@ -1413,10 +1409,10 @@ object CatalogOps extends QueryModule {
             round(sum(col("o_totalprice")), 2).as("revenue"))
       cat.createTable(TableDef("rv_orders",
         tmp.resolve("rv_orders").toString, orders.schema,
-        Seq("o_orderkey"), Append, layout = Versioned))
+        Seq("o_orderkey"), Append))
       cat.createTable(TableDef("rv_rollup",
         tmp.resolve("rv_rollup").toString, rollup(orders.limit(0)).schema,
-        Seq("c_nationkey"), Append, layout = Versioned))
+        Seq("c_nationkey"), Append))
       cat.append("rv_orders", orders.filter(col("o_orderkey") % 2 === 0))
       cat.createRefreshableView("rv_view", "rv_rollup", 60000L,
         _ => rollup(cat.read("rv_orders")))

@@ -23,6 +23,20 @@ final case class ProjectionDef(basePath: String, rollupPath: String,
                                dims: Seq[String], cntCol: String,
                                sumCols: Map[String, String] = Map.empty)
 
+/** The base a scan reads, as the projection registries key it: a catalog
+  * table's log index names its table only when it scans the whole live
+  * head (a snapshot, pruned or rewrite-input scan names none); any other
+  * file index names its single root path (a multi-path read contains rows
+  * a projection of one path never saw).
+  */
+private[plans] object ScanBase {
+  def of(rel: HadoopFsRelation): Option[String] = rel.location match {
+    case l: graft.catalog.LogFileIndex => l.liveTable
+    case loc if loc.rootPaths.length == 1 => Some(loc.rootPaths.head.toString)
+    case _ => None
+  }
+}
+
 /** ClickHouse-PROJECTION analog: automatic rollup selection as a Catalyst
   * optimizer rule (reference engine feature class; clickhub's
   * `github_stars_mv` is the manual version of exactly this rewrite).
@@ -204,13 +218,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
   private def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
     val candidate = for {
       (filters, rel) <- unwrap(agg.child, Nil)
-      fsRel = rel.relation.asInstanceOf[HadoopFsRelation]
-      // single-root scans only: a multi-path read (parquet(base, other))
-      // contains rows the rollup never saw — rewriting on a head match
-      // would silently drop the other paths' rows
-      roots = fsRel.location.rootPaths
-      if roots.length == 1
-      cands <- Option(registry.get(canon(roots.head.toString)))
+      base <- ScanBase.of(rel.relation.asInstanceOf[HadoopFsRelation])
+      cands <- Option(registry.get(canon(base)))
       // among the base's registered rollups, the NARROWEST eligible one
       // (fewest dims = fewest groups = smallest companion scan) wins
       proj <- cands.filter(eligible(agg, filters, _))

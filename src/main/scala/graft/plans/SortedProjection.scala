@@ -33,7 +33,7 @@ final case class SortedProjectionDef(basePath: String, projPath: String,
   * any plan shape; the gates below are about PROFIT and degradation:
   *   - only scans reached through pruning Projects/Filters (same unwrap
   *     discipline as [[RollupRewrite]]);
-  *   - single-root scans of exactly the registered base;
+  *   - scans of exactly the registered base's live data (`ScanBase`);
   *   - at least one conjunct is a comparison/IN on the sort key with
   *     foldable bounds (otherwise the sorted copy skips nothing);
   *   - the projection must carry every column the scan outputs with
@@ -49,7 +49,7 @@ object SortedProjectionRewrite extends Rule[LogicalPlan] {
   // file-index listing) is cached per (session, path) and VALIDATED by
   // the projection dir's modification time: a Catalog-MAINTAINED
   // projection changes on every append/compact, and serving the stale
-  // file listing would read deleted files after a compaction swap. A
+  // file listing would read deleted files after a compaction. A
   // stat that fails (dir missing mid-rebuild, object store without dir
   // mtimes) drops the cache and re-resolves — never serves stale.
   private val relCache =
@@ -149,10 +149,8 @@ object SortedProjectionRewrite extends Rule[LogicalPlan] {
   private def trySwap(top: Filter): Option[LogicalPlan] = {
     val candidate = for {
       (conds, rel) <- unwrap(top, Nil)
-      fsRel = rel.relation.asInstanceOf[HadoopFsRelation]
-      roots = fsRel.location.rootPaths
-      if roots.length == 1
-      proj <- Option(registry.get(canon(roots.head.toString)))
+      base <- ScanBase.of(rel.relation.asInstanceOf[HadoopFsRelation])
+      proj <- Option(registry.get(canon(base)))
       if conds.flatMap(conjuncts).exists(selectiveOnKey(_, proj.sortKey))
     } yield (rel, proj)
 

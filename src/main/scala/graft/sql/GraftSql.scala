@@ -218,7 +218,7 @@ object GraftSql {
     val old = sqlFunctions.put(name, SqlFnDef(params, body))
     try s.sql(expandFunctions(probe)).queryExecution.analyzed
     catch {
-      case e: Throwable =>
+      case scala.util.control.NonFatal(e) =>
         old match {
           case Some(o) => sqlFunctions.put(name, o)
           case None => sqlFunctions.remove(name)

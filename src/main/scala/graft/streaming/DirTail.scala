@@ -22,15 +22,15 @@ import graft.catalog.Catalog
   *
   *  1. `_tail/<source>/intent-N.json` — the FROZEN read plan: per file,
   *     the byte range `[from, to)` where `to` is the last newline
-  *     boundary at or below the file's current length. O_EXCL create; a
+  *     boundary at or below the file's current length. Published if absent; a
   *     crashed run's intent is REUSED verbatim on restart (the file may
   *     have grown since — those bytes belong to batch N+1), which is
   *     what makes the replayed batch byte-identical.
   *  2. [[Catalog.appendIdempotent]] with token `<source>-N` — the data
   *     commit. A replay after a crash between 2 and 3 is DROPPED by the
-  *     token's marker CAS, never double-inserted.
+  *     token the table log's head holds, never double-inserted.
   *  3. `_tail/<source>/commit-N.json` — the offsets after N (cumulative
-  *     bytes/records/broken per partition). O_EXCL; deterministic from
+  *     bytes/records/broken per partition). Published if absent; deterministic from
   *     the intent, so a replayed write is byte-equivalent.
   *
   * Crash anywhere → the next poll reads the highest commit K, sees
@@ -51,7 +51,7 @@ import graft.catalog.Catalog
   * partition (`broken`) and dropped, CH's `kafka_skip_broken_messages`.
   *
   * One consumer per `sourceId` (a Kafka consumer group of size one):
-  * concurrent polls of the same source would race the intent O_EXCL —
+  * concurrent polls of the same source would race the intent publish —
   * the loser fails loudly rather than splitting a batch.
   */
 final class DirTail(spark: SparkSession, cat: Catalog, table: String,
@@ -77,13 +77,10 @@ final class DirTail(spark: SparkSession, cat: Catalog, table: String,
 
   // ---- offset/intent persistence (json4s, like the _TABLE sidecar) ----
 
+  // publish-if-absent: false when `p` already exists (a racing writer won)
   private def writeExcl(p: Path, body: String): Boolean =
-    try {
-      val out = fs(p).create(p, false)
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
+    graft.catalog.TableLog.publish(fs(p), p,
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   private def readJson(p: Path): org.json4s.JValue = {
     val in = fs(p).open(p)
@@ -401,7 +398,7 @@ final class DirTail(spark: SparkSession, cat: Catalog, table: String,
             ("records" -> s.records) ~ ("broken" -> s.broken))
         }.toMap)
       })
-    // O_EXCL: a roll-forward replay finds it already written (same
+    // publish-if-absent: a roll-forward replay finds it already written (same
     // deterministic content) — losing the race is success
     writeExcl(new Path(tailDir, s"commit-$n.json"), body)
   }

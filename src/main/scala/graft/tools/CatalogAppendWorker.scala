@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.catalog.{Append, Catalog, TableDef, Versioned}
+import graft.catalog.{Append, Catalog, TableDef}
 
-/** One writer PROCESS of the multi-writer Versioned append contract: a
+/** One writer PROCESS of the multi-writer append contract: a
   * fresh JVM, a fresh SparkSession, one Catalog append of `[lo, hi)` rows
   * to the shared table, exit 0 on success. CatalogSpec launches two of
   * these concurrently against one warehouse and asserts both batches
@@ -20,8 +20,7 @@ object CatalogAppendWorker {
       StructField("k", StringType, nullable = true),
       StructField("v", LongType, nullable = true))),
     sortKeys = Seq("k"),
-    semantics = Append,
-    layout = Versioned)
+    semantics = Append)
 
   def main(args: Array[String]): Unit = {
     val Array(warehouse, lo, hi) = args

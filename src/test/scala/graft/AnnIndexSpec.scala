@@ -25,6 +25,12 @@ class AnnIndexSpec extends SparkSpecBase {
       .filter(col("rnk") <= k).select(col("q_id"), col("n_id"))
   }
 
+  /** A companion table of the index, read through its own table log. */
+  private def companion(dir: String): org.apache.spark.sql.DataFrame = {
+    val c = new Catalog(spark)
+    c.readRaw(c.attach(dir).name)
+  }
+
   test("append maintains the IVF-PQ companion; probe meets the recall floor") {
     val cat = new Catalog(spark)
     val path = tmpDir("annidx") + "/emb_ann"
@@ -33,18 +39,22 @@ class AnnIndexSpec extends SparkSpecBase {
       annIndex = Some(AnnIndexDef("embedding"))))
     cat.append("emb_ann_s", embSrc)
     // the companion exists under the table path and codes every row
-    val codes = spark.read.parquet(path + "/_idx/ann/codes")
+    val codes = companion(path + "/_idx/ann/codes")
     codes.count() shouldBe embSrc.count()
     codes.columns.toSet shouldBe Set("id", "cell", "code", "encoded_at")
     // …without polluting the base table's own scan
     cat.read("emb_ann_s").count() shouldBe embSrc.count()
     cat.read("emb_ann_s").columns.toSeq shouldBe Seq("vec_id", "embedding")
     // every data file carries its .annenc marker (the incremental unit)
-    val dataFiles = new java.io.File(path).listFiles()
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    val dataFiles = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+        .map(_.toFile).filter(f => f.getName.endsWith(".parquet") &&
+          !f.getPath.stripPrefix(path + "/").startsWith("_")).toSeq
+    }
     dataFiles.length should be > 0
     dataFiles.foreach { f =>
-      new java.io.File(path + s"/_idx/${f.getName}.embedding.annenc")
+      new java.io.File(f.getParent + s"/_idx/${f.getName}.embedding.annenc")
         .exists() shouldBe true
     }
     // probe: k rows per query, and recall@5 over the documented floor
@@ -67,14 +77,14 @@ class AnnIndexSpec extends SparkSpecBase {
       annIndex = Some(AnnIndexDef("embedding"))))
     cat.append("emb_incr", embSrc.filter(col("vec_id") % 2 === 0))
     val qdir = path + "/_idx/ann/quantizers"
-    val t1 = spark.read.parquet(qdir).agg(max(col("trained_at"))).head().getLong(0)
-    val c1 = spark.read.parquet(path + "/_idx/ann/codes").count()
+    val t1 = companion(qdir).agg(max(col("trained_at"))).head().getLong(0)
+    val c1 = companion(path + "/_idx/ann/codes").count()
     cat.append("emb_incr", embSrc.filter(col("vec_id") % 2 === 1))
     // quantizer NOT retrained (the stale-quantizer IVF contract)…
-    spark.read.parquet(qdir).agg(max(col("trained_at"))).head()
+    companion(qdir).agg(max(col("trained_at"))).head()
       .getLong(0) shouldBe t1
     // …and only the new batch was encoded (codes grow by exactly it)
-    spark.read.parquet(path + "/_idx/ann/codes").count() shouldBe
+    companion(path + "/_idx/ann/codes").count() shouldBe
       embSrc.count()
     c1 should be < embSrc.count()
     // the probe sees both generations
@@ -120,7 +130,7 @@ class AnnIndexSpec extends SparkSpecBase {
     val extra = embSrc.filter(col("vec_id") < 10)
       .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
     cat2.append("emb_att", extra)
-    spark.read.parquet(path + "/_idx/ann/codes")
+    companion(path + "/_idx/ann/codes")
       .select(col("id")).distinct().count() shouldBe embSrc.count() + 10
   }
 

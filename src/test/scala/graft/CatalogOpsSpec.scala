@@ -32,7 +32,8 @@ class CatalogOpsSpec extends SparkSpecBase {
     val conf = spark.sessionState.newHadoopConf()
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(conf)
-    val blocks = fs.listStatus(dir).toSeq
+    val files = fs.listFiles(dir, true)
+    val blocks = Iterator.continually(files).takeWhile(_.hasNext).map(_.next()).toSeq
       .filter(_.getPath.getName.startsWith("part-"))
       .flatMap { st =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -254,8 +255,8 @@ class CatalogOpsSpec extends SparkSpecBase {
       cat.append("dense_ft", src)
       // the sidecar itself records the dense degradation — no row list
       // for the over-cap token, a name-only marker instead
-      val idx = new java.io.File(path + "/_idx").listFiles()
-        .filter(_.getName.endsWith(".body.postings"))
+      val idx = java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+        .map(_.toFile).filter(_.getName.endsWith(".body.postings")).toArray
       idx should have length 1
       val json = new String(java.nio.file.Files.readAllBytes(idx.head.toPath))
       json should include(""""dense":["common"]""")

@@ -77,9 +77,10 @@ class CatalogSpec extends SparkSpecBase {
   test("multi-writer commit: segment appends from two PROCESSES both land; compact folds them") {
     // the deploy/README fleet contract promoted to code: two separate JVMs
     // (own SparkSessions, own Catalog instances — no shared in-process
-    // lock) append concurrently to ONE Versioned table. Per-writer staged
-    // segment dirs + an atomic O_EXCL marker create as the commit point
-    // mean both batches must land: no lost update, no spurious abort.
+    // lock) append concurrently to ONE table. Per-commit directories + a
+    // publish-if-absent log entry as the commit point (a lost position
+    // retries at the next one) mean both batches must land: no lost
+    // update, no spurious abort.
     val wh = tmpDir("mwwh")
     import graft.tools.CatalogAppendWorker
     val cp = System.getProperty("java.class.path")
@@ -111,8 +112,8 @@ class CatalogSpec extends SparkSpecBase {
     cat.append(t.name, Seq(("extra", 9999L)).toDF("k", "v"))
     cat.read(t.name).count() shouldBe 1001L
 
-    // compact folds the committed segments into the next version; nothing
-    // lost, and the folded segments are unmarked (no double counting)
+    // compact folds every commit into one entry; nothing lost, nothing
+    // counted twice
     cat.compact(t.name)
     cat.read(t.name).count() shouldBe 1001L
     cat.read(t.name).agg(sum(col("v"))).head().getLong(0) shouldBe
@@ -274,9 +275,9 @@ class CatalogSpec extends SparkSpecBase {
     // or it didn't, no proxy
     def encodings(): Map[String, Set[String]] = {
       val conf = spark.sessionState.newHadoopConf()
-      val dir = new java.io.File(path)
-      val files = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+      import java.nio.file.{Files, Paths}
+      val files = Files.walk(Paths.get(path)).iterator().asScala.map(_.toFile).toArray
+        .filter(f => f.getName.endsWith(".parquet") && !f.getPath.contains("/_"))
       files.flatMap { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
@@ -358,125 +359,138 @@ class CatalogSpec extends SparkSpecBase {
   }
 
   test("compact() never overwrites its own source: temp-dir swap, stale leftovers cleared") {
+    // attach case: an older build's FlatDir table with a crashed compact's
+    // staging dir beside it. The rewrite writes a fresh directory and
+    // publishes one entry; the files it read are never overwritten, and
+    // the adopter clears the stale staging dir
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/cs"
-    cat.createTable(TableDef("cs", path, replacingSchema,
-      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
-    cat.append("cs", Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"))
-    cat.append("cs", Seq(("a", 9L, 20L)).toDF("k", "v", "updated_at"))
-    // simulate a crashed previous compact leaving stale swap dirs behind
+    LegacyLayouts.flat(Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"), path)
+    LegacyLayouts.flat(Seq(("a", 9L, 20L)).toDF("k", "v", "updated_at"), path)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path + ".compact.tmp"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path + ".compact.tmp", "junk"), "junk")
+    cat.createTable(TableDef("cs", path, replacingSchema,
+      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
+    def sources = new java.io.File(path).listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).map(f => (f.getName, f.length(), f.lastModified()))
+    val read0 = sources
+    read0.size should be >= 2
     val before = cat.read("cs").orderBy("k").collect()
     cat.compact("cs")
     cat.read("cs").orderBy("k").collect() shouldBe before
     cat.readRaw("cs").count() shouldBe 2 // merged: one row per key
-    // swap completed: no temp/old directories remain next to the table
+    sources shouldBe read0 // kept one cycle for readers of the prior entry
     java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".compact.tmp")) shouldBe false
     java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".compact.old")) shouldBe false
   }
 
   test("append() into a mid-swap table finishes the swap first — never recreates the table") {
-    // the ADVICE hazard: crash between the swap renames leaves .compact.old
-    // as the only copy; a subsequent append must NOT create a fresh table
-    // with just its batch (the next compact would then delete .compact.old
-    // as 'stale leftovers', losing the original rows for good)
+    // attach case, the ADVICE hazard: an older build's crash between the
+    // swap renames left .compact.old as the only copy; an append must NOT
+    // create a fresh table with just its batch
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/ar"
-    cat.createTable(TableDef("ar", path, replacingSchema,
-      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
-    cat.append("ar", Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"))
+    LegacyLayouts.flat(Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"), path)
     java.nio.file.Files.move(
       java.nio.file.Paths.get(path), java.nio.file.Paths.get(path + ".compact.old"))
+    cat.createTable(TableDef("ar", path, replacingSchema,
+      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
     cat.append("ar", Seq(("c", 3L, 10L)).toDF("k", "v", "updated_at"))
     cat.read("ar").count() shouldBe 3 // original a,b recovered + new c
     java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".compact.old")) shouldBe false
-    // readRaw on the other crash shape (tmp fully written, both renames
-    // pending the second) adopts the merged output
+    // the other crash shape (tmp fully written, the second rename
+    // pending): registering adopts the merged output
     val p2 = tmpDir("cat") + "/rr"
-    cat.createTable(TableDef("rr", p2, replacingSchema,
-      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
-    cat.append("rr", Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at"))
+    LegacyLayouts.flat(Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at"), p2)
     java.nio.file.Files.move(
       java.nio.file.Paths.get(p2), java.nio.file.Paths.get(p2 + ".compact.tmp"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p2 + ".compact.old"))
+    cat.createTable(TableDef("rr", p2, replacingSchema,
+      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
     cat.readRaw("rr").count() shouldBe 1
   }
 
+  private def logEntries(path: String): Seq[Int] =
+    Option(new java.io.File(path, "_log").list()).toSeq.flatten
+      .filter(_.matches("\\d+\\.json")).map(_.stripSuffix(".json").toInt).sorted
+
+  /** The newest log entry's data files, as paths under the table root. */
+  private def headFiles(path: String): Seq[String] = {
+    val n = logEntries(path).max
+    val j = org.json4s.jackson.JsonMethods.parse(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(path, "_log", s"$n.json")))
+    (j \ "files").children.map(f => s"$path/${f.children.head.values}")
+  }
+
+  /** The partition directory names the newest log entry's files live in. */
+  private def liveDirs(path: String): Set[String] =
+    headFiles(path).flatMap(_.split('/').filter(_.startsWith("lang="))).toSet
+
+  private def exists(path: String, name: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(path, name))
+
   test("Versioned layout: appends, semantics, and manifest-commit compact") {
+    // attach case: an older build's Versioned table holding two committed
+    // segments and no version dir yet
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/vm"
+    val segDirs = Seq(
+      LegacyLayouts.segment(Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"),
+        path, "seg-p1-aaaa"),
+      LegacyLayouts.segment(Seq(("a", 9L, 20L)).toDF("k", "v", "updated_at"),
+        path, "seg-p1-bbbb"))
     cat.createTable(TableDef("vm", path, replacingSchema,
-      Seq("k"), ReplacingDedup(Seq("k"), "updated_at"), layout = Versioned))
-    cat.append("vm", Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"))
-    cat.append("vm", Seq(("a", 9L, 20L)).toDF("k", "v", "updated_at"))
+      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
     cat.readRaw("vm").count() shouldBe 3 // both versions of a, across segments
-    // each append is a committed SEGMENT (multi-writer protocol): two
-    // marker files, two stage dirs, no version dir written yet
-    def liveMarkers(): Seq[String] = {
-      val md = java.nio.file.Paths.get(path, "_segs")
-      if (!java.nio.file.Files.exists(md)) Seq.empty
-      else scala.jdk.CollectionConverters.IteratorHasAsScala(
-        java.nio.file.Files.list(md).iterator).asScala
-        .map(_.getFileName.toString)
-        .filter(n => !n.endsWith(".folded") && !n.startsWith(".")) // skip crc
-        .toSeq
-    }
-    liveMarkers().size shouldBe 2
-    val segDirs = liveMarkers()
+    logEntries(path) shouldBe Seq(0) // adopted as the first entry
     val before = cat.read("vm").orderBy("k").collect()
     before.map(r => (r.getString(0), r.getLong(1))) shouldBe Array(("a", 9L), ("b", 2L))
     cat.compact("vm")
-    // committed: manifest points at v1 holding the merged rows; the folded
-    // segments are unmarked but their dirs are RETAINED one compact cycle
-    // so in-flight readers that resolved their paths pre-flip don't scan a
-    // deleted directory
-    java.nio.file.Files.readString(java.nio.file.Paths.get(path, "_CURRENT")) shouldBe "v1"
-    liveMarkers() shouldBe empty
-    segDirs.foreach(s =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, s)) shouldBe true)
+    // one entry replaced the adopted files; their dirs are RETAINED one
+    // commit so in-flight readers of the prior entry finish
+    logEntries(path) shouldBe Seq(0, 1)
+    segDirs.foreach(s => exists(path, s) shouldBe true)
     cat.readRaw("vm").count() shouldBe 2
     cat.read("vm").orderBy("k").collect() shouldBe before
-    // appends keep landing as committed segments beside the live version
+    // the next commit collects them with their entry
     cat.append("vm", Seq(("c", 3L, 10L)).toDF("k", "v", "updated_at"))
-    liveMarkers().size shouldBe 1
+    segDirs.foreach(s => exists(path, s) shouldBe false)
+    logEntries(path) shouldBe Seq(1, 2)
     cat.read("vm").count() shouldBe 3
-    // the next compact's orphan-GC collects the grace-window segment dirs
     cat.compact("vm")
-    segDirs.foreach(s =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(path, s)) shouldBe false)
+    logEntries(path) shouldBe Seq(2, 3)
     cat.read("vm").count() shouldBe 3
   }
 
   test("Versioned layout: half-written compact output never becomes visible") {
-    // the first-compact crash window: the manifest must exist BEFORE any
-    // successor version dir does, or a crash midway through writing v1
-    // would make the highest-version fallback adopt the partial output
+    // attach case: an older build's compact crashed mid-write of v1 while
+    // _CURRENT still named v0; and a commit of this build crashed before
+    // its entry — neither output is ever read
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/vh"
-    cat.createTable(TableDef("vh", path, replacingSchema,
-      Seq("k"), ReplacingDedup(Seq("k"), "updated_at"), layout = Versioned))
-    cat.append("vh", Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"))
-    // append pins the manifest at first write
-    java.nio.file.Files.readString(java.nio.file.Paths.get(path, "_CURRENT")) shouldBe "v0"
-    // simulate a compact that crashed mid-write: v1 exists but is garbage
+    LegacyLayouts.version(Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"), path, 0)
+    LegacyLayouts.manifest(path, "v0")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path, "v1"))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path, "v1", "part-junk"), "junk")
-    cat.read("vh").count() shouldBe 2 // manifest still rules: v0 served
-    cat.compact("vh") // GCs the orphan, commits a fresh merge
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path, "v1", "part-junk.parquet"), "junk")
+    cat.createTable(TableDef("vh", path, replacingSchema,
+      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
+    cat.read("vh").count() shouldBe 2 // the manifest rules: v0 adopted
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path, "c-crashed"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, "c-crashed", "part-junk.parquet"), "junk")
     cat.read("vh").count() shouldBe 2
-    java.nio.file.Files.readString(java.nio.file.Paths.get(path, "_CURRENT")) shouldBe "v1"
+    cat.compact("vh")
+    cat.read("vh").count() shouldBe 2
+    cat.readRaw("vh").count() shouldBe 2
   }
 
   test("Versioned layout: crashed flip falls back to the complete successor; next compact GCs") {
+    // attach case: an older build crashed mid-flip — successor v2 fully
+    // written, _CURRENT deleted; the adopter takes the highest version
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/vc"
-    cat.createTable(TableDef("vc", path, replacingSchema,
-      Seq("k"), ReplacingDedup(Seq("k"), "updated_at"), layout = Versioned))
-    cat.append("vc", Seq(("a", 1L, 10L), ("a", 2L, 20L)).toDF("k", "v", "updated_at"))
-    cat.compact("vc") // live = v1, merged single row
-    // simulate the mid-flip crash: successor v2 fully written, manifest deleted
+    LegacyLayouts.version(Seq(("a", 2L, 20L)).toDF("k", "v", "updated_at"), path, 1)
     import java.nio.file.{Files => JF, Paths => JP}
     import scala.jdk.CollectionConverters._
     val live = JP.get(path, "v1")
@@ -485,72 +499,79 @@ class CatalogSpec extends SparkSpecBase {
       val dst = v2.resolve(live.relativize(p))
       if (JF.isDirectory(p)) JF.createDirectories(dst) else JF.copy(p, dst)
     }
-    JF.delete(JP.get(path, "_CURRENT"))
-    // readers fall back to the highest complete version (v2) — table stays up
+    cat.createTable(TableDef("vc", path, replacingSchema,
+      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
     cat.read("vc").count() shouldBe 1
-    // and the next compact re-establishes a manifest and GCs stale versions
-    // (v1); the version it displaces itself (v2) is retained one cycle
+    // v1 is no entry's file: once nothing in it was written for the stale
+    // age, the next rewrite collects it
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 31L * 60 * 1000)
+    JF.walk(live).iterator.asScala.toSeq.foreach(JF.setLastModifiedTime(_, old))
     cat.compact("vc")
-    java.nio.file.Files.readString(java.nio.file.Paths.get(path, "_CURRENT")) shouldBe "v3"
     cat.read("vc").count() shouldBe 1
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path, "v1")) shouldBe false
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path, "v2")) shouldBe true
+    exists(path, "v1") shouldBe false
+    exists(path, "v2") shouldBe true // the prior entry's files: one cycle of grace
     cat.compact("vc")
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path, "v2")) shouldBe false
+    exists(path, "v2") shouldBe false
+    cat.read("vc").count() shouldBe 1
   }
 
-  test("cross-process compaction lock: live lock fails loudly, stale lock is stolen") {
+  test("a rewrite whose input files a concurrent commit replaced fails loudly, naming the table") {
+    // no lock: a second writer (here another Catalog over the same path)
+    // publishes its rewrite while this one runs; this one's entry would
+    // resurrect the files the other replaced, so it refuses and its staged
+    // directory goes
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/lk"
-    cat.createTable(TableDef("lk", path, replacingSchema,
-      Seq("k"), ReplacingDedup(Seq("k"), "updated_at"), layout = Versioned))
-    cat.append("lk", Seq(("a", 1L, 10L), ("a", 2L, 20L)).toDF("k", "v", "updated_at"))
-    // another process holds the lock (fresh mtime) → this one must not
-    // interleave its GC/flip with the holder's
-    val lock = java.nio.file.Paths.get(path + ".compact.lock")
-    java.nio.file.Files.writeString(lock, "peer-process")
-    an[IllegalStateException] should be thrownBy cat.compact("lk")
-    // a crashed holder's leftover (stale mtime) is stolen and compaction runs
-    java.nio.file.Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 31L * 60 * 1000))
-    cat.compact("lk")
-    cat.read("lk").count() shouldBe 1
-    java.nio.file.Files.exists(lock) shouldBe false // released
+    val t = TableDef("lk", path, replacingSchema, Seq("k"), Append)
+    cat.createTable(t)
+    cat.append("lk", Seq(("a", 1L, 10L), ("b", 2L, 20L)).toDF("k", "v", "updated_at"))
+    val other = new Catalog(spark)
+    other.createTable(t)
+    def commitDirs = new java.io.File(path).list().count(_.startsWith("c-"))
+    val e = intercept[IllegalStateException] {
+      cat.mutate("lk", { df => other.compact("lk"); df.filter(col("k") === "a") }, "racing")
+    }
+    e.getMessage should include("lk")
+    commitDirs shouldBe 2 // the append's and the other rewrite's
+    cat.read("lk").count() shouldBe 2 // the other rewrite stands
+    // an append meanwhile just takes the next position
+    cat.append("lk", Seq(("c", 3L, 30L)).toDF("k", "v", "updated_at"))
+    other.read("lk").count() shouldBe 3
   }
 
   test("compact() recovers a table left path-less by a crash between the swap renames") {
+    // attach case: an older build's table path renamed away, merged tmp absent
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/cr"
-    cat.createTable(TableDef("cr", path, replacingSchema,
-      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
-    cat.append("cr", Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"))
-    val before = cat.read("cr").orderBy("k").collect()
-    // simulate the crash window: table path renamed away, merged tmp absent
+    LegacyLayouts.flat(Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"), path)
     java.nio.file.Files.move(
       java.nio.file.Paths.get(path), java.nio.file.Paths.get(path + ".compact.old"))
-    cat.exists("cr") shouldBe false
+    cat.createTable(TableDef("cr", path, replacingSchema,
+      Seq("k"), ReplacingDedup(Seq("k"), "updated_at")))
     cat.compact("cr") // must restore the original, then compact it — not delete it
-    cat.read("cr").orderBy("k").collect() shouldBe before
+    cat.read("cr").orderBy("k").collect().map(r => (r.getString(0), r.getLong(1))) shouldBe
+      Array(("a", 1L), ("b", 2L))
     java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".compact.old")) shouldBe false
   }
 
   test("lightweight DELETE drops only definite matches, through both layouts") {
-    for (layout <- Seq(FlatDir, Versioned)) {
+    locally {
       val cat = new Catalog(spark)
-      val name = s"del-$layout"
+      val name = "del"
       cat.createTable(TableDef(name, tmpDir("cat") + s"/$name", replacingSchema,
-        Seq("k"), Append, layout = layout))
+        Seq("k"), Append))
       cat.append(name, Seq(("a", 1L, 10L), ("b", 2L, 20L), ("c", 3L, 30L))
         .toDF("k", "v", "updated_at"))
       cat.delete(name, col("v") >= 2 && col("k") =!= "c")
-      withClue(s"$layout: ") {
+      withClue(s"$name: ") {
         cat.read(name).orderBy("k").collect()
           .map(r => (r.getString(0), r.getLong(1))) shouldBe
           Array(("a", 1L), ("c", 3L))
       }
       // NULL predicate keeps the row: v > NULL is NULL, not TRUE
       cat.delete(name, col("v") > lit(null).cast("long"))
-      withClue(s"$layout null-pred: ") {
+      withClue(s"$name null-pred: ") {
         cat.read(name).count() shouldBe 2
       }
     }
@@ -604,12 +625,12 @@ class CatalogSpec extends SparkSpecBase {
   test("randomized mutation sequences agree with a driver-side reference model") {
     // the mutation surface vs a plain in-memory model: interleaved
     // append/delete/update/compact in random order must leave the table
-    // exactly where the model says, through both layouts
-    for (layout <- Seq(FlatDir, Versioned)) {
+    // exactly where the model says
+    locally {
       val cat = new Catalog(spark)
-      val name = s"fuzz-$layout"
+      val name = "fuzz"
       cat.createTable(TableDef(name, tmpDir("cat") + s"/$name", replacingSchema,
-        Seq("k"), Append, layout = layout))
+        Seq("k"), Append))
       val rnd = new scala.util.Random(1234)
       var model = Vector.empty[(String, Long, Long)] // (k, v, updated_at)
       var nextKey = 0
@@ -634,7 +655,7 @@ class CatalogSpec extends SparkSpecBase {
         case 3 =>
           cat.compact(name)
       }
-      withClue(s"$layout after 12 random steps: ") {
+      withClue(s"$name after 12 random steps: ") {
         cat.read(name).collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
           .sorted.toVector shouldBe model.sorted
@@ -713,7 +734,7 @@ class CatalogSpec extends SparkSpecBase {
     cat.append("pt", Seq(("a", 1L, "en"), ("b", 2L, "de"), ("c", 3L, "en"))
       .toDF("k", "v", "lang"))
     // directory-encoded partitions on disk
-    new java.io.File(path).list().count(_.startsWith("lang=")) shouldBe 2
+    liveDirs(path) shouldBe Set("lang=en", "lang=de")
     // a partition predicate prunes at the DIRECTORY level, before any read
     val pruned = cat.read("pt").filter(col("lang") === "en")
     pruned.queryExecution.executedPlan.toString should
@@ -724,7 +745,7 @@ class CatalogSpec extends SparkSpecBase {
     cat.append("pt", Seq(("d", 4L, "fr")).toDF("k", "v", "lang"))
     cat.delete("pt", col("lang") === "de")
     cat.compact("pt")
-    new java.io.File(path).list().count(_.startsWith("lang=")) shouldBe 2 // en, fr
+    liveDirs(path) shouldBe Set("lang=en", "lang=fr")
     cat.read("pt").orderBy("k").collect()
       .map(r => (r.getString(0), r.getString(2))) shouldBe
       Array(("a", "en"), ("c", "en"), ("d", "fr"))
@@ -741,18 +762,18 @@ class CatalogSpec extends SparkSpecBase {
     cat.append("pdrop", Seq(("c", 3L, "en"), ("d", 4L, "fr")).toDF("k", "v", "lang"))
     def files(leaf: String): Seq[(String, Long, Long)] = {
       import scala.jdk.CollectionConverters._
-      val d = java.nio.file.Paths.get(path, leaf)
-      java.nio.file.Files.walk(d).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+      java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          p.toString.contains(s"/$leaf/")).toSeq
         .map(p => (p.toString, java.nio.file.Files.size(p),
           java.nio.file.Files.getLastModifiedTime(p).toMillis)).sortBy(_._1)
     }
     val enBefore = files("lang=en")
     val frBefore = files("lang=fr")
     enBefore.size should be >= 2 // two appends → at least one file each
-    // drop is O(partition): directory delete, no rewrite anywhere else
+    // drop is O(partition): one entry without its files, no rewrite
     cat.dropPartition("pdrop", "de") shouldBe 1
-    new java.io.File(path).list() should not contain "lang=de"
+    liveDirs(path) should not contain "lang=de"
     files("lang=en") shouldBe enBefore // byte-identical survivors
     files("lang=fr") shouldBe frBefore
     cat.read("pdrop").orderBy("k").collect().map(_.getString(0)) shouldBe
@@ -769,21 +790,20 @@ class CatalogSpec extends SparkSpecBase {
   }
 
   test("DETACH/ATTACH PARTITION round-trips content through both layouts") {
-    for (layout <- Seq(FlatDir, Versioned)) {
+    locally {
       val cat = new Catalog(spark)
-      val name = s"pda_$layout"
+      val name = "pda"
       val path = tmpDir("cat") + s"/$name"
       cat.createTable(TableDef(name, path, StructType(Seq(
         StructField("k", StringType), StructField("v", LongType),
         StructField("lang", StringType))),
-        sortKeys = Seq("k"), semantics = Append, layout = layout,
-        partitionKeys = Seq("lang")))
+        sortKeys = Seq("k"), semantics = Append, partitionKeys = Seq("lang")))
       cat.append(name, Seq(("a", 1L, "en"), ("b", 2L, "de")).toDF("k", "v", "lang"))
-      if (layout == Versioned) cat.compact(name) // value now in the version dir…
+      cat.compact(name) // value now in the rewrite's directory…
       cat.append(name, Seq(("c", 3L, "en"), ("d", 4L, "fr")).toDF("k", "v", "lang"))
       val before = cat.read(name).orderBy("k").collect().map(_.toSeq)
-      // …and in an append segment: detach must move BOTH directories
-      val expectDirs = if (layout == Versioned) 2 else 1
+      // …and in an append's: detach must move BOTH directories
+      val expectDirs = 2
       cat.detachPartition(name, "en") shouldBe expectDirs
       cat.read(name).orderBy("k").collect().map(_.getString(0)) shouldBe
         Array("b", "d")
@@ -804,19 +824,17 @@ class CatalogSpec extends SparkSpecBase {
       StructField("k", StringType), StructField("v", LongType),
       StructField("lang", StringType)))
     val cat = new Catalog(spark)
-    // FlatDir source → Versioned destination
     cat.createTable(TableDef("mv_src", tmpDir("cat") + "/mv_src", langSchema,
       Seq("k"), Append, partitionKeys = Seq("lang")))
     cat.createTable(TableDef("mv_dst", tmpDir("cat") + "/mv_dst", langSchema,
-      Seq("k"), Append, layout = Versioned, partitionKeys = Seq("lang")))
+      Seq("k"), Append, partitionKeys = Seq("lang")))
     cat.append("mv_src", Seq(("a", 1L, "en"), ("b", 2L, "de")).toDF("k", "v", "lang"))
     cat.append("mv_dst", Seq(("z", 9L, "fr")).toDF("k", "v", "lang"))
     cat.movePartition("mv_src", "mv_dst", "en") shouldBe 1
     cat.read("mv_src").collect().map(_.getString(0)) shouldBe Array("b")
     cat.read("mv_dst").orderBy("k").collect().map(_.getString(0)) shouldBe
       Array("a", "z")
-    // and back: Versioned source → FlatDir destination, landing in a
-    // partition that already exists (file-level merge)
+    // and back, landing in a partition that already exists
     cat.append("mv_src", Seq(("c", 3L, "en")).toDF("k", "v", "lang"))
     cat.movePartition("mv_dst", "mv_src", "en") shouldBe 1
     cat.read("mv_src").orderBy("k").collect().map(_.getString(0)) shouldBe
@@ -837,37 +855,37 @@ class CatalogSpec extends SparkSpecBase {
   test("FREEZE: snapshot pins its read set through compacts and mutations; drop re-enables GC") {
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/frz"
-    cat.createTable(TableDef("frz", path, replacingSchema,
-      Seq("k"), Append, layout = Versioned))
+    cat.createTable(TableDef("frz", path, replacingSchema, Seq("k"), Append))
     cat.append("frz", Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"))
     cat.freeze("frz", "s1")
+    def parquet: Set[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+        .map(_.toString).filter(_.endsWith(".parquet")).toSet
+    }
+    val pinned = parquet
     val frozen = cat.readSnapshot("frz", "s1").orderBy("k").collect().map(_.toSeq)
     frozen.map(_.head) shouldBe Array("a", "b")
     // live table moves on; the frozen view does not
     cat.append("frz", Seq(("c", 3L, 11L)).toDF("k", "v", "updated_at"))
-    cat.compact("frz") // folds the pinned segment; pin keeps its dir
-    cat.delete("frz", col("k") === "a") // mutation writes a NEW version
+    cat.compact("frz") // folds the pinned files; the tag keeps them
+    cat.delete("frz", col("k") === "a") // a mutation is another rewrite
     cat.compact("frz") // and another GC cycle on top
     cat.read("frz").orderBy("k").collect().map(_.getString(0)) shouldBe
       Array("b", "c")
     cat.readSnapshot("frz", "s1").orderBy("k").collect().map(_.toSeq) shouldBe frozen
+    pinned.subsetOf(parquet) shouldBe true
     cat.systemSnapshots("frz").collect().map(_.getString(0)) shouldBe Array("s1")
-    // a second freeze under the same tag refuses (O_EXCL)
+    // a second freeze under the same tag refuses (exclusive publish)
     an[Exception] should be thrownBy cat.freeze("frz", "s1")
-    // drop the pin: the next compact collects what the snapshot held
+    // drop the pin: the next rewrite collects what the snapshot held
     cat.dropSnapshot("frz", "s1") shouldBe true
     cat.dropSnapshot("frz", "s1") shouldBe false
     cat.compact("frz")
-    // the once-pinned segment dir is collected (the displaced version
-    // dir legitimately survives ONE more cycle as the reader grace
-    // window — that retention is compact's, not the snapshot's)
-    new java.io.File(path).list().count(_.startsWith("seg-")) shouldBe 0
-    new java.io.File(path).list().count(_.matches("v\\d+")) should be <= 2
+    (pinned intersect parquet) shouldBe empty
     a[NoSuchElementException] should be thrownBy cat.readSnapshot("frz", "s1")
-    // FlatDir tables cannot freeze (whole-dir swap would strand the pin)
-    cat.createTable(TableDef("frzflat", tmpDir("cat") + "/frzflat",
-      replacingSchema, Seq("k"), Append))
-    an[IllegalArgumentException] should be thrownBy cat.freeze("frzflat", "x")
+    cat.read("frz").orderBy("k").collect().map(_.getString(0)) shouldBe
+      Array("b", "c")
   }
 
   test("partition DDL is copy-on-write against snapshots: frozen views keep dropped partitions") {
@@ -876,28 +894,35 @@ class CatalogSpec extends SparkSpecBase {
     cat.createTable(TableDef("frzp", path, StructType(Seq(
       StructField("k", StringType), StructField("v", LongType),
       StructField("lang", StringType))),
-      sortKeys = Seq("k"), semantics = Append, layout = Versioned,
-      partitionKeys = Seq("lang")))
+      sortKeys = Seq("k"), semantics = Append, partitionKeys = Seq("lang")))
     cat.append("frzp", Seq(("a", 1L, "en"), ("b", 2L, "de")).toDF("k", "v", "lang"))
     cat.freeze("frzp", "pin")
-    // in-place DDL must not mutate the pinned dirs: a compact rolls first
+    // the drop is a new entry; the tagged entry keeps the dropped files
     cat.dropPartition("frzp", "de") shouldBe 1
+    cat.compact("frzp")
     cat.read("frzp").collect().map(_.getString(0)) shouldBe Array("a")
     cat.readSnapshot("frzp", "pin").orderBy("k").collect().map(_.getString(0)) shouldBe
       Array("a", "b")
+    // a detach copies a pinned partition out instead of moving it
+    cat.append("frzp", Seq(("c", 3L, "fr")).toDF("k", "v", "lang"))
+    cat.freeze("frzp", "pin2")
+    cat.detachPartition("frzp", "fr") shouldBe 1
+    cat.readSnapshot("frzp", "pin2").orderBy("k").collect().map(_.getString(0)) shouldBe
+      Array("a", "c")
+    cat.attachPartition("frzp", "fr") shouldBe 1
+    cat.read("frzp").orderBy("k").collect().map(_.getString(0)) shouldBe Array("a", "c")
   }
 
   test("Buffer engine: thresholds coalesce inserts into one part; reads never lose rows") {
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/buf"
-    // Versioned: one append = one committed segment dir, so the
-    // one-commit-per-flush coalescing claim is directly observable
-    cat.createTable(TableDef("buft", path, replacingSchema, Seq("k"), Append,
-      layout = Versioned))
+    // one append = one commit directory, so the one-commit-per-flush
+    // coalescing claim is directly observable
+    cat.createTable(TableDef("buft", path, replacingSchema, Seq("k"), Append))
     def segs: Int =
       new java.io.File(path).list() match {
         case null => 0
-        case l => l.count(_.startsWith("seg-"))
+        case l => l.count(_.startsWith("c-"))
       }
     val buf = new BufferedTable(cat, "buft", maxRows = 4L, maxAgeMs = 1000L)
     buf.insert(Seq(("a", 1L, 10L), ("b", 2L, 10L)).toDF("k", "v", "updated_at"),
@@ -999,7 +1024,8 @@ class CatalogSpec extends SparkSpecBase {
       .toDF("k", "v", "updated_at"))
     def dataFiles: Seq[(String, Long, Long)] = {
       def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+        if (f.getName.startsWith("d-")) Nil // the masks' own commit dirs
+        else if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       walk(new java.io.File(path)).filter(_.getName.endsWith(".parquet"))
         .map(f => (f.getPath, f.length(), f.lastModified())).sortBy(_._1)
     }
@@ -1043,8 +1069,7 @@ class CatalogSpec extends SparkSpecBase {
   test("deletion vectors: frozen views replay exactly their frozen mask") {
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/dvf"
-    cat.createTable(TableDef("dvf", path, replacingSchema,
-      Seq("k"), Append, layout = Versioned))
+    cat.createTable(TableDef("dvf", path, replacingSchema, Seq("k"), Append))
     cat.append("dvf", Seq(("a", 1L, 10L), ("b", 2L, 10L), ("c", 3L, 10L))
       .toDF("k", "v", "updated_at"))
     cat.freeze("dvf", "s0") // no mask frozen
@@ -1060,17 +1085,16 @@ class CatalogSpec extends SparkSpecBase {
     keys(cat.read("dvf")) shouldBe Array("a")
     keys(cat.readSnapshot("dvf", "s0")) shouldBe Array("a", "b", "c")
     keys(cat.readSnapshot("dvf", "s1")) shouldBe Array("a", "c")
-    // compact materializes the live mask; s1's pinned dv dir survives it
+    // compact materializes the live mask; s1's entry keeps its mask
     cat.compact("dvf")
     keys(cat.read("dvf")) shouldBe Array("a")
     keys(cat.readSnapshot("dvf", "s0")) shouldBe Array("a", "b", "c")
     keys(cat.readSnapshot("dvf", "s1")) shouldBe Array("a", "c")
-    // drop the pins: the next compact collects every retained dv dir
+    // drop the pins: the next rewrite collects every retained mask
     cat.dropSnapshot("dvf", "s0") shouldBe true
     cat.dropSnapshot("dvf", "s1") shouldBe true
     cat.compact("dvf")
-    val dvDir = new java.io.File(path + ".dv")
-    (!dvDir.exists() || dvDir.list().isEmpty) shouldBe true
+    new java.io.File(path).list().count(_.startsWith("d-")) shouldBe 0
     keys(cat.read("dvf")) shouldBe Array("a")
   }
 
@@ -1142,36 +1166,80 @@ class CatalogSpec extends SparkSpecBase {
   }
 
   test("a crash between manifest flip and segment unmark never double-counts") {
-    // the window the _FOLDED sidecar closes: compact writes v1 (absorbing
-    // the segments), flips _CURRENT, and CRASHES before deleting the
-    // segment markers. On an APPEND-semantics table there is no merge
-    // view to hide duplicates — the fold exclusion must come from the
-    // version itself. Simulated by resurrecting the post-compact state's
-    // markers (marker present + dir present + rows already in v1).
-    import java.nio.file.{Files, Paths}
+    // attach case: an older build's compact wrote v1 (absorbing two
+    // segments), flipped _CURRENT and CRASHED before deleting the segment
+    // markers. On an APPEND-semantics table there is no merge view to hide
+    // duplicates — v1's _FOLDED list must exclude the re-marked segments
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/crashwin"
-    cat.createTable(TableDef("cw", path, replacingSchema,
-      Seq("k"), Append, layout = Versioned))
-    cat.append("cw", Seq(("a", 1L, 1L), ("b", 2L, 1L)).toDF("k", "v", "updated_at"))
-    cat.append("cw", Seq(("c", 3L, 1L), ("d", 4L, 1L)).toDF("k", "v", "updated_at"))
-    val segDirs = new java.io.File(path).list().filter(_.startsWith("seg-")).toSeq
-    segDirs.size shouldBe 2
-    cat.compact("cw")
-    cat.read("cw").count() shouldBe 4
-    // resurrect the crash state: markers back, tombstones gone
-    segDirs.foreach { s =>
-      Files.deleteIfExists(Paths.get(path, "_segs", s + ".folded"))
-      Files.write(Paths.get(path, "_segs", s), "crashed".getBytes)
-    }
-    // v1's _FOLDED list excludes the re-marked segments from every read
+    val s1 = Seq(("a", 1L, 1L), ("b", 2L, 1L)).toDF("k", "v", "updated_at")
+    val s2 = Seq(("c", 3L, 1L), ("d", 4L, 1L)).toDF("k", "v", "updated_at")
+    val segs = Seq(LegacyLayouts.segment(s1, path, "seg-p-1"),
+      LegacyLayouts.segment(s2, path, "seg-p-2"))
+    LegacyLayouts.version(s1.union(s2), path, 1)
+    LegacyLayouts.folded(path, "v1", segs)
+    LegacyLayouts.manifest(path, "v1")
+    cat.createTable(TableDef("cw", path, replacingSchema, Seq("k"), Append))
     cat.read("cw").count() shouldBe 4
     cat.readRaw("cw").count() shouldBe 4
-    // and the next compact finishes the unmark instead of re-folding
+    // and the next compact folds nothing twice; the folded segments are
+    // no entry's files, so the GC collects them once they are stale
+    import scala.jdk.CollectionConverters._
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 31L * 60 * 1000)
+    segs.foreach(s => java.nio.file.Files.walk(java.nio.file.Paths.get(path, s))
+      .iterator().asScala.toSeq.foreach(java.nio.file.Files.setLastModifiedTime(_, old)))
     cat.compact("cw")
     cat.read("cw").count() shouldBe 4
-    new java.io.File(path + "/_segs").list()
-      .filter(n => segDirs.contains(n)) shouldBe empty
+    segs.foreach(s => exists(path, s) shouldBe false)
+  }
+
+  test("tables an older build wrote attach and read the same rows; snapshots answer the same") {
+    // one table per old state: FlatDir, FlatDir mid-swap, Versioned with
+    // unfolded segments and _FOLDED, pending deletion vectors, a FREEZE
+    val cat = new Catalog(spark)
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("k").collect().map(_.getString(0)).toSeq
+    def rows(ks: String*) = ks.map(k => (k, 1L, 1L)).toDF("k", "v", "updated_at")
+    def table(name: String): String = {
+      val path = tmpDir("legacy") + s"/$name"
+      cat.createTable(TableDef(name, path, replacingSchema, Seq("k"), Append))
+      cat.detach(name)
+      path
+    }
+    val flat = table("old_flat")
+    LegacyLayouts.flat(rows("a", "b"), flat)
+    cat.attach(flat)
+    keys(cat.read("old_flat")) shouldBe Seq("a", "b")
+    // mid-swap the path is gone with its _TABLE: registering the
+    // definition finishes the swap before anything is written there
+    val swap = table("old_swap")
+    LegacyLayouts.flat(rows("a"), swap)
+    java.nio.file.Files.move(java.nio.file.Paths.get(swap),
+      java.nio.file.Paths.get(swap + ".compact.tmp"))
+    LegacyLayouts.flat(rows("stale"), swap + ".compact.old")
+    cat.createTable(TableDef("old_swap", swap, replacingSchema, Seq("k"), Append))
+    keys(cat.read("old_swap")) shouldBe Seq("a")
+    val ver = table("old_ver")
+    val seg = LegacyLayouts.segment(rows("x"), ver, "seg-p-1")
+    LegacyLayouts.segment(rows("c"), ver, "seg-p-2")
+    LegacyLayouts.version(rows("a", "x"), ver, 3)
+    LegacyLayouts.folded(ver, "v3", Seq(seg))
+    LegacyLayouts.manifest(ver, "v3")
+    LegacyLayouts.dv(spark, ver, "dv-p-1", Seq("v3"), col("k") === "a")
+    LegacyLayouts.snapshot(ver, "before", Some("v3"), Seq("seg-p-2"), Nil)
+    LegacyLayouts.snapshot(ver, "after", Some("v3"), Seq("seg-p-2"), Seq("dv-p-1"))
+    cat.attach(ver)
+    keys(cat.read("old_ver")) shouldBe Seq("c", "x")
+    cat.pendingDeleteFiles("old_ver") shouldBe 1
+    keys(cat.readSnapshot("old_ver", "before")) shouldBe Seq("a", "c", "x")
+    keys(cat.readSnapshot("old_ver", "after")) shouldBe Seq("c", "x")
+    cat.systemSnapshots("old_ver").collect().map(_.getString(0)) shouldBe Array("after", "before")
+    // the adopted table is an ordinary table from here on
+    cat.append("old_ver", rows("d"))
+    cat.compact("old_ver")
+    keys(cat.read("old_ver")) shouldBe Seq("c", "d", "x")
+    keys(cat.readSnapshot("old_ver", "before")) shouldBe Seq("a", "c", "x")
   }
 
   test("bloom-pruned reads refuse merge-view semantics") {
@@ -1300,7 +1368,7 @@ class CatalogSpec extends SparkSpecBase {
       cat.addColumn("lg", StructField("v", LongType), 0L)
     cat.compact("lg")
     rows shouldBe parentRows
-    spark.read.parquet(path).columns.toSet shouldBe Set("k", "val", "score")
+    spark.read.parquet(headFiles(path): _*).columns.toSet shouldBe Set("k", "val", "score")
     // compact retired the pending state, in memory and in the sidecar
     cat.detach("lg")
     val t = cat.attach(path)
@@ -1410,7 +1478,7 @@ class CatalogSpec extends SparkSpecBase {
     cat.read("mc").agg(sum(col("v"))).head().getLong(0) shouldBe 6L
     // compact materializes storage at the wide PHYSICAL type
     cat.compact("mc")
-    spark.read.parquet(cat.get("mc").path)
+    spark.read.parquet(headFiles(cat.get("mc").path): _*)
       .schema("v").dataType shouldBe LongType
     cat.read("mc").count() shouldBe 3
     // narrowing and lossy changes refused (long->double loses precision)
@@ -1699,16 +1767,17 @@ class CatalogSpec extends SparkSpecBase {
   test("a staged snapshot tmp file never wedges listing, compaction, or DDL") {
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/frzt"
-    cat.createTable(TableDef("frzt", path, replacingSchema,
-      Seq("k"), Append, layout = Versioned))
+    cat.createTable(TableDef("frzt", path, replacingSchema, Seq("k"), Append))
     cat.append("frzt", Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at"))
     cat.freeze("frzt", "good")
-    // simulate a freeze that crashed mid-write: stage file, not .json
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path + ".snapshots"))
+    // a freeze and a commit that crashed mid-publish: truncated staging
+    // names beside the log, never an entry or a tag
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path + ".snapshots/bad.tmp.123"), "{trunc")
+      java.nio.file.Paths.get(path, "_log", ".tag-bad.json.1234.tmp"), "{trunc")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, "_log", ".2.json.1234.tmp"), "{trunc")
     cat.systemSnapshots("frzt").collect().map(_.getString(0)) shouldBe Array("good")
-    cat.compact("frzt") // snapshotPins must not parse the stage file
+    cat.compact("frzt") // the GC parses no staging name
     cat.read("frzt").collect().length shouldBe 1
   }
 
@@ -1888,11 +1957,9 @@ class CatalogSpec extends SparkSpecBase {
     val base = tmpDir("cat")
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", LongType)))
-    cat.createTable(TableDef("rv_base", base + "/rv_base", schema,
-      Seq("k"), Append, layout = Versioned))
+    cat.createTable(TableDef("rv_base", base + "/rv_base", schema, Seq("k"), Append))
     cat.createTable(TableDef("rv_sum", base + "/rv_sum",
-      StructType(Seq(StructField("total", LongType))), Nil, Append,
-      layout = Versioned))
+      StructType(Seq(StructField("total", LongType))), Nil, Append))
     cat.append("rv_base", Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
 
     // shape drift fails at CREATE, not at refresh

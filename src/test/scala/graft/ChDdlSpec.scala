@@ -1215,8 +1215,11 @@ class ChDdlSpec extends SparkSpecBase {
     ChDdl.runScript(cat, spark,
       "ALTER TABLE idx_t DROP INDEX tok_msg", dir)
     cat.get("idx_t").tokenIndexCols shouldBe empty
-    new java.io.File(s"$dir/idx_t/_idx").listFiles()
-      .count(_.getName.endsWith(".msg.tokenbloom")) shouldBe 0
+    locally {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/idx_t")).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".msg.tokenbloom")) shouldBe 0
+    }
     intercept[IllegalArgumentException] {
       ChDdl.runScript(cat, spark,
         "ALTER TABLE idx_t DROP INDEX tok_msg", dir)

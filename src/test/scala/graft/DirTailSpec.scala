@@ -25,8 +25,7 @@ class DirTailSpec extends SparkSpecBase {
 
   private def mkTable(cat: Catalog, name: String): String = {
     val path = tmpDir("tail") + s"/$name"
-    cat.createTable(TableDef(name, path, schema, Seq("k"), Append,
-      layout = Versioned))
+    cat.createTable(TableDef(name, path, schema, Seq("k"), Append))
     path
   }
 
@@ -148,8 +147,7 @@ class DirTailSpec extends SparkSpecBase {
   test("appendIdempotent: same token lands once, MV fan-out fires once, compact bounds the window") {
     val cat = new Catalog(spark)
     val path = tmpDir("tail") + "/idem"
-    cat.createTable(TableDef("idem", path, schema, Seq("k"), Append,
-      layout = Versioned))
+    cat.createTable(TableDef("idem", path, schema, Seq("k"), Append))
     // an attached MV: fan-out must fire exactly once per COMMITTED token
     cat.createTable(TableDef("idem_counts", tmpDir("tail") + "/idem_counts",
       StructType(Seq(StructField("v", StringType),
@@ -166,15 +164,19 @@ class DirTailSpec extends SparkSpecBase {
       .agg(sum(col("n")).as("n")).orderBy(col("v")).collect()
       .map(r => (r.getString(0), r.getLong(1))) shouldBe
       Array(("a", 2L), ("b", 2L))
-    // the dedup window survives a compact (folded tombstone still vetoes)
+    // the dedup window survives one compact (the folded tokens still
+    // veto) and closes at the next
     cat.compact("idem")
     cat.appendIdempotent("idem", batch, "tok-1") shouldBe None
     cat.read("idem").count() shouldBe 4L
-    // FlatDir tables refuse: the commit primitive is the segment marker
-    cat.createTable(TableDef("idemflat", tmpDir("tail") + "/idemflat",
-      schema, Seq("k"), Append))
+    cat.compact("idem")
+    cat.appendIdempotent("idem", batch, "tok-1") shouldBe Some(2L)
+    cat.read("idem").count() shouldBe 6L
+    // ENGINE=Null has nothing to deduplicate against
+    cat.createTable(TableDef("idemnull", tmpDir("tail") + "/idemnull",
+      schema, Seq("k"), NullEngine))
     an[IllegalArgumentException] should be thrownBy
-      cat.appendIdempotent("idemflat", batch, "tok-1")
+      cat.appendIdempotent("idemnull", batch, "tok-1")
   }
 
   test("distinct tokens that sanitize to the same stem both commit") {
@@ -183,7 +185,7 @@ class DirTailSpec extends SparkSpecBase {
     // swallowed as a replay — data loss through a public API
     val cat = new Catalog(spark)
     cat.createTable(TableDef("idemtok", tmpDir("tail") + "/idemtok", schema,
-      Seq("k"), Append, layout = Versioned))
+      Seq("k"), Append))
     val batch = Seq((1L, "a")).toDF("k", "v")
     cat.appendIdempotent("idemtok", batch, "a b") shouldBe Some(1L)
     cat.appendIdempotent("idemtok", batch, "a_b") shouldBe Some(1L)

@@ -83,7 +83,8 @@ class GhEventsSpec extends SparkSpecBase {
     backfill shouldBe stars
     // and the streaming MV over the same storage converges to it
     val mvOut = StarsMv.githubStars(
-      spark.readStream.schema(gh.schema)
+      // each commit's files sit in a directory of their own under the table
+      spark.readStream.schema(gh.schema).option("recursiveFileLookup", "true")
         .parquet(imp.catalog.get("github_events").path))
     val q = StarsMv.writer(mvOut, tmpDir("ck"))
       .format("memory").queryName("gh_stars_mv").start()

@@ -17,25 +17,26 @@ class IntrospectionSpec extends SparkSpecBase {
   }
 
   test("systemTables reports layout, engine, keys, and storage totals") {
+    // column 2 is the log head position: -1 before the first commit
     val (cat, dir) = freshCat("sys-tables")
     val df = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("k", "v")
     cat.createTable(TableDef("t1", s"$dir/t1", df.schema,
       sortKeys = Seq("k"), semantics = Append, indexCols = Seq("v")))
     cat.createTable(TableDef("t2", s"$dir/t2", df.schema,
-      sortKeys = Seq("k"), semantics = ReplacingDedup(Seq("k"), "v"),
-      layout = Versioned))
+      sortKeys = Seq("k"), semantics = ReplacingDedup(Seq("k"), "v")))
     cat.append("t1", df)
     val rows = cat.systemTables().collect()
       .map(r => r.getString(0) -> r).toMap
     rows.keySet shouldBe Set("t1", "t2")
     val t1 = rows("t1")
+    t1.getLong(2) shouldBe 0L                   // log_head: one commit
     t1.getString(3) shouldBe "Append"
     t1.getSeq[String](4) shouldBe Seq("k")      // sort_keys
     t1.getSeq[String](6) shouldBe Seq("v")      // index_cols
     t1.getLong(7) should be >= 1L               // n_parts
     t1.getLong(8) should be > 0L                // bytes
     val t2 = rows("t2")
-    t2.getString(2) shouldBe "Versioned"
+    t2.getLong(2) shouldBe -1L
     t2.getString(3) shouldBe "ReplacingDedup"
     t2.getLong(7) shouldBe 0L                   // no data yet
   }
@@ -79,7 +80,7 @@ class IntrospectionSpec extends SparkSpecBase {
 
   test("attach re-registers a table from its persisted _TABLE metadata") {
     // the ATTACH TABLE analog: a fresh process (here: a fresh Catalog)
-    // recovers the full definition — schema, keys, semantics, layout —
+    // recovers the full definition — schema, keys, semantics, indexes —
     // from storage alone, instead of re-declaring the TableDef
     val dir = tmpDir("attach")
     val writer = new Catalog(spark)
@@ -87,7 +88,7 @@ class IntrospectionSpec extends SparkSpecBase {
       .toDF("k", "v", "updated_at")
     writer.createTable(TableDef("att", s"$dir/att", df.schema,
       sortKeys = Seq("k"), semantics = ReplacingDedup(Seq("k"), "updated_at"),
-      layout = Versioned, indexCols = Seq("v")))
+      indexCols = Seq("v")))
     writer.append("att", df)
 
     val reader = new Catalog(spark)
@@ -95,7 +96,6 @@ class IntrospectionSpec extends SparkSpecBase {
     t.name shouldBe "att"
     t.sortKeys shouldBe Seq("k")
     t.semantics shouldBe ReplacingDedup(Seq("k"), "updated_at")
-    t.layout shouldBe Versioned
     t.indexCols shouldBe Seq("v")
     // the merge view works through the attached definition
     reader.read("att").orderBy("k").collect()
@@ -109,7 +109,7 @@ class IntrospectionSpec extends SparkSpecBase {
     writer.createTable(TableDef("att2", s"$dir/att2", df.schema,
       sortKeys = Seq("k"), semantics = Append))
     writer.append("att2", df)
-    writer.compact("att2") // FlatDir swap replaces the whole dir
+    writer.compact("att2") // a rewrite commit leaves _TABLE in place
     writer.detach("att2")
     intercept[NoSuchElementException](writer.read("att2"))
     val t = writer.attach(s"$dir/att2")
@@ -169,17 +169,19 @@ class IntrospectionSpec extends SparkSpecBase {
       sortKeys = Seq("k"), semantics = Append, codec = "zstd"))
     cat.append("cz", df)
     // Spark stamps the codec into the part-file name — observe it there
-    val files = new java.io.File(s"$dir/cz").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName)
+    def parquet(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/cz")).iterator().asScala
+        .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
+    }
+    val files = parquet()
     files should not be empty
     all(files) should include(".zstd.")
     cat.read("cz").orderBy("k").collect().map(_.getLong(0)) shouldBe
       Array(1L, 2L, 3L)
     // the codec survives compact (the rewrite writes through writeData)
     cat.compact("cz")
-    val after = new java.io.File(s"$dir/cz").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName)
-    all(after) should include(".zstd.")
+    all(parquet()) should include(".zstd.")
     // ...and survives detach/attach via the sidecar
     cat.detach("cz")
     cat.attach(s"$dir/cz").codec shouldBe "zstd"

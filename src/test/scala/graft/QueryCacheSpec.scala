@@ -142,6 +142,28 @@ class QueryCacheSpec extends SparkSpecBase {
     cat.tableVersion("reg_v") should not be v2
   }
 
+  test("tableVersion makes as many metadata calls on a table of 30 appends as of 1") {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import spark.implicits._
+    val cat = new Catalog(spark)
+    val tmp = tmpDir("graft-qc-flat")
+    def table(name: String, appends: Int): Unit = {
+      cat.createTable(TableDef(name, s"$tmp/$name", StructType(Seq(
+        StructField("k", LongType), StructField("v", LongType))),
+        sortKeys = Seq("k"), semantics = Append))
+      (1 to appends).foreach(i => cat.append(name, Seq((i.toLong, i.toLong)).toDF("k", "v")))
+    }
+    table("one", 1)
+    table("thirty", 30)
+    def calls(name: String): Long = CountingFs.during(spark) {
+      cat.tableVersion(name)
+      CountingFs.meta
+    }
+    val (one, thirty) = (calls("one"), calls("thirty"))
+    info(s"tableVersion metadata calls: $one after 1 append, $thirty after 30")
+    thirty shouldBe one
+  }
+
   test("tableVersion moves on metadata-only ALTERs that change reads, not on re-attach") {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     import spark.implicits._

@@ -67,7 +67,8 @@ class SkipIndexSpec extends SparkSpecBase {
       cat.append("ft", batch(2))
     }
     val postings = CountingFs.created.asScala.count(_.endsWith(".body.postings"))
-    val files = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet"))
     files should be > 0
     postings shouldBe files
     val (df, kept, total) = cat.readFullTextAnd("ft", "body", Seq("tok2_5", "body"))

@@ -1,0 +1,252 @@
+package graft
+
+import java.io.IOException
+import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.catalog._
+
+/** The table log's one commit step and what a crash at any point of a
+  * commit leaves behind.
+  */
+class TableLogSpec extends SparkSpecBase {
+  import spark.implicits._
+
+  /** 4 threads race `rounds` rounds to publish one fresh name each; the
+    * rounds without exactly one winner whose body the file holds intact.
+    */
+  private def racedRounds(f: FileSystem, dir: String, rounds: Int)(
+      publish: (Path, Array[Byte]) => Boolean): Int = {
+    val threads = 4
+    val pool = Executors.newFixedThreadPool(threads)
+    try (0 until rounds).count { r =>
+      val dst = new Path(s"$dir/r$r.json")
+      val barrier = new CyclicBarrier(threads)
+      val bodies = (0 until threads).map(i => Array.fill[Byte](64 * 1024)(('a' + i).toByte))
+      val wins = (0 until threads).map { i =>
+        pool.submit(() => { barrier.await(); publish(dst, bodies(i)) })
+      }.map(_.get(60, TimeUnit.SECONDS))
+      // a torn body can also fail its checksum: that is a lost round too
+      val held =
+        try { val in = f.open(dst); try in.readAllBytes() finally in.close() }
+        catch { case _: IOException => Array.emptyByteArray }
+      !(wins.count(identity) == 1 && java.util.Arrays.equals(held, bodies(wins.indexOf(true))))
+    } finally pool.shutdownNow()
+  }
+
+  test("publish: of 4 racing writers exactly one wins each of 500 rounds, its body intact") {
+    val dir = tmpDir("publish")
+    val f = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    racedRounds(f, dir, 500)((p, b) => TableLog.publish(f, p, b)) shouldBe 0
+    // the same race catches Hadoop's create(p, false), an existence check
+    // followed by a truncating open: it lets more than one writer win
+    val naive = tmpDir("publish-create")
+    racedRounds(f, naive, 500) { (p, b) =>
+      try {
+        val out = f.create(p, false)
+        try out.write(b) finally out.close()
+        true
+      } catch { case _: IOException => false }
+    } should be > 0
+  }
+
+  private val schema = StructType(Seq(
+    StructField("k", StringType), StructField("v", LongType),
+    StructField("updated_at", LongType)))
+
+  private def copyTree(from: String, to: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get(from)
+    java.nio.file.Files.walk(src).iterator().asScala.toSeq.foreach { p =>
+      val d = java.nio.file.Paths.get(to).resolve(src.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(d)
+      else java.nio.file.Files.copy(p, d)
+    }
+  }
+
+  /** Table `crash` and table `dst` (for MOVE PARTITION) under `root`. */
+  private def register(root: String, sem: EngineSemantics, parts: Seq[String]): Catalog = {
+    val cat = new Catalog(spark)
+    Seq("crash", "dst").foreach(n =>
+      cat.createTable(TableDef(n, s"$root/$n", schema, Seq("k"), sem, partitionKeys = parts)))
+    cat
+  }
+
+  /** What a fresh process sees: `crash`'s merged rows, raw rows and
+    * snapshot tags, `dst`'s rows and the rows `crash` has detached.
+    */
+  private def observe(root: String, sem: EngineSemantics, parts: Seq[String]): Seq[Seq[String]] = {
+    val cat = register(root, sem, parts)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => s"${r.getAs[String]("k")}:${r.getAs[Long]("v")}").toSeq.sorted
+    val detached = s"$root/crash.detached"
+    Seq(rows(cat.read("crash")), rows(cat.readRaw("crash")),
+      cat.systemSnapshots("crash").collect().map(_.getString(0)).toSeq, rows(cat.read("dst")),
+      if (!new java.io.File(detached).exists()) Nil
+      else rows(spark.read.schema("k STRING, v BIGINT").option("recursiveFileLookup", "true")
+        .parquet(detached)))
+  }
+
+  /** For every N, run `op` on a copy of the tables `setup` built, with the
+    * N-th and every later mutating filesystem call failing (a crash at that
+    * point); a fresh Catalog must then see the tables exactly as before or
+    * exactly as after `op`, and a second one the same again.
+    */
+  private def crashPrefixes(name: String, sem: EngineSemantics, parts: Seq[String] = Nil)(
+      setup: Catalog => Unit)(op: Catalog => Unit): Unit = {
+    val base = tmpDir(s"crash-$name")
+    val template = s"$base/template"
+    setup(register(template, sem, parts))
+    val before = observe(template, sem, parts)
+    def run(path: String, failAt: Long): Boolean = {
+      copyTree(template, path)
+      val cat = register(path, sem, parts)
+      CrashingFs.arm(failAt)
+      spark.conf.set("fs.file.impl", classOf[CrashingFs].getName)
+      spark.conf.set("fs.file.impl.disable.cache", "true")
+      try { op(cat); true }
+      catch { case scala.util.control.NonFatal(_) => false }
+      finally {
+        spark.conf.unset("fs.file.impl")
+        spark.conf.unset("fs.file.impl.disable.cache")
+        CrashingFs.failAt = Long.MaxValue
+      }
+    }
+    run(s"$base/full", Long.MaxValue) shouldBe true
+    val calls = CrashingFs.calls.get
+    val after = observe(s"$base/full", sem, parts)
+    after should not be before
+    info(s"$name: $calls mutating calls")
+    (1L to calls).foreach { n =>
+      val path = s"$base/n$n"
+      run(path, n)
+      val seen = observe(path, sem, parts)
+      withClue(s"$name, crash at mutating call $n of $calls: ") {
+        Seq(before, after) should contain(seen)
+        observe(path, sem, parts) shouldBe seen
+      }
+    }
+  }
+
+  private def batch(rows: (String, Long, Long)*) = rows.toDF("k", "v", "updated_at")
+
+  test("a crash at any filesystem call of an append leaves the table before or after it") {
+    crashPrefixes("append", Append)(_.append("crash", batch(("a", 1L, 1L))))(
+      _.append("crash", batch(("b", 2L, 1L))))
+  }
+
+  test("a crash at any filesystem call of a compact leaves the table before or after it") {
+    crashPrefixes("compact", ReplacingDedup(Seq("k"), "updated_at")) { c =>
+      c.append("crash", batch(("a", 1L, 1L), ("b", 2L, 1L)))
+      c.append("crash", batch(("a", 3L, 2L)))
+    }(_.compact("crash"))
+  }
+
+  test("a crash at any filesystem call of a lightweight delete leaves the table before or after it") {
+    crashPrefixes("delete", Append)(_.append("crash",
+      batch(("a", 1L, 1L), ("b", 2L, 1L), ("c", 3L, 1L))))(
+      _.deleteLightweight("crash", col("k") === "b"))
+  }
+
+  test("a crash at any filesystem call of a FREEZE leaves the table before or after it") {
+    crashPrefixes("freeze", Append)(_.append("crash", batch(("a", 1L, 1L))))(
+      _.freeze("crash", "s1"))
+  }
+
+  private val byDay = Seq("updated_at")
+  private def twoDays(c: Catalog): Unit =
+    c.append("crash", batch(("a", 1L, 1L), ("b", 2L, 2L), ("c", 3L, 1L)))
+
+  test("a crash at any filesystem call of a DETACH PARTITION leaves it in the table or detached") {
+    crashPrefixes("detach", Append, byDay)(twoDays)(_.detachPartition("crash", 1L))
+  }
+
+  test("a crash at any filesystem call of a DETACH of a frozen partition leaves it in the table or detached") {
+    crashPrefixes("detach-frozen", Append, byDay) { c =>
+      twoDays(c)
+      c.freeze("crash", "s1")
+    }(_.detachPartition("crash", 1L))
+  }
+
+  test("a crash at any filesystem call of an ATTACH PARTITION leaves it detached or in the table") {
+    crashPrefixes("attach", Append, byDay) { c =>
+      twoDays(c)
+      c.detachPartition("crash", 1L)
+    }(_.attachPartition("crash", 1L))
+  }
+
+  test("a crash at any filesystem call of a MOVE PARTITION leaves it in the source or the destination") {
+    crashPrefixes("move", Append, byDay)(twoDays)(_.movePartition("crash", "dst", 1L))
+  }
+
+  test("an append-only table keeps a bounded log; a dropped partition's files go one commit later") {
+    val root = tmpDir("bounded")
+    val cat = register(root, Append, byDay)
+    def entries = new java.io.File(s"$root/crash/_log").list().count(_.matches("\\d+\\.json"))
+    (1 to 12).foreach(i => cat.append("crash", batch((s"k$i", i.toLong, (i % 2).toLong))))
+    entries shouldBe 2 // the head and the one before it
+    def files(day: Long) = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/crash")).iterator().asScala
+        .count(p => p.toString.contains(s"updated_at=$day/") && p.toString.endsWith(".parquet"))
+    }
+    files(0L) shouldBe 6
+    cat.dropPartition("crash", 0L) should be > 0
+    cat.read("crash").count() shouldBe 6
+    files(0L) shouldBe 6 // one commit of grace for readers of the entry before
+    cat.append("crash", batch(("z", 0L, 1L)))
+    files(0L) shouldBe 0
+    cat.read("crash").count() shouldBe 7
+    entries shouldBe 2
+  }
+
+  test("publish refuses a filesystem without a step that refuses an existing name") {
+    val dir = tmpDir("objstore")
+    val f = new ObjectStoreFs
+    f.initialize(java.net.URI.create("objstore:///"), spark.sessionState.newHadoopConf())
+    val e = intercept[UnsupportedOperationException] {
+      TableLog.publish(f, new Path(s"objstore://$dir/0.json"), Array[Byte](1))
+    }
+    e.getMessage should include("objstore:")
+    new java.io.File(dir).list() shouldBe empty
+  }
+}
+
+/** The local filesystem under another scheme: one whose rename a publish
+  * cannot trust.
+  */
+class ObjectStoreFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("objstore:///")
+}
+
+/** The local filesystem failing its `failAt`-th and every later mutating
+  * call (create, mkdirs, rename, delete) — a process that dies there. The
+  * link a local publish makes is no filesystem call: failing the calls on
+  * either side of it covers both of its prefixes.
+  */
+class CrashingFs extends CountingFs {
+  private def step(): Unit =
+    if (CrashingFs.calls.incrementAndGet() >= CrashingFs.failAt)
+      throw new IOException("simulated crash")
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = { step(); super.mkdirs(f, permission) }
+  override def rename(src: Path, dst: Path): Boolean = { step(); super.rename(src, dst) }
+  override def delete(f: Path, recursive: Boolean): Boolean = { step(); super.delete(f, recursive) }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    step()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object CrashingFs {
+  val calls = new AtomicLong
+  @volatile var failAt: Long = Long.MaxValue
+
+  def arm(at: Long): Unit = { calls.set(0); failAt = at }
+}

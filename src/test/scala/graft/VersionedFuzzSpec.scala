@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.catalog._
 
-/** Randomized interleaving fuzz for the Versioned multi-writer protocol:
+/** Randomized interleaving fuzz for the multi-writer table log:
   * concurrent appenders (each through its OWN Catalog instance — the
   * fleet shape) race a compactor loop, and the final merged read must
   * hold EXACTLY the union of appended rows — no lost update, no
-  * double-count. This drives the _FOLDED fold-exclusion sidecar, the
-  * marker CAS, and the flip/unmark sequencing under real interleavings
-  * rather than the single staged crash the protocol spec pins.
+  * double-count. This drives the publish-if-absent commit, the rewrite's
+  * carry-over of concurrently appended files and the GC under real
+  * interleavings rather than the single staged crash the specs pin.
   */
 class VersionedFuzzSpec extends SparkSpecBase {
   import spark.implicits._
@@ -22,8 +22,7 @@ class VersionedFuzzSpec extends SparkSpecBase {
       org.apache.spark.sql.types.StructField("seq",
         org.apache.spark.sql.types.LongType)))
     def define(cat: Catalog): Unit =
-      cat.createTable(TableDef("t", path, schema, Seq("seq"), Append,
-        layout = Versioned))
+      cat.createTable(TableDef("t", path, schema, Seq("seq"), Append))
     val setup = new Catalog(spark)
     define(setup)
 
