@@ -2212,18 +2212,19 @@ final class Catalog(spark: SparkSession) {
     * sources report their listed files' lengths), never a root estimate
     * of a join or aggregate above them.
     */
-  def sourceBytes(df: DataFrame): Long =
+  private def sourceBytes(df: DataFrame): Long =
     df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes)
       .filter(_.isValidLong).map(_.toLong).sum
 
   /** True when `bytes` of measured source resolve to one append part
     * (under `graft.append.partBytes`); false for an unmeasured -1. The
-    * one rule behind every "this block is one file / one partition"
-    * decision: [[append]]'s pre-merge coalesce, [[clusteredFor]]'s
-    * exchange-free sort and the git high-water-mark scan.
+    * one rule behind every "this is one file / one partition" decision:
+    * [[append]]'s pre-merge coalesce of a measured block, [[clusteredFor]]'s
+    * exchange-free sort, and [[readStorage]]'s one-partition scan of a
+    * merge engine's state (sized from the log's file lengths).
     */
-  def fitsOnePart(bytes: Long): Boolean = bytes >= 0 && appendParts(bytes) == 1
+  private def fitsOnePart(bytes: Long): Boolean = bytes >= 0 && appendParts(bytes) == 1
 
   /** Parts for `bytes` of append source: one per `graft.append.partBytes`,
     * capped by `graft.append.maxParts`. The only reader of either key.
@@ -2778,6 +2779,13 @@ final class Catalog(spark: SparkSession) {
     * compact retires the mapping. `keepId` keeps the
     * `__dv_file`/`__dv_pos` row identity ([[deleteLightweight]] records
     * matched rows by it); `live` marks a scan of the whole live head.
+    *
+    * A merge engine's state whose logged file lengths fit one part
+    * ([[fitsOnePart]]) is scanned as one partition: the engine's fold and
+    * the query's own GROUP BY, ORDER BY and LIMIT above it then need no
+    * exchange, so a small table's merged read runs as one stage. Append
+    * and Null tables keep the file-split scan: their engine adds no
+    * exchange, and the projection rewrites match a bare scan.
     */
   private def readStorage(t: TableDef, e: LogEntry, keepId: Boolean = false,
                           live: Boolean = false): DataFrame = {
@@ -2797,18 +2805,16 @@ final class Catalog(spark: SparkSession) {
       }
     val outCols = t.schema.fieldNames.toSeq ++
       (if (keepId) Seq("__dv_file", "__dv_pos") else Nil)
-    if (renames.isEmpty)
-      mask(scan(t, l, e.files, t.schema, live, withId))
-        .select(outCols.map(n => col(s"`$n`")): _*)
-    else {
-      val widened = StructType(t.schema.fields ++ renames.map {
-        case (to, phys) => StructField(phys, t.schema(to).dataType)
-      })
-      val raw = mask(scan(t, l, e.files, widened, live, withId))
-      renames.foldLeft(raw) { case (d, (to, phys)) =>
-        d.withColumn(to, coalesce(col(to), col(phys)))
-      }.select(outCols.map(n => col(s"`$n`")): _*)
-    }
+    val widened = StructType(t.schema.fields ++ renames.map {
+      case (to, phys) => StructField(phys, t.schema(to).dataType)
+    })
+    val scanned = scan(t, l, e.files, widened, live, withId)
+    val merges = t.semantics != Append && t.semantics != NullEngine
+    val raw = mask(
+      if (merges && fitsOnePart(e.files.map(_.len).sum)) scanned.coalesce(1) else scanned)
+    renames.foldLeft(raw) { case (d, (to, phys)) =>
+      d.withColumn(to, coalesce(col(to), col(phys)))
+    }.select(outCols.map(n => col(s"`$n`")): _*)
   }
 
   /** Merged-view read of one log state — compaction folds exactly the

@@ -36,13 +36,16 @@ final case class LogMove(src: String, dst: String, into: Option[String])
   * are the partition directories still to reach their destination
   * ([[TableLog.settle]]).
   * `frozen` marks an entry the adopter wrote for an old snapshot: never a
-  * head.
+  * head. `extendsPrev` (key `extends`) marks an entry that kept every data
+  * and deletion-vector file of the entry before it ([[TableLog.commit]]
+  * sets it): collecting that older entry deletes no file.
   */
 final case class LogEntry(n: Long, files: Seq[LogFile], dvs: Seq[LogFile],
                           tokens: Set[String] = Set.empty,
                           folded: Set[String] = Set.empty,
                           moves: Seq[LogMove] = Nil,
-                          frozen: Boolean = false) {
+                          frozen: Boolean = false,
+                          extendsPrev: Boolean = false) {
   def holds(token: String): Boolean = tokens(token) || folded(token)
 }
 
@@ -174,8 +177,9 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     * read (the first attempt derives from it). The head's pending moves
     * are settled first, and `next` sees the head without them, listing
     * the files they brought into this table: an entry only ever records
-    * moves still to make. After a publish, the entries and files the new
-    * head no longer reaches are collected.
+    * moves still to make. The entry records whether it kept every file of
+    * the head. After a publish, the entries and files the new head no
+    * longer reaches are collected.
     */
   def commit(table: String, read: Option[LogEntry] = None)(
       next: LogEntry => Option[LogEntry]): Option[LogEntry] = {
@@ -186,7 +190,7 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
       next(h.copy(files = h.files ++ moved, moves = Nil)) match {
         case None => return None
         case Some(e) =>
-          val at = e.copy(n = h.n + 1)
+          val at = e.copy(n = h.n + 1, extendsPrev = paths(h).subsetOf(paths(e)))
           if (publish(f, entryPath(at.n), json(at))) { collect(at, h); return Some(at) }
       }
       attempt += 1
@@ -237,8 +241,9 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
   /** Collect after `h` was published over `prev`: delete the entries
     * older than `prev` that no tag names, and the files only they reach (a
     * directory at once when no kept file lies in it). A directory a kept
-    * entry is still moving out stays whole. With nothing to delete it
-    * costs one listing of `_log/`.
+    * entry is still moving out stays whole. The entry `prev` extends is
+    * deleted unopened: `prev` keeps every file it lists. After an append
+    * it costs one listing of `_log/` and one delete.
     */
   private def collect(h: LogEntry, prev: LogEntry): Unit = {
     val ls = listed()
@@ -248,7 +253,8 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     val (keep, moving) = reach(h, ls, tagged, Some(prev))
     val keptTops = (keep ++ moving).flatMap(top)
     val removed = scala.collection.mutable.Set.empty[String]
-    dead.flatMap(n => gone(entry(n))).flatMap(e => e.files ++ e.dvs).map(_.path)
+    dead.filterNot(n => prev.extendsPrev && n == prev.n - 1).flatMap(n => gone(entry(n)))
+      .flatMap(e => e.files ++ e.dvs).map(_.path)
       .filterNot(p => keep(p) || moving.exists(d => p.startsWith(d + "/"))).foreach { p =>
         top(p) match {
           case Some(d) if !keptTops(d) => if (removed.add(d)) f.delete(new Path(root, d), true)
@@ -367,7 +373,7 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
       case _ => Nil
     }
     LogEntry(n, files("files"), files("dvs"), strs("tokens"), strs("folded"), moves,
-      (j \ "frozen") == JBool(true))
+      (j \ "frozen") == JBool(true), (j \ "extends") == JBool(true))
   }
 
   private def parseTag(j: JValue): LogTag = {
@@ -405,7 +411,10 @@ object TableLog {
     "folded" -> JArray(e.folded.toList.sorted.map(JString(_))),
     "moves" -> JArray(e.moves.toList.map(m =>
       JArray(List(JString(m.src), JString(m.dst), m.into.fold[JValue](JNull)(JString(_)))))),
-    "frozen" -> JBool(e.frozen)))
+    "frozen" -> JBool(e.frozen),
+    "extends" -> JBool(e.extendsPrev)))
+
+  private def paths(e: LogEntry): Set[String] = (e.files ++ e.dvs).map(_.path).toSet
 
   /** Publish `body` as `dst` unless a file of that name exists, in one
     * step that never overwrites: the body is written in full to a staging

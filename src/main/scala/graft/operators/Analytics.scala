@@ -48,7 +48,7 @@ object Analytics extends QueryModule {
     // probe build a 2M-row broadcast table (x26 per decade vs x4 unhinted).
     // Catalyst/AQE broadcasts automatically below the 10 MB threshold —
     // the BroadcastHashJoin this query demonstrates still plans at bench
-    // scale (ExplainCheck shows bhj=1) — and degrades to a shuffle join
+    // scale (PlanSpec asserts the BroadcastHashJoin) — and degrades to a shuffle join
     // when the dimension outgrows it, which is the posture that survives
     // 100 TB. Hints stay correct for dims KNOWN to be bounded (nation,
     // region, a query literal set); part is not one.

@@ -108,18 +108,15 @@ object TsvIngest {
 
   /** A3+P5: per-(table, repo) ingest high-water mark — `SELECT max(time)
     * FROM t WHERE repo_name = r` (importer.py:95). None when the table is
-    * empty or the repo unseen (first import ingests everything). A table
-    * whose listed data files fit one append part ([[Catalog.fitsOnePart]]
-    * over the scan leaves' sizes) aggregates in one partition: one job,
-    * where the partial and final aggregate stages cost two.
+    * empty or the repo unseen (first import ingests everything). The git
+    * tables are merge engines, so [[Catalog.readRaw]] scans a table whose
+    * logged files fit one append part as one partition: the aggregate
+    * runs as one job, where partial and final stages would cost two.
     */
   def highWaterMark(cat: Catalog, table: String, repoName: String): Option[java.sql.Timestamp] =
     if (!cat.exists(table)) None
-    else {
-      val rows = cat.readRaw(table).filter(col("repo_name") === repoName)
-      val scan = if (cat.fitsOnePart(cat.sourceBytes(rows))) rows.coalesce(1) else rows
-      Option(scan.agg(max(col("time"))).head().getTimestamp(0))
-    }
+    else Option(cat.readRaw(table).filter(col("repo_name") === repoName)
+      .agg(max(col("time"))).head().getTimestamp(0))
 
   /** The full §3.1 incremental load for one (tsv, table, repo):
     * read → project → inject → watermark-filter → append (dedup + clustered

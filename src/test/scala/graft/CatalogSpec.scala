@@ -2007,6 +2007,60 @@ class CatalogSpec extends SparkSpecBase {
     cat.dropRefreshableView("rv_boom") shouldBe false
   }
 
+  test("every merge engine reads the same rows in one partition as above graft.append.partBytes") {
+    // a table whose logged files fit one append part is scanned as one
+    // partition (no exchange under the fold); lowering partBytes below the
+    // table's size brings the file-split scan and its exchange back
+    val kv = StructType(Seq(StructField("k", StringType), StructField("v", LongType)))
+    def rows(xs: (String, Long)*) = xs.toDF("k", "v")
+    val hll = (ids: Range) => ids.map(i => (s"k${i % 3}", i.toLong)).toDF("k", "id")
+      .groupBy(col("k")).agg(hll_sketch_agg(col("id")).as("state"))
+    val cases: Seq[(EngineSemantics, StructType, Seq[org.apache.spark.sql.DataFrame])] = Seq(
+      (ReplacingDedup(Seq("k"), "ver", Some("del")),
+        StructType(kv.fields ++ Seq(StructField("ver", LongType), StructField("del", IntegerType))),
+        Seq(Seq(("a", 1L, 1L, 0), ("b", 2L, 1L, 0), ("c", 3L, 1L, 0)),
+          Seq(("a", 10L, 2L, 0), ("b", 2L, 2L, 1), ("d", 4L, 1L, 0)),
+          Seq(("a", 5L, 1L, 0), ("c", 30L, 3L, 0), ("e", 5L, 1L, 1)))
+          .map(_.toDF("k", "v", "ver", "del"))),
+      (Summing(Seq("k"), Seq("v")), kv,
+        Seq(rows("a" -> 1L, "b" -> 2L), rows("a" -> 10L, "c" -> 3L), rows("b" -> 20L, "a" -> 100L))),
+      (Aggregating(Seq("k"), Seq("state")),
+        StructType(Seq(StructField("k", StringType), StructField("state", BinaryType))),
+        Seq(hll(0 until 60), hll(30 until 90), hll(80 until 120))),
+      (Collapsing(Seq("k"), "sign", "ver"), collapsingSchema,
+        Seq(Seq(("a", 10L, 1L, 1), ("b", 20L, 1L, 1), ("c", 30L, 1L, 1)),
+          Seq(("a", 10L, 1L, -1), ("a", 11L, 2L, 1), ("c", 30L, 1L, -1)),
+          Seq(("b", 20L, 1L, -1), ("d", 40L, 1L, 1)))
+          .map(_.toDF("k", "v", "ver", "sign"))),
+      (JoinAny(Seq("k")), kv,
+        Seq(rows("a" -> 3L, "b" -> 2L), rows("a" -> 1L, "c" -> 5L), rows("b" -> 7L, "c" -> 4L))))
+    val cat = new Catalog(spark)
+    cases.zipWithIndex.foreach { case ((sem, schema, batches), i) =>
+      val name = s"onepart$i"
+      cat.createTable(TableDef(name, tmpDir("cat") + s"/$name", schema, Seq("k"), sem))
+      batches.foreach(b => cat.append(name, b))
+      def read() = {
+        val df = cat.read(name)
+        val shown = sem match {
+          case _: Aggregating => df.select(col("k"), hll_sketch_estimate(col("state")))
+          case _ => df
+        }
+        (shown.collect().map(_.toSeq.mkString("|")).toSeq.sorted,
+          df.queryExecution.executedPlan.toString.contains("Exchange"))
+      }
+      val (one, oneExchange) = read()
+      spark.conf.set("graft.append.partBytes", "64")
+      val (split, splitExchange) =
+        try read() finally spark.conf.unset("graft.append.partBytes")
+      withClue(s"$sem: ") {
+        one should not be empty
+        one shouldBe split
+        oneExchange shouldBe false
+        splitExchange shouldBe true
+      }
+    }
+  }
+
   test("MATERIALIZED exprs must resolve over base columns and cast to the " +
        "declared type") {
     val cat = new Catalog(spark)

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
@@ -34,6 +34,9 @@ class CountingFs extends LocalFileSystem {
     created.add(f.getName)
     super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    opened.add(f.getName); super.open(f, bufferSize)
+  }
 }
 
 object CountingFs {
@@ -46,12 +49,14 @@ object CountingFs {
   val other = new AtomicLong
   /** Names of the files created, in order. */
   val created = new ConcurrentLinkedQueue[String]
+  /** Names of the files opened for reading through `open`, in order. */
+  val opened = new ConcurrentLinkedQueue[String]
 
   /** All metadata calls so far. */
   def meta: Long = status.get + lists.get + other.get
 
   def reset(): Unit = {
-    Seq(existsCalls, status, lists, other).foreach(_.set(0)); created.clear()
+    Seq(existsCalls, status, lists, other).foreach(_.set(0)); created.clear(); opened.clear()
   }
 
   /** Run `body` with the counting filesystem serving `file:` paths for

@@ -1,9 +1,8 @@
 package graft
 
-/** Plan-shape regression gate (round-4 verdict item 1): the properties
-  * `graft.tools.ExplainCheck` used to merely PRINT, promoted to failing
-  * assertions so a future edit cannot silently lose a pushdown, demote a
-  * broadcast join, or widen a top-k into a global sort.
+/** Plan-shape regression gate: plan properties as failing assertions,
+  * so a future edit cannot silently lose a pushdown, demote a broadcast
+  * join, or widen a top-k into a global sort.
   *
   * Assertions run on the plan STRING of `executedPlan`: with AQE on, the
   * root is `AdaptiveSparkPlanExec(isFinalPlan=false)` whose toString still
@@ -296,6 +295,43 @@ class PlanSpec extends SparkSpecBase {
     val plan = cat.read("final_push").filter(col("k") === 7L)
       .queryExecution.executedPlan.toString
     plan should include("EqualTo(k,7)") // inside PushedFilters at the scan
+  }
+
+  test("a keyed GROUP BY ... ORDER BY ... LIMIT over a small merge table runs as one job, no exchange") {
+    // the merged read of a table whose logged files fit one append part
+    // scans one partition: the latest-wins window, the aggregate and the
+    // top-k above it all see SinglePartition and plan no exchange
+    import graft.catalog._
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val cat = new Catalog(spark)
+    cat.createTable(TableDef("commits_gq", tmpDir("plan") + "/gq", StructType(Seq(
+      StructField("repo_name", StringType), StructField("hash", StringType),
+      StructField("author", StringType), StructField("ver", LongType))),
+      Seq("repo_name", "hash"), ReplacingDedup(Seq("repo_name", "hash"), "ver")))
+    (1 to 3).foreach { v =>
+      cat.append("commits_gq", (1 to 40).map(i =>
+        (s"r${i % 2}", s"h$i", s"a${(i + v) % 5}", v.toLong)).toDF("repo_name", "hash", "author", "ver"))
+    }
+    def gitq() = graft.sql.ChDdl.query(cat, spark,
+      "SELECT author, count() AS c FROM commits_gq WHERE repo_name = 'r1' " +
+        "GROUP BY author ORDER BY c DESC, author LIMIT 5")
+    val want = (1 to 40).filter(_ % 2 == 1).groupBy(i => s"a${(i + 3) % 5}")
+      .map { case (a, is) => (a, is.size.toLong) }.toSeq.sortBy { case (a, c) => (-c, a) }
+    val df = gitq()
+    val jobs = org.apache.spark.JobTagsOf(spark.sparkContext) {
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq shouldBe want
+    }
+    jobs should have size 1
+    df.queryExecution.executedPlan.toString should not include "Exchange"
+    // above graft.append.partBytes the scan keeps its file splits and the
+    // fold its exchange, with the same answer
+    spark.conf.set("graft.append.partBytes", "1024")
+    try {
+      val big = gitq()
+      big.queryExecution.executedPlan.toString should include("Exchange")
+      big.collect().map(r => (r.getString(0), r.getLong(1))).toSeq shouldBe want
+    } finally spark.conf.unset("graft.append.partBytes")
   }
 
   test("flagship aggregation stays inside whole-stage codegen") {

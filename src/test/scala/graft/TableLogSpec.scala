@@ -205,6 +205,23 @@ class TableLogSpec extends SparkSpecBase {
     entries shouldBe 2
   }
 
+  test("an append collects the entry before its predecessor without opening it") {
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("extends")
+    val cat = register(root, Append, Nil)
+    (1 to 3).foreach(i => cat.append("crash", batch((s"k$i", i.toLong, 1L))))
+    def entries = new java.io.File(s"$root/crash/_log").list().filter(_.matches("\\d+\\.json")).sorted
+    entries shouldBe Array("1.json", "2.json")
+    val opened = CountingFs.during(spark) {
+      cat.append("crash", batch(("k4", 4L, 1L)))
+      CountingFs.opened.asScala.toSeq
+    }
+    opened should contain("2.json") // the head the append derives from
+    opened should not contain "1.json"
+    entries shouldBe Array("2.json", "3.json")
+    cat.read("crash").count() shouldBe 4
+  }
+
   test("publish refuses a filesystem without a step that refuses an existing name") {
     val dir = tmpDir("objstore")
     val f = new ObjectStoreFs
