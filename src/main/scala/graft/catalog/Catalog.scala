@@ -107,8 +107,7 @@ final case class Aggregating(keys: Seq[String], stateCols: Seq[String],
                              stateKinds: Map[String, String] = Map.empty)
     extends EngineSemantics {
   /** Kind of one state column; unlisted columns keep the original HLL
-    * behavior so every pre-existing table and `_TABLE` sidecar reads
-    * unchanged.
+    * behavior so every pre-existing definition reads unchanged.
     */
   def kindOf(c: String): String = stateKinds.getOrElse(c, "hll")
 
@@ -218,14 +217,14 @@ final case class TableDef(
     // crash-recovery contract.
     projections: Seq[ProjectionSpec] = Nil,
     // CH `TTL col + INTERVAL n unit [GROUP BY … SET …]` declared in the
-    // table definition (persisted in `_TABLE`); the sweep itself runs on
+    // table definition (recorded in the table log); the sweep itself runs on
     // demand — [[Catalog.materializeTtl]], CH's `ALTER TABLE …
     // MATERIALIZE TTL` — never as a hidden read-path rewrite.
     ttl: Option[TtlSpec] = None,
     // Pending ALTER state of the STORED files. Column ALTERs are
     // metadata-only, so files written before one keep their old shape
     // until the next compact/mutation rewrites every file in the declared
-    // shape and clears all three (persisted in `_TABLE`):
+    // shape and clears all three (recorded in the table log):
     //   - ADD COLUMN: columns older files lack — reads fill their nulls
     //     with the column's DEFAULT until the rewrite materializes it
     //     (afterwards a stored NULL reads back as NULL);
@@ -239,8 +238,8 @@ final case class TableDef(
 
   /** Each declared column DEFAULT as SQL cast to the column's current
     * type. The field's `chDefault` metadata is the one place a default is
-    * stored; the insert fill, the read backfill, `system.columns` and the
-    * `_TABLE` sidecar all derive from it here.
+    * stored; the insert fill, the read backfill and `system.columns` all
+    * derive from it here.
     */
   def defaults: ListMap[String, String] = ListMap(schema.fields.toSeq.collect {
     case f if f.metadata.contains("chDefault") =>
@@ -360,8 +359,27 @@ final class Catalog(spark: SparkSession) {
     */
   private val codecs = Set("snappy", "zstd", "gzip", "lz4", "uncompressed")
 
-  /** D1/D2: register ≈ CREATE TABLE (create_db.py:32-33). Idempotent. */
+  /** D1/D2: register ≈ CREATE TABLE (create_db.py:32-33). Idempotent: a
+    * registered name keeps its registration. Otherwise the table's log is
+    * opened ([[TableLog.recover]]: a directory an older build wrote is
+    * adopted and a crashed commit's partition moves are settled before
+    * anything is written there), and when its head lacks this definition
+    * or holds a different one, an entry with the same files publishes it.
+    */
   def createTable(t: TableDef): TableDef = {
+    validate(t)
+    if (tables.putIfAbsent(t.name, t).isEmpty) Catalog.lockFor(t.path).synchronized {
+      val h = TableLog.recover(fs(t.path), t.path, Some(t))
+      if (!h.table.contains(t)) log(t).commit(t.name, Some(h))(cur => Some(cur.copy(table = Some(t))))
+    }
+    registerProjections(tables(t.name))
+    tables(t.name)
+  }
+
+  /** The checks a definition passes before it is registered or published
+    * ([[createTable]], [[alter]]); returns it.
+    */
+  private def validate(t: TableDef): TableDef = {
     require(codecs.contains(t.codec),
       s"${t.name}: unknown codec ${t.codec} (one of ${codecs.mkString(", ")})")
     // skip-index columns must be DATA-FILE columns: a partition key lives
@@ -625,16 +643,7 @@ final class Catalog(spark: SparkSession) {
     // "chDefault"): validated like MATERIALIZED (see [[checkDefault]])
     t.schema.fields.filter(_.metadata.contains("chDefault")).foreach(f =>
       checkDefault(t, f.name, f.metadata.getString("chDefault"), t.name))
-    // a directory an older build wrote is adopted, and a crashed commit's
-    // partition moves settled, before anything is written into it
-    if (tables.putIfAbsent(t.name, t).isEmpty) log(t).recover(t.name)
-    // persist the WINNING definition: when putIfAbsent lost to an existing
-    // registration, writing the argument def would leave a _TABLE sidecar
-    // describing semantics that were never in effect — attach() after a
-    // restart would then apply the wrong merge view
-    persistTableDef(tables(t.name))
-    registerProjections(tables(t.name))
-    tables(t.name)
+    t
   }
 
   /** A column DEFAULT must resolve over the PLAIN columns — neither
@@ -685,247 +694,63 @@ final class Catalog(spark: SparkSession) {
   private def projPath(t: TableDef, proj: String): String =
     new org.apache.hadoop.fs.Path(t.path, s"_proj_$proj").toString
 
-  // ---- persisted table metadata (ATTACH TABLE analog) -------------------
+  // ---- the definition in the log (ATTACH TABLE analog) -----------------
   //
   // ClickHouse stores each table's definition beside its data and ATTACH
-  // re-registers it from disk; without this, every process in a fleet
-  // must re-declare the identical TableDef after a restart (the deploy
-  // runbook's re-declare step). createTable writes a `_TABLE` JSON
-  // sidecar (idempotent — same definition, same bytes), and [[attach]]
-  // reconstructs the TableDef from the path alone.
+  // re-registers it from disk. Here every log entry holds the definition
+  // ([[TableDefJson]]): a definition change is a commit like any other,
+  // so a read or an append in another process takes it from the head it
+  // opens anyway, and [[attach]] reconstructs the TableDef from the path.
 
-  private def tableDefPath(t: TableDef) =
-    new org.apache.hadoop.fs.Path(t.path, "_TABLE")
-
-  /** The `_TABLE` JSON for a def — json4s (ships with Spark), not string
-    * splicing: column names may legally contain braces/commas/quotes, and
-    * a hand-rolled brace counter or comma-joined key list silently
-    * mis-parses them.
+  /** `t` with the definition entry `e` holds (if any) under `t`'s
+    * registered name.
     */
-  private def tableDefJson(t: TableDef): String = {
-    import org.json4s.JsonDSL._
-    import org.json4s.jackson.JsonMethods
-    val sem: org.json4s.JObject = t.semantics match {
-      case Append => ("kind" -> "append"): org.json4s.JObject
-      case NullEngine => ("kind" -> "null"): org.json4s.JObject
-      case ReplacingDedup(keys, v, isDel) =>
-        ("kind" -> "replacing") ~ ("keys" -> keys) ~ ("version" -> v) ~
-          ("is_deleted" -> isDel)
-      case Summing(keys, cols) =>
-        ("kind" -> "summing") ~ ("keys" -> keys) ~ ("cols" -> cols)
-      case Aggregating(keys, cols, kinds) =>
-        ("kind" -> "aggregating") ~ ("keys" -> keys) ~ ("cols" -> cols) ~
-          ("state_kinds" -> kinds)
-      case Collapsing(keys, sign, version) =>
-        ("kind" -> "collapsing") ~ ("keys" -> keys) ~ ("sign" -> sign) ~
-          ("version" -> version)
-      case JoinAny(keys) =>
-        ("kind" -> "join_any") ~ ("keys" -> keys)
-    }
-    val obj =
-      ("name" -> t.name) ~
-      ("schema" -> JsonMethods.parse(t.schema.json)) ~
-      ("sort_keys" -> t.sortKeys) ~
-      ("partition_keys" -> t.partitionKeys) ~
-      ("index_cols" -> t.indexCols) ~
-      ("minmax_cols" -> t.minmaxCols) ~
-      ("token_index_cols" -> t.tokenIndexCols) ~
-      ("codec" -> t.codec) ~
-      // the pending storage state must survive a restart: without it an
-      // attach()ed table reads pre-rename files' columns as all-null,
-      // re-admits a dropped name whose old values still sit in files, and
-      // stops backfilling ADD COLUMN defaults into old parts
-      ("renames" -> t.renames) ~
-      ("dropped_cols" -> t.droppedCols.toSeq.sorted) ~
-      // derived from the fields' `chDefault` (kept so every reader of
-      // older sidecars finds the key it knows)
-      ("defaults" -> t.defaults) ~
-      ("read_default_cols" -> t.backfillCols.toSeq.sorted) ~
-      // declaration-ordered [name, expr] pairs (a JSON object would lose
-      // order; constraints report in declared order, like system.tables)
-      ("constraints" -> t.constraints.map { case (n, e) => Seq(n, e) }) ~
-      ("materialized_cols" ->
-        t.materializedCols.map { case (c, e) => Seq(c, e) }) ~
-      ("column_codecs" -> t.columnCodecs.map { case (c, k) => Seq(c, k) }) ~
-      ("set_index_cols" ->
-        t.setIndexCols.map { case (c, n) => Seq(c, n.toString) }) ~
-      ("fulltext_cols" ->
-        t.fullTextCols.map { case (c, n) => Seq(c, n.toString) }) ~
-      ("ann_index" -> t.annIndex.map(a =>
-        Seq(a.column, a.nCells.toString, a.m.toString, a.k.toString))) ~
-      // [kind, name, cols, sums] rows; cols/sums comma-joined (projection
-      // columns are schema identifiers — no commas by construction)
-      ("projections" -> t.projections.map {
-        case AggProjection(n, dims, sums) =>
-          Seq("agg", n, dims.mkString(","), sums.mkString(","))
-        case SortProjection(n, k) => Seq("sort", n, k, "")
-      }) ~
-      ("ttl" -> t.ttl.map(sp =>
-        ("col" -> sp.col) ~ ("max_age_sec" -> sp.maxAgeSec) ~
-          ("cal_months" -> sp.calMonths) ~
-          ("group_keys" -> sp.groupKeys) ~
-          ("set" -> sp.set.map { case (c, a) => Seq(c, a) }))) ~
-      ("semantics" -> sem)
-    JsonMethods.compact(JsonMethods.render(obj))
+  private def defOf(t: TableDef, e: LogEntry): TableDef = e.table.fold(t)(_.copy(name = t.name))
+
+  /** `name`'s log, its head and the definition the head holds, which
+    * replaces a registration another process's ALTER made stale.
+    */
+  private def current(name: String): (TableDef, TableLog, LogEntry) = {
+    val reg = get(name)
+    val l = log(reg)
+    val h = l.head()
+    val t = defOf(reg, h)
+    if (t != reg) tables.replace(name, reg, t)
+    (t, l, h)
   }
 
-  /** Write the sidecar into the table root — best-effort: the live
-    * in-memory definition is authoritative within the process.
+  /** The one definition change: under the table's write lock, `change`
+    * maps the head's definition to the new one, which is validated as
+    * [[createTable]] validates, published in an entry with the same files
+    * and then registered under its name. `change` runs again when a
+    * concurrent commit takes the log position.
     */
-  private def persistTableDef(t: TableDef): Unit =
-    try {
-      val out = fs(t).create(tableDefPath(t), true)
-      try out.write(tableDefJson(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+  private def alter(name: String)(change: TableDef => TableDef): TableDef =
+    writeLock(name).synchronized {
+      val t = get(name)
+      var out = t
+      log(t).commit(name) { h =>
+        out = validate(change(defOf(t, h)))
+        if (h.table.contains(out)) None else Some(h.copy(table = Some(out)))
+      }
+      tables.put(out.name, out)
+      registerProjections(out)
+      out
+    }
 
-  /** Re-register a table from its persisted `_TABLE` definition — the
-    * ATTACH TABLE analog. Returns the reconstructed def, registered in
-    * this catalog under its stored name. Refuses a name collision with an
-    * already-registered table at a DIFFERENT path — silently returning
-    * the other table's def would leave every read pointed at the wrong
-    * storage.
+  /** Re-register a table from the definition its log head holds — the
+    * ATTACH TABLE analog (a table an older build wrote is adopted first,
+    * [[TableLog.recover]]). Refuses a name collision with a table
+    * registered at a DIFFERENT path — silently returning the other
+    * table's def would leave every read pointed at the wrong storage.
     */
   def attach(path: String): TableDef = {
-    import org.apache.hadoop.fs.Path
-    import org.json4s.jackson.JsonMethods
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path, "_TABLE")
-    val f = p.getFileSystem(conf)
-    require(f.exists(p), s"attach: no _TABLE metadata under $path")
-    val in = f.open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    val j = JsonMethods.parse(json)
-    def str(k: String): String = (j \ k) match {
-      case org.json4s.JString(s) => s
-      case other => throw new IllegalArgumentException(
-        s"attach: _TABLE field $k malformed under $path ($other)")
-    }
-    def list(node: org.json4s.JValue): Seq[String] = node match {
-      case org.json4s.JArray(xs) => xs.collect { case org.json4s.JString(s) => s }
-      case _ => Seq.empty
-    }
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(JsonMethods.compact(JsonMethods.render(j \ "schema")))
-      .asInstanceOf[StructType]
-    val semNode = j \ "semantics"
-    val sem = (semNode \ "kind") match {
-      case org.json4s.JString("append") => Append
-      case org.json4s.JString("null") => NullEngine
-      case org.json4s.JString("replacing") =>
-        ReplacingDedup(list(semNode \ "keys"),
-          (semNode \ "version").asInstanceOf[org.json4s.JString].s,
-          (semNode \ "is_deleted") match {
-            case org.json4s.JString(c) => Some(c)
-            case _ => None
-          })
-      case org.json4s.JString("summing") =>
-        Summing(list(semNode \ "keys"), list(semNode \ "cols"))
-      case org.json4s.JString("aggregating") =>
-        // state_kinds is absent in pre-generalization sidecars → all-HLL
-        val kinds = (semNode \ "state_kinds") match {
-          case org.json4s.JObject(fs) => fs.collect {
-            case (k, org.json4s.JString(v)) => k -> v
-          }.toMap
-          case _ => Map.empty[String, String]
-        }
-        Aggregating(list(semNode \ "keys"), list(semNode \ "cols"), kinds)
-      case org.json4s.JString("collapsing") =>
-        Collapsing(list(semNode \ "keys"),
-          (semNode \ "sign").asInstanceOf[org.json4s.JString].s,
-          (semNode \ "version").asInstanceOf[org.json4s.JString].s)
-      case org.json4s.JString("join_any") =>
-        JoinAny(list(semNode \ "keys"))
-      case other => throw new IllegalArgumentException(
-        s"attach: unknown semantics under $path ($other)")
-    }
-    val name = str("name")
-    val already = tables.get(name)
-    already.foreach { existing =>
-      require(existing.path == path,
-        s"attach: table $name is already registered at ${existing.path}; " +
-          s"refusing to shadow it with $path (detach first)")
-    }
-    // already registered at THIS path: the live in-memory ALTER state is
-    // authoritative (persistTableDef is best-effort, so the sidecar can
-    // lag it) — re-attaching must not overwrite it with stale contents
-    if (already.isDefined) return already.get
-    def strMap(node: org.json4s.JValue): Map[String, String] = node match {
-      case org.json4s.JObject(fields) => fields.collect {
-        case (k, org.json4s.JString(v)) => k -> v
-      }.toMap
-      case _ => Map.empty
-    }
-    // sidecars of older builds stored an ADD COLUMN default only under
-    // `defaults`: it becomes that field's declaration
-    val defs = strMap(j \ "defaults")
-    val declared = StructType(schema.fields.map(f =>
-      if (f.metadata.contains("chDefault")) f
-      else defs.get(f.name).fold(f)(e => withDefault(f, Some(e)))))
-    // codec defaulted when absent: sidecars written before the axis
-    // existed keep attaching (and parquet self-describes per file anyway)
-    val codec = (j \ "codec") match {
-      case org.json4s.JString(c) => c
-      case _ => "snappy"
-    }
-    def pairList(node: org.json4s.JValue): Seq[(String, String)] =
-      node match {
-        case org.json4s.JArray(xs) => xs.collect {
-          case org.json4s.JArray(List(org.json4s.JString(a),
-            org.json4s.JString(b))) => a -> b
-        }
-        case _ => Nil
-      }
-    createTable(TableDef(name, path, declared, list(j \ "sort_keys"), sem,
-      list(j \ "partition_keys"), list(j \ "index_cols"),
-      list(j \ "minmax_cols"), codec, pairList(j \ "constraints"),
-      pairList(j \ "materialized_cols"),
-      // absent in pre-token-index / pre-column-codec sidecars → none
-      list(j \ "token_index_cols"),
-      pairList(j \ "column_codecs"),
-      pairList(j \ "set_index_cols").map { case (c, n) => c -> n.toInt },
-      pairList(j \ "fulltext_cols").map { case (c, n) => c -> n.toInt },
-      (j \ "ann_index") match {
-        case org.json4s.JArray(List(org.json4s.JString(c),
-            org.json4s.JString(nc), org.json4s.JString(m),
-            org.json4s.JString(k))) =>
-          Some(AnnIndexDef(c, nc.toInt, m.toInt, k.toInt))
-        case _ => None // absent in pre-ANN sidecars
-      },
-      (j \ "projections") match {
-        case org.json4s.JArray(xs) => xs.collect {
-          case org.json4s.JArray(List(org.json4s.JString("agg"),
-              org.json4s.JString(n), org.json4s.JString(d),
-              org.json4s.JString(s))) =>
-            AggProjection(n, d.split(',').filter(_.nonEmpty).toSeq,
-              s.split(',').filter(_.nonEmpty).toSeq)
-          case org.json4s.JArray(List(org.json4s.JString("sort"),
-              org.json4s.JString(n), org.json4s.JString(k),
-              org.json4s.JString(_))) => SortProjection(n, k)
-        }
-        case _ => Nil // absent in pre-projection sidecars
-      },
-      (j \ "ttl") match {
-        case o: org.json4s.JObject =>
-          val ttlCol = (o \ "col").asInstanceOf[org.json4s.JString].s
-          val age = (o \ "max_age_sec") match {
-            case org.json4s.JInt(n) => n.toLong
-            case org.json4s.JLong(n) => n
-            case other => throw new IllegalArgumentException(
-              s"attach: TTL max_age_sec malformed under $path ($other)")
-          }
-          val calMonths = (o \ "cal_months") match {
-            case org.json4s.JInt(n) => Some(n.toLong)
-            case org.json4s.JLong(n) => Some(n)
-            case _ => None // absent: fixed-seconds TTL / older sidecar
-          }
-          Some(TtlSpec(ttlCol, age, list(o \ "group_keys"),
-            pairList(o \ "set"), calMonths))
-        case _ => None // absent in pre-TTL sidecars
-      },
-      list(j \ "read_default_cols").toSet.filter(defs.contains),
-      strMap(j \ "renames"), list(j \ "dropped_cols").toSet))
+    val d = TableLog.recover(fs(path), path, None).table.getOrElse(
+      throw new IllegalArgumentException(s"attach: no table definition under $path"))
+    tables.get(d.name).foreach(existing => require(existing.path == path,
+      s"attach: table ${d.name} is already registered at ${existing.path}; " +
+        s"refusing to shadow it with $path (detach first)"))
+    createTable(d)
   }
 
   /** Forget a table's registration, keeping its storage — DETACH TABLE.
@@ -966,9 +791,9 @@ final class Catalog(spark: SparkSession) {
     }
 
   /** `RENAME TABLE from TO to` — re-registration under the new name;
-    * storage stays at its path (the `_TABLE` sidecar records the new
-    * name, so a later ATTACH of that path resolves to it — CH renames the
-    * metadata object the same way).
+    * storage stays at its path (the log records the new name, so a later
+    * ATTACH of that path resolves to it — CH renames the metadata object
+    * the same way).
     * Refused while the table participates in an attached MV cascade or a
     * refreshable view (those registries key on the OLD name — a silent
     * rename would silently stop maintaining them).
@@ -987,7 +812,7 @@ final class Catalog(spark: SparkSession) {
       move(rowPolicies); move(columnGrants); move(columnMasks)
       tables.remove(from)
       tables.put(to, t.copy(name = to))
-      persistTableDef(tables(to))
+      alter(to)(_.copy(name = to))
     }
 
   // a name-keyed registration (MV cascade, refreshable view) would keep
@@ -1005,8 +830,8 @@ final class Catalog(spark: SparkSession) {
   /** `EXCHANGE TABLES a AND b` — atomically swap two registrations (CH's
     * zero-downtime swap idiom: stage a rebuilt table beside the live one,
     * exchange, drop the old). Locks taken in name order so concurrent
-    * exchanges can never deadlock; both sidecars re-persist so ATTACH
-    * resolves the new names.
+    * exchanges can never deadlock; both logs record the new names so
+    * ATTACH resolves them.
     */
   def exchangeTables(a: String, b: String): Unit = {
     require(a != b, s"exchangeTables: $a AND $b are the same table")
@@ -1024,8 +849,8 @@ final class Catalog(spark: SparkSession) {
       swap(rowPolicies); swap(columnGrants); swap(columnMasks)
       tables.put(a, tb.copy(name = a))
       tables.put(b, ta.copy(name = b))
-      persistTableDef(tables(a))
-      persistTableDef(tables(b))
+      alter(a)(_.copy(name = a))
+      alter(b)(_.copy(name = b))
     }}
   }
 
@@ -1051,8 +876,7 @@ final class Catalog(spark: SparkSession) {
     * into storage, corrupting the table against its own schema.
     */
   def addColumn(name: String, field: StructField, default: Any): Unit =
-    writeLock(name).synchronized {
-      val t = get(name)
+    alter(name) { t =>
       require(!t.schema.fieldNames.contains(field.name),
         s"addColumn($name): column ${field.name} already exists")
       // a name that is still a PHYSICAL stored name — the pre-rename name
@@ -1097,12 +921,9 @@ final class Catalog(spark: SparkSession) {
           !n.doubleValue.isInfinite => n.toString
         case _ => inLit.sql
       }
-      tables.put(name, t.copy(
+      t.copy(
         schema = StructType(t.schema.fields :+ withDefault(field, Some(text))),
-        backfillCols = t.backfillCols + field.name))
-      // the persisted definition must track the ALTER, or attach() after
-      // a restart reconstructs the pre-ALTER schema and hides the column
-      persistTableDef(tables(name))
+        backfillCols = t.backfillCols + field.name)
     }
 
   /** `ALTER TABLE … MODIFY COLUMN c DEFAULT expr` / `… REMOVE DEFAULT` —
@@ -1116,8 +937,7 @@ final class Catalog(spark: SparkSession) {
     */
   def modifyColumnDefault(name: String, column: String,
                           defaultExprSql: Option[String]): Unit =
-    writeLock(name).synchronized {
-      val t = get(name)
+    alter(name) { t =>
       require(t.schema.fieldNames.contains(column),
         s"modifyColumnDefault($name): no such column $column")
       require(!t.materializedCols.exists(_._1 == column),
@@ -1125,13 +945,12 @@ final class Catalog(spark: SparkSession) {
           "no insert default to modify")
       defaultExprSql.foreach(e =>
         checkDefault(t, column, e, s"modifyColumnDefault($name)"))
-      tables.put(name, t.copy(
+      t.copy(
         schema = StructType(t.schema.fields.map(f =>
           if (f.name == column) withDefault(f, defaultExprSql) else f)),
         backfillCols =
           if (defaultExprSql.isEmpty) t.backfillCols - column
-          else t.backfillCols))
-      persistTableDef(tables(name))
+          else t.backfillCols)
     }
 
   // a field with its DEFAULT declaration set or removed
@@ -1185,8 +1004,7 @@ final class Catalog(spark: SparkSession) {
     * decision is keyed by name.
     */
   def renameColumn(name: String, from: String, to: String): Unit =
-    writeLock(name).synchronized {
-      val t = get(name)
+    alter(name) { t =>
       require(t.schema.fieldNames.contains(from),
         s"renameColumn($name): no such column $from")
       require(!t.schema.fieldNames.contains(to),
@@ -1199,7 +1017,7 @@ final class Catalog(spark: SparkSession) {
       // a column can be renamed AGAIN before materialization: collapse the
       // chain so the mapping always points at the PHYSICAL stored name
       val physical = t.renames.getOrElse(from, from)
-      tables.put(name, t.copy(
+      t.copy(
         schema = StructType(t.schema.fields.map(f =>
           if (f.name == from) f.copy(name = to) else f)),
         renames = t.renames - from + (to -> physical),
@@ -1211,8 +1029,7 @@ final class Catalog(spark: SparkSession) {
         // the column declaration, renaming keeps them)
         columnCodecs = t.columnCodecs.map {
           case (`from`, k) => (to, k); case p => p
-        }))
-      persistTableDef(tables(name))
+        })
     }
 
   /** `ALTER TABLE name DROP COLUMN column` — metadata-only: the declared
@@ -1222,8 +1039,7 @@ final class Catalog(spark: SparkSession) {
     * columns are refused for the same reason as [[renameColumn]].
     */
   def dropColumn(name: String, column: String): Unit =
-    writeLock(name).synchronized {
-      val t = get(name)
+    alter(name) { t =>
       require(t.schema.fieldNames.contains(column),
         s"dropColumn($name): no such column $column")
       require(t.schema.fields.length > 1,
@@ -1245,13 +1061,12 @@ final class Catalog(spark: SparkSession) {
       // storage may carry the declared name (post-rename appends, or no
       // rename) AND the pre-rename physical name — record both, so
       // neither can be re-introduced before a compact clears the files
-      tables.put(name, t.copy(
+      t.copy(
         schema = StructType(t.schema.fields.filterNot(_.name == column)),
         columnCodecs = t.columnCodecs.filterNot(_._1 == column),
         droppedCols = t.droppedCols + column + t.renames.getOrElse(column, column),
         renames = t.renames - column,
-        backfillCols = t.backfillCols - column))
-      persistTableDef(tables(name))
+        backfillCols = t.backfillCols - column)
     }
 
   /** Lossless type widenings Spark's parquet reader performs natively
@@ -1298,35 +1113,34 @@ final class Catalog(spark: SparkSession) {
     */
   def modifyColumnType(name: String, column: String,
                        newType: org.apache.spark.sql.types.DataType): Unit =
-    writeLock(name).synchronized {
-      val t = get(name)
+    alter(name) { t =>
       require(t.schema.fieldNames.contains(column),
         s"modifyColumnType($name): no such column $column")
       val old = t.schema(column).dataType
-      if (old == newType) return
-      require(widens(old, newType),
-        s"modifyColumnType($name): $old -> $newType is not a lossless " +
-          s"widening (rewrite the table explicitly for narrowing casts)")
-      require(!keyCols(t).contains(column),
-        s"modifyColumnType($name): $column is a key/engine column")
-      // a widening can invalidate a declared per-column codec (int→double
-      // under delta: parquet has no FP delta) — refuse rather than carry
-      // a codec the writer would silently drop
-      t.columnCodecs.collectFirst {
-        case (`column`, k @ ("delta" | "doubledelta")) => k
-      }.foreach { k =>
-        import org.apache.spark.sql.types._
-        val ok = newType match {
-          case ByteType | ShortType | IntegerType | LongType | DateType |
-               TimestampType | TimestampNTZType | StringType | BinaryType => true
-          case _ => false
+      if (old == newType) t else {
+        require(widens(old, newType),
+          s"modifyColumnType($name): $old -> $newType is not a lossless " +
+            s"widening (rewrite the table explicitly for narrowing casts)")
+        require(!keyCols(t).contains(column),
+          s"modifyColumnType($name): $column is a key/engine column")
+        // a widening can invalidate a declared per-column codec (int→double
+        // under delta: parquet has no FP delta) — refuse rather than carry
+        // a codec the writer would silently drop
+        t.columnCodecs.collectFirst {
+          case (`column`, k @ ("delta" | "doubledelta")) => k
+        }.foreach { k =>
+          import org.apache.spark.sql.types._
+          val ok = newType match {
+            case ByteType | ShortType | IntegerType | LongType | DateType |
+                 TimestampType | TimestampNTZType | StringType | BinaryType => true
+            case _ => false
+          }
+          require(ok, s"modifyColumnType($name): $column declares codec $k, " +
+            s"which does not apply to ${newType.simpleString}")
         }
-        require(ok, s"modifyColumnType($name): $column declares codec $k, " +
-          s"which does not apply to ${newType.simpleString}")
+        t.copy(schema = StructType(t.schema.fields.map(f =>
+          if (f.name == column) f.copy(dataType = newType) else f)))
       }
-      tables.put(name, t.copy(schema = StructType(t.schema.fields.map(f =>
-        if (f.name == column) f.copy(dataType = newType) else f))))
-      persistTableDef(tables(name))
     }
 
   /** `OPTIMIZE TABLE name FINAL DEDUPLICATE [BY by…]` — drops fully
@@ -1376,13 +1190,17 @@ final class Catalog(spark: SparkSession) {
   def get(name: String): TableDef =
     tables.getOrElse(name, throw new NoSuchElementException(s"table $name"))
 
-  /** Whether `name` has committed anything: its log has a head. */
+  /** Whether `name` holds committed data: its log head lists a data
+    * file. A table created, or only altered, but never written holds
+    * none; read-before-write paths skip planning a scan of it.
+    */
   def exists(name: String): Boolean =
-    tables.contains(name) && log(get(name)).head().n >= 0
+    tables.contains(name) && log(get(name)).head().files.nonEmpty
 
-  private def fs(t: TableDef): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(t.path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def fs(path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def fs(t: TableDef): org.apache.hadoop.fs.FileSystem = fs(t.path)
 
   /** The table's commit log — the one record of its live files. */
   private def log(t: TableDef): TableLog = new TableLog(fs(t), t.path, t.partitionKeys)
@@ -1572,7 +1390,7 @@ final class Catalog(spark: SparkSession) {
   // exists on a table, users named by none of its policies read ZERO rows
   // (the restrictive-default CH documents). JVM-local like the MV
   // registry — policies are server state, not table state, so they do not
-  // travel in the _TABLE sidecar.
+  // travel in the table log.
 
   private final case class RowPolicyDef(name: String, users: Set[String],
                                         predicate: String)
@@ -1930,14 +1748,16 @@ final class Catalog(spark: SparkSession) {
     * fixtures build on is only ever relaxed on measured evidence).
     */
   def append(name: String, batch: DataFrame, blockBytes: Long): Long = {
-    val t = get(name)
-    val checked = materializeAndCheck(t, fillOmittedDefaults(t, batch))
-    val filled = if (fitsOnePart(blockBytes)) checked.coalesce(1) else checked
+    def filled(t: TableDef): DataFrame = {
+      val checked = materializeAndCheck(t, fillOmittedDefaults(t, batch))
+      if (fitsOnePart(blockBytes)) checked.coalesce(1) else checked
+    }
     // ENGINE = Null: type-check + count, discard, fan out to MVs. The
     // batch is cached around the count so attached transforms don't
     // recompute an arbitrary upstream lineage once per view.
-    if (t.semantics == NullEngine) {
-      val aligned = filled.select(t.schema.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
+    if (get(name).semantics == NullEngine) {
+      val t = current(name)._1
+      val aligned = filled(t).select(t.schema.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
       aligned.cache()
       try {
         val n = aligned.count()
@@ -1945,20 +1765,24 @@ final class Catalog(spark: SparkSession) {
         return n
       } finally aligned.unpersist()
     }
-    val sorted = clusteredFor(t, preMergedBlock(t, filled),
-      blockBytes = blockBytes)
-    val n = writeLock(name).synchronized {
+    // the head is read, and the block prepared against its definition,
+    // under the write lock: no commit of this process derives from a head
+    // another thread has moved past
+    val (n, block) = writeLock(name).synchronized {
+      val (t, _, h) = current(name)
+      val f = filled(t)
       // one execution of the clustered block (the write itself); the
       // returned count is OBSERVED on the write plan (see writeData)
-      val (rows, _, block) = commitWrite(t, log(t).head(), sorted)((h, files) =>
-        Some(h.copy(files = h.files ++ files))).get
-      block.foreach(maintainProjections(t, _, rewrite = false))
-      rows
+      val (rows, _, written) = commitWrite(t, h,
+        clusteredFor(t, preMergedBlock(t, f), blockBytes = blockBytes))((cur, files) =>
+        Some(cur.copy(files = cur.files ++ files))).get
+      written.foreach(maintainProjections(t, _, rewrite = false))
+      (rows, f)
     }
     // MV fan-out AFTER the base commit and OUTSIDE its lock (a target's
     // append takes its own lock; holding the source's across both invites
     // lock-order deadlock). MVs see the block AS INSERTED (pre-merge).
-    fanOutMvs(name, filled, blockBytes)
+    fanOutMvs(name, block, blockBytes)
     n
   }
 
@@ -2049,13 +1873,12 @@ final class Catalog(spark: SparkSession) {
     */
   def appendIdempotent(name: String, batch: DataFrame,
                        token: String): Option[Long] = {
-    val t = get(name)
-    require(t.semantics != NullEngine,
+    require(get(name).semantics != NullEngine,
       s"$name: ENGINE=Null discards data — a dedup token has nothing " +
         "to deduplicate against")
     require(token.nonEmpty, s"$name: empty dedup token")
     val committed = writeLock(name).synchronized {
-      val h0 = log(t).head()
+      val (t, _, h0) = current(name)
       if (h0.holds(token)) None
       else {
         val filled = materializeAndCheck(t, fillOmittedDefaults(t, batch))
@@ -2076,10 +1899,12 @@ final class Catalog(spark: SparkSession) {
   /** Write `df` into a fresh directory of `t`, then publish the entry
     * `next` derives from the head and the written files (the one commit
     * path: append, token append, rewrite). `h` is the head the caller
-    * read before the write (the first attempt derives from it). When
-    * nothing is published the directory goes again. Returns the rows
-    * written, the published entry and the written block for projection
-    * upkeep after the commit.
+    * read before the write (the first attempt derives from it), and `t`
+    * the definition it holds: a head that holds another one (an ALTER
+    * committed since) is refused, naming the table, because the block
+    * was prepared against `t`. When nothing is published the directory
+    * goes again. Returns the rows written, the published entry and the
+    * written block for projection upkeep after the commit.
     */
   private def commitWrite(t: TableDef, h: LogEntry, df: DataFrame)(
       next: (LogEntry, Seq[LogFile]) => Option[LogEntry])
@@ -2088,7 +1913,12 @@ final class Catalog(spark: SparkSession) {
     val dir = l.stage("c")
     val (rows, files, block) = writeData(t, df, dir)
     val published =
-      try l.commit(t.name, Some(h))(next(_, files))
+      try l.commit(t.name, Some(h)) { cur =>
+        if (!cur.table.forall(_.copy(name = t.name) == t))
+          throw new IllegalStateException(s"${t.name}: log entry ${cur.n} holds a " +
+            "definition this write was not prepared against (a concurrent ALTER) — retry")
+        next(cur, files)
+      }
       catch { case scala.util.control.NonFatal(e) => l.f.delete(dir, true); throw e }
     if (published.isEmpty) l.f.delete(dir, true)
     published.map((rows, _, block))
@@ -2295,7 +2125,10 @@ final class Catalog(spark: SparkSession) {
       : (Long, Seq[LogFile], Option[DataFrame]) = {
     val obs = org.apache.spark.sql.Observation()
     val counted = df.observe(obs, count(lit(1)).as("rows"))
+    // no `_SUCCESS` marker: the log entry is the commit record, and the
+    // marker would cost one more filesystem call per write
     val w = counted.write.mode("overwrite").option("compression", t.codec)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .options(codecWriteOptions(t))
     (if (t.partitionKeys.nonEmpty) w.partitionBy(t.partitionKeys: _*) else w)
       .parquet(dir.toString)
@@ -2390,7 +2223,8 @@ final class Catalog(spark: SparkSession) {
     writeLock(name).synchronized {
       // readVia applies pending renames/defaults — the companion must
       // hold DECLARED-schema rows, like the base rewrite paths do
-      rebuildProjection(t, p, readVia(t, log(t).head()))
+      val (cur, _, h) = current(name)
+      rebuildProjection(cur, p, readVia(cur, h))
       graft.plans.SortedProjectionRewrite.invalidate(t.path)
     }
   }
@@ -2402,10 +2236,11 @@ final class Catalog(spark: SparkSession) {
     * rule is correct from the first query).
     */
   def addProjection(name: String, spec: ProjectionSpec): Unit = {
-    val t = get(name)
-    require(!t.projections.exists(_.name == spec.name),
-      s"$name: projection ${spec.name} already declared")
-    createTableUpdate(t.copy(projections = t.projections :+ spec))
+    alter(name) { t =>
+      require(!t.projections.exists(_.name == spec.name),
+        s"$name: projection ${spec.name} already declared")
+      t.copy(projections = t.projections :+ spec)
+    }
     materializeProjection(name, spec.name)
   }
 
@@ -2424,7 +2259,7 @@ final class Catalog(spark: SparkSession) {
         case _: SortProjection =>
           graft.plans.SortedProjectionRewrite.unregister(t.path)
       }
-      createTableUpdate(t.copy(projections = t.projections.filterNot(_.name == proj)))
+      alter(name)(d => d.copy(projections = d.projections.filterNot(_.name == proj)))
       fs(t).delete(new org.apache.hadoop.fs.Path(projPath(t, proj)), true)
     }
   }
@@ -2454,17 +2289,18 @@ final class Catalog(spark: SparkSession) {
   }
 
   /** `ALTER TABLE … ADD INDEX` — declare an index on a live table.
-    * Validation is createTable's own (via [[createTableUpdate]]), so a bad
-    * column/type refuses loudly and the prior registration survives.
+    * Validation is createTable's own (via [[alter]]), so a bad
+    * column/type refuses loudly and the prior definition survives.
     */
   def addIndex(name: String, kind: String, column: String,
                args: Seq[Int] = Nil): Unit = {
-    val t = get(name)
     val k = IndexKind.forType(kind).getOrElse(throw new IllegalArgumentException(
       s"$name: unsupported skip-index type ${kind.toLowerCase}"))
-    require(!k.columns(t).contains(column),
-      s"$name: index TYPE $kind on $column already declared")
-    writeLock(name).synchronized { createTableUpdate(k.add(t, column, args)) }
+    alter(name) { t =>
+      require(!k.columns(t).contains(column),
+        s"$name: index TYPE $kind on $column already declared")
+      k.add(t, column, args)
+    }
   }
 
   /** `ALTER TABLE … MATERIALIZE INDEX` — backfill the named index over
@@ -2499,7 +2335,7 @@ final class Catalog(spark: SparkSession) {
       }
     val (k, c) = resolved
     writeLock(name).synchronized {
-      createTableUpdate(k.remove(t, c))
+      alter(name)(k.remove(_, c))
       deleteIndexSidecars(t, k, c)
     }
     true
@@ -2531,25 +2367,6 @@ final class Catalog(spark: SparkSession) {
     // AnnIndex.companionRoot layout)
     if (k == VectorSimilarity)
       f.delete(new org.apache.hadoop.fs.Path(s"${t.path}/_idx/ann"), true)
-  }
-
-  /** Re-validate + swap in an updated definition (projection add/drop):
-    * the same checks createTable runs, then a registry replace + sidecar
-    * persist. A FAILED validation restores the prior registration — the
-    * table must not vanish because an ALTER was refused. (The
-    * remove→create window is a microsecond registry gap; projection
-    * ALTERs are rare ops and racing reads of a mid-ALTER table have no
-    * consistency claim to lose.)
-    */
-  private def createTableUpdate(nt: TableDef): TableDef = {
-    val prior = tables.get(nt.name)
-    tables.remove(nt.name)
-    try createTable(nt)
-    catch {
-      case e: Throwable =>
-        prior.foreach(p => tables.putIfAbsent(nt.name, p))
-        throw e
-    }
   }
 
   /** Codes-only ANN probe through a declared `vector_similarity` index:
@@ -2622,10 +2439,9 @@ final class Catalog(spark: SparkSession) {
     require(t.semantics == Append,
       s"${t.name}: $kind-pruned reads require Append semantics " +
         s"(merge views need every file of a key group)")
-    val l = log(t)
-    val h = l.head()
+    val (cur, l, h) = current(t.name)
     val kept = survivors(l, h.files, k, column)(probe)
-    (readVia(t, h.copy(files = kept)), kept.size, h.files.size)
+    (readVia(cur, h.copy(files = kept)), kept.size, h.files.size)
   }
 
   /** Equality probe through the bloom index: scan only the files whose
@@ -2746,8 +2562,8 @@ final class Catalog(spark: SparkSession) {
 
   /** Read with full engine semantics applied (merged view). */
   def read(name: String): DataFrame = {
-    val t = get(name)
-    readVia(t, log(t).head(), live = true)
+    val (t, _, h) = current(name)
+    readVia(t, h, live = true)
   }
 
   /** Scan `files` under `schema` through one file index built from the
@@ -2964,8 +2780,8 @@ final class Catalog(spark: SparkSession) {
     * `SELECT … FINAL`-less read over unmerged parts would see).
     */
   def readRaw(name: String): DataFrame = {
-    val t = get(name)
-    readStorage(t, log(t).head(), live = true) // raw in MERGE terms; renames still map
+    val (t, _, h) = current(name)
+    readStorage(t, h, live = true) // raw in MERGE terms; renames still map
   }
 
   // ---- lightweight DELETE (deletion-vector analog) ---------------------
@@ -3016,28 +2832,24 @@ final class Catalog(spark: SparkSession) {
   def deleteLightweight(name: String,
                         predicate: org.apache.spark.sql.Column): Long =
     writeLock(name).synchronized {
-      val t = get(name)
+      val (t, l, h) = current(name)
       require(t.semantics == Append,
         s"$name: lightweight DELETE requires Append semantics (merge " +
           "views fold key groups across files; use ALTER DELETE's " +
           "rewrite on merge-view engines)")
-      val l = log(t)
-      val h = l.head()
       val matched = applyDefaults(t, readStorage(t, h, keepId = true))
         .filter(coalesce(predicate, lit(false)))
         .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
       val n = matched.count()
-      if (n > 0L) {
-        val dir = l.stage("d")
-        matched.write.mode("overwrite").parquet(dir.toString)
-        val dvs = l.written(dir)._2
-        try l.commit(name, Some(h)) { cur =>
-          requireUnchanged(name, h, cur)
-          Some(cur.copy(dvs = cur.dvs ++ dvs))
-        }
-        catch { case scala.util.control.NonFatal(e) => l.f.delete(dir, true); throw e }
+      val dir = l.stage("d")
+      if (n > 0L) matched.write.mode("overwrite").parquet(dir.toString)
+      val dvs = if (n > 0L) l.written(dir)._2 else Nil
+      val rec = record(s"DELETE WHERE $predicate (lightweight, $n rows)")
+      try l.commit(name, Some(h)) { cur =>
+        if (dvs.nonEmpty) requireUnchanged(name, h, cur)
+        Some(cur.copy(dvs = cur.dvs ++ dvs, mutations = cur.mutations :+ rec))
       }
-      recordMutation(t, s"DELETE WHERE $predicate (lightweight, $n rows)")
+      catch { case scala.util.control.NonFatal(e) => l.f.delete(dir, true); throw e }
       n
     }
 
@@ -3060,14 +2872,6 @@ final class Catalog(spark: SparkSession) {
   // bounds. Same surface here, as DataFrames: registry + filesystem
   // METADATA for tables (no data scan), one distributed pass for
   // per-part row counts and sort-key bounds.
-
-  /** Cheap driver-side probe: does `name` hold ANY committed data file?
-    * A metadata listing, never a Spark job — read-before-write paths use
-    * it to skip planning a scan of a table that is registered but still
-    * empty (the fresh-fixture fast path, round-14).
-    */
-  private[catalog] def hasDataFiles(name: String): Boolean =
-    log(get(name)).head().files.nonEmpty
 
   /** ClickHouse `merge('db', 'regex')` table-function analog: the union
     * of every registered table whose name fully matches the regex, each
@@ -3093,8 +2897,9 @@ final class Catalog(spark: SparkSession) {
     */
   def systemTables(): DataFrame = {
     import spark.implicits._
-    tables.values.toSeq.sortBy(_.name).map { t =>
-      val h = log(t).head()
+    tables.values.toSeq.sortBy(_.name).map { reg =>
+      val h = log(reg).head()
+      val t = defOf(reg, h)
       val files = h.files
       (t.name, t.path, h.n,
         t.semantics.getClass.getSimpleName.stripSuffix("$"),
@@ -3227,9 +3032,7 @@ final class Catalog(spark: SparkSession) {
     */
   def systemParts(name: String): DataFrame = {
     import spark.implicits._
-    val t = get(name)
-    val l = log(t)
-    val h = l.head()
+    val (t, l, h) = current(name)
     val sizes = h.files
       .map(x => (l.resolve(x.path).getName, x.len)).toDF("part", "bytes")
     val sortKey = t.sortKeys.headOption
@@ -3275,22 +3078,16 @@ final class Catalog(spark: SparkSession) {
       .orderBy(col("partition"), col("bucket"))
   }
 
-  /** Cheap content-version token for a table: a digest over the `_TABLE`
-    * definition plus the log head's name and mtime — every result-changing
-    * storage event (append, compact, mutation rewrite, lightweight delete,
-    * TTL sweep, refresh, partition verb) publishes a new head, so equal
-    * tokens ⇒ equal read results. One `_log/` listing whatever the table
-    * holds, no data read — the [[graft.sql.QueryCache]] validity probe,
-    * priced to run on every cache hit. Metadata-only ALTERs (a RENAME's
-    * read view, a widened type, a changed DEFAULT an old part backfills)
-    * move it too through the definition.
+  /** Cheap content-version token for a table: the log head's name and
+    * mtime — every result-changing event (append, compact, mutation
+    * rewrite, lightweight delete, TTL sweep, refresh, partition verb, and
+    * every definition change: a RENAME's read view, a widened type, a
+    * changed DEFAULT an old part backfills) publishes a new head, so
+    * equal tokens ⇒ equal read results. One `_log/` listing whatever the
+    * table holds, no data read — the [[graft.sql.QueryCache]] validity
+    * probe, priced to run on every cache hit.
     */
-  def tableVersion(name: String): String = {
-    val t = get(name)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(tableDefJson(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    md.digest().map("%02x".format(_)).mkString + log(t).headStamp()
-  }
+  def tableVersion(name: String): String = log(get(name)).headStamp()
 
   /** ClickHouse `EXPLAIN ESTIMATE` analog: how much would a scan read —
     * files (≈ parts), rows, bytes — from METADATA only, no data scan.
@@ -3350,100 +3147,21 @@ final class Catalog(spark: SparkSession) {
   // ClickHouse records every ALTER mutation in system.mutations and ops
   // runbooks poll it (`is_done`) before depending on the rewrite. Here a
   // mutation IS done when mutate() returns (the rewrite is synchronous),
-  // so the log is pure history: one JSONL line per completed mutation in
-  // a SIBLING directory (`<path>.mutations`). Written under the table's
-  // write lock;
-  // best-effort (losing ops history on a crash mid-write never corrupts
-  // data).
+  // so the history is pure record: the entry a mutation publishes holds
+  // its record, and every later entry carries the newest
+  // [[TableLog.KeptMutations]] forward.
 
-  private def mutationsPath(t: TableDef) =
-    new org.apache.hadoop.fs.Path(t.path + ".mutations")
-
-  private def recordMutation(t: TableDef, command: String): Unit =
-    try {
-      import org.apache.hadoop.fs.Path
-      import org.json4s.JsonDSL._
-      import org.json4s.jackson.JsonMethods
-      val f = fs(t)
-      val p = mutationsPath(t)
-      // legacy (pre-round-7) tables hold the history as ONE file at this
-      // path — the marker create below would need it as a DIRECTORY, and
-      // the mkdirs failure would be swallowed by the best-effort catch,
-      // silently dropping every new entry. Migrate in place: each line
-      // becomes a zero-ts marker (sorts before any real timestamp, order
-      // preserved by the index). Runs under the table's write lock.
-      if (f.exists(p) && f.getFileStatus(p).isFile) {
-        val in = f.open(p)
-        val legacy = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toList finally in.close()
-        val aside = new Path(t.path + ".mutations.legacy")
-        if (f.rename(p, aside)) {
-          f.mkdirs(p)
-          legacy.zipWithIndex.foreach { case (line, i) =>
-            val o = f.create(new Path(p, f"m_0000000000000_$i%06d.json"), true)
-            try o.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally o.close()
-          }
-          f.delete(aside, false)
-        }
-      }
-      // one uniquely-named file per mutation: a whole-history
-      // read-modify-write would lose lines when two
-      // PROCESSES mutate the same table — the JVM write lock only covers
-      // in-process writers. Zero-padded ts prefix makes the lexical file
-      // order the history order; the per-process monotonic seq keeps
-      // same-millisecond mutations in issue order (a random tiebreak
-      // would shuffle back-to-back directory-rename ops ~half the time);
-      // the uuid suffix de-collides across processes.
-      val ts = System.currentTimeMillis()
-      val seq = Catalog.mutationSeq.incrementAndGet()
-      val fn = f"m_$ts%013d_$seq%06d_" +
-        s"${java.util.UUID.randomUUID().toString.take(8)}.json"
-      val marker = new Path(p, fn)
-      val json = JsonMethods.compact(JsonMethods.render(
-        ("ts_ms" -> ts) ~ ("command" -> command)))
-      val out = f.create(marker, true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+  private def record(command: String) = LogMutation(System.currentTimeMillis(), command)
 
   /** The mutation history of `name` as a DataFrame — (table, seq, ts_ms,
-    * command, is_done), oldest first. Every row is done by construction
-    * (mutations here are synchronous rewrites); the column exists so the
-    * runbook shape matches ClickHouse's.
+    * command, is_done), oldest first, from the log head. Every row is
+    * done by construction (mutations here are synchronous rewrites); the
+    * column exists so the runbook shape matches ClickHouse's.
     */
   def systemMutations(name: String): DataFrame = {
     import spark.implicits._
-    import org.json4s.jackson.JsonMethods
-    val t = get(name)
-    val f = fs(t)
-    val p = mutationsPath(t)
-    def readAll(path: org.apache.hadoop.fs.Path): String = {
-      val in = f.open(path)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val lines =
-      if (!f.exists(p)) Seq.empty[String]
-      else if (f.getFileStatus(p).isDirectory)
-        // marker-file layout: one json file per mutation, named so the
-        // lexical order IS the history order
-        f.listStatus(p).map(_.getPath).filter(_.getName.startsWith("m_"))
-          .sortBy(_.getName).map(readAll).toSeq
-      else // legacy single-file layout (pre-round-7 tables)
-        readAll(p).linesIterator.filter(_.nonEmpty).toList
-    lines.zipWithIndex.map { case (l, i) =>
-      val j = JsonMethods.parse(l)
-      val ts = (j \ "ts_ms") match {
-        case org.json4s.JInt(v) => v.toLong
-        case org.json4s.JLong(v) => v
-        case _ => -1L
-      }
-      val cmd = (j \ "command") match {
-        case org.json4s.JString(c) => c
-        case _ => ""
-      }
-      (name, i.toLong, ts, cmd, true)
+    log(get(name)).head().mutations.zipWithIndex.map { case (m, i) =>
+      (name, i.toLong, m.tsMs, m.command, true)
     }.toDF("table", "seq", "ts_ms", "command", "is_done")
   }
 
@@ -3456,9 +3174,11 @@ final class Catalog(spark: SparkSession) {
     * half-mutated table; a concurrent commit that removed or masked a
     * file it read fails it loudly. Mutations see merge semantics first
     * (ReplacingDedup/Summing views), matching ClickHouse where mutations
-    * rewrite fully-merged parts. After the commit the GC collects what
-    * no longer reaches the head, and sweeps crashed commits' directories
-    * ([[TableLog.sweep]]).
+    * rewrite fully-merged parts. The one entry it publishes also retires
+    * the pending ALTER storage state and holds the mutation's record (on
+    * a table without files it holds the record alone). After the commit
+    * the GC collects what no longer reaches the head, and sweeps crashed
+    * commits' directories ([[TableLog.sweep]]).
     *
     * `transform` must preserve the table's column names and types (it may
     * drop/alter rows, not shape) — enforced loudly, since an accidental
@@ -3467,41 +3187,38 @@ final class Catalog(spark: SparkSession) {
   def mutate(name: String, transform: DataFrame => DataFrame,
              command: String = "mutation"): Unit =
     writeLock(name).synchronized {
-      val t = get(name)
-      val l = log(t)
-      val h = l.head()
+      val (t, l, h) = current(name)
       val input = readVia(t, h)
       val merged = transform(input)
       val shape = (d: DataFrame) => d.schema.map(f => (f.name, f.dataType))
       require(shape(merged) == shape(input),
         s"mutate($name): transform changed the table shape " +
           s"(${shape(input)} -> ${shape(merged)})")
+      val rec = record(command)
       // nothing committed (no files, no masks): a DATA no-op — but the
       // transform above still ran against an empty frame of the declared
       // schema, so update()'s unknown-column require and the shape check
       // fail as loudly on a fresh table as on a populated one
-      if (h.files.nonEmpty || h.dvs.nonEmpty) {
+      if (h.files.isEmpty && h.dvs.isEmpty)
+        l.commit(name, Some(h))(cur => Some(cur.copy(mutations = cur.mutations :+ rec)))
+      else {
+        // the rewrite reads through the declared view — every stored file
+        // then carries the declared names, types and defaults and nothing
+        // else, so the pending storage state retires: from here on an
+        // explicitly stored NULL reads back as NULL, and dropped or
+        // pre-rename names are free again. The DEFAULT declarations stay.
+        val retired = t.copy(backfillCols = Set.empty, renames = Map.empty, droppedCols = Set.empty)
         val (_, e, block) = commitWrite(t, h, clusteredFor(t, merged, forCompact = true)) {
           (cur, files) =>
             requireUnchanged(name, h, cur)
             Some(LogEntry(-1L, files ++ cur.files.filterNot(h.files.toSet), Nil,
-              cur.tokens -- h.tokens, h.tokens))
+              cur.tokens -- h.tokens, h.tokens, table = Some(retired),
+              mutations = cur.mutations :+ rec))
         }.get
-        block.foreach(maintainProjections(t, _, rewrite = true))
+        tables.replace(name, t, retired)
+        block.foreach(maintainProjections(retired, _, rewrite = true))
         l.sweep(e, staleLockMs)
-        // the rewrite read through the declared view — every stored file
-        // now carries the declared names, types and defaults and nothing
-        // else, so the pending storage state retires: from here on an
-        // explicitly stored NULL reads back as NULL, and dropped or
-        // pre-rename names are free again. The DEFAULT declarations stay.
-        val now = get(name)
-        if ((now.backfillCols ++ now.renames.keys ++ now.droppedCols).nonEmpty) {
-          tables.put(name, now.copy(backfillCols = Set.empty,
-            renames = Map.empty, droppedCols = Set.empty))
-          persistTableDef(tables(name))
-        }
       }
-      recordMutation(t, command)
     }
 
   /** `ALTER TABLE name DELETE WHERE predicate` — drops rows where the
@@ -3646,23 +3363,14 @@ final class Catalog(spark: SparkSession) {
   }
 
   /** `ALTER TABLE … MODIFY TTL` — declare or replace the table's TTL
-    * spec. Metadata only (persisted in `_TABLE`): stored rows are
-    * untouched until a [[materializeTtl]] sweep, the CH contract.
+    * spec. Metadata only (a definition commit, validated like CREATE):
+    * stored rows are untouched until a [[materializeTtl]] sweep, the CH
+    * contract.
     */
-  def modifyTtl(name: String, spec: TtlSpec): Unit =
-    writeLock(name).synchronized {
-      val t = get(name)
-      validateTtl(t, spec)
-      tables.put(name, t.copy(ttl = Some(spec)))
-      persistTableDef(tables(name))
-    }
+  def modifyTtl(name: String, spec: TtlSpec): Unit = alter(name)(_.copy(ttl = Some(spec)))
 
   /** `ALTER TABLE … REMOVE TTL`. */
-  def removeTtl(name: String): Unit =
-    writeLock(name).synchronized {
-      tables.put(name, get(name).copy(ttl = None))
-      persistTableDef(tables(name))
-    }
+  def removeTtl(name: String): Unit = alter(name)(_.copy(ttl = None))
 
   /** `ALTER TABLE … MATERIALIZE TTL` — run the DECLARED TTL sweep now
     * against an explicit clock (deterministic for tests/replays; the DDL
@@ -3743,8 +3451,7 @@ final class Catalog(spark: SparkSession) {
   // ([[TableLog.recover]]), so the partition always ends in the table or
   // in its destination.
 
-  /** Detached partitions live in a SIBLING dir (like `.mutations`), one
-    * uniquely-named bucket per source directory so detaching a value
+  /** Detached partitions live in a SIBLING dir, one uniquely-named bucket per source directory so detaching a value
     * present in N commit directories never collides; the bucket's
     * `key=value` child names the partition, so ATTACH finds its buckets
     * by inspection.
@@ -3767,13 +3474,13 @@ final class Catalog(spark: SparkSession) {
     escapePathName(t.partitionKeys.head) + "=" + escapePathName(value.toString)
   }
 
-  /** Publish `t`'s head without the files of first-key partition `value`.
-    * With `move`, the entry also records where each of the partition's
-    * directories (`<commit>/key=value`, numbered) goes, and a second
-    * commit settles the moves ([[TableLog.settle]]). Returns the number of
-    * directories.
+  /** Publish `t`'s head without the files of first-key partition `value`,
+    * with the mutation record `command`. With `move`, the entry also
+    * records where each of the partition's directories
+    * (`<commit>/key=value`, numbered) goes, and a second commit settles
+    * the moves ([[TableLog.settle]]). Returns the number of directories.
     */
-  private def unlinkPartition(t: TableDef, l: TableLog, value: Any)(
+  private def unlinkPartition(t: TableDef, l: TableLog, value: Any, command: String)(
       move: Option[(org.apache.hadoop.fs.Path, Int) => LogMove]): Int = {
     val leaf = partitionLeaf(t, value)
     var dirs = 0
@@ -3788,8 +3495,7 @@ final class Catalog(spark: SparkSession) {
           .find(_.getName == leaf).getOrElse(file.getParent)
       }.distinct
       dirs = srcs.size
-      if (srcs.isEmpty) None
-      else Some(h.copy(files = in,
+      Some(h.copy(files = in, mutations = h.mutations :+ record(command),
         moves = move.fold(Seq.empty[LogMove])(m => srcs.zipWithIndex.map(m.tupled))))
     }
     if (dirs > 0 && move.nonEmpty) l.commit(t.name)(Some(_))
@@ -3820,14 +3526,15 @@ final class Catalog(spark: SparkSession) {
     }
 
   /** Read the table AS OF snapshot `tag` — the frozen files and masks
-    * through the table's full read semantics (merge view, defaults,
-    * renames).
+    * through the full read semantics (merge view, defaults, renames) of
+    * the definition the frozen entry holds.
     */
   def readSnapshot(name: String, tag: String): DataFrame = {
     val t = get(name)
     val l = log(t)
     val g = l.tag(tag).getOrElse(throw new NoSuchElementException(s"$name: no snapshot '$tag'"))
-    readVia(t, l.entry(g.position))
+    val e = l.entry(g.position)
+    readVia(defOf(t, e), e)
   }
 
   /** Drop snapshot `tag` — one file delete; the next rewrite collects the
@@ -3852,9 +3559,7 @@ final class Catalog(spark: SparkSession) {
   def dropPartition(name: String, value: Any): Int =
     writeLock(name).synchronized {
       val t = get(name)
-      val dirs = unlinkPartition(t, log(t), value)(None)
-      recordMutation(t, s"ALTER DROP PARTITION ${partitionLeaf(t, value)}")
-      dirs
+      unlinkPartition(t, log(t), value, s"ALTER DROP PARTITION ${partitionLeaf(t, value)}")(None)
     }
 
   /** `ALTER TABLE name DETACH PARTITION value` — publishes the head without
@@ -3873,11 +3578,9 @@ final class Catalog(spark: SparkSession) {
       // un-delete on re-attach — materialize them first
       if (l.head().dvs.nonEmpty) compact(name)
       val bucket = s"d-${TableLog.processTag}-${java.util.UUID.randomUUID().toString.take(8)}"
-      val dirs = unlinkPartition(t, l, value)(Some((d, i) => LogMove(d.toString,
+      unlinkPartition(t, l, value, s"ALTER DETACH PARTITION $leaf")(Some((d, i) => LogMove(d.toString,
         l.f.makeQualified(new org.apache.hadoop.fs.Path(detachedRoot(t), s"$bucket-$i/$leaf")).toString,
         None)))
-      recordMutation(t, s"ALTER DETACH PARTITION $leaf")
-      dirs
     }
 
   /** `ALTER TABLE name ATTACH PARTITION value` — re-adopts every detached
@@ -3901,15 +3604,14 @@ final class Catalog(spark: SparkSession) {
           try f.listStatus(detachedRoot(t)).toSeq.filter(_.isDirectory).map(_.getPath)
             .filter(b => f.exists(new Path(b, leaf)))
           catch { case _: java.io.FileNotFoundException => Nil }
-        if (buckets.isEmpty) None
-        else Some(h.copy(moves = buckets.zipWithIndex.map { case (b, i) =>
-          LogMove(new Path(b, leaf).toString, new Path(new Path(dir, s"p$i"), leaf).toString,
-            Some(l.root.toString))
-        }))
+        Some(h.copy(mutations = h.mutations :+ record(s"ALTER ATTACH PARTITION $leaf"),
+          moves = buckets.zipWithIndex.map { case (b, i) =>
+            LogMove(new Path(b, leaf).toString, new Path(new Path(dir, s"p$i"), leaf).toString,
+              Some(l.root.toString))
+          }))
       }
       if (buckets.nonEmpty) l.commit(t.name)(Some(_))
       buckets.foreach(f.delete(_, true)) // now-empty buckets
-      recordMutation(t, s"ALTER ATTACH PARTITION $leaf")
       buckets.size
     }
 
@@ -3949,11 +3651,14 @@ final class Catalog(spark: SparkSession) {
         // which its own sweep leaves alone while the move is in flight
         val into = log(d)
         val dir = into.stage("m")
-        val n = unlinkPartition(s, l, value)(Some((src, i) => LogMove(src.toString,
-          new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(dir, s"p$i"), leaf).toString,
-          Some(into.root.toString))))
-        recordMutation(s, s"ALTER MOVE PARTITION $leaf TO TABLE $dstName")
-        recordMutation(d, s"ALTER ATTACH PARTITION $leaf (moved from $srcName)")
+        // the destination's record rides in the entry that lists the
+        // moved files ([[TableLog.settle]]), or alone when nothing moved
+        val n = unlinkPartition(s, l, value, s"ALTER MOVE PARTITION $leaf TO TABLE $dstName")(
+          Some((src, i) => LogMove(src.toString,
+            new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(dir, s"p$i"), leaf).toString,
+            Some(into.root.toString))))
+        if (n == 0) into.commit(dstName)(h => Some(h.copy(mutations =
+          h.mutations :+ record(s"ALTER ATTACH PARTITION $leaf (moved from $srcName)"))))
         n
       }
     }
@@ -3979,10 +3684,6 @@ object Catalog {
     scala.collection.concurrent.TrieMap.empty[String, Object]
   private def lockFor(path: String): Object =
     pathLocks.getOrElseUpdate(path, new Object)
-
-  // per-process monotonic mutation counter: same-millisecond mutation
-  // markers sort in issue order (doc on recordMutation)
-  private val mutationSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Per-column codec kinds [[TableDef.columnCodecs]] accepts — the CH
     * per-column CODEC / LowCardinality axis; mechanism doc at
@@ -4081,7 +3782,7 @@ object Catalog {
     * who need a different physical order can reorder sortKeys afterwards
     * and keep row-level sampling only). Pure transformation over the
     * existing machinery: nothing new to persist — ATTACH rebuilds the
-    * sampled table from the `_TABLE` sidecar like any other.
+    * sampled table from its logged definition like any other.
     */
   def withSampleBy(t: TableDef, key: String): TableDef = {
     require(t.schema.fieldNames.contains(key),

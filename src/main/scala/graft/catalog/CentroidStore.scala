@@ -66,7 +66,7 @@ final class CentroidStore(spark: SparkSession, catalog: Catalog,
       // fileless-table fast path (the fresh-fixture common case): the
       // previous-batch probe is answered by a directory listing, not a
       // planned scan of an empty relation (round-14)
-      if (!catalog.exists(tableName) || !catalog.hasDataFiles(tableName)) 0L
+      if (!catalog.exists(tableName)) 0L
       else catalog.read(tableName)
         .filter(col("corpus_version") === version && col("variant") === variant)
         .agg(org.apache.spark.sql.functions.max(col("trained_at")))
@@ -98,7 +98,7 @@ final class CentroidStore(spark: SparkSession, catalog: Catalog,
     * and silently skew every IVF assignment.
     */
   def load(version: String, variant: String): Option[Seq[Array[Double]]] = {
-    if (!catalog.exists(tableName) || !catalog.hasDataFiles(tableName))
+    if (!catalog.exists(tableName))
       return None
     val rows = catalog.read(tableName)
       .filter(col("corpus_version") === version && col("variant") === variant)

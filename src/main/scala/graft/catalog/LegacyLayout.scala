@@ -3,14 +3,17 @@ package graft.catalog
 import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 /** The one reader of the storage layouts older builds wrote. A table
   * directory without a `_log/` entry is adopted once: [[TableLog]]
-  * publishes the live set found here as its first entry. The live set
-  * follows the older build's own rules:
+  * publishes the live set found here as its first entry. A head without
+  * a definition is adopted once too: its entry then holds the `_TABLE`
+  * sidecar's definition and the `<path>.mutations` history
+  * ([[TableLog.recover]]). The live set follows the older build's own
+  * rules:
   *   - FlatDir: the data files of the table directory itself (root files
   *     and `key=value` partition directories). A compact swap that crashed
   *     between its two renames is finished first — a complete
@@ -28,6 +31,43 @@ private[catalog] object LegacyLayout {
   final case class Found(files: Seq[LogFile], dvs: Seq[LogFile],
                          snapshots: Seq[(String, Seq[LogFile], Seq[LogFile], Long)])
 
+  private def text(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(in.readAllBytes(), UTF_8).trim finally in.close()
+  }
+
+  /** The definition an older build kept in the `_TABLE` sidecar. */
+  def definition(f: FileSystem, path: String): Option[TableDef] = {
+    val p = new Path(path, "_TABLE")
+    if (!f.exists(p)) None else Some(TableDefJson.parse(JsonMethods.parse(text(f, p)), path))
+  }
+
+  private def mutationsPath(path: String) = new Path(path + ".mutations")
+
+  /** The history an older build kept beside the table, oldest first: a
+    * `<path>.mutations` directory of `m_<ts>_<seq>_<id>.json` markers
+    * (named in history order), or one file of JSON lines (the layout
+    * before the markers).
+    */
+  def mutations(f: FileSystem, path: String): Seq[LogMutation] = {
+    val p = mutationsPath(path)
+    val lines =
+      if (!f.exists(p)) Nil
+      else if (f.getFileStatus(p).isDirectory)
+        f.listStatus(p).map(_.getPath).filter(_.getName.startsWith("m_")).sortBy(_.getName)
+          .map(text(f, _)).toSeq
+      else text(f, p).linesIterator.filter(_.trim.nonEmpty).toSeq
+    implicit val fmts: Formats = DefaultFormats
+    lines.map { l =>
+      val j = JsonMethods.parse(l)
+      LogMutation((j \ "ts_ms").extractOpt[Long].getOrElse(-1L),
+        (j \ "command").extractOpt[String].getOrElse(""))
+    }
+  }
+
+  /** Delete the history sibling once a log entry holds it. */
+  def forgetMutations(f: FileSystem, path: String): Unit = f.delete(mutationsPath(path), true)
+
   def read(log: TableLog): Option[Found] = {
     val f = log.f
     val root = log.root
@@ -35,10 +75,7 @@ private[catalog] object LegacyLayout {
     val (tmp, old) = (sibling(".compact.tmp"), sibling(".compact.old"))
     def list(p: Path): Array[FileStatus] =
       try f.listStatus(p) catch { case _: FileNotFoundException => Array.empty }
-    def text(p: Path): String = {
-      val in = f.open(p)
-      try new String(in.readAllBytes(), UTF_8).trim finally in.close()
-    }
+    def text(p: Path): String = LegacyLayout.text(f, p)
     val top = try f.listStatus(root) catch {
       case _: FileNotFoundException =>
         if (!f.exists(old)) return None

@@ -29,23 +29,31 @@ final case class LogFile(path: String, len: Long, mtime: Long,
   */
 final case class LogMove(src: String, dst: String, into: Option[String])
 
+/** One completed mutation of `system.mutations`: when and what. */
+final case class LogMutation(tsMs: Long, command: String)
+
 /** A table state: the whole live set at log position `n` (-1 before the
   * first commit) — the data files, the deletion-vector files, the dedup
   * tokens committed since the last rewrite, and the tokens that rewrite
   * folded (they still refuse a replay until the next rewrite). `moves`
   * are the partition directories still to reach their destination
-  * ([[TableLog.settle]]).
+  * ([[TableLog.settle]]). `table` is the table's definition and
+  * `mutations` its last [[TableLog.KeptMutations]] completed mutations,
+  * oldest first; each entry carries both forward.
   * `frozen` marks an entry the adopter wrote for an old snapshot: never a
-  * head. `extendsPrev` (key `extends`) marks an entry that kept every data
-  * and deletion-vector file of the entry before it ([[TableLog.commit]]
-  * sets it): collecting that older entry deletes no file.
+  * head. `drops` lists the data and deletion-vector paths of the entry
+  * before it that this one no longer lists ([[TableLog.commit]] records
+  * it; None in an entry an older build or the adopter wrote): collecting
+  * that older entry needs no read of it.
   */
 final case class LogEntry(n: Long, files: Seq[LogFile], dvs: Seq[LogFile],
                           tokens: Set[String] = Set.empty,
                           folded: Set[String] = Set.empty,
                           moves: Seq[LogMove] = Nil,
                           frozen: Boolean = false,
-                          extendsPrev: Boolean = false) {
+                          drops: Option[Seq[String]] = None,
+                          table: Option[TableDef] = None,
+                          mutations: Seq[LogMutation] = Nil) {
   def holds(token: String): Boolean = tokens(token) || folded(token)
 }
 
@@ -159,17 +167,11 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     entries(listed()).maxByOption(_._1)
       .fold("")(s => s"${s._2.getPath.getName}@${s._2.getModificationTime}")
 
-  /** Make the directory a log and finish what a crash left, once, where a
-    * table is registered: a directory an older build wrote is adopted
-    * ([[LegacyLayout]]; an adoption a crash interrupted, whose newest entry
-    * is still a frozen snapshot, runs again), and the partition moves of
-    * a crashed commit are settled.
+  /** The newest entry unless it is a frozen snapshot (an adoption a
+    * crash interrupted).
     */
-  def recover(table: String): Unit = {
-    val h = positions(listed()).maxOption.map(entry).filterNot(_.frozen)
-      .getOrElse { adopt(); head() }
-    if (h.moves.nonEmpty) commit(table, Some(h))(Some(_))
-  }
+  private def live(): Option[LogEntry] =
+    positions(listed()).maxOption.map(entry).filterNot(_.frozen)
 
   /** Publish the entry `next` derives from the head at the next position;
     * a lost position re-reads the head and asks `next` again. None from
@@ -177,20 +179,21 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     * read (the first attempt derives from it). The head's pending moves
     * are settled first, and `next` sees the head without them, listing
     * the files they brought into this table: an entry only ever records
-    * moves still to make. The entry records whether it kept every file of
-    * the head. After a publish, the entries and files the new head no
-    * longer reaches are collected.
+    * moves still to make. The entry records the head's files it dropped
+    * and keeps the newest [[KeptMutations]] records. After a publish, the
+    * entries and files the new head no longer reaches are collected.
     */
   def commit(table: String, read: Option[LogEntry] = None)(
       next: LogEntry => Option[LogEntry]): Option[LogEntry] = {
     var attempt = 0
     while (attempt < 100) {
       val h = if (attempt == 0) read.getOrElse(head()) else head()
-      val moved = settle(h)
+      val moved = settle(h, table)
       next(h.copy(files = h.files ++ moved, moves = Nil)) match {
         case None => return None
         case Some(e) =>
-          val at = e.copy(n = h.n + 1, extendsPrev = paths(h).subsetOf(paths(e)))
+          val at = e.copy(n = h.n + 1, drops = Some((paths(h) -- paths(e)).toSeq.sorted),
+            mutations = e.mutations.takeRight(KeptMutations))
           if (publish(f, entryPath(at.n), json(at))) { collect(at, h); return Some(at) }
       }
       attempt += 1
@@ -241,9 +244,10 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
   /** Collect after `h` was published over `prev`: delete the entries
     * older than `prev` that no tag names, and the files only they reach (a
     * directory at once when no kept file lies in it). A directory a kept
-    * entry is still moving out stays whole. The entry `prev` extends is
-    * deleted unopened: `prev` keeps every file it lists. After an append
-    * it costs one listing of `_log/` and one delete.
+    * entry is still moving out stays whole. The entry just before `prev`
+    * is deleted unopened: `prev.drops` names the files of it `prev` no
+    * longer lists. After an append it costs one listing of `_log/` and
+    * one delete; after a rewrite, the deletes of what it dropped.
     */
   private def collect(h: LogEntry, prev: LogEntry): Unit = {
     val ls = listed()
@@ -253,8 +257,9 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     val (keep, moving) = reach(h, ls, tagged, Some(prev))
     val keptTops = (keep ++ moving).flatMap(top)
     val removed = scala.collection.mutable.Set.empty[String]
-    dead.filterNot(n => prev.extendsPrev && n == prev.n - 1).flatMap(n => gone(entry(n)))
-      .flatMap(e => e.files ++ e.dvs).map(_.path)
+    val known = prev.drops.filter(_ => dead.contains(prev.n - 1))
+    (dead.filterNot(n => known.isDefined && n == prev.n - 1).flatMap(n => gone(entry(n)))
+      .flatMap(e => (e.files ++ e.dvs).map(_.path)) ++ known.getOrElse(Nil))
       .filterNot(p => keep(p) || moving.exists(d => p.startsWith(d + "/"))).foreach { p =>
         top(p) match {
           case Some(d) if !keptTops(d) => if (removed.add(d)) f.delete(new Path(root, d), true)
@@ -294,12 +299,12 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
 
   /** Finish the partition moves `h` records: move (or copy) each directory
     * still at its source, then publish the files moved into another table
-    * into that table's log, unless it already holds the move's token.
-    * Every step is a no-op once done, so a settle a crash interrupted runs
-    * again from the start. Returns the files moved into this table, for
-    * the entry that clears the moves to list.
+    * into that table's log, with its record of the move, unless it already
+    * holds the move's token. Every step is a no-op once done, so a settle
+    * a crash interrupted runs again from the start. Returns the files
+    * moved into this table, for the entry that clears the moves to list.
     */
-  private def settle(h: LogEntry): Seq[LogFile] = if (h.moves.isEmpty) Nil else {
+  private def settle(h: LogEntry, table: String): Seq[LogFile] = if (h.moves.isEmpty) Nil else {
     val pins = pinned()
     h.moves.foreach(m => relocate(pins, new Path(m.src), new Path(m.dst)))
     h.moves.groupBy(_.into).toSeq.flatMap {
@@ -309,8 +314,11 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
         if (to eq this) files
         else {
           val toks = ms.map(m => s"move:${m.dst}").toSet
+          val recs = ms.map(m => new Path(m.dst).getName).distinct.map(leaf => LogMutation(
+            System.currentTimeMillis(), s"ALTER ATTACH PARTITION $leaf (moved from $table)"))
           to.commit(into)(cur => if (toks.exists(cur.holds)) None
-            else Some(cur.copy(files = cur.files ++ files, tokens = cur.tokens ++ toks)))
+            else Some(cur.copy(files = cur.files ++ files, tokens = cur.tokens ++ toks,
+              mutations = cur.mutations ++ recs)))
           Nil
         }
       case _ => Nil
@@ -334,17 +342,22 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
       if (!ok) throw new java.io.IOException(s"could not move $src to $dst")
     }
 
-  /** Publish the live set of an older build's directory (doc on
-    * [[LegacyLayout]]): each of its snapshots as a frozen entry and a
-    * tag, then the live set as the first head.
+  /** Publish the first head of a directory without one: the live set an
+    * older build left there (doc on [[LegacyLayout]]; each of its
+    * snapshots first, as a frozen entry and a tag), with definition `d`
+    * and the mutation history `history`. Nothing without files or `d`.
     */
-  private def adopt(): Unit = LegacyLayout.read(this).foreach { old =>
-    old.snapshots.zipWithIndex.foreach { case ((tag, files, dvs, ts), i) =>
+  private def adopt(d: Option[TableDef], history: Seq[LogMutation]): Unit = {
+    val old = LegacyLayout.read(this)
+    if (old.isEmpty && d.isEmpty) return
+    val snapshots = old.fold(Seq.empty[(String, Seq[LogFile], Seq[LogFile], Long)])(_.snapshots)
+    snapshots.zipWithIndex.foreach { case ((tag, files, dvs, ts), i) =>
       publish(f, entryPath(i), json(LogEntry(i, files, dvs, frozen = true)))
       addTag(LogTag(tag, i, ts))
     }
-    val n = old.snapshots.size.toLong
-    publish(f, entryPath(n), json(LogEntry(n, old.files, old.dvs)))
+    val n = snapshots.size.toLong
+    publish(f, entryPath(n), json(LogEntry(n, old.fold(Seq.empty[LogFile])(_.files),
+      old.fold(Seq.empty[LogFile])(_.dvs), table = d, mutations = history)))
   }
 
   /** The directory directly under the root that holds `p`, if any. */
@@ -372,8 +385,19 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
       }
       case _ => Nil
     }
+    val drops = (j \ "drops") match {
+      case JArray(xs) => Some(xs.collect { case JString(p) => p })
+      case _ => None
+    }
+    val table = (j \ "table") match {
+      case o: JObject => Some(TableDefJson.parse(o, tablePath))
+      case _ => None
+    }
+    val mutations = (j \ "mutations").children.collect {
+      case JArray(ts :: JString(c) :: Nil) => LogMutation(num(ts), c)
+    }
     LogEntry(n, files("files"), files("dvs"), strs("tokens"), strs("folded"), moves,
-      (j \ "frozen") == JBool(true), (j \ "extends") == JBool(true))
+      (j \ "frozen") == JBool(true), drops, table, mutations)
   }
 
   private def parseTag(j: JValue): LogTag = {
@@ -383,6 +407,40 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
 }
 
 object TableLog {
+  /** How many mutation records an entry keeps (ClickHouse's
+    * `finished_mutations_to_keep` default).
+    */
+  val KeptMutations = 100
+
+  /** Open the log of the table at `path` where a table is registered,
+    * and finish what a crash or an older build left there, once. A head
+    * without a definition is a table an older build wrote: the entry that
+    * adopts it holds the definition of its `_TABLE` sidecar (else
+    * `declared`) and the history of its `<path>.mutations` sibling
+    * ([[LegacyLayout]] reads both; the sibling goes once adopted), and a
+    * directory without a log has its live set adopted in the same entry.
+    * The partition moves of a crashed commit are settled. Returns the
+    * head; it holds a definition unless neither the directory nor
+    * `declared` has one.
+    */
+  def recover(f: FileSystem, path: String, declared: Option[TableDef]): LogEntry = {
+    val live = new TableLog(f, path, Nil).live()
+    val logged = live.flatMap(_.table)
+    val sidecar = if (logged.isEmpty) LegacyLayout.definition(f, path) else None
+    val d = logged.orElse(sidecar).orElse(declared)
+    val l = new TableLog(f, path, d.fold(Seq.empty[String])(_.partitionKeys))
+    val history =
+      if (sidecar.isEmpty) Nil else LegacyLayout.mutations(f, path).takeRight(KeptMutations)
+    val h = live match {
+      case Some(h) if logged.isEmpty && d.nonEmpty =>
+        l.commit(path, Some(h))(cur => Some(cur.copy(table = d, mutations = history))).get
+      case Some(h) => h
+      case None => l.adopt(d, history); l.head()
+    }
+    if (sidecar.nonEmpty) LegacyLayout.forgetMutations(f, path)
+    if (h.moves.isEmpty) h else l.commit(path, Some(h))(Some(_)).get
+  }
+
   /** Identifies this process in directory and staging names, so two JVMs
     * sharing a warehouse never write into the same name.
     */
@@ -412,7 +470,10 @@ object TableLog {
     "moves" -> JArray(e.moves.toList.map(m =>
       JArray(List(JString(m.src), JString(m.dst), m.into.fold[JValue](JNull)(JString(_)))))),
     "frozen" -> JBool(e.frozen),
-    "extends" -> JBool(e.extendsPrev)))
+    "drops" -> e.drops.fold[JValue](JNothing)(ds => JArray(ds.toList.map(JString(_)))),
+    "table" -> e.table.fold[JValue](JNothing)(TableDefJson.render),
+    "mutations" -> JArray(e.mutations.toList.map(m =>
+      JArray(List(JLong(m.tsMs), JString(m.command)))))))
 
   private def paths(e: LogEntry): Set[String] = (e.files ++ e.dvs).map(_.path).toSet
 

@@ -229,8 +229,9 @@ object ChDdl {
     extends Statement
   /** `DETACH TABLE name` — deregister, keep storage ([[Catalog.detach]]). */
   final case class DetachTable(table: String) extends Statement
-  /** `ATTACH TABLE name` — re-register from the warehouse path's `_TABLE`
-    * sidecar ([[Catalog.attach]]); needs the warehouse arg of execute().
+  /** `ATTACH TABLE name` — re-register from the definition the warehouse
+    * path's table log holds ([[Catalog.attach]]); needs the warehouse arg
+    * of execute().
     */
   final case class AttachTable(table: String) extends Statement
   /** `RENAME TABLE a TO b[, c TO d …]`. */
@@ -1046,7 +1047,7 @@ object ChDdl {
       t = Catalog.withSampleBy(t, keyList(sb).head)
     }
     // `TTL col + INTERVAL n unit [GROUP BY … SET …]` → the stored TTL
-    // spec (persisted in `_TABLE`; swept by MATERIALIZE TTL)
+    // spec (recorded in the table log; swept by MATERIALIZE TTL)
     clauses.get("TTL").foreach(txt => t = t.copy(ttl = Some(parseTtlSpec(txt))))
     CreateTable(t, warnings.toSeq)
   }
@@ -2023,7 +2024,7 @@ object ChDdl {
       case AttachTable(table) =>
         require(warehouse.nonEmpty,
           s"ATTACH TABLE $table: needs the warehouse root (execute/" +
-            "runScript's warehouse argument) to locate the _TABLE sidecar")
+            "runScript's warehouse argument) to locate the table log")
         cat.attach(s"$warehouse/$table")
       case RenameTable(pairs) =>
         pairs.foreach { case (a, b) => cat.renameTable(a, b) }
@@ -2045,7 +2046,7 @@ object ChDdl {
         // else an already-registered view (the testdata surface); any
         // other source refuses loudly at parse
         val src =
-          if (cat.exists(source)) cat.read(source)
+          if (cat.tableNames.contains(source)) cat.read(source)
           else if (s.catalog.tableExists(source)) s.table(source)
           else throw new IllegalArgumentException(
             s"CREATE DICTIONARY $name: SOURCE table '$source' is neither " +

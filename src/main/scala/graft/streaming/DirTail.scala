@@ -75,7 +75,7 @@ final class DirTail(spark: SparkSession, cat: Catalog, table: String,
   private case class Range(file: String, from: Long, to: Long)
   private case class PartState(bytes: Long, records: Long, broken: Long)
 
-  // ---- offset/intent persistence (json4s, like the _TABLE sidecar) ----
+  // ---- offset/intent persistence (json4s, like the table log) ----
 
   // publish-if-absent: false when `p` already exists (a racing writer won)
   private def writeExcl(p: Path, body: String): Boolean =

@@ -1203,8 +1203,7 @@ class CatalogSpec extends SparkSpecBase {
     def rows(ks: String*) = ks.map(k => (k, 1L, 1L)).toDF("k", "v", "updated_at")
     def table(name: String): String = {
       val path = tmpDir("legacy") + s"/$name"
-      cat.createTable(TableDef(name, path, replacingSchema, Seq("k"), Append))
-      cat.detach(name)
+      LegacyLayouts.sidecar(TableDef(name, path, replacingSchema, Seq("k"), Append))
       path
     }
     val flat = table("old_flat")
@@ -1541,24 +1540,23 @@ class CatalogSpec extends SparkSpecBase {
   }
 
   test("re-attach at the same path is a no-op: live ALTER state survives") {
-    import java.nio.file.Files
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/ra"
-    cat.createTable(TableDef("ra", path, replacingSchema, Seq("k"), Append))
+    val declared = TableDef("ra", path, replacingSchema, Seq("k"), Append)
+    cat.createTable(declared)
     cat.append("ra", Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at"))
-    cat.attach(path) // registers the sidecar-persisted def
-    // live state advances past the last persisted sidecar: simulate a
-    // lagging sidecar by adding a column AFTER deleting the sidecar, so a
-    // re-attach that re-read it would resurrect the pre-ALTER state
+    cat.attach(path) // registers the logged def
     cat.addColumn("ra", StructField("score", LongType), 7L)
-    val sidecar = new java.io.File(path, "_TABLE")
-    val stale = Files.readAllBytes(sidecar.toPath)
-    cat.detach("ra"); cat.attach(path) // persisted state round-trips
-    Files.write(sidecar.toPath, stale) // now make the sidecar stale
+    cat.detach("ra"); cat.attach(path) // the logged state round-trips
+    // a stale sidecar of the pre-ALTER definition, as an older build
+    // left it: once the log holds a definition it is never read again
+    LegacyLayouts.sidecar(declared)
+    cat.detach("ra"); cat.attach(path).schema.fieldNames should contain("score")
     val again = cat.attach(path) // same name, same path: short-circuits
     again.schema.fieldNames should contain("score")
     // the read-time default was NOT overwritten by the stale sidecar
     cat.read("ra").head().getAs[Long]("score") shouldBe 7L
+    new Catalog(spark).attach(path).schema.fieldNames should contain("score")
   }
 
   test("bloom skip-index declarations reject non-integral key types") {
@@ -1580,23 +1578,24 @@ class CatalogSpec extends SparkSpecBase {
     pex.getMessage should include("fractional")
   }
 
-  test("mutation history: one marker file per mutation, listed in order") {
+  test("mutation history: each mutation's record rides in the one log entry it publishes, in order") {
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/mh"
     cat.createTable(TableDef("mh", path, replacingSchema, Seq("k"), Append))
     cat.append("mh", Seq(("a", 1L, 10L), ("b", 2L, 20L)).toDF("k", "v", "updated_at"))
+    val before = logEntries(path).max
     cat.delete("mh", col("k") === "a")
+    logEntries(path).max shouldBe before + 1 // one entry: the rewrite and its record
     cat.update("mh", col("k") === "b", Map("v" -> lit(9L)))
     val hist = cat.systemMutations("mh").orderBy("seq").collect()
     hist.length shouldBe 2
     hist.map(_.getAs[String]("command")).head should include("DELETE")
-    // marker-file layout: concurrent writers in other processes append
-    // their own file instead of read-modify-writing a shared one
-    new java.io.File(path + ".mutations").listFiles()
-      .count(_.getName.startsWith("m_")) shouldBe 2
+    // the log is the one record: nothing beside the table, and a fresh
+    // process reads the same history from the head
+    new java.io.File(path + ".mutations").exists() shouldBe false
+    new Catalog(spark).attach(path)
     // rapid-fire mutations land in ISSUE order even inside one
-    // millisecond (the per-process seq in the marker name — a random
-    // tiebreak would shuffle back-to-back ops about half the time)
+    // millisecond: each record follows the head it was published over
     (0 until 6).foreach(i => cat.delete("mh", col("k") === s"none_$i"))
     val cmds = cat.systemMutations("mh").orderBy("seq").collect()
       .map(_.getAs[String]("command")).toSeq
@@ -1604,23 +1603,136 @@ class CatalogSpec extends SparkSpecBase {
       (0 until 6).map(i => s"ALTER DELETE WHERE =(k, 'none_$i')")
   }
 
-  test("mutation history: a legacy single-file layout migrates in place on the next mutation") {
-    val cat = new Catalog(spark)
+  test("mutation history: an older build's single-file and marker-directory histories are adopted into the log") {
+    import java.nio.file.{Files, Paths}
+    def hist(c: Catalog, n: String) = c.systemMutations(n).orderBy("seq").collect()
+      .map(_.getAs[String]("command")).toSeq
+    // an older build's directory without a log: data files, the
+    // definition sidecar and the history as ONE file (the oldest layout)
     val path = tmpDir("cat") + "/mhl"
-    cat.createTable(TableDef("mhl", path, replacingSchema, Seq("k"), Append))
-    cat.append("mhl", Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at"))
-    // fabricate the pre-round-7 layout: ONE file holding the history
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path + ".mutations"),
+    LegacyLayouts.flat(Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at"), path)
+    LegacyLayouts.sidecar(TableDef("mhl", path, replacingSchema, Seq("k"), Append))
+    Files.writeString(Paths.get(path + ".mutations"),
       """{"ts_ms":1,"command":"legacy ALTER DELETE"}
         |{"ts_ms":2,"command":"legacy TTL"}
         |""".stripMargin)
-    // a new mutation must MIGRATE the file to markers, not silently drop
+    val cat = new Catalog(spark)
+    cat.attach(path)
+    logEntries(path) shouldBe Seq(0) // one entry adopts files, definition and history
     cat.delete("mhl", col("k") === "zzz")
-    val hist = cat.systemMutations("mhl").orderBy("seq").collect()
-      .map(_.getAs[String]("command")).toSeq
-    hist shouldBe Seq("legacy ALTER DELETE", "legacy TTL",
-      "ALTER DELETE WHERE =(k, 'zzz')")
-    new java.io.File(path + ".mutations").isDirectory shouldBe true
+    val expected = Seq("legacy ALTER DELETE", "legacy TTL", "ALTER DELETE WHERE =(k, 'zzz')")
+    hist(cat, "mhl") shouldBe expected
+    cat.read("mhl").count() shouldBe 1
+    // adopted once: the sibling is gone, the log alone holds the history
+    new java.io.File(path + ".mutations").exists() shouldBe false
+    val fresh = new Catalog(spark)
+    fresh.attach(path)
+    hist(fresh, "mhl") shouldBe expected
+    // a table whose log an older build wrote (entries without a
+    // definition) with its history as marker files, named in order
+    val p2 = tmpDir("cat") + "/mhm"
+    cat.createTable(TableDef("mhm", p2, replacingSchema, Seq("k"), Append))
+    cat.append("mhm", Seq(("a", 1L, 10L), ("b", 2L, 20L)).toDF("k", "v", "updated_at"))
+    val head = Paths.get(p2, "_log", s"${logEntries(p2).max}.json")
+    val j = org.json4s.jackson.JsonMethods.parse(Files.readString(head))
+      .removeField { case (k, _) => k == "table" || k == "mutations" }
+    Files.writeString(head, org.json4s.jackson.JsonMethods.compact(j))
+    LegacyLayouts.sidecar(cat.get("mhm"))
+    Files.createDirectories(Paths.get(p2 + ".mutations"))
+    Seq("m_0000000000005_000002_bbbb.json" -> "second", "m_0000000000005_000001_aaaa.json" -> "first")
+      .foreach { case (f, c) => Files.writeString(Paths.get(p2 + ".mutations", f),
+        s"""{"ts_ms":5,"command":"$c"}""") }
+    val c2 = new Catalog(spark)
+    c2.attach(p2).name shouldBe "mhm"
+    hist(c2, "mhm") shouldBe Seq("first", "second")
+    c2.read("mhm").count() shouldBe 2
+    new java.io.File(p2 + ".mutations").exists() shouldBe false
+  }
+
+  test("a definition round-trips through its logged JSON form; re-creating it publishes nothing") {
+    val rich = TableDef("rich", tmpDir("cat") + "/rich",
+      StructType(Seq(StructField("k", LongType, nullable = false),
+        StructField("s", StringType), StructField("d", DateType),
+        StructField("n", LongType, metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .putString("chDefault", "7").build()),
+        StructField("m", LongType), StructField("e", ArrayType(FloatType)))),
+      Seq("k"), Append, indexCols = Seq("m"), minmaxCols = Seq("d"), codec = "zstd",
+      constraints = Seq("pos" -> "k >= 0"), materializedCols = Seq("m" -> "k * 2"),
+      tokenIndexCols = Seq("s"), columnCodecs = Seq("k" -> "delta"),
+      annIndex = Some(AnnIndexDef("e", 4, 2, 8)),
+      projections = Seq(AggProjection("p", Seq("s"), Seq("n")), SortProjection("q", "d")),
+      ttl = Some(TtlSpec("d", 86400L, Seq("k"), Seq("n" -> "sum(n)"), Some(3L))),
+      backfillCols = Set("n"), renames = Map("n" -> "old_n"), droppedCols = Set("x"))
+    val defs = Seq(rich, graft.sources.GhEventsIngest.table(tmpDir("cat")),
+      TableDef("agg", "/a", StructType(Seq(StructField("k", StringType),
+        StructField("q", BinaryType))), Seq("k"), Aggregating(Seq("k"), Seq("q"), Map("q" -> "kll"))),
+      TableDef("rep", "/r", replacingSchema, Seq("k"), ReplacingDedup(Seq("k"), "updated_at", Some("v"))),
+      TableDef("col", "/c", replacingSchema, Seq("k"), Collapsing(Seq("k"), "v", "updated_at")))
+    defs.foreach(t => TableDefJson.parse(TableDefJson.render(t), t.path) shouldBe t)
+    val cat = new Catalog(spark)
+    val gh = defs(1)
+    cat.createTable(gh)
+    val fresh = new Catalog(spark)
+    fresh.createTable(gh)
+    fresh.addColumn(gh.name, StructField("z", LongType), 0L)
+    // entry 0 the definition, entry 1 the ALTER: the second createTable published nothing
+    logEntries(gh.path).max shouldBe 1
+  }
+
+  test("DROP TABLE drops the mutation history: a table re-created at the path has none") {
+    val cat = new Catalog(spark)
+    val path = tmpDir("cat") + "/dmh"
+    val t = TableDef("dmh", path, replacingSchema, Seq("k"), Append)
+    cat.createTable(t)
+    cat.append("dmh", Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at"))
+    cat.delete("dmh", col("k") === "a")
+    cat.systemMutations("dmh").count() shouldBe 1
+    cat.dropTable("dmh")
+    cat.createTable(t)
+    cat.systemMutations("dmh").count() shouldBe 0
+    cat.read("dmh").count() shouldBe 0
+  }
+
+  test("a created but never written table does not exist; ALTER keeps it so; an append makes it") {
+    val cat = new Catalog(spark)
+    val path = tmpDir("cat") + "/nw"
+    val schema = StructType(Seq(StructField("repo_name", StringType),
+      StructField("time", TimestampType)))
+    cat.createTable(TableDef("nw", path, schema, Seq("repo_name"), Append))
+    new java.io.File(path, "_log").list().toSeq should not be empty // the definition is logged
+    cat.exists("nw") shouldBe false
+    graft.sources.TsvIngest.highWaterMark(cat, "nw", "r") shouldBe None
+    cat.addColumn("nw", StructField("n", LongType), 0L)
+    cat.exists("nw") shouldBe false
+    new Catalog(spark).attach(path).schema.fieldNames should contain("n")
+    cat.append("nw", Seq(("r", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+      .toDF("repo_name", "time"))
+    cat.exists("nw") shouldBe true
+    graft.sources.TsvIngest.highWaterMark(cat, "nw", "r") shouldBe
+      Some(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+  }
+
+  test("an ALTER in one catalog reaches another's next read and append; a stale block fails naming the table") {
+    val path = tmpDir("cat") + "/xa"
+    val one = new Catalog(spark)
+    one.createTable(TableDef("xa", path, replacingSchema, Seq("k"), Append))
+    one.append("xa", Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at"))
+    val two = new Catalog(spark)
+    two.attach(path)
+    one.addColumn("xa", StructField("w", LongType), 7L)
+    two.read("xa").head().getAs[Long]("w") shouldBe 7L
+    two.get("xa").schema.fieldNames should contain("w")
+    // the next append prepares its block against the head's definition
+    two.append("xa", Seq(("b", 2L, 20L)).toDF("k", "v", "updated_at"))
+    one.read("xa").orderBy("k").collect().map(_.getAs[Long]("w")) shouldBe Array(7L, 7L)
+    // a rewrite built against a definition an ALTER replaced before its
+    // commit is refused, naming the table, and leaves the table as it was
+    val ex = intercept[IllegalStateException] {
+      two.mutate("xa", { df => one.renameColumn("xa", "v", "v2"); df }, "stale")
+    }
+    ex.getMessage should include("xa")
+    one.read("xa").orderBy("k").collect().map(_.getAs[Long]("v2")) shouldBe Array(1L, 2L)
+    two.systemMutations("xa").count() shouldBe 0
   }
 
   test("readMerge: regex union with a truthful _table column; misuse is loud") {

@@ -17,7 +17,8 @@ class IntrospectionSpec extends SparkSpecBase {
   }
 
   test("systemTables reports layout, engine, keys, and storage totals") {
-    // column 2 is the log head position: -1 before the first commit
+    // column 2 is the log head position: createTable publishes entry 0,
+    // the definition
     val (cat, dir) = freshCat("sys-tables")
     val df = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("k", "v")
     cat.createTable(TableDef("t1", s"$dir/t1", df.schema,
@@ -29,14 +30,14 @@ class IntrospectionSpec extends SparkSpecBase {
       .map(r => r.getString(0) -> r).toMap
     rows.keySet shouldBe Set("t1", "t2")
     val t1 = rows("t1")
-    t1.getLong(2) shouldBe 0L                   // log_head: one commit
+    t1.getLong(2) shouldBe 1L                   // log_head: one commit
     t1.getString(3) shouldBe "Append"
     t1.getSeq[String](4) shouldBe Seq("k")      // sort_keys
     t1.getSeq[String](6) shouldBe Seq("v")      // index_cols
     t1.getLong(7) should be >= 1L               // n_parts
     t1.getLong(8) should be > 0L                // bytes
     val t2 = rows("t2")
-    t2.getLong(2) shouldBe -1L
+    t2.getLong(2) shouldBe 0L
     t2.getString(3) shouldBe "ReplacingDedup"
     t2.getLong(7) shouldBe 0L                   // no data yet
   }
@@ -78,7 +79,7 @@ class IntrospectionSpec extends SparkSpecBase {
     cat.read("t").count() shouldBe 100L
   }
 
-  test("attach re-registers a table from its persisted _TABLE metadata") {
+  test("attach re-registers a table from the definition its log holds") {
     // the ATTACH TABLE analog: a fresh process (here: a fresh Catalog)
     // recovers the full definition — schema, keys, semantics, indexes —
     // from storage alone, instead of re-declaring the TableDef
@@ -102,14 +103,14 @@ class IntrospectionSpec extends SparkSpecBase {
       .map(r => (r.getString(0), r.getLong(1))) shouldBe Array(("a", 2L), ("b", 3L))
   }
 
-  test("_TABLE metadata survives a FlatDir compact swap; detach forgets") {
+  test("the logged definition survives a compact; detach forgets") {
     val dir = tmpDir("attach2")
     val writer = new Catalog(spark)
     val df = Seq(("a", 1L, 10L)).toDF("k", "v", "updated_at")
     writer.createTable(TableDef("att2", s"$dir/att2", df.schema,
       sortKeys = Seq("k"), semantics = Append))
     writer.append("att2", df)
-    writer.compact("att2") // a rewrite commit leaves _TABLE in place
+    writer.compact("att2") // the rewrite's entry carries the definition forward
     writer.detach("att2")
     intercept[NoSuchElementException](writer.read("att2"))
     val t = writer.attach(s"$dir/att2")
@@ -137,7 +138,7 @@ class IntrospectionSpec extends SparkSpecBase {
     writer.createTable(TableDef("att3x", s"$other/att3x", df.schema,
       sortKeys = Seq("k"), semantics = Append))
     writer.append("att3x", df)
-    // forge a colliding _TABLE name by attaching into a catalog that
+    // forge a colliding logged name by attaching into a catalog that
     // already holds att3 at the original path
     val ex = intercept[IllegalArgumentException] {
       val forged = new Catalog(spark)

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions.col
 /** Writers of the on-disk layouts older builds left in a table directory
   * (no `_log/`): FlatDir data files, Versioned version dirs with their
   * `_CURRENT` manifest, `_segs/` segment markers and `_FOLDED` lists,
-  * `<path>.dv/` deletion vectors and `<path>.snapshots/` pins. The attach
-  * cases stage these and check that the table log adopts them.
+  * `<path>.dv/` deletion vectors, `<path>.snapshots/` pins and the
+  * `_TABLE` definition sidecar. The attach cases stage these and check
+  * that the table log adopts them.
   */
 object LegacyLayouts {
 
@@ -49,6 +50,13 @@ object LegacyLayouts {
       .select(col("_metadata.file_path").as("file"), col("_metadata.row_index").as("pos"))
       .write.mode("overwrite").parquet(s"$path.dv/$name")
     name
+  }
+
+  /** The `_TABLE` sidecar an older build kept its definition in. */
+  def sidecar(t: graft.catalog.TableDef): Unit = {
+    Files.createDirectories(Paths.get(t.path))
+    Files.writeString(Paths.get(t.path, "_TABLE"),
+      org.json4s.jackson.JsonMethods.compact(graft.catalog.TableDefJson.render(t)))
   }
 
   /** A FREEZE pin of a read set. */

@@ -77,15 +77,25 @@ class TableLogSpec extends SparkSpecBase {
     cat
   }
 
-  /** What a fresh process sees: `crash`'s merged rows, raw rows and
-    * snapshot tags, `dst`'s rows and the rows `crash` has detached.
+  /** A fresh process's catalog of the two tables, each registered from
+    * the definition its log holds.
     */
-  private def observe(root: String, sem: EngineSemantics, parts: Seq[String]): Seq[Seq[String]] = {
-    val cat = register(root, sem, parts)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => s"${r.getAs[String]("k")}:${r.getAs[Long]("v")}").toSeq.sorted
+  private def open(root: String): Catalog = {
+    val cat = new Catalog(spark)
+    Seq("crash", "dst").foreach(n => cat.attach(s"$root/$n"))
+    cat
+  }
+
+  /** What a fresh process sees: `crash`'s definition, merged rows, raw
+    * rows and snapshot tags, `dst`'s rows and the rows `crash` has
+    * detached.
+    */
+  private def observe(root: String): Seq[Seq[String]] = {
+    val cat = open(root)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.mkString(":")).toSeq.sorted
     val detached = s"$root/crash.detached"
-    Seq(rows(cat.read("crash")), rows(cat.readRaw("crash")),
+    Seq(Seq(org.json4s.jackson.JsonMethods.compact(TableDefJson.render(cat.get("crash")))),
+      rows(cat.read("crash")), rows(cat.readRaw("crash")),
       cat.systemSnapshots("crash").collect().map(_.getString(0)).toSeq, rows(cat.read("dst")),
       if (!new java.io.File(detached).exists()) Nil
       else rows(spark.read.schema("k STRING, v BIGINT").option("recursiveFileLookup", "true")
@@ -102,10 +112,10 @@ class TableLogSpec extends SparkSpecBase {
     val base = tmpDir(s"crash-$name")
     val template = s"$base/template"
     setup(register(template, sem, parts))
-    val before = observe(template, sem, parts)
+    val before = observe(template)
     def run(path: String, failAt: Long): Boolean = {
       copyTree(template, path)
-      val cat = register(path, sem, parts)
+      val cat = open(path)
       CrashingFs.arm(failAt)
       spark.conf.set("fs.file.impl", classOf[CrashingFs].getName)
       spark.conf.set("fs.file.impl.disable.cache", "true")
@@ -119,16 +129,16 @@ class TableLogSpec extends SparkSpecBase {
     }
     run(s"$base/full", Long.MaxValue) shouldBe true
     val calls = CrashingFs.calls.get
-    val after = observe(s"$base/full", sem, parts)
+    val after = observe(s"$base/full")
     after should not be before
     info(s"$name: $calls mutating calls")
     (1L to calls).foreach { n =>
       val path = s"$base/n$n"
       run(path, n)
-      val seen = observe(path, sem, parts)
+      val seen = observe(path)
       withClue(s"$name, crash at mutating call $n of $calls: ") {
         Seq(before, after) should contain(seen)
-        observe(path, sem, parts) shouldBe seen
+        observe(path) shouldBe seen
       }
     }
   }
@@ -156,6 +166,28 @@ class TableLogSpec extends SparkSpecBase {
   test("a crash at any filesystem call of a FREEZE leaves the table before or after it") {
     crashPrefixes("freeze", Append)(_.append("crash", batch(("a", 1L, 1L))))(
       _.freeze("crash", "s1"))
+  }
+
+  test("a crash at any filesystem call of an ALTER ADD COLUMN leaves the table before or after it") {
+    crashPrefixes("add-column", Append)(_.append("crash", batch(("a", 1L, 1L))))(
+      _.addColumn("crash", StructField("w", LongType), 7L))
+  }
+
+  test("a crash at any filesystem call of the compact after a RENAME COLUMN leaves the table before or after it") {
+    // the one entry of the rewrite also retires the pending rename
+    crashPrefixes("rename-compact", ReplacingDedup(Seq("k"), "updated_at")) { c =>
+      c.append("crash", batch(("a", 1L, 1L), ("b", 2L, 1L)))
+      c.append("crash", batch(("a", 3L, 2L)))
+      c.renameColumn("crash", "v", "w")
+      c.append("crash", Seq(("c", 4L, 1L)).toDF("k", "w", "updated_at"))
+    }(_.compact("crash"))
+  }
+
+  test("a crash at any filesystem call of an ALTER MODIFY COLUMN leaves the table before or after it") {
+    crashPrefixes("modify-column", Append) { c =>
+      c.append("crash", batch(("a", 1L, 1L)))
+      c.addColumn("crash", StructField("w", IntegerType), 5)
+    }(_.modifyColumnType("crash", "w", LongType))
   }
 
   private val byDay = Seq("updated_at")
@@ -210,16 +242,40 @@ class TableLogSpec extends SparkSpecBase {
     val root = tmpDir("extends")
     val cat = register(root, Append, Nil)
     (1 to 3).foreach(i => cat.append("crash", batch((s"k$i", i.toLong, 1L))))
+    // entry 0 is the definition createTable published
     def entries = new java.io.File(s"$root/crash/_log").list().filter(_.matches("\\d+\\.json")).sorted
-    entries shouldBe Array("1.json", "2.json")
+    entries shouldBe Array("2.json", "3.json")
     val opened = CountingFs.during(spark) {
       cat.append("crash", batch(("k4", 4L, 1L)))
       CountingFs.opened.asScala.toSeq
     }
-    opened should contain("2.json") // the head the append derives from
-    opened should not contain "1.json"
-    entries shouldBe Array("2.json", "3.json")
+    opened should contain("3.json") // the head the append derives from
+    opened should not contain "2.json"
+    entries shouldBe Array("3.json", "4.json")
     cat.read("crash").count() shouldBe 4
+  }
+
+  test("the first append after a compact collects the compacted files without opening their entry") {
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("drops")
+    val cat = register(root, Append, Nil)
+    (1 to 2).foreach(i => cat.append("crash", batch((s"k$i", i.toLong, 1L))))
+    def parquet() = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/crash")).iterator()
+      .asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+    val appended = parquet()
+    cat.compact("crash")
+    def entries = new java.io.File(s"$root/crash/_log").list().filter(_.matches("\\d+\\.json")).sorted
+    entries shouldBe Array("2.json", "3.json")
+    parquet().intersect(appended) shouldBe appended // one commit of grace
+    val opened = CountingFs.during(spark) {
+      cat.append("crash", batch(("k3", 3L, 1L)))
+      CountingFs.opened.asScala.toSeq
+    }
+    opened should contain("3.json") // the compact's entry: the head
+    opened should not contain "2.json" // the compact's entry lists what it dropped
+    entries shouldBe Array("3.json", "4.json")
+    parquet().intersect(appended) shouldBe empty
+    cat.read("crash").count() shouldBe 3
   }
 
   test("publish refuses a filesystem without a step that refuses an existing name") {
