@@ -194,14 +194,14 @@ private[graft] object AnnIndex {
     import org.apache.hadoop.fs.Path
     val a = t.annIndex.get
     val f = new Path(t.path).getFileSystem(spark.sessionState.newHadoopConf())
-    val missing = listing.files.map(_.getPath)
-      .filter(p => !listing.has(marker(p, a.column)))
-      .sortBy(_.toString) // deterministic training-sample order
+    val missing = listing.files
+      .filter(s => !listing.has(marker(s.getPath, a.column)))
+      .sortBy(_.getPath.toString) // deterministic training-sample order
     if (missing.isEmpty) return
     val idCol = t.sortKeys.head
-    val batch = spark.read
-      .schema(StructType(Seq(t.schema(idCol), t.schema(a.column))))
-      .parquet(missing.map(_.toString).toSeq: _*)
+    // scanned through the listed statuses: nothing is listed again
+    val batch = TableLog.frame(spark, new Path(t.path), missing,
+      StructType(Seq(t.schema(idCol), t.schema(a.column))))
     val cc = new Catalog(spark)
     val (cents, books) = quantizer(spark, cc, t, {
       batch.select(col(a.column)).filter(col(a.column).isNotNull)
@@ -220,8 +220,8 @@ private[graft] object AnnIndex {
         lit(now).as("encoded_at")))
     // markers AFTER the commit: a crash in between re-encodes the file
     // and ReplacingDedup(id) absorbs the duplicate rows
-    missing.foreach { p =>
-      val m = marker(p, a.column)
+    missing.foreach { s =>
+      val m = marker(s.getPath, a.column)
       val out = f.create(m, true)
       out.close()
     }

@@ -205,16 +205,15 @@ final case class TableDef(
     // [[AnnIndex]], and [[Catalog.readAnnTopK]] probes it codes-only.
     annIndex: Option[AnnIndexDef] = None,
     // CH `PROJECTION p (SELECT …)`: declared per-table projections —
-    // every append/compact maintains a companion dataset under
-    // `_proj_<name>/` inside the data dir (underscore prefix = invisible
-    // to base scans), and queries are AUTO-rewritten onto it by the
-    // registered optimizer rules ([[graft.plans.RollupRewrite]] /
-    // [[graft.plans.SortedProjectionRewrite]]); queries never opt in.
-    // Plain Append + unpartitioned tables only (merging engines fold at
-    // read time, so an aggregate over their scan is never a plain rollup
-    // of stored rows; the rules answer only a scan of the whole live
-    // table). See [[Catalog.materializeProjection]] for the
-    // crash-recovery contract.
+    // every commit that writes data writes each projection's companion
+    // files into its own commit directory and lists them in the same log
+    // entry (key `projections`), so a block and its companion publish
+    // together; queries are AUTO-rewritten onto the companion by the
+    // optimizer rules ([[graft.plans.RollupRewrite]] /
+    // [[graft.plans.SortedProjectionRewrite]]), which find it on the live
+    // scan's file index; queries never opt in. Plain Append +
+    // unpartitioned tables only (merging engines fold at read time, so an
+    // aggregate over their scan is never a plain rollup of stored rows).
     projections: Seq[ProjectionSpec] = Nil,
     // CH `TTL col + INTERVAL n unit [GROUP BY … SET …]` declared in the
     // table definition (recorded in the table log); the sweep itself runs on
@@ -278,7 +277,11 @@ final case class AnnIndexDef(column: String, nCells: Int = 16,
                              m: Int = 8, k: Int = 16)
 
 /** One declared table projection (doc on [[TableDef.projections]]). */
-sealed trait ProjectionSpec { def name: String }
+sealed trait ProjectionSpec {
+  def name: String
+  /** The directory of its companion files inside a commit directory. */
+  def dirName: String = s"_proj_$name"
+}
 
 /** The aggregate form — CH `PROJECTION p (SELECT dims…, count(), sum(m)…
   * GROUP BY dims…)`. The companion holds one partial row per (dims) per
@@ -288,7 +291,11 @@ sealed trait ProjectionSpec { def name: String }
   * appends never need to rewrite the companion.
   */
 final case class AggProjection(name: String, dims: Seq[String],
-                               sumCols: Seq[String] = Nil) extends ProjectionSpec
+                               sumCols: Seq[String] = Nil) extends ProjectionSpec {
+  /** The companion's row-count column and measure `m`'s partial sum. */
+  def cntCol: String = "__cnt"
+  def sumCol(m: String): String = s"__sum_$m"
+}
 
 /** The alternate-sort form — CH `PROJECTION p (SELECT * ORDER BY key)`.
   * Each appended block is range-clustered on `sortKey` in the companion,
@@ -370,9 +377,9 @@ final class Catalog(spark: SparkSession) {
     validate(t)
     if (tables.putIfAbsent(t.name, t).isEmpty) Catalog.lockFor(t.path).synchronized {
       val h = TableLog.recover(fs(t.path), t.path, Some(t))
-      if (!h.table.contains(t)) log(t).commit(t.name, Some(h))(cur => Some(cur.copy(table = Some(t))))
+      if (!h.table.contains(t)) log(t).commit(t.name, Some(h))(cur =>
+        Some(cur.copy(table = Some(t), projections = companionsUnder(cur, cur.table, t))))
     }
-    registerProjections(tables(t.name))
     tables(t.name)
   }
 
@@ -424,8 +431,8 @@ final class Catalog(spark: SparkSession) {
           "would re-key rows under the index)")
     }
     // projections: plain-Append unpartitioned tables only (the
-    // TableDef doc), one per rewrite rule (each rule's registry is keyed
-    // by the base path), every referenced column a schema column
+    // TableDef doc), at most one sorted one (the sorted rule swaps in one
+    // alternate order per scan), every referenced column a schema column
     if (t.projections.nonEmpty) {
       require(t.semantics == Append,
         s"${t.name}: projections need plain MergeTree semantics — a " +
@@ -672,28 +679,6 @@ final class Catalog(spark: SparkSession) {
         s"not castable to declared ${t.schema(c).dataType.simpleString}")
   }
 
-  /** Install the winning def's projections into the optimizer rewrite
-    * rules (idempotent; covers createTable AND attach, which routes
-    * here). Registration keys on the DATA path, which is what a base
-    * scan's root prints.
-    */
-  private def registerProjections(t: TableDef): Unit =
-    t.projections.foreach { p =>
-      val pp = projPath(t, p.name)
-      p match {
-        case AggProjection(_, dims, sums) =>
-          graft.plans.RollupRewrite.register(spark,
-            graft.plans.ProjectionDef(t.path, pp, dims, "__cnt",
-              sums.map(c => c -> s"__sum_$c").toMap))
-        case SortProjection(_, key) =>
-          graft.plans.SortedProjectionRewrite.register(spark,
-            graft.plans.SortedProjectionDef(t.path, pp, key))
-      }
-    }
-
-  private def projPath(t: TableDef, proj: String): String =
-    new org.apache.hadoop.fs.Path(t.path, s"_proj_$proj").toString
-
   // ---- the definition in the log (ATTACH TABLE analog) -----------------
   //
   // ClickHouse stores each table's definition beside its data and ATTACH
@@ -716,6 +701,8 @@ final class Catalog(spark: SparkSession) {
     val h = l.head()
     val t = defOf(reg, h)
     if (t != reg) tables.replace(name, reg, t)
+    // a table with projections needs the two rules in the session, once
+    if (t.projections.nonEmpty) graft.plans.ProjectionRules.install(spark)
     (t, l, h)
   }
 
@@ -731,10 +718,10 @@ final class Catalog(spark: SparkSession) {
       var out = t
       log(t).commit(name) { h =>
         out = validate(change(defOf(t, h)))
-        if (h.table.contains(out)) None else Some(h.copy(table = Some(out)))
+        if (h.table.contains(out)) None
+        else Some(h.copy(table = Some(out), projections = companionsUnder(h, h.table, out)))
       }
       tables.put(out.name, out)
-      registerProjections(out)
       out
     }
 
@@ -759,9 +746,8 @@ final class Catalog(spark: SparkSession) {
   def detach(name: String): Unit = tables.remove(name)
 
   /** `DROP TABLE [IF EXISTS]` — deregister AND delete storage (the
-    * difference from [[detach]], exactly CH's DETACH-vs-DROP split).
-    * Projection rewrite registrations are retired first so the optimizer
-    * rules never point at deleted paths. Access-control registries (row
+    * difference from [[detach]], exactly CH's DETACH-vs-DROP split): the
+    * table directory and its detached partitions. Access-control registries (row
     * policies / column grants / column masks) are removed too — detach
     * keeps them (re-attach of the SAME table must keep its policies),
     * but after a drop they would silently govern an unrelated future
@@ -775,17 +761,12 @@ final class Catalog(spark: SparkSession) {
         false
       case Some(t) =>
         writeLock(name).synchronized {
-          t.projections.foreach {
-            case _: AggProjection =>
-              graft.plans.RollupRewrite.unregister(t.path)
-            case _: SortProjection =>
-              graft.plans.SortedProjectionRewrite.unregister(t.path)
-          }
           detach(name)
           rowPolicies.remove(name)
           columnGrants.remove(name)
           columnMasks.remove(name)
           fs(t).delete(new org.apache.hadoop.fs.Path(t.path), true)
+          fs(t).delete(detachedRoot(t), true)
         }
         true
     }
@@ -1773,10 +1754,9 @@ final class Catalog(spark: SparkSession) {
       val f = filled(t)
       // one execution of the clustered block (the write itself); the
       // returned count is OBSERVED on the write plan (see writeData)
-      val (rows, _, written) = commitWrite(t, h,
-        clusteredFor(t, preMergedBlock(t, f), blockBytes = blockBytes))((cur, files) =>
-        Some(cur.copy(files = cur.files ++ files))).get
-      written.foreach(maintainProjections(t, _, rewrite = false))
+      val (rows, _) = commitWrite(t, h,
+        clusteredFor(t, preMergedBlock(t, f), blockBytes = blockBytes))((cur, files, comps) =>
+        Some(cur.copy(files = cur.files ++ files, projections = appended(cur, comps)))).get
       (rows, f)
     }
     // MV fan-out AFTER the base commit and OUTSIDE its lock (a target's
@@ -1882,13 +1862,11 @@ final class Catalog(spark: SparkSession) {
       if (h0.holds(token)) None
       else {
         val filled = materializeAndCheck(t, fillOmittedDefaults(t, batch))
-        commitWrite(t, h0, clusteredFor(t, preMergedBlock(t, filled)))((h, files) =>
+        commitWrite(t, h0, clusteredFor(t, preMergedBlock(t, filled)))((h, files, comps) =>
           if (h.holds(token)) None
-          else Some(h.copy(files = h.files ++ files, tokens = h.tokens + token)))
-          .map { case (cnt, _, block) =>
-            block.foreach(maintainProjections(t, _, rewrite = false))
-            (cnt, filled)
-          }
+          else Some(h.copy(files = h.files ++ files, tokens = h.tokens + token,
+            projections = appended(h, comps))))
+          .map { case (cnt, _) => (cnt, filled) }
       }
     }
     // MV fan-out exactly once — only the committing call triggers, after
@@ -1897,32 +1875,75 @@ final class Catalog(spark: SparkSession) {
   }
 
   /** Write `df` into a fresh directory of `t`, then publish the entry
-    * `next` derives from the head and the written files (the one commit
-    * path: append, token append, rewrite). `h` is the head the caller
-    * read before the write (the first attempt derives from it), and `t`
-    * the definition it holds: a head that holds another one (an ALTER
-    * committed since) is refused, naming the table, because the block
-    * was prepared against `t`. When nothing is published the directory
-    * goes again. Returns the rows written, the published entry and the
-    * written block for projection upkeep after the commit.
+    * `next` derives from the head, the written files and the companions
+    * written beside them (the one commit path: append, token append,
+    * rewrite). `h` is the head the caller read before the write (the
+    * first attempt derives from it), and `t` the definition it holds: a
+    * head that holds another one (an ALTER committed since) is refused,
+    * naming the table, because the block was prepared against `t`. An
+    * append writes the companions `h` lists (`rewrite` false), a rewrite
+    * every declared one. When nothing is published the directory goes
+    * again. Returns the rows written and the published entry.
     */
-  private def commitWrite(t: TableDef, h: LogEntry, df: DataFrame)(
-      next: (LogEntry, Seq[LogFile]) => Option[LogEntry])
-      : Option[(Long, LogEntry, Option[DataFrame])] = {
+  private def commitWrite(t: TableDef, h: LogEntry, df: DataFrame, rewrite: Boolean = false)(
+      next: (LogEntry, Seq[LogFile], Map[String, Seq[LogFile]]) => Option[LogEntry])
+      : Option[(Long, LogEntry)] = {
     val l = log(t)
     val dir = l.stage("c")
-    val (rows, files, block) = writeData(t, df, dir)
+    val specs = t.projections.filter(p => rewrite || h.projections.contains(p.name))
     val published =
-      try l.commit(t.name, Some(h)) { cur =>
-        if (!cur.table.forall(_.copy(name = t.name) == t))
-          throw new IllegalStateException(s"${t.name}: log entry ${cur.n} holds a " +
-            "definition this write was not prepared against (a concurrent ALTER) — retry")
-        next(cur, files)
+      try {
+        val (rows, files, comps) = writeData(t, df, dir, specs)
+        l.commit(t.name, Some(h)) { cur =>
+          if (!cur.table.forall(_.copy(name = t.name) == t))
+            throw new IllegalStateException(s"${t.name}: log entry ${cur.n} holds a " +
+              "definition this write was not prepared against (a concurrent ALTER) — retry")
+          next(cur, files, comps)
+        }.map((rows, _))
       }
       catch { case scala.util.control.NonFatal(e) => l.f.delete(dir, true); throw e }
     if (published.isEmpty) l.f.delete(dir, true)
-    published.map((rows, _, block))
+    published
   }
+
+  /** The companion lists of `cur` after an append whose block wrote
+    * `comps`: each gains the block's partial. One the block has no
+    * partial for (materialized after the block was prepared) no longer
+    * covers every data file and goes.
+    */
+  private def appended(cur: LogEntry, comps: Map[String, Seq[LogFile]]): Map[String, Seq[LogFile]] =
+    cur.projections.flatMap { case (n, fs) => comps.get(n).map(c => n -> (fs ++ c)) }
+
+  /** The companion lists of `cur` once `rebuilt` replaces those of `read`,
+    * the head it was built from: the others stay, and when a concurrent
+    * append added data files since `read`, a rebuilt companion keeps that
+    * append's partials — or, where it cannot (the companion was missing
+    * from either head, or replaced in between), goes.
+    */
+  private def rebuiltOver(read: LogEntry, cur: LogEntry,
+                          rebuilt: Map[String, Seq[LogFile]]): Map[String, Seq[LogFile]] = {
+    val added = cur.files.exists(f => !read.files.contains(f))
+    cur.projections -- rebuilt.keys ++ rebuilt.flatMap { case (n, fs) =>
+      if (!added) Some(n -> fs)
+      else read.projections.get(n).zip(cur.projections.get(n)).collect {
+        case (was, now) if was.forall(now.contains) => n -> (fs ++ now.filterNot(was.contains))
+      }
+    }
+  }
+
+  /** The companion lists of entry `e` under definition `d`, which
+    * replaces `was`: a list stays while `d` declares the same projection
+    * over the same companion schema; a projection `d` declares anew starts
+    * empty while `e` lists no data file, else is built by the next
+    * rewrite or `MATERIALIZE PROJECTION`.
+    */
+  private def companionsUnder(e: LogEntry, was: Option[TableDef],
+                              d: TableDef): Map[String, Seq[LogFile]] =
+    d.projections.flatMap { p =>
+      val same = was.exists(w => w.projections.contains(p) &&
+        companionSchema(w, p) == companionSchema(d, p))
+      (if (same) e.projections.get(p.name) else Option.when(e.files.isEmpty)(Nil)).map(p.name -> _)
+    }.toMap
 
   /** True when `df` is built ENTIRELY from driver-local rows (VALUES
     * inserts, centroid saves, metadata frames) and is small — known at
@@ -2104,9 +2125,10 @@ final class Catalog(spark: SparkSession) {
 
   /** Parquet write of one commit's files into the fresh directory `dir`,
     * honoring the table's partition layout, plus every declared index's
-    * sidecars for those files — written before the commit publishes, so
-    * no published file lacks one. Returns (row count, written files, the
-    * written block when the table declares projections).
+    * sidecars for those files and the companion files of `specs` — all
+    * written before the commit publishes, so no published file lacks its
+    * sidecars and no published block its companions. Returns (row count,
+    * written files, each companion's files).
     *
     * The row count is OBSERVED on the write plan itself
     * (`Dataset.observe` + [[org.apache.spark.sql.Observation]] — write
@@ -2115,14 +2137,15 @@ final class Catalog(spark: SparkSession) {
     *
     * Projection companions are derived from the files this call WROTE,
     * never by re-executing the caller's `df` plan: a second execution
-    * after the commit would see the table's new head (a self-referencing
-    * `INSERT INTO t SELECT … FROM t` would see its own output) and any
-    * non-deterministic input (sampling, rand ids) evaluates differently —
-    * the companion partials would diverge from the stored base and
-    * auto-rewritten aggregates would be silently wrong.
+    * would see another head (a self-referencing `INSERT INTO t SELECT …
+    * FROM t` would see its own output) and any non-deterministic input
+    * (sampling, rand ids) evaluates differently — the companion partials
+    * would diverge from the stored base and auto-rewritten aggregates
+    * would be silently wrong.
     */
-  private def writeData(t: TableDef, df: DataFrame, dir: org.apache.hadoop.fs.Path)
-      : (Long, Seq[LogFile], Option[DataFrame]) = {
+  private def writeData(t: TableDef, df: DataFrame, dir: org.apache.hadoop.fs.Path,
+                        specs: Seq[ProjectionSpec])
+      : (Long, Seq[LogFile], Map[String, Seq[LogFile]]) = {
     val obs = org.apache.spark.sql.Observation()
     val counted = df.observe(obs, count(lit(1)).as("rows"))
     // no `_SUCCESS` marker: the log entry is the commit record, and the
@@ -2146,43 +2169,48 @@ final class Catalog(spark: SparkSession) {
         }
       row.getAs[Long]("rows")
     }
-    val (written, files) = log(t).written(dir)
-    // re-project the read-back block to the input's declared schema:
-    // partition-dir columns come back LAST and type-INFERRED from the dir
-    // strings (a string key "01" would read as int 1) — the cast pins both
-    // order and types to what the caller handed in
-    val block =
-      if (t.projections.isEmpty) None
-      else Some(spark.read.parquet(dir.toString)
-        .select(df.schema.map(f => col(f.name).cast(f.dataType)): _*))
+    val l = log(t)
+    val (written, files) = l.written(dir)
     SkipIndex.maintain(spark, fs(t), t, written)
     if (t.annIndex.nonEmpty) AnnIndex.maintain(spark, t, written)
-    (rows, files, block)
+    // projections need an unpartitioned table, so the written files are
+    // the block: read back under the declared schema, no listing
+    (rows, files, writeCompanions(t, TableLog.frame(spark, l.root, written.files, t.schema), dir, specs))
   }
 
-  /** Maintain the declared projections after a commit: on an append
-    * `block` is the insert block and each companion gains one partial
-    * block; on a rewrite it is the whole rewritten table and each
-    * companion is rebuilt. Crash contract: the companion follows the
-    * commit, so a crash between the two leaves the companion BEHIND;
-    * [[materializeProjection]] (CH's `ALTER TABLE … MATERIALIZE
-    * PROJECTION`) rebuilds it — run it after recovering an interrupted
-    * ingest, the same way CH re-materializes after `ALTER` drift.
+  /** Write the companion rows of each of `specs` over `base` into
+    * its [[ProjectionSpec.dirName]] under `dir`; returns each
+    * companion's files.
     */
-  private def maintainProjections(t: TableDef, block: DataFrame,
-                                  rewrite: Boolean): Unit = {
-    t.projections.foreach { p =>
-      if (rewrite) rebuildProjection(t, p, block)
-      else projectionRows(p, block).write.mode("append")
-        .option("compression", t.codec).parquet(projPath(t, p.name))
-    }
-    graft.plans.SortedProjectionRewrite.invalidate(t.path)
-  }
+  private def writeCompanions(t: TableDef, base: => DataFrame, dir: org.apache.hadoop.fs.Path,
+                              specs: Seq[ProjectionSpec]): Map[String, Seq[LogFile]] =
+    specs.map { p =>
+      val d = new org.apache.hadoop.fs.Path(dir, p.dirName)
+      projectionRows(p, base).write.mode("overwrite").option("compression", t.codec)
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false").parquet(d.toString)
+      p.name -> log(t).written(d)._2
+    }.toMap
+
+  /** The schema of projection `p`'s companion files under definition `t`:
+    * that of the rows [[projectionRows]] writes, resolved over an empty
+    * frame of the declared column types (plan analysis only, no job).
+    */
+  private def companionSchema(t: TableDef, p: ProjectionSpec): StructType =
+    projectionRows(p, spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      StructType(t.schema.map(f => StructField(f.name, f.dataType))))).schema
+
+  /** The companions a scan of the whole entry `e` may be answered from:
+    * every declared projection the entry lists, unless deletion vectors
+    * mask rows the companions still count.
+    */
+  private def companions(t: TableDef, l: TableLog, e: LogEntry): Seq[Companion] =
+    t.projections.filter(_ => e.dvs.isEmpty).flatMap(p => e.projections.get(p.name).map(fs =>
+      Companion(p, companionSchema(t, p), l.root, fs.map(l.status))))
 
   /** A projection's companion rows over `base`. */
   private def projectionRows(p: ProjectionSpec, base: DataFrame): DataFrame = p match {
-    case AggProjection(_, dims, sums) =>
-      val aggs = count(lit(1)).as("__cnt") +: sums.map(c => sum(col(c)).as(s"__sum_$c"))
+    case a @ AggProjection(_, dims, sums) =>
+      val aggs = count(lit(1)).as(a.cntCol) +: sums.map(c => sum(col(c)).as(a.sumCol(c)))
       base.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
     case SortProjection(_, key) =>
       // range-cluster: per-file min/max on the sort key narrows to ~1/N
@@ -2191,43 +2219,32 @@ final class Catalog(spark: SparkSession) {
       base.repartitionByRange(col(key)).sortWithinPartitions(col(key))
   }
 
-  /** Rebuild one companion from `base`, staged beside the live companion
-    * and moved into place, so readers racing it see old complete data or
-    * new complete data, never a half-written dir.
-    */
-  private def rebuildProjection(t: TableDef, p: ProjectionSpec, base: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val f = fs(t)
-    val live = new Path(projPath(t, p.name))
-    val stage = new Path(live.toString + ".rebuild")
-    f.delete(stage, true)
-    projectionRows(p, base).write.mode("overwrite").option("compression", t.codec)
-      .parquet(stage.toString)
-    f.delete(live, true)
-    require(f.rename(stage, live),
-      s"${t.name}: could not move rebuilt projection into place ($stage)")
-  }
-
   /** Rebuild one declared projection's companion from the CURRENT base
-    * data — `ALTER TABLE … MATERIALIZE PROJECTION`: the recovery verb for
-    * the commit crash window (doc on [[maintainProjections]]) and the
-    * backfill step of [[addProjection]]. The base scan is not the live
-    * head's own index, so no projection rule can answer it from the
-    * (possibly stale) companion being rebuilt.
+    * data — `ALTER TABLE … MATERIALIZE PROJECTION`, also the backfill step
+    * of [[addProjection]]: one commit whose entry replaces the
+    * companion's file list. The base read is not a live scan, so no projection rule can
+    * answer it from the companion being replaced. A concurrent commit the
+    * rebuild cannot cover ([[rebuiltOver]]) fails it, naming the table.
     */
-  def materializeProjection(name: String, proj: String): Unit = {
-    val t = get(name)
-    val p = t.projections.find(_.name == proj).getOrElse(
-      throw new IllegalArgumentException(
-        s"$name: no projection named $proj declared"))
+  def materializeProjection(name: String, proj: String): Unit =
     writeLock(name).synchronized {
       // readVia applies pending renames/defaults — the companion must
       // hold DECLARED-schema rows, like the base rewrite paths do
-      val (cur, _, h) = current(name)
-      rebuildProjection(cur, p, readVia(cur, h))
-      graft.plans.SortedProjectionRewrite.invalidate(t.path)
+      val (t, l, h) = current(name)
+      val p = t.projections.find(_.name == proj).getOrElse(
+        throw new IllegalArgumentException(s"$name: no projection named $proj declared"))
+      val dir = l.stage("c")
+      try {
+        val comps = writeCompanions(t, readVia(t, h), dir, Seq(p))
+        l.commit(name, Some(h)) { cur =>
+          val out = rebuiltOver(h, cur, comps)
+          if (!out.contains(proj))
+            throw new IllegalStateException(s"$name: a concurrent commit (log entry " +
+              s"${cur.n}) changed the files projection $proj was built from — retry")
+          Some(cur.copy(projections = out))
+        }
+      } catch { case scala.util.control.NonFatal(e) => l.f.delete(dir, true); throw e }
     }
-  }
 
   /** Declare a projection on an EXISTING table — `ALTER TABLE … ADD
     * PROJECTION`, plus an immediate backfill (CH leaves old parts
@@ -2244,25 +2261,15 @@ final class Catalog(spark: SparkSession) {
     materializeProjection(name, spec.name)
   }
 
-  /** `ALTER TABLE … DROP PROJECTION` — removes the declaration, its
-    * companion storage, and its rewrite registration.
+  /** `ALTER TABLE … DROP PROJECTION` — one [[alter]] that removes the
+    * declaration and the companion's file list; collection deletes the
+    * files.
     */
-  def dropProjection(name: String, proj: String): Unit = {
-    val t = get(name)
-    val p = t.projections.find(_.name == proj).getOrElse(
-      throw new IllegalArgumentException(
-        s"$name: no projection named $proj declared"))
-    writeLock(name).synchronized {
-      p match {
-        case _: AggProjection =>
-          graft.plans.RollupRewrite.unregister(t.path, Some(projPath(t, proj)))
-        case _: SortProjection =>
-          graft.plans.SortedProjectionRewrite.unregister(t.path)
-      }
-      alter(name)(d => d.copy(projections = d.projections.filterNot(_.name == proj)))
-      fs(t).delete(new org.apache.hadoop.fs.Path(projPath(t, proj)), true)
+  def dropProjection(name: String, proj: String): Unit =
+    alter(name) { d =>
+      require(d.projections.exists(_.name == proj), s"$name: no projection named $proj declared")
+      d.copy(projections = d.projections.filterNot(_.name == proj))
     }
-  }
 
   // ---- ALTER TABLE … ADD/DROP/MATERIALIZE/CLEAR INDEX ------------------
   //
@@ -2567,16 +2574,17 @@ final class Catalog(spark: SparkSession) {
   }
 
   /** Scan `files` under `schema` through one file index built from the
-    * log ([[TableLog.frame]]) — no listing. `withId` adds the row
+    * log ([[TableLog.frame]]) — no listing; `comps` are the companions the
+    * scan may be answered from. `withId` adds the row
     * identity for the deletion-vector anti-join: the scanned file's path
     * and the row's ordinal inside it, from the file source's hidden
     * `_metadata` struct (constant-per-file, no read amplification).
     */
   private def scan(t: TableDef, l: TableLog, files: Seq[LogFile], schema: StructType,
-                   live: Boolean, withId: Boolean): DataFrame = {
+                   comps: Seq[Companion], withId: Boolean): DataFrame = {
     val df = TableLog.frame(spark, l, files,
       StructType(schema.filterNot(f => t.partitionKeys.contains(f.name))),
-      StructType(t.partitionKeys.map(schema(_))), live)
+      StructType(t.partitionKeys.map(schema(_))), comps)
     if (!withId) df
     else df.withColumn("__dv_file", col("_metadata.file_path"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
@@ -2615,7 +2623,7 @@ final class Catalog(spark: SparkSession) {
     def mask(df: DataFrame): DataFrame =
       if (e.dvs.isEmpty) df
       else {
-        val dv = TableLog.frame(spark, l, e.dvs, dvPairSchema, new StructType, live = false)
+        val dv = TableLog.frame(spark, l, e.dvs, dvPairSchema, new StructType, Nil)
         df.join(dv, df("__dv_file") === dv("file") &&
           df("__dv_pos") === dv("pos"), "left_anti")
       }
@@ -2624,7 +2632,7 @@ final class Catalog(spark: SparkSession) {
     val widened = StructType(t.schema.fields ++ renames.map {
       case (to, phys) => StructField(phys, t.schema(to).dataType)
     })
-    val scanned = scan(t, l, e.files, widened, live, withId)
+    val scanned = scan(t, l, e.files, widened, if (live) companions(t, l, e) else Nil, withId)
     val merges = t.semantics != Append && t.semantics != NullEngine
     val raw = mask(
       if (merges && fitsOnePart(e.files.map(_.len).sum)) scanned.coalesce(1) else scanned)
@@ -2980,18 +2988,14 @@ final class Catalog(spark: SparkSession) {
 
   /** `system.projections` analog: one row per declared projection of
     * every registered table — kind, spec columns, and the companion's
-    * current storage footprint. Registry metadata plus one dir listing.
+    * current storage footprint: the sum of the lengths its head lists.
     */
   def systemProjections(): DataFrame = {
     import spark.implicits._
-    tables.values.toSeq.sortBy(_.name).flatMap { t =>
+    tables.filter(_._2.projections.nonEmpty).keys.toSeq.sorted.flatMap { name =>
+      val (t, _, h) = current(name)
       t.projections.map { p =>
-        val dir = new org.apache.hadoop.fs.Path(projPath(t, p.name))
-        val f = fs(t)
-        val bytes =
-          if (f.exists(dir))
-            f.listStatus(dir).filter(_.isFile).map(_.getLen).sum
-          else 0L
+        val bytes = h.projections.getOrElse(p.name, Nil).map(_.len).sum
         p match {
           case AggProjection(nm, dims, sums) =>
             (t.name, nm, "aggregate", dims.mkString(","),
@@ -3036,7 +3040,7 @@ final class Catalog(spark: SparkSession) {
     val sizes = h.files
       .map(x => (l.resolve(x.path).getName, x.len)).toDF("part", "bytes")
     val sortKey = t.sortKeys.headOption
-    val perFile = scan(t, l, h.files, t.schema, live = false, withId = false)
+    val perFile = scan(t, l, h.files, t.schema, Nil, withId = false)
       .withColumn("part", element_at(split(input_file_name(), "/"), -1))
     val stats = sortKey match {
       case Some(k) => perFile.groupBy(col("part")).agg(
@@ -3208,15 +3212,14 @@ final class Catalog(spark: SparkSession) {
         // explicitly stored NULL reads back as NULL, and dropped or
         // pre-rename names are free again. The DEFAULT declarations stay.
         val retired = t.copy(backfillCols = Set.empty, renames = Map.empty, droppedCols = Set.empty)
-        val (_, e, block) = commitWrite(t, h, clusteredFor(t, merged, forCompact = true)) {
-          (cur, files) =>
+        val (_, e) = commitWrite(t, h, clusteredFor(t, merged, forCompact = true), rewrite = true) {
+          (cur, files, comps) =>
             requireUnchanged(name, h, cur)
             Some(LogEntry(-1L, files ++ cur.files.filterNot(h.files.toSet), Nil,
               cur.tokens -- h.tokens, h.tokens, table = Some(retired),
-              mutations = cur.mutations :+ rec))
+              mutations = cur.mutations :+ rec, projections = rebuiltOver(h, cur, comps)))
         }.get
         tables.replace(name, t, retired)
-        block.foreach(maintainProjections(retired, _, rewrite = true))
         l.sweep(e, staleLockMs)
       }
     }

@@ -12,8 +12,9 @@ import org.json4s.jackson.JsonMethods
   * publishes the live set found here as its first entry. A head without
   * a definition is adopted once too: its entry then holds the `_TABLE`
   * sidecar's definition and the `<path>.mutations` history
-  * ([[TableLog.recover]]). The live set follows the older build's own
-  * rules:
+  * ([[TableLog.recover]]), and a declared projection's companion
+  * directory is listed in place. The live set follows the older build's
+  * own rules:
   *   - FlatDir: the data files of the table directory itself (root files
   *     and `key=value` partition directories). A compact swap that crashed
   *     between its two renames is finished first — a complete
@@ -64,6 +65,13 @@ private[catalog] object LegacyLayout {
         (j \ "command").extractOpt[String].getOrElse(""))
     }
   }
+
+  /** The companion files an older build kept for projection `p` in
+    * `<path>/_proj_<name>/`, if that directory exists: a log entry then
+    * lists them in place.
+    */
+  def companion(log: TableLog, p: ProjectionSpec): Option[Seq[LogFile]] =
+    Some(new Path(log.root, p.dirName)).filter(log.f.exists).map(log.written(_)._2)
 
   /** Delete the history sibling once a log entry holds it. */
   def forgetMutations(f: FileSystem, path: String): Unit = f.delete(mutationsPath(path), true)

@@ -126,12 +126,12 @@ object SkipIndex {
     * sampled file's physical one: after an ALTER MODIFY COLUMN the files
     * can mix narrow and wide physical types, the declared read schema
     * promotes both, and the sidecars key values by the type every probe
-    * value arrives in.
+    * value arrives in. The files are scanned through the statuses the
+    * caller holds ([[TableLog.frame]]): nothing is listed or stat-ed.
     */
-  private[catalog] def scan(spark: SparkSession, t: TableDef, files: Seq[Path],
+  private[catalog] def scan(spark: SparkSession, t: TableDef, files: Seq[FileStatus],
                             cols: Seq[String]): DataFrame =
-    spark.read.schema(StructType(cols.distinct.map(c => t.schema(c))))
-      .parquet(files.map(_.toString): _*)
+    TableLog.frame(spark, new Path(t.path), files, StructType(cols.distinct.map(c => t.schema(c))))
 
   /** Write every sidecar `listing` shows missing (optionally only the
     * one `(kind, column)` a MATERIALIZE INDEX names), in a fixed number of
@@ -153,14 +153,14 @@ object SkipIndex {
       c <- k.columns(t) if t.schema.fieldNames.contains(c) && only.forall(_ == (k -> c))
     } yield (k, c)
     if (slots.isEmpty) return
-    def missing(kinds: Set[SkipIndex]): Seq[Path] =
-      listing.files.map(_.getPath).filter(p => slots.exists { case (k, c) =>
-        kinds(k) && !listing.has(sidecar(p, c, k.suffix))
+    def missing(kinds: Set[SkipIndex]): Seq[FileStatus] =
+      listing.files.filter(s => slots.exists { case (k, c) =>
+        kinds(k) && !listing.has(sidecar(s.getPath, c, k.suffix))
       })
     lazy val w = SidecarWriter(spark)
     // per build (keyed by one of its kinds), the files missing any sidecar
     // of its slots; each such file is rebuilt for all of them
-    val built = Map[SkipIndex, Seq[Path]](
+    val built = Map[SkipIndex, Seq[FileStatus]](
       MinMax -> missing(Set(Bloom, Token, MinMax)),
       Bloom -> missing(Set(Bloom, Token)),
       SetIndex -> missing(Set(SetIndex)),
@@ -181,8 +181,8 @@ object SkipIndex {
     if (fts.nonEmpty && built(FullText).nonEmpty)
       written ++= FullText.build(spark, t, built(FullText), fts, w)
     slots.foreach { case (k, c) =>
-      built(if (k == Token) Bloom else k).foreach { p =>
-        val sc = sidecar(p, c, k.suffix)
+      built(if (k == Token) Bloom else k).foreach { s =>
+        val sc = sidecar(s.getPath, c, k.suffix)
         if (!written(Listing.key(sc))) put(f, sc, k.empty)
       }
     }
@@ -191,7 +191,7 @@ object SkipIndex {
   /** The per-file aggregate: (file → (rows, tokens)) for bloom sizing, and
     * the keys of the minmax sidecars it wrote.
     */
-  private def fileStats(spark: SparkSession, t: TableDef, files: Seq[Path],
+  private def fileStats(spark: SparkSession, t: TableDef, files: Seq[FileStatus],
                         slots: Seq[(SkipIndex, String)], w: SidecarWriter)
       : (Map[String, (Long, Long)], Seq[String]) = {
     val mm = slots.collect { case (MinMax, c) => c }
@@ -224,7 +224,7 @@ object SkipIndex {
     * Partials built from the same (n, fpp) merge bit for bit, so the
     * result does not depend on how the scan was split.
     */
-  private def bloomBuild(spark: SparkSession, t: TableDef, files: Seq[Path],
+  private def bloomBuild(spark: SparkSession, t: TableDef, files: Seq[FileStatus],
                          slots: Seq[(SkipIndex, String)],
                          sizes: Map[String, (Long, Long)],
                          w: SidecarWriter): Seq[String] = {
@@ -564,7 +564,7 @@ object SetIndex extends SkipIndex {
     * groups within their bound, so no executor holds more than N values
     * of a group.
     */
-  private[catalog] def build(spark: SparkSession, t: TableDef, files: Seq[Path],
+  private[catalog] def build(spark: SparkSession, t: TableDef, files: Seq[FileStatus],
                              cols: Seq[(String, Int)], w: SidecarWriter): Seq[String] = {
     val base = SkipIndex.scan(spark, t, files, cols.map(_._1))
     val triples = cols.map { case (c, _) =>
@@ -652,7 +652,7 @@ object FullText extends SkipIndex {
     *     (file, column), so an over-bound file's vocabulary is dropped
     *     before the per-(file, column) fold.
     */
-  private[catalog] def build(spark: SparkSession, t: TableDef, files: Seq[Path],
+  private[catalog] def build(spark: SparkSession, t: TableDef, files: Seq[FileStatus],
                              cols: Seq[(String, Int)], w: SidecarWriter): Seq[String] = {
     val rowCap = Catalog.FullTextRowCap
     val base = SkipIndex.scan(spark, t, files, cols.map(_._1))

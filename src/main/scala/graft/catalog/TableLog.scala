@@ -44,7 +44,10 @@ final case class LogMutation(tsMs: Long, command: String)
   * head. `drops` lists the data and deletion-vector paths of the entry
   * before it that this one no longer lists ([[TableLog.commit]] records
   * it; None in an entry an older build or the adopter wrote): collecting
-  * that older entry needs no read of it.
+  * that older entry needs no read of it. `projections` holds the
+  * companion files of each declared projection that covers every data
+  * file (key `projections`): a projection missing there is not answered
+  * from until a rewrite or `MATERIALIZE PROJECTION` builds it.
   */
 final case class LogEntry(n: Long, files: Seq[LogFile], dvs: Seq[LogFile],
                           tokens: Set[String] = Set.empty,
@@ -53,8 +56,12 @@ final case class LogEntry(n: Long, files: Seq[LogFile], dvs: Seq[LogFile],
                           frozen: Boolean = false,
                           drops: Option[Seq[String]] = None,
                           table: Option[TableDef] = None,
-                          mutations: Seq[LogMutation] = Nil) {
+                          mutations: Seq[LogMutation] = Nil,
+                          projections: Map[String, Seq[LogFile]] = Map.empty) {
   def holds(token: String): Boolean = tokens(token) || folded(token)
+
+  /** Every file the entry lists: data, deletion vectors and companions. */
+  def logged: Seq[LogFile] = files ++ dvs ++ projections.values.flatten
 }
 
 object LogEntry {
@@ -181,7 +188,9 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     * the files they brought into this table: an entry only ever records
     * moves still to make. The entry records the head's files it dropped
     * and keeps the newest [[KeptMutations]] records. After a publish, the
-    * entries and files the new head no longer reaches are collected.
+    * entries and files the new head no longer reaches are collected. A
+    * publish that landed behind the head ([[refuseBehind]]) is taken back
+    * and refused, naming the table: its changes would never be read.
     */
   def commit(table: String, read: Option[LogEntry] = None)(
       next: LogEntry => Option[LogEntry]): Option[LogEntry] = {
@@ -194,12 +203,35 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
         case Some(e) =>
           val at = e.copy(n = h.n + 1, drops = Some((paths(h) -- paths(e)).toSeq.sorted),
             mutations = e.mutations.takeRight(KeptMutations))
-          if (publish(f, entryPath(at.n), json(at))) { collect(at, h); return Some(at) }
+          if (publish(f, entryPath(at.n), json(at))) {
+            collect(at, h, refuseBehind(table, at, h)); return Some(at)
+          }
       }
       attempt += 1
     }
     throw new IllegalStateException(
       s"$table: lost $attempt log positions in a row to concurrent commits")
+  }
+
+  /** The listing of `_log/` just after `e` was published over `h`; when
+    * it shows an entry newer than `e` that does not derive from it, `e`
+    * took a position collection had already freed (`h` was read three or
+    * more commits ago), so `e` is deleted and the commit refused without
+    * a retry: another writer's collection may have deleted what it
+    * derives from. A follower of `e` lists, or drops, every file `e`
+    * added; one collected meanwhile counts as not following.
+    */
+  private def refuseBehind(table: String, e: LogEntry, h: LogEntry): Array[FileStatus] = {
+    val ls = listed()
+    val added = paths(e) -- paths(h)
+    if (positions(ls).exists(_ > e.n) &&
+        !gone(entry(e.n + 1)).exists(x => added.subsetOf(paths(x) ++ x.drops.getOrElse(Nil)))) {
+      f.delete(entryPath(e.n), false)
+      throw new IllegalStateException(s"$table: log position ${e.n} was freed by newer " +
+        s"commits before this one published it (its head, entry ${h.n}, was read too long " +
+        "ago); nothing was committed — retry")
+    }
+    ls
   }
 
   def tags(ls: Array[FileStatus] = listed()): Seq[LogTag] =
@@ -237,7 +269,7 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     // another process's collection may delete what this one lists: skip it
     val kept = held.values.toSeq ++ (tagged + (h.n - 1)).filterNot(held.contains)
       .filter(positions(ls).toSet).toSeq.flatMap(n => gone(entry(n)))
-    (kept.flatMap(e => e.files ++ e.dvs).map(_.path).toSet,
+    (kept.flatMap(_.logged).map(_.path).toSet,
       kept.flatMap(_.moves).map(m => relativize(new Path(m.src))))
   }
 
@@ -249,8 +281,7 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     * longer lists. After an append it costs one listing of `_log/` and
     * one delete; after a rewrite, the deletes of what it dropped.
     */
-  private def collect(h: LogEntry, prev: LogEntry): Unit = {
-    val ls = listed()
+  private def collect(h: LogEntry, prev: LogEntry, ls: Array[FileStatus]): Unit = {
     val tagged = tags(ls).map(_.position).toSet
     val dead = positions(ls).filter(n => n < h.n - 1 && !tagged(n)).sorted
     if (dead.isEmpty) return
@@ -259,7 +290,7 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     val removed = scala.collection.mutable.Set.empty[String]
     val known = prev.drops.filter(_ => dead.contains(prev.n - 1))
     (dead.filterNot(n => known.isDefined && n == prev.n - 1).flatMap(n => gone(entry(n)))
-      .flatMap(e => (e.files ++ e.dvs).map(_.path)) ++ known.getOrElse(Nil))
+      .flatMap(_.logged.map(_.path)) ++ known.getOrElse(Nil))
       .filterNot(p => keep(p) || moving.exists(d => p.startsWith(d + "/"))).foreach { p =>
         top(p) match {
           case Some(d) if !keptTops(d) => if (removed.add(d)) f.delete(new Path(root, d), true)
@@ -356,16 +387,27 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
       addTag(LogTag(tag, i, ts))
     }
     val n = snapshots.size.toLong
-    publish(f, entryPath(n), json(LogEntry(n, old.fold(Seq.empty[LogFile])(_.files),
-      old.fold(Seq.empty[LogFile])(_.dvs), table = d, mutations = history)))
+    val e = LogEntry(n, old.fold(Seq.empty[LogFile])(_.files), old.fold(Seq.empty[LogFile])(_.dvs),
+      table = d, mutations = history)
+    publish(f, entryPath(n), json(e.copy(projections = adoptable(d, e))))
   }
+
+  /** The companions of the projections `d` declares that `e` lacks and
+    * that can be adopted: an older build's companion directory
+    * ([[LegacyLayout.companion]]), or an empty one while `e` lists no
+    * data file.
+    */
+  private def adoptable(d: Option[TableDef], e: LogEntry): Map[String, Seq[LogFile]] =
+    d.toSeq.flatMap(_.projections).filterNot(p => e.projections.contains(p.name))
+      .flatMap(p => LegacyLayout.companion(this, p).orElse(Option.when(e.files.isEmpty)(Nil))
+        .map(p.name -> _)).toMap
 
   /** The directory directly under the root that holds `p`, if any. */
   private def top(p: String): Option[String] =
     if (!absolute(p) && p.contains('/')) Some(p.takeWhile(_ != '/')) else None
 
   private def parse(n: Long, j: JValue): LogEntry = {
-    def files(k: String): Seq[LogFile] = (j \ k) match {
+    def files(v: JValue): Seq[LogFile] = v match {
       case JArray(xs) => xs.collect {
         case JArray(JString(p) :: len :: mt :: JArray(vs) :: Nil) =>
           LogFile(p, num(len), num(mt), vs.map {
@@ -396,8 +438,12 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
     val mutations = (j \ "mutations").children.collect {
       case JArray(ts :: JString(c) :: Nil) => LogMutation(num(ts), c)
     }
-    LogEntry(n, files("files"), files("dvs"), strs("tokens"), strs("folded"), moves,
-      (j \ "frozen") == JBool(true), drops, table, mutations)
+    val projections = (j \ "projections") match {
+      case JObject(ps) => ps.map { case (name, v) => name -> files(v) }.toMap
+      case _ => Map.empty[String, Seq[LogFile]]
+    }
+    LogEntry(n, files(j \ "files"), files(j \ "dvs"), strs("tokens"), strs("folded"), moves,
+      (j \ "frozen") == JBool(true), drops, table, mutations, projections)
   }
 
   private def parseTag(j: JValue): LogTag = {
@@ -419,9 +465,10 @@ object TableLog {
     * `declared`) and the history of its `<path>.mutations` sibling
     * ([[LegacyLayout]] reads both; the sibling goes once adopted), and a
     * directory without a log has its live set adopted in the same entry.
-    * The partition moves of a crashed commit are settled. Returns the
-    * head; it holds a definition unless neither the directory nor
-    * `declared` has one.
+    * A declared projection the head lacks gets the companion directory
+    * an older build kept under the table root, once. The partition moves
+    * of a crashed commit are settled. Returns the head; it holds a
+    * definition unless neither the directory nor `declared` has one.
     */
   def recover(f: FileSystem, path: String, declared: Option[TableDef]): LogEntry = {
     val live = new TableLog(f, path, Nil).live()
@@ -431,14 +478,15 @@ object TableLog {
     val l = new TableLog(f, path, d.fold(Seq.empty[String])(_.partitionKeys))
     val history =
       if (sidecar.isEmpty) Nil else LegacyLayout.mutations(f, path).takeRight(KeptMutations)
-    val h = live match {
-      case Some(h) if logged.isEmpty && d.nonEmpty =>
-        l.commit(path, Some(h))(cur => Some(cur.copy(table = d, mutations = history))).get
-      case Some(h) => h
-      case None => l.adopt(d, history); l.head()
-    }
+    val h = live.getOrElse { l.adopt(d, history); l.head() }
+    val companions = l.adoptable(d, h)
+    val out =
+      if (h.moves.isEmpty && companions.isEmpty && (h.table.nonEmpty || d.isEmpty)) h
+      else l.commit(path, Some(h))(cur => Some(cur.copy(table = cur.table.orElse(d),
+        mutations = if (cur.table.isEmpty) history else cur.mutations,
+        projections = cur.projections ++ companions))).get
     if (sidecar.nonEmpty) LegacyLayout.forgetMutations(f, path)
-    if (h.moves.isEmpty) h else l.commit(path, Some(h))(Some(_)).get
+    out
   }
 
   /** Identifies this process in directory and staging names, so two JVMs
@@ -473,9 +521,11 @@ object TableLog {
     "drops" -> e.drops.fold[JValue](JNothing)(ds => JArray(ds.toList.map(JString(_)))),
     "table" -> e.table.fold[JValue](JNothing)(TableDefJson.render),
     "mutations" -> JArray(e.mutations.toList.map(m =>
-      JArray(List(JLong(m.tsMs), JString(m.command)))))))
+      JArray(List(JLong(m.tsMs), JString(m.command))))),
+    "projections" -> JObject(e.projections.toList.sortBy(_._1).map { case (name, fs) =>
+      name -> JArray(fs.toList.map(fileJson)) })))
 
-  private def paths(e: LogEntry): Set[String] = (e.files ++ e.dvs).map(_.path).toSet
+  private def paths(e: LogEntry): Set[String] = e.logged.map(_.path).toSet
 
   /** Publish `body` as `dst` unless a file of that name exists, in one
     * step that never overwrites: the body is written in full to a staging
@@ -515,14 +565,14 @@ object TableLog {
 
   /** A scan of `files` under `root` through one file index built from
     * the log: no listing, no partition inference, no parallel-listing job.
-    * `live` names the table when the scan reads its whole live head —
-    * the one scan a projection may answer.
+    * `companions` are the projections a scan of the whole live head may
+    * be answered from; every other scan carries none.
     */
   def frame(spark: SparkSession, log: TableLog, files: Seq[LogFile],
             dataSchema: StructType, partSchema: StructType,
-            live: Boolean): DataFrame = {
+            companions: Seq[Companion]): DataFrame = {
     val statuses = files.map(log.status)
-    val spec = PartitionSpec(partSchema,
+    frame(spark, log.root, statuses, dataSchema, PartitionSpec(partSchema,
       if (partSchema.isEmpty) Nil
       else {
         val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
@@ -530,25 +580,40 @@ object TableLog {
           PartitionPath(InternalRow.fromSeq(partSchema.fields.toSeq.zip(fs.head._1.part)
             .map { case (fl, v) => v.map(s => Cast(Literal(s), fl.dataType, tz).eval()).orNull }), d)
         }
-      })
-    val index = new LogFileIndex(spark, log.root, statuses, spec,
-      if (live) Some(log.root.toString) else None)
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema, dataSchema,
-      None, new ParquetFileFormat, Map.empty)(spark))
+      }), companions)
   }
+
+  /** A scan of files whose statuses the caller holds (files it just
+    * wrote, or a companion's) the same way: nothing is listed.
+    */
+  def frame(spark: SparkSession, root: Path, files: Seq[FileStatus], dataSchema: StructType,
+            spec: PartitionSpec = PartitionSpec(new StructType, Nil),
+            companions: Seq[Companion] = Nil): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(new LogFileIndex(spark, root, files, spec,
+      companions), spec.partitionColumns, dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+}
+
+/** A projection a live scan may be answered from: its declaration, the
+  * schema of its companion files and their statuses under the table root.
+  */
+final case class Companion(spec: ProjectionSpec, schema: StructType, root: Path,
+                           files: Seq[FileStatus]) {
+  /** The companion's rows, read without a listing. */
+  def frame(spark: SparkSession): DataFrame = TableLog.frame(spark, root, files, schema)
 }
 
 /** The file index of one log state: Spark's in-memory index with its
   * status cache filled from the log entry and the partitions taken from
   * the logged values, so building it lists nothing. Two indexes over one
-  * table are equal only when they scan the same files (a snapshot read
-  * and a live read of one table must never share a reused exchange).
-  * `liveTable` is the table root when the index scans the whole live head.
+  * table are equal only when they scan the same files and carry the same
+  * companions (a snapshot read and a live read of one table must never
+  * share a reused exchange). `companions` are the projections the
+  * optimizer rules may answer the scan from (a live head's only).
   */
 final class LogFileIndex private[catalog] (spark: SparkSession, root: Path,
                                            val statuses: Seq[FileStatus],
                                            spec: PartitionSpec,
-                                           val liveTable: Option[String])
+                                           val companions: Seq[Companion])
     extends InMemoryFileIndex(spark, Seq(root),
       if (spec.partitionColumns.isEmpty) Map("recursiveFileLookup" -> "true") else Map.empty,
       None, new LogFileIndex.Filled(root, statuses), Some(spec)) {
@@ -556,7 +621,7 @@ final class LogFileIndex private[catalog] (spark: SparkSession, root: Path,
   private lazy val key = statuses.map(_.getPath.toString).sorted
 
   override def equals(o: Any): Boolean = o match {
-    case l: LogFileIndex => rootPaths == l.rootPaths && liveTable == l.liveTable && key == l.key
+    case l: LogFileIndex => rootPaths == l.rootPaths && companions == l.companions && key == l.key
     case _ => false
   }
   override def hashCode(): Int = (rootPaths, statuses.size).hashCode()

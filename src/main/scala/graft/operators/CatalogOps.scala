@@ -454,8 +454,8 @@ object CatalogOps extends QueryModule {
         "orders_rollup").toString
       // build-then-register ONCE per session: the rebuild query is itself
       // rewrite-eligible, so rebuilding after registration would be
-      // answered from the rollup file being overwritten (see
-      // RollupRewrite.unregister); the base testdata is immutable, so
+      // answered from the rollup file being overwritten; the base
+      // testdata is immutable, so
       // re-invocations (spec sweeps, Bench repeats) just reuse the rollup
       if (!RollupRewrite.isRegistered(base)) {
         s.read.parquet(base)
@@ -1067,8 +1067,8 @@ object CatalogOps extends QueryModule {
     // TEXT with an aggregate projection, loaded in TWO insert blocks
     // (the companion must merge per-block partials), then queried with a
     // plain dim-filtered count+sum against the BASE read — RollupRewrite
-    // auto-answers it from the maintained `_proj_…` companion (plan
-    // pinned in ProjectionAxisSpec), while the oracle recomputes the
+    // auto-answers it from the companion the log lists beside each block
+    // (plan pinned in ProjectionAxisSpec), while the oracle recomputes the
     // same aggregate from the ORIGINAL parquet. The measured time
     // deliberately includes the table + companion build (catalog-gate
     // convention). l_quantity is integral-valued, so the partial-sum

@@ -3,37 +3,72 @@ package graft.plans
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
 import org.apache.spark.sql.graftshim.ColumnShim
+import graft.catalog.{AggProjection, Companion, LogFileIndex}
 
-/** A registered rollup: `rollupPath` holds `SELECT dims…, count(*) AS
-  * cntCol[, sum(m) AS sumCols(m)…] FROM basePath GROUP BY dims…` — the
-  * stars-MV shape (reference README.md:256-266) plus optional summable
-  * measure states (SummingMergeTree-style partials), maintained by the
-  * MV/backfill machinery. `sumCols` maps each base measure column to the
-  * rollup column holding its per-group partial sum.
+/** A registered raw-path rollup: `rollupPath` holds `SELECT dims…,
+  * count(*) AS cntCol[, sum(m) AS sumCols(m)…] FROM basePath GROUP BY
+  * dims…` — the stars-MV shape (reference README.md:256-266) plus optional
+  * summable measure states (SummingMergeTree-style partials), maintained
+  * by the MV/backfill machinery. `sumCols` maps each base measure column
+  * to the rollup column holding its per-group partial sum. A catalog
+  * table's declared projections are never registered: its live scan
+  * carries them ([[LogFileIndex.companions]]).
   */
 final case class ProjectionDef(basePath: String, rollupPath: String,
                                dims: Seq[String], cntCol: String,
                                sumCols: Map[String, String] = Map.empty)
 
-/** The base a scan reads, as the projection registries key it: a catalog
-  * table's log index names its table only when it scans the whole live
-  * head (a snapshot, pruned or rewrite-input scan names none); any other
-  * file index names its single root path (a multi-path read contains rows
-  * a projection of one path never saw).
+/** The two projection rules in a session's final optimizer batch, and
+  * where they find the candidates for a scan: a catalog table's log index
+  * carries the companions of its live head (a snapshot, pruned or
+  * rewrite-input scan carries none); any other file index is looked up by
+  * its single root path in the raw-path registries (a multi-path read
+  * contains rows a projection of one path never saw).
   */
-private[plans] object ScanBase {
-  def of(rel: HadoopFsRelation): Option[String] = rel.location match {
-    case l: graft.catalog.LogFileIndex => l.liveTable
-    case loc if loc.rootPaths.length == 1 => Some(loc.rootPaths.head.toString)
-    case _ => None
+object ProjectionRules {
+  /** Install both rules in `s`, once: a catalog table that declares
+    * projections needs nothing more.
+    */
+  def install(s: SparkSession): Unit = Seq(RollupRewrite, SortedProjectionRewrite).foreach(add(s, _))
+
+  private[plans] def add(s: SparkSession, r: Rule[LogicalPlan]): Unit = synchronized {
+    if (!s.experimental.extraOptimizations.contains(r))
+      s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ r
+  }
+
+  /** The companions of a catalog scan, or what `registry` holds for the
+    * root of another (qualified only while it holds anything).
+    */
+  private[plans] def of[V](loc: FileIndex, registry: ConcurrentHashMap[String, V]): Either[Seq[Companion], Option[V]] =
+    loc match {
+      case l: LogFileIndex => Left(l.companions)
+      case _ if loc.rootPaths.length == 1 && !registry.isEmpty =>
+        Right(Option(registry.get(canon(loc.rootPaths.head.toString))))
+      case _ => Right(None)
+    }
+
+  // Fully-qualified URI, not the bare path: two tables at the same path on
+  // DIFFERENT filesystems (file:/data/t vs hdfs:/data/t) must not collide
+  // in a registry — a scan of one silently answered from the other's
+  // projection would be a wrong-filesystem wrong answer. Scan rootPaths
+  // arrive already qualified; registration-time strings qualify here the
+  // same way.
+  private[plans] def canon(p: String): String = {
+    val path = new Path(p)
+    val conf = SparkSession.active.sessionState.newHadoopConf()
+    val q = path.getFileSystem(conf).makeQualified(path).toUri
+    // normalize the authority: `file:/x` (null authority, how scan
+    // rootPaths print) and `file:///x` (empty authority, how makeQualified
+    // renders a bare local path) are the same filesystem location
+    s"${q.getScheme}://${Option(q.getAuthority).getOrElse("")}${q.getPath}"
   }
 }
 
@@ -60,13 +95,16 @@ private[plans] object ScanBase {
   *   - output names and exprIds are preserved via a top-level Project, so
   *     parent operators (sorts, joins) are untouched.
   *
-  * Freshness is the caller's contract, as with ClickHouse projections:
-  * register a rollup only while it is maintained alongside its base (the
-  * Catalog's append path + StarsMv backfill in this repo).
+  * Freshness: a catalog companion is listed in the same log entry as
+  * the data it summarizes, so a live scan's companions always match its
+  * files; a raw-path rollup is the registrant's contract, as with
+  * ClickHouse projections — register it only while it is maintained
+  * alongside its base (StarsMv backfill in this repo).
   *
-  * Registered through `spark.experimental.extraOptimizations` (the final
-  * optimizer batch): [[register]] is idempotent, and the rewritten subtree
-  * contains no registered base scan, so re-application is a no-op.
+  * Runs in `spark.experimental.extraOptimizations` (the final optimizer
+  * batch, [[ProjectionRules]]): [[register]] is idempotent, and the
+  * rewritten subtree contains no candidate scan, so re-application is a
+  * no-op.
   */
 object RollupRewrite extends Rule[LogicalPlan] {
 
@@ -74,63 +112,45 @@ object RollupRewrite extends Rule[LogicalPlan] {
   // projections); tryRewrite picks the narrowest eligible one
   private val registry = new ConcurrentHashMap[String, Vector[ProjectionDef]]()
 
-  // Fully-qualified URI, not the bare path: two tables at the same path on
-  // DIFFERENT filesystems (file:/data/t vs hdfs:/data/t) must not collide
-  // in the registry — a scan of one silently answered from the other's
-  // rollup would be a wrong-filesystem wrong answer. Scan rootPaths arrive
-  // already qualified; registration-time strings qualify here the same way.
-  private def canon(p: String): String = {
-    val path = new Path(p)
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val q = path.getFileSystem(conf).makeQualified(path).toUri
-    // normalize the authority: `file:/x` (null authority, how scan
-    // rootPaths print) and `file:///x` (empty authority, how makeQualified
-    // renders a bare local path) are the same filesystem location
-    s"${q.getScheme}://${Option(q.getAuthority).getOrElse("")}${q.getPath}"
-  }
+  /** One rollup a scan may be answered from: its dims, count column,
+    * measure partial columns and its rows.
+    */
+  private final case class Rollup(dims: Seq[String], cntCol: String,
+                                  sumCols: Map[String, String], rows: SparkSession => DataFrame)
 
-  /** Register a projection and install the rule in the session (once).
-    * Re-registering the same rollupPath replaces its entry (idempotent);
-    * a different rollupPath over the same base ADDS a candidate.
+  /** Register a raw-path rollup and install the rule in the session
+    * (once). Re-registering the same rollupPath replaces its entry
+    * (idempotent); a different rollupPath over the same base ADDS a
+    * candidate. Build the rollup before registering it: its build query is
+    * itself rewrite-eligible.
     */
   def register(s: SparkSession, p: ProjectionDef): Unit = {
-    registry.compute(canon(p.basePath), (_, cur) =>
+    registry.compute(ProjectionRules.canon(p.basePath), (_, cur) =>
       Option(cur).getOrElse(Vector.empty)
         .filterNot(_.rollupPath == p.rollupPath) :+ p)
-    if (!s.experimental.extraOptimizations.contains(RollupRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ RollupRewrite
+    ProjectionRules.add(s, this)
   }
 
-  /** Is any projection currently registered for this base path? */
+  /** Is any rollup currently registered for this base path? */
   def isRegistered(basePath: String): Boolean =
-    registry.containsKey(canon(basePath))
+    registry.containsKey(ProjectionRules.canon(basePath))
 
-  /** Deregister a base's projections (all of them, or just the one at
-    * `rollupPath`). REQUIRED before rebuilding a rollup in the same
-    * session: a rebuild query (count over the base grouped by the dims)
-    * is itself rewrite-eligible, and answering it from the rollup file
-    * being overwritten would read and destroy the same path.
-    */
-  def unregister(basePath: String, rollupPath: Option[String] = None): Unit =
-    rollupPath match {
-      case None => registry.remove(canon(basePath))
-      case Some(rp) =>
-        registry.computeIfPresent(canon(basePath), (_, cur) =>
-          cur.filterNot(_.rollupPath == rp) match {
-            case v if v.isEmpty => null
-            case v => v
-          })
-    }
-
-  /** Test hook: forget every registered projection. */
+  /** Test hook: forget every registered rollup. */
   def clear(): Unit = registry.clear()
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (registry.isEmpty) plan
-    else plan.transformDown {
+    plan.transformDown {
       case agg: Aggregate => tryRewrite(agg).getOrElse(agg)
     }
+
+  private def candidates(rel: HadoopFsRelation): Seq[Rollup] = ProjectionRules.of(rel.location, registry) match {
+    case Left(companions) => companions.collect {
+      case c @ Companion(p: AggProjection, _, _, _) =>
+        Rollup(p.dims, p.cntCol, p.sumCols.map(m => m -> p.sumCol(m)).toMap, c.frame)
+    }
+    case Right(registered) => registered.toSeq.flatten.map(p =>
+      Rollup(p.dims, p.cntCol, p.sumCols, _.read.parquet(p.rollupPath)))
+  }
 
   /** Unwrap pruning Projects / Filters down to a parquet scan, collecting
     * filter conditions. Anything else (joins, windows, non-attribute
@@ -196,7 +216,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
     * sum(x)/count(*), … all qualify).
     */
   private def eligible(agg: Aggregate, filters: List[Expression],
-                       proj: ProjectionDef): Boolean = {
+                       proj: Rollup): Boolean = {
     val dims = proj.dims.toSet
     filters.forall(f =>
       f.deterministic && f.references.forall(a => dims(a.name))) &&
@@ -218,11 +238,10 @@ object RollupRewrite extends Rule[LogicalPlan] {
   private def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
     val candidate = for {
       (filters, rel) <- unwrap(agg.child, Nil)
-      base <- ScanBase.of(rel.relation.asInstanceOf[HadoopFsRelation])
-      cands <- Option(registry.get(canon(base)))
-      // among the base's registered rollups, the NARROWEST eligible one
-      // (fewest dims = fewest groups = smallest companion scan) wins
-      proj <- cands.filter(eligible(agg, filters, _))
+      // among the base's rollups, the NARROWEST eligible one (fewest dims
+      // = fewest groups = smallest companion scan) wins
+      proj <- candidates(rel.relation.asInstanceOf[HadoopFsRelation])
+        .filter(eligible(agg, filters, _))
         .sortBy(_.dims.length).headOption
       dims = proj.dims.toSet
     } yield (filters, proj, dims)
@@ -233,7 +252,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
       // an optimizer rule that throws fails an otherwise-valid query
       try {
         val spark = SparkSession.active
-        var df = spark.read.parquet(proj.rollupPath)
+        var df = proj.rows(spark)
         val byName = df.queryExecution.analyzed.output.map(a => a.name -> a).toMap
         // the distinct aggregates this query needs, each mapped to one
         // rolled column: count(literal) → sum(cnt), sum(m) → sum(sum_m)

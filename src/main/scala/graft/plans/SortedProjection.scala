@@ -2,21 +2,22 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, BinaryComparison, EqualNullSafe, Expression, In, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import graft.catalog.{Companion, SortProjection}
 
-/** A registered SORTED projection: `projPath` holds the SAME rows as
-  * `basePath`, re-clustered on `sortKey` (ClickHouse's
+/** A registered raw-path SORTED projection: `sortedPath` holds the SAME
+  * rows as `basePath`, re-clustered on `sortKey` (ClickHouse's
   * `PROJECTION p (SELECT * ORDER BY key)` — the alternate-sort-order
   * half of the projection feature; [[ProjectionDef]]/[[RollupRewrite]]
   * is the aggregate half). Maintained alongside the base by whoever
-  * registers it, same freshness contract as rollups.
+  * registers it, same freshness contract as rollups; a catalog table's
+  * declared sorted projection rides on its live scan instead.
   */
-final case class SortedProjectionDef(basePath: String, projPath: String,
+final case class SortedProjectionDef(basePath: String, sortedPath: String,
                                      sortKey: String)
 
 /** Answer selective scans from the copy whose layout can actually skip:
@@ -33,7 +34,8 @@ final case class SortedProjectionDef(basePath: String, projPath: String,
   * any plan shape; the gates below are about PROFIT and degradation:
   *   - only scans reached through pruning Projects/Filters (same unwrap
   *     discipline as [[RollupRewrite]]);
-  *   - scans of exactly the registered base's live data (`ScanBase`);
+  *   - scans of a live catalog head carrying a sorted companion, or of
+  *     exactly a registered raw base ([[ProjectionRules]]);
   *   - at least one conjunct is a comparison/IN on the sort key with
   *     foldable bounds (otherwise the sorted copy skips nothing);
   *   - the projection must carry every column the scan outputs with
@@ -43,77 +45,47 @@ final case class SortedProjectionDef(basePath: String, projPath: String,
   */
 object SortedProjectionRewrite extends Rule[LogicalPlan] {
 
-  private val registry = new ConcurrentHashMap[String, SortedProjectionDef]()
+  // a raw registration with its relation, resolved (listed) once when it
+  // is registered: the registrant keeps the files in place
+  private val registry = new ConcurrentHashMap[String, (SortedProjectionDef, LogicalRelation)]()
 
-  // the analyzed relation (whose construction pays a full driver-side
-  // file-index listing) is cached per (session, path) and VALIDATED by
-  // the projection dir's modification time: a Catalog-MAINTAINED
-  // projection changes on every append/compact, and serving the stale
-  // file listing would read deleted files after a compaction. A
-  // stat that fails (dir missing mid-rebuild, object store without dir
-  // mtimes) drops the cache and re-resolves — never serves stale.
-  private val relCache =
-    new ConcurrentHashMap[(SparkSession, String), (Long, LogicalRelation)]()
-
-  private def dirMtime(spark: SparkSession, p: String): Long = {
-    val path = new Path(p)
-    path.getFileSystem(spark.sessionState.newHadoopConf())
-      .getFileStatus(path).getModificationTime
-  }
-
-  private def projRelation(spark: SparkSession, projPath: String): LogicalRelation = {
-    val mt = dirMtime(spark, projPath)
-    relCache.compute((spark, projPath), { (_, cached) =>
-      cached match {
-        case (t, _) if t == mt => cached
-        case _ =>
-          (mt, spark.read.parquet(projPath).queryExecution.analyzed
-            .collect { case r: LogicalRelation => r }.head)
-      }
-    })._2
-  }
-
-  /** Drop the cached resolved relation for a base's projection — called
-    * by the Catalog after maintaining a declared projection, so the next
-    * optimization re-lists even if the filesystem's mtime granularity
-    * hid a same-millisecond rewrite.
-    */
-  def invalidate(basePath: String): Unit =
-    Option(registry.get(canon(basePath))).foreach { p =>
-      relCache.keySet.removeIf(_._2 == p.projPath)
-    }
-
-  private def canon(p: String): String = {
-    val path = new Path(p)
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val q = path.getFileSystem(conf).makeQualified(path).toUri
-    s"${q.getScheme}://${Option(q.getAuthority).getOrElse("")}${q.getPath}"
-  }
+  private def relationOf(df: DataFrame): LogicalRelation =
+    df.queryExecution.analyzed.collect { case r: LogicalRelation => r }.head
 
   def register(s: SparkSession, p: SortedProjectionDef): Unit = {
-    registry.put(canon(p.basePath), p)
-    if (!s.experimental.extraOptimizations.contains(SortedProjectionRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ SortedProjectionRewrite
+    registry.put(ProjectionRules.canon(p.basePath), (p, relationOf(s.read.parquet(p.sortedPath))))
+    ProjectionRules.add(s, this)
   }
 
   def isRegistered(basePath: String): Boolean =
-    registry.containsKey(canon(basePath))
+    registry.containsKey(ProjectionRules.canon(basePath))
 
-  def unregister(basePath: String): Unit = {
-    val removed = Option(registry.remove(canon(basePath)))
-    removed.foreach { p =>
-      relCache.keySet.removeIf(_._2 == p.projPath)
-    }
-  }
+  def unregister(basePath: String): Unit = registry.remove(ProjectionRules.canon(basePath))
 
   /** Test hook: forget every registered projection. */
-  def clear(): Unit = { registry.clear(); relCache.clear() }
+  def clear(): Unit = registry.clear()
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (registry.isEmpty) plan
-    else plan.transformDown {
+    plan.transformDown {
       case f: Filter => trySwap(f).getOrElse(f)
+    }
+
+  /** The sort key of the scan's sorted projection and its relation: a
+    * live catalog scan's companion, built from its logged files, or a
+    * registered raw one.
+    */
+  private def candidate(rel: HadoopFsRelation): Option[(String, () => LogicalRelation)] =
+    ProjectionRules.of(rel.location, registry) match {
+      case Left(companions) => companions.collectFirst {
+        case c @ Companion(SortProjection(_, key), _, _, _) =>
+          (key, () => relationOf(c.frame(SparkSession.active)))
+      }
+      case Right(registered) => registered.map { case (p, r) =>
+        // fresh exprIds per use: the one instance appearing in two plans
+        // (or twice in one) with identical attribute ids would alias
+        // unrelated subtrees
+        (p.sortKey, () => r.newInstance())
+      }
     }
 
   private def unwrap(plan: LogicalPlan, conds: List[Expression])
@@ -147,21 +119,15 @@ object SortedProjectionRewrite extends Rule[LogicalPlan] {
       })
 
   private def trySwap(top: Filter): Option[LogicalPlan] = {
-    val candidate = for {
+    val found = for {
       (conds, rel) <- unwrap(top, Nil)
-      base <- ScanBase.of(rel.relation.asInstanceOf[HadoopFsRelation])
-      proj <- Option(registry.get(canon(base)))
-      if conds.flatMap(conjuncts).exists(selectiveOnKey(_, proj.sortKey))
-    } yield (rel, proj)
+      (key, projRel) <- candidate(rel.relation.asInstanceOf[HadoopFsRelation])
+      if conds.flatMap(conjuncts).exists(selectiveOnKey(_, key))
+    } yield (rel, projRel)
 
-    candidate.flatMap { case (rel, proj) =>
+    found.flatMap { case (rel, projRel) =>
       try {
-        val spark = SparkSession.active
-        // fresh exprIds per use: the cached instance appearing in two
-        // plans (or twice in one) with identical attribute ids would
-        // alias unrelated subtrees; newInstance() re-ids without paying
-        // the file-index listing again
-        val newRel = projRelation(spark, proj.projPath).newInstance()
+        val newRel = projRel()
         val byName = newRel.output.map(a => a.name -> a).toMap
         // every base output column, same type, or leave the plan alone
         if (!rel.output.forall(a =>

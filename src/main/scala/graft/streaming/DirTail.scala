@@ -31,9 +31,11 @@ import graft.catalog.Catalog
   *     token the table log's head holds, never double-inserted.
   *  3. `_tail/<source>/commit-N.json` — the offsets after N (cumulative
   *     bytes/records/broken per partition). Published if absent; deterministic from
-  *     the intent, so a replayed write is byte-equivalent.
+  *     the intent, so a replayed write is byte-equivalent. Once it is
+  *     published, intent-N and commit-(N-1) are deleted: the directory
+  *     stays one commit (plus one intent mid-batch) however long it runs.
   *
-  * Crash anywhere → the next poll reads the highest commit K, sees
+  * Crash anywhere → the next poll reads only the highest commit K, sees
   * intent-(K+1) if present, and rolls FORWARD: re-read the frozen
   * ranges, re-offer the block (deduped), write the commit. The
   * exactly-once ledger is the commit chain; the dedup token guards the
@@ -90,8 +92,9 @@ final class DirTail(spark: SparkSession, cat: Catalog, table: String,
   }
 
   /** Highest committed batch number (0 = nothing committed) and its
-    * offsets. The chain is contiguous by construction — batch N+1 only
-    * starts after commit-N exists — so max() is the frontier.
+    * offsets. Batch N+1 only starts after commit-N exists, so max() is
+    * the frontier (a crash between a publish and its deletes can leave
+    * the commit before it).
     */
   private def committedState(): (Long, Map[String, PartState]) = {
     val d = tailDir
@@ -400,7 +403,11 @@ final class DirTail(spark: SparkSession, cat: Catalog, table: String,
       })
     // publish-if-absent: a roll-forward replay finds it already written (same
     // deterministic content) — losing the race is success
-    writeExcl(new Path(tailDir, s"commit-$n.json"), body)
+    val d = tailDir
+    writeExcl(new Path(d, s"commit-$n.json"), body)
+    // the newest commit is the ledger: its intent and its predecessor are
+    // spent, so the directory holds one commit between polls
+    Seq(s"intent-$n.json", s"commit-${n - 1}.json").foreach(x => fs(d).delete(new Path(d, x), false))
   }
 
   /** `system.kafka`-like listing: one row per partition file with its

@@ -1693,6 +1693,24 @@ class CatalogSpec extends SparkSpecBase {
     cat.read("dmh").count() shouldBe 0
   }
 
+  test("DROP TABLE drops the detached partitions: a table re-created at the path has none") {
+    val cat = new Catalog(spark)
+    val path = tmpDir("cat") + "/ddp"
+    val t = TableDef("ddp", path, StructType(Seq(
+      StructField("k", StringType), StructField("v", LongType),
+      StructField("lang", StringType))),
+      sortKeys = Seq("k"), semantics = Append, partitionKeys = Seq("lang"))
+    cat.createTable(t)
+    cat.append("ddp", Seq(("a", 1L, "en"), ("c", 3L, "de")).toDF("k", "v", "lang"))
+    cat.detachPartition("ddp", "en") shouldBe 1
+    cat.systemDetachedParts("ddp").count() shouldBe 1
+    cat.dropTable("ddp")
+    cat.createTable(t)
+    cat.systemDetachedParts("ddp").count() shouldBe 0
+    cat.attachPartition("ddp", "en") shouldBe 0
+    cat.read("ddp").count() shouldBe 0
+  }
+
   test("a created but never written table does not exist; ALTER keeps it so; an append makes it") {
     val cat = new Catalog(spark)
     val path = tmpDir("cat") + "/nw"

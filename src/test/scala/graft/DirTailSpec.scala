@@ -231,4 +231,28 @@ class DirTailSpec extends SparkSpecBase {
     cat.read("tlsplit").select(col("k")).collect()
       .map(_.getLong(0)).sorted shouldBe (0L until 450L).toArray
   }
+
+  test("the tail directory keeps one commit and no intent across polls; offsets unchanged") {
+    val cat = new Catalog(spark)
+    val path = mkTable(cat, "tlbounded")
+    val topic = new java.io.File(tmpDir("tail"), "topicb")
+    topic.mkdirs()
+    val p0 = new java.io.File(topic, "part-0.jsonl")
+    val p1 = new java.io.File(topic, "part-1.jsonl")
+    val tail = new DirTail(spark, cat, "tlbounded", topic.toString, "srcb", schema)
+    (0 until 12).foreach { i =>
+      writeLines(p0, (i * 10L until i * 10L + 6L).map(rec))
+      writeLines(p1, (i * 10L + 6L until i * 10L + 10L).map(rec))
+      tail.poll() shouldBe 10L
+    }
+    new java.io.File(s"$path/_tail/srcb").list().sorted shouldBe Array("commit-12.json")
+    val offs = tail.offsetsListing().collect()
+      .map(r => r.getAs[String]("partition").split('/').last ->
+        (r.getAs[Long]("last_batch"), r.getAs[Long]("committed_bytes"),
+          r.getAs[Long]("committed_records"), r.getAs[Long]("broken_records")))
+      .toMap
+    offs shouldBe Map("part-0.jsonl" -> ((12L, p0.length(), 72L, 0L)),
+      "part-1.jsonl" -> ((12L, p1.length(), 48L, 0L)))
+    cat.read("tlbounded").count() shouldBe 120L
+  }
 }

@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import graft.catalog.{AggProjection, Catalog, SortProjection}
+import graft.catalog.{AggProjection, Catalog, LogFileIndex, SortProjection, TableLog}
 import graft.plans.{RollupRewrite, SortedProjectionRewrite}
 
 /** The DECLARED projection axis (CH `PROJECTION p (SELECT …)` in CREATE
-  * TABLE + `ALTER TABLE … ADD/DROP/MATERIALIZE PROJECTION`): the Catalog
-  * maintains a companion dataset on every append/mutation and the
-  * optimizer rules answer eligible queries from it automatically. The
-  * manual registration halves are spec'd in RollupRewriteSpec /
+  * TABLE + `ALTER TABLE … ADD/DROP/MATERIALIZE PROJECTION`): every commit
+  * lists each projection's companion files in its log entry and the
+  * optimizer rules answer eligible queries from them automatically. The
+  * raw-path registration halves are spec'd in RollupRewriteSpec /
   * SortedProjectionSpec; this spec pins the END-TO-END lifecycle —
   * declare → ingest → auto-rewrite → mutate → recover.
   */
@@ -16,6 +19,41 @@ class ProjectionAxisSpec extends SparkSpecBase {
 
   private def mkCat(): (Catalog, String) =
     (new Catalog(spark), tmpDir("proj-axis"))
+
+  private def salesLog(dir: String): TableLog = new TableLog(
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf()), s"$dir/sales", Nil)
+
+  /** The files projection `p`'s companion lists in the sales head (empty
+    * when the head lists none).
+    */
+  private def logged(dir: String, p: String): Set[String] = {
+    val l = salesLog(dir)
+    l.head().projections.getOrElse(p, Nil).map(x => l.resolve(x.path).toUri.getPath).toSet
+  }
+
+  /** The companions the live sales scan carries: name → files. */
+  private def carried(cat: Catalog): Map[String, Set[String]] =
+    cat.read("sales").queryExecution.analyzed.collect {
+      case r: LogicalRelation => r.relation
+    }.collect { case h: HadoopFsRelation => h.location }.collect { case l: LogFileIndex => l.companions }.flatten
+      .map(c => c.spec.name -> c.files.map(_.getPath.toUri.getPath).toSet).toMap
+
+  /** The files each file scan of `q`'s optimized plan reads. */
+  private def scans(q: DataFrame): Seq[Set[String]] =
+    q.queryExecution.optimizedPlan.collect { case r: LogicalRelation => r.relation }
+      .collect { case h: HadoopFsRelation => h.location.inputFiles.map(new Path(_).toUri.getPath).toSet }
+
+  /** True when `q` scans exactly projection `p`'s logged files, which the
+    * live scan carries.
+    */
+  private def answeredFrom(cat: Catalog, dir: String, q: DataFrame, p: String): Boolean = {
+    val files = logged(dir, p)
+    files.nonEmpty && carried(cat).get(p).contains(files) && scans(q).contains(files)
+  }
+
+  /** The companion rows projection `p` lists. */
+  private def companion(dir: String, p: String): DataFrame =
+    spark.read.parquet(logged(dir, p).toSeq: _*)
 
   private def sales(cat: Catalog, dir: String,
                     ddlExtra: String = "") : String = {
@@ -45,46 +83,24 @@ class ProjectionAxisSpec extends SparkSpecBase {
       append(cat, block1)
       append(cat, block2)
       // the companion holds per-block PARTIALS: 2 blocks × their groups
-      val comp = spark.read.parquet(s"$dir/sales/_proj_by_status")
+      val comp = companion(dir, "by_status")
       comp.columns.sorted shouldBe Array("__cnt", "__sum_qty", "status")
       comp.count() should be > 3L // more rows than groups = unmerged partials
       // a plain aggregate over the BASE read is answered from the companion
       val q = cat.read("sales").groupBy(col("status"))
         .agg(count(lit(1)).as("n"), sum(col("qty")).as("s"))
         .orderBy(col("status"))
-      q.queryExecution.executedPlan.toString should include("_proj_by_status")
+      answeredFrom(cat, dir, q, "by_status") shouldBe true
       q.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))) shouldBe
         Array(("A", 3L, 90L), ("B", 2L, 60L), ("C", 1L, 60L))
-      // a mutation rewrites the companion with the swap: still answered,
-      // and the answer reflects the delete
+      // a mutation rebuilds the companion in the entry of its rewrite:
+      // still answered, and the answer reflects the delete
       cat.delete("sales", col("status") === "C")
       val q2 = cat.read("sales").groupBy(col("status"))
         .agg(count(lit(1)).as("n")).orderBy(col("status"))
-      q2.queryExecution.executedPlan.toString should include("_proj_by_status")
+      answeredFrom(cat, dir, q2, "by_status") shouldBe true
       q2.collect().map(r => (r.getString(0), r.getLong(1))) shouldBe
         Array(("A", 3L), ("B", 2L))
-    } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
-  }
-
-  test("companion loss degrades to the base scan; MATERIALIZE rebuilds it") {
-    val (cat, dir) = mkCat()
-    try {
-      sales(cat, dir,
-        ",\n  PROJECTION by_status (SELECT status, count() GROUP BY status)")
-      append(cat, block1)
-      // simulate the append crash window: companion gone, base intact
-      def q() = cat.read("sales").groupBy(col("status"))
-        .agg(count(lit(1)).as("n")).orderBy(col("status"))
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$dir/sales/_proj_by_status"))
-      q().queryExecution.executedPlan.toString should not include "_proj_by_status"
-      q().collect().map(_.getLong(1)).sum shouldBe 3L
-      // the CH recovery verb, as DDL text
-      graft.sql.ChDdl.execute(cat, spark,
-        "ALTER TABLE sales MATERIALIZE PROJECTION by_status")
-      q().queryExecution.executedPlan.toString should include("_proj_by_status")
-      q().collect().map(r => (r.getString(0), r.getLong(1))) shouldBe
-        Array(("A", 2L), ("B", 1L))
     } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
   }
 
@@ -99,19 +115,26 @@ class ProjectionAxisSpec extends SparkSpecBase {
       def q() = cat.read("sales").groupBy(col("status"))
         .agg(sum(col("qty")).as("s")).orderBy(col("status"))
       // pre-ADD rows are in the companion (synchronous backfill)
-      q().queryExecution.executedPlan.toString should include("_proj_by_status")
+      answeredFrom(cat, dir, q(), "by_status") shouldBe true
       q().collect().map(r => (r.getString(0), r.getLong(1))) shouldBe
         Array(("A", 40L), ("B", 20L))
       // post-ADD appends keep maintaining it
       append(cat, block2)
       q().collect().map(r => (r.getString(0), r.getLong(1))) shouldBe
         Array(("A", 90L), ("B", 60L), ("C", 60L))
+      val files = logged(dir, "by_status")
       graft.sql.ChDdl.execute(cat, spark,
         "ALTER TABLE sales DROP PROJECTION by_status")
-      q().queryExecution.executedPlan.toString should not include "_proj_by_status"
-      new java.io.File(s"$dir/sales/_proj_by_status").exists() shouldBe false
+      carried(cat) shouldBe empty
+      logged(dir, "by_status") shouldBe empty
+      scans(q()).flatten.toSet.intersect(files) shouldBe empty
       q().collect().map(r => (r.getString(0), r.getLong(1))) shouldBe
         Array(("A", 90L), ("B", 60L), ("C", 60L))
+      // collection deletes the dropped companion's files after one commit
+      // of grace for readers of the entry before
+      append(cat, Seq((7L, "D", 70L)))
+      append(cat, Seq((8L, "D", 80L)))
+      files.filter(new java.io.File(_).exists()) shouldBe empty
     } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
   }
 
@@ -126,24 +149,25 @@ class ProjectionAxisSpec extends SparkSpecBase {
       // groupBy(status): BOTH are eligible — the narrower by_status wins
       val narrow = cat.read("sales").groupBy(col("status"))
         .agg(sum(col("qty")).as("s")).orderBy(col("status"))
-      narrow.queryExecution.executedPlan.toString should include("_proj_by_status")
-      narrow.queryExecution.executedPlan.toString should not include "_proj_by_status_id"
+      answeredFrom(cat, dir, narrow, "by_status") shouldBe true
+      answeredFrom(cat, dir, narrow, "by_status_id") shouldBe false
       narrow.collect().map(r => (r.getString(0), r.getLong(1))) shouldBe
         Array(("A", 90L), ("B", 60L), ("C", 60L))
       // groupBy(status, id): only the wider one can answer
       val wide = cat.read("sales").groupBy(col("status"), col("id"))
         .agg(count(lit(1)).as("n"))
-      wide.queryExecution.executedPlan.toString should include("_proj_by_status_id")
+      answeredFrom(cat, dir, wide, "by_status_id") shouldBe true
       wide.collect().map(_.getLong(2)).sum shouldBe 6L
-      // dropping the wide one leaves the narrow registered and serving
+      // dropping the wide one leaves the narrow declared and serving
+      val wideFiles = logged(dir, "by_status_id")
       graft.sql.ChDdl.execute(cat, spark,
         "ALTER TABLE sales DROP PROJECTION by_status_id")
       val after = cat.read("sales").groupBy(col("status"))
         .agg(count(lit(1)).as("n"))
-      after.queryExecution.executedPlan.toString should include("_proj_by_status")
-      cat.read("sales").groupBy(col("status"), col("id"))
-        .agg(count(lit(1)).as("n"))
-        .queryExecution.executedPlan.toString should not include "_proj_by_status_id"
+      answeredFrom(cat, dir, after, "by_status") shouldBe true
+      carried(cat).keySet shouldBe Set("by_status")
+      scans(cat.read("sales").groupBy(col("status"), col("id"))
+        .agg(count(lit(1)).as("n"))).flatten.toSet.intersect(wideFiles) shouldBe empty
     } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
   }
 
@@ -154,17 +178,17 @@ class ProjectionAxisSpec extends SparkSpecBase {
       append(cat, block1)
       append(cat, block2)
       val q = cat.read("sales").filter(col("qty") === 40L)
-      q.queryExecution.executedPlan.toString should include("_proj_by_qty")
+      answeredFrom(cat, dir, q, "by_qty") shouldBe true
       q.collect().map(_.getLong(0)) shouldBe Array(4L)
-      // the swap must track appends (the relation cache is mtime-validated)
+      // the swap tracks appends: the next read's scan carries the new head
       append(cat, Seq((7L, "D", 40L)))
       val q2 = cat.read("sales").filter(col("qty") === 40L)
-      q2.queryExecution.executedPlan.toString should include("_proj_by_qty")
+      answeredFrom(cat, dir, q2, "by_qty") shouldBe true
       q2.collect().map(_.getLong(0)).sorted shouldBe Array(4L, 7L)
     } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
   }
 
-  test("_TABLE sidecar carries projections: attach re-registers them") {
+  test("a fresh attach, registries cleared, answers from the companion") {
     val (cat, dir) = mkCat()
     try {
       sales(cat, dir,
@@ -172,12 +196,15 @@ class ProjectionAxisSpec extends SparkSpecBase {
       append(cat, block1)
       cat.detach("sales")
       val cat2 = new Catalog(spark)
-      RollupRewrite.clear() // attach must re-register, not inherit
+      RollupRewrite.clear() // the log carries the projection, no registry
+      SortedProjectionRewrite.clear()
       val t = cat2.attach(s"$dir/sales")
       t.projections shouldBe Seq(AggProjection("by_status", Seq("status")))
       val q = cat2.read("sales").groupBy(col("status"))
         .agg(count(lit(1)).as("n"))
-      q.queryExecution.executedPlan.toString should include("_proj_by_status")
+      answeredFrom(cat2, dir, q, "by_status") shouldBe true
+      q.collect().map(r => (r.getString(0), r.getLong(1))).sorted shouldBe
+        Array(("A", 2L), ("B", 1L))
     } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
   }
 
@@ -202,17 +229,17 @@ class ProjectionAxisSpec extends SparkSpecBase {
   }
 
   test("MATERIALIZE of a STALE companion rebuilds from the base, not itself") {
-    // the append crash window leaves the companion present but one block
-    // behind; the rebuild query is itself rewrite-eligible, so without
-    // deregistering first it would be silently ANSWERED from the stale
-    // companion and re-persist the stale counts
+    // a commit that did not write the companion (a raw log commit, as an
+    // older writer makes) leaves it present but one block behind; the
+    // rebuild query is itself rewrite-eligible, so unless its base read
+    // carries no companion it would be silently ANSWERED from the stale
+    // one and re-persist the stale counts
     val (cat, dir) = mkCat()
     try {
       sales(cat, dir,
         ",\n  PROJECTION by_status (SELECT status, count(), sum(qty) GROUP BY status)")
       append(cat, block1)
-      // simulate the crash: a commit of a block whose companion append
-      // never ran
+      // a commit of a block without its companion partial
       import spark.implicits._
       val log = new graft.catalog.TableLog(
         new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf()),
@@ -226,7 +253,7 @@ class ProjectionAxisSpec extends SparkSpecBase {
       val q = cat.read("sales").groupBy(col("status"))
         .agg(count(lit(1)).as("n"), sum(col("qty")).as("s"))
         .orderBy(col("status"))
-      q.queryExecution.executedPlan.toString should include("_proj_by_status")
+      answeredFrom(cat, dir, q, "by_status") shouldBe true
       q.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))) shouldBe
         Array(("A", 3L, 90L), ("B", 2L, 60L), ("C", 1L, 60L))
     } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
@@ -247,7 +274,7 @@ class ProjectionAxisSpec extends SparkSpecBase {
       cat.append("sales", spark.range(7L, 17L).select(col("id"),
         lit("D").as("status"),
         (rand(seed = 0) * 100).cast("long").as("qty")))
-      val comp = spark.read.parquet(s"$dir/sales/_proj_by_status")
+      val comp = companion(dir, "by_status")
         .agg(sum(col("__cnt")), sum(col("__sum_qty"))).head()
       RollupRewrite.clear() // the base totals must come from the base files
       val base = cat.readRaw("sales").agg(count(lit(1)), sum(col("qty"))).head()
@@ -310,6 +337,68 @@ class ProjectionAxisSpec extends SparkSpecBase {
       // the prior registration survived the failed re-validation
       cat.get("sales").projections shouldBe Nil
       cat.read("sales").count() shouldBe 3
+    } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
+  }
+
+  test("two catalogs on one path: an append reaches the other's answers; a DROP PROJECTION stops them") {
+    val (cat, dir) = mkCat()
+    try {
+      sales(cat, dir,
+        ",\n  PROJECTION by_status (SELECT status, count(), sum(qty) GROUP BY status)")
+      append(cat, block1)
+      val other = new Catalog(spark)
+      other.attach(s"$dir/sales")
+      def q(c: Catalog) = c.read("sales").groupBy(col("status"))
+        .agg(count(lit(1)).as("n"), sum(col("qty")).as("s")).orderBy(col("status"))
+      def answer(c: Catalog) = q(c).collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      answer(other) shouldBe Array(("A", 2L, 40L), ("B", 1L, 20L))
+      append(cat, block2)
+      answeredFrom(other, dir, q(other), "by_status") shouldBe true
+      answer(other) shouldBe Array(("A", 3L, 90L), ("B", 2L, 60L), ("C", 1L, 60L))
+      val files = logged(dir, "by_status")
+      graft.sql.ChDdl.execute(cat, spark, "ALTER TABLE sales DROP PROJECTION by_status")
+      carried(other) shouldBe empty
+      scans(q(other)).flatten.toSet.intersect(files) shouldBe empty
+      other.get("sales").projections shouldBe Nil
+      answer(other) shouldBe Array(("A", 3L, 90L), ("B", 2L, 60L), ("C", 1L, 60L))
+    } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
+  }
+
+  test("an older build's _proj_<name> directory is adopted once into the log") {
+    val (cat, dir) = mkCat()
+    try {
+      sales(cat, dir)
+      append(cat, block1)
+      append(cat, block2)
+      // the layout an older build left: the definition declares the
+      // projection, no entry lists a companion, and the companion's
+      // per-block partials sit in <path>/_proj_by_status/
+      val spec = AggProjection("by_status", Seq("status"), Seq("qty"))
+      import spark.implicits._
+      Seq(block1, block2).foreach(b => b.toDF("id", "status", "qty").groupBy(col("status"))
+        .agg(count(lit(1)).as("__cnt"), sum(col("qty")).as("__sum_qty"))
+        .write.mode("append").parquet(s"$dir/sales/_proj_by_status"))
+      salesLog(dir).commit("sales")(h =>
+        Some(h.copy(table = h.table.map(t => t.copy(projections = Seq(spec))))))
+      logged(dir, "by_status") shouldBe empty
+      val fresh = new Catalog(spark)
+      fresh.attach(s"$dir/sales").projections shouldBe Seq(spec)
+      val adopted = logged(dir, "by_status")
+      adopted.size should be >= 2
+      adopted.foreach(_ should include("/sales/_proj_by_status/"))
+      val q = fresh.read("sales").groupBy(col("status"))
+        .agg(count(lit(1)).as("n"), sum(col("qty")).as("s")).orderBy(col("status"))
+      answeredFrom(fresh, dir, q, "by_status") shouldBe true
+      q.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))) shouldBe
+        Array(("A", 3L, 90L), ("B", 2L, 60L), ("C", 1L, 60L))
+      // adopted once: a second attach publishes nothing more
+      val head = salesLog(dir).head().n
+      new Catalog(spark).attach(s"$dir/sales")
+      salesLog(dir).head().n shouldBe head
+      // the next append adds its partial beside the adopted ones
+      append(fresh, Seq((7L, "A", 70L)))
+      fresh.read("sales").groupBy(col("status")).agg(sum(col("qty")).as("s"))
+        .orderBy(col("status")).collect().map(_.getLong(1)) shouldBe Array(160L, 60L, 60L)
     } finally { RollupRewrite.clear(); SortedProjectionRewrite.clear() }
   }
 }

@@ -70,12 +70,17 @@ class TableLogSpec extends SparkSpecBase {
   }
 
   /** Table `crash` and table `dst` (for MOVE PARTITION) under `root`. */
-  private def register(root: String, sem: EngineSemantics, parts: Seq[String]): Catalog = {
+  private def register(root: String, sem: EngineSemantics, parts: Seq[String],
+                       projections: Seq[ProjectionSpec] = Nil): Catalog = {
     val cat = new Catalog(spark)
-    Seq("crash", "dst").foreach(n =>
-      cat.createTable(TableDef(n, s"$root/$n", schema, Seq("k"), sem, partitionKeys = parts)))
+    Seq("crash", "dst").foreach(n => cat.createTable(TableDef(n, s"$root/$n", schema, Seq("k"),
+      sem, partitionKeys = parts, projections = if (n == "crash") projections else Nil)))
     cat
   }
+
+  /** An aggregate projection over `k` summing `v` and a sorted one on `v`. */
+  private val twoProjections =
+    Seq(AggProjection("by_k", Seq("k"), Seq("v")), SortProjection("by_v", "v"))
 
   /** A fresh process's catalog of the two tables, each registered from
     * the definition its log holds.
@@ -88,18 +93,37 @@ class TableLogSpec extends SparkSpecBase {
 
   /** What a fresh process sees: `crash`'s definition, merged rows, raw
     * rows and snapshot tags, `dst`'s rows and the rows `crash` has
-    * detached.
+    * detached — and, for a table with [[twoProjections]], the companions
+    * its live scan carries, a per-`k` count and sum and a lookup on `v`,
+    * each checked against the same answer computed from the base rows.
     */
   private def observe(root: String): Seq[Seq[String]] = {
     val cat = open(root)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.mkString(":")).toSeq.sorted
     val detached = s"$root/crash.detached"
+    val base = cat.read("crash").collect().toSeq
+    val answered =
+      if (cat.get("crash").projections.isEmpty) Nil
+      else {
+        val byK = rows(cat.read("crash").groupBy(col("k")).agg(count(lit(1)), sum(col("v"))))
+        val lookup = rows(cat.read("crash").filter(col("v") === 2L))
+        withClue("projection-answered vs base-scan answers: ") {
+          byK shouldBe base.groupBy(_.getString(0)).toSeq
+            .map { case (k, rs) => s"$k:${rs.size}:${rs.map(_.getLong(1)).sum}" }.sorted
+          lookup shouldBe base.filter(_.getLong(1) == 2L).map(_.mkString(":")).sorted
+        }
+        val carried = cat.read("crash").queryExecution.analyzed
+          .collect { case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation }
+          .collect { case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.location }
+          .collect { case l: LogFileIndex => l.companions.map(_.spec.name) }.flatten.sorted
+        Seq(carried, byK, lookup)
+      }
     Seq(Seq(org.json4s.jackson.JsonMethods.compact(TableDefJson.render(cat.get("crash")))),
       rows(cat.read("crash")), rows(cat.readRaw("crash")),
       cat.systemSnapshots("crash").collect().map(_.getString(0)).toSeq, rows(cat.read("dst")),
       if (!new java.io.File(detached).exists()) Nil
       else rows(spark.read.schema("k STRING, v BIGINT").option("recursiveFileLookup", "true")
-        .parquet(detached)))
+        .parquet(detached))) ++ answered
   }
 
   /** For every N, run `op` on a copy of the tables `setup` built, with the
@@ -107,11 +131,12 @@ class TableLogSpec extends SparkSpecBase {
     * point); a fresh Catalog must then see the tables exactly as before or
     * exactly as after `op`, and a second one the same again.
     */
-  private def crashPrefixes(name: String, sem: EngineSemantics, parts: Seq[String] = Nil)(
+  private def crashPrefixes(name: String, sem: EngineSemantics, parts: Seq[String] = Nil,
+                            projections: Seq[ProjectionSpec] = Nil)(
       setup: Catalog => Unit)(op: Catalog => Unit): Unit = {
     val base = tmpDir(s"crash-$name")
     val template = s"$base/template"
-    setup(register(template, sem, parts))
+    setup(register(template, sem, parts, projections))
     val before = observe(template)
     def run(path: String, failAt: Long): Boolean = {
       copyTree(template, path)
@@ -148,6 +173,39 @@ class TableLogSpec extends SparkSpecBase {
   test("a crash at any filesystem call of an append leaves the table before or after it") {
     crashPrefixes("append", Append)(_.append("crash", batch(("a", 1L, 1L))))(
       _.append("crash", batch(("b", 2L, 1L))))
+  }
+
+  test("a crash at any filesystem call of an append to a table with projections leaves the table and its companions before or after it") {
+    crashPrefixes("append-projections", Append, projections = twoProjections)(
+      _.append("crash", batch(("a", 1L, 1L), ("b", 2L, 1L))))(
+      _.append("crash", batch(("b", 2L, 2L), ("c", 3L, 1L))))
+  }
+
+  test("a crash at any filesystem call of a mutation of a table with projections leaves the table and its companions before or after it") {
+    crashPrefixes("mutate-projections", Append, projections = twoProjections) { c =>
+      c.append("crash", batch(("a", 1L, 1L), ("b", 2L, 1L)))
+      c.append("crash", batch(("b", 2L, 2L), ("c", 3L, 1L)))
+    }(_.delete("crash", col("k") === "a"))
+  }
+
+  test("a commit derived from a head three commits old fails naming the table; no row of it is read") {
+    val root = tmpDir("behind")
+    val cat = register(root, Append, Nil)
+    cat.append("crash", batch(("a", 1L, 1L)))
+    val f = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    val stale = new TableLog(f, s"$root/crash", Nil)
+    val read = stale.head()
+    val other = open(root)
+    (2 to 4).foreach(i => other.append("crash", batch((s"k$i", i.toLong, 1L))))
+    val dir = stale.stage("c")
+    batch(("z", 9L, 1L)).write.parquet(dir.toString)
+    val files = stale.written(dir)._2
+    val e = intercept[IllegalStateException] {
+      stale.commit("crash", Some(read))(h => Some(h.copy(files = h.files ++ files)))
+    }
+    e.getMessage should include("crash")
+    open(root).read("crash").collect().map(_.getString(0)).sorted shouldBe
+      Array("a", "k2", "k3", "k4")
   }
 
   test("a crash at any filesystem call of a compact leaves the table before or after it") {
