@@ -47,7 +47,9 @@ final case class LogMutation(tsMs: Long, command: String)
   * that older entry needs no read of it. `projections` holds the
   * companion files of each declared projection that covers every data
   * file (key `projections`): a projection missing there is not answered
-  * from until a rewrite or `MATERIALIZE PROJECTION` builds it.
+  * from until a rewrite or `MATERIALIZE PROJECTION` builds it. `id` names
+  * the entry and `parent` the entry it derives from ([[TableLog.commit]]
+  * sets both; "" in an entry an older build or the adopter wrote).
   */
 final case class LogEntry(n: Long, files: Seq[LogFile], dvs: Seq[LogFile],
                           tokens: Set[String] = Set.empty,
@@ -57,7 +59,8 @@ final case class LogEntry(n: Long, files: Seq[LogFile], dvs: Seq[LogFile],
                           drops: Option[Seq[String]] = None,
                           table: Option[TableDef] = None,
                           mutations: Seq[LogMutation] = Nil,
-                          projections: Map[String, Seq[LogFile]] = Map.empty) {
+                          projections: Map[String, Seq[LogFile]] = Map.empty,
+                          id: String = "", parent: String = "") {
   def holds(token: String): Boolean = tokens(token) || folded(token)
 
   /** Every file the entry lists: data, deletion vectors and companions. */
@@ -202,7 +205,8 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
         case None => return None
         case Some(e) =>
           val at = e.copy(n = h.n + 1, drops = Some((paths(h) -- paths(e)).toSeq.sorted),
-            mutations = e.mutations.takeRight(KeptMutations))
+            mutations = e.mutations.takeRight(KeptMutations),
+            id = java.util.UUID.randomUUID().toString, parent = h.id)
           if (publish(f, entryPath(at.n), json(at))) {
             collect(at, h, refuseBehind(table, at, h)); return Some(at)
           }
@@ -213,19 +217,22 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
       s"$table: lost $attempt log positions in a row to concurrent commits")
   }
 
-  /** The listing of `_log/` just after `e` was published over `h`; when
-    * it shows an entry newer than `e` that does not derive from it, `e`
-    * took a position collection had already freed (`h` was read three or
-    * more commits ago), so `e` is deleted and the commit refused without
-    * a retry: another writer's collection may have deleted what it
-    * derives from. A follower of `e` lists, or drops, every file `e`
-    * added; one collected meanwhile counts as not following.
+  /** The listing of `_log/` just after `e` was published over `h`. When
+    * it shows a newer entry, `e` may have taken a position collection had
+    * already freed (`h` was read three or more commits ago). The entry
+    * after `e` follows it when it names `e` as its parent. Otherwise `e`
+    * is behind while it still exists untagged (collection deletes older
+    * entries first, so `e` outlives no follower), or, once collected
+    * itself, when the first file it added is gone too (a follower keeps
+    * it). A behind `e` is deleted and the commit refused without a retry:
+    * another writer's collection may have deleted what it derives from.
     */
   private def refuseBehind(table: String, e: LogEntry, h: LogEntry): Array[FileStatus] = {
     val ls = listed()
-    val added = paths(e) -- paths(h)
-    if (positions(ls).exists(_ > e.n) &&
-        !gone(entry(e.n + 1)).exists(x => added.subsetOf(paths(x) ++ x.drops.getOrElse(Nil)))) {
+    def behind = !gone(entry(e.n + 1)).exists(_.parent == e.id) && (
+      if (f.exists(entryPath(e.n))) !tags(ls).exists(_.position == e.n)
+      else (paths(e) -- paths(h)).headOption.exists(p => !f.exists(resolve(p))))
+    if (positions(ls).exists(_ > e.n) && behind) {
       f.delete(entryPath(e.n), false)
       throw new IllegalStateException(s"$table: log position ${e.n} was freed by newer " +
         s"commits before this one published it (its head, entry ${h.n}, was read too long " +
@@ -417,6 +424,7 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
       }
       case _ => Nil
     }
+    def str(k: String) = (j \ k) match { case JString(s) => s; case _ => "" }
     def strs(k: String): Set[String] = (j \ k) match {
       case JArray(xs) => xs.collect { case JString(s) => s }.toSet
       case _ => Set.empty
@@ -443,7 +451,8 @@ private[graft] final class TableLog(val f: FileSystem, tablePath: String,
       case _ => Map.empty[String, Seq[LogFile]]
     }
     LogEntry(n, files(j \ "files"), files(j \ "dvs"), strs("tokens"), strs("folded"), moves,
-      (j \ "frozen") == JBool(true), drops, table, mutations, projections)
+      (j \ "frozen") == JBool(true), drops, table, mutations, projections,
+      str("id"), str("parent"))
   }
 
   private def parseTag(j: JValue): LogTag = {
@@ -523,7 +532,8 @@ object TableLog {
     "mutations" -> JArray(e.mutations.toList.map(m =>
       JArray(List(JLong(m.tsMs), JString(m.command))))),
     "projections" -> JObject(e.projections.toList.sortBy(_._1).map { case (name, fs) =>
-      name -> JArray(fs.toList.map(fileJson)) })))
+      name -> JArray(fs.toList.map(fileJson)) }),
+    "id" -> JString(e.id), "parent" -> JString(e.parent)))
 
   private def paths(e: LogEntry): Set[String] = e.logged.map(_.path).toSet
 

@@ -44,16 +44,17 @@ object ProjectionRules {
       s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ r
   }
 
-  /** The companions of a catalog scan, or what `registry` holds for the
-    * root of another (qualified only while it holds anything).
+  /** The candidates of a scan: those `catalog` makes of a catalog
+    * scan's companions, or the ones `registry` holds for the root of
+    * another (qualified only while it holds anything).
     */
-  private[plans] def of[V](loc: FileIndex, registry: ConcurrentHashMap[String, V]): Either[Seq[Companion], Option[V]] =
-    loc match {
-      case l: LogFileIndex => Left(l.companions)
-      case _ if loc.rootPaths.length == 1 && !registry.isEmpty =>
-        Right(Option(registry.get(canon(loc.rootPaths.head.toString))))
-      case _ => Right(None)
-    }
+  private[plans] def of[C](loc: FileIndex, registry: ConcurrentHashMap[String, Vector[C]])(
+      catalog: PartialFunction[Companion, C]): Seq[C] = loc match {
+    case l: LogFileIndex => l.companions.collect(catalog)
+    case _ if loc.rootPaths.length == 1 && !registry.isEmpty =>
+      Option(registry.get(canon(loc.rootPaths.head.toString))).toSeq.flatten
+    case _ => Nil
+  }
 
   // Fully-qualified URI, not the bare path: two tables at the same path on
   // DIFFERENT filesystems (file:/data/t vs hdfs:/data/t) must not collide
@@ -110,13 +111,13 @@ object RollupRewrite extends Rule[LogicalPlan] {
 
   // a base may carry SEVERAL rollups (CH tables routinely declare several
   // projections); tryRewrite picks the narrowest eligible one
-  private val registry = new ConcurrentHashMap[String, Vector[ProjectionDef]]()
+  private val registry = new ConcurrentHashMap[String, Vector[Rollup]]()
 
   /** One rollup a scan may be answered from: its dims, count column,
-    * measure partial columns and its rows.
+    * measure partial columns and its rows (`path` names a raw one).
     */
-  private final case class Rollup(dims: Seq[String], cntCol: String,
-                                  sumCols: Map[String, String], rows: SparkSession => DataFrame)
+  private final case class Rollup(dims: Seq[String], cntCol: String, sumCols: Map[String, String],
+                                  rows: SparkSession => DataFrame, path: String = "")
 
   /** Register a raw-path rollup and install the rule in the session
     * (once). Re-registering the same rollupPath replaces its entry
@@ -126,8 +127,8 @@ object RollupRewrite extends Rule[LogicalPlan] {
     */
   def register(s: SparkSession, p: ProjectionDef): Unit = {
     registry.compute(ProjectionRules.canon(p.basePath), (_, cur) =>
-      Option(cur).getOrElse(Vector.empty)
-        .filterNot(_.rollupPath == p.rollupPath) :+ p)
+      Option(cur).getOrElse(Vector.empty).filterNot(_.path == p.rollupPath) :+
+        Rollup(p.dims, p.cntCol, p.sumCols, _.read.parquet(p.rollupPath), p.rollupPath))
     ProjectionRules.add(s, this)
   }
 
@@ -143,13 +144,9 @@ object RollupRewrite extends Rule[LogicalPlan] {
       case agg: Aggregate => tryRewrite(agg).getOrElse(agg)
     }
 
-  private def candidates(rel: HadoopFsRelation): Seq[Rollup] = ProjectionRules.of(rel.location, registry) match {
-    case Left(companions) => companions.collect {
-      case c @ Companion(p: AggProjection, _, _, _) =>
-        Rollup(p.dims, p.cntCol, p.sumCols.map(m => m -> p.sumCol(m)).toMap, c.frame)
-    }
-    case Right(registered) => registered.toSeq.flatten.map(p =>
-      Rollup(p.dims, p.cntCol, p.sumCols, _.read.parquet(p.rollupPath)))
+  private def candidates(rel: HadoopFsRelation): Seq[Rollup] = ProjectionRules.of(rel.location, registry) {
+    case c @ Companion(p: AggProjection, _, _, _) =>
+      Rollup(p.dims, p.cntCol, p.sumCols.map(m => m -> p.sumCol(m)).toMap, c.frame)
   }
 
   /** Unwrap pruning Projects / Filters down to a parquet scan, collecting

@@ -45,15 +45,19 @@ final case class SortedProjectionDef(basePath: String, sortedPath: String,
   */
 object SortedProjectionRewrite extends Rule[LogicalPlan] {
 
-  // a raw registration with its relation, resolved (listed) once when it
-  // is registered: the registrant keeps the files in place
-  private val registry = new ConcurrentHashMap[String, (SortedProjectionDef, LogicalRelation)]()
+  // a raw registration's sort key and relation, resolved (listed) once
+  // when it is registered: the registrant keeps the files in place
+  private val registry = new ConcurrentHashMap[String, Vector[(String, () => LogicalRelation)]]()
 
   private def relationOf(df: DataFrame): LogicalRelation =
     df.queryExecution.analyzed.collect { case r: LogicalRelation => r }.head
 
   def register(s: SparkSession, p: SortedProjectionDef): Unit = {
-    registry.put(ProjectionRules.canon(p.basePath), (p, relationOf(s.read.parquet(p.sortedPath))))
+    val r = relationOf(s.read.parquet(p.sortedPath))
+    // fresh exprIds per use: the one instance appearing in two plans (or
+    // twice in one) with identical attribute ids would alias unrelated
+    // subtrees
+    registry.put(ProjectionRules.canon(p.basePath), Vector((p.sortKey, () => r.newInstance())))
     ProjectionRules.add(s, this)
   }
 
@@ -75,18 +79,10 @@ object SortedProjectionRewrite extends Rule[LogicalPlan] {
     * registered raw one.
     */
   private def candidate(rel: HadoopFsRelation): Option[(String, () => LogicalRelation)] =
-    ProjectionRules.of(rel.location, registry) match {
-      case Left(companions) => companions.collectFirst {
-        case c @ Companion(SortProjection(_, key), _, _, _) =>
-          (key, () => relationOf(c.frame(SparkSession.active)))
-      }
-      case Right(registered) => registered.map { case (p, r) =>
-        // fresh exprIds per use: the one instance appearing in two plans
-        // (or twice in one) with identical attribute ids would alias
-        // unrelated subtrees
-        (p.sortKey, () => r.newInstance())
-      }
-    }
+    ProjectionRules.of(rel.location, registry) {
+      case c @ Companion(SortProjection(_, key), _, _, _) =>
+        (key, () => relationOf(c.frame(SparkSession.active)))
+    }.headOption
 
   private def unwrap(plan: LogicalPlan, conds: List[Expression])
       : Option[(List[Expression], LogicalRelation)] = plan match {

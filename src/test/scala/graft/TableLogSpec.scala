@@ -206,6 +206,36 @@ class TableLogSpec extends SparkSpecBase {
     e.getMessage should include("crash")
     open(root).read("crash").collect().map(_.getString(0)).sorted shouldBe
       Array("a", "k2", "k3", "k4")
+    // an entry that adds no file (an ALTER, a mutation record) is caught too
+    val alter = intercept[IllegalStateException] {
+      stale.commit("crash", Some(read))(h =>
+        Some(h.copy(mutations = h.mutations :+ LogMutation(0L, "stale"))))
+    }
+    alter.getMessage should include("crash")
+    stale.head().mutations.map(_.command) should not contain "stale"
+  }
+
+  test("a commit that three other commits follow before it lists the log stands; its rows are read") {
+    val root = tmpDir("followed")
+    val cat = register(root, Append, Nil)
+    cat.append("crash", batch(("a", 1L, 1L)))
+    val other = open(root)
+    // the three land between the publish of the append's entry and the
+    // listing that checks it: its entry and the next are collected by then
+    LogListHookFs.afterPublish.set(() =>
+      (2 to 4).foreach(i => other.append("crash", batch((s"k$i", i.toLong, 1L)))))
+    spark.conf.set("fs.file.impl", classOf[LogListHookFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try cat.append("crash", batch(("z", 9L, 1L)))
+    finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+    LogListHookFs.afterPublish.get shouldBe null // the three did land in between
+    new java.io.File(s"$root/crash/_log").list().filter(_.matches("\\d+\\.json")).sorted shouldBe
+      Array("4.json", "5.json")
+    open(root).read("crash").collect().map(_.getString(0)).sorted shouldBe
+      Array("a", "k2", "k3", "k4", "z")
   }
 
   test("a crash at any filesystem call of a compact leaves the table before or after it") {
@@ -346,6 +376,32 @@ class TableLogSpec extends SparkSpecBase {
     e.getMessage should include("objstore:")
     new java.io.File(dir).list() shouldBe empty
   }
+}
+
+/** The local filesystem running [[LogListHookFs.afterPublish]], once, at
+  * the first listing of a `_log` directory after a log entry's staging
+  * file was created there: what lands between a publish and the listing
+  * that checks it.
+  */
+class LogListHookFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    if (f.getParent.getName == "_log" && f.getName.matches("""\.\d+\.json\..*\.tmp"""))
+      LogListHookFs.published = true
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName == "_log" && LogListHookFs.published) {
+      LogListHookFs.published = false
+      Option(LogListHookFs.afterPublish.getAndSet(null)).foreach(_.apply())
+    }
+    super.listStatus(f)
+  }
+}
+
+object LogListHookFs {
+  val afterPublish = new java.util.concurrent.atomic.AtomicReference[() => Unit]
+  @volatile var published = false
 }
 
 /** The local filesystem under another scheme: one whose rename a publish
